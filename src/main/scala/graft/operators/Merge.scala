@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one shuffle on the PK (the window's partitionBy). Both inputs
   * hash-partition on the same key, so AQE can coalesce; there is no join and
-  * no driver materialization. For a 100 TB base + small delta, prefer the
-  * sink-side writer (sources.UpsertWriter) which ships only the delta;
-  * this operator is the testable pure-Spark semantics of DO UPDATE.
+  * no driver materialization. It still reads and rewrites the whole base:
+  * when the delta's keys provably cannot collide with the base (an
+  * insert-only watermark sync, see graft.sync.SyncJob), the result is
+  * base ∪ [[dedup]](delta), and the caller appends the delta alone.
   */
 object Merge {
 
@@ -40,6 +41,25 @@ object Merge {
       .withColumn(RN, row_number().over(w))
       .filter(col(RN) === 1)
       .drop(PREC, RN)
+  }
+
+  /** The delta-only half of [[upsert]]: one row per key, the SAME survivor
+    * upsert would keep among the delta's duplicates (same `row_number`
+    * window, same [[graft.sync.Checksum.rowHash]] tie-break over the
+    * columns in `delta`'s order — pass the delta in the base's column order
+    * for the survivor to match). With no base rows on a delta key,
+    * `upsert(base, delta, pks) == base ∪ dedup(delta, pks)` as multisets.
+    * The window's distribution is a clustering on `pks`, so a delta already
+    * partitioned on a subset of them (e.g. range-partitioned on one key
+    * column) is windowed without a second shuffle. */
+  def dedup(delta: DataFrame, pks: Seq[String]): DataFrame = {
+    require(pks.nonEmpty, "dedup requires at least one key column")
+    val tieBreak = graft.sync.Checksum.rowHash(delta.columns.map(col).toIndexedSeq)
+    val w = Window.partitionBy(pks.map(col): _*).orderBy(tieBreak.desc)
+    delta
+      .withColumn(RN, row_number().over(w))
+      .filter(col(RN) === 1)
+      .drop(RN)
   }
 
   /** Opt-in SCHEMA-EVOLUTION upsert (the last §2.4-style divergence with a

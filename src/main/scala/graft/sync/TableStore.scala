@@ -20,7 +20,19 @@ trait TableStore {
     * default is the portable read-∪-write (O(table) rewrite); stores with
     * a native append (parquet part files, SQL INSERT) override it to
     * O(df). NOT idempotent on its own — callers running under
-    * at-least-once semantics (foreachBatch) must dedup before appending. */
+    * at-least-once semantics (foreachBatch) must dedup before appending.
+    *
+    * LANDING CONTRACT — what a failure part-way leaves in `table`:
+    *  - ParquetStore: a failed Spark job leaves `table` untouched; past it,
+    *    `df`'s partitions land IN PARTITION ORDER, so a crash leaves a
+    *    prefix of them. SyncJob's insert-only path range-partitions the
+    *    delta on the check column, so that prefix holds every landed row
+    *    below every unlanded one, and the next run's MAX watermark cannot
+    *    pass an unlanded row.
+    *  - JdbcStore commits per executor partition in no order, so a failure
+    *    can leave any subset of partitions — no worse than its `write`'s
+    *    truncate + reinsert; a transactional JDBC upsert is future work.
+    *  - The default inherits `write`'s guarantee. */
   def append(df: DataFrame, table: String): Unit =
     write(read(table).map(_.unionByName(df)).getOrElse(df), table)
 
@@ -69,11 +81,65 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     if (!fs.rename(tmp, dst)) sys.error(s"rename failed for $table")
   }
 
-  /** Native parquet append: new part files land in the table directory —
-    * O(df) cost regardless of accumulated table size. */
-  override def append(df: DataFrame, table: String): Unit =
-    df.write.mode("append").parquet(pathOf(table))
+  /** Native parquet append — O(df) cost regardless of accumulated table
+    * size. `df` is written to a staging directory of its own, a hidden
+    * sibling of the table, so a failed job leaves the table untouched and
+    * concurrent appends to one table never share Spark's `_temporary`
+    * directory. Its part files then move into the table by rename, in
+    * partition order (the trait's landing contract); files with no rows are
+    * left behind, so an empty `df` adds nothing to an existing table. A
+    * table that does not exist yet is created by renaming the whole
+    * staging directory, so it always has a file carrying its schema. */
+  override def append(df: DataFrame, table: String): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new Path(s"$dir/.append_${table}_${java.util.UUID.randomUUID()}")
+    try {
+      // one file per partition: a partition split over several files could
+      // be landed in part, breaking the order the landing contract promises
+      df.write.option("maxRecordsPerFile", 0L).parquet(stage.toString)
+      ParquetStore.synchronized {
+        val dst = new Path(pathOf(table))
+        if (!fs.exists(dst)) {
+          if (!fs.rename(stage, dst)) sys.error(s"rename failed for $table")
+        } else land(staged(stage), table)
+      }
+    } finally fs.delete(stage, true)
+  }
+
+  /** The part files of a staging directory that hold rows, in partition
+    * order. Row counts come from the parquet footers, read on the driver. */
+  private def staged(stage: Path): Seq[Path] = {
+    val part = "part-(\\d+)-.*".r
+    stage.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(stage).toSeq
+      .flatMap(st => st.getPath.getName match {
+        case part(n) => Some(n.toLong -> st)
+        case _       => None
+      })
+      .sortBy(_._1)
+      .collect { case (_, st) if rowCount(st) > 0L => st.getPath }
+  }
+
+  private def rowCount(st: org.apache.hadoop.fs.FileStatus): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromStatus(st, spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
+  }
+
+  /** Move `files` into `table`, one rename each, in the given order. */
+  private[sync] def land(files: Seq[Path], table: String): Unit = {
+    val dst = new Path(pathOf(table))
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files.foreach { f =>
+      if (!fs.rename(f, new Path(dst, f.getName))) sys.error(s"rename failed for $f")
+    }
+  }
 }
+
+/** Serializes ParquetStore's landing step across the JVM: two first
+  * appends to a missing table must not both rename a staging directory
+  * onto it. Landing is renames only, so the lock is held briefly. */
+object ParquetStore
 
 /** JDBC store: connection profile -> per-table reads/writes. Reads resolve
   * the schema from JDBC metadata (O2's introspection, done by Spark's
@@ -129,9 +195,8 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
   }
 
   /** Store semantics are "replace table contents with df" (SyncJob hands the
-    * FULL merged table). Production incremental loads should ship only the
-    * delta through `sources.UpsertWriter` (ON CONFLICT) instead of a full
-    * rewrite.
+    * FULL merged table whenever the delta may update existing keys;
+    * insert-only syncs go through `append` and ship only the delta).
     *
     * TRUNCATE vs DROP+CREATE is decided by a schema probe BEFORE anything
     * destructive runs: truncate preserves the table's DDL (indexes, grants,

@@ -85,10 +85,10 @@ class JdbcWatermarkSpec extends SparkSpec {
     assert(sent.exists(s => s.toUpperCase.contains("MAX(") && s.contains("FROM t")),
       s"no server-side MAX in: $sent")
     // The WATERMARK read (everything up to and including the MAX executing)
-    // must not pull the raw check column. Statements AFTER it legitimately
-    // read the full destination: Merge.upsert merges dest ∪ delta because
-    // the store's write contract is "replace contents" (production
-    // incremental loads ship only the delta via sources.UpsertWriter).
+    // must not pull the raw check column. Statements AFTER it may read the
+    // full destination: a sync that takes the merge path writes
+    // dest ∪ delta, because the store's write contract is "replace
+    // contents" (this insert-only sync appends the delta instead).
     val untilMax = sent.takeWhile(s => !(s.toUpperCase.contains("MAX(") &&
       !s.toUpperCase.contains("WHERE 1=0")))
     assert(!untilMax.exists(isFullColumnPull),
