@@ -62,10 +62,6 @@ object Tables {
           "timestamp[ns] (bigint under nanosAsLong) or timestamp[us/ltz]")
   }
 
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** SCALE-ADAPTIVE scan fan-out for heavy per-row pipelines (optimization
     * guide §2: make partitioning adapt to input size, not a constant tuned
     * for one deployment).

@@ -2,8 +2,10 @@ package graft.cli
 
 import graft.config.SyncConfig
 import graft.files.FileSync
-import graft.sync.{ParquetStore, Runner, SyncJob}
-import org.apache.spark.sql.SparkSession
+import graft.sync.{ParquetStore, Runner, SyncJob, TableStore}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** CLI entry points mirroring the reference's three executables
   * (SURVEY §3) plus the continuous-deployment loops: `db-sync` =
@@ -19,1892 +21,224 @@ import org.apache.spark.sql.SparkSession
   * while the same command under a long-running scheduler is the true
   * stream.
   *
-  * Usage:
-  *   graft.cli.Main db-sync --config tables.yaml --source <dir> --dest <dir> [--pks table=c1,c2[;t2=c] ]
-  *   graft.cli.Main file-sync <srcDir> <dstDir> [--apply]
-  *   graft.cli.Main stream-sync --source <parquetDir> --dest <storeDir> --table <t> --pks c1[,c2] --order c1[,c2] --checkpoint <dir>
-  *   graft.cli.Main serve-knn --queries <parquetDir> --corpus <parquet> --id <col> --vec <col> --k <n> --dest <storeDir> --table <t> --checkpoint <dir>
-  *   graft.cli.Main maintain-stats --source <parquetDir> --keys c1[,c2] --value <col> --dest <storeDir> --table <t> --checkpoint <dir>
+  * Every subcommand is one [[Command]] entry in [[commands]]: its name,
+  * its usage line and its parser. The usage text printed on a usage error
+  * is built from those entries.
   */
 object Main {
 
-  private val usage =
-    "usage: db-sync --config <yaml> --source <dir> --dest <dir> [--pks t=c1,c2;t2=c]\n" +
-      "       file-sync <srcDir> <dstDir> [--apply]\n" +
-      "       stream-sync --source <parquetDir> --dest <storeDir> --table <t> --pks c1[,c2] --order c1[,c2] --checkpoint <dir>\n" +
-      "       serve-knn --queries <parquetDir> --corpus <parquet> --id <col> --vec <col> --k <n> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       serve-mmr --queries <parquetDir> --corpus <parquet> --id <col> --vec <col> --k <n> --shortlist <n> --lambda <permille> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       maintain-stats --source <parquetDir> --keys c1[,c2] --value <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       maintain-distinct --source <parquetDir> --keys c1[,c2] --value <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       maintain-counts --source <parquetDir> --key c1[,c2] --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       topk-report --counts <parquetDir> --group c1[,c2] --tie c1[,c2] --k <n> --out <parquetDir>\n" +
-      "       train-lm --docs <parquet> --id <col> --text <col> --out <parquetDir>\n" +
-      "       quality-gate --source <parquetDir> --model <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       embed-dedup --source <parquetDir> --corpus <parquet> --id <col> --vec <col> --threshold <cos> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       index-ingest --source <parquetDir> --corpus <parquet> --id <col> --vec <col> --centroids <n> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       build-dedup-index --corpus <parquet> --id <col> --text <col> --ngram <n> --hashes <n> --bands <n> --out <storeDir>\n" +
-      "       ingest-dedup --source <parquetDir> --index <storeDir> --id <col> --text <col> --ngram <n> --num <j> --den <j> --hashes <n> --bands <n> --dest <storeDir> --table <t> --checkpoint <dir> [--tombstones true]\n" +
-      "       scrub-spans --source <parquetDir> --benchmark <parquet> --id <col> --text <col> --ngram <n> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       group-split --corpus <parquet> --id <col> --text <col> --ngram <n> --num <j> --den <j> --hashes <n> --bands <n> --out <parquetDir> [--salt <s>]\n" +
-      "       mine-negatives --queries <parquet> --corpus <parquet> --id <col> --vec <col> --label <col> --k <n> --out <parquetDir> [--ceiling <cos>]\n" +
-      "       centroid-audit --corpus <parquet> --id <col> --vec <col> --label <col> --out <parquetDir>\n" +
-      "       self-scrub --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--max-df <n>]\n" +
-      "       dedup-spans --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>] [--stats true]\n" +
-      "       span-gate-loss --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>]\n" +
-      "       fix-mojibake --corpus <parquet> --id <col> --text <col> --out <parquetDir>\n" +
-      "       data-card --corpus <parquet> --group <col> --id <col> --text <col> --out <parquetDir>\n" +
-      "       quantiles --corpus <parquet> --value <col> --id <col> --bucket-width <n> --probs 100,500,900 [--keys c1[,c2]] --out <parquetDir>\n" +
-      "       source-overlap --corpus <parquet> --source <col> --text <col> --out <parquetDir> [--gram <n>]\n" +
-      "       dup-span-gate --source <parquetDir> --reference <parquet> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--gram <n>] [--min-run <n>] [--max-df <n>]\n" +
-      "       ingest-span-index --source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir> [--gram <n>]\n" +
-      "       serve-span-scrub --corpus <parquet> --index <storeDir> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>] [--tombstones true]\n" +
-      "       line-dedup --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--max-df <n>] [--broadcast false]\n" +
-      "       ingest-line-index --source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir>\n" +
-      "       serve-line-dedup --index <storeDir> --id <col> --out <parquetDir> [--max-df <n>] [--broadcast false] [--tombstones true]\n" +
-      "       tombstone --store <storeDir> --ids <parquet>\n" +
-      "       snapshot-line-index --index <storeDir> [--max-df <n>]\n" +
-      "       line-dedup-gate --source <parquetDir> --index <storeDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       build-vocab --corpus <parquet> --text <col> --top <n> --out <parquetDir>\n" +
-      "       bpe-train --corpus <parquet> --text <col> --merges <n> [--byte-level true] --out <parquetDir>\n" +
-      "       bpe-encode --corpus <parquet> --id <col> --text <col> --merges <parquetDir> [--byte-level true] --out <parquetDir>\n" +
-      "       bpe-gate --source <parquetDir> --merges <parquetDir> --id <col> --text <col> [--byte-level true] --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       media-neardup --corpus <parquet(doc_id,media)> --modality image|audio|video [--max-hamming <n>] [--threshold-milli <n>] --out <parquetDir>\n" +
-      "       scene-cuts --corpus <parquet(doc_id,media)> --out <parquetDir> [--threshold-milli <n>] [--keyframes true]\n" +
-      "       line-dedup-within --corpus <parquet> --id <col> --text <col> --out <parquetDir>\n" +
-      "       sentences --corpus <parquet> --id <col> --text <col> --out <parquetDir>\n" +
-      "       ingest-media-dedup --source <parquetDir(doc_id,media)> --modality image|audio|video [--max-hamming <n>] [--threshold-milli <n>] --dest <storeDir> --checkpoint <dir>\n" +
-      "       serve-media-pairs --index <storeDir> [--tombstones true] --out <parquetDir>\n" +
-      "       profile --corpus <parquet> --out <parquetDir> [--approx true]\n" +
-      "       validate --corpus <parquet> --out <parquetDir> [--not-null c1,c2] [--range col:min:max,...] [--unique k1,k2[;k3]] [--ref <fk> --ref-table <parquet> --ref-key <col>]\n" +
-      "       keywords --corpus <parquet> --text <col> --iters <n> --k <n> --out <parquetDir>\n" +
-      "       gopher-filter --corpus <parquet> --id <col> --text <col> --out <parquetDir>\n" +
-      "       gopher-gate --source <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       unigram-train --corpus <parquet> --text <col> --max-piece-len <n> --keep <n> --rounds <n> --out <parquetDir>\n" +
-      "       unigram-encode --corpus <parquet> --id <col> --text <col> --pieces <parquetDir> --out <parquetDir>\n" +
-      "       pack-windows --corpus <parquet> --group c1[,c2] --order <col> --text <col> --window <n> [--bucket-width <n>] --out <parquetDir>\n" +
-      "       train-langid --corpus <parquet> --lang <col> --text <col> --out <parquetDir> [--k <n>] [--pinned true]\n" +
-      "       langid-classify --corpus <parquet> --id <col> --text <col> --profiles <parquetDir> --out <parquetDir> [--k <n>]\n" +
-      "       wordpiece-train --corpus <parquet> --text <col> --merges <n> --out <parquetDir>\n" +
-      "       wordpiece-encode --corpus <parquet> --id <col> --text <col> --vocab <parquetDir> --out <parquetDir> [--max-chars <n>]\n" +
-      "       wordpiece-gate --source <parquetDir> --vocab <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--max-chars <n>]\n" +
-      "       train-classifier --corpus <parquet> --id <col> --text <col> --label <col(+1/-1)> --dims <n> --rounds <n> --out <parquetDir> [--join true]\n" +
-      "       score-docs --corpus <parquet> --id <col> --text <col> --weights <parquetDir> --out <parquetDir> [--join true]\n" +
-      "       weighted-sample --corpus <parquet> --keys c1[,c2] --id <col> --weight <col> --k <n> --out <parquetDir> [--seed <s>]\n" +
-      "       budget-mixture --corpus <parquet> --source <col> --order <col> --tokens <col> --weights src=w[,src=w] --budget <n> --out <parquetDir> [--default-weight <n>] [--bucket-width <n>]\n" +
-      "       token-shards --corpus <parquet> --tokens <col> --order <col> --bucket-width <n> --shards <n> --out <parquetDir>\n" +
-      "       curriculum-order --corpus <parquet> --id <col> --priority <col> --rows-per-shard <n> --out <parquetDir> [--seed <s>]\n" +
-      "       encode-ids --corpus <parquet> --id <col> --text <col> --vocab <parquetDir> --out <parquetDir>\n" +
-      "       encode-gate --source <parquetDir> --vocab <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--join true]\n" +
-      "       winnow --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <k>] [--window <w>]\n" +
-      "       winnow-overlap --corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <k>] [--window <w>] [--min-shared <n>] [--max-df <n>]\n" +
-      "       build-overlap-index --corpus <parquet> --id <col> --text <col> --out <storeDir> [--gram <k>] [--window <w>] [--max-df <n>]\n" +
-      "       overlap-gate --source <parquetDir> --index <storeDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--gram <k>] [--window <w>] [--min-shared <n>] [--max-df <n>] [--tombstones true]\n" +
-      "       ingest-overlap-index --source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir> [--gram <k>] [--window <w>]\n" +
-      "       snapshot-overlap-index --index <storeDir> --id <col> [--max-df <n>]\n" +
-      "       ingest-dedup-index --source <parquetDir> --id <col> --text <col> --ngram <n> --hashes <n> --bands <n> --dest <storeDir> --checkpoint <dir>\n" +
-      "       build-bm25-index --corpus <parquet> --id <col> --text <col> --out <storeDir>\n" +
-      "       serve-bm25 --queries <parquetDir> --index <storeDir> --id <col> --k <n> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       fuse-rrf --rankings name=/dir[,name=/dir...] --doc <col> --out <parquetDir> [--k0 <n>] [--top <n>]\n" +
-      "       eval-recall --got <parquetDir> --want <parquetDir> --doc <col> --k <n> --out <parquetDir>\n" +
-      "       takedown --store <storeDir> --tables t1=idCol[,t2=idCol...] (--ids <parquet> | --from-tombstones true)\n" +
-      "       drift --old <parquet> --new <parquet> --out <parquetDir> (--value <col> --width <n> | --category <col>)\n" +
-      "       schema-drift --old <parquet> --new <parquet> --out <parquetDir>\n" +
-      "       k-anonymity --corpus <parquet> --quasi c1[,c2] --k <n> --out <parquetDir>\n" +
-      "       release-audit --corpus <parquet> --group <col> --id <col> --text <col> --out <dir> [--quasi c1[,c2] --k <n>]\n" +
-      "       html-extract --corpus <parquet> --id <col> --html <col> --out <parquetDir>\n" +
-      "       main-content --corpus <parquet> --id <col> --html <col> [--min-chars <n>] [--max-link-permille <n>] --out <parquetDir>\n" +
-      "       main-content-gate --source <parquetDir> --id <col> --html <col> [--min-chars <n>] [--max-link-permille <n>] [--min-kept <n>] --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       url-norm --corpus <parquet> --id <col> --url <col> --out <parquetDir>\n" +
-      "       url-frontier --source <parquetDir> --id <col> --url <col> --dest <storeDir> --table <t> --checkpoint <dir> [--max-per-host <n>]\n" +
-      "       scd2-ingest --source <parquetDir> --pks c1[,c2] --compare c1[,c2] --ver <col> [--op <col>] --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       scd2-apply --snapshot <parquet> --pks c1[,c2] --compare c1[,c2] --version <n> --out <parquetDir> (--history <parquetDir> | --init true) [--upserts true]\n" +
-      "       scd2-close --history <parquetDir> --keys <parquet> --pks c1[,c2] --version <n> --out <parquetDir>\n" +
-      "       warc-extract --files <parquet(file_id,content)> --out <parquetDir> [--text true] [--status <n>] [--mime <type>]\n" +
-      "       warc-export --corpus <parquet> --file-col <col> --id <col> --text <col> --date <iso8601> --out <parquetDir> [--url <col>] [--gzip false]\n" +
-      "       outlinks --pages <parquet> --id <col> --html <col> --out <parquetDir> (--url <col> | --raw true)\n" +
-      "       robots-sitemaps --robots <parquet keyed by --host col> --host <col> --out <parquetDir> [--txt <col>]\n" +
-      "       chat-render --conversations <parquet> --id <col> --messages <array<struct<role,content>> col> --out <parquetDir> [--spans true] [--token-masks true] [--max-tokens <n>]\n" +
-      "       chat-lint --conversations <parquet> --id <col> --messages <array<struct<role,content>> col> --out <parquetDir> [--failed-only true]\n" +
-      "       sitemap-entries --sitemaps <parquet> --id <col> --xml <sitemap document col> --out <parquetDir> [--kind url|sitemap]\n" +
-      "       preference-pairs --rollouts <parquet> --prompt <col> --out <parquetDir> (--id <col> --text <col> --score <col> | --from-state true) [--min-margin <x>]\n" +
-      "       preference-ingest --source <parquetDir> --prompt <col> --id <col> --text <col> --score <col> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       group-advantage --rollouts <parquet> --prompt <col> --id <col> --score <col> --out <parquetDir>\n" +
-      "       bitext-mine --src <parquet> --tgt <parquet (smaller side: it broadcasts)> --id <col> --vec <col> --out <parquetDir> [--k <n>] [--margin-micros <m>]\n" +
-      "       embed-decontaminate --corpus <parquet> --benchmark <parquet> --id <col> --vec <col> --threshold <cos> --out <parquetDir> [--scrub true | --cells <n> --nprobe <n>]\n" +
-      "       embed-decon-gate --source <parquetDir> --benchmark <parquet> --id <col> --vec <col> --threshold <cos> --dest <storeDir> --table <t> --checkpoint <dir>\n" +
-      "       cluster-balance --corpus <parquet> --id <col> --vec <col> --centroids <k> --cap <n> --out <parquetDir> [--iterations <n>]\n" +
-      "       robots-filter --urls <parquet> --robots <parquet keyed by the --host column, text in --txt col (default robots_txt)> --agent <name> --host <col> --path <col> --out <parquetDir> [--txt <col>] [--decisions true] [--join true]\n" +
-      "       retain-history --history <parquetDir> --horizon <n> --out <parquetDir>\n" +
-      "       asof --history <parquetDir> --version <n> --out <parquetDir>\n" +
-      "       compact --dir <parquetDir> [--target-mb <n>]"
+  /** What a validated command runs once a SparkSession exists. */
+  private[cli] type Action = SparkSession => Int
+
+  /** One subcommand: its name, its usage line (what follows the name),
+    * and a parser from the bound options to the action. The usage line is
+    * also the flag whitelist: a flag it does not name is a usage error, so
+    * the help text and the parser cannot drift apart. */
+  private[cli] final case class Command(name: String, usage: String)(
+      val parse: Opts => Either[String, Action]) {
+    val flags: Set[String] =
+      "--([a-z0-9-]+)".r.findAllMatchIn(usage).map(_.group(1)).toSet
+    /** Flags the usage shows without a value, like `[--apply]`. */
+    val bare: Set[String] =
+      "--([a-z0-9-]+)\\]".r.findAllMatchIn(usage).map(_.group(1)).toSet
+    /** Leading positional arguments, like `<srcDir> <dstDir>`. */
+    val positionals: Int = usage.split(' ').takeWhile(_.startsWith("<")).length
+  }
+
+  /** A command's options, bound to the command's name so that every
+    * validation message names it. Each validator is ONE rule for every
+    * subcommand: per-command copies let the wording and the bounds drift. */
+  private[cli] final class Opts(val cmd: String, val positional: Seq[String],
+                                m: Map[String, String]) {
+    def get(key: String): Option[String] = m.get(key)
+
+    def has(key: String): Boolean = m.contains(key)
+
+    def fail[A](msg: String): Either[String, A] = Left(s"$cmd: $msg")
+
+    def req(key: String): Either[String, String] =
+      m.get(key).toRight(s"$cmd: missing --$key")
+
+    /** Required `--key`, parsed by `f`; a value `f` rejects is a usage
+      * error saying `what` the value must be. */
+    def reqAs[A](key: String, what: String)(f: String => Option[A]): Either[String, A] =
+      req(key).flatMap(s => f(s).toRight(s"$cmd: --$key must be $what, got $s"))
+
+    /** Optional `--key`, parsed and rejected like [[reqAs]]. */
+    def opt[A](key: String, what: String)(f: String => Option[A]): Either[String, Option[A]] =
+      m.get(key) match {
+        case None    => Right(None)
+        case Some(s) => f(s).map(Some(_)).toRight(s"$cmd: --$key must be $what, got $s")
+      }
+
+    def posInt(key: String): Either[String, Int] =
+      reqAs(key, "a positive int")(_.toIntOption.filter(_ >= 1))
+
+    /** Positive LONG flag — for values that legitimately exceed Int range
+      * (SCD2 versions are often epoch millis). */
+    def posLong(key: String): Either[String, Long] =
+      reqAs(key, "a positive long")(_.toLongOption.filter(_ >= 1L))
+
+    /** Required NON-EMPTY column list. */
+    def reqCols(key: String): Either[String, Seq[String]] =
+      req(key).map(cols).flatMap(cs =>
+        if (cs.nonEmpty) Right(cs) else fail(s"--$key must name at least one column"))
+
+    /** Optional positive-int flag with a default. */
+    def optInt(key: String, dflt: Int): Either[String, Int] =
+      opt(key, "a positive int")(_.toIntOption.filter(_ >= 1)).map(_.getOrElse(dflt))
+
+    /** Optional NON-NEGATIVE-int flag with a default — for options where 0
+      * is a meaningful explicit value (pack-windows' --bucket-width 0 =
+      * plain per-group window), which optInt's >= 1 rule would reject. */
+    def optIntZero(key: String, dflt: Int): Either[String, Int] =
+      opt(key, "a non-negative int")(_.toIntOption.filter(_ >= 0)).map(_.getOrElse(dflt))
+
+    def optBool(key: String, dflt: Boolean): Either[String, Boolean] =
+      opt(key, "true or false")(_.toBooleanOption).map(_.getOrElse(dflt))
+
+    /** A cosine similarity threshold in [0, 1]. */
+    def cosine(key: String): Either[String, Double] =
+      reqAs(key, "a cosine in [0,1]")(_.toDoubleOption.filter(d => d >= 0 && d <= 1))
+
+    /** The media modality selector shared by media-neardup and
+      * ingest-media-dedup — fails at parse time, not after Spark starts. */
+    def modality: Either[String, String] =
+      reqAs("modality", "image, audio or video")(
+        Some(_).filter(Set("image", "audio", "video")))
+  }
 
   def main(args: Array[String]): Unit = sys.exit(run(args))
 
   /** Parse/validate BEFORE building a SparkSession — usage errors must not
     * pay multi-second Spark startup. */
   def run(args: Array[String]): Int =
-    parse(args.toList) match {
-      case Left(err) =>
-        System.err.println(err); System.err.println(usage); 2
-      case Right(cmd) =>
-        val spark = graft.Sessions.build(sys.env.get("SPARK_MASTER"))
-        try execute(spark, cmd)
-        finally spark.stop()
-    }
+    parse(args.toList).fold(usageError, { action =>
+      val spark = graft.Sessions.build(sys.env.get("SPARK_MASTER"))
+      try action(spark)
+      finally spark.stop()
+    })
 
   /** Test entry: validate + execute against a provided session. */
   def run(spark: SparkSession, args: Array[String]): Int =
-    parse(args.toList) match {
-      case Left(err)  => System.err.println(err); System.err.println(usage); 2
-      case Right(cmd) => execute(spark, cmd)
-    }
+    parse(args.toList).fold(usageError, _(spark))
 
-  // ------------------------------------------------------------- commands
-
-  sealed private trait Cmd
-  private case class DbSync(config: String, source: String, dest: String,
-                            pks: Map[String, Seq[String]]) extends Cmd
-  private case class FileSyncCmd(src: String, dst: String, apply: Boolean) extends Cmd
-  private case class StreamSync(source: String, dest: String, table: String,
-                                pks: Seq[String], order: Seq[String],
-                                checkpoint: String) extends Cmd
-  private case class ServeKnn(queries: String, corpus: String, id: String,
-                              vec: String, k: Int, dest: String, table: String,
-                              checkpoint: String) extends Cmd
-  private case class ServeMmr(queries: String, corpus: String, id: String,
-                              vec: String, k: Int, shortlist: Int,
-                              lambdaPm: Int, dest: String, table: String,
-                              checkpoint: String) extends Cmd
-  private case class MaintainStats(source: String, keys: Seq[String], value: String,
-                                   dest: String, table: String,
-                                   checkpoint: String) extends Cmd
-  private case class MaintainCounts(source: String, keys: Seq[String],
-                                    dest: String, table: String,
-                                    checkpoint: String) extends Cmd
-  private case class TopKReportCmd(counts: String, group: Seq[String],
-                                   tie: Seq[String], k: Int,
-                                   out: String) extends Cmd
-  private case class MaintainDistinct(source: String, keys: Seq[String], value: String,
-                                      dest: String, table: String,
-                                      checkpoint: String) extends Cmd
-  private case class TrainLm(docs: String, id: String, text: String,
-                             out: String) extends Cmd
-  private case class QualityGateCmd(source: String, model: String, id: String,
-                                    text: String, dest: String, table: String,
-                                    checkpoint: String) extends Cmd
-  private case class EmbedDedup(source: String, corpus: String, id: String,
-                                vec: String, threshold: Double, dest: String,
-                                table: String, checkpoint: String) extends Cmd
-  private case class IndexIngest(source: String, corpus: String, id: String,
-                                 vec: String, centroids: Int, dest: String,
-                                 table: String, checkpoint: String) extends Cmd
-  private case class WarcExtractCmd(files: String, text: Boolean,
-                                    status: Option[Int], mime: Option[String],
-                                    out: String) extends Cmd
-  private case class WarcExportCmd(corpus: String, fileCol: String, id: String,
-                                   text: String, url: Option[String],
-                                   date: String, gzip: Boolean,
-                                   out: String) extends Cmd
-  private case class OutlinksCmd(pages: String, id: String,
-                                 url: Option[String], html: String,
-                                 raw: Boolean, out: String) extends Cmd
-  private case class RobotsSitemapsCmd(robots: String, host: String,
-                                       txt: String, out: String) extends Cmd
-  private case class ChatRenderCmd(conversations: String, id: String,
-                                   messages: String, spans: Boolean,
-                                   tokenMasks: Boolean,
-                                   budget: Option[Long],
-                                   out: String) extends Cmd
-  private case class ChatLintCmd(conversations: String, id: String,
-                                 messages: String, failedOnly: Boolean,
-                                 out: String) extends Cmd
-  private case class SitemapEntriesCmd(sitemaps: String, id: String,
-                                       xml: String, kind: Option[String],
-                                       out: String) extends Cmd
-  private case class PreferencePairsCmd(rollouts: String, prompt: String,
-                                        id: String, text: String,
-                                        score: String, minMargin: Double,
-                                        fromState: Boolean,
-                                        out: String) extends Cmd
-  private case class PreferenceIngestCmd(source: String, prompt: String,
-                                         id: String, text: String,
-                                         score: String, dest: String,
-                                         table: String,
-                                         checkpoint: String) extends Cmd
-  private case class GroupAdvantageCmd(rollouts: String, prompt: String,
-                                       id: String, score: String,
-                                       out: String) extends Cmd
-  private case class BitextMineCmd(src: String, tgt: String, id: String,
-                                   vec: String, k: Int, marginMicros: Long,
-                                   out: String) extends Cmd
-  private case class EmbedDeconCmd(corpus: String, benchmark: String,
-                                   id: String, vec: String, threshold: Double,
-                                   scrub: Boolean, ivf: Option[(Int, Int)],
-                                   out: String) extends Cmd
-  private case class EmbedDeconGateCmd(source: String, benchmark: String,
-                                       id: String, vec: String,
-                                       threshold: Double, dest: String,
-                                       table: String,
-                                       checkpoint: String) extends Cmd
-  private case class ClusterBalanceCmd(corpus: String, id: String, vec: String,
-                                       centroids: Int, iterations: Int,
-                                       cap: Int, out: String) extends Cmd
-  private case class RobotsFilterCmd(urls: String, robots: String, agent: String,
-                                     host: String, path: String, txt: String,
-                                     decisions: Boolean, join: Boolean,
-                                     out: String) extends Cmd
-  private case class BuildDedupIndex(corpus: String, id: String, text: String,
-                                     ngram: Int, hashes: Int, bands: Int,
-                                     out: String) extends Cmd
-  private case class IngestDedup(source: String, index: String, id: String,
-                                 text: String, ngram: Int, num: Int, den: Int,
-                                 hashes: Int, bands: Int, dest: String,
-                                 table: String, checkpoint: String,
-                                 tombstones: Boolean) extends Cmd
-  private case class ScrubSpans(source: String, benchmark: String, id: String,
-                                text: String, ngram: Int, dest: String,
-                                table: String, checkpoint: String) extends Cmd
-  private case class GroupSplit(corpus: String, id: String, text: String,
-                                ngram: Int, num: Int, den: Int, hashes: Int,
-                                bands: Int, out: String, salt: String) extends Cmd
-  private case class MineNegatives(queries: String, corpus: String, id: String,
-                                   vec: String, label: String, k: Int,
-                                   out: String, ceiling: Double) extends Cmd
-  private case class CentroidAudit(corpus: String, id: String, vec: String,
-                                   label: String, out: String) extends Cmd
-  private case class SelfScrub(corpus: String, id: String, text: String,
-                               gram: Int, maxDf: Int, out: String) extends Cmd
-  private case class DedupSpans(corpus: String, id: String, text: String,
-                                gram: Int, minRun: Int, maxDf: Int,
-                                stats: Boolean, out: String) extends Cmd
-  private case class FixMojibakeCmd(corpus: String, id: String, text: String,
-                                    out: String) extends Cmd
-  private case class DataCardCmd(corpus: String, group: String, id: String,
-                                 text: String, out: String) extends Cmd
-  private case class QuantilesCmd(corpus: String, value: String, id: String,
-                                  keys: Seq[String], bucketWidth: Int,
-                                  probs: Seq[Long], out: String) extends Cmd
-  private case class HtmlExtractCmd(corpus: String, id: String, html: String,
-                                    out: String) extends Cmd
-  private case class MainContentCmd(corpus: String, id: String, html: String,
-                                    minChars: Int, maxLinkPermille: Int,
-                                    out: String) extends Cmd
-  private case class Scd2IngestCmd(source: String, pks: Seq[String],
-                                   compare: Seq[String], ver: String,
-                                   op: Option[String], dest: String,
-                                   table: String, ck: String) extends Cmd
-  private case class UrlNormCmd(corpus: String, id: String, url: String,
-                                out: String) extends Cmd
-  private case class UrlFrontierCmd(source: String, id: String, url: String,
-                                    dest: String, table: String,
-                                    checkpoint: String,
-                                    maxPerHost: Option[Long]) extends Cmd
-  private case class CurriculumCmd(corpus: String, id: String, priority: String,
-                                   rowsPerShard: Int, seed: String,
-                                   out: String) extends Cmd
-  private case class SceneCutsCmd(corpus: String, thresholdMilli: Int,
-                                  keyframes: Boolean, out: String) extends Cmd
-  private case class LineDedupWithinCmd(corpus: String, id: String,
-                                        text: String, out: String) extends Cmd
-  private case class SentencesCmd(corpus: String, id: String, text: String,
-                                  out: String) extends Cmd
-  private case class Scd2ApplyCmd(history: Option[String], snapshot: String,
-                                  pks: Seq[String], compare: Seq[String],
-                                  version: Long, upserts: Boolean,
-                                  out: String) extends Cmd
-  private case class Scd2CloseCmd(history: String, keys: String,
-                                  pks: Seq[String], version: Long,
-                                  out: String) extends Cmd
-  private case class SchemaDriftCmd(oldP: String, newP: String,
-                                    out: String) extends Cmd
-  private case class KAnonymityCmd(corpus: String, quasi: Seq[String],
-                                   k: Int, out: String) extends Cmd
-  private case class ReleaseAuditCmd(corpus: String, group: String, id: String,
-                                     text: String, quasi: Seq[String], k: Int,
-                                     out: String) extends Cmd
-  private case class AsOfCmd(history: String, version: Long,
-                             out: String) extends Cmd
-  private case class SourceOverlapCmd(corpus: String, source: String,
-                                      text: String, gram: Int,
-                                      out: String) extends Cmd
-  private case class SpanGateLossCmd(corpus: String, id: String, text: String,
-                                     gram: Int, minRun: Int, maxDf: Int,
-                                     out: String) extends Cmd
-  private case class DupSpanGate(source: String, reference: String, id: String,
-                                 text: String, gram: Int, minRun: Int,
-                                 maxDf: Int, dest: String, table: String,
-                                 checkpoint: String) extends Cmd
-  private case class IngestSpanIndexCmd(source: String, id: String,
-                                        text: String, gram: Int, dest: String,
-                                        ck: String) extends Cmd
-  private case class ServeSpanScrubCmd(corpus: String, index: String,
-                                       id: String, text: String, gram: Int,
-                                       minRun: Int, maxDf: Int,
-                                       tombstones: Boolean,
-                                       out: String) extends Cmd
-  private case class TakedownCmd(store: String, tables: Seq[(String, String)],
-                                 fromTombstones: Boolean,
-                                 ids: String) extends Cmd
-  private case class DriftCmd(oldDir: String, newDir: String,
-                              value: Option[(String, Long)],
-                              category: Option[String],
-                              out: String) extends Cmd
-  private case class BuildVocab(corpus: String, text: String, top: Int,
-                                out: String) extends Cmd
-  private case class BpeTrainCmd(corpus: String, text: String, nMerges: Int,
-                                 byteLevel: Boolean, out: String) extends Cmd
-  private case class BpeEncodeCmd(corpus: String, id: String, text: String,
-                                  merges: String, byteLevel: Boolean,
-                                  out: String) extends Cmd
-  private case class BpeGateCmd(source: String, merges: String, id: String,
-                                text: String, byteLevel: Boolean,
-                                dest: String, table: String,
-                                ck: String) extends Cmd
-  private case class MediaNearDupCmd(corpus: String, modality: String,
-                                     maxHamming: Int, thresholdMilli: Int,
-                                     out: String) extends Cmd
-  private case class IngestMediaDedupCmd(source: String, modality: String,
-                                         maxHamming: Int, thresholdMilli: Int,
-                                         dest: String, ck: String) extends Cmd
-  private case class WeightedSampleCmd(corpus: String, keys: Seq[String],
-                                       id: String, weight: String, k: Int,
-                                       seed: String, out: String) extends Cmd
-  private case class BudgetMixtureCmd(corpus: String, source: String,
-                                      order: String, tokens: String,
-                                      weights: Map[String, Long],
-                                      budget: Long, defaultWeight: Long,
-                                      bucketWidth: Int, out: String) extends Cmd
-  private case class TokenShardsCmd(corpus: String, tokens: String,
-                                    order: String, bucketWidth: Int,
-                                    nShards: Int, out: String) extends Cmd
-  private case class GopherFilterCmd(corpus: String, id: String, text: String,
-                                     out: String) extends Cmd
-  private case class LineDedupCmd(corpus: String, id: String, text: String,
-                                  maxDf: Int, broadcastHot: Boolean,
-                                  out: String) extends Cmd
-  private case class IngestLineIndexCmd(source: String, id: String,
-                                        text: String, dest: String,
-                                        ck: String) extends Cmd
-  private case class ServeLineDedupCmd(index: String, id: String, maxDf: Int,
-                                       broadcastHot: Boolean,
-                                       tombstones: Boolean,
-                                       out: String) extends Cmd
-  private case class TombstoneCmd(store: String, ids: String) extends Cmd
-  private case class SnapshotLineIndexCmd(index: String,
-                                          maxDf: Int) extends Cmd
-  private case class LineDedupGateCmd(source: String, index: String,
-                                      id: String, text: String, dest: String,
-                                      table: String, ck: String) extends Cmd
-  private case class ProfileCmd(corpus: String, approx: Boolean,
-                                out: String) extends Cmd
-  private case class ValidateCmd(corpus: String, notNull: Seq[String],
-                                 ranges: Seq[(String, Long, Long)],
-                                 uniques: Seq[Seq[String]],
-                                 ref: Option[(String, String, String)],
-                                 out: String) extends Cmd
-  private case class KeywordsCmd(corpus: String, text: String, iters: Int,
-                                 k: Int, out: String) extends Cmd
-  private case class MainContentGateCmd(source: String, id: String,
-                                        html: String, minChars: Int,
-                                        maxLinkPermille: Int, minKept: Int,
-                                        dest: String, table: String,
-                                        ck: String) extends Cmd
-  private case class ServeMediaPairsCmd(index: String, tombstones: Boolean,
-                                        out: String) extends Cmd
-  private case class RetainHistoryCmd(history: String, horizon: Long,
-                                      out: String) extends Cmd
-  private case class GopherGateCmd(source: String, id: String, text: String,
-                                   dest: String, table: String,
-                                   checkpoint: String) extends Cmd
-  private case class UnigramTrainCmd(corpus: String, text: String,
-                                     maxPieceLen: Int, keep: Int, rounds: Int,
-                                     out: String) extends Cmd
-  private case class UnigramEncodeCmd(corpus: String, id: String, text: String,
-                                      pieces: String, out: String) extends Cmd
-  private case class PackWindowsCmd(corpus: String, group: Seq[String],
-                                    order: String, text: String, window: Int,
-                                    bucketWidth: Int, out: String) extends Cmd
-  private case class TrainLangIdCmd(corpus: String, lang: String,
-                                    text: String, k: Int, pinned: Boolean,
-                                    out: String) extends Cmd
-  private case class LangIdClassifyCmd(corpus: String, id: String,
-                                       text: String, profiles: String,
-                                       k: Int, out: String) extends Cmd
-  private case class WordPieceTrainCmd(corpus: String, text: String,
-                                       merges: Int, out: String) extends Cmd
-  private case class WordPieceEncodeCmd(corpus: String, id: String,
-                                        text: String, vocab: String,
-                                        maxChars: Int, out: String) extends Cmd
-  private case class WordPieceGateCmd(source: String, vocab: String,
-                                      id: String, text: String, dest: String,
-                                      table: String, ck: String,
-                                      maxChars: Int) extends Cmd
-  private case class TrainClassifierCmd(corpus: String, id: String,
-                                        text: String, label: String, dims: Int,
-                                        rounds: Int, join: Boolean,
-                                        out: String) extends Cmd
-  private case class ScoreDocsCmd(corpus: String, id: String, text: String,
-                                  weights: String, join: Boolean,
-                                  out: String) extends Cmd
-  private case class EncodeIds(corpus: String, id: String, text: String,
-                               vocab: String, out: String) extends Cmd
-  private case class EncodeGateCmd(source: String, vocab: String, id: String,
-                                   text: String, dest: String, table: String,
-                                   checkpoint: String,
-                                   join: Boolean) extends Cmd
-  private case class WinnowCmd(corpus: String, id: String, text: String,
-                               gram: Int, window: Int, out: String,
-                               overlap: Option[(Int, Int)]) extends Cmd
-  private case class BuildOverlapIndex(corpus: String, id: String, text: String,
-                                       gram: Int, window: Int, maxDf: Int,
-                                       out: String) extends Cmd
-  private case class OverlapGateCmd(source: String, index: String, id: String,
-                                    text: String, gram: Int, window: Int,
-                                    minShared: Int, dest: String, table: String,
-                                    checkpoint: String,
-                                    maxDf: Option[Int],
-                                    tombstones: Boolean) extends Cmd
-  private case class IngestOverlapIndex(source: String, id: String,
-                                        text: String, gram: Int, window: Int,
-                                        dest: String,
-                                        checkpoint: String) extends Cmd
-  private case class SnapshotOverlapIndex(index: String, id: String,
-                                          maxDf: Int) extends Cmd
-  private case class IngestDedupIndex(source: String, id: String, text: String,
-                                      ngram: Int, hashes: Int, bands: Int,
-                                      dest: String,
-                                      checkpoint: String) extends Cmd
-  private case class BuildBm25Index(corpus: String, id: String, text: String,
-                                    out: String) extends Cmd
-  private case class ServeBm25(queries: String, index: String, id: String,
-                               k: Int, dest: String, table: String,
-                               checkpoint: String) extends Cmd
-  private case class FuseRrf(rankings: Seq[(String, String)], doc: String,
-                             k0: Int, top: Int, out: String) extends Cmd
-  private case class EvalRecall(got: String, want: String, doc: String,
-                                k: Int, out: String) extends Cmd
-  private case class CompactCmd(dir: String, targetMb: Int) extends Cmd
-
-  private def parse(args: List[String]): Either[String, Cmd] = args match {
-    case "db-sync" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        config <- opts.get("config").toRight("db-sync: missing --config")
-        source <- opts.get("source").toRight("db-sync: missing --source")
-        dest <- opts.get("dest").toRight("db-sync: missing --dest")
-        pks <- opts.get("pks").map(parsePks).getOrElse(Right(Map.empty[String, Seq[String]]))
-      } yield DbSync(config, source, dest, pks)
-    case "file-sync" :: src :: dst :: rest if rest.forall(_ == "--apply") =>
-      Right(FileSyncCmd(src, dst, rest.contains("--apply")))
-    case "file-sync" :: _ =>
-      Left("file-sync: expected <srcDir> <dstDir> [--apply]")
-    case "stream-sync" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "stream-sync", "source")
-        dest <- req(opts, "stream-sync", "dest")
-        table <- req(opts, "stream-sync", "table")
-        pks <- req(opts, "stream-sync", "pks").map(cols)
-        order <- req(opts, "stream-sync", "order").map(cols)
-        ck <- req(opts, "stream-sync", "checkpoint")
-      } yield StreamSync(source, dest, table, pks, order, ck)
-    case "serve-knn" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        queries <- req(opts, "serve-knn", "queries")
-        corpus <- req(opts, "serve-knn", "corpus")
-        id <- req(opts, "serve-knn", "id")
-        vec <- req(opts, "serve-knn", "vec")
-        k <- req(opts, "serve-knn", "k").flatMap(s =>
-          s.toIntOption.filter(_ >= 1).toRight(s"serve-knn: --k must be a positive int, got $s"))
-        dest <- req(opts, "serve-knn", "dest")
-        table <- req(opts, "serve-knn", "table")
-        ck <- req(opts, "serve-knn", "checkpoint")
-      } yield ServeKnn(queries, corpus, id, vec, k, dest, table, ck)
-    case "serve-mmr" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        queries <- req(opts, "serve-mmr", "queries")
-        corpus <- req(opts, "serve-mmr", "corpus")
-        id <- req(opts, "serve-mmr", "id")
-        vec <- req(opts, "serve-mmr", "vec")
-        k <- posInt(opts, "serve-mmr", "k")
-        shortlist <- posInt(opts, "serve-mmr", "shortlist").flatMap(sl =>
-          if (sl >= k) Right(sl)
-          else Left(s"serve-mmr: --shortlist must be >= --k, got $sl < $k"))
-        lam <- req(opts, "serve-mmr", "lambda").flatMap(v =>
-          v.toIntOption.filter(l => l >= 0 && l <= 1000).toRight(
-            s"serve-mmr: --lambda is permille in [0, 1000], got $v"))
-        dest <- req(opts, "serve-mmr", "dest")
-        table <- req(opts, "serve-mmr", "table")
-        ck <- req(opts, "serve-mmr", "checkpoint")
-      } yield ServeMmr(queries, corpus, id, vec, k, shortlist, lam, dest, table, ck)
-    case "maintain-stats" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "maintain-stats", "source")
-        keys <- req(opts, "maintain-stats", "keys").map(cols)
-        value <- req(opts, "maintain-stats", "value")
-        dest <- req(opts, "maintain-stats", "dest")
-        table <- req(opts, "maintain-stats", "table")
-        ck <- req(opts, "maintain-stats", "checkpoint")
-      } yield MaintainStats(source, keys, value, dest, table, ck)
-    case "maintain-counts" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "maintain-counts", "source")
-        key <- req(opts, "maintain-counts", "key").map(cols)
-        dest <- req(opts, "maintain-counts", "dest")
-        table <- req(opts, "maintain-counts", "table")
-        ck <- req(opts, "maintain-counts", "checkpoint")
-      } yield MaintainCounts(source, key, dest, table, ck)
-    case "topk-report" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        counts <- req(opts, "topk-report", "counts")
-        group <- reqCols(opts, "topk-report", "group")
-        tie <- reqCols(opts, "topk-report", "tie")
-        k <- posInt(opts, "topk-report", "k")
-        out <- req(opts, "topk-report", "out")
-      } yield TopKReportCmd(counts, group, tie, k, out)
-    case "maintain-distinct" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "maintain-distinct", "source")
-        keys <- req(opts, "maintain-distinct", "keys").map(cols)
-        value <- req(opts, "maintain-distinct", "value")
-        dest <- req(opts, "maintain-distinct", "dest")
-        table <- req(opts, "maintain-distinct", "table")
-        ck <- req(opts, "maintain-distinct", "checkpoint")
-      } yield MaintainDistinct(source, keys, value, dest, table, ck)
-    case "train-lm" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        docs <- req(opts, "train-lm", "docs")
-        id <- req(opts, "train-lm", "id")
-        text <- req(opts, "train-lm", "text")
-        out <- req(opts, "train-lm", "out")
-      } yield TrainLm(docs, id, text, out)
-    case "quality-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "quality-gate", "source")
-        model <- req(opts, "quality-gate", "model")
-        id <- req(opts, "quality-gate", "id")
-        text <- req(opts, "quality-gate", "text")
-        dest <- req(opts, "quality-gate", "dest")
-        table <- req(opts, "quality-gate", "table")
-        ck <- req(opts, "quality-gate", "checkpoint")
-      } yield QualityGateCmd(source, model, id, text, dest, table, ck)
-    case "embed-dedup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "embed-dedup", "source")
-        corpus <- req(opts, "embed-dedup", "corpus")
-        id <- req(opts, "embed-dedup", "id")
-        vec <- req(opts, "embed-dedup", "vec")
-        t <- req(opts, "embed-dedup", "threshold").flatMap(s =>
-          s.toDoubleOption.filter(d => d >= 0 && d <= 1)
-            .toRight(s"embed-dedup: --threshold must be a cosine in [0,1], got $s"))
-        dest <- req(opts, "embed-dedup", "dest")
-        table <- req(opts, "embed-dedup", "table")
-        ck <- req(opts, "embed-dedup", "checkpoint")
-      } yield EmbedDedup(source, corpus, id, vec, t, dest, table, ck)
-    case "index-ingest" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "index-ingest", "source")
-        corpus <- req(opts, "index-ingest", "corpus")
-        id <- req(opts, "index-ingest", "id")
-        vec <- req(opts, "index-ingest", "vec")
-        c <- req(opts, "index-ingest", "centroids").flatMap(s =>
-          s.toIntOption.filter(_ >= 1)
-            .toRight(s"index-ingest: --centroids must be a positive int, got $s"))
-        dest <- req(opts, "index-ingest", "dest")
-        table <- req(opts, "index-ingest", "table")
-        ck <- req(opts, "index-ingest", "checkpoint")
-      } yield IndexIngest(source, corpus, id, vec, c, dest, table, ck)
-    case "build-dedup-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "build-dedup-index", "corpus")
-        id <- req(opts, "build-dedup-index", "id")
-        text <- req(opts, "build-dedup-index", "text")
-        n <- posInt(opts, "build-dedup-index", "ngram")
-        hashes <- posInt(opts, "build-dedup-index", "hashes")
-        bands <- posInt(opts, "build-dedup-index", "bands")
-        out <- req(opts, "build-dedup-index", "out")
-      } yield BuildDedupIndex(corpus, id, text, n, hashes, bands, out)
-    case "ingest-dedup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-dedup", "source")
-        index <- req(opts, "ingest-dedup", "index")
-        id <- req(opts, "ingest-dedup", "id")
-        text <- req(opts, "ingest-dedup", "text")
-        n <- posInt(opts, "ingest-dedup", "ngram")
-        num <- posInt(opts, "ingest-dedup", "num")
-        den <- posInt(opts, "ingest-dedup", "den").flatMap(d =>
-          // num > den is a Jaccard threshold above 1: unsatisfiable even
-          // for identical sets — the gate would silently reject nothing
-          if (num <= d) Right(d)
-          else Left(s"ingest-dedup: --num/--den is a Jaccard threshold <= 1, got $num/$d"))
-        hashes <- posInt(opts, "ingest-dedup", "hashes")
-        bands <- posInt(opts, "ingest-dedup", "bands")
-        dest <- req(opts, "ingest-dedup", "dest")
-        table <- req(opts, "ingest-dedup", "table")
-        ck <- req(opts, "ingest-dedup", "checkpoint")
-        ts <- optBool(opts, "ingest-dedup", "tombstones", dflt = false)
-      } yield IngestDedup(source, index, id, text, n, num, den, hashes, bands, dest, table, ck, ts)
-    case "scrub-spans" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "scrub-spans", "source")
-        benchmark <- req(opts, "scrub-spans", "benchmark")
-        id <- req(opts, "scrub-spans", "id")
-        text <- req(opts, "scrub-spans", "text")
-        n <- posInt(opts, "scrub-spans", "ngram")
-        dest <- req(opts, "scrub-spans", "dest")
-        table <- req(opts, "scrub-spans", "table")
-        ck <- req(opts, "scrub-spans", "checkpoint")
-      } yield ScrubSpans(source, benchmark, id, text, n, dest, table, ck)
-    case "group-split" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "group-split", "corpus")
-        id <- req(opts, "group-split", "id")
-        text <- req(opts, "group-split", "text")
-        n <- posInt(opts, "group-split", "ngram")
-        num <- posInt(opts, "group-split", "num")
-        den <- posInt(opts, "group-split", "den").flatMap(d =>
-          if (num <= d) Right(d)
-          else Left(s"group-split: --num/--den is a Jaccard threshold <= 1, got $num/$d"))
-        hashes <- posInt(opts, "group-split", "hashes")
-        bands <- posInt(opts, "group-split", "bands")
-        out <- req(opts, "group-split", "out")
-      } yield GroupSplit(corpus, id, text, n, num, den, hashes, bands, out,
-        opts.getOrElse("salt", "graft-split"))
-    case "mine-negatives" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        queries <- req(opts, "mine-negatives", "queries")
-        corpus <- req(opts, "mine-negatives", "corpus")
-        id <- req(opts, "mine-negatives", "id")
-        vec <- req(opts, "mine-negatives", "vec")
-        label <- req(opts, "mine-negatives", "label")
-        k <- posInt(opts, "mine-negatives", "k")
-        out <- req(opts, "mine-negatives", "out")
-        ceiling <- opts.get("ceiling").fold(Right(0.95): Either[String, Double])(s =>
-          s.toDoubleOption.filter(d => d > 0 && d <= 1)
-            .toRight(s"mine-negatives: --ceiling must be a cosine in (0,1], got $s"))
-      } yield MineNegatives(queries, corpus, id, vec, label, k, out, ceiling)
-    case "centroid-audit" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "centroid-audit", "corpus")
-        id <- req(opts, "centroid-audit", "id")
-        vec <- req(opts, "centroid-audit", "vec")
-        label <- req(opts, "centroid-audit", "label")
-        out <- req(opts, "centroid-audit", "out")
-      } yield CentroidAudit(corpus, id, vec, label, out)
-    case "self-scrub" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "self-scrub", "corpus")
-        id <- req(opts, "self-scrub", "id")
-        text <- req(opts, "self-scrub", "text")
-        n <- optInt(opts, "self-scrub", "gram", 8)
-        maxDf <- optInt(opts, "self-scrub", "max-df", 1)
-        out <- req(opts, "self-scrub", "out")
-      } yield SelfScrub(corpus, id, text, n, maxDf, out)
-    case "dedup-spans" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "dedup-spans", "corpus")
-        id <- req(opts, "dedup-spans", "id")
-        text <- req(opts, "dedup-spans", "text")
-        n <- optInt(opts, "dedup-spans", "gram", 8)
-        minRun <- optInt(opts, "dedup-spans", "min-run", 20)
-        maxDf <- optInt(opts, "dedup-spans", "max-df", 20)
-        stats <- optBool(opts, "dedup-spans", "stats", dflt = false)
-        out <- req(opts, "dedup-spans", "out")
-      } yield DedupSpans(corpus, id, text, n, minRun, maxDf, stats, out)
-    case "fix-mojibake" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "fix-mojibake", "corpus")
-        id <- req(opts, "fix-mojibake", "id")
-        text <- req(opts, "fix-mojibake", "text")
-        out <- req(opts, "fix-mojibake", "out")
-      } yield FixMojibakeCmd(corpus, id, text, out)
-    case "data-card" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "data-card", "corpus")
-        group <- req(opts, "data-card", "group")
-        id <- req(opts, "data-card", "id")
-        text <- req(opts, "data-card", "text")
-        out <- req(opts, "data-card", "out")
-      } yield DataCardCmd(corpus, group, id, text, out)
-    case "quantiles" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "quantiles", "corpus")
-        value <- req(opts, "quantiles", "value")
-        id <- req(opts, "quantiles", "id")
-        keys <- Right(opts.get("keys").toSeq
-          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
-        bw <- posInt(opts, "quantiles", "bucket-width")
-        probs <- req(opts, "quantiles", "probs").flatMap { raw =>
-          val parsed = raw.split(",").map(_.trim).filter(_.nonEmpty)
-            .map(_.toLongOption)
-          if (parsed.nonEmpty && parsed.forall(_.exists(p => p >= 0 && p <= 1000)))
-            Right(parsed.flatten.toSeq)
-          else Left(s"quantiles: --probs must be permille ints in [0, 1000], got $raw")
-        }
-        out <- req(opts, "quantiles", "out")
-      } yield QuantilesCmd(corpus, value, id, keys, bw, probs, out)
-    case "html-extract" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "html-extract", "corpus")
-        id <- req(opts, "html-extract", "id")
-        html <- req(opts, "html-extract", "html")
-        out <- req(opts, "html-extract", "out")
-      } yield HtmlExtractCmd(corpus, id, html, out)
-    case "main-content" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "main-content", "corpus")
-        id <- req(opts, "main-content", "id")
-        html <- req(opts, "main-content", "html")
-        minChars <- optInt(opts, "main-content", "min-chars", 25)
-        mlp <- optInt(opts, "main-content", "max-link-permille", 333)
-        out <- req(opts, "main-content", "out")
-      } yield MainContentCmd(corpus, id, html, minChars, mlp, out)
-    case "scd2-ingest" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "scd2-ingest", "source")
-        pks <- req(opts, "scd2-ingest", "pks").map(cols)
-        compare <- req(opts, "scd2-ingest", "compare").map(cols)
-        ver <- req(opts, "scd2-ingest", "ver")
-        op <- Right(opts.get("op"))
-        dest <- req(opts, "scd2-ingest", "dest")
-        table <- req(opts, "scd2-ingest", "table")
-        ck <- req(opts, "scd2-ingest", "checkpoint")
-      } yield Scd2IngestCmd(source, pks, compare, ver, op, dest, table, ck)
-    case "scene-cuts" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "scene-cuts", "corpus")
-        th <- optInt(opts, "scene-cuts", "threshold-milli", 100000)
-        kf <- Right(opts.get("keyframes").contains("true"))
-        out <- req(opts, "scene-cuts", "out")
-      } yield SceneCutsCmd(corpus, th, kf, out)
-    case "sentences" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "sentences", "corpus")
-        id <- req(opts, "sentences", "id")
-        text <- req(opts, "sentences", "text")
-        out <- req(opts, "sentences", "out")
-      } yield SentencesCmd(corpus, id, text, out)
-    case "line-dedup-within" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "line-dedup-within", "corpus")
-        id <- req(opts, "line-dedup-within", "id")
-        text <- req(opts, "line-dedup-within", "text")
-        out <- req(opts, "line-dedup-within", "out")
-      } yield LineDedupWithinCmd(corpus, id, text, out)
-    case "curriculum-order" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "curriculum-order", "corpus")
-        id <- req(opts, "curriculum-order", "id")
-        priority <- req(opts, "curriculum-order", "priority")
-        rps <- posInt(opts, "curriculum-order", "rows-per-shard")
-        seed <- Right(opts.getOrElse("seed", "graft"))
-        out <- req(opts, "curriculum-order", "out")
-      } yield CurriculumCmd(corpus, id, priority, rps, seed, out)
-    case "url-frontier" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "url-frontier", "source")
-        id <- req(opts, "url-frontier", "id")
-        url <- req(opts, "url-frontier", "url")
-        dest <- req(opts, "url-frontier", "dest")
-        table <- req(opts, "url-frontier", "table")
-        ck <- req(opts, "url-frontier", "checkpoint")
-        mph <- opts.get("max-per-host") match {
-          case None => Right(None)
-          case Some(_) => posLong(opts, "url-frontier", "max-per-host").map(Some(_))
-        }
-      } yield UrlFrontierCmd(source, id, url, dest, table, ck, mph)
-    case "url-norm" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "url-norm", "corpus")
-        id <- req(opts, "url-norm", "id")
-        url <- req(opts, "url-norm", "url")
-        out <- req(opts, "url-norm", "out")
-      } yield UrlNormCmd(corpus, id, url, out)
-    case "scd2-apply" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        snapshot <- req(opts, "scd2-apply", "snapshot")
-        pks <- req(opts, "scd2-apply", "pks").map(cols)
-        compare <- req(opts, "scd2-apply", "compare").map(cols)
-        version <- posLong(opts, "scd2-apply", "version")
-        init <- Right(opts.get("init").contains("true"))
-        history <- if (init) Right(None)
-          else req(opts, "scd2-apply", "history").map(Some(_))
-        upserts <- Right(opts.get("upserts").contains("true"))
-        out <- req(opts, "scd2-apply", "out")
-      } yield Scd2ApplyCmd(history, snapshot, pks, compare, version, upserts, out)
-    case "release-audit" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "release-audit", "corpus")
-        group <- req(opts, "release-audit", "group")
-        id <- req(opts, "release-audit", "id")
-        text <- req(opts, "release-audit", "text")
-        quasi <- Right(opts.get("quasi").toSeq.flatMap(q => cols(q)))
-        k <- optInt(opts, "release-audit", "k", 10)
-        out <- req(opts, "release-audit", "out")
-      } yield ReleaseAuditCmd(corpus, group, id, text, quasi, k, out)
-    case "k-anonymity" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "k-anonymity", "corpus")
-        quasi <- reqCols(opts, "k-anonymity", "quasi")
-        k <- posInt(opts, "k-anonymity", "k").flatMap(k =>
-          if (k >= 2) Right(k) else Left("k-anonymity: --k must be >= 2"))
-        out <- req(opts, "k-anonymity", "out")
-      } yield KAnonymityCmd(corpus, quasi, k, out)
-    case "schema-drift" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        oldP <- req(opts, "schema-drift", "old")
-        newP <- req(opts, "schema-drift", "new")
-        out <- req(opts, "schema-drift", "out")
-      } yield SchemaDriftCmd(oldP, newP, out)
-    case "scd2-close" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        history <- req(opts, "scd2-close", "history")
-        keys <- req(opts, "scd2-close", "keys")
-        pks <- req(opts, "scd2-close", "pks").map(cols)
-        version <- posLong(opts, "scd2-close", "version")
-        out <- req(opts, "scd2-close", "out")
-      } yield Scd2CloseCmd(history, keys, pks, version, out)
-    case "asof" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        history <- req(opts, "asof", "history")
-        version <- posLong(opts, "asof", "version")
-        out <- req(opts, "asof", "out")
-      } yield AsOfCmd(history, version, out)
-    case "source-overlap" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "source-overlap", "corpus")
-        source <- req(opts, "source-overlap", "source")
-        text <- req(opts, "source-overlap", "text")
-        gram <- optInt(opts, "source-overlap", "gram", 8)
-        out <- req(opts, "source-overlap", "out")
-      } yield SourceOverlapCmd(corpus, source, text, gram, out)
-    case "span-gate-loss" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "span-gate-loss", "corpus")
-        id <- req(opts, "span-gate-loss", "id")
-        text <- req(opts, "span-gate-loss", "text")
-        n <- optInt(opts, "span-gate-loss", "gram", 8)
-        minRun <- optInt(opts, "span-gate-loss", "min-run", 20)
-        maxDf <- optInt(opts, "span-gate-loss", "max-df", 20)
-        out <- req(opts, "span-gate-loss", "out")
-      } yield SpanGateLossCmd(corpus, id, text, n, minRun, maxDf, out)
-    case "dup-span-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "dup-span-gate", "source")
-        reference <- req(opts, "dup-span-gate", "reference")
-        id <- req(opts, "dup-span-gate", "id")
-        text <- req(opts, "dup-span-gate", "text")
-        n <- optInt(opts, "dup-span-gate", "gram", 8)
-        minRun <- optInt(opts, "dup-span-gate", "min-run", 20)
-        maxDf <- optInt(opts, "dup-span-gate", "max-df", 20)
-        dest <- req(opts, "dup-span-gate", "dest")
-        table <- req(opts, "dup-span-gate", "table")
-        ck <- req(opts, "dup-span-gate", "checkpoint")
-      } yield DupSpanGate(source, reference, id, text, n, minRun, maxDf,
-        dest, table, ck)
-    case "ingest-span-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-span-index", "source")
-        id <- req(opts, "ingest-span-index", "id")
-        text <- req(opts, "ingest-span-index", "text")
-        n <- optInt(opts, "ingest-span-index", "gram", 8)
-        dest <- req(opts, "ingest-span-index", "dest")
-        ck <- req(opts, "ingest-span-index", "checkpoint")
-      } yield IngestSpanIndexCmd(source, id, text, n, dest, ck)
-    case "serve-span-scrub" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "serve-span-scrub", "corpus")
-        index <- req(opts, "serve-span-scrub", "index")
-        id <- req(opts, "serve-span-scrub", "id")
-        text <- req(opts, "serve-span-scrub", "text")
-        n <- optInt(opts, "serve-span-scrub", "gram", 8)
-        minRun <- optInt(opts, "serve-span-scrub", "min-run", 20)
-        maxDf <- optInt(opts, "serve-span-scrub", "max-df", 20)
-        ts <- optBool(opts, "serve-span-scrub", "tombstones", dflt = false)
-        out <- req(opts, "serve-span-scrub", "out")
-      } yield ServeSpanScrubCmd(corpus, index, id, text, n, minRun, maxDf, ts, out)
-    case "line-dedup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "line-dedup", "corpus")
-        id <- req(opts, "line-dedup", "id")
-        text <- req(opts, "line-dedup", "text")
-        maxDf <- optInt(opts, "line-dedup", "max-df", 1)
-        out <- req(opts, "line-dedup", "out")
-        // --broadcast false: web-scale low-threshold runs MUST reach the
-        // shuffled-join plan — a silently-ignored typo here would
-        // broadcast the boilerplate-sized hot set instead
-        bc <- opts.get("broadcast").fold(Right(true): Either[String, Boolean])(v =>
-          v.toBooleanOption.toRight(
-            s"line-dedup: --broadcast must be true or false, got $v"))
-      } yield LineDedupCmd(corpus, id, text, maxDf, broadcastHot = bc, out)
-    case "ingest-line-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-line-index", "source")
-        id <- req(opts, "ingest-line-index", "id")
-        text <- req(opts, "ingest-line-index", "text")
-        dest <- req(opts, "ingest-line-index", "dest")
-        ck <- req(opts, "ingest-line-index", "checkpoint")
-      } yield IngestLineIndexCmd(source, id, text, dest, ck)
-    case "serve-line-dedup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        index <- req(opts, "serve-line-dedup", "index")
-        id <- req(opts, "serve-line-dedup", "id")
-        maxDf <- optInt(opts, "serve-line-dedup", "max-df", 1)
-        out <- req(opts, "serve-line-dedup", "out")
-        bc <- opts.get("broadcast").fold(Right(true): Either[String, Boolean])(v =>
-          v.toBooleanOption.toRight(
-            s"serve-line-dedup: --broadcast must be true or false, got $v"))
-        ts <- optBool(opts, "serve-line-dedup", "tombstones", dflt = false)
-      } yield ServeLineDedupCmd(index, id, maxDf, broadcastHot = bc,
-        tombstones = ts, out)
-    case "tombstone" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        storeDir <- req(opts, "tombstone", "store")
-        ids <- req(opts, "tombstone", "ids")
-      } yield TombstoneCmd(storeDir, ids)
-    case "snapshot-line-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        index <- req(opts, "snapshot-line-index", "index")
-        maxDf <- optInt(opts, "snapshot-line-index", "max-df", 1)
-      } yield SnapshotLineIndexCmd(index, maxDf)
-    case "line-dedup-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "line-dedup-gate", "source")
-        index <- req(opts, "line-dedup-gate", "index")
-        id <- req(opts, "line-dedup-gate", "id")
-        text <- req(opts, "line-dedup-gate", "text")
-        dest <- req(opts, "line-dedup-gate", "dest")
-        table <- req(opts, "line-dedup-gate", "table")
-        ck <- req(opts, "line-dedup-gate", "checkpoint")
-      } yield LineDedupGateCmd(source, index, id, text, dest, table, ck)
-    case "build-vocab" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "build-vocab", "corpus")
-        text <- req(opts, "build-vocab", "text")
-        top <- posInt(opts, "build-vocab", "top")
-        out <- req(opts, "build-vocab", "out")
-      } yield BuildVocab(corpus, text, top, out)
-    case "bpe-train" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "bpe-train", "corpus")
-        text <- req(opts, "bpe-train", "text")
-        n <- posInt(opts, "bpe-train", "merges")
-        byteLevel <- optBool(opts, "bpe-train", "byte-level", dflt = false)
-        out <- req(opts, "bpe-train", "out")
-      } yield BpeTrainCmd(corpus, text, n, byteLevel, out)
-    case "bpe-encode" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "bpe-encode", "corpus")
-        id <- req(opts, "bpe-encode", "id")
-        text <- req(opts, "bpe-encode", "text")
-        merges <- req(opts, "bpe-encode", "merges")
-        byteLevel <- optBool(opts, "bpe-encode", "byte-level", dflt = false)
-        out <- req(opts, "bpe-encode", "out")
-      } yield BpeEncodeCmd(corpus, id, text, merges, byteLevel, out)
-    case "bpe-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "bpe-gate", "source")
-        merges <- req(opts, "bpe-gate", "merges")
-        id <- req(opts, "bpe-gate", "id")
-        text <- req(opts, "bpe-gate", "text")
-        byteLevel <- optBool(opts, "bpe-gate", "byte-level", dflt = false)
-        dest <- req(opts, "bpe-gate", "dest")
-        table <- req(opts, "bpe-gate", "table")
-        ck <- req(opts, "bpe-gate", "checkpoint")
-      } yield BpeGateCmd(source, merges, id, text, byteLevel, dest, table, ck)
-    case "media-neardup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "media-neardup", "corpus")
-        modality <- modalityOf(opts, "media-neardup")
-        maxH <- optInt(opts, "media-neardup", "max-hamming", 3)
-        th <- optInt(opts, "media-neardup", "threshold-milli", 15000)
-        out <- req(opts, "media-neardup", "out")
-      } yield MediaNearDupCmd(corpus, modality, maxH, th, out)
-    case "ingest-media-dedup" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-media-dedup", "source")
-        modality <- modalityOf(opts, "ingest-media-dedup")
-        maxH <- optInt(opts, "ingest-media-dedup", "max-hamming", 3)
-        th <- optInt(opts, "ingest-media-dedup", "threshold-milli", 15000)
-        dest <- req(opts, "ingest-media-dedup", "dest")
-        ck <- req(opts, "ingest-media-dedup", "checkpoint")
-      } yield IngestMediaDedupCmd(source, modality, maxH, th, dest, ck)
-    case "profile" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "profile", "corpus")
-        out <- req(opts, "profile", "out")
-        // --approx true: HLL distinct counts, no Expand — the wide-table
-        // / 100-TB mode (documented ~2% error)
-        approx <- opts.get("approx").fold(Right(false): Either[String, Boolean])(v =>
-          v.toBooleanOption.toRight(s"profile: --approx must be true or false, got $v"))
-      } yield ProfileCmd(corpus, approx, out)
-    case "validate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "validate", "corpus")
-        out <- req(opts, "validate", "out")
-        notNull = opts.get("not-null").map(_.split(',').toSeq).getOrElse(Seq.empty)
-        ranges <- opts.get("range").map(_.split(',').toSeq).getOrElse(Seq.empty)
-          .foldLeft(Right(Seq.empty): Either[String, Seq[(String, Long, Long)]]) {
-            case (acc, spec) => acc.flatMap { rs =>
-              spec.split(':') match {
-                case Array(c, lo, hi) =>
-                  (lo.toLongOption, hi.toLongOption) match {
-                    case (Some(l), Some(h)) => Right(rs :+ ((c, l, h)))
-                    case _ => Left(s"validate: --range bounds must be integers in '$spec'")
-                  }
-                case _ => Left(s"validate: --range expects col:min:max, got '$spec'")
-              }
-            }
-          }
-        uniques = opts.get("unique").map(_.split(';').toSeq.map(_.split(',').toSeq))
-          .getOrElse(Seq.empty)
-        ref <- (opts.get("ref"), opts.get("ref-table"), opts.get("ref-key")) match {
-          case (Some(fk), Some(dir), Some(key)) => Right(Some((fk, dir, key)))
-          case (None, None, None) => Right(None)
-          case _ => Left("validate: --ref, --ref-table, --ref-key must be given together")
-        }
-        _ <- if (notNull.nonEmpty || ranges.nonEmpty || uniques.nonEmpty || ref.nonEmpty)
-          Right(()) else Left("validate: no checks given " +
-            "(--not-null / --range / --unique / --ref)")
-      } yield ValidateCmd(corpus, notNull, ranges, uniques, ref, out)
-    case "keywords" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "keywords", "corpus")
-        text <- req(opts, "keywords", "text")
-        iters <- posInt(opts, "keywords", "iters")
-        k <- posInt(opts, "keywords", "k")
-        out <- req(opts, "keywords", "out")
-      } yield KeywordsCmd(corpus, text, iters, k, out)
-    case "gopher-filter" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "gopher-filter", "corpus")
-        id <- req(opts, "gopher-filter", "id")
-        text <- req(opts, "gopher-filter", "text")
-        out <- req(opts, "gopher-filter", "out")
-      } yield GopherFilterCmd(corpus, id, text, out)
-    case "gopher-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "gopher-gate", "source")
-        id <- req(opts, "gopher-gate", "id")
-        text <- req(opts, "gopher-gate", "text")
-        dest <- req(opts, "gopher-gate", "dest")
-        table <- req(opts, "gopher-gate", "table")
-        ck <- req(opts, "gopher-gate", "checkpoint")
-      } yield GopherGateCmd(source, id, text, dest, table, ck)
-    case "main-content-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "main-content-gate", "source")
-        id <- req(opts, "main-content-gate", "id")
-        html <- req(opts, "main-content-gate", "html")
-        minChars <- optInt(opts, "main-content-gate", "min-chars", 25)
-        mlp <- optInt(opts, "main-content-gate", "max-link-permille", 333)
-        minKept <- optInt(opts, "main-content-gate", "min-kept", 1)
-        dest <- req(opts, "main-content-gate", "dest")
-        table <- req(opts, "main-content-gate", "table")
-        ck <- req(opts, "main-content-gate", "checkpoint")
-      } yield MainContentGateCmd(source, id, html, minChars, mlp, minKept,
-        dest, table, ck)
-    case "serve-media-pairs" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        index <- req(opts, "serve-media-pairs", "index")
-        ts <- optBool(opts, "serve-media-pairs", "tombstones", dflt = false)
-        out <- req(opts, "serve-media-pairs", "out")
-      } yield ServeMediaPairsCmd(index, ts, out)
-    case "retain-history" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        history <- req(opts, "retain-history", "history")
-        horizon <- posLong(opts, "retain-history", "horizon")
-        out <- req(opts, "retain-history", "out")
-      } yield RetainHistoryCmd(history, horizon, out)
-    case "warc-extract" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        files <- req(opts, "warc-extract", "files")
-        text <- optBool(opts, "warc-extract", "text", dflt = false)
-        status <- opts.get("status") match {
-          case None => Right(None)
-          case Some(s) => s.toIntOption.map(Some(_))
-            .toRight(s"warc-extract: --status must be an HTTP status code, got $s")
-        }
-        mime = opts.get("mime")
-        _ <- Either.cond(text || (status.isEmpty && mime.isEmpty), (),
-          "warc-extract: --status/--mime filter decoded responses — they require --text true")
-        out <- req(opts, "warc-extract", "out")
-      } yield WarcExtractCmd(files, text, status, mime, out)
-    case "warc-export" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "warc-export", "corpus")
-        fileCol <- req(opts, "warc-export", "file-col")
-        id <- req(opts, "warc-export", "id")
-        text <- req(opts, "warc-export", "text")
-        url = opts.get("url")
-        date <- req(opts, "warc-export", "date")
-        gzip <- optBool(opts, "warc-export", "gzip", dflt = true)
-        out <- req(opts, "warc-export", "out")
-      } yield WarcExportCmd(corpus, fileCol, id, text, url, date, gzip, out)
-    case "outlinks" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        pages <- req(opts, "outlinks", "pages")
-        id <- req(opts, "outlinks", "id")
-        html <- req(opts, "outlinks", "html")
-        raw <- optBool(opts, "outlinks", "raw", dflt = false)
-        // raw hrefs need no base URL — only the resolve path reads it
-        url <- if (raw) Right(opts.get("url"))
-               else req(opts, "outlinks", "url").map(Some(_))
-        out <- req(opts, "outlinks", "out")
-      } yield OutlinksCmd(pages, id, url, html, raw, out)
-    case "robots-sitemaps" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        robots <- req(opts, "robots-sitemaps", "robots")
-        host <- req(opts, "robots-sitemaps", "host")
-        txt = opts.getOrElse("txt", "robots_txt")
-        out <- req(opts, "robots-sitemaps", "out")
-      } yield RobotsSitemapsCmd(robots, host, txt, out)
-    case "chat-render" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        conversations <- req(opts, "chat-render", "conversations")
-        id <- req(opts, "chat-render", "id")
-        messages <- req(opts, "chat-render", "messages")
-        spans <- optBool(opts, "chat-render", "spans", dflt = false)
-        tokenMasks <- optBool(opts, "chat-render", "token-masks", dflt = false)
-        budget <- opts.get("max-tokens") match {
-          case None => Right(None)
-          case Some(b) => b.toLongOption.filter(_ >= 0).map(Some(_))
-            .toRight(s"chat-render: --max-tokens must be a non-negative long, got $b")
-        }
-        out <- req(opts, "chat-render", "out")
-      } yield ChatRenderCmd(conversations, id, messages, spans, tokenMasks,
-        budget, out)
-    case "chat-lint" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        conversations <- req(opts, "chat-lint", "conversations")
-        id <- req(opts, "chat-lint", "id")
-        messages <- req(opts, "chat-lint", "messages")
-        failedOnly <- optBool(opts, "chat-lint", "failed-only", dflt = false)
-        out <- req(opts, "chat-lint", "out")
-      } yield ChatLintCmd(conversations, id, messages, failedOnly, out)
-    case "sitemap-entries" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        sitemaps <- req(opts, "sitemap-entries", "sitemaps")
-        id <- req(opts, "sitemap-entries", "id")
-        xml <- req(opts, "sitemap-entries", "xml")
-        kind <- opts.get("kind") match {
-          case None => Right(None)
-          case Some(k) if k == "url" || k == "sitemap" => Right(Some(k))
-          case Some(k) =>
-            Left(s"sitemap-entries: --kind must be url or sitemap, got $k")
-        }
-        out <- req(opts, "sitemap-entries", "out")
-      } yield SitemapEntriesCmd(sitemaps, id, xml, kind, out)
-    case "preference-pairs" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        rollouts <- req(opts, "preference-pairs", "rollouts")
-        fromState <- optBool(opts, "preference-pairs", "from-state", dflt = false)
-        prompt <- req(opts, "preference-pairs", "prompt")
-        // id/text/score name the rollout columns; a maintained state
-        // table already carries the candidate shape
-        id <- if (fromState) Right("") else req(opts, "preference-pairs", "id")
-        text <- if (fromState) Right("") else req(opts, "preference-pairs", "text")
-        score <- if (fromState) Right("") else req(opts, "preference-pairs", "score")
-        minMargin <- opts.get("min-margin") match {
-          case None => Right(0.0)
-          case Some(m) => m.toDoubleOption.filter(_ >= 0)
-            .toRight(s"preference-pairs: --min-margin must be a non-negative number, got $m")
-        }
-        out <- req(opts, "preference-pairs", "out")
-      } yield PreferencePairsCmd(rollouts, prompt, id, text, score,
-        minMargin, fromState, out)
-    case "preference-ingest" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "preference-ingest", "source")
-        prompt <- req(opts, "preference-ingest", "prompt")
-        id <- req(opts, "preference-ingest", "id")
-        text <- req(opts, "preference-ingest", "text")
-        score <- req(opts, "preference-ingest", "score")
-        dest <- req(opts, "preference-ingest", "dest")
-        table <- req(opts, "preference-ingest", "table")
-        ck <- req(opts, "preference-ingest", "checkpoint")
-      } yield PreferenceIngestCmd(source, prompt, id, text, score,
-        dest, table, ck)
-    case "group-advantage" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        rollouts <- req(opts, "group-advantage", "rollouts")
-        prompt <- req(opts, "group-advantage", "prompt")
-        id <- req(opts, "group-advantage", "id")
-        score <- req(opts, "group-advantage", "score")
-        out <- req(opts, "group-advantage", "out")
-      } yield GroupAdvantageCmd(rollouts, prompt, id, score, out)
-    case "bitext-mine" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        src <- req(opts, "bitext-mine", "src")
-        tgt <- req(opts, "bitext-mine", "tgt")
-        id <- req(opts, "bitext-mine", "id")
-        vec <- req(opts, "bitext-mine", "vec")
-        k <- opts.get("k") match {
-          case None => Right(4)
-          case Some(v) => v.toIntOption.filter(_ >= 1)
-            .toRight(s"bitext-mine: --k must be a positive int, got $v")
-        }
-        margin <- opts.get("margin-micros") match {
-          case None => Right(1000000L)
-          case Some(v) => v.toLongOption.filter(_ >= 0)
-            .toRight(s"bitext-mine: --margin-micros must be a non-negative long, got $v")
-        }
-        out <- req(opts, "bitext-mine", "out")
-      } yield BitextMineCmd(src, tgt, id, vec, k, margin, out)
-    case "embed-decontaminate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "embed-decontaminate", "corpus")
-        benchmark <- req(opts, "embed-decontaminate", "benchmark")
-        id <- req(opts, "embed-decontaminate", "id")
-        vec <- req(opts, "embed-decontaminate", "vec")
-        t <- req(opts, "embed-decontaminate", "threshold").flatMap(s =>
-          s.toDoubleOption.filter(d => d >= 0 && d <= 1)
-            .toRight(s"embed-decontaminate: --threshold must be a cosine in [0,1], got $s"))
-        scrub <- optBool(opts, "embed-decontaminate", "scrub", dflt = false)
-        ivf <- (opts.get("cells"), opts.get("nprobe")) match {
-          case (None, None) => Right(None)
-          case (Some(c), Some(p)) =>
-            (for { ci <- c.toIntOption.filter(_ >= 1)
-                   pi <- p.toIntOption.filter(_ >= 1) } yield (ci, pi))
-              .toRight(s"embed-decontaminate: --cells/--nprobe must be positive ints, got ($c, $p)")
-              .map(Some(_))
-          case _ => Left("embed-decontaminate: --cells and --nprobe go together " +
-            "(the IVF-accelerated route needs both)")
-        }
-        _ <- Either.cond(!(scrub && ivf.nonEmpty), (),
-          "embed-decontaminate: --scrub is exact-only — IVF probing is " +
-            "approximate at cell boundaries; scrub on its flagged ids explicitly")
-        out <- req(opts, "embed-decontaminate", "out")
-      } yield EmbedDeconCmd(corpus, benchmark, id, vec, t, scrub, ivf, out)
-    case "embed-decon-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "embed-decon-gate", "source")
-        benchmark <- req(opts, "embed-decon-gate", "benchmark")
-        id <- req(opts, "embed-decon-gate", "id")
-        vec <- req(opts, "embed-decon-gate", "vec")
-        t <- req(opts, "embed-decon-gate", "threshold").flatMap(s =>
-          s.toDoubleOption.filter(d => d >= 0 && d <= 1)
-            .toRight(s"embed-decon-gate: --threshold must be a cosine in [0,1], got $s"))
-        dest <- req(opts, "embed-decon-gate", "dest")
-        table <- req(opts, "embed-decon-gate", "table")
-        ck <- req(opts, "embed-decon-gate", "checkpoint")
-      } yield EmbedDeconGateCmd(source, benchmark, id, vec, t, dest, table, ck)
-    case "cluster-balance" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "cluster-balance", "corpus")
-        id <- req(opts, "cluster-balance", "id")
-        vec <- req(opts, "cluster-balance", "vec")
-        k <- posInt(opts, "cluster-balance", "centroids")
-        cap <- posInt(opts, "cluster-balance", "cap")
-        iters <- optInt(opts, "cluster-balance", "iterations", 3)
-        out <- req(opts, "cluster-balance", "out")
-      } yield ClusterBalanceCmd(corpus, id, vec, k, iters, cap, out)
-    case "robots-filter" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        urls <- req(opts, "robots-filter", "urls")
-        robots <- req(opts, "robots-filter", "robots")
-        agent <- req(opts, "robots-filter", "agent")
-        host <- req(opts, "robots-filter", "host")
-        path <- req(opts, "robots-filter", "path")
-        txt = opts.getOrElse("txt", "robots_txt")
-        decisions <- optBool(opts, "robots-filter", "decisions", dflt = false)
-        join <- optBool(opts, "robots-filter", "join", dflt = false)
-        out <- req(opts, "robots-filter", "out")
-      } yield RobotsFilterCmd(urls, robots, agent, host, path, txt, decisions, join, out)
-    case "unigram-train" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "unigram-train", "corpus")
-        text <- req(opts, "unigram-train", "text")
-        maxLen <- posInt(opts, "unigram-train", "max-piece-len")
-        keep <- posInt(opts, "unigram-train", "keep")
-        rounds <- posInt(opts, "unigram-train", "rounds")
-        out <- req(opts, "unigram-train", "out")
-      } yield UnigramTrainCmd(corpus, text, maxLen, keep, rounds, out)
-    case "unigram-encode" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "unigram-encode", "corpus")
-        id <- req(opts, "unigram-encode", "id")
-        text <- req(opts, "unigram-encode", "text")
-        pieces <- req(opts, "unigram-encode", "pieces")
-        out <- req(opts, "unigram-encode", "out")
-      } yield UnigramEncodeCmd(corpus, id, text, pieces, out)
-    case "pack-windows" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "pack-windows", "corpus")
-        group <- req(opts, "pack-windows", "group").map(_.split(',').toSeq)
-        order <- req(opts, "pack-windows", "order")
-        text <- req(opts, "pack-windows", "text")
-        window <- posInt(opts, "pack-windows", "window")
-        // 0 = plain per-group window (explicit or defaulted); N > 0 =
-        // bucket-decomposed prefix sum keyed (group, order div N) —
-        // required at scale when groups are few and huge (sources),
-        // needs a NUMERIC order column
-        bucketWidth <- optIntZero(opts, "pack-windows", "bucket-width", 0)
-        out <- req(opts, "pack-windows", "out")
-      } yield PackWindowsCmd(corpus, group, order, text, window, bucketWidth, out)
-    case "train-langid" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "train-langid", "corpus")
-        lang <- req(opts, "train-langid", "lang")
-        text <- req(opts, "train-langid", "text")
-        k <- optInt(opts, "train-langid", "k", 40)
-        pinned <- optBool(opts, "train-langid", "pinned", dflt = false)
-        out <- req(opts, "train-langid", "out")
-      } yield TrainLangIdCmd(corpus, lang, text, k, pinned, out)
-    case "langid-classify" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "langid-classify", "corpus")
-        id <- req(opts, "langid-classify", "id")
-        text <- req(opts, "langid-classify", "text")
-        profiles <- req(opts, "langid-classify", "profiles")
-        // 0 = "take k from the artifact"; an explicit --k must match it
-        k <- optInt(opts, "langid-classify", "k", 0)
-        out <- req(opts, "langid-classify", "out")
-      } yield LangIdClassifyCmd(corpus, id, text, profiles, k, out)
-    case "wordpiece-train" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "wordpiece-train", "corpus")
-        text <- req(opts, "wordpiece-train", "text")
-        merges <- posInt(opts, "wordpiece-train", "merges")
-        out <- req(opts, "wordpiece-train", "out")
-      } yield WordPieceTrainCmd(corpus, text, merges, out)
-    case "wordpiece-encode" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "wordpiece-encode", "corpus")
-        id <- req(opts, "wordpiece-encode", "id")
-        text <- req(opts, "wordpiece-encode", "text")
-        vocab <- req(opts, "wordpiece-encode", "vocab")
-        maxChars <- optInt(opts, "wordpiece-encode", "max-chars",
-          graft.text.WordPiece.DefaultMaxInputChars)
-        out <- req(opts, "wordpiece-encode", "out")
-      } yield WordPieceEncodeCmd(corpus, id, text, vocab, maxChars, out)
-    case "wordpiece-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "wordpiece-gate", "source")
-        vocab <- req(opts, "wordpiece-gate", "vocab")
-        id <- req(opts, "wordpiece-gate", "id")
-        text <- req(opts, "wordpiece-gate", "text")
-        dest <- req(opts, "wordpiece-gate", "dest")
-        table <- req(opts, "wordpiece-gate", "table")
-        ck <- req(opts, "wordpiece-gate", "checkpoint")
-        maxChars <- optInt(opts, "wordpiece-gate", "max-chars",
-          graft.text.WordPiece.DefaultMaxInputChars)
-      } yield WordPieceGateCmd(source, vocab, id, text, dest, table, ck,
-        maxChars)
-    case "train-classifier" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "train-classifier", "corpus")
-        id <- req(opts, "train-classifier", "id")
-        text <- req(opts, "train-classifier", "text")
-        label <- req(opts, "train-classifier", "label")
-        dims <- posInt(opts, "train-classifier", "dims")
-        rounds <- posInt(opts, "train-classifier", "rounds")
-        join <- optBool(opts, "train-classifier", "join", dflt = false)
-        out <- req(opts, "train-classifier", "out")
-      } yield TrainClassifierCmd(corpus, id, text, label, dims, rounds, join, out)
-    case "score-docs" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "score-docs", "corpus")
-        id <- req(opts, "score-docs", "id")
-        text <- req(opts, "score-docs", "text")
-        weights <- req(opts, "score-docs", "weights")
-        join <- optBool(opts, "score-docs", "join", dflt = false)
-        out <- req(opts, "score-docs", "out")
-      } yield ScoreDocsCmd(corpus, id, text, weights, join, out)
-    case "weighted-sample" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "weighted-sample", "corpus")
-        keys <- req(opts, "weighted-sample", "keys").map(_.split(',').toSeq)
-        id <- req(opts, "weighted-sample", "id")
-        weight <- req(opts, "weighted-sample", "weight")
-        k <- posInt(opts, "weighted-sample", "k")
-        out <- req(opts, "weighted-sample", "out")
-      } yield WeightedSampleCmd(corpus, keys, id, weight, k,
-        opts.getOrElse("seed", "graft"), out)
-    case "budget-mixture" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "budget-mixture", "corpus")
-        source <- req(opts, "budget-mixture", "source")
-        order <- req(opts, "budget-mixture", "order")
-        tokens <- req(opts, "budget-mixture", "tokens")
-        // src=weight[,src=weight...]: integer target weights (the
-        // water-filling allocation is exact integer arithmetic)
-        weights <- req(opts, "budget-mixture", "weights").flatMap { spec =>
-          val parts = spec.split(',').toSeq.map(_.split('=').toSeq)
-          if (parts.forall(p => p.length == 2 && p(1).toLongOption.exists(_ >= 0)))
-            Right(parts.map(p => p(0) -> p(1).toLong).toMap)
-          else
-            Left(s"budget-mixture: --weights must be src=w[,src=w...] with w >= 0, got $spec")
-        }
-        budget <- req(opts, "budget-mixture", "budget").flatMap(v =>
-          v.toLongOption.filter(_ > 0)
-            .toRight(s"budget-mixture: --budget must be a positive long, got $v"))
-        defaultWeight <- opts.get("default-weight")
-          .fold(Right(0L): Either[String, Long])(v => v.toLongOption.filter(_ >= 0)
-            .toRight(s"budget-mixture: --default-weight must be >= 0, got $v"))
-        bucketWidth <- optIntZero(opts, "budget-mixture", "bucket-width", 0)
-        out <- req(opts, "budget-mixture", "out")
-      } yield BudgetMixtureCmd(corpus, source, order, tokens, weights, budget,
-        defaultWeight, bucketWidth, out)
-    case "token-shards" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "token-shards", "corpus")
-        tokens <- req(opts, "token-shards", "tokens")
-        order <- req(opts, "token-shards", "order")
-        bucketWidth <- posInt(opts, "token-shards", "bucket-width")
-        n <- posInt(opts, "token-shards", "shards")
-        out <- req(opts, "token-shards", "out")
-      } yield TokenShardsCmd(corpus, tokens, order, bucketWidth, n, out)
-    case "encode-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "encode-gate", "source")
-        vocab <- req(opts, "encode-gate", "vocab")
-        id <- req(opts, "encode-gate", "id")
-        text <- req(opts, "encode-gate", "text")
-        dest <- req(opts, "encode-gate", "dest")
-        table <- req(opts, "encode-gate", "table")
-        ck <- req(opts, "encode-gate", "checkpoint")
-        // --join true: the large-vocabulary broadcast-join gate
-        // (encodeGateJoin) — vocab pinned by checkpoint, never collected
-        j <- opts.get("join").fold(Right(false): Either[String, Boolean])(s =>
-          s.toBooleanOption.toRight(
-            s"encode-gate: --join must be true or false, got $s"))
-      } yield EncodeGateCmd(source, vocab, id, text, dest, table, ck, j)
-    case "encode-ids" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "encode-ids", "corpus")
-        id <- req(opts, "encode-ids", "id")
-        text <- req(opts, "encode-ids", "text")
-        vocab <- req(opts, "encode-ids", "vocab")
-        out <- req(opts, "encode-ids", "out")
-      } yield EncodeIds(corpus, id, text, vocab, out)
-    case "build-overlap-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "build-overlap-index", "corpus")
-        id <- req(opts, "build-overlap-index", "id")
-        text <- req(opts, "build-overlap-index", "text")
-        k <- optInt(opts, "build-overlap-index", "gram", 3)
-        w <- optInt(opts, "build-overlap-index", "window", 4)
-        maxDf <- optInt(opts, "build-overlap-index", "max-df", 100)
-        out <- req(opts, "build-overlap-index", "out")
-      } yield BuildOverlapIndex(corpus, id, text, k, w, maxDf, out)
-    case "overlap-gate" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "overlap-gate", "source")
-        index <- req(opts, "overlap-gate", "index")
-        id <- req(opts, "overlap-gate", "id")
-        text <- req(opts, "overlap-gate", "text")
-        k <- optInt(opts, "overlap-gate", "gram", 3)
-        w <- optInt(opts, "overlap-gate", "window", 4)
-        ms <- optInt(opts, "overlap-gate", "min-shared", 2)
-        dest <- req(opts, "overlap-gate", "dest")
-        table <- req(opts, "overlap-gate", "table")
-        ck <- req(opts, "overlap-gate", "checkpoint")
-        // --max-df marks the index as a RAW ingest-overlap-index
-        // accumulation: the hot-fingerprint gate applies at every read
-        // (absent, the index is a build-overlap-index artifact, gated at
-        // build)
-        md <- opts.get("max-df")
-          .fold(Right(None): Either[String, Option[Int]])(s =>
-            s.toIntOption.filter(_ >= 1).map(Some(_))
-              .toRight(s"overlap-gate: --max-df must be a positive int, got $s"))
-        ts <- optBool(opts, "overlap-gate", "tombstones", dflt = false).flatMap(t =>
-          // the snapshot path gates hotness at refresh time — an anti-join
-          // AFTER it cannot re-cool, so refuse the silently-wrong
-          // semantics (use --max-df for the at-read-gated raw index)
-          if (t && md.isEmpty)
-            Left("overlap-gate: --tombstones true requires --max-df (the " +
-              "at-read-gated raw index); a gated snapshot cannot re-cool " +
-              "retroactively")
-          else Right(t))
-      } yield OverlapGateCmd(source, index, id, text, k, w, ms, dest, table, ck, md, ts)
-    case "ingest-overlap-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-overlap-index", "source")
-        id <- req(opts, "ingest-overlap-index", "id")
-        text <- req(opts, "ingest-overlap-index", "text")
-        k <- optInt(opts, "ingest-overlap-index", "gram", 3)
-        w <- optInt(opts, "ingest-overlap-index", "window", 4)
-        dest <- req(opts, "ingest-overlap-index", "dest")
-        ck <- req(opts, "ingest-overlap-index", "checkpoint")
-      } yield IngestOverlapIndex(source, id, text, k, w, dest, ck)
-    case "snapshot-overlap-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        index <- req(opts, "snapshot-overlap-index", "index")
-        id <- req(opts, "snapshot-overlap-index", "id")
-        maxDf <- optInt(opts, "snapshot-overlap-index", "max-df", 100)
-      } yield SnapshotOverlapIndex(index, id, maxDf)
-    case "ingest-dedup-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        source <- req(opts, "ingest-dedup-index", "source")
-        id <- req(opts, "ingest-dedup-index", "id")
-        text <- req(opts, "ingest-dedup-index", "text")
-        n <- posInt(opts, "ingest-dedup-index", "ngram")
-        hashes <- posInt(opts, "ingest-dedup-index", "hashes")
-        bands <- posInt(opts, "ingest-dedup-index", "bands")
-        dest <- req(opts, "ingest-dedup-index", "dest")
-        ck <- req(opts, "ingest-dedup-index", "checkpoint")
-      } yield IngestDedupIndex(source, id, text, n, hashes, bands, dest, ck)
-    case (cmd @ ("winnow" | "winnow-overlap")) :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, cmd, "corpus")
-        id <- req(opts, cmd, "id")
-        text <- req(opts, cmd, "text")
-        k <- optInt(opts, cmd, "gram", 3)
-        w <- optInt(opts, cmd, "window", 4)
-        out <- req(opts, cmd, "out")
-        overlap <- if (cmd == "winnow") Right(None) else for {
-          ms <- optInt(opts, cmd, "min-shared", 2)
-          df <- optInt(opts, cmd, "max-df", 100)
-        } yield Some((ms, df))
-      } yield WinnowCmd(corpus, id, text, k, w, out, overlap)
-    case "build-bm25-index" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        corpus <- req(opts, "build-bm25-index", "corpus")
-        id <- req(opts, "build-bm25-index", "id")
-        text <- req(opts, "build-bm25-index", "text")
-        out <- req(opts, "build-bm25-index", "out")
-      } yield BuildBm25Index(corpus, id, text, out)
-    case "serve-bm25" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        queries <- req(opts, "serve-bm25", "queries")
-        index <- req(opts, "serve-bm25", "index")
-        id <- req(opts, "serve-bm25", "id")
-        k <- posInt(opts, "serve-bm25", "k")
-        dest <- req(opts, "serve-bm25", "dest")
-        table <- req(opts, "serve-bm25", "table")
-        ck <- req(opts, "serve-bm25", "checkpoint")
-      } yield ServeBm25(queries, index, id, k, dest, table, ck)
-    case "fuse-rrf" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        rk <- req(opts, "fuse-rrf", "rankings").flatMap { spec =>
-          val pairs = spec.split(',').toSeq.map(_.split("=", 2))
-          if (!pairs.forall(p => p.length == 2 && p(0).nonEmpty && p(1).nonEmpty))
-            Left(s"fuse-rrf: --rankings must be name=/dir[,name=/dir...], got $spec")
-          else if (pairs.map(_(0)).distinct.length != pairs.length)
-            // catch at PARSE (pre-Spark) what Fusion.rrf would reject later
-            Left(s"fuse-rrf: duplicate ranking names in $spec")
-          else Right(pairs.map(p => (p(0), p(1))))
-        }
-        doc <- req(opts, "fuse-rrf", "doc")
-        k0 <- optInt(opts, "fuse-rrf", "k0", 60)
-        top <- optInt(opts, "fuse-rrf", "top", 10)
-        out <- req(opts, "fuse-rrf", "out")
-      } yield FuseRrf(rk, doc, k0, top, out)
-    case "eval-recall" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        got <- req(opts, "eval-recall", "got")
-        want <- req(opts, "eval-recall", "want")
-        doc <- req(opts, "eval-recall", "doc")
-        k <- posInt(opts, "eval-recall", "k")
-        out <- req(opts, "eval-recall", "out")
-      } yield EvalRecall(got, want, doc, k, out)
-    case "drift" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        oldDir <- req(opts, "drift", "old")
-        newDir <- req(opts, "drift", "new")
-        out <- req(opts, "drift", "out")
-        cmd <- (opts.get("value"), opts.get("category")) match {
-          case (Some(v), None) =>
-            opts.get("width").flatMap(_.toLongOption).filter(_ > 0)
-              .toRight("drift: --value needs a positive --width")
-              .map(w => DriftCmd(oldDir, newDir, Some((v, w)), None, out))
-          case (None, Some(c)) =>
-            if (opts.contains("width"))
-              Left("drift: --width only applies to --value mode")
-            else Right(DriftCmd(oldDir, newDir, None, Some(c), out))
-          case _ =>
-            Left("drift: pass exactly one of --value <col> --width <n> (histogram) or --category <col>")
-        }
-      } yield cmd
-    case "takedown" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        storeDir <- req(opts, "takedown", "store")
-        tables <- req(opts, "takedown", "tables").flatMap { spec =>
-          val pairs = spec.split(',').toSeq.map(_.split("=", 2))
-          if (!pairs.forall(p => p.length == 2 && p(0).nonEmpty && p(1).nonEmpty))
-            Left(s"takedown: --tables must be table=idCol[,table=idCol...], got $spec")
-          else Right(pairs.map(p => (p(0), p(1))))
-        }
-        fromTs <- optBool(opts, "takedown", "from-tombstones", dflt = false)
-        // exactly one id source: an explicit list, or the store's
-        // accumulated tombstone table (the deferred physical purge)
-        ids <- if (fromTs) {
-          if (opts.contains("ids"))
-            Left("takedown: pass either --ids or --from-tombstones true, not both")
-          else Right("")
-        } else req(opts, "takedown", "ids")
-      } yield TakedownCmd(storeDir, tables, fromTs, ids)
-    case "compact" :: rest =>
-      for {
-        opts <- parseOpts(rest)
-        d <- req(opts, "compact", "dir")
-        mb <- optInt(opts, "compact", "target-mb", 128)
-      } yield CompactCmd(d, mb)
-    case other =>
-      Left(s"unknown command: ${other.headOption.getOrElse("(none)")}")
+  private def usageError(err: String): Int = {
+    System.err.println(err); System.err.println(usage); 2
   }
 
-  private def posInt(opts: Map[String, String], cmd: String, key: String): Either[String, Int] =
-    req(opts, cmd, key).flatMap(s =>
-      s.toIntOption.filter(_ >= 1).toRight(s"$cmd: --$key must be a positive int, got $s"))
+  /** Validate a command line into its action without running it. */
+  private[cli] def parse(args: List[String]): Either[String, Action] = args match {
+    case name :: rest =>
+      commands.find(_.name == name).toRight(s"unknown command: $name")
+        .flatMap(c => bind(c, rest).flatMap(c.parse))
+    case Nil => Left("unknown command: (none)")
+  }
 
-  /** Positive LONG flag — for values that legitimately exceed Int range
-    * (SCD2 versions are often epoch millis). */
-  private def posLong(opts: Map[String, String], cmd: String, key: String): Either[String, Long] =
-    req(opts, cmd, key).flatMap(s =>
-      s.toLongOption.filter(_ >= 1L).toRight(s"$cmd: --$key must be a positive long, got $s"))
-
-  /** Required NON-EMPTY column list — one validator for every comma-list
-    * flag (the posInt/optInt principle: per-branch copies let wording
-    * and the non-empty rule drift between subcommands). */
-  private def reqCols(opts: Map[String, String], cmd: String, key: String): Either[String, Seq[String]] =
-    req(opts, cmd, key).map(cols).flatMap(cs =>
-      if (cs.nonEmpty) Right(cs)
-      else Left(s"$cmd: --$key must name at least one column"))
-
-  /** Optional positive-int flag with a default — ONE validator for every
-    * defaulted numeric option (a per-branch copy would let error wording
-    * or the >= 1 rule silently diverge between subcommands). */
-  private def optInt(opts: Map[String, String], cmd: String, key: String,
-                     dflt: Int): Either[String, Int] =
-    opts.get(key).fold(Right(dflt): Either[String, Int])(s =>
-      s.toIntOption.filter(_ >= 1)
-        .toRight(s"$cmd: --$key must be a positive int, got $s"))
-
-  /** Optional NON-NEGATIVE-int flag with a default — for options where 0
-    * is a meaningful explicit value (pack-windows' --bucket-width 0 =
-    * plain per-group window), which optInt's >= 1 rule would reject. */
-  private def optIntZero(opts: Map[String, String], cmd: String, key: String,
-                         dflt: Int): Either[String, Int] =
-    opts.get(key).fold(Right(dflt): Either[String, Int])(s =>
-      s.toIntOption.filter(_ >= 0)
-        .toRight(s"$cmd: --$key must be a non-negative int, got $s"))
-
-  private def optBool(opts: Map[String, String], cmd: String, key: String,
-                      dflt: Boolean): Either[String, Boolean] =
-    opts.get(key).fold(Right(dflt): Either[String, Boolean])(s =>
-      s.toBooleanOption.toRight(s"$cmd: --$key must be true or false, got $s"))
-
-  /** The media modality selector shared by media-neardup and
-    * ingest-media-dedup — fails at parse time, not after Spark starts. */
-  private def modalityOf(opts: Map[String, String],
-                         cmd: String): Either[String, String] =
-    req(opts, cmd, "modality").flatMap {
-      case m @ ("image" | "audio" | "video") => Right(m)
-      case other => Left(s"$cmd: --modality must be image, audio or video, got $other")
+  /** Bind `args` to `c`: its positional arguments, then `--key value`
+    * pairs (a bare flag takes no value). A flag that `c`'s usage line does
+    * not name is a usage error, and so is a flag given twice: neither may
+    * be silently ignored. */
+  private def bind(c: Command, args: List[String]): Either[String, Opts] = {
+    val (positional, flags) = args.span(!_.startsWith("--"))
+    def pairs(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] = {
+      def add(key: String, value: String, tail: List[String]) =
+        if (!c.flags(key)) Left(s"${c.name}: unknown flag --$key")
+        else if (acc.contains(key)) Left(s"${c.name}: --$key given more than once")
+        else pairs(tail, acc + (key -> value))
+      rest match {
+        case Nil => Right(acc)
+        case k :: tail if k.startsWith("--") && c.bare(k.drop(2)) =>
+          add(k.drop(2), "true", tail)
+        case k :: v :: tail if k.startsWith("--") && !v.startsWith("--") =>
+          add(k.drop(2), v, tail)
+        case bad => Left(s"malformed option pair: ${bad.take(2).mkString(" ")}")
+      }
     }
+    if (positional.length != c.positionals) Left(s"${c.name}: expected ${c.usage}")
+    else pairs(flags, Map.empty).map(new Opts(c.name, positional, _))
+  }
+
+  /** A streaming gate's action: drain everything new in the parquet dir
+    * `src` through the query `start` builds, wait for it, exit 0. The
+    * schema comes from a batch look at `src` (a streaming read needs it
+    * declared); AvailableNow drains everything new since the checkpoint
+    * and terminates — the scheduled-batch deployment. */
+  private def drain(cmd: String, src: String)(
+      start: (SparkSession, DataFrame) => StreamingQuery): Action =
+    spark => sourceSchema(spark, src, cmd).fold(0) { schema =>
+      start(spark, spark.readStream.schema(schema).parquet(src)).awaitTermination()
+      0
+    }
+
+  /** A batch artifact's action: overwrite the parquet dir `out` with the
+    * frame `build` returns, exit 0. */
+  private def overwrite(out: String)(build: SparkSession => DataFrame): Action =
+    spark => {
+      build(spark).write.mode("overwrite").parquet(out)
+      0
+    }
+
+  /** An index family's params manifest: one row of named int knobs in the
+    * index's "params" table. ONE schema definition for every writer and
+    * reader of the family: a drift between a writer and a reader would
+    * turn the family-mismatch guard into a spurious or missed refusal the
+    * compiler cannot catch. `why` says what a mismatch breaks. */
+  private final class Manifest(why: String, knobs: String*) {
+    def write(spark: SparkSession, store: TableStore, values: Int*): Unit =
+      store.write(spark.createDataFrame(java.util.List.of(Row(values: _*)),
+        StructType(knobs.map(StructField(_, IntegerType)))), "params")
+
+    /** Enforce a stored manifest row against the invocation's knobs. */
+    def check(params: DataFrame, cmd: String, where: String, values: Int*): Unit = {
+      val row = params.head()
+      val built = knobs.map(k => row.getInt(row.fieldIndex(k)))
+      def flags(vs: Seq[Int]) = knobs.zip(vs).map { case (k, v) => s"--$k $v" }.mkString(" ")
+      require(built == values,
+        s"$cmd: index at $where was built with ${flags(built)} but this " +
+          s"invocation passed ${flags(values)} — $why")
+    }
+  }
+
+  /** The near-dup index (build-dedup-index, ingest-dedup,
+    * ingest-dedup-index): the MinHash family. */
+  private val dedupManifest = new Manifest(
+    "a mismatched family would silently corrupt or mis-serve the index",
+    "ngram", "hashes", "bands")
+
+  /** The winnowing-overlap index (build-overlap-index,
+    * ingest-overlap-index, overlap-gate). (gram, window) IS the
+    * fingerprint family (Winnow's documented band-index family contract):
+    * rows fingerprinted under different knobs are incomparable, and mixing
+    * them in one accumulated fps table silently misses candidates forever. */
+  private val overlapManifest = new Manifest(
+    "a mismatched fingerprint family silently misses overlap candidates",
+    "gram", "window")
+
+  /** The duplicated-span positional index (ingest-span-index,
+    * serve-span-scrub): (gram) IS the family — diagonal runs only compose
+    * across rows windowed at the same k. */
+  private val spanManifest = new Manifest(
+    "mismatched window sizes make the diagonal runs meaningless and " +
+      "silently miss every span", "gram")
 
   /** The shingler pair for build-dedup-index / ingest-dedup: unigram token
     * SET at n = 1, hashed word n-grams above. Both sides of a gate must
     * pass the SAME --ngram (and --hashes/--bands) or candidates are
     * silently wrong — the operator's documented contract. */
-  /** The near-dup-index params manifest, ONE schema definition for every
-    * writer/reader (build-dedup-index, ingest-dedup, ingest-dedup-index):
-    * a positional drift between a writer and a reader would turn the
-    * family-mismatch guard into a spurious or missed refusal the compiler
-    * cannot catch. */
-  private def writeDedupManifest(spark: SparkSession,
-                                 store: graft.sync.TableStore,
-                                 n: Int, hashes: Int, bands: Int): Unit =
-    store.write(spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(n, hashes, bands)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ngram", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("hashes", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("bands", org.apache.spark.sql.types.IntegerType)))),
-      "params")
-
-  /** Enforce a params manifest row against the CLI's knobs. */
-  private def checkDedupManifest(params: org.apache.spark.sql.DataFrame,
-                                 cmd: String, where: String,
-                                 n: Int, hashes: Int, bands: Int): Unit = {
-    val r = params.head
-    val (bn, bh, bb) = (r.getInt(0), r.getInt(1), r.getInt(2))
-    require(bn == n && bh == hashes && bb == bands,
-      s"$cmd: index at $where was built with --ngram $bn --hashes $bh " +
-        s"--bands $bb but this invocation passed --ngram $n --hashes $hashes " +
-        s"--bands $bands — a mismatched family would silently corrupt or " +
-        "mis-serve the index")
-  }
-
-  /** The winnowing-overlap-index (gram, window) params manifest — the
-    * dedup manifest's sibling, ONE schema definition for every
-    * writer/reader (build-overlap-index, ingest-overlap-index,
-    * overlap-gate). (gram, window) IS the fingerprint family (Winnow's
-    * documented band-index family contract): rows fingerprinted under
-    * different knobs are incomparable, and mixing them in one
-    * accumulated fps table silently misses candidates forever. */
-  private def writeOverlapManifest(spark: SparkSession,
-                                   store: graft.sync.TableStore,
-                                   k: Int, w: Int): Unit =
-    store.write(spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(k, w)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gram", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("window", org.apache.spark.sql.types.IntegerType)))),
-      "params")
-
-  /** Enforce an overlap params manifest row against the CLI's knobs. */
-  private def checkOverlapManifest(params: org.apache.spark.sql.DataFrame,
-                                   cmd: String, where: String,
-                                   k: Int, w: Int): Unit = {
-    val r = params.head
-    val (bk, bw) = (r.getInt(0), r.getInt(1))
-    require(bk == k && bw == w,
-      s"$cmd: index at $where was built with --gram $bk --window $bw but " +
-        s"this invocation passed --gram $k --window $w — a mismatched " +
-        "fingerprint family silently misses overlap candidates")
-  }
-
-  /** The duplicated-span positional-index params manifest — (gram) IS the
-    * family (diagonal runs only compose across rows windowed at the same
-    * k); the overlap manifest's sibling, ONE schema definition for the
-    * writer (ingest-span-index) and reader (serve-span-scrub). */
-  private def writeSpanManifest(spark: SparkSession,
-                                store: graft.sync.TableStore, k: Int): Unit =
-    store.write(spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(k)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gram",
-          org.apache.spark.sql.types.IntegerType)))),
-      "params")
-
-  private def checkSpanManifest(params: org.apache.spark.sql.DataFrame,
-                                cmd: String, where: String, k: Int): Unit = {
-    val bk = params.head.getInt(0)
-    require(bk == k,
-      s"$cmd: index at $where was built with --gram $bk but this " +
-        s"invocation passed --gram $k — mismatched window sizes make the " +
-        "diagonal runs meaningless and silently miss every span")
-  }
-
   private def shingler(n: Int): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     if (n == 1) c => graft.dedup.Dedup.hashedShingles(graft.text.TextAnalysis.tokenSet(c))
     else c => graft.dedup.Dedup.hashedWordNgrams(c, n)
 
-  private def req(opts: Map[String, String], cmd: String, key: String): Either[String, String] =
-    opts.get(key).toRight(s"$cmd: missing --$key")
-
   private def cols(s: String): Seq[String] =
     s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-
-  private def parseOpts(rest: List[String]): Either[String, Map[String, String]] =
-    rest.grouped(2).foldLeft(Right(Map.empty): Either[String, Map[String, String]]) {
-      case (acc, List(k, v)) if k.startsWith("--") && !v.startsWith("--") =>
-        acc.map(_ + (k.drop(2) -> v))
-      case (_, bad) => Left(s"malformed option pair: ${bad.mkString(" ")}")
-    }
 
   /** `t1=c1,c2;t2=k` -> per-table PK lists. */
   private def parsePks(s: String): Either[String, Map[String, Seq[String]]] =
     s.split(';').filter(_.nonEmpty).foldLeft(
       Right(Map.empty): Either[String, Map[String, Seq[String]]]) { (acc, part) =>
       part.split("=", 2) match {
-        case Array(t, cols) if cols.nonEmpty => acc.map(_ + (t -> cols.split(',').toSeq))
+        case Array(t, cs) if cs.nonEmpty => acc.map(_ + (t -> cols(cs)))
         case _ => Left(s"malformed --pks entry: $part (expected table=c1,c2)")
       }
     }
@@ -1917,7 +251,7 @@ object Main {
     * propagates — swallowing it would make a broken source look like a
     * healthy idle one on every tick, forever. */
   private def sourceSchema(spark: SparkSession, dir: String,
-                           cmd: String): Option[org.apache.spark.sql.types.StructType] =
+                           cmd: String): Option[StructType] =
     try Some(spark.read.parquet(dir).schema)
     catch {
       case e: org.apache.spark.sql.AnalysisException
@@ -1928,171 +262,339 @@ object Main {
         None
     }
 
-  private def execute(spark: SparkSession, cmd: Cmd): Int = cmd match {
-    case DbSync(configPath, source, dest, pks) =>
-      // catalog preserves YAML order (SyncConfig returns a VectorMap)
-      val catalog = SyncConfig.loadFile(configPath)
-      val src = new ParquetStore(spark, source)
-      val dst = new ParquetStore(spark, dest)
-      val report = Runner.runAll(catalog.values.toSeq) { cfg =>
-        SyncJob.run(src, dst, cfg, pks.getOrElse(cfg.name, Seq.empty))
-      }
-      report.exitCode
+  /** Fail closed on a BPE training-regime mismatch: bpe-train records on
+    * every merge row which alphabet it trained over (absent only on
+    * pre-marker artifacts, where `byteLevel` is trusted as before).
+    * Char-level merges still "apply" to byte units, so a mismatch segments
+    * plausible-looking garbage. An EMPTY table passes: its readers reject
+    * it with their own error. */
+  private def checkBpeRegime(merges: DataFrame, cmd: String, dir: String,
+                             byteLevel: Boolean): Unit =
+    if (merges.columns.contains("byte_level")) {
+      val trained = merges.select("byte_level").distinct().collect()
+        .map(_.getBoolean(0)).toSeq
+      require(trained.isEmpty || trained == Seq(byteLevel),
+        s"$cmd: merge table under $dir was trained with " +
+          s"byte_level=${trained.mkString(",")} but --byte-level is " +
+          s"$byteLevel — a regime mismatch segments plausible-looking " +
+          "garbage; re-run with the matching flag")
+    }
 
-    case StreamSync(source, dest, table, pks, order, ck) =>
-      // schema from a batch look at the source dir (a streaming read needs
-      // it declared); AvailableNow drains everything new since the
-      // checkpoint and terminates — the scheduled-batch deployment
-      sourceSchema(spark, source, "stream-sync").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.upsertSync(
-          stream, new ParquetStore(spark, dest), table, pks, order, ck)
-          .awaitTermination()
+  /** winnow and winnow-overlap: one narrow corpus pass -> the positional
+    * fingerprint table; with `overlap` (--min-shared/--max-df) the
+    * df-gated MOSS candidate pairs write instead. Output is a plain
+    * parquet artifact (the mine-negatives pattern), re-joinable against
+    * the corpus by id. */
+  private def winnow(o: Opts, overlap: Boolean): Either[String, Action] =
+    for {
+      corpus <- o.req("corpus")
+      id <- o.req("id")
+      text <- o.req("text")
+      k <- o.optInt("gram", 3)
+      w <- o.optInt("window", 4)
+      out <- o.req("out")
+      pairs <- if (!overlap) Right(None) else for {
+        ms <- o.optInt("min-shared", 2)
+        df <- o.optInt("max-df", 100)
+      } yield Some((ms, df))
+    } yield overwrite(out) { spark =>
+      val fps = graft.text.Winnow.fingerprints(
+        spark.read.parquet(corpus), id, text, k, w)
+      pairs match {
+        case None => fps
+        case Some((minShared, maxDf)) =>
+          graft.text.Winnow.overlapCandidates(fps, id, minShared, maxDf)
+      }
+    }
+
+  private[cli] val commands: Seq[Command] = Seq(
+    Command("db-sync", "--config <yaml> --source <dir> --dest <dir> [--pks t=c1,c2;t2=c]") { o =>
+      for {
+        config <- o.req("config")
+        source <- o.req("source")
+        dest <- o.req("dest")
+        pks <- o.get("pks").map(parsePks).getOrElse(Right(Map.empty[String, Seq[String]]))
+      } yield (spark: SparkSession) => {
+        // catalog preserves YAML order (SyncConfig returns a VectorMap)
+        val catalog = SyncConfig.loadFile(config)
+        val src = new ParquetStore(spark, source)
+        val dst = new ParquetStore(spark, dest)
+        val report = Runner.runAll(catalog.values.toSeq) { cfg =>
+          SyncJob.run(src, dst, cfg, pks.getOrElse(cfg.name, Seq.empty))
+        }
+        report.exitCode
+      }
+    },
+
+    Command("file-sync", "<srcDir> <dstDir> [--apply]") { o =>
+      val Seq(src, dst) = o.positional // bind checked the count
+      Right { (spark: SparkSession) =>
+        // dry-run first, always — the reference's safety pattern (gcs_sync.py:115)
+        val dry = FileSync.syncDir(spark, src, dst, dryRun = true)
+        System.err.println(s"[file-sync] plan: total=${dry.totalFiles} new=${dry.newFiles} existing=${dry.existingFiles}")
+        if (o.has("apply")) {
+          val real = FileSync.syncDir(spark, src, dst, dryRun = false)
+          System.err.println(s"[file-sync] copied ${real.newFiles} files")
+        } else {
+          System.err.println("[file-sync] dry run only — pass --apply to copy")
+        }
         0
       }
+    },
 
-    case ServeKnn(queries, corpus, id, vec, k, dest, table, ck) =>
-      sourceSchema(spark, queries, "serve-knn").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(queries)
+    Command("stream-sync", "--source <parquetDir> --dest <storeDir> --table <t> --pks c1[,c2] --order c1[,c2] --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        pks <- o.req("pks").map(cols)
+        order <- o.req("order").map(cols)
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        graft.streaming.IncrementalStream.upsertSync(
+          stream, new ParquetStore(spark, dest), table, pks, order, ck)
+      }
+    },
+
+    Command("serve-knn", "--queries <parquetDir> --corpus <parquet> --id <col> --vec <col> --k <n> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        queries <- o.req("queries")
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        k <- o.posInt("k")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, queries) { (spark, stream) =>
         graft.streaming.IncrementalStream.knnServe(
           stream, spark.read.parquet(corpus), id, vec, k,
           new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case ServeMmr(queries, corpus, id, vec, k, shortlist, lam, dest, table, ck) =>
-      // the knnServe loop with the MMR diversity re-rank: selection is a
-      // total deterministic function of (query, corpus), so the
-      // accumulated log is batch-partitioning-invariant (q220)
-      sourceSchema(spark, queries, "serve-mmr").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(queries)
+    Command("serve-mmr", "--queries <parquetDir> --corpus <parquet> --id <col> --vec <col> --k <n> --shortlist <n> --lambda <permille> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        queries <- o.req("queries")
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        k <- o.posInt("k")
+        shortlist <- o.posInt("shortlist").flatMap(sl =>
+          if (sl >= k) Right(sl)
+          else o.fail(s"--shortlist must be >= --k, got $sl < $k"))
+        lam <- o.reqAs("lambda", "permille in [0, 1000]")(
+          _.toIntOption.filter(l => l >= 0 && l <= 1000))
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, queries) { (spark, stream) =>
+        // the knnServe loop with the MMR diversity re-rank: selection is a
+        // total deterministic function of (query, corpus), so the
+        // accumulated log is batch-partitioning-invariant (q220)
         graft.streaming.IncrementalStream.mmrServe(
           stream, spark.read.parquet(corpus), id, vec, k, shortlist, lam,
           new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case MaintainStats(source, keys, value, dest, table, ck) =>
-      sourceSchema(spark, source, "maintain-stats").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("maintain-stats", "--source <parquetDir> --keys c1[,c2] --value <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        keys <- o.req("keys").map(cols)
+        value <- o.req("value")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         graft.streaming.IncrementalStream.maintainStats(
           stream, keys, value, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case MaintainCounts(source, keys, dest, table, ck) =>
-      // the drift monitor's state half: the category histogram of
-      // everything arrived, maintained at #key-tuples rows; pair with
-      // `drift` (single key) or `topk-report` (composite key — the
-      // maintained heavy-hitters view) for the report
-      sourceSchema(spark, source, "maintain-counts").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.maintainCountsKeys(
-          stream, keys, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
-      }
-
-    case TopKReportCmd(counts, group, tie, k, out) =>
-      // rank the maintained count STATE (never a corpus): top-k per
-      // group with the tiebreak making rank a total order
-      graft.operators.Stats.topKFromCounts(
-          spark.read.parquet(counts).drop("__last_batch", "__run"),
-          group, tie, k)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case MaintainDistinct(source, keys, value, dest, table, ck) =>
-      sourceSchema(spark, source, "maintain-distinct").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("maintain-distinct", "--source <parquetDir> --keys c1[,c2] --value <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        keys <- o.req("keys").map(cols)
+        value <- o.req("value")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // HLL-sketch state; read estimates off the table with
         // hll_sketch_estimate(hll) — see IncrementalStream.maintainDistinct
         graft.streaming.IncrementalStream.maintainDistinct(
           stream, keys, value, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
+      }
+    },
+
+    Command("maintain-counts", "--source <parquetDir> --key c1[,c2] --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        keys <- o.req("key").map(cols)
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // the drift monitor's state half: the category histogram of
+        // everything arrived, maintained at #key-tuples rows; pair with
+        // `drift` (single key) or `topk-report` (composite key — the
+        // maintained heavy-hitters view) for the report
+        graft.streaming.IncrementalStream.maintainCountsKeys(
+          stream, keys, new ParquetStore(spark, dest), table, ck)
+      }
+    },
+
+    Command("topk-report", "--counts <parquetDir> --group c1[,c2] --tie c1[,c2] --k <n> --out <parquetDir>") { o =>
+      for {
+        counts <- o.req("counts")
+        group <- o.reqCols("group")
+        tie <- o.reqCols("tie")
+        k <- o.posInt("k")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // rank the maintained count STATE (never a corpus): top-k per
+        // group with the tiebreak making rank a total order
+        graft.operators.Stats.topKFromCounts(
+          spark.read.parquet(counts).drop("__last_batch", "__run"),
+          group, tie, k)
+      }
+    },
+
+    Command("train-lm", "--docs <parquet> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        docs <- o.req("docs")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // train once, persist like any table. STAGED temp+rename, not an
+        // in-place overwrite: quality-gate re-reads this directory per
+        // micro-batch, and a plain overwrite deletes the old files before
+        // the new job commits — a gate batch planning mid-retrain would see
+        // an empty or partial model. The rename flips old->new in one FS op.
+        val fs = new org.apache.hadoop.fs.Path(out)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val tmp = new org.apache.hadoop.fs.Path(out + "__stage")
+        val dst = new org.apache.hadoop.fs.Path(out)
+        graft.text.NgramStats.bigramCounts(spark.read.parquet(docs), id, text)
+          .write.mode("overwrite").parquet(tmp.toString)
+        if (fs.exists(dst)) fs.delete(dst, true)
+        if (!fs.rename(tmp, dst)) sys.error(s"train-lm: rename failed for $out")
         0
       }
+    },
 
-    case TrainLm(docs, id, text, out) =>
-      // train once, persist like any table. STAGED temp+rename, not an
-      // in-place overwrite: quality-gate re-reads this directory per
-      // micro-batch, and a plain overwrite deletes the old files before
-      // the new job commits — a gate batch planning mid-retrain would see
-      // an empty or partial model. The rename flips old->new in one FS op.
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(out + "__stage")
-      val dst = new org.apache.hadoop.fs.Path(out)
-      graft.text.NgramStats.bigramCounts(spark.read.parquet(docs), id, text)
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(tmp, dst)) sys.error(s"train-lm: rename failed for $out")
-      0
-
-    case QualityGateCmd(source, model, id, text, dest, table, ck) =>
-      sourceSchema(spark, source, "quality-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("quality-gate", "--source <parquetDir> --model <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        model <- o.req("model")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // the model argument is by-name on the operator: re-read per batch,
         // so an offline re-train (train-lm --out onto the same dir) is
         // picked up live without restarting the gate
         graft.streaming.IncrementalStream.qualityGate(
           stream, spark.read.parquet(model), id, text,
           new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case EmbedDedup(source, corpus, id, vec, threshold, dest, table, ck) =>
-      sourceSchema(spark, source, "embed-dedup").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("embed-dedup", "--source <parquetDir> --corpus <parquet> --id <col> --vec <col> --threshold <cos> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        t <- o.cosine("threshold")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         graft.streaming.IncrementalStream.embedDupGate(
-          stream, spark.read.parquet(corpus), id, vec, threshold,
+          stream, spark.read.parquet(corpus), id, vec, t,
           new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case IndexIngest(source, corpus, id, vec, centroids, dest, table, ck) =>
-      sourceSchema(spark, source, "index-ingest").fold(0) { schema =>
+    Command("index-ingest", "--source <parquetDir> --corpus <parquet> --id <col> --vec <col> --centroids <n> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        c <- o.posInt("centroids")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // the coarse quantizer trains on the corpus snapshot at startup —
         // deterministic k-means, so repeated invocations against the same
         // corpus agree; retrain offline and reassign in batch on drift
         val idx = graft.similarity.Similarity.ivfIndex(
-          spark.read.parquet(corpus), id, vec, numCentroids = centroids)
-        val stream = spark.readStream.schema(schema).parquet(source)
+          spark.read.parquet(corpus), id, vec, numCentroids = c)
         graft.streaming.IncrementalStream.indexIngest(
           stream, idx.cents, id, vec,
           new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
+      }
+    },
+
+    Command("build-dedup-index", "--corpus <parquet> --id <col> --text <col> --ngram <n> --hashes <n> --bands <n> --out <storeDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.posInt("ngram")
+        hashes <- o.posInt("hashes")
+        bands <- o.posInt("bands")
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // one corpus text pass; both tables persist through the store and
+        // serve every ingest-dedup restart without re-shingling. The build
+        // parameters ride along as a one-row manifest: a serve-side
+        // mismatch computes band keys under a DIFFERENT hash family than
+        // the persisted index — candidates silently miss and duplicates
+        // pass — so ingest-dedup refuses to start on a mismatch instead
+        val built = graft.dedup.Dedup.buildNearDupIndex(
+          spark.read.parquet(corpus), id, text, shingler(n), hashes, bands)
+        val store = new ParquetStore(spark, out)
+        store.write(built.bandIndex, "band_index")
+        store.write(built.shingleSets, "shingle_sets")
+        dedupManifest.write(spark, store, n, hashes, bands)
         0
       }
+    },
 
-    case BuildDedupIndex(corpus, id, text, n, hashes, bands, out) =>
-      // one corpus text pass; both tables persist through the store and
-      // serve every ingest-dedup restart without re-shingling. The build
-      // parameters ride along as a one-row manifest: a serve-side
-      // mismatch computes band keys under a DIFFERENT hash family than
-      // the persisted index — candidates silently miss and duplicates
-      // pass — so ingest-dedup refuses to start on a mismatch instead
-      val built = graft.dedup.Dedup.buildNearDupIndex(
-        spark.read.parquet(corpus), id, text, shingler(n), hashes, bands)
-      val store = new ParquetStore(spark, out)
-      store.write(built.bandIndex, "band_index")
-      store.write(built.shingleSets, "shingle_sets")
-      writeDedupManifest(spark, store, n, hashes, bands)
-      0
-
-    case IngestDedup(source, index, id, text, n, num, den, hashes, bands, dest, table, ck, ts) =>
-      sourceSchema(spark, source, "ingest-dedup").fold(0) { schema =>
+    Command("ingest-dedup", "--source <parquetDir> --index <storeDir> --id <col> --text <col> --ngram <n> --num <j> --den <j> --hashes <n> --bands <n> --dest <storeDir> --table <t> --checkpoint <dir> [--tombstones true]") { o =>
+      for {
+        source <- o.req("source")
+        index <- o.req("index")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.posInt("ngram")
+        num <- o.posInt("num")
+        den <- o.posInt("den").flatMap(d =>
+          // num > den is a Jaccard threshold above 1: unsatisfiable even
+          // for identical sets — the gate would silently reject nothing
+          if (num <= d) Right(d)
+          else o.fail(s"--num/--den is a Jaccard threshold <= 1, got $num/$d"))
+        hashes <- o.posInt("hashes")
+        bands <- o.posInt("bands")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+        ts <- o.optBool("tombstones", dflt = false)
+      } yield drain(o.cmd, source) { (spark, stream) =>
         val idxStore = new ParquetStore(spark, index)
         // --tombstones true: the ONLINE takedown gate — BOTH index tables
-        // anti-join the store\'s tombstone table before any probe, so a
+        // anti-join the store's tombstone table before any probe, so a
         // tombstoned corpus document never rejects an arrival (the q211
         // contract)
-        def gate(df: org.apache.spark.sql.DataFrame) =
+        def gate(df: DataFrame) =
           if (ts) graft.sync.Takedown.withoutTombstones(df, "id_b", idxStore) else df
         val idx = graft.dedup.Dedup.NearDupIndex(
           gate(idxStore.read("band_index").getOrElse(
@@ -2100,8 +602,7 @@ object Main {
           gate(idxStore.read("shingle_sets").getOrElse(
             sys.error(s"ingest-dedup: no shingle_sets table under $index"))))
         idxStore.read("params").foreach(
-          checkDedupManifest(_, "ingest-dedup", index, n, hashes, bands))
-        val stream = spark.readStream.schema(schema).parquet(source)
+          dedupManifest.check(_, o.cmd, index, n, hashes, bands))
         // wall-clock arrival time (evaluated per micro-batch), NOT a
         // constant: a constant pins the watermark forever below every
         // event, so the per-id dedup state would grow with every doc ever
@@ -2117,542 +618,265 @@ object Main {
           .option("path", s"$dest/$table.parquet")
           .option("checkpointLocation", ck)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
-        0
+          .start()
       }
+    },
 
-    case ScrubSpans(source, benchmark, id, text, n, dest, table, ck) =>
-      sourceSchema(spark, source, "scrub-spans").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("scrub-spans", "--source <parquetDir> --benchmark <parquet> --id <col> --text <col> --ngram <n> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        benchmark <- o.req("benchmark")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.posInt("ngram")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // the benchmark argument is by-name on the operator: re-read per
         // batch, so a refreshed eval suite (new parquet under the same
         // path) takes effect on the next arrival without a restart
         graft.streaming.IncrementalStream.spanScrubGate(
           stream, spark.read.parquet(benchmark), id, text,
           new ParquetStore(spark, dest), table, ck, n = n)
-          .awaitTermination()
-        0
       }
+    },
 
-    case GroupSplit(corpus, id, text, n, num, den, hashes, bands, out, salt) =>
-      // batch artifact: near-dup pairs under the SAME MinHash family knobs
-      // as build-dedup-index, connected components, split on the component
-      // canonical — written as a (id, canon, split) assignment table that
-      // downstream samplers join on the id
-      val df = spark.read.parquet(corpus)
-      val pairs = graft.dedup.Dedup.minhashNearDupsHashed(
-        df, id, text, shingler(n), num, den, hashes, bands)
-      graft.operators.Sampling.groupSplit(
+    Command("group-split", "--corpus <parquet> --id <col> --text <col> --ngram <n> --num <j> --den <j> --hashes <n> --bands <n> --out <parquetDir> [--salt <s>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.posInt("ngram")
+        num <- o.posInt("num")
+        den <- o.posInt("den").flatMap(d =>
+          if (num <= d) Right(d)
+          else o.fail(s"--num/--den is a Jaccard threshold <= 1, got $num/$d"))
+        hashes <- o.posInt("hashes")
+        bands <- o.posInt("bands")
+        out <- o.req("out")
+        salt = o.get("salt").getOrElse("graft-split")
+      } yield overwrite(out) { spark =>
+        // batch artifact: near-dup pairs under the SAME MinHash family knobs
+        // as build-dedup-index, connected components, split on the component
+        // canonical — written as a (id, canon, split) assignment table that
+        // downstream samplers join on the id
+        val df = spark.read.parquet(corpus)
+        val pairs = graft.dedup.Dedup.minhashNearDupsHashed(
+          df, id, text, shingler(n), num, den, hashes, bands)
+        graft.operators.Sampling.groupSplit(
           df.select(org.apache.spark.sql.functions.col(id)), id, pairs, salt)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case MineNegatives(queries, corpus, id, vec, label, k, out, ceiling) =>
-      // batch artifact: (query_id, neighbor_id) hard-negative pairs for
-      // contrastive training, cross-label only, near-dups ceilinged out
-      graft.similarity.Similarity.hardNegatives(
+    Command("mine-negatives", "--queries <parquet> --corpus <parquet> --id <col> --vec <col> --label <col> --k <n> --out <parquetDir> [--ceiling <cos>]") { o =>
+      for {
+        queries <- o.req("queries")
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        label <- o.req("label")
+        k <- o.posInt("k")
+        out <- o.req("out")
+        ceiling <- o.opt("ceiling", "a cosine in (0,1]")(
+          _.toDoubleOption.filter(d => d > 0 && d <= 1)).map(_.getOrElse(0.95))
+      } yield overwrite(out) { spark =>
+        // batch artifact: (query_id, neighbor_id) hard-negative pairs for
+        // contrastive training, cross-label only, near-dups ceilinged out
+        graft.similarity.Similarity.hardNegatives(
           spark.read.parquet(queries), spark.read.parquet(corpus),
           id, vec, label, k, ceiling)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case CentroidAudit(corpus, id, vec, label, out) =>
-      // batch artifact: (vec_id, label, centroid_label) — rows where the
-      // two disagree are the mislabel candidates for review/exclusion
-      graft.similarity.Similarity.centroidAudit(
+    Command("centroid-audit", "--corpus <parquet> --id <col> --vec <col> --label <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        label <- o.req("label")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // batch artifact: (vec_id, label, centroid_label) — rows where the
+        // two disagree are the mislabel candidates for review/exclusion
+        graft.similarity.Similarity.centroidAudit(
           spark.read.parquet(corpus), id, vec, label)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case SelfScrub(corpus, id, text, n, maxDf, out) =>
-      // (id, clean_tokens) parquet artifact; token arrays compose with
-      // chunking/packing/encode-ids downstream (text reconstruction is
-      // deliberately out of scope — see Decontaminate.scrubSpans)
-      graft.dedup.Decontaminate.selfScrubSpans(
+    Command("self-scrub", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--max-df <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        maxDf <- o.optInt("max-df", 1)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // (id, clean_tokens) parquet artifact; token arrays compose with
+        // chunking/packing/encode-ids downstream (text reconstruction is
+        // deliberately out of scope — see Decontaminate.scrubSpans)
+        graft.dedup.Decontaminate.selfScrubSpans(
           spark.read.parquet(corpus), id, text, n, maxDf)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case DedupSpans(corpus, id, text, n, minRun, maxDf, stats, out) =>
-      // cross-document maximal duplicated-span dedup (ExactSubstr):
-      // --stats true writes the (id, n_tokens, n_removed) accounting
-      // (tune minRun/maxDf from it), default writes the scrubbed
-      // (id, clean_tokens) artifact
-      val df = spark.read.parquet(corpus)
-      val res =
+    Command("dedup-spans", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>] [--stats true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        minRun <- o.optInt("min-run", 20)
+        maxDf <- o.optInt("max-df", 20)
+        stats <- o.optBool("stats", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // cross-document maximal duplicated-span dedup (ExactSubstr):
+        // --stats true writes the (id, n_tokens, n_removed) accounting
+        // (tune minRun/maxDf from it), default writes the scrubbed
+        // (id, clean_tokens) artifact
+        val df = spark.read.parquet(corpus)
         if (stats) graft.dedup.Decontaminate.duplicatedSpanStats(
           df, id, text, n, minRun, maxDf)
         else graft.dedup.Decontaminate.scrubDuplicatedSpans(
           df, id, text, n, minRun, maxDf)
-      res.write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case QuantilesCmd(corpus, value, id, keys, bw, probs, out) =>
-      // exact discrete quantiles (ceil(p*n) — quantile_disc semantics)
-      // without a single-partition sort: the bucket-decomposed exact
-      // rank, keyed per --keys when given (the data-card percentile
-      // line) or global. --bucket-width derives the order-consistent
-      // bucket as value div width — pick it to balance bucket count vs
-      // skew (the PrefixSum contract)
-      val qdf = spark.read.parquet(corpus)
-      val bucket = org.apache.spark.sql.functions.expr(s"`$value` div $bw")
-      val res =
+    Command("span-gate-loss", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        minRun <- o.optInt("min-run", 20)
+        maxDf <- o.optInt("max-df", 20)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the df-gate divergence audit (tune --max-df from it): per doc,
+        // exact-rule vs gated covered positions + permille loss. COST
+        // WARNING (scaladoc'd): the exact arm pays the quadratic fan-out
+        // the gate avoids — run on a sample, never a full 100 TB corpus
+        graft.dedup.Decontaminate.spanGateLoss(
+          spark.read.parquet(corpus), id, text, n, minRun, maxDf)
+      }
+    },
+
+    Command("fix-mojibake", "--corpus <parquet> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the ftfy repair pass: (id, fixed, repaired) — safe by
+        // construction (strict-decode inverse; genuine accented prose,
+        // chars >= 0x100, and pure ASCII pass through), so it runs
+        // unconditionally ahead of quality filters; `repaired` is the
+        // audit column curation dashboards sum
+        import org.apache.spark.sql.functions.{col => c, when => w}
+        spark.read.parquet(corpus)
+          .select(c(id),
+            graft.functions.FixMojibake(c(text)).as("fixed"),
+            w(graft.functions.FixMojibake(c(text)) =!= c(text), 1L)
+              .otherwise(0L).as("repaired"))
+      }
+    },
+
+    Command("data-card", "--corpus <parquet> --group <col> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        group <- o.req("group")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the per-source datasheet row a corpus release publishes:
+        // doc/token/vocab counts, milli mean length, permille TTR — one
+        // posexplode_outer pass, #groups-sized output
+        graft.text.TextAnalysis.dataCard(spark.read.parquet(corpus),
+          group, id, text)
+      }
+    },
+
+    Command("quantiles", "--corpus <parquet> --value <col> --id <col> --bucket-width <n> --probs 100,500,900 [--keys c1[,c2]] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        value <- o.req("value")
+        id <- o.req("id")
+        keys = o.get("keys").toSeq.flatMap(cols)
+        bw <- o.posInt("bucket-width")
+        probs <- o.req("probs").flatMap { raw =>
+          val parsed = raw.split(",").map(_.trim).filter(_.nonEmpty)
+            .map(_.toLongOption)
+          if (parsed.nonEmpty && parsed.forall(_.exists(p => p >= 0 && p <= 1000)))
+            Right(parsed.flatten.toSeq)
+          else o.fail(s"--probs must be permille ints in [0, 1000], got $raw")
+        }
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // exact discrete quantiles (ceil(p*n) — quantile_disc semantics)
+        // without a single-partition sort: the bucket-decomposed exact
+        // rank, keyed per --keys when given (the data-card percentile
+        // line) or global. --bucket-width derives the order-consistent
+        // bucket as value div width — pick it to balance bucket count vs
+        // skew (the PrefixSum contract)
+        val qdf = spark.read.parquet(corpus)
+        val bucket = org.apache.spark.sql.functions.expr(s"`$value` div $bw")
         if (keys.isEmpty)
           graft.operators.Sampling.exactQuantiles(qdf, value, id, bucket, probs)
         else
           graft.operators.Sampling.exactQuantilesByKey(qdf, value, id, keys, bucket, probs)
-      res.write.mode("overwrite").parquet(out)
-      0
-
-    case HtmlExtractCmd(corpus, id, html, out) =>
-      // the WARC->WET pass: (id, clean text, markup-shape counters) —
-      // runs BEFORE every quality/language/dedup stage; the counters
-      // are the nav-shell audit columns (a page that is 95% tags by
-      // count is chrome, not prose)
-      val hdf = spark.read.parquet(corpus)
-      val h = org.apache.spark.sql.functions.col(html)
-      hdf.select(org.apache.spark.sql.functions.col(id),
-          graft.text.Html.extractText(h).as("clean"),
-          graft.text.Html.tagCount(h).cast("long").as("n_tags"),
-          graft.text.Html.linkCount(h).cast("long").as("n_links"),
-          graft.text.Html.scriptCount(h).cast("long").as("n_scripts"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SceneCutsCmd(corpus, th, kf, out) =>
-      // decode -> luminance-delta shot detection; --keyframes true emits
-      // one frame per scene (first frame + each cut, scene-numbered)
-      // instead of the raw cut list
-      implicit val session: org.apache.spark.sql.SparkSession = spark
-      val frames = graft.multimodal.Multimodal
-        .decodeFramesOf(spark.read.parquet(corpus)).toDF()
-      val res =
-        if (kf) graft.multimodal.Multimodal.keyframes(frames, th.toLong)
-        else graft.multimodal.Multimodal.sceneCuts(frames, th.toLong)
-      res.write.mode("overwrite").parquet(out)
-      0
-
-    case SentencesCmd(corpus, id, text, out) =>
-      // sentence-level artifact: (id, sent_idx, sentence, n_chars) —
-      // the unit for sentence dedup / pair mining / packing boundaries
-      graft.text.TextAnalysis.sentences(spark.read.parquet(corpus), id, text)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case LineDedupWithinCmd(corpus, id, text, out) =>
-      // the in-doc half of line cleanup: first occurrence of each line
-      // kept in order, per document (cross-doc is line-dedup)
-      graft.text.Scrub.dedupLinesWithin(spark.read.parquet(corpus), text)
-        .select(org.apache.spark.sql.functions.col(id),
-          org.apache.spark.sql.functions.col("clean"),
-          org.apache.spark.sql.functions.col("n_lines"),
-          org.apache.spark.sql.functions.col("n_removed"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case CurriculumCmd(corpus, id, priority, rps, seed, out) =>
-      // the training-order artifact: priority-major, md5-shuffled within
-      // tier, (global_rank, shard, pos) exact at any size — no global sort
-      graft.operators.Sampling.curriculumShuffle(
-          spark.read.parquet(corpus), id, priority, seed, rps.toLong)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case UrlFrontierCmd(source, id, url, dest, table, ck, maxPerHost) =>
-      // the crawl frontier: canonical-URL exact dedup at ingest — one
-      // row per canonical URL ever accepted, non-URLs dropped;
-      // --max-per-host adds the politeness budget (each host lands at
-      // most that many accepted URLs over the whole ingest)
-      sourceSchema(spark, source, "url-frontier").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.frontierGate(
-          stream, id, url, new ParquetStore(spark, dest), table, ck,
-          maxPerHost = maxPerHost)
-          .awaitTermination()
-        0
       }
+    },
 
-    case MainContentCmd(corpus, id, html, minChars, mlp, out) =>
-      // the boilerplate-aware extraction: block-density scoring drops
-      // nav/sidebar/footer chrome per page (what line-dedup only
-      // catches when it repeats across documents); n_blocks/n_kept are
-      // the extraction-audit columns
-      val mdf = spark.read.parquet(corpus)
-      mdf.select(org.apache.spark.sql.functions.col(id),
-          graft.text.Html.mainContentReport(
-            org.apache.spark.sql.functions.col(html), minChars, mlp).as("__r"))
-        .select(org.apache.spark.sql.functions.col(id),
-          org.apache.spark.sql.functions.col("__r.main").as("main"),
-          org.apache.spark.sql.functions.col("__r.n_blocks").as("n_blocks"),
-          org.apache.spark.sql.functions.col("__r.n_kept").as("n_kept"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case Scd2IngestCmd(source, pks, compare, ver, op, dest, table, ck) =>
-      // continuous SCD2 history maintenance: each micro-batch of deltas
-      // folds into the persisted history (exactly-once skip-or-merge);
-      // --op enables CDC delete events (rows whose op column is 'd')
-      sourceSchema(spark, source, "scd2-ingest").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.scd2Ingest(
-          stream, new ParquetStore(spark, dest), table, pks, compare, ver,
-          ck, opCol = op)
-          .awaitTermination()
-        0
-      }
-
-    case UrlNormCmd(corpus, id, url, out) =>
-      // URL canonicalization artifact: (id, url_norm) with NULL for
-      // non-URLs — the crawl frontier's dedup key (group by url_norm
-      // downstream; the NULLs are the scrub-queue rows)
-      val udf0 = spark.read.parquet(corpus)
-      udf0.select(org.apache.spark.sql.functions.col(id),
-          graft.functions.UrlNormalize(
-            org.apache.spark.sql.functions.col(url)).as("url_norm"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case Scd2ApplyCmd(history, snapshot, pks, compare, version, upserts, out) =>
-      // temporal sync: apply a full snapshot — or, with --upserts true,
-      // an incremental "changed since last pull" delta (absent keys stay
-      // open) — to an SCD2 history (or seed one with --init true).
-      // Writes the NEW history to --out, never in place, so a failed
-      // apply cannot corrupt the prior version (swap dirs after success,
-      // the writeAtomic discipline)
-      val snap = spark.read.parquet(snapshot)
-      val res = history match {
-        case None => graft.sync.History.scd2Init(snap, version)
-        case Some(h) if upserts => graft.sync.History.scd2ApplyUpserts(
-          spark.read.parquet(h), snap, pks, compare, version)
-        case Some(h) => graft.sync.History.scd2Apply(
-          spark.read.parquet(h), snap, pks, compare, version)
-      }
-      res.write.mode("overwrite").parquet(out)
-      0
-
-    case ReleaseAuditCmd(corpus, group, id, text, quasi, k, out) =>
-      // the pre-release datasheet bundle in ONE invocation: per-group
-      // data card, per-column profile, and (when --quasi is given) the
-      // k-anonymity report — each a separately-graded operator; this
-      // command is the packaging a release checklist actually runs
-      val rdf = spark.read.parquet(corpus)
-      graft.text.TextAnalysis.dataCard(rdf, group, id, text)
-        .write.mode("overwrite").parquet(s"$out/data_card")
-      graft.operators.Profile.profile(rdf, approxDistinct = true)
-        .write.mode("overwrite").parquet(s"$out/profile")
-      if (quasi.nonEmpty)
-        graft.operators.Expectations.kAnonymity(rdf, quasi, k.toLong)
-          .write.mode("overwrite").parquet(s"$out/k_anonymity")
-      0
-
-    case KAnonymityCmd(corpus, quasi, k, out) =>
-      // the governance audit before a release: quasi-identifier combos
-      // under k rows, delta-sized; remediate by semi-joining the source
-      graft.operators.Expectations.kAnonymity(
-          spark.read.parquet(corpus), quasi, k.toLong)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SchemaDriftCmd(oldP, newP, out) =>
-      // upstream schema change as a report, not a stack trace — pure
-      // metadata compare, no data scan
-      graft.sync.Diff.schemaDiff(
-          spark.read.parquet(oldP), spark.read.parquet(newP))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case Scd2CloseCmd(history, keys, pks, version, out) =>
-      // the delete half of a CDC feed: close the listed keys' open
-      // intervals at --version (idempotent; unknown keys are no-ops)
-      graft.sync.History.scd2Close(spark.read.parquet(history),
-          spark.read.parquet(keys), pks, version)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case AsOfCmd(history, version, out) =>
-      // time travel: the table exactly as of --version
-      graft.sync.History.asOf(spark.read.parquet(history), version)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case DataCardCmd(corpus, group, id, text, out) =>
-      // the per-source datasheet row a corpus release publishes:
-      // doc/token/vocab counts, milli mean length, permille TTR — one
-      // posexplode_outer pass, #groups-sized output
-      graft.text.TextAnalysis.dataCard(spark.read.parquet(corpus),
-          group, id, text)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SourceOverlapCmd(corpus, source, text, gram, out) =>
-      // the corpus-composition audit before mixture weighting: per
-      // source pair, shared distinct k-gram counts, per-side totals,
-      // and containment permille ("82% of src3 also appears in src7")
-      graft.dedup.Dedup.sourceOverlapMatrix(spark.read.parquet(corpus),
+    Command("source-overlap", "--corpus <parquet> --source <col> --text <col> --out <parquetDir> [--gram <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        source <- o.req("source")
+        text <- o.req("text")
+        gram <- o.optInt("gram", 8)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the corpus-composition audit before mixture weighting: per
+        // source pair, shared distinct k-gram counts, per-side totals,
+        // and containment permille ("82% of src3 also appears in src7")
+        graft.dedup.Dedup.sourceOverlapMatrix(spark.read.parquet(corpus),
           source, text, gram)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case FixMojibakeCmd(corpus, id, text, out) =>
-      // the ftfy repair pass: (id, fixed, repaired) — safe by
-      // construction (strict-decode inverse; genuine accented prose,
-      // chars >= 0x100, and pure ASCII pass through), so it runs
-      // unconditionally ahead of quality filters; `repaired` is the
-      // audit column curation dashboards sum
-      import org.apache.spark.sql.functions.{col => c, when => w, lit => l}
-      spark.read.parquet(corpus)
-        .select(c(id),
-          graft.functions.FixMojibake(c(text)).as("fixed"),
-          w(graft.functions.FixMojibake(c(text)) =!= c(text), 1L)
-            .otherwise(0L).as("repaired"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SpanGateLossCmd(corpus, id, text, n, minRun, maxDf, out) =>
-      // the df-gate divergence audit (tune --max-df from it): per doc,
-      // exact-rule vs gated covered positions + permille loss. COST
-      // WARNING (scaladoc'd): the exact arm pays the quadratic fan-out
-      // the gate avoids — run on a sample, never a full 100 TB corpus
-      graft.dedup.Decontaminate.spanGateLoss(
-          spark.read.parquet(corpus), id, text, n, minRun, maxDf)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case DupSpanGate(source, reference, id, text, n, minRun, maxDf,
-                     dest, table, ck) =>
-      sourceSchema(spark, source, "dup-span-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("dup-span-gate", "--source <parquetDir> --reference <parquet> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--gram <n>] [--min-run <n>] [--max-df <n>]") { o =>
+      for {
+        source <- o.req("source")
+        reference <- o.req("reference")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        minRun <- o.optInt("min-run", 20)
+        maxDf <- o.optInt("max-df", 20)
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // by-name reference: re-read per batch, so arrivals absorbed
         // into the corpus (or a corpus rebuild) take effect next batch
         graft.streaming.IncrementalStream.dupSpanScrubGate(
           stream, spark.read.parquet(reference), id, text,
           new ParquetStore(spark, dest), table, ck, n, minRun, maxDf)
-          .awaitTermination()
-        0
       }
+    },
 
-    case BpeTrainCmd(corpus, text, n, byteLevel, out) =>
-      // the merge list IS the tokenizer artifact: (step, left, right,
-      // cnt) with step the replay order — bpe-encode re-reads it, the
-      // same build-once/apply-many contract as the vocab table.
-      // --byte-level true trains over the GPT-2 byte-unit alphabet
-      // (nothing is ever OOV — the production default; decode pieces
-      // with ByteUnits.unitsToText). The training REGIME travels as a
-      // byte_level column on every row: char-level ASCII merges would
-      // still "apply" to byte units (printable bytes self-map), so a
-      // regime mismatch at encode time is plausible-looking garbage —
-      // exactly the silent-mismatch class the span-index params
-      // manifest fails closed on
-      val (merges, _) =
-        if (byteLevel) graft.text.TextAnalysis.byteBpeTrain(
-          spark.read.parquet(corpus), text, n)
-        else graft.text.TextAnalysis.bpeTrain(
-          spark.read.parquet(corpus), text, n)
-      spark.createDataFrame(merges)
-        .withColumn("byte_level", org.apache.spark.sql.functions.lit(byteLevel))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case BpeEncodeCmd(corpus, id, text, mergesDir, byteLevel, out) =>
-      // merges collect bounded by the training artifact size (the merge
-      // list is the tokenizer, ~30k rows at production scale); replay
-      // order restores from the persisted step column
-      val mergesDf = spark.read.parquet(mergesDir)
-      // fail closed on a training-regime mismatch: the artifact records
-      // which alphabet it was trained over (absent only on pre-marker
-      // artifacts, where the flag is trusted as before)
-      if (mergesDf.columns.contains("byte_level")) {
-        val trained = mergesDf.select("byte_level").distinct().collect()
-          .map(_.getBoolean(0)).toSeq
-        // an EMPTY table falls through to the dedicated error below
-        require(trained.isEmpty || trained == Seq(byteLevel),
-          s"bpe-encode: merge table under $mergesDir was trained with " +
-            s"byte_level=${trained.mkString(",")} but --byte-level is " +
-            s"$byteLevel — a regime mismatch segments plausible-looking " +
-            "garbage; re-run with the matching flag")
-      }
-      val merges = mergesDf
-        .select("step", "left", "right", "cnt").collect()
-        .map(r => graft.text.TextAnalysis.BpeMerge(
-          r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-      if (merges.isEmpty)
-        sys.error(s"bpe-encode: empty merge table under $mergesDir — run bpe-train first")
-      val enc = if (byteLevel)
-        graft.text.TextAnalysis.byteBpeEncode(
-          org.apache.spark.sql.functions.col(text), merges)
-      else graft.text.TextAnalysis.bpeEncode(
-        org.apache.spark.sql.functions.col(text), merges)
-      spark.read.parquet(corpus)
-        .select(org.apache.spark.sql.functions.col(id), enc.as("pieces"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case BpeGateCmd(source, mergesDir, id, text, byteLevel, dest, table, ck) =>
-      // streaming merge-list replay under the persisted training
-      // artifact — pinned (collected + validated) at query start;
-      // re-encode = new table + checkpoint pair (the encode-gate
-      // contract for the BPE family). The byte_level regime marker is
-      // checked exactly as bpe-encode does: a mismatch segments
-      // plausible-looking garbage, so it fails closed here
-      val mergesDf = spark.read.parquet(mergesDir)
-      if (mergesDf.columns.contains("byte_level")) {
-        val trained = mergesDf.select("byte_level").distinct().collect()
-          .map(_.getBoolean(0)).toSeq
-        require(trained.isEmpty || trained == Seq(byteLevel),
-          s"bpe-gate: merge table under $mergesDir was trained with " +
-            s"byte_level=${trained.mkString(",")} but --byte-level is " +
-            s"$byteLevel — re-run with the matching flag")
-      }
-      sourceSchema(spark, source, "bpe-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.bpeGate(
-          stream, mergesDf, id, text, new ParquetStore(spark, dest), table,
-          ck, byteLevel = byteLevel).awaitTermination()
-        0
-      }
-
-    case MediaNearDupCmd(corpus, modality, maxH, th, out) =>
-      // batch banded-Hamming mining over (doc_id, media) payloads —
-      // decode and the degenerate-hash filter live inside the modality
-      // miner (imageNearDups / audioNearDups / videoNearDups;
-      // --threshold-milli is the video scene-cut scale and must match
-      // every probe of the same corpus, the band-family contract)
-      val media = spark.read.parquet(corpus)
-      val pairs = modality match {
-        case "image" => graft.dedup.Dedup.imageNearDups(media, maxH)
-        case "audio" => graft.dedup.Dedup.audioNearDups(media, maxH)
-        case _ => graft.dedup.Dedup.videoNearDups(media, th.toLong, maxH)
-      }
-      pairs.write.mode("overwrite").parquet(out)
-      0
-
-    case IngestMediaDedupCmd(source, modality, maxH, th, dest, ck) =>
-      // continuous fingerprint dedup ingest: probe the accumulated
-      // index, pair within the batch, then append signatures — the
-      // accumulated dup_pairs table equals the batch miner over
-      // everything ingested (the packedDupIngest contract)
-      sourceSchema(spark, source, "ingest-media-dedup").fold(0) { schema =>
-        implicit val s: SparkSession = spark
-        val c = org.apache.spark.sql.functions.col _
-        val (fp, sigCol): (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, String) =
-          modality match {
-            case "image" =>
-              ((b: org.apache.spark.sql.DataFrame) =>
-                graft.multimodal.Multimodal.dhashImages(b).toDF()
-                  .filter(c("phash") =!= 0L && c("phash") =!= -1L), "phash")
-            case "audio" =>
-              ((b: org.apache.spark.sql.DataFrame) =>
-                graft.multimodal.Multimodal.afingerprintAudio(b).toDF()
-                  .filter(c("ahash") =!= 0L && c("ahash") =!= -1L), "ahash")
-            case _ =>
-              ((b: org.apache.spark.sql.DataFrame) =>
-                graft.multimodal.Multimodal.videoSignature(
-                    graft.multimodal.Multimodal.decodeFramesOf(b).toDF(), th.toLong)
-                  .filter(c("vsig") =!= 0L && c("vsig") =!= -1L), "vsig")
-          }
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.packedDupIngest(
-          stream, fp, "doc_id", sigCol, maxH,
-          new ParquetStore(spark, dest), ck).awaitTermination()
-        0
-      }
-
-    case ProfileCmd(corpus, approx, out) =>
-      // the profile-then-pin workflow: run this against an unfamiliar
-      // source, read the report, encode what you learned as `validate`
-      // expectations
-      graft.operators.Profile.profile(spark.read.parquet(corpus), approx)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case ValidateCmd(corpus, notNull, ranges, uniques, ref, out) =>
-      // the post-sync validation report: row checks fold into one pass,
-      // uniqueness/referential each one aggregate/anti-join; the written
-      // report is the (check_name, n_rows, n_violations, pass) artifact
-      // a landing pipeline alarms on
-      val df = spark.read.parquet(corpus)
-      val c = org.apache.spark.sql.functions.col _
-      val rowChecks =
-        notNull.map(n => s"${n}_not_null" -> c(n).isNotNull) ++
-          ranges.map { case (n, lo, hi) =>
-            s"${n}_range" -> (c(n) >= lo && c(n) <= hi) }
-      val reports =
-        (if (rowChecks.nonEmpty)
-          Seq(graft.operators.Expectations.rowChecks(df, rowChecks))
-        else Seq.empty) ++
-          uniques.map(keys => graft.operators.Expectations.uniqueCheck(
-            df, keys.mkString("_", "_", "_unique").stripPrefix("_"), keys)) ++
-          ref.toSeq.map { case (fk, dir, key) =>
-            graft.operators.Expectations.refCheck(df, s"${fk}_in_ref", fk,
-              spark.read.parquet(dir), key)
-          }
-      graft.operators.Expectations.all(reports: _*)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case KeywordsCmd(corpus, text, iters, k, out) =>
-      // TextRank keyword artifact: (node, pr_micro, rank)
-      graft.text.TextRank.keywords(spark.read.parquet(corpus), text, iters, k)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case LineDedupCmd(corpus, id, text, maxDf, broadcastHot, out) =>
-      // C4/CCNet line dedup: drop corpus-hot lines, reassemble in order
-      // with per-doc audit counts; --broadcast false for web-scale runs
-      // with a low threshold (the hot set is boilerplate-sized there)
-      graft.dedup.Dedup.lineDedup(spark.read.parquet(corpus), id, text,
-          maxDf.toLong, broadcastHot)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case IngestLineIndexCmd(source, id, text, dest, ck) =>
-      sourceSchema(spark, source, "ingest-line-index").fold(0) { schema =>
-        // raw (id, pos, line) occurrence rows accumulate in the fixed
-        // "lines" table (the serve-line-dedup read convention); the hot
-        // threshold applies at read over the WHOLE accumulation, so
-        // serving is row-identical to batch line-dedup over everything
-        // that ever arrived. No params manifest: line splitting has no
-        // family knobs — any two ingests fold compatibly by construction
-        val store = new ParquetStore(spark, dest)
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.lineIndexIngest(
-          stream, id, text, store, "lines", ck)
-          .awaitTermination()
-        0
-      }
-
-    case ServeLineDedupCmd(index, id, maxDf, broadcastHot, tombstones, out) =>
-      // batch q179 semantics over the accumulated index: hot lines drop
-      // retroactively at read, every landed doc reassembles with audit
-      // counts. --tombstones true applies the ONLINE takedown gate first
-      // (anti-join the store's tombstone table BEFORE the hotness gate,
-      // so erased docs leave no df residue — the q201 semantics)
-      val store = new ParquetStore(spark, index)
-      val lines = store.read("lines").getOrElse(sys.error(
-        s"serve-line-dedup: no lines table in $index — run ingest-line-index first"))
-      val gated = if (tombstones)
-        graft.sync.Takedown.withoutTombstones(lines, id, store) else lines
-      graft.dedup.Dedup.lineDedupFromIndex(
-          gated.select(org.apache.spark.sql.functions.col(id),
-            org.apache.spark.sql.functions.col("pos"),
-            org.apache.spark.sql.functions.col("line")),
-          id, maxDf.toLong, broadcastHot)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case TombstoneCmd(storeDir, ids) =>
-      // the ONLINE takedown record: appends novel ids to the store's
-      // tombstone table without touching index rows or streams; serving
-      // paths gate at read (--tombstones true), the physical purge
-      // defers to the next `takedown`/`compact` maintenance window
-      val added = graft.sync.Takedown.tombstone(
-        new ParquetStore(spark, storeDir), spark.read.parquet(ids))
-      println(s"tombstone: $added new ids recorded")
-      0
-
-    case IngestSpanIndexCmd(source, id, text, n, dest, ck) =>
-      sourceSchema(spark, source, "ingest-span-index").fold(0) { schema =>
+    Command("ingest-span-index", "--source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir> [--gram <n>]") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        dest <- o.req("dest")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // raw (id, pos, g) positional-gram rows accumulate in the fixed
         // "grams" table (the serve-span-scrub read convention); the
         // maxDocFreq gate applies at read over the WHOLE accumulation.
@@ -2663,659 +887,997 @@ object Main {
         val store = new ParquetStore(spark, dest)
         store.read("params") match {
           case Some(params) =>
-            checkSpanManifest(params, "ingest-span-index", dest, n)
+            spanManifest.check(params, o.cmd, dest, n)
           case None =>
             require(store.read("grams").isEmpty,
               s"ingest-span-index: $dest has a grams table but no params " +
                 "manifest — its window size is unknown, so folding more " +
                 "rows could silently corrupt it; re-ingest from scratch " +
                 "or seed a manifest matching the original build")
-            writeSpanManifest(spark, store, n)
+            spanManifest.write(spark, store, n)
         }
-        val stream = spark.readStream.schema(schema).parquet(source)
         graft.streaming.IncrementalStream.dupSpanIndexIngest(
           stream, id, text, store, "grams", ck, n)
-          .awaitTermination()
-        0
       }
+    },
 
-    case ServeSpanScrubCmd(corpus, index, id, text, n, minRun, maxDf, ts, out) =>
-      // q190 semantics over the accumulated index: the batch corpus
-      // scrubs against everything ingested so far, reference side never
-      // re-tokenized; manifest checked so the probe's k matches the index
-      val store = new ParquetStore(spark, index)
-      val grams = store.read("grams").getOrElse(sys.error(
-        s"serve-span-scrub: no grams table in $index — run ingest-span-index first"))
-      // fail closed on a missing manifest (grams rows exist, so the index
-      // was built with SOME k — trusting --gram blindly would make every
-      // diagonal meaningless and silently miss every span), mirroring the
-      // ingest-span-index guard on exactly this state
-      store.read("params") match {
-        case Some(params) => checkSpanManifest(params, "serve-span-scrub", index, n)
-        case None => sys.error(
-          s"serve-span-scrub: $index has a grams table but no params " +
-            "manifest — its window size is unknown, so --gram cannot be " +
-            "verified; re-ingest from scratch or seed a manifest matching " +
-            "the original build")
-      }
-      // --tombstones true: the ONLINE takedown gate — anti-join the
-      // store's tombstone table BEFORE the df gate, so gram df recomputes
-      // over the survivors (the q205 re-cooling contract)
-      val gramRows = {
-        val raw = grams.select(org.apache.spark.sql.functions.col(id),
-          org.apache.spark.sql.functions.col("pos"),
-          org.apache.spark.sql.functions.col("g"))
-        if (ts) graft.sync.Takedown.withoutTombstones(raw, id, store) else raw
-      }
-      graft.dedup.Decontaminate.scrubDuplicatedSpansAgainstIndex(
+    Command("serve-span-scrub", "--corpus <parquet> --index <storeDir> --id <col> --text <col> --out <parquetDir> [--gram <n>] [--min-run <n>] [--max-df <n>] [--tombstones true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        index <- o.req("index")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.optInt("gram", 8)
+        minRun <- o.optInt("min-run", 20)
+        maxDf <- o.optInt("max-df", 20)
+        ts <- o.optBool("tombstones", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // q190 semantics over the accumulated index: the batch corpus
+        // scrubs against everything ingested so far, reference side never
+        // re-tokenized; manifest checked so the probe's k matches the index
+        val store = new ParquetStore(spark, index)
+        val grams = store.read("grams").getOrElse(sys.error(
+          s"serve-span-scrub: no grams table in $index — run ingest-span-index first"))
+        // fail closed on a missing manifest (grams rows exist, so the index
+        // was built with SOME k — trusting --gram blindly would make every
+        // diagonal meaningless and silently miss every span), mirroring the
+        // ingest-span-index guard on exactly this state
+        store.read("params") match {
+          case Some(params) => spanManifest.check(params, o.cmd, index, n)
+          case None => sys.error(
+            s"serve-span-scrub: $index has a grams table but no params " +
+              "manifest — its window size is unknown, so --gram cannot be " +
+              "verified; re-ingest from scratch or seed a manifest matching " +
+              "the original build")
+        }
+        // --tombstones true: the ONLINE takedown gate — anti-join the
+        // store's tombstone table BEFORE the df gate, so gram df recomputes
+        // over the survivors (the q205 re-cooling contract)
+        val gramRows = {
+          val raw = grams.select(org.apache.spark.sql.functions.col(id),
+            org.apache.spark.sql.functions.col("pos"),
+            org.apache.spark.sql.functions.col("g"))
+          if (ts) graft.sync.Takedown.withoutTombstones(raw, id, store) else raw
+        }
+        graft.dedup.Decontaminate.scrubDuplicatedSpansAgainstIndex(
           spark.read.parquet(corpus), gramRows,
           id, text, n, minRun, maxDf)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case GopherFilterCmd(corpus, id, text, out) =>
-      // the full heuristic battery + the compression signal in ONE
-      // narrow pass: per-rule counts AND flags (curation audits kill
-      // rates), keep, and the deflate ratio — the cheap first filter
-      graft.text.Gopher.quality(spark.read.parquet(corpus), id, text,
-          "compression_milli" -> graft.text.Gopher.compressionRatioMilli(
-            org.apache.spark.sql.functions.col(text)))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case GopherGateCmd(source, id, text, dest, table, ck) =>
-      sourceSchema(spark, source, "gopher-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.gopherGate(
-          stream, id, text, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case MainContentGateCmd(source, id, html, minChars, mlp, minKept, dest, table, ck) =>
-      // the extraction gate at ingest: nav shells (fewer than min-kept
-      // content blocks) never enter the corpus; survivors accumulate as
-      // (id, main, n_blocks, n_kept) under the retry guard
-      sourceSchema(spark, source, "main-content-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.mainContentGate(
-          stream, id, html, new ParquetStore(spark, dest), table, ck,
-          minChars = minChars, maxLinkPermille = mlp, minKept = minKept)
-          .awaitTermination()
-        0
+    Command("line-dedup", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--max-df <n>] [--broadcast false]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        maxDf <- o.optInt("max-df", 1)
+        out <- o.req("out")
+        // --broadcast false: web-scale low-threshold runs MUST reach the
+        // shuffled-join plan — a silently-ignored typo here would
+        // broadcast the boilerplate-sized hot set instead
+        bc <- o.optBool("broadcast", dflt = true)
+      } yield overwrite(out) { spark =>
+        // C4/CCNet line dedup: drop corpus-hot lines, reassemble in order
+        // with per-doc audit counts; --broadcast false for web-scale runs
+        // with a low threshold (the hot set is boilerplate-sized there)
+        graft.dedup.Dedup.lineDedup(spark.read.parquet(corpus), id, text,
+          maxDf.toLong, bc)
       }
+    },
 
-    case ServeMediaPairsCmd(index, tombstones, out) =>
-      // the accumulated dup-pair log, served: --tombstones true erases
-      // every pair touching a tombstoned id on EITHER side (a pair is
-      // evidence about both documents — the q247 semantics) before the
-      // direction-normalized distinct
-      val store = new ParquetStore(spark, index)
-      val pairs = store.read("dup_pairs").getOrElse(sys.error(
-        s"serve-media-pairs: no dup_pairs table in $index — run ingest-media-dedup first"))
-      val c = org.apache.spark.sql.functions.col _
-      val base = pairs.select(c("id_a"), c("id_b"))
-      val gated = if (tombstones)
-        graft.sync.Takedown.withoutTombstonesAny(base, Seq("id_a", "id_b"), store)
-      else base
-      gated.select(
-          org.apache.spark.sql.functions.least(c("id_a"), c("id_b")).as("id_a"),
-          org.apache.spark.sql.functions.greatest(c("id_a"), c("id_b")).as("id_b"))
-        .distinct()
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case RetainHistoryCmd(history, horizon, out) =>
-      // retention pruning: intervals ended at/before the horizon drop;
-      // asOf/pitJoin at any version >= horizon are unchanged (reads
-      // below the horizon become incomplete BY DESIGN — retention)
-      graft.sync.History.retainSince(spark.read.parquet(history), horizon)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case WarcExtractCmd(files, text, status, mime, out) =>
-      // the crawl-dump entry point: a (file_id, content) frame of whole
-      // WARC files (spark.read.format("binaryFile") upstream) splits
-      // into records per partition — no shuffle; --text true keeps only
-      // response payloads with the HTTP envelope stripped and the body
-      // decoded by its declared charset (status/mime surfaced as
-      // columns); --status 200 --mime text/html is the usual crawl
-      // admission pair
-      implicit val s: SparkSession = spark
-      val f = spark.read.parquet(files)
-      (if (text) {
-        val r = graft.sources.Warc.responseText(f)
-        import org.apache.spark.sql.functions.col
-        val withStatus = status.fold(r)(n => r.filter(col("http_status") === n))
-        mime.fold(withStatus)(m => withStatus.filter(col("content_type") === m))
-      } else graft.sources.Warc.records(f).toDF())
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case WarcExportCmd(corpus, fileCol, id, text, url, date, gzip, out) =>
-      // the sink half of the interchange round trip: conversion (WET)
-      // records, --date is the stated capture instant (the writer never
-      // reads a wall clock — exports replay byte-identically)
-      implicit val s: SparkSession = spark
-      graft.sources.Warc.export(spark.read.parquet(corpus), fileCol, id,
-          text, url, date, gzip)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case OutlinksCmd(pages, id, url, html, raw, out) =>
-      // the crawl-graph stage: hrefs extracted (entity-decoded, no edges
-      // from comments/scripts), resolved against the page's own URL
-      // (RFC 3986) and canonicalized into the frontier key space;
-      // --raw true keeps the unresolved hrefs instead
-      import org.apache.spark.sql.functions.{col, explode}
-      val p = spark.read.parquet(pages)
-      (if (raw)
-        p.select(col(id), explode(graft.text.Html.outlinks(col(html))).as("href"))
-      else {
-        val u = url.get // the parser guarantees it on the resolve path
-        p.select(col(id), col(u),
-            explode(graft.text.Html.outlinks(col(html))).as("href"))
-          .select(col(id), graft.functions.UrlNormalize(
-            graft.functions.UrlResolve(col(u), col("href"))).as("dst"))
-          .filter(col("dst").isNotNull)
-      }).write.mode("overwrite").parquet(out)
-      0
-
-    case RobotsSitemapsCmd(robots, host, txt, out) =>
-      // the frontier's seed list: Sitemap directives, group-independent
-      graft.operators.Robots.sitemaps(spark.read.parquet(robots), host, txt)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case ChatRenderCmd(conversations, id, messages, spans, tokenMasks,
-                       budget, out) =>
-      // SFT data prep: turn lists -> rendered chat-template text; with
-      // --spans true, also the assistant-turn loss-mask spans
-      // (code-point offsets); --token-masks true adds the TOKEN-index
-      // intervals (TokenSpans over the rendering, the trainer's final
-      // mask unit); --max-tokens fits each conversation to
-      // the budget FIRST (assistant-ending prefix; budget-empty
-      // conversations drop). Under --max-tokens the output also carries
-      // the FITTED `messages` array — span turn indexes refer to the
-      // conversation that was rendered, which after truncation is no
-      // longer the stored source array (fitBudget compacts invalid
-      // turns), so the row must ship the array its spans index
-      import org.apache.spark.sql.functions.{col, size}
-      val raw = spark.read.parquet(conversations)
-      val fitted = budget.isDefined
-      val c = budget match {
-        case Some(b) =>
-          raw.withColumn("__m", graft.text.Chat.fitBudget(col(messages), b))
-            .filter(size(col("__m")) > 0)
-        case None => raw.withColumn("__m", col(messages))
+    Command("ingest-line-index", "--source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // raw (id, pos, line) occurrence rows accumulate in the fixed
+        // "lines" table (the serve-line-dedup read convention); the hot
+        // threshold applies at read over the WHOLE accumulation, so
+        // serving is row-identical to batch line-dedup over everything
+        // that ever arrived. No params manifest: line splitting has no
+        // family knobs — any two ingests fold compatibly by construction
+        graft.streaming.IncrementalStream.lineIndexIngest(
+          stream, id, text, new ParquetStore(spark, dest), "lines", ck)
       }
-      val withText = c
-        .withColumn("rendered", graft.text.Chat.render(col("__m")))
-      val withSpans =
-        if (spans || tokenMasks)
-          withText.withColumn("__sp",
-            graft.text.Chat.assistantSpans(col("__m")))
-        else withText
-      val cols = Seq(col(id), col("rendered")) ++
-        (if (spans) Seq(col("__sp").as("loss_spans")) else Nil) ++
-        (if (tokenMasks) Seq(graft.text.Chat.tokenMask(
-          graft.functions.TokenSpans(col("rendered")), col("__sp"))
-          .as("token_masks")) else Nil) ++
-        (if (fitted) Seq(col("__m").as("messages")) else Nil)
-      withSpans.select(cols: _*).write.mode("overwrite").parquet(out)
-      0
+    },
 
-    case ChatLintCmd(conversations, id, messages, failedOnly, out) =>
-      // the SFT QA gate: one row of structural counters per
-      // conversation; --failed-only true keeps just the rows a
-      // cleanup queue wants
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
-      val linted = spark.read.parquet(conversations)
-        .select(col(id), graft.text.Chat.lint(col(messages)).as("l"))
-        .select(col(id), col("l.n_valid").as("n_valid"),
-          col("l.n_invalid").as("n_invalid"),
-          col("l.starts_ok").as("starts_ok"),
-          col("l.ends_assistant").as("ends_assistant"),
-          col("l.same_role_pairs").as("same_role_pairs"),
-          col("l.empty_turns").as("empty_turns"),
-          col("l.passed").as("passed"))
-      // NULL lint (a NULL messages array) must land in the failure
-      // queue, not vanish: !NULL is NULL and would filter the
-      // most-broken rows out of --failed-only silently
-      (if (failedOnly) linted.filter(!coalesce(col("passed"), lit(false)))
-       else linted)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SitemapEntriesCmd(sitemaps, id, xml, kind, out) =>
-      // crawl seeding: sitemap XML documents -> one row per entry
-      // (kind url|sitemap, entity-decoded loc, lastmod); --kind
-      // filters to pages or child sitemaps (the fetch-loop split)
-      import org.apache.spark.sql.functions.{col, explode}
-      val exploded = spark.read.parquet(sitemaps)
-        .select(col(id), explode(graft.text.Sitemap.entries(col(xml))).as("e"))
-        .select(col(id), col("e.kind").as("kind"), col("e.loc").as("loc"),
-          col("e.lastmod").as("lastmod"))
-      kind.fold(exploded)(k => exploded.filter(col("kind") === k))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case PreferencePairsCmd(rollouts, prompt, id, text, score, minMargin,
-                            fromState, out) =>
-      // RLHF/DPO prep: scored rollouts -> best-vs-worst (chosen,
-      // rejected) pairs per prompt, margin-gated; --from-state true
-      // derives the pairs from a preference-ingest state table instead
-      // (a margin filter over |prompts| rows, never the rollouts)
-      val pairs =
-        if (fromState)
-          graft.operators.Preference.pairsFromCandidates(
-            spark.read.parquet(rollouts).drop("__last_batch", "__run"),
-            prompt, minMargin)
-        else
-          graft.operators.Preference.pairs(spark.read.parquet(rollouts),
-            prompt, id, text, score, minMargin)
-      pairs.write.mode("overwrite").parquet(out)
-      0
-
-    case GroupAdvantageCmd(rollouts, prompt, id, score, out) =>
-      // GRPO prep: per-rollout group-relative advantage numerators
-      // (advantage = adv_num/n, z = adv_num/sqrt(var_num))
-      graft.operators.Preference.groupAdvantages(
-        spark.read.parquet(rollouts), prompt, id, score)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case BitextMineCmd(src, tgt, id, vec, k, marginMicros, out) =>
-      // multilingual curation: mutual-best pairs across two embedded
-      // corpora under the LASER ratio margin; put the smaller corpus
-      // on --tgt (it broadcasts into one cross pass)
-      graft.similarity.Similarity.bitextMine(
-        spark.read.parquet(src), spark.read.parquet(tgt), id, vec,
-        k, marginMicros)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case PreferenceIngestCmd(source, prompt, id, text, score, dest, table, ck) =>
-      // the RLHF loop's online half: rollouts stream in as the judge
-      // scores them; the state holds each prompt's best/worst over
-      // everything arrived. Derive pairs with
-      // `preference-pairs --from-state true`
-      sourceSchema(spark, source, "preference-ingest").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.preferenceIngest(stream,
-          prompt, id, text, score, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
-      }
-
-    case EmbedDeconCmd(corpus, benchmark, id, vec, threshold, scrub, ivf, out) =>
-      // semantic decontamination: the benchmark broadcasts into one
-      // corpus scan; --scrub true writes the surviving corpus instead
-      // of the flagged ids; --cells/--nprobe route through the
-      // IVF-accelerated form (large benchmark suites — each benchmark
-      // vector probes only adjacent cells)
-      val c = spark.read.parquet(corpus)
-      val b = spark.read.parquet(benchmark)
-      (ivf match {
-        case Some((cells, nprobe)) =>
-          graft.dedup.Decontaminate.embedContaminatedIdsIvf(
-            c, b, id, vec, threshold, cells, nprobe)
-        case None if scrub =>
-          graft.dedup.Decontaminate.embedScrub(c, b, id, vec, threshold)
-        case None =>
-          graft.dedup.Decontaminate.embedContaminatedIds(c, b, id, vec, threshold)
-      }).write.mode("overwrite").parquet(out)
-      0
-
-    case EmbedDeconGateCmd(source, benchmark, id, vec, threshold, dest, table, ck) =>
-      sourceSchema(spark, source, "embed-decon-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
-        graft.streaming.IncrementalStream.embedContaminationGate(
-          stream, spark.read.parquet(benchmark), id, vec, threshold,
-          new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
-      }
-
-    case RobotsFilterCmd(urls, robots, agent, host, path, txt, decisions, join, out) =>
-      // the politeness gate: rules parsed once (RFC 9309 groups), then
-      // either collected into the RobotsDecision plan literal (default —
-      // fastest while the rules fit a task closure) or, with --join true,
-      // kept distributed and joined host-keyed (the mega-host escape for
-      // broad-crawl frontiers); --decisions true writes every URL with
-      // its `allowed` verdict instead of only survivors
-      val rules = graft.operators.Robots.parse(
-        spark.read.parquet(robots), host, txt, agent)
-      val u = spark.read.parquet(urls)
-      val decided =
-        if (join) graft.operators.Robots.isAllowedJoin(u, rules, host, path)
-        else graft.operators.Robots.isAllowed(u, rules, host, path)
-      (if (decisions) decided
-       else decided.filter(org.apache.spark.sql.functions.col("allowed"))
-         .drop("allowed"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case ClusterBalanceCmd(corpus, id, vec, centroids, iters, cap, out) =>
-      // the diversity-balancing stage: train centroids over the corpus
-      // (Lloyd, offline-cadence — this IS the offline pass), assign,
-      // cap per cluster by id; output keeps the cluster audit column
-      val c = spark.read.parquet(corpus)
-      val cents = graft.similarity.Similarity.ivfCentroids(
-        c, id, vec, centroids, iters)
-      graft.operators.Sampling.clusterCap(c, id, vec, cents, cap)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case UnigramTrainCmd(corpus, text, maxLen, keep, rounds, out) =>
-      // the piece table IS the tokenizer artifact: (piece, cnt,
-      // score_milli) — unigram-encode re-reads it; scores are pinned
-      // training-run constants (the bpe-train merge-list contract)
-      val pieces = graft.text.Unigram.unigramTrain(
-        spark.read.parquet(corpus), text, maxLen, keep, rounds)
-      spark.createDataFrame(pieces)
-        .select(org.apache.spark.sql.functions.col("piece"),
-          org.apache.spark.sql.functions.col("cnt"),
-          org.apache.spark.sql.functions.col("scoreMilli").as("score_milli"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case UnigramEncodeCmd(corpus, id, text, piecesDir, out) =>
-      // pieces collect bounded by the training artifact size (keep +
-      // alphabet rows — the persisted vocabulary IS the model)
-      val pieces = spark.read.parquet(piecesDir)
-        .select("piece", "cnt", "score_milli").collect()
-        .map(r => graft.text.Unigram.UnigramPiece(
-          r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      if (pieces.isEmpty)
-        sys.error(s"unigram-encode: empty piece table under $piecesDir — run unigram-train first")
-      spark.read.parquet(corpus)
-        .select(org.apache.spark.sql.functions.col(id),
-          graft.text.Unigram.unigramEncode(
-            org.apache.spark.sql.functions.col(text), pieces).as("pieces"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case PackWindowsCmd(corpus, group, order, text, window, bucketWidth, out) =>
-      // the model-ready artifact: fixed-size token windows in per-group
-      // stream order with document provenance (q66's spans materialized)
-      val bucket = if (bucketWidth > 0)
-        Some(org.apache.spark.sql.functions.expr(s"`$order` div $bucketWidth"))
-      else None
-      graft.text.TextAnalysis.packedWindows(spark.read.parquet(corpus),
-          group, order, text, window.toLong, bucket)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case WordPieceTrainCmd(corpus, text, merges, out) =>
-      // the persisted artifact IS the apply-time vocabulary (one piece
-      // column — WordPiece apply needs no scores or merge order, unlike
-      // BPE's ordered merge list and unigram's scored pieces); vocab
-      // rows are training-run constants (the bpe-train contract)
-      val docs = spark.read.parquet(corpus)
-      val (ms, words) = graft.text.WordPiece.wordPieceTrain(docs, text, merges)
-      import spark.implicits._
-      // vocabulary derives from the trainer's checkpointed word table —
-      // no second corpus scan; release the blocks once collected
-      val vocab = graft.text.WordPiece.vocabulary(words, ms)
-      graft.Checkpoints.release(words)
-      vocab.toDF("piece").write.mode("overwrite").parquet(out)
-      0
-
-    case WordPieceEncodeCmd(corpus, id, text, vocabDir, maxChars, out) =>
-      // vocab collect bounded by the training artifact size (alphabet +
-      // merges rows); the full artifact contract checked here, with the
-      // artifact named — not as the expression's bare require/NPE (the
-      // wordPieceGate validation, mirrored)
-      val vocab = spark.read.parquet(vocabDir)
-        .select("piece").collect().map(_.getString(0)).toSeq
-      if (vocab.isEmpty)
-        sys.error(s"wordpiece-encode: empty vocabulary under $vocabDir — run wordpiece-train first")
-      if (!vocab.forall(p => p != null && p.nonEmpty && p != "##"))
-        sys.error(s"wordpiece-encode: empty/null/bare-## piece rows under $vocabDir — corrupted artifact")
-      if (vocab.distinct.length != vocab.length)
-        sys.error(s"wordpiece-encode: duplicate piece rows under $vocabDir — corrupted artifact")
-      spark.read.parquet(corpus)
-        .select(org.apache.spark.sql.functions.col(id),
-          graft.text.WordPiece.wordPieceEncode(
-            org.apache.spark.sql.functions.col(text), vocab,
-            maxInputChars = maxChars).as("pieces"))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case SnapshotLineIndexCmd(index, maxDf) =>
-      // refresh-cadence materialization of the hot-line set: the
-      // line-count aggregation over the whole accumulation runs once per
-      // refresh here, and line-dedup-gate probes lines_hot as a plain
-      // pre-gated table (the snapshot-overlap-index shape for lines)
-      val store = new ParquetStore(spark, index)
-      val lines = store.read("lines").getOrElse(sys.error(
-        s"snapshot-line-index: no lines table in $index — run ingest-line-index first"))
-      store.writeAtomic(
-        graft.dedup.Dedup.hotLines(lines, maxDf.toLong), "lines_hot")
-      0
-
-    case LineDedupGateCmd(source, index, id, text, dest, table, ck) =>
-      // streaming line cleanup under the PINNED lines_hot snapshot —
-      // hotness is the snapshot's refresh moment, never a single batch's
-      // own counts (a small batch could never cross maxDf)
-      sourceSchema(spark, source, "line-dedup-gate").fold(0) { schema =>
+    Command("serve-line-dedup", "--index <storeDir> --id <col> --out <parquetDir> [--max-df <n>] [--broadcast false] [--tombstones true]") { o =>
+      for {
+        index <- o.req("index")
+        id <- o.req("id")
+        maxDf <- o.optInt("max-df", 1)
+        out <- o.req("out")
+        bc <- o.optBool("broadcast", dflt = true)
+        ts <- o.optBool("tombstones", dflt = false)
+      } yield overwrite(out) { spark =>
+        // batch q179 semantics over the accumulated index: hot lines drop
+        // retroactively at read, every landed doc reassembles with audit
+        // counts. --tombstones true applies the ONLINE takedown gate first
+        // (anti-join the store's tombstone table BEFORE the hotness gate,
+        // so erased docs leave no df residue — the q201 semantics)
         val store = new ParquetStore(spark, index)
-        val hot = store.read("lines_hot").getOrElse(sys.error(
+        val lines = store.read("lines").getOrElse(sys.error(
+          s"serve-line-dedup: no lines table in $index — run ingest-line-index first"))
+        val gated = if (ts)
+          graft.sync.Takedown.withoutTombstones(lines, id, store) else lines
+        graft.dedup.Dedup.lineDedupFromIndex(
+          gated.select(org.apache.spark.sql.functions.col(id),
+            org.apache.spark.sql.functions.col("pos"),
+            org.apache.spark.sql.functions.col("line")),
+          id, maxDf.toLong, bc)
+      }
+    },
+
+    Command("tombstone", "--store <storeDir> --ids <parquet>") { o =>
+      for {
+        storeDir <- o.req("store")
+        ids <- o.req("ids")
+      } yield (spark: SparkSession) => {
+        // the ONLINE takedown record: appends novel ids to the store's
+        // tombstone table without touching index rows or streams; serving
+        // paths gate at read (--tombstones true), the physical purge
+        // defers to the next `takedown`/`compact` maintenance window
+        val added = graft.sync.Takedown.tombstone(
+          new ParquetStore(spark, storeDir), spark.read.parquet(ids))
+        println(s"tombstone: $added new ids recorded")
+        0
+      }
+    },
+
+    Command("snapshot-line-index", "--index <storeDir> [--max-df <n>]") { o =>
+      for {
+        index <- o.req("index")
+        maxDf <- o.optInt("max-df", 1)
+      } yield (spark: SparkSession) => {
+        // refresh-cadence materialization of the hot-line set: the
+        // line-count aggregation over the whole accumulation runs once per
+        // refresh here, and line-dedup-gate probes lines_hot as a plain
+        // pre-gated table (the snapshot-overlap-index shape for lines)
+        val store = new ParquetStore(spark, index)
+        val lines = store.read("lines").getOrElse(sys.error(
+          s"snapshot-line-index: no lines table in $index — run ingest-line-index first"))
+        store.writeAtomic(
+          graft.dedup.Dedup.hotLines(lines, maxDf.toLong), "lines_hot")
+        0
+      }
+    },
+
+    Command("line-dedup-gate", "--source <parquetDir> --index <storeDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        index <- o.req("index")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // streaming line cleanup under the PINNED lines_hot snapshot —
+        // hotness is the snapshot's refresh moment, never a single batch's
+        // own counts (a small batch could never cross maxDf)
+        val hot = new ParquetStore(spark, index).read("lines_hot").getOrElse(sys.error(
           s"line-dedup-gate: no lines_hot snapshot in $index — run snapshot-line-index first"))
-        val stream = spark.readStream.schema(schema).parquet(source)
         graft.streaming.IncrementalStream.lineDedupGate(
           stream, hot, id, text, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case TrainLangIdCmd(corpus, lang, text, k, pinned, out) =>
-      // the profile table IS the language-ID model: (lang, g, r) ranked
-      // trigram rows, languages·k of them, stamped with the trained k —
-      // the missing-trigram penalty EQUALS k, so classification under a
-      // different k silently mis-scores (the params-manifest rule; a
-      // rank-bound check alone would pass any k above the trained one).
-      // The case-map choice (--pinned: explicit-codepoint lowercase for
-      // non-ASCII corpora) is stamped too: classifying under the other
-      // map hashes different trigrams — same rule, same manifest
-      graft.text.LangProfile.trainProfiles(
-          spark.read.parquet(corpus), lang, text, k, pinnedLower = pinned)
-        .withColumn("k", org.apache.spark.sql.functions.lit(k.toLong))
-        .withColumn("pinned", org.apache.spark.sql.functions.lit(pinned))
-        .write.mode("overwrite").parquet(out)
-      0
+    Command("build-vocab", "--corpus <parquet> --text <col> --top <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        text <- o.req("text")
+        top <- o.posInt("top")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // (token, n, token_id) artifact — ids are training-run constants;
+        // encode-ids re-reads this table so build-once/encode-many holds
+        graft.text.Vocab.build(spark.read.parquet(corpus), text, top)
+      }
+    },
 
-    case LangIdClassifyCmd(corpus, id, text, profilesDir, kOpt, out) =>
-      // k comes from the ARTIFACT; an explicit --k must match it exactly
-      val raw = spark.read.parquet(profilesDir)
-      if (raw.isEmpty)
-        sys.error(s"langid-classify: empty profile table under $profilesDir — run train-langid first")
-      val ks = raw.select("k").distinct().collect().map(_.getLong(0))
-      if (ks.length != 1)
-        sys.error(s"langid-classify: profiles under $profilesDir carry " +
-          s"${ks.length} distinct k stamps — corrupted or mixed artifact")
-      val trainedK = ks.head.toInt
-      if (kOpt != 0 && kOpt != trainedK)
-        sys.error(s"langid-classify: --k $kOpt does not match the artifact's " +
-          s"trained k = $trainedK under $profilesDir — the missing-trigram " +
-          "penalty equals k, so a different k silently mis-scores")
-      // the case map comes from the ARTIFACT's stamp too (pre-stamp
-      // artifacts classify under the engine-native map they trained with)
-      val pinned =
-        if (!raw.columns.contains("pinned")) false
-        else {
-          val ps = raw.select("pinned").distinct().collect().map(_.getBoolean(0))
-          if (ps.length != 1)
-            sys.error(s"langid-classify: profiles under $profilesDir carry " +
-              s"${ps.length} distinct pinned stamps — corrupted or mixed artifact")
-          ps.head
+    Command("bpe-train", "--corpus <parquet> --text <col> --merges <n> [--byte-level true] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        text <- o.req("text")
+        n <- o.posInt("merges")
+        byteLevel <- o.optBool("byte-level", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the merge list IS the tokenizer artifact: (step, left, right,
+        // cnt) with step the replay order — bpe-encode re-reads it, the
+        // same build-once/apply-many contract as the vocab table.
+        // --byte-level true trains over the GPT-2 byte-unit alphabet
+        // (nothing is ever OOV — the production default; decode pieces
+        // with ByteUnits.unitsToText). The training REGIME travels as a
+        // byte_level column on every row: char-level ASCII merges would
+        // still "apply" to byte units (printable bytes self-map), so a
+        // regime mismatch at encode time is plausible-looking garbage —
+        // exactly the silent-mismatch class the span-index params
+        // manifest fails closed on
+        val (merges, _) =
+          if (byteLevel) graft.text.TextAnalysis.byteBpeTrain(
+            spark.read.parquet(corpus), text, n)
+          else graft.text.TextAnalysis.bpeTrain(
+            spark.read.parquet(corpus), text, n)
+        spark.createDataFrame(merges)
+          .withColumn("byte_level", org.apache.spark.sql.functions.lit(byteLevel))
+      }
+    },
+
+    Command("bpe-encode", "--corpus <parquet> --id <col> --text <col> --merges <parquetDir> [--byte-level true] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        mergesDir <- o.req("merges")
+        byteLevel <- o.optBool("byte-level", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // merges collect bounded by the training artifact size (the merge
+        // list is the tokenizer, ~30k rows at production scale); replay
+        // order restores from the persisted step column
+        val mergesDf = spark.read.parquet(mergesDir)
+        checkBpeRegime(mergesDf, o.cmd, mergesDir, byteLevel)
+        val merges = mergesDf
+          .select("step", "left", "right", "cnt").collect()
+          .map(r => graft.text.TextAnalysis.BpeMerge(
+            r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+          .toSeq
+        if (merges.isEmpty)
+          sys.error(s"bpe-encode: empty merge table under $mergesDir — run bpe-train first")
+        val enc = if (byteLevel)
+          graft.text.TextAnalysis.byteBpeEncode(
+            org.apache.spark.sql.functions.col(text), merges)
+        else graft.text.TextAnalysis.bpeEncode(
+          org.apache.spark.sql.functions.col(text), merges)
+        spark.read.parquet(corpus)
+          .select(org.apache.spark.sql.functions.col(id), enc.as("pieces"))
+      }
+    },
+
+    Command("bpe-gate", "--source <parquetDir> --merges <parquetDir> --id <col> --text <col> [--byte-level true] --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        mergesDir <- o.req("merges")
+        id <- o.req("id")
+        text <- o.req("text")
+        byteLevel <- o.optBool("byte-level", dflt = false)
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield (spark: SparkSession) => {
+        // streaming merge-list replay under the persisted training
+        // artifact — pinned (collected + validated) at query start;
+        // re-encode = new table + checkpoint pair (the encode-gate
+        // contract for the BPE family). The regime is checked as
+        // bpe-encode checks it, before an empty source is drained
+        val mergesDf = spark.read.parquet(mergesDir)
+        checkBpeRegime(mergesDf, o.cmd, mergesDir, byteLevel)
+        drain(o.cmd, source) { (spark, stream) =>
+          graft.streaming.IncrementalStream.bpeGate(
+            stream, mergesDf, id, text, new ParquetStore(spark, dest), table,
+            ck, byteLevel = byteLevel)
+        }(spark)
+      }
+    },
+
+    Command("media-neardup", "--corpus <parquet(doc_id,media)> --modality image|audio|video [--max-hamming <n>] [--threshold-milli <n>] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        modality <- o.modality
+        maxH <- o.optInt("max-hamming", 3)
+        th <- o.optInt("threshold-milli", 15000)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // batch banded-Hamming mining over (doc_id, media) payloads —
+        // decode and the degenerate-hash filter live inside the modality
+        // miner (imageNearDups / audioNearDups / videoNearDups;
+        // --threshold-milli is the video scene-cut scale and must match
+        // every probe of the same corpus, the band-family contract)
+        val media = spark.read.parquet(corpus)
+        modality match {
+          case "image" => graft.dedup.Dedup.imageNearDups(media, maxH)
+          case "audio" => graft.dedup.Dedup.audioNearDups(media, maxH)
+          case _ => graft.dedup.Dedup.videoNearDups(media, th.toLong, maxH)
         }
-      graft.text.LangProfile.classify(
+      }
+    },
+
+    Command("scene-cuts", "--corpus <parquet(doc_id,media)> --out <parquetDir> [--threshold-milli <n>] [--keyframes true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        th <- o.optInt("threshold-milli", 100000)
+        kf = o.get("keyframes").contains("true")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // decode -> luminance-delta shot detection; --keyframes true emits
+        // one frame per scene (first frame + each cut, scene-numbered)
+        // instead of the raw cut list
+        implicit val session: SparkSession = spark
+        val frames = graft.multimodal.Multimodal
+          .decodeFramesOf(spark.read.parquet(corpus)).toDF()
+        if (kf) graft.multimodal.Multimodal.keyframes(frames, th.toLong)
+        else graft.multimodal.Multimodal.sceneCuts(frames, th.toLong)
+      }
+    },
+
+    Command("line-dedup-within", "--corpus <parquet> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the in-doc half of line cleanup: first occurrence of each line
+        // kept in order, per document (cross-doc is line-dedup)
+        graft.text.Scrub.dedupLinesWithin(spark.read.parquet(corpus), text)
+          .select(org.apache.spark.sql.functions.col(id),
+            org.apache.spark.sql.functions.col("clean"),
+            org.apache.spark.sql.functions.col("n_lines"),
+            org.apache.spark.sql.functions.col("n_removed"))
+      }
+    },
+
+    Command("sentences", "--corpus <parquet> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // sentence-level artifact: (id, sent_idx, sentence, n_chars) —
+        // the unit for sentence dedup / pair mining / packing boundaries
+        graft.text.TextAnalysis.sentences(spark.read.parquet(corpus), id, text)
+      }
+    },
+
+    Command("ingest-media-dedup", "--source <parquetDir(doc_id,media)> --modality image|audio|video [--max-hamming <n>] [--threshold-milli <n>] --dest <storeDir> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        modality <- o.modality
+        maxH <- o.optInt("max-hamming", 3)
+        th <- o.optInt("threshold-milli", 15000)
+        dest <- o.req("dest")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // continuous fingerprint dedup ingest: probe the accumulated
+        // index, pair within the batch, then append signatures — the
+        // accumulated dup_pairs table equals the batch miner over
+        // everything ingested (the packedDupIngest contract)
+        implicit val s: SparkSession = spark
+        val c = org.apache.spark.sql.functions.col _
+        val (fp, sigCol): (DataFrame => DataFrame, String) =
+          modality match {
+            case "image" =>
+              ((b: DataFrame) =>
+                graft.multimodal.Multimodal.dhashImages(b).toDF()
+                  .filter(c("phash") =!= 0L && c("phash") =!= -1L), "phash")
+            case "audio" =>
+              ((b: DataFrame) =>
+                graft.multimodal.Multimodal.afingerprintAudio(b).toDF()
+                  .filter(c("ahash") =!= 0L && c("ahash") =!= -1L), "ahash")
+            case _ =>
+              ((b: DataFrame) =>
+                graft.multimodal.Multimodal.videoSignature(
+                    graft.multimodal.Multimodal.decodeFramesOf(b).toDF(), th.toLong)
+                  .filter(c("vsig") =!= 0L && c("vsig") =!= -1L), "vsig")
+          }
+        graft.streaming.IncrementalStream.packedDupIngest(
+          stream, fp, "doc_id", sigCol, maxH,
+          new ParquetStore(spark, dest), ck)
+      }
+    },
+
+    Command("serve-media-pairs", "--index <storeDir> [--tombstones true] --out <parquetDir>") { o =>
+      for {
+        index <- o.req("index")
+        ts <- o.optBool("tombstones", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the accumulated dup-pair log, served: --tombstones true erases
+        // every pair touching a tombstoned id on EITHER side (a pair is
+        // evidence about both documents — the q247 semantics) before the
+        // direction-normalized distinct
+        val store = new ParquetStore(spark, index)
+        val pairs = store.read("dup_pairs").getOrElse(sys.error(
+          s"serve-media-pairs: no dup_pairs table in $index — run ingest-media-dedup first"))
+        val c = org.apache.spark.sql.functions.col _
+        val base = pairs.select(c("id_a"), c("id_b"))
+        val gated = if (ts)
+          graft.sync.Takedown.withoutTombstonesAny(base, Seq("id_a", "id_b"), store)
+        else base
+        gated.select(
+            org.apache.spark.sql.functions.least(c("id_a"), c("id_b")).as("id_a"),
+            org.apache.spark.sql.functions.greatest(c("id_a"), c("id_b")).as("id_b"))
+          .distinct()
+      }
+    },
+
+    Command("profile", "--corpus <parquet> --out <parquetDir> [--approx true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        out <- o.req("out")
+        // --approx true: HLL distinct counts, no Expand — the wide-table
+        // / 100-TB mode (documented ~2% error)
+        approx <- o.optBool("approx", dflt = false)
+      } yield overwrite(out) { spark =>
+        // the profile-then-pin workflow: run this against an unfamiliar
+        // source, read the report, encode what you learned as `validate`
+        // expectations
+        graft.operators.Profile.profile(spark.read.parquet(corpus), approx)
+      }
+    },
+
+    Command("validate", "--corpus <parquet> --out <parquetDir> [--not-null c1,c2] [--range col:min:max,...] [--unique k1,k2[;k3]] [--ref <fk> --ref-table <parquet> --ref-key <col>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        out <- o.req("out")
+        notNull = o.get("not-null").map(_.split(',').toSeq).getOrElse(Seq.empty)
+        ranges <- o.get("range").map(_.split(',').toSeq).getOrElse(Seq.empty)
+          .foldLeft(Right(Seq.empty): Either[String, Seq[(String, Long, Long)]]) {
+            case (acc, spec) => acc.flatMap { rs =>
+              spec.split(':') match {
+                case Array(c, lo, hi) =>
+                  (lo.toLongOption, hi.toLongOption) match {
+                    case (Some(l), Some(h)) => Right(rs :+ ((c, l, h)))
+                    case _ => o.fail(s"--range bounds must be integers in '$spec'")
+                  }
+                case _ => o.fail(s"--range expects col:min:max, got '$spec'")
+              }
+            }
+          }
+        uniques = o.get("unique").map(_.split(';').toSeq.map(_.split(',').toSeq))
+          .getOrElse(Seq.empty)
+        ref <- (o.get("ref"), o.get("ref-table"), o.get("ref-key")) match {
+          case (Some(fk), Some(dir), Some(key)) => Right(Some((fk, dir, key)))
+          case (None, None, None) => Right(None)
+          case _ => o.fail("--ref, --ref-table, --ref-key must be given together")
+        }
+        _ <- if (notNull.nonEmpty || ranges.nonEmpty || uniques.nonEmpty || ref.nonEmpty)
+          Right(()) else o.fail("no checks given (--not-null / --range / --unique / --ref)")
+      } yield overwrite(out) { spark =>
+        // the post-sync validation report: row checks fold into one pass,
+        // uniqueness/referential each one aggregate/anti-join; the written
+        // report is the (check_name, n_rows, n_violations, pass) artifact
+        // a landing pipeline alarms on
+        val df = spark.read.parquet(corpus)
+        val c = org.apache.spark.sql.functions.col _
+        val rowChecks =
+          notNull.map(n => s"${n}_not_null" -> c(n).isNotNull) ++
+            ranges.map { case (n, lo, hi) =>
+              s"${n}_range" -> (c(n) >= lo && c(n) <= hi) }
+        val reports =
+          (if (rowChecks.nonEmpty)
+            Seq(graft.operators.Expectations.rowChecks(df, rowChecks))
+          else Seq.empty) ++
+            uniques.map(keys => graft.operators.Expectations.uniqueCheck(
+              df, keys.mkString("_", "_", "_unique").stripPrefix("_"), keys)) ++
+            ref.toSeq.map { case (fk, dir, key) =>
+              graft.operators.Expectations.refCheck(df, s"${fk}_in_ref", fk,
+                spark.read.parquet(dir), key)
+            }
+        graft.operators.Expectations.all(reports: _*)
+      }
+    },
+
+    Command("keywords", "--corpus <parquet> --text <col> --iters <n> --k <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        text <- o.req("text")
+        iters <- o.posInt("iters")
+        k <- o.posInt("k")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // TextRank keyword artifact: (node, pr_micro, rank)
+        graft.text.TextRank.keywords(spark.read.parquet(corpus), text, iters, k)
+      }
+    },
+
+    Command("gopher-filter", "--corpus <parquet> --id <col> --text <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the full heuristic battery + the compression signal in ONE
+        // narrow pass: per-rule counts AND flags (curation audits kill
+        // rates), keep, and the deflate ratio — the cheap first filter
+        graft.text.Gopher.quality(spark.read.parquet(corpus), id, text,
+          "compression_milli" -> graft.text.Gopher.compressionRatioMilli(
+            org.apache.spark.sql.functions.col(text)))
+      }
+    },
+
+    Command("gopher-gate", "--source <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        graft.streaming.IncrementalStream.gopherGate(
+          stream, id, text, new ParquetStore(spark, dest), table, ck)
+      }
+    },
+
+    Command("unigram-train", "--corpus <parquet> --text <col> --max-piece-len <n> --keep <n> --rounds <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        text <- o.req("text")
+        maxLen <- o.posInt("max-piece-len")
+        keep <- o.posInt("keep")
+        rounds <- o.posInt("rounds")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the piece table IS the tokenizer artifact: (piece, cnt,
+        // score_milli) — unigram-encode re-reads it; scores are pinned
+        // training-run constants (the bpe-train merge-list contract)
+        val pieces = graft.text.Unigram.unigramTrain(
+          spark.read.parquet(corpus), text, maxLen, keep, rounds)
+        spark.createDataFrame(pieces)
+          .select(org.apache.spark.sql.functions.col("piece"),
+            org.apache.spark.sql.functions.col("cnt"),
+            org.apache.spark.sql.functions.col("scoreMilli").as("score_milli"))
+      }
+    },
+
+    Command("unigram-encode", "--corpus <parquet> --id <col> --text <col> --pieces <parquetDir> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        piecesDir <- o.req("pieces")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // pieces collect bounded by the training artifact size (keep +
+        // alphabet rows — the persisted vocabulary IS the model)
+        val pieces = spark.read.parquet(piecesDir)
+          .select("piece", "cnt", "score_milli").collect()
+          .map(r => graft.text.Unigram.UnigramPiece(
+            r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+        if (pieces.isEmpty)
+          sys.error(s"unigram-encode: empty piece table under $piecesDir — run unigram-train first")
+        spark.read.parquet(corpus)
+          .select(org.apache.spark.sql.functions.col(id),
+            graft.text.Unigram.unigramEncode(
+              org.apache.spark.sql.functions.col(text), pieces).as("pieces"))
+      }
+    },
+
+    Command("pack-windows", "--corpus <parquet> --group c1[,c2] --order <col> --text <col> --window <n> [--bucket-width <n>] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        group <- o.req("group").map(_.split(',').toSeq)
+        order <- o.req("order")
+        text <- o.req("text")
+        window <- o.posInt("window")
+        // 0 = plain per-group window (explicit or defaulted); N > 0 =
+        // bucket-decomposed prefix sum keyed (group, order div N) —
+        // required at scale when groups are few and huge (sources),
+        // needs a NUMERIC order column
+        bucketWidth <- o.optIntZero("bucket-width", 0)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the model-ready artifact: fixed-size token windows in per-group
+        // stream order with document provenance (q66's spans materialized)
+        val bucket = if (bucketWidth > 0)
+          Some(org.apache.spark.sql.functions.expr(s"`$order` div $bucketWidth"))
+        else None
+        graft.text.TextAnalysis.packedWindows(spark.read.parquet(corpus),
+          group, order, text, window.toLong, bucket)
+      }
+    },
+
+    Command("train-langid", "--corpus <parquet> --lang <col> --text <col> --out <parquetDir> [--k <n>] [--pinned true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        lang <- o.req("lang")
+        text <- o.req("text")
+        k <- o.optInt("k", 40)
+        pinned <- o.optBool("pinned", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the profile table IS the language-ID model: (lang, g, r) ranked
+        // trigram rows, languages·k of them, stamped with the trained k —
+        // the missing-trigram penalty EQUALS k, so classification under a
+        // different k silently mis-scores (the params-manifest rule; a
+        // rank-bound check alone would pass any k above the trained one).
+        // The case-map choice (--pinned: explicit-codepoint lowercase for
+        // non-ASCII corpora) is stamped too: classifying under the other
+        // map hashes different trigrams — same rule, same manifest
+        graft.text.LangProfile.trainProfiles(
+            spark.read.parquet(corpus), lang, text, k, pinnedLower = pinned)
+          .withColumn("k", org.apache.spark.sql.functions.lit(k.toLong))
+          .withColumn("pinned", org.apache.spark.sql.functions.lit(pinned))
+      }
+    },
+
+    Command("langid-classify", "--corpus <parquet> --id <col> --text <col> --profiles <parquetDir> --out <parquetDir> [--k <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        profilesDir <- o.req("profiles")
+        // 0 = "take k from the artifact"; an explicit --k must match it
+        kOpt <- o.optInt("k", 0)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // k comes from the ARTIFACT; an explicit --k must match it exactly
+        val raw = spark.read.parquet(profilesDir)
+        if (raw.isEmpty)
+          sys.error(s"langid-classify: empty profile table under $profilesDir — run train-langid first")
+        val ks = raw.select("k").distinct().collect().map(_.getLong(0))
+        if (ks.length != 1)
+          sys.error(s"langid-classify: profiles under $profilesDir carry " +
+            s"${ks.length} distinct k stamps — corrupted or mixed artifact")
+        val trainedK = ks.head.toInt
+        if (kOpt != 0 && kOpt != trainedK)
+          sys.error(s"langid-classify: --k $kOpt does not match the artifact's " +
+            s"trained k = $trainedK under $profilesDir — the missing-trigram " +
+            "penalty equals k, so a different k silently mis-scores")
+        // the case map comes from the ARTIFACT's stamp too (pre-stamp
+        // artifacts classify under the engine-native map they trained with)
+        val pinned =
+          if (!raw.columns.contains("pinned")) false
+          else {
+            val ps = raw.select("pinned").distinct().collect().map(_.getBoolean(0))
+            if (ps.length != 1)
+              sys.error(s"langid-classify: profiles under $profilesDir carry " +
+                s"${ps.length} distinct pinned stamps — corrupted or mixed artifact")
+            ps.head
+          }
+        graft.text.LangProfile.classify(
           spark.read.parquet(corpus), id, text,
           raw.select("lang", "g", "r"), trainedK, pinnedLower = pinned)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case WordPieceGateCmd(source, vocabDir, id, text, dest, table, ck, maxChars) =>
-      // streaming greedy segmentation under the persisted vocabulary —
-      // the artifact is pinned (collected + validated) at query start;
-      // re-tokenize = new table + checkpoint pair (the encode-gate
-      // contract for the WordPiece family)
-      sourceSchema(spark, source, "wordpiece-gate").fold(0) { schema =>
-        val stream = spark.readStream.schema(schema).parquet(source)
+    Command("wordpiece-train", "--corpus <parquet> --text <col> --merges <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        text <- o.req("text")
+        merges <- o.posInt("merges")
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // the persisted artifact IS the apply-time vocabulary (one piece
+        // column — WordPiece apply needs no scores or merge order, unlike
+        // BPE's ordered merge list and unigram's scored pieces); vocab
+        // rows are training-run constants (the bpe-train contract)
+        val docs = spark.read.parquet(corpus)
+        val (ms, words) = graft.text.WordPiece.wordPieceTrain(docs, text, merges)
+        import spark.implicits._
+        // vocabulary derives from the trainer's checkpointed word table —
+        // no second corpus scan; release the blocks once collected
+        val vocab = graft.text.WordPiece.vocabulary(words, ms)
+        graft.Checkpoints.release(words)
+        vocab.toDF("piece").write.mode("overwrite").parquet(out)
+        0
+      }
+    },
+
+    Command("wordpiece-encode", "--corpus <parquet> --id <col> --text <col> --vocab <parquetDir> --out <parquetDir> [--max-chars <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        vocabDir <- o.req("vocab")
+        maxChars <- o.optInt("max-chars", graft.text.WordPiece.DefaultMaxInputChars)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // vocab collect bounded by the training artifact size (alphabet +
+        // merges rows); the full artifact contract checked here, with the
+        // artifact named — not as the expression's bare require/NPE (the
+        // wordPieceGate validation, mirrored)
+        val vocab = spark.read.parquet(vocabDir)
+          .select("piece").collect().map(_.getString(0)).toSeq
+        if (vocab.isEmpty)
+          sys.error(s"wordpiece-encode: empty vocabulary under $vocabDir — run wordpiece-train first")
+        if (!vocab.forall(p => p != null && p.nonEmpty && p != "##"))
+          sys.error(s"wordpiece-encode: empty/null/bare-## piece rows under $vocabDir — corrupted artifact")
+        if (vocab.distinct.length != vocab.length)
+          sys.error(s"wordpiece-encode: duplicate piece rows under $vocabDir — corrupted artifact")
+        spark.read.parquet(corpus)
+          .select(org.apache.spark.sql.functions.col(id),
+            graft.text.WordPiece.wordPieceEncode(
+              org.apache.spark.sql.functions.col(text), vocab,
+              maxInputChars = maxChars).as("pieces"))
+      }
+    },
+
+    Command("wordpiece-gate", "--source <parquetDir> --vocab <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--max-chars <n>]") { o =>
+      for {
+        source <- o.req("source")
+        vocabDir <- o.req("vocab")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+        maxChars <- o.optInt("max-chars", graft.text.WordPiece.DefaultMaxInputChars)
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // streaming greedy segmentation under the persisted vocabulary —
+        // the artifact is pinned (collected + validated) at query start;
+        // re-tokenize = new table + checkpoint pair (the encode-gate
+        // contract for the WordPiece family)
         graft.streaming.IncrementalStream.wordPieceGate(
           stream, spark.read.parquet(vocabDir), id, text,
           new ParquetStore(spark, dest), table, ck, maxInputChars = maxChars)
-          .awaitTermination()
+      }
+    },
+
+    Command("train-classifier", "--corpus <parquet> --id <col> --text <col> --label <col(+1/-1)> --dims <n> --rounds <n> --out <parquetDir> [--join true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        label <- o.req("label")
+        dims <- o.posInt("dims")
+        rounds <- o.posInt("rounds")
+        join <- o.optBool("join", dflt = false)
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // integer hinge descent (lr 1000 micros, margin 1e6 — the graded
+        // q167 constants); the weight table (f, w_micros; bias at f = -1)
+        // is the filter artifact score-docs re-reads. --join true runs the
+        // fully-distributed trainer (weights never leave the cluster —
+        // bit-identical output, the path for large --dims; q189)
+        val docs = spark.read.parquet(corpus)
+        val y = org.apache.spark.sql.functions.col(label)
+        val bad = docs.filter(y.isNull || (y =!= 1L && y =!= -1L)).count()
+        if (bad > 0)
+          sys.error(s"train-classifier: --label column '$label' must hold +1/-1, $bad rows do not")
+        val feats = graft.text.Classifier.hashedTokenFeatures(docs, id, text, dims)
+        val df = graft.text.Classifier.docFeatures(
+          feats, docs.select(org.apache.spark.sql.functions.col(id), y.as("y")), id)
+        if (join) {
+          val w = graft.text.Classifier.trainJoin(df, id, dims, rounds,
+            lrMicros = 1000L, marginMicros = 1000000L)
+          w.write.mode("overwrite").parquet(out)
+          graft.Checkpoints.release(w)
+        } else {
+          val model = graft.text.Classifier.train(df, id, dims, rounds,
+            lrMicros = 1000L, marginMicros = 1000000L)
+          graft.text.Classifier.weightsTable(spark, model)
+            .write.mode("overwrite").parquet(out)
+        }
         0
       }
+    },
 
-    case TrainClassifierCmd(corpus, id, text, label, dims, rounds, join, out) =>
-      // integer hinge descent (lr 1000 micros, margin 1e6 — the graded
-      // q167 constants); the weight table (f, w_micros; bias at f = -1)
-      // is the filter artifact score-docs re-reads. --join true runs the
-      // fully-distributed trainer (weights never leave the cluster —
-      // bit-identical output, the path for large --dims; q189)
-      val docs = spark.read.parquet(corpus)
-      val y = org.apache.spark.sql.functions.col(label)
-      val bad = docs.filter(y.isNull || (y =!= 1L && y =!= -1L)).count()
-      if (bad > 0)
-        sys.error(s"train-classifier: --label column '$label' must hold +1/-1, $bad rows do not")
-      val feats = graft.text.Classifier.hashedTokenFeatures(docs, id, text, dims)
-      val df = graft.text.Classifier.docFeatures(
-        feats, docs.select(org.apache.spark.sql.functions.col(id), y.as("y")), id)
-      if (join) {
-        val w = graft.text.Classifier.trainJoin(df, id, dims, rounds,
-          lrMicros = 1000L, marginMicros = 1000000L)
-        w.write.mode("overwrite").parquet(out)
-        graft.Checkpoints.release(w)
-      } else {
-        val model = graft.text.Classifier.train(df, id, dims, rounds,
-          lrMicros = 1000L, marginMicros = 1000000L)
-        graft.text.Classifier.weightsTable(spark, model)
-          .write.mode("overwrite").parquet(out)
-      }
-      0
-
-    case ScoreDocsCmd(corpus, id, text, weightsDir, join, out) =>
-      val docs = spark.read.parquet(corpus)
-      if (join) {
-        // --join true: the LARGE-DIMS path — the weight table never
-        // reaches the driver. Validation stays distributed (bias row,
-        // duplicates, contiguity — the collectModel checks as bounded
-        // aggregates) and scoring carries the weights as a broadcast
-        // join (q189); dims comes from the artifact itself
-        import org.apache.spark.sql.functions.{col, countDistinct, count, max, min, lit}
-        val w = spark.read.parquet(weightsDir)
-        val chk = w.agg(count(lit(1)), countDistinct(col("f")), min(col("f")),
-          max(col("f"))).head()
-        val rows = chk.getLong(0)
-        if (rows == 0) sys.error(s"score-docs: empty weight table under $weightsDir")
-        val (distinct, fMin, fMax) = (chk.getLong(1), chk.getLong(2), chk.getLong(3))
-        if (rows != distinct)
-          sys.error("score-docs: duplicate bucket rows in the weight table")
-        if (fMin != -1L || fMax != rows - 2L)
-          sys.error(s"score-docs: weight table must cover f = -1..${rows - 2} " +
-            s"contiguously, got [$fMin, $fMax] over $rows rows")
-        val dims = (rows - 1).toInt
-        val feats = graft.text.Classifier.hashedTokenFeatures(docs, id, text, dims)
-        val ids = docs.select(col(id), lit(0L).as("y"))
-        graft.text.Classifier.scoreJoin(
+    Command("score-docs", "--corpus <parquet> --id <col> --text <col> --weights <parquetDir> --out <parquetDir> [--join true]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        weightsDir <- o.req("weights")
+        join <- o.optBool("join", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        val docs = spark.read.parquet(corpus)
+        if (join) {
+          // --join true: the LARGE-DIMS path — the weight table never
+          // reaches the driver. Validation stays distributed (bias row,
+          // duplicates, contiguity — the collectModel checks as bounded
+          // aggregates) and scoring carries the weights as a broadcast
+          // join (q189); dims comes from the artifact itself
+          import org.apache.spark.sql.functions.{col, countDistinct, count, max, min, lit}
+          val w = spark.read.parquet(weightsDir)
+          val chk = w.agg(count(lit(1)), countDistinct(col("f")), min(col("f")),
+            max(col("f"))).head()
+          val rows = chk.getLong(0)
+          if (rows == 0) sys.error(s"score-docs: empty weight table under $weightsDir")
+          val (distinct, fMin, fMax) = (chk.getLong(1), chk.getLong(2), chk.getLong(3))
+          if (rows != distinct)
+            sys.error("score-docs: duplicate bucket rows in the weight table")
+          if (fMin != -1L || fMax != rows - 2L)
+            sys.error(s"score-docs: weight table must cover f = -1..${rows - 2} " +
+              s"contiguously, got [$fMin, $fMax] over $rows rows")
+          val dims = (rows - 1).toInt
+          val feats = graft.text.Classifier.hashedTokenFeatures(docs, id, text, dims)
+          val ids = docs.select(col(id), lit(0L).as("y"))
+          graft.text.Classifier.scoreJoin(
             graft.text.Classifier.docFeatures(feats, ids, id).drop("y"), id, w)
-          .write.mode("overwrite").parquet(out)
-      } else {
-        // model collect bounded by dims + 1 rows (collectModel validates
-        // bias row, duplicates, contiguity — scoring cannot hash into a
-        // different space than training); scoring itself is the ONE-PASS
-        // text fold: no feature table, no join, no shuffle
-        val model = graft.text.Classifier.collectModel(
-          spark.read.parquet(weightsDir))
-        graft.text.Classifier.scoreText(docs, id, text, model)
-          .write.mode("overwrite").parquet(out)
+        } else {
+          // model collect bounded by dims + 1 rows (collectModel validates
+          // bias row, duplicates, contiguity — scoring cannot hash into a
+          // different space than training); scoring itself is the ONE-PASS
+          // text fold: no feature table, no join, no shuffle
+          val model = graft.text.Classifier.collectModel(
+            spark.read.parquet(weightsDir))
+          graft.text.Classifier.scoreText(docs, id, text, model)
+        }
       }
-      0
+    },
 
-    case WeightedSampleCmd(corpus, keys, id, weight, k, seed, out) =>
-      // deterministic A-ES pick: the artifact is a pure function of
-      // (seed, id, weight) — re-runs reproduce it bit-for-bit
-      graft.operators.Sampling.weightedSample(spark.read.parquet(corpus),
+    Command("weighted-sample", "--corpus <parquet> --keys c1[,c2] --id <col> --weight <col> --k <n> --out <parquetDir> [--seed <s>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        keys <- o.req("keys").map(_.split(',').toSeq)
+        id <- o.req("id")
+        weight <- o.req("weight")
+        k <- o.posInt("k")
+        out <- o.req("out")
+        seed = o.get("seed").getOrElse("graft")
+      } yield overwrite(out) { spark =>
+        // deterministic A-ES pick: the artifact is a pure function of
+        // (seed, id, weight) — re-runs reproduce it bit-for-bit
+        graft.operators.Sampling.weightedSample(spark.read.parquet(corpus),
           keys, id, org.apache.spark.sql.functions.col(weight), k, seed)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case BudgetMixtureCmd(corpus, source, order, tokens, weights, budget,
-                          defaultWeight, bucketWidth, out) =>
-      // the water-filling mixture assembly: allocation is driver integer
-      // arithmetic on #sources rows, selection a greedy prefix per
-      // source; --bucket-width N routes the per-source running sum
-      // through the keyedRunningSum bucket decomposition (REQUIRED at
-      // scale — sources are few and huge; needs a NUMERIC order column)
-      val bucket = if (bucketWidth > 0)
-        Some(org.apache.spark.sql.functions.expr(s"`$order` div $bucketWidth"))
-      else None
-      graft.operators.Sampling.budgetMixture(spark.read.parquet(corpus),
+    Command("budget-mixture", "--corpus <parquet> --source <col> --order <col> --tokens <col> --weights src=w[,src=w] --budget <n> --out <parquetDir> [--default-weight <n>] [--bucket-width <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        source <- o.req("source")
+        order <- o.req("order")
+        tokens <- o.req("tokens")
+        // src=weight[,src=weight...]: integer target weights (the
+        // water-filling allocation is exact integer arithmetic)
+        weights <- o.req("weights").flatMap { spec =>
+          val parts = spec.split(',').toSeq.map(_.split('=').toSeq)
+          if (parts.forall(p => p.length == 2 && p(1).toLongOption.exists(_ >= 0)))
+            Right(parts.map(p => p(0) -> p(1).toLong).toMap)
+          else
+            o.fail(s"--weights must be src=w[,src=w...] with w >= 0, got $spec")
+        }
+        budget <- o.reqAs("budget", "a positive long")(_.toLongOption.filter(_ > 0))
+        defaultWeight <- o.opt("default-weight", ">= 0")(
+          _.toLongOption.filter(_ >= 0)).map(_.getOrElse(0L))
+        bucketWidth <- o.optIntZero("bucket-width", 0)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the water-filling mixture assembly: allocation is driver integer
+        // arithmetic on #sources rows, selection a greedy prefix per
+        // source; --bucket-width N routes the per-source running sum
+        // through the keyedRunningSum bucket decomposition (REQUIRED at
+        // scale — sources are few and huge; needs a NUMERIC order column)
+        val bucket = if (bucketWidth > 0)
+          Some(org.apache.spark.sql.functions.expr(s"`$order` div $bucketWidth"))
+        else None
+        graft.operators.Sampling.budgetMixture(spark.read.parquet(corpus),
           source, order, tokens, weights, budget, defaultWeight, bucket)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case TokenShardsCmd(corpus, tokens, order, bucketWidth, n, out) =>
-      // token-mass-balanced training shards; the global cumsum always
-      // runs bucket-decomposed (--bucket-width is REQUIRED: a global
-      // order has no safe single-partition fallback at any scale)
-      graft.operators.Sampling.tokenBalancedShards(spark.read.parquet(corpus),
+    Command("token-shards", "--corpus <parquet> --tokens <col> --order <col> --bucket-width <n> --shards <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        tokens <- o.req("tokens")
+        order <- o.req("order")
+        bucketWidth <- o.posInt("bucket-width")
+        n <- o.posInt("shards")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // token-mass-balanced training shards; the global cumsum always
+        // runs bucket-decomposed (--bucket-width is REQUIRED: a global
+        // order has no safe single-partition fallback at any scale)
+        graft.operators.Sampling.tokenBalancedShards(spark.read.parquet(corpus),
           tokens,
           org.apache.spark.sql.functions.expr(s"`$order` div $bucketWidth"),
           Seq(org.apache.spark.sql.functions.col(order)), n)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case BuildVocab(corpus, text, top, out) =>
-      // (token, n, token_id) artifact — ids are training-run constants;
-      // encode-ids re-reads this table so build-once/encode-many holds
-      graft.text.Vocab.build(spark.read.parquet(corpus), text, top)
-        .write.mode("overwrite").parquet(out)
-      0
+    Command("curriculum-order", "--corpus <parquet> --id <col> --priority <col> --rows-per-shard <n> --out <parquetDir> [--seed <s>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        priority <- o.req("priority")
+        rps <- o.posInt("rows-per-shard")
+        seed = o.get("seed").getOrElse("graft")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the training-order artifact: priority-major, md5-shuffled within
+        // tier, (global_rank, shard, pos) exact at any size — no global sort
+        graft.operators.Sampling.curriculumShuffle(
+          spark.read.parquet(corpus), id, priority, seed, rps.toLong)
+      }
+    },
 
-    case EncodeGateCmd(source, vocab, id, text, dest, table, ck, join) =>
-      sourceSchema(spark, source, "encode-gate").fold(0) { schema =>
+    Command("encode-ids", "--corpus <parquet> --id <col> --text <col> --vocab <parquetDir> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        vocab <- o.req("vocab")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        graft.text.Vocab.encode(spark.read.parquet(corpus), id, text,
+          spark.read.parquet(vocab))
+      }
+    },
+
+    Command("encode-gate", "--source <parquetDir> --vocab <parquetDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--join true]") { o =>
+      for {
+        source <- o.req("source")
+        vocab <- o.req("vocab")
+        id <- o.req("id")
+        text <- o.req("text")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+        // --join true: the large-vocabulary broadcast-join gate
+        // (encodeGateJoin) — vocab pinned by checkpoint, never collected
+        join <- o.optBool("join", dflt = false)
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // vocabulary resolved (collected, or --join: checkpoint-pinned)
         // ONCE at query start — ids are training-run constants;
         // re-encode under a new vocab means a new table + checkpoint
         // pair (see IncrementalStream.encodeGate / encodeGateJoin)
-        val stream = spark.readStream.schema(schema).parquet(source)
-        val q =
-          if (join) graft.streaming.IncrementalStream.encodeGateJoin(
-            stream, spark.read.parquet(vocab), id, text,
-            new ParquetStore(spark, dest), table, ck)
-          else graft.streaming.IncrementalStream.encodeGate(
-            stream, spark.read.parquet(vocab), id, text,
-            new ParquetStore(spark, dest), table, ck)
-        q.awaitTermination()
+        if (join) graft.streaming.IncrementalStream.encodeGateJoin(
+          stream, spark.read.parquet(vocab), id, text,
+          new ParquetStore(spark, dest), table, ck)
+        else graft.streaming.IncrementalStream.encodeGate(
+          stream, spark.read.parquet(vocab), id, text,
+          new ParquetStore(spark, dest), table, ck)
+      }
+    },
+
+    Command("winnow", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <k>] [--window <w>]")(
+      winnow(_, overlap = false)),
+
+    Command("winnow-overlap", "--corpus <parquet> --id <col> --text <col> --out <parquetDir> [--gram <k>] [--window <w>] [--min-shared <n>] [--max-df <n>]")(
+      winnow(_, overlap = true)),
+
+    Command("build-overlap-index", "--corpus <parquet> --id <col> --text <col> --out <storeDir> [--gram <k>] [--window <w>] [--max-df <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        k <- o.optInt("gram", 3)
+        w <- o.optInt("window", 4)
+        maxDf <- o.optInt("max-df", 100)
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // build-once fingerprint index, hot fps dropped here so every probe
+        // skips them; (gram, window) must match overlap-gate — the family
+        // contract (a mismatch silently misses candidates)
+        val store = new ParquetStore(spark, out)
+        store.write(graft.text.Winnow.buildOverlapIndex(
+          spark.read.parquet(corpus), id, text, k, w, maxDf), "fps")
+        // the family rides along as a one-row manifest so overlap-gate and
+        // ingest-overlap-index can refuse a (gram, window) mismatch instead
+        // of silently missing candidates (the dedup-index pattern)
+        overlapManifest.write(spark, store, k, w)
         0
       }
+    },
 
-    case EncodeIds(corpus, id, text, vocab, out) =>
-      graft.text.Vocab.encode(spark.read.parquet(corpus), id, text,
-          spark.read.parquet(vocab))
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case BuildOverlapIndex(corpus, id, text, k, w, maxDf, out) =>
-      // build-once fingerprint index, hot fps dropped here so every probe
-      // skips them; (gram, window) must match overlap-gate — the family
-      // contract (a mismatch silently misses candidates)
-      val store = new ParquetStore(spark, out)
-      store.write(graft.text.Winnow.buildOverlapIndex(
-        spark.read.parquet(corpus), id, text, k, w, maxDf), "fps")
-      // the family rides along as a one-row manifest so overlap-gate and
-      // ingest-overlap-index can refuse a (gram, window) mismatch instead
-      // of silently missing candidates (the dedup-index pattern)
-      writeOverlapManifest(spark, store, k, w)
-      0
-
-    case OverlapGateCmd(source, index, id, text, k, w, ms, dest, table, ck, maxDf, ts) =>
-      sourceSchema(spark, source, "overlap-gate").fold(0) { schema =>
+    Command("overlap-gate", "--source <parquetDir> --index <storeDir> --id <col> --text <col> --dest <storeDir> --table <t> --checkpoint <dir> [--gram <k>] [--window <w>] [--min-shared <n>] [--max-df <n>] [--tombstones true]") { o =>
+      for {
+        source <- o.req("source")
+        index <- o.req("index")
+        id <- o.req("id")
+        text <- o.req("text")
+        k <- o.optInt("gram", 3)
+        w <- o.optInt("window", 4)
+        ms <- o.optInt("min-shared", 2)
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+        // --max-df marks the index as a RAW ingest-overlap-index
+        // accumulation: the hot-fingerprint gate applies at every read
+        // (absent, the index is a build-overlap-index artifact, gated at
+        // build)
+        maxDf <- o.opt("max-df", "a positive int")(_.toIntOption.filter(_ >= 1))
+        ts <- o.optBool("tombstones", dflt = false).flatMap(t =>
+          // the snapshot path gates hotness at refresh time — an anti-join
+          // AFTER it cannot re-cool, so refuse the silently-wrong
+          // semantics (use --max-df for the at-read-gated raw index)
+          if (t && maxDf.isEmpty)
+            o.fail("--tombstones true requires --max-df (the " +
+              "at-read-gated raw index); a gated snapshot cannot re-cool " +
+              "retroactively")
+          else Right(t))
+      } yield drain(o.cmd, source) { (spark, stream) =>
         val idxStore = new ParquetStore(spark, index)
         // probe fingerprints must come from the SAME (gram, window)
         // family as the index (a mismatch silently misses candidates) —
@@ -3323,7 +1885,7 @@ object Main {
         // a manifest (conditional, the ingest-dedup pattern: pre-manifest
         // built stores still serve)
         idxStore.read("params").foreach(
-          checkOverlapManifest(_, "overlap-gate", index, k, w))
+          overlapManifest.check(_, o.cmd, index, k, w))
         // by-name index (the serve-bm25 pattern): EVERY per-batch re-read
         // goes through the getOrElse, so an index directory that vanishes
         // mid-stream fails with the diagnostic, not a bare
@@ -3365,16 +1927,22 @@ object Main {
           }
         }
         fps
-        val stream = spark.readStream.schema(schema).parquet(source)
         graft.streaming.IncrementalStream.overlapGate(
           stream, fps, id, text,
           new ParquetStore(spark, dest), table, ck, k, w, ms)
-          .awaitTermination()
-        0
       }
+    },
 
-    case IngestOverlapIndex(source, id, text, k, w, dest, ck) =>
-      sourceSchema(spark, source, "ingest-overlap-index").fold(0) { schema =>
+    Command("ingest-overlap-index", "--source <parquetDir> --id <col> --text <col> --dest <storeDir> --checkpoint <dir> [--gram <k>] [--window <w>]") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        text <- o.req("text")
+        k <- o.optInt("gram", 3)
+        w <- o.optInt("window", 4)
+        dest <- o.req("dest")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // raw distinct (fp, id) rows accumulate in the fixed "fps" table
         // (the overlap-gate read convention); pair with
         // `overlap-gate --max-df <n>` so the df gate applies at read over
@@ -3391,7 +1959,7 @@ object Main {
         val store = new ParquetStore(spark, dest)
         store.read("params") match {
           case Some(params) =>
-            checkOverlapManifest(params, "ingest-overlap-index", dest, k, w)
+            overlapManifest.check(params, o.cmd, dest, k, w)
           case None =>
             require(store.read("fps").isEmpty,
               s"ingest-overlap-index: $dest has an fps table but no params " +
@@ -3399,27 +1967,41 @@ object Main {
                 "more rows could silently corrupt it; rebuild with " +
                 "build-overlap-index or seed a manifest matching the " +
                 "original build")
-            writeOverlapManifest(spark, store, k, w)
+            overlapManifest.write(spark, store, k, w)
         }
-        val stream = spark.readStream.schema(schema).parquet(source)
         graft.streaming.IncrementalStream.overlapIndexIngest(
           stream, id, text, store, "fps", ck, k, w)
-          .awaitTermination()
+      }
+    },
+
+    Command("snapshot-overlap-index", "--index <storeDir> --id <col> [--max-df <n>]") { o =>
+      for {
+        index <- o.req("index")
+        id <- o.req("id")
+        maxDf <- o.optInt("max-df", 100)
+      } yield (spark: SparkSession) => {
+        // refresh-cadence materialization of the df-gated served view:
+        // overlap-gate (without --max-df) probes fps_gated as a plain
+        // pre-gated table, so the fp-keyed df count over the whole
+        // accumulation runs once per refresh here instead of once per
+        // serving read (Winnow.gateIndex's documented prescription)
+        graft.text.Winnow.snapshotIndex(
+          new ParquetStore(spark, index), id, maxDf)
         0
       }
+    },
 
-    case SnapshotOverlapIndex(index, id, maxDf) =>
-      // refresh-cadence materialization of the df-gated served view:
-      // overlap-gate (without --max-df) probes fps_gated as a plain
-      // pre-gated table, so the fp-keyed df count over the whole
-      // accumulation runs once per refresh here instead of once per
-      // serving read (Winnow.gateIndex's documented prescription)
-      graft.text.Winnow.snapshotIndex(
-        new ParquetStore(spark, index), id, maxDf)
-      0
-
-    case IngestDedupIndex(source, id, text, n, hashes, bands, dest, ck) =>
-      sourceSchema(spark, source, "ingest-dedup-index").fold(0) { schema =>
+    Command("ingest-dedup-index", "--source <parquetDir> --id <col> --text <col> --ngram <n> --hashes <n> --bands <n> --dest <storeDir> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        text <- o.req("text")
+        n <- o.posInt("ngram")
+        hashes <- o.posInt("hashes")
+        bands <- o.posInt("bands")
+        dest <- o.req("dest")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
         // the accumulated tables use the SAME names + params manifest as
         // build-dedup-index, so ingest-dedup serves either provenance
         // through the identical manifest-checked read path. On a
@@ -3429,7 +2011,7 @@ object Main {
         val store = new ParquetStore(spark, dest)
         store.read("params") match {
           case Some(params) =>
-            checkDedupManifest(params, "ingest-dedup-index", dest, n, hashes, bands)
+            dedupManifest.check(params, o.cmd, dest, n, hashes, bands)
           case None =>
             // seed the manifest ONLY on a genuinely fresh store: index
             // tables without a manifest (library-API accumulation, or a
@@ -3443,56 +2025,55 @@ object Main {
                 "manifest — its hash family is unknown, so folding more rows " +
                 "could silently corrupt it; rebuild with build-dedup-index " +
                 "or seed a manifest matching the original build")
-            writeDedupManifest(spark, store, n, hashes, bands)
+            dedupManifest.write(spark, store, n, hashes, bands)
         }
-        val stream = spark.readStream.schema(schema).parquet(source)
         graft.streaming.IncrementalStream.dedupIndexIngest(
           stream, id, text, shingler(n), hashes, bands, store, ck)
-          .awaitTermination()
+      }
+    },
+
+    Command("build-bm25-index", "--corpus <parquet> --id <col> --text <col> --out <storeDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        text <- o.req("text")
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // one corpus text pass; the three relations persist through the
+        // store and serve every serve-bm25 restart without re-tokenizing.
+        // The two collection-statistics scalars ride along as a one-row
+        // manifest — they are index-build CONSTANTS by the BM25 contract
+        // (recomputing them per batch would change every score as the
+        // served log grows), so serve-bm25 refuses to start without them
+        val docs = spark.read.parquet(corpus)
+        val built = graft.text.TfIdf.buildBm25Index(docs, id, text, docs.count())
+        val store = new ParquetStore(spark, out)
+        store.write(built.postings, "postings")
+        store.write(built.docLens, "doc_lens")
+        store.write(built.docFreqs, "doc_freqs")
+        store.write(spark.createDataFrame(java.util.List.of(
+            Row(built.corpusSize, built.avgdl)),
+          StructType(Seq(
+            StructField("corpus_size", org.apache.spark.sql.types.LongType),
+            StructField("avgdl", org.apache.spark.sql.types.DoubleType)))),
+          "params")
         0
       }
+    },
 
-    case WinnowCmd(corpus, id, text, k, w, out, overlap) =>
-      // one narrow corpus pass -> the positional fingerprint table; with
-      // --min-shared/--max-df (winnow-overlap) the df-gated MOSS candidate
-      // pairs write instead. Output is a plain parquet artifact (the
-      // mine-negatives pattern), re-joinable against the corpus by id
-      val fps = graft.text.Winnow.fingerprints(
-        spark.read.parquet(corpus), id, text, k, w)
-      val result = overlap match {
-        case None => fps
-        case Some((minShared, maxDf)) =>
-          graft.text.Winnow.overlapCandidates(fps, id, minShared, maxDf)
-      }
-      result.write.mode("overwrite").parquet(out)
-      0
-
-    case BuildBm25Index(corpus, id, text, out) =>
-      // one corpus text pass; the three relations persist through the
-      // store and serve every serve-bm25 restart without re-tokenizing.
-      // The two collection-statistics scalars ride along as a one-row
-      // manifest — they are index-build CONSTANTS by the BM25 contract
-      // (recomputing them per batch would change every score as the
-      // served log grows), so serve-bm25 refuses to start without them
-      val docs = spark.read.parquet(corpus)
-      val built = graft.text.TfIdf.buildBm25Index(docs, id, text, docs.count())
-      val store = new ParquetStore(spark, out)
-      store.write(built.postings, "postings")
-      store.write(built.docLens, "doc_lens")
-      store.write(built.docFreqs, "doc_freqs")
-      store.write(spark.createDataFrame(java.util.List.of(
-          org.apache.spark.sql.Row(built.corpusSize, built.avgdl)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("corpus_size", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("avgdl", org.apache.spark.sql.types.DoubleType)))),
-        "params")
-      0
-
-    case ServeBm25(queries, index, id, k, dest, table, ck) =>
-      sourceSchema(spark, queries, "serve-bm25").fold(0) { schema =>
+    Command("serve-bm25", "--queries <parquetDir> --index <storeDir> --id <col> --k <n> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        queries <- o.req("queries")
+        index <- o.req("index")
+        id <- o.req("id")
+        k <- o.posInt("k")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, queries) { (spark, stream) =>
         val idxStore = new ParquetStore(spark, index)
         val params = idxStore.read("params").getOrElse(
-          sys.error(s"serve-bm25: no params table under $index — run build-bm25-index first")).head
+          sys.error(s"serve-bm25: no params table under $index — run build-bm25-index first")).head()
         val (n, avgdl) = (params.getLong(0), params.getDouble(1))
         // by-name index: each batch re-reads the persisted relations, so
         // an offline rebuild (same scalars) lands on the next batch
@@ -3504,80 +2085,749 @@ object Main {
           idxStore.read("doc_freqs").getOrElse(
             sys.error(s"serve-bm25: no doc_freqs table under $index")),
           n, avgdl)
-        val stream = spark.readStream.schema(schema).parquet(queries)
         graft.streaming.IncrementalStream.bm25Serve(
           stream, idx, id, k, new ParquetStore(spark, dest), table, ck)
-          .awaitTermination()
-        0
       }
+    },
 
-    case FuseRrf(rankings, doc, k0, top, out) =>
-      // inputs are top-k rank tables (query_id, <doc>, rank) — e.g. a
-      // serve-bm25 log and a serve-knn log renamed — fused into one list
-      graft.similarity.Fusion.rrf(
+    Command("fuse-rrf", "--rankings name=/dir[,name=/dir...] --doc <col> --out <parquetDir> [--k0 <n>] [--top <n>]") { o =>
+      for {
+        rankings <- o.req("rankings").flatMap { spec =>
+          val pairs = spec.split(',').toSeq.map(_.split("=", 2))
+          if (!pairs.forall(p => p.length == 2 && p(0).nonEmpty && p(1).nonEmpty))
+            o.fail(s"--rankings must be name=/dir[,name=/dir...], got $spec")
+          else if (pairs.map(_(0)).distinct.length != pairs.length)
+            // catch at PARSE (pre-Spark) what Fusion.rrf would reject later
+            o.fail(s"duplicate ranking names in $spec")
+          else Right(pairs.map(p => (p(0), p(1))))
+        }
+        doc <- o.req("doc")
+        k0 <- o.optInt("k0", 60)
+        top <- o.optInt("top", 10)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // inputs are top-k rank tables (query_id, <doc>, rank) — e.g. a
+        // serve-bm25 log and a serve-knn log renamed — fused into one list
+        graft.similarity.Fusion.rrf(
           rankings.map { case (name, dir) => (name, spark.read.parquet(dir)) },
           doc, k0, top)
-        .write.mode("overwrite").parquet(out)
-      0
+      }
+    },
 
-    case EvalRecall(got, want, doc, k, out) =>
-      graft.similarity.Fusion.recallAtK(
+    Command("eval-recall", "--got <parquetDir> --want <parquetDir> --doc <col> --k <n> --out <parquetDir>") { o =>
+      for {
+        got <- o.req("got")
+        want <- o.req("want")
+        doc <- o.req("doc")
+        k <- o.posInt("k")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        graft.similarity.Fusion.recallAtK(
           spark.read.parquet(got), spark.read.parquet(want), doc, k)
-        .write.mode("overwrite").parquet(out)
-      0
-
-    case DriftCmd(oldDir, newDir, value, category, out) =>
-      // between-snapshots distribution report: exact counts + permille
-      // shares per bucket/category, the pre-retraining monitoring pass
-      val (o, n) = (spark.read.parquet(oldDir), spark.read.parquet(newDir))
-      val report = (value, category) match {
-        case (Some((v, w)), _) => graft.operators.Drift.histogramDrift(o, n, v, w)
-        case (_, Some(c))      => graft.operators.Drift.categoryDrift(o, n, c)
-        case _                 => sys.error("drift: unreachable — parser enforces the mode")
       }
-      report.write.mode("overwrite").parquet(out)
-      0
+    },
 
-    case TakedownCmd(storeDir, tables, fromTombstones, ids) =>
-      // one erasure list through every named table, each rewritten via
-      // the store's atomic path; per-table removed counts are the audit
-      // trail a takedown report needs. OFFLINE: stop streaming writers
-      // first (a checkpoint replay of a pre-takedown batch re-appends —
-      // the Compaction contract). --from-tombstones true runs the
-      // DEFERRED physical purge of the online path: ids come from the
-      // store's tombstone table, which is cleared LAST and atomically
-      // (a crash mid-purge leaves tombstones intact — the at-read gate
-      // stays correct and the compaction re-runs idempotently)
-      val store = new ParquetStore(spark, storeDir)
-      val counts =
-        if (fromTombstones) graft.sync.Takedown.compactTombstones(store, tables)
-        else graft.sync.Takedown.purgeAll(store, tables, spark.read.parquet(ids))
-      counts.foreach { case (t, n) => println(s"takedown: $t — $n rows removed") }
-      0
-
-    case CompactCmd(d, mb) =>
-      // the maintenance half of the streaming serving loops: every
-      // AvailableNow drain appends a few files per micro-batch, and after
-      // months of cron ticks the accumulated log is thousands of KB-sized
-      // parquet files. Run THIS in the same maintenance window (exclusive
-      // access — see Compaction's contract). The serving retry guards
-      // survive it: they filter on (__run, __batch) ROWS, not files
-      val stats = graft.files.Compaction.compact(
-        spark, d, targetBytes = mb.toLong * 1024 * 1024)
-      System.err.println(s"[compact] ${stats.filesBefore} -> ${stats.filesAfter} " +
-        s"files (${stats.bytesTotal} bytes) under $d")
-      0
-
-    case FileSyncCmd(srcDir, dstDir, apply) =>
-      // dry-run first, always — the reference's safety pattern (gcs_sync.py:115)
-      val dry = FileSync.syncDir(spark, srcDir, dstDir, dryRun = true)
-      System.err.println(s"[file-sync] plan: total=${dry.totalFiles} new=${dry.newFiles} existing=${dry.existingFiles}")
-      if (apply) {
-        val real = FileSync.syncDir(spark, srcDir, dstDir, dryRun = false)
-        System.err.println(s"[file-sync] copied ${real.newFiles} files")
-      } else {
-        System.err.println("[file-sync] dry run only — pass --apply to copy")
+    Command("takedown", "--store <storeDir> --tables t1=idCol[,t2=idCol...] (--ids <parquet> | --from-tombstones true)") { o =>
+      for {
+        storeDir <- o.req("store")
+        tables <- o.req("tables").flatMap { spec =>
+          val pairs = spec.split(',').toSeq.map(_.split("=", 2))
+          if (!pairs.forall(p => p.length == 2 && p(0).nonEmpty && p(1).nonEmpty))
+            o.fail(s"--tables must be table=idCol[,table=idCol...], got $spec")
+          else Right(pairs.map(p => (p(0), p(1))))
+        }
+        fromTs <- o.optBool("from-tombstones", dflt = false)
+        // exactly one id source: an explicit list, or the store's
+        // accumulated tombstone table (the deferred physical purge)
+        ids <- if (fromTs) {
+          if (o.has("ids"))
+            o.fail("pass either --ids or --from-tombstones true, not both")
+          else Right("")
+        } else o.req("ids")
+      } yield (spark: SparkSession) => {
+        // one erasure list through every named table, each rewritten via
+        // the store's atomic path; per-table removed counts are the audit
+        // trail a takedown report needs. OFFLINE: stop streaming writers
+        // first (a checkpoint replay of a pre-takedown batch re-appends —
+        // the Compaction contract). --from-tombstones true runs the
+        // DEFERRED physical purge of the online path: ids come from the
+        // store's tombstone table, which is cleared LAST and atomically
+        // (a crash mid-purge leaves tombstones intact — the at-read gate
+        // stays correct and the compaction re-runs idempotently)
+        val store = new ParquetStore(spark, storeDir)
+        val counts =
+          if (fromTs) graft.sync.Takedown.compactTombstones(store, tables)
+          else graft.sync.Takedown.purgeAll(store, tables, spark.read.parquet(ids))
+        counts.foreach { case (t, n) => println(s"takedown: $t — $n rows removed") }
+        0
       }
-      0
-  }
+    },
+
+    Command("drift", "--old <parquet> --new <parquet> --out <parquetDir> (--value <col> --width <n> | --category <col>)") { o =>
+      for {
+        oldDir <- o.req("old")
+        newDir <- o.req("new")
+        out <- o.req("out")
+        mode <- ((o.get("value"), o.get("category")) match {
+          case (Some(v), None) =>
+            o.get("width").flatMap(_.toLongOption).filter(_ > 0)
+              .toRight(s"${o.cmd}: --value needs a positive --width")
+              .map(w => Left((v, w)))
+          case (None, Some(c)) =>
+            if (o.has("width")) o.fail("--width only applies to --value mode")
+            else Right(Right(c))
+          case _ =>
+            o.fail("pass exactly one of --value <col> --width <n> (histogram) or --category <col>")
+        }): Either[String, Either[(String, Long), String]]
+      } yield overwrite(out) { spark =>
+        // between-snapshots distribution report: exact counts + permille
+        // shares per bucket/category, the pre-retraining monitoring pass
+        val (oldDf, newDf) = (spark.read.parquet(oldDir), spark.read.parquet(newDir))
+        mode match {
+          case Left((v, w)) => graft.operators.Drift.histogramDrift(oldDf, newDf, v, w)
+          case Right(c)     => graft.operators.Drift.categoryDrift(oldDf, newDf, c)
+        }
+      }
+    },
+
+    Command("schema-drift", "--old <parquet> --new <parquet> --out <parquetDir>") { o =>
+      for {
+        oldP <- o.req("old")
+        newP <- o.req("new")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // upstream schema change as a report, not a stack trace — pure
+        // metadata compare, no data scan
+        graft.sync.Diff.schemaDiff(
+          spark.read.parquet(oldP), spark.read.parquet(newP))
+      }
+    },
+
+    Command("k-anonymity", "--corpus <parquet> --quasi c1[,c2] --k <n> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        quasi <- o.reqCols("quasi")
+        k <- o.posInt("k").flatMap(k =>
+          if (k >= 2) Right(k) else o.fail("--k must be >= 2"))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the governance audit before a release: quasi-identifier combos
+        // under k rows, delta-sized; remediate by semi-joining the source
+        graft.operators.Expectations.kAnonymity(
+          spark.read.parquet(corpus), quasi, k.toLong)
+      }
+    },
+
+    Command("release-audit", "--corpus <parquet> --group <col> --id <col> --text <col> --out <dir> [--quasi c1[,c2] --k <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        group <- o.req("group")
+        id <- o.req("id")
+        text <- o.req("text")
+        quasi = o.get("quasi").toSeq.flatMap(cols)
+        k <- o.optInt("k", 10)
+        out <- o.req("out")
+      } yield (spark: SparkSession) => {
+        // the pre-release datasheet bundle in ONE invocation: per-group
+        // data card, per-column profile, and (when --quasi is given) the
+        // k-anonymity report — each a separately-graded operator; this
+        // command is the packaging a release checklist actually runs
+        val rdf = spark.read.parquet(corpus)
+        graft.text.TextAnalysis.dataCard(rdf, group, id, text)
+          .write.mode("overwrite").parquet(s"$out/data_card")
+        graft.operators.Profile.profile(rdf, approxDistinct = true)
+          .write.mode("overwrite").parquet(s"$out/profile")
+        if (quasi.nonEmpty)
+          graft.operators.Expectations.kAnonymity(rdf, quasi, k.toLong)
+            .write.mode("overwrite").parquet(s"$out/k_anonymity")
+        0
+      }
+    },
+
+    Command("html-extract", "--corpus <parquet> --id <col> --html <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        html <- o.req("html")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the WARC->WET pass: (id, clean text, markup-shape counters) —
+        // runs BEFORE every quality/language/dedup stage; the counters
+        // are the nav-shell audit columns (a page that is 95% tags by
+        // count is chrome, not prose)
+        val hdf = spark.read.parquet(corpus)
+        val h = org.apache.spark.sql.functions.col(html)
+        hdf.select(org.apache.spark.sql.functions.col(id),
+          graft.text.Html.extractText(h).as("clean"),
+          graft.text.Html.tagCount(h).cast("long").as("n_tags"),
+          graft.text.Html.linkCount(h).cast("long").as("n_links"),
+          graft.text.Html.scriptCount(h).cast("long").as("n_scripts"))
+      }
+    },
+
+    Command("main-content", "--corpus <parquet> --id <col> --html <col> [--min-chars <n>] [--max-link-permille <n>] --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        html <- o.req("html")
+        minChars <- o.optInt("min-chars", 25)
+        mlp <- o.optInt("max-link-permille", 333)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the boilerplate-aware extraction: block-density scoring drops
+        // nav/sidebar/footer chrome per page (what line-dedup only
+        // catches when it repeats across documents); n_blocks/n_kept are
+        // the extraction-audit columns
+        val mdf = spark.read.parquet(corpus)
+        mdf.select(org.apache.spark.sql.functions.col(id),
+            graft.text.Html.mainContentReport(
+              org.apache.spark.sql.functions.col(html), minChars, mlp).as("__r"))
+          .select(org.apache.spark.sql.functions.col(id),
+            org.apache.spark.sql.functions.col("__r.main").as("main"),
+            org.apache.spark.sql.functions.col("__r.n_blocks").as("n_blocks"),
+            org.apache.spark.sql.functions.col("__r.n_kept").as("n_kept"))
+      }
+    },
+
+    Command("main-content-gate", "--source <parquetDir> --id <col> --html <col> [--min-chars <n>] [--max-link-permille <n>] [--min-kept <n>] --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        html <- o.req("html")
+        minChars <- o.optInt("min-chars", 25)
+        mlp <- o.optInt("max-link-permille", 333)
+        minKept <- o.optInt("min-kept", 1)
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // the extraction gate at ingest: nav shells (fewer than min-kept
+        // content blocks) never enter the corpus; survivors accumulate as
+        // (id, main, n_blocks, n_kept) under the retry guard
+        graft.streaming.IncrementalStream.mainContentGate(
+          stream, id, html, new ParquetStore(spark, dest), table, ck,
+          minChars = minChars, maxLinkPermille = mlp, minKept = minKept)
+      }
+    },
+
+    Command("url-norm", "--corpus <parquet> --id <col> --url <col> --out <parquetDir>") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        url <- o.req("url")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // URL canonicalization artifact: (id, url_norm) with NULL for
+        // non-URLs — the crawl frontier's dedup key (group by url_norm
+        // downstream; the NULLs are the scrub-queue rows)
+        spark.read.parquet(corpus).select(org.apache.spark.sql.functions.col(id),
+          graft.functions.UrlNormalize(
+            org.apache.spark.sql.functions.col(url)).as("url_norm"))
+      }
+    },
+
+    Command("url-frontier", "--source <parquetDir> --id <col> --url <col> --dest <storeDir> --table <t> --checkpoint <dir> [--max-per-host <n>]") { o =>
+      for {
+        source <- o.req("source")
+        id <- o.req("id")
+        url <- o.req("url")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+        maxPerHost <- o.opt("max-per-host", "a positive long")(_.toLongOption.filter(_ >= 1L))
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // the crawl frontier: canonical-URL exact dedup at ingest — one
+        // row per canonical URL ever accepted, non-URLs dropped;
+        // --max-per-host adds the politeness budget (each host lands at
+        // most that many accepted URLs over the whole ingest)
+        graft.streaming.IncrementalStream.frontierGate(
+          stream, id, url, new ParquetStore(spark, dest), table, ck,
+          maxPerHost = maxPerHost)
+      }
+    },
+
+    Command("scd2-ingest", "--source <parquetDir> --pks c1[,c2] --compare c1[,c2] --ver <col> [--op <col>] --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        pks <- o.req("pks").map(cols)
+        compare <- o.req("compare").map(cols)
+        ver <- o.req("ver")
+        op = o.get("op")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // continuous SCD2 history maintenance: each micro-batch of deltas
+        // folds into the persisted history (exactly-once skip-or-merge);
+        // --op enables CDC delete events (rows whose op column is 'd')
+        graft.streaming.IncrementalStream.scd2Ingest(
+          stream, new ParquetStore(spark, dest), table, pks, compare, ver,
+          ck, opCol = op)
+      }
+    },
+
+    Command("scd2-apply", "--snapshot <parquet> --pks c1[,c2] --compare c1[,c2] --version <n> --out <parquetDir> (--history <parquetDir> | --init true) [--upserts true]") { o =>
+      for {
+        snapshot <- o.req("snapshot")
+        pks <- o.req("pks").map(cols)
+        compare <- o.req("compare").map(cols)
+        version <- o.posLong("version")
+        history <- if (o.get("init").contains("true")) Right(None)
+          else o.req("history").map(Some(_))
+        upserts = o.get("upserts").contains("true")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // temporal sync: apply a full snapshot — or, with --upserts true,
+        // an incremental "changed since last pull" delta (absent keys stay
+        // open) — to an SCD2 history (or seed one with --init true).
+        // Writes the NEW history to --out, never in place, so a failed
+        // apply cannot corrupt the prior version (swap dirs after success,
+        // the writeAtomic discipline)
+        val snap = spark.read.parquet(snapshot)
+        history match {
+          case None => graft.sync.History.scd2Init(snap, version)
+          case Some(h) if upserts => graft.sync.History.scd2ApplyUpserts(
+            spark.read.parquet(h), snap, pks, compare, version)
+          case Some(h) => graft.sync.History.scd2Apply(
+            spark.read.parquet(h), snap, pks, compare, version)
+        }
+      }
+    },
+
+    Command("scd2-close", "--history <parquetDir> --keys <parquet> --pks c1[,c2] --version <n> --out <parquetDir>") { o =>
+      for {
+        history <- o.req("history")
+        keys <- o.req("keys")
+        pks <- o.req("pks").map(cols)
+        version <- o.posLong("version")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the delete half of a CDC feed: close the listed keys' open
+        // intervals at --version (idempotent; unknown keys are no-ops)
+        graft.sync.History.scd2Close(spark.read.parquet(history),
+          spark.read.parquet(keys), pks, version)
+      }
+    },
+
+    Command("warc-extract", "--files <parquet(file_id,content)> --out <parquetDir> [--text true] [--status <n>] [--mime <type>]") { o =>
+      for {
+        files <- o.req("files")
+        text <- o.optBool("text", dflt = false)
+        status <- o.opt("status", "an HTTP status code")(_.toIntOption)
+        mime = o.get("mime")
+        _ <- if (text || (status.isEmpty && mime.isEmpty)) Right(())
+          else o.fail("--status/--mime filter decoded responses — they require --text true")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the crawl-dump entry point: a (file_id, content) frame of whole
+        // WARC files (spark.read.format("binaryFile") upstream) splits
+        // into records per partition — no shuffle; --text true keeps only
+        // response payloads with the HTTP envelope stripped and the body
+        // decoded by its declared charset (status/mime surfaced as
+        // columns); --status 200 --mime text/html is the usual crawl
+        // admission pair
+        implicit val s: SparkSession = spark
+        val f = spark.read.parquet(files)
+        if (text) {
+          val r = graft.sources.Warc.responseText(f)
+          import org.apache.spark.sql.functions.col
+          val withStatus = status.fold(r)(n => r.filter(col("http_status") === n))
+          mime.fold(withStatus)(m => withStatus.filter(col("content_type") === m))
+        } else graft.sources.Warc.records(f).toDF()
+      }
+    },
+
+    Command("warc-export", "--corpus <parquet> --file-col <col> --id <col> --text <col> --date <iso8601> --out <parquetDir> [--url <col>] [--gzip false]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        fileCol <- o.req("file-col")
+        id <- o.req("id")
+        text <- o.req("text")
+        url = o.get("url")
+        date <- o.req("date")
+        gzip <- o.optBool("gzip", dflt = true)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the sink half of the interchange round trip: conversion (WET)
+        // records, --date is the stated capture instant (the writer never
+        // reads a wall clock — exports replay byte-identically)
+        graft.sources.Warc.export(spark.read.parquet(corpus), fileCol, id,
+          text, url, date, gzip)(spark)
+      }
+    },
+
+    Command("outlinks", "--pages <parquet> --id <col> --html <col> --out <parquetDir> (--url <col> | --raw true)") { o =>
+      for {
+        pages <- o.req("pages")
+        id <- o.req("id")
+        html <- o.req("html")
+        raw <- o.optBool("raw", dflt = false)
+        // raw hrefs need no base URL — only the resolve path reads it
+        url <- if (raw) Right(o.get("url")) else o.req("url").map(Some(_))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the crawl-graph stage: hrefs extracted (entity-decoded, no edges
+        // from comments/scripts), resolved against the page's own URL
+        // (RFC 3986) and canonicalized into the frontier key space;
+        // --raw true keeps the unresolved hrefs instead
+        import org.apache.spark.sql.functions.{col, explode}
+        val p = spark.read.parquet(pages)
+        if (raw)
+          p.select(col(id), explode(graft.text.Html.outlinks(col(html))).as("href"))
+        else {
+          val u = url.get // the parser guarantees it on the resolve path
+          p.select(col(id), col(u),
+              explode(graft.text.Html.outlinks(col(html))).as("href"))
+            .select(col(id), graft.functions.UrlNormalize(
+              graft.functions.UrlResolve(col(u), col("href"))).as("dst"))
+            .filter(col("dst").isNotNull)
+        }
+      }
+    },
+
+    Command("robots-sitemaps", "--robots <parquet keyed by --host col> --host <col> --out <parquetDir> [--txt <col>]") { o =>
+      for {
+        robots <- o.req("robots")
+        host <- o.req("host")
+        txt = o.get("txt").getOrElse("robots_txt")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the frontier's seed list: Sitemap directives, group-independent
+        graft.operators.Robots.sitemaps(spark.read.parquet(robots), host, txt)
+      }
+    },
+
+    Command("chat-render", "--conversations <parquet> --id <col> --messages <array<struct<role,content>> col> --out <parquetDir> [--spans true] [--token-masks true] [--max-tokens <n>]") { o =>
+      for {
+        conversations <- o.req("conversations")
+        id <- o.req("id")
+        messages <- o.req("messages")
+        spans <- o.optBool("spans", dflt = false)
+        tokenMasks <- o.optBool("token-masks", dflt = false)
+        budget <- o.opt("max-tokens", "a non-negative long")(_.toLongOption.filter(_ >= 0))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // SFT data prep: turn lists -> rendered chat-template text; with
+        // --spans true, also the assistant-turn loss-mask spans
+        // (code-point offsets); --token-masks true adds the TOKEN-index
+        // intervals (TokenSpans over the rendering, the trainer's final
+        // mask unit); --max-tokens fits each conversation to
+        // the budget FIRST (assistant-ending prefix; budget-empty
+        // conversations drop). Under --max-tokens the output also carries
+        // the FITTED `messages` array — span turn indexes refer to the
+        // conversation that was rendered, which after truncation is no
+        // longer the stored source array (fitBudget compacts invalid
+        // turns), so the row must ship the array its spans index
+        import org.apache.spark.sql.functions.{col, size}
+        val raw = spark.read.parquet(conversations)
+        val fitted = budget.isDefined
+        val c = budget match {
+          case Some(b) =>
+            raw.withColumn("__m", graft.text.Chat.fitBudget(col(messages), b))
+              .filter(size(col("__m")) > 0)
+          case None => raw.withColumn("__m", col(messages))
+        }
+        val withText = c
+          .withColumn("rendered", graft.text.Chat.render(col("__m")))
+        val withSpans =
+          if (spans || tokenMasks)
+            withText.withColumn("__sp",
+              graft.text.Chat.assistantSpans(col("__m")))
+          else withText
+        val cols = Seq(col(id), col("rendered")) ++
+          (if (spans) Seq(col("__sp").as("loss_spans")) else Nil) ++
+          (if (tokenMasks) Seq(graft.text.Chat.tokenMask(
+            graft.functions.TokenSpans(col("rendered")), col("__sp"))
+            .as("token_masks")) else Nil) ++
+          (if (fitted) Seq(col("__m").as("messages")) else Nil)
+        withSpans.select(cols: _*)
+      }
+    },
+
+    Command("chat-lint", "--conversations <parquet> --id <col> --messages <array<struct<role,content>> col> --out <parquetDir> [--failed-only true]") { o =>
+      for {
+        conversations <- o.req("conversations")
+        id <- o.req("id")
+        messages <- o.req("messages")
+        failedOnly <- o.optBool("failed-only", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the SFT QA gate: one row of structural counters per
+        // conversation; --failed-only true keeps just the rows a
+        // cleanup queue wants
+        import org.apache.spark.sql.functions.{coalesce, col, lit}
+        val linted = spark.read.parquet(conversations)
+          .select(col(id), graft.text.Chat.lint(col(messages)).as("l"))
+          .select(col(id), col("l.n_valid").as("n_valid"),
+            col("l.n_invalid").as("n_invalid"),
+            col("l.starts_ok").as("starts_ok"),
+            col("l.ends_assistant").as("ends_assistant"),
+            col("l.same_role_pairs").as("same_role_pairs"),
+            col("l.empty_turns").as("empty_turns"),
+            col("l.passed").as("passed"))
+        // NULL lint (a NULL messages array) must land in the failure
+        // queue, not vanish: !NULL is NULL and would filter the
+        // most-broken rows out of --failed-only silently
+        if (failedOnly) linted.filter(!coalesce(col("passed"), lit(false)))
+        else linted
+      }
+    },
+
+    Command("sitemap-entries", "--sitemaps <parquet> --id <col> --xml <sitemap document col> --out <parquetDir> [--kind url|sitemap]") { o =>
+      for {
+        sitemaps <- o.req("sitemaps")
+        id <- o.req("id")
+        xml <- o.req("xml")
+        kind <- o.opt("kind", "url or sitemap")(Some(_).filter(Set("url", "sitemap")))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // crawl seeding: sitemap XML documents -> one row per entry
+        // (kind url|sitemap, entity-decoded loc, lastmod); --kind
+        // filters to pages or child sitemaps (the fetch-loop split)
+        import org.apache.spark.sql.functions.{col, explode}
+        val exploded = spark.read.parquet(sitemaps)
+          .select(col(id), explode(graft.text.Sitemap.entries(col(xml))).as("e"))
+          .select(col(id), col("e.kind").as("kind"), col("e.loc").as("loc"),
+            col("e.lastmod").as("lastmod"))
+        kind.fold(exploded)(k => exploded.filter(col("kind") === k))
+      }
+    },
+
+    Command("preference-pairs", "--rollouts <parquet> --prompt <col> --out <parquetDir> (--id <col> --text <col> --score <col> | --from-state true) [--min-margin <x>]") { o =>
+      for {
+        rollouts <- o.req("rollouts")
+        fromState <- o.optBool("from-state", dflt = false)
+        prompt <- o.req("prompt")
+        // id/text/score name the rollout columns; a maintained state
+        // table already carries the candidate shape
+        id <- if (fromState) Right("") else o.req("id")
+        text <- if (fromState) Right("") else o.req("text")
+        score <- if (fromState) Right("") else o.req("score")
+        minMargin <- o.opt("min-margin", "a non-negative number")(
+          _.toDoubleOption.filter(_ >= 0)).map(_.getOrElse(0.0))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // RLHF/DPO prep: scored rollouts -> best-vs-worst (chosen,
+        // rejected) pairs per prompt, margin-gated; --from-state true
+        // derives the pairs from a preference-ingest state table instead
+        // (a margin filter over |prompts| rows, never the rollouts)
+        if (fromState)
+          graft.operators.Preference.pairsFromCandidates(
+            spark.read.parquet(rollouts).drop("__last_batch", "__run"),
+            prompt, minMargin)
+        else
+          graft.operators.Preference.pairs(spark.read.parquet(rollouts),
+            prompt, id, text, score, minMargin)
+      }
+    },
+
+    Command("preference-ingest", "--source <parquetDir> --prompt <col> --id <col> --text <col> --score <col> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        prompt <- o.req("prompt")
+        id <- o.req("id")
+        text <- o.req("text")
+        score <- o.req("score")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        // the RLHF loop's online half: rollouts stream in as the judge
+        // scores them; the state holds each prompt's best/worst over
+        // everything arrived. Derive pairs with
+        // `preference-pairs --from-state true`
+        graft.streaming.IncrementalStream.preferenceIngest(stream,
+          prompt, id, text, score, new ParquetStore(spark, dest), table, ck)
+      }
+    },
+
+    Command("group-advantage", "--rollouts <parquet> --prompt <col> --id <col> --score <col> --out <parquetDir>") { o =>
+      for {
+        rollouts <- o.req("rollouts")
+        prompt <- o.req("prompt")
+        id <- o.req("id")
+        score <- o.req("score")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // GRPO prep: per-rollout group-relative advantage numerators
+        // (advantage = adv_num/n, z = adv_num/sqrt(var_num))
+        graft.operators.Preference.groupAdvantages(
+          spark.read.parquet(rollouts), prompt, id, score)
+      }
+    },
+
+    Command("bitext-mine", "--src <parquet> --tgt <parquet (smaller side: it broadcasts)> --id <col> --vec <col> --out <parquetDir> [--k <n>] [--margin-micros <m>]") { o =>
+      for {
+        src <- o.req("src")
+        tgt <- o.req("tgt")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        k <- o.optInt("k", 4)
+        margin <- o.opt("margin-micros", "a non-negative long")(
+          _.toLongOption.filter(_ >= 0)).map(_.getOrElse(1000000L))
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // multilingual curation: mutual-best pairs across two embedded
+        // corpora under the LASER ratio margin; put the smaller corpus
+        // on --tgt (it broadcasts into one cross pass)
+        graft.similarity.Similarity.bitextMine(
+          spark.read.parquet(src), spark.read.parquet(tgt), id, vec,
+          k, margin)
+      }
+    },
+
+    Command("embed-decontaminate", "--corpus <parquet> --benchmark <parquet> --id <col> --vec <col> --threshold <cos> --out <parquetDir> [--scrub true | --cells <n> --nprobe <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        benchmark <- o.req("benchmark")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        t <- o.cosine("threshold")
+        scrub <- o.optBool("scrub", dflt = false)
+        ivf <- (o.get("cells"), o.get("nprobe")) match {
+          case (None, None) => Right(None)
+          case (Some(c), Some(p)) =>
+            (for { ci <- c.toIntOption.filter(_ >= 1)
+                   pi <- p.toIntOption.filter(_ >= 1) } yield (ci, pi))
+              .toRight(s"${o.cmd}: --cells/--nprobe must be positive ints, got ($c, $p)")
+              .map(Some(_))
+          case _ => o.fail("--cells and --nprobe go together " +
+            "(the IVF-accelerated route needs both)")
+        }
+        _ <- if (!(scrub && ivf.nonEmpty)) Right(())
+          else o.fail("--scrub is exact-only — IVF probing is " +
+            "approximate at cell boundaries; scrub on its flagged ids explicitly")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // semantic decontamination: the benchmark broadcasts into one
+        // corpus scan; --scrub true writes the surviving corpus instead
+        // of the flagged ids; --cells/--nprobe route through the
+        // IVF-accelerated form (large benchmark suites — each benchmark
+        // vector probes only adjacent cells)
+        val c = spark.read.parquet(corpus)
+        val b = spark.read.parquet(benchmark)
+        ivf match {
+          case Some((cells, nprobe)) =>
+            graft.dedup.Decontaminate.embedContaminatedIdsIvf(
+              c, b, id, vec, t, cells, nprobe)
+          case None if scrub =>
+            graft.dedup.Decontaminate.embedScrub(c, b, id, vec, t)
+          case None =>
+            graft.dedup.Decontaminate.embedContaminatedIds(c, b, id, vec, t)
+        }
+      }
+    },
+
+    Command("embed-decon-gate", "--source <parquetDir> --benchmark <parquet> --id <col> --vec <col> --threshold <cos> --dest <storeDir> --table <t> --checkpoint <dir>") { o =>
+      for {
+        source <- o.req("source")
+        benchmark <- o.req("benchmark")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        t <- o.cosine("threshold")
+        dest <- o.req("dest")
+        table <- o.req("table")
+        ck <- o.req("checkpoint")
+      } yield drain(o.cmd, source) { (spark, stream) =>
+        graft.streaming.IncrementalStream.embedContaminationGate(
+          stream, spark.read.parquet(benchmark), id, vec, t,
+          new ParquetStore(spark, dest), table, ck)
+      }
+    },
+
+    Command("cluster-balance", "--corpus <parquet> --id <col> --vec <col> --centroids <k> --cap <n> --out <parquetDir> [--iterations <n>]") { o =>
+      for {
+        corpus <- o.req("corpus")
+        id <- o.req("id")
+        vec <- o.req("vec")
+        k <- o.posInt("centroids")
+        cap <- o.posInt("cap")
+        iters <- o.optInt("iterations", 3)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the diversity-balancing stage: train centroids over the corpus
+        // (Lloyd, offline-cadence — this IS the offline pass), assign,
+        // cap per cluster by id; output keeps the cluster audit column
+        val c = spark.read.parquet(corpus)
+        val cents = graft.similarity.Similarity.ivfCentroids(c, id, vec, k, iters)
+        graft.operators.Sampling.clusterCap(c, id, vec, cents, cap)
+      }
+    },
+
+    Command("robots-filter", "--urls <parquet> --robots <parquet keyed by the --host column, text in --txt col (default robots_txt)> --agent <name> --host <col> --path <col> --out <parquetDir> [--txt <col>] [--decisions true] [--join true]") { o =>
+      for {
+        urls <- o.req("urls")
+        robots <- o.req("robots")
+        agent <- o.req("agent")
+        host <- o.req("host")
+        path <- o.req("path")
+        txt = o.get("txt").getOrElse("robots_txt")
+        decisions <- o.optBool("decisions", dflt = false)
+        join <- o.optBool("join", dflt = false)
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // the politeness gate: rules parsed once (RFC 9309 groups), then
+        // either collected into the RobotsDecision plan literal (default —
+        // fastest while the rules fit a task closure) or, with --join true,
+        // kept distributed and joined host-keyed (the mega-host escape for
+        // broad-crawl frontiers); --decisions true writes every URL with
+        // its `allowed` verdict instead of only survivors
+        val rules = graft.operators.Robots.parse(
+          spark.read.parquet(robots), host, txt, agent)
+        val u = spark.read.parquet(urls)
+        val decided =
+          if (join) graft.operators.Robots.isAllowedJoin(u, rules, host, path)
+          else graft.operators.Robots.isAllowed(u, rules, host, path)
+        if (decisions) decided
+        else decided.filter(org.apache.spark.sql.functions.col("allowed"))
+          .drop("allowed")
+      }
+    },
+
+    Command("retain-history", "--history <parquetDir> --horizon <n> --out <parquetDir>") { o =>
+      for {
+        history <- o.req("history")
+        horizon <- o.posLong("horizon")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // retention pruning: intervals ended at/before the horizon drop;
+        // asOf/pitJoin at any version >= horizon are unchanged (reads
+        // below the horizon become incomplete BY DESIGN — retention)
+        graft.sync.History.retainSince(spark.read.parquet(history), horizon)
+      }
+    },
+
+    Command("asof", "--history <parquetDir> --version <n> --out <parquetDir>") { o =>
+      for {
+        history <- o.req("history")
+        version <- o.posLong("version")
+        out <- o.req("out")
+      } yield overwrite(out) { spark =>
+        // time travel: the table exactly as of --version
+        graft.sync.History.asOf(spark.read.parquet(history), version)
+      }
+    },
+
+    Command("compact", "--dir <parquetDir> [--target-mb <n>]") { o =>
+      for {
+        d <- o.req("dir")
+        mb <- o.optInt("target-mb", 128)
+      } yield (spark: SparkSession) => {
+        // the maintenance half of the streaming serving loops: every
+        // AvailableNow drain appends a few files per micro-batch, and after
+        // months of cron ticks the accumulated log is thousands of KB-sized
+        // parquet files. Run THIS in the same maintenance window (exclusive
+        // access — see Compaction's contract). The serving retry guards
+        // survive it: they filter on (__run, __batch) ROWS, not files
+        val stats = graft.files.Compaction.compact(
+          spark, d, targetBytes = mb.toLong * 1024 * 1024)
+        System.err.println(s"[compact] ${stats.filesBefore} -> ${stats.filesAfter} " +
+          s"files (${stats.bytesTotal} bytes) under $d")
+        0
+      }
+    }
+  )
+
+  private lazy val usage: String =
+    commands.map(c => s"${c.name} ${c.usage}").mkString("usage: ", "\n       ", "")
 }

@@ -45,26 +45,4 @@ object Introspect {
     * insert-if-identical-row-absent). Pure; unit-tested. */
   def conflictKey(discoveredPks: Seq[String], allColumns: Seq[String]): Seq[String] =
     if (discoveredPks.nonEmpty) discoveredPks else allColumns
-
-  /** Column metadata via DatabaseMetaData (portable analog of the
-    * information_schema query at sync_utils.py:197-204), ordinal order. */
-  def tableSchema(conn: Connection, table: String): Seq[ColumnMeta] = {
-    val rs = conn.getMetaData.getColumns(null, null, table, null)
-    val cols = ArrayBuffer.empty[(Int, ColumnMeta)]
-    while (rs.next()) {
-      val typeName = rs.getString("TYPE_NAME")
-      val size = rs.getInt("COLUMN_SIZE")
-      val scale = rs.getInt("DECIMAL_DIGITS")
-      cols += ((rs.getInt("ORDINAL_POSITION"), ColumnMeta(
-        name = rs.getString("COLUMN_NAME"),
-        typeName = typeName,
-        nullable = rs.getInt("NULLABLE") != java.sql.DatabaseMetaData.columnNoNulls,
-        charLength = if (typeName.toLowerCase.contains("char")) Some(size) else None,
-        precision = if (typeName.toLowerCase.matches("numeric|decimal")) Some(size) else None,
-        scale = if (typeName.toLowerCase.matches("numeric|decimal")) Some(scale) else None,
-        isArray = typeName.startsWith("_"))))
-    }
-    rs.close()
-    cols.sortBy(_._1).map(_._2).toSeq
-  }
 }

@@ -1838,4 +1838,186 @@ class MainSpec extends SparkSpec {
     // the 8-row topic capped to its 4 LOWEST ids; the 3-row topic whole
     assert(byCluster.values.toSet === Set(Seq(0L, 1L, 2L, 3L), Seq(10L, 11L, 12L)))
   }
+
+  test("CLI-only subcommands: each artifact equals a direct operator call; a missing required flag exits 2") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, explode, expr, when}
+    val tmp = Files.createTempDirectory("graft_cli_pin").toString
+    def in(name: String) = s"$tmp/in/$name"
+    def read(name: String) = spark.read.parquet(in(name))
+    Seq((1L, "a", 1L, 3L, 2L, "x y z w x y"), (2L, "a", 2L, 4L, 1L, "x y z q"),
+        (3L, "b", 1L, 5L, 1L, "x y z w p r"), (4L, "b", 2L, 2L, 3L, "cafÃ© one. Two here!"))
+      .toDF("id", "src", "ord", "tok", "pri", "text").write.parquet(in("docs"))
+    Seq(("n", "x", 1L), ("n", "x", 2L), ("m", "y", 3L))
+      .toDF("a", "b", "id").write.parquet(in("people"))
+    Seq((1L, "http://h.com/d/p", """<a href="/x">x</a> <a href="q?b=1">q</a>"""))
+      .toDF("id", "url", "html").write.parquet(in("pages"))
+    Seq(("h.com", "User-agent: *\nSitemap: http://h.com/s.xml"))
+      .toDF("host", "robots_txt").write.parquet(in("robots"))
+    Seq((1L, "http://H.com/a"), (2L, "http://h.com/a"), (3L, "not a url"),
+        (4L, "http://g.org/b"))
+      .toDF("id", "url").write.parquet(in("urls"))
+    Seq((1L, "a")).toDF("id", "v").write.parquet(in("old"))
+    Seq(("1", "a", 2.0)).toDF("id", "v", "w").write.parquet(in("new"))
+    def avi(levels: Seq[Int]): Array[Byte] = {
+      def le32(v: Int): Array[Byte] =
+        Array(v, v >> 8, v >> 16, v >> 24).map(x => (x & 0xff).toByte)
+      def chunk(cid: String, data: Array[Byte]): Array[Byte] =
+        cid.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
+          (if ((data.length & 1) == 1) Array(0.toByte) else Array.empty[Byte])
+      def jpeg(g: Int): Array[Byte] = {
+        val img = new java.awt.image.BufferedImage(16, 16,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        for (y <- 0 until 16; x <- 0 until 16) img.setRGB(x, y, g * 0x010101)
+        val bos = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(img, "jpg", bos)
+        bos.toByteArray
+      }
+      "RIFF".getBytes("US-ASCII") ++ le32(0) ++ "AVI ".getBytes("US-ASCII") ++
+        chunk("LIST", "movi".getBytes("US-ASCII") ++
+          levels.flatMap(g => chunk("00dc", jpeg(g))).toArray)
+    }
+    Seq((7L, avi(Seq(20, 220, 220, 20)))).toDF("doc_id", "media")
+      .write.parquet(in("video"))
+
+    // (args, the flag dropped for the exit-2 check, the direct operator call)
+    val pins: Seq[(Seq[String], String, () => DataFrame)] = Seq(
+      (Seq("budget-mixture", "--corpus", in("docs"), "--source", "src",
+        "--order", "ord", "--tokens", "tok", "--weights", "a=1,b=1",
+        "--budget", "6"), "budget",
+        () => graft.operators.Sampling.budgetMixture(read("docs"), "src", "ord",
+          "tok", Map("a" -> 1L, "b" -> 1L), 6L)),
+      (Seq("curriculum-order", "--corpus", in("docs"), "--id", "id",
+        "--priority", "pri", "--rows-per-shard", "2", "--seed", "s"), "priority",
+        () => graft.operators.Sampling.curriculumShuffle(read("docs"), "id",
+          "pri", "s", 2L)),
+      (Seq("data-card", "--corpus", in("docs"), "--group", "src", "--id", "id",
+        "--text", "text"), "group",
+        () => graft.text.TextAnalysis.dataCard(read("docs"), "src", "id", "text")),
+      (Seq("fix-mojibake", "--corpus", in("docs"), "--id", "id",
+        "--text", "text"), "text",
+        () => read("docs").select(col("id"),
+          graft.functions.FixMojibake(col("text")).as("fixed"),
+          when(graft.functions.FixMojibake(col("text")) =!= col("text"), 1L)
+            .otherwise(0L).as("repaired"))),
+      (Seq("k-anonymity", "--corpus", in("people"), "--quasi", "a,b",
+        "--k", "2"), "quasi",
+        () => graft.operators.Expectations.kAnonymity(read("people"),
+          Seq("a", "b"), 2L)),
+      (Seq("outlinks", "--pages", in("pages"), "--id", "id", "--html", "html",
+        "--url", "url"), "url",
+        () => read("pages")
+          .select(col("id"), col("url"),
+            explode(graft.text.Html.outlinks(col("html"))).as("href"))
+          .select(col("id"), graft.functions.UrlNormalize(
+            graft.functions.UrlResolve(col("url"), col("href"))).as("dst"))
+          .filter(col("dst").isNotNull)),
+      (Seq("robots-sitemaps", "--robots", in("robots"), "--host", "host"), "host",
+        () => graft.operators.Robots.sitemaps(read("robots"), "host", "robots_txt")),
+      (Seq("scene-cuts", "--corpus", in("video")), "corpus",
+        () => graft.multimodal.Multimodal.sceneCuts(
+          graft.multimodal.Multimodal.decodeFramesOf(read("video"))(spark).toDF(),
+          100000L)),
+      (Seq("schema-drift", "--old", in("old"), "--new", in("new")), "new",
+        () => graft.sync.Diff.schemaDiff(read("old"), read("new"))),
+      (Seq("sentences", "--corpus", in("docs"), "--id", "id", "--text", "text"), "id",
+        () => graft.text.TextAnalysis.sentences(read("docs"), "id", "text")),
+      (Seq("source-overlap", "--corpus", in("docs"), "--source", "src",
+        "--text", "text", "--gram", "2"), "source",
+        () => graft.dedup.Dedup.sourceOverlapMatrix(read("docs"), "src", "text", 2)),
+      (Seq("span-gate-loss", "--corpus", in("docs"), "--id", "id", "--text", "text",
+        "--gram", "2", "--min-run", "2", "--max-df", "2"), "text",
+        () => graft.dedup.Decontaminate.spanGateLoss(read("docs"), "id", "text",
+          2, 2, 2)),
+      (Seq("token-shards", "--corpus", in("docs"), "--tokens", "tok",
+        "--order", "id", "--bucket-width", "2", "--shards", "2"), "shards",
+        () => graft.operators.Sampling.tokenBalancedShards(read("docs"), "tok",
+          expr("`id` div 2"), Seq(col("id")), 2)),
+      (Seq("warc-export", "--corpus", in("docs"), "--file-col", "ord",
+        "--id", "id", "--text", "text", "--date", "2026-01-01T00:00:00Z"), "date",
+        () => graft.sources.Warc.export(read("docs"), "ord", "id", "text", None,
+          "2026-01-01T00:00:00Z")(spark)))
+
+    def sameRows(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.columns.toSeq === want.columns.toSeq)
+      assert(got.count() > 0, "a pin over an empty artifact pins nothing")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+    def without(args: Seq[String], flag: String): Array[String] = {
+      val i = args.indexOf(s"--$flag")
+      assert(i > 0)
+      (args.take(i) ++ args.drop(i + 2)).toArray
+    }
+    for ((args, required, direct) <- pins) withClue(args.head + ": ") {
+      val out = s"$tmp/out/${args.head}"
+      assert(Main.run(spark, (args ++ Seq("--out", out)).toArray) === 0)
+      sameRows(spark.read.parquet(out), direct())
+      assert(Main.run(spark, without(args :+ "--out" :+ s"$tmp/x", required)) === 2)
+    }
+
+    // url-frontier is a streaming gate: compare its store with the same
+    // gate started directly over the same source
+    val frontier = Seq("url-frontier", "--source", in("urls"), "--id", "id",
+      "--url", "url", "--dest", s"$tmp/frontier", "--table", "seen",
+      "--checkpoint", s"$tmp/ck_frontier", "--max-per-host", "1")
+    assert(Main.run(spark, frontier.toArray) === 0)
+    graft.streaming.IncrementalStream.frontierGate(
+      spark.readStream.schema(read("urls").schema).parquet(in("urls")),
+      "id", "url", new graft.sync.ParquetStore(spark, s"$tmp/direct"), "seen",
+      s"$tmp/ck_direct", maxPerHost = Some(1L)).awaitTermination()
+    sameRows(spark.read.parquet(s"$tmp/frontier/seen.parquet"),
+      spark.read.parquet(s"$tmp/direct/seen.parquet"))
+    assert(Main.run(spark, without(frontier, "url")) === 2)
+  }
+
+  test("a flag the usage line does not declare, or a repeated flag, is a usage error") {
+    val tmp = Files.createTempDirectory("graft_cli_flags").toString
+    // a missing source drains nothing and exits 0, so only flag
+    // validation can turn these invocations into usage errors
+    val gate = Seq("ingest-dedup", "--source", s"$tmp/none", "--index", s"$tmp/idx",
+      "--id", "id", "--text", "text", "--ngram", "1", "--num", "9", "--den", "10",
+      "--hashes", "20", "--bands", "5", "--dest", s"$tmp/gate", "--table", "rejects",
+      "--checkpoint", s"$tmp/ck")
+    assert(Main.run(spark, (gate ++ Seq("--tombstones", "true")).toArray) === 0)
+    // misspelt optional flag: would run the gate without tombstones
+    assert(Main.run(spark, (gate ++ Seq("--tombstone", "true")).toArray) === 2)
+    // repeated flag: would silently take the last value
+    assert(Main.run(spark, (gate ++ Seq("--table", "other")).toArray) === 2)
+    assert(Main.run(spark, (gate ++ Seq("--tombstones", "true", "--tombstones", "false"))
+      .toArray) === 2)
+    // a flag of a sibling command is not a flag of this one
+    assert(Main.run(spark, Array("winnow", "--corpus", s"$tmp/none", "--id", "id",
+      "--text", "text", "--out", s"$tmp/out", "--min-shared", "2")) === 2)
+    val src = Files.createTempDirectory("graft_cli_flags_fs")
+    assert(Main.run(spark, Array("file-sync", src.toString, s"$tmp/fs",
+      "--apply", "--apply")) === 2)
+    assert(Main.run(spark, Array("file-sync", src.toString, s"$tmp/fs",
+      "--force", "true")) === 2)
+  }
+
+  test("db-sync --pks trims its column lists") {
+    val srcDir = Files.createTempDirectory("graft_cli_pks_src").toString
+    val dstDir = Files.createTempDirectory("graft_cli_pks_dst").toString
+    // two rows share id: only the (id, v) key keeps both
+    Seq((1L, "a"), (1L, "b"), (2L, "a")).toDF("id", "v")
+      .write.parquet(s"$srcDir/t.parquet")
+    val cfgPath = Files.createTempFile("graft_cli_pks", ".yaml")
+    Files.writeString(cfgPath,
+      "tables:\n  t:\n    sync_config:\n      check_column: id\n      check_type: id\n")
+    assert(Main.run(spark, Array("db-sync", "--config", cfgPath.toString,
+      "--source", srcDir, "--dest", dstDir, "--pks", "t=id, v")) === 0)
+    assert(spark.read.parquet(s"$dstDir/t.parquet").as[(Long, String)].collect()
+      .toSet === Set((1L, "a"), (1L, "b"), (2L, "a")))
+  }
+
+  test("every graft.cli.Main example in README.md parses without a usage error") {
+    val lines = Files.readString(java.nio.file.Paths.get("README.md"))
+      .replace("\\\n", " ").linesIterator
+      .map(_.trim).filter(_.startsWith("graft.cli.Main ")).toSeq
+    assert(lines.nonEmpty)
+    for (line <- lines) {
+      val args = line.split("\\s+").toList.drop(1)
+      assert(Main.parse(args).isRight, s"usage error: $line -> ${Main.parse(args)}")
+    }
+  }
 }
