@@ -97,11 +97,13 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
       // one file per partition: a partition split over several files could
       // be landed in part, breaking the order the landing contract promises
       df.write.option("maxRecordsPerFile", 0L).parquet(stage.toString)
+      // footers are read before the lock, so it covers only the renames
+      val files = staged(stage)
       ParquetStore.synchronized {
         val dst = new Path(pathOf(table))
         if (!fs.exists(dst)) {
           if (!fs.rename(stage, dst)) sys.error(s"rename failed for $table")
-        } else land(staged(stage), table)
+        } else land(files, table)
       }
     } finally fs.delete(stage, true)
   }
