@@ -20,8 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // custom plan node: Upsert(base, delta, pks) expands during analysis
-    ext.injectResolutionRule(_ => graft.plans.ResolveUpsert)
   }
 }
 

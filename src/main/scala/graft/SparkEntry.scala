@@ -3139,7 +3139,7 @@ object SparkEntry {
 
     // opt-in delete propagation (SURVEY §2.4-1): the reference never
     // deletes, so destination rows whose key vanished upstream persist
-    // forever; upsertWithDeletes drops them via a KEY-ONLY source scan
+    // forever; Merge.applyDeletes drops them via a KEY-ONLY source scan
     // (column pruning reaches the reader — pk bytes, not the table) +
     // left-semi join, while the row extract stays incremental. Here the
     // destination holds keys <= 4000, the incremental delta covers
@@ -3152,8 +3152,8 @@ object SparkEntry {
       val delta = orders.filter(col("o_orderkey").between(2000, 6000))
         .select(col("o_orderkey"), negate(col("o_totalprice")).as("o_totalprice"))
       val sourceKeys = orders.filter(col("o_orderkey") >= 2000).select("o_orderkey")
-      Merge.upsertWithDeletes(base, delta, sourceKeys, Seq("o_orderkey"))
-        .orderBy("o_orderkey")
+      Merge.applyDeletes(Merge.upsert(base, delta, Seq("o_orderkey")),
+        sourceKeys, Seq("o_orderkey")).orderBy("o_orderkey")
     }),
 
     // name-and-hash file sync (SURVEY §2.4-2): the reference's README
@@ -5348,10 +5348,10 @@ object SparkEntry {
           maxHamming = 3, store = store, checkpointDir = s"$tmp/ck")
           .awaitTermination()
         val got = store.read("dup_pairs").get.select("id_a", "id_b")
-        val want = Dedup.simhashNearDups(Tables.fanOut(docs), "doc_id", "text",
+        val want = Dedup.simhashNearDups(docs, "doc_id", "text",
           TextAnalysis.tokenSet, maxHamming = 3)
         val nSigs = store.read("fingerprints").get.count()
-        val nDocs = Tables.fanOut(docs)
+        val nDocs = docs
           .filter(size(Dedup.hashedShingles(TextAnalysis.tokenSet(col("text")))) > 0)
           .count()
         got.except(want).unionByName(want.except(got))
@@ -6250,7 +6250,7 @@ object SparkEntry {
     }),
 
     // q245: streamed CDC history maintenance — q240's upsert-only feed
-    // upgraded with DELETE events (the upsertWithDeletes pairing,
+    // upgraded with DELETE events (the upsert + applyDeletes pairing,
     // temporal form): each snapshot's change set arrives as upserts
     // plus explicit deletes for vanished keys, and because explicit
     // deletes replicate close-on-absence exactly, the maintained

@@ -19,8 +19,8 @@ import scala.jdk.CollectionConverters._
   * specs drive a full two-service catalog from env-shaped input with no
   * process-environment mutation. The reference builds SQLAlchemy pool-of-5
   * engines per profile; the Spark-native transport is a JDBC options map
-  * consumed by `sync.JdbcStore` / `sources.UpsertWriter` — executors manage
-  * their own connections, so no driver-side pool exists to configure.
+  * consumed by `sync.JdbcStore` — executors manage their own
+  * connections, so no driver-side pool exists to configure.
   */
 object EnvConfig {
 

@@ -68,11 +68,8 @@ object Coerce {
 
   /** Whole-frame dispatch mirroring prepare_record's per-type rules.
     * `jsonColumns` marks string columns that carry JSONB payloads (Spark has
-    * no JSONB type; the reference sees a rendered type string instead).
-    * `unicodeWhitespace` opts string columns into [[stripUnicode]]'s full
-    * Python whitespace set (§2.4-11). */
-  def frame(df: DataFrame, jsonColumns: Set[String] = Set.empty,
-            unicodeWhitespace: Boolean = false): DataFrame = {
+    * no JSONB type; the reference sees a rendered type string instead). */
+  def frame(df: DataFrame, jsonColumns: Set[String] = Set.empty): DataFrame = {
     val exprs = df.schema.fields.toSeq.map { f =>
       val c = col(f.name)
       val coerced = f.dataType match {
@@ -82,8 +79,7 @@ object Coerce {
         // int(float(v)) targets incoming *strings*; a double round-trip on a
         // typed bigint would corrupt values above 2^53 and widen every int
         // column to long (schema drift through Merge's union).
-        case _: StringType             =>
-          if (unicodeWhitespace) stripUnicode(c) else strip(c)
+        case _: StringType             => strip(c)
         case _                         => c // ints/dates/timestamps/doubles pass through
       }
       coerced.as(f.name)

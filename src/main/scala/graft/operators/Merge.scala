@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,22 +25,11 @@ object Merge {
   private val RN   = "__graft_rn"
 
   /** Delta wins on key conflict; both sides' unmatched rows kept.
-    * Ties WITHIN a side (duplicate keys inside the delta) are broken by a
-    * NULL-TAGGED hash of the full row (Checksum.rowHash — a raw xxhash64
-    * SKIPS null arguments, so (x, NULL) and (NULL, x) would tie and the
-    * survivor would again be shuffle-order-dependent) — arbitrary but
-    * DETERMINISTIC, where plain orderBy(prec) would let shuffle arrival
-    * order pick the survivor (run-to-run nondeterminism under AQE/task
-    * retries). */
+    * Ties WITHIN a side (duplicate keys inside the delta) go to
+    * [[firstPerKey]]'s deterministic row-hash tie-break. */
   def upsert(base: DataFrame, delta: DataFrame, pks: Seq[String]): DataFrame = {
     require(pks.nonEmpty, "upsert requires at least one key column (O3 falls back to all columns)")
-    val unioned = base.withColumn(PREC, lit(0)).unionByName(delta.withColumn(PREC, lit(1)))
-    val tieBreak = graft.sync.Checksum.rowHash(base.columns.map(col).toIndexedSeq)
-    val w = Window.partitionBy(pks.map(col): _*).orderBy(col(PREC).desc, tieBreak.desc)
-    unioned
-      .withColumn(RN, row_number().over(w))
-      .filter(col(RN) === 1)
-      .drop(PREC, RN)
+    firstPerKey(sided(base, delta), pks, Seq(col(PREC).desc))
   }
 
   /** The delta-only half of [[upsert]]: one row per key, the SAME survivor
@@ -54,12 +43,7 @@ object Merge {
     * column) is windowed without a second shuffle. */
   def dedup(delta: DataFrame, pks: Seq[String]): DataFrame = {
     require(pks.nonEmpty, "dedup requires at least one key column")
-    val tieBreak = graft.sync.Checksum.rowHash(delta.columns.map(col).toIndexedSeq)
-    val w = Window.partitionBy(pks.map(col): _*).orderBy(tieBreak.desc)
-    delta
-      .withColumn(RN, row_number().over(w))
-      .filter(col(RN) === 1)
-      .drop(RN)
+    firstPerKey(delta, pks, Nil)
   }
 
   /** Opt-in SCHEMA-EVOLUTION upsert (the last §2.4-style divergence with a
@@ -105,11 +89,6 @@ object Merge {
     upsert(widened.select(delta.columns.map(col).toIndexedSeq: _*), delta, pks)
   }
 
-  /** No-PK fallback: the reference upserts on *all* columns
-    * (sync_utils.py:156-168 + :178-193) — insert-if-identical-row-absent. */
-  def upsertAllColumns(base: DataFrame, delta: DataFrame): DataFrame =
-    upsert(base, delta, base.columns.toSeq)
-
   /** Conditional upsert — "replace only if newer": the winner per key is
     * the row with the greatest `orderCols` tuple REGARDLESS of side (ties
     * go to the delta, duplicate ties within a side to a deterministic row
@@ -124,50 +103,46 @@ object Merge {
                     orderCols: Seq[String]): DataFrame = {
     require(pks.nonEmpty, "upsertIfNewer requires at least one key column")
     require(orderCols.nonEmpty, "upsertIfNewer requires at least one precedence column")
-    val unioned = base.withColumn(PREC, lit(0)).unionByName(delta.withColumn(PREC, lit(1)))
-    val tieBreak = graft.sync.Checksum.rowHash(base.columns.map(col).toIndexedSeq)
-    val w = Window.partitionBy(pks.map(col): _*)
-      .orderBy(orderCols.map(col(_).desc) ++ Seq(col(PREC).desc, tieBreak.desc): _*)
-    unioned
-      .withColumn(RN, row_number().over(w))
-      .filter(col(RN) === 1)
-      .drop(PREC, RN)
+    firstPerKey(sided(base, delta), pks, orderCols.map(col(_).desc) :+ col(PREC).desc)
   }
 
   /** Opt-in delete propagation (SURVEY §2.4-1: the reference never deletes —
     * rows removed upstream persist in the destination forever; this is the
-    * documented optional mode that fixes it WITHOUT a full re-copy).
+    * documented optional mode that fixes it WITHOUT a full re-copy): keep
+    * only `merged` rows whose key still exists in `sourceKeys`. SyncJob
+    * composes it after [[upsert]] or [[upsertEvolving]].
     *
     * `sourceKeys` is the CURRENT source key set — at scale a column-pruned,
     * key-only scan (pks reach the parquet/JDBC reader via ReadSchema /
     * SELECT pk list), orders of magnitude cheaper than re-extracting rows.
-    * Destination rows whose key has vanished from the source are dropped by
-    * a left-semi join; everything else follows upsert's last-writer-wins.
     *
     * Scale: the semi join keys on the same pks the upsert window already
     * hash-partitioned on, so the left side arrives pre-partitioned and only
     * the (narrow) key relation shuffles; AQE broadcasts it when small.
     */
-  def upsertWithDeletes(base: DataFrame, delta: DataFrame,
-                        sourceKeys: DataFrame, pks: Seq[String]): DataFrame =
-    applyDeletes(upsert(base, delta, pks), sourceKeys, pks)
-
-  /** The delete-propagation tail alone: keep only `merged` rows whose key
-    * still exists in `sourceKeys`. ONE definition of the semi-join so the
-    * plain ([[upsertWithDeletes]]) and schema-evolving (SyncJob composes
-    * this after [[upsertEvolving]]) paths cannot drift. */
   def applyDeletes(merged: DataFrame, sourceKeys: DataFrame, pks: Seq[String]): DataFrame =
     merged.join(sourceKeys.select(pks.map(col): _*), pks, "left_semi")
 
-  /** Plan-node form: builds the custom graft.plans.Upsert logical operator
-    * and expands it (ResolveUpsert fires automatically in sessions created
-    * with spark.sql.extensions=graft.GraftExtensions; applied eagerly here
-    * so the API also works on plain sessions). Identical semantics to
-    * upsert() — the node is sugar over the same relational plan. */
-  def upsertPlan(base: DataFrame, delta: DataFrame, pks: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    val node = graft.plans.Upsert(
-      GraftColumnBridge.logicalPlan(base), GraftColumnBridge.logicalPlan(delta), pks)
-    GraftColumnBridge.ofRows(base.sparkSession, graft.plans.ResolveUpsert(node))
+  /** Base rows tagged precedence 0, delta rows 1, unioned by name. */
+  private def sided(base: DataFrame, delta: DataFrame): DataFrame =
+    base.withColumn(PREC, lit(0)).unionByName(delta.withColumn(PREC, lit(1)))
+
+  /** The one keyed-survivor window behind [[upsert]], [[upsertIfNewer]] and
+    * [[dedup]]: per `pks`, keep the row that sorts first under `order`,
+    * ties broken by a NULL-TAGGED hash of the row's data columns in their
+    * order (Checksum.rowHash — a raw xxhash64 SKIPS null arguments, so
+    * (x, NULL) and (NULL, x) would tie and the survivor would again be
+    * shuffle-order-dependent) — arbitrary but DETERMINISTIC, where ordering
+    * on `order` alone would let shuffle arrival order pick the survivor
+    * (run-to-run nondeterminism under AQE/task retries). Drops the window's
+    * and [[sided]]'s helper columns. */
+  private def firstPerKey(rows: DataFrame, pks: Seq[String], order: Seq[Column]): DataFrame = {
+    val data = rows.columns.filterNot(_ == PREC)
+    val tieBreak = graft.sync.Checksum.rowHash(data.map(col).toIndexedSeq)
+    val w = Window.partitionBy(pks.map(col): _*).orderBy(order :+ tieBreak.desc: _*)
+    rows
+      .withColumn(RN, row_number().over(w))
+      .filter(col(RN) === 1)
+      .drop(PREC, RN)
   }
 }

@@ -143,7 +143,7 @@ object IncrementalStream {
     * loud stream failure instead of silently inverted intervals.
     *
     * CDC DELETES (`opCol`): a change-data-capture feed carries delete
-    * events the watermark-pull shape cannot (the upsertWithDeletes
+    * events the watermark-pull shape cannot (the upsert + applyDeletes
     * pairing, temporal form). With `opCol` set, rows whose op equals
     * `deleteOp` CLOSE their key's open interval at the row's version
     * (`History.scd2Close` — compare columns of a delete row are

@@ -78,7 +78,7 @@ object History {
     * delta simply stay open — an incremental pull cannot distinguish
     * "unchanged" from "removed", so the upsert apply never closes on
     * absence. Sources that do emit delete events close them explicitly
-    * with [[scd2Close]] (the upsertWithDeletes pairing, temporal form).
+    * with [[scd2Close]] (the upsert + applyDeletes pairing, temporal form).
     * A delta row equal to the key's open values is a no-op, so
     * re-delivered rows (at-least-once pulls) do not fragment intervals. */
   def scd2ApplyUpserts(history: DataFrame, delta: DataFrame, pks: Seq[String],

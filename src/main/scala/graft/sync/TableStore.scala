@@ -227,8 +227,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     * failure PROPAGATES (read's classification): silently downgrading to
     * recreate would destroy indexes/grants on a healthy matching table. */
   override def write(df: DataFrame, table: String): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
+    val p = connProps
     // materialize BEFORE any destructive statement: overwrite clears the
     // table first and only then executes df's plan — a plan that reads
     // this very table (SyncJob's merge, upsertSync) would scan the
@@ -236,15 +235,12 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     // previously-synced row. ParquetStore stages via temp+rename; a
     // database has no cheap rename, so staging happens on the executors.
     val staged = df.localCheckpoint()
-    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    def colTypes(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(f => key(f.name) -> f.dataType).toMap
     val existingSchema = read(table).map(_.schema) // missing -> None; transient throws
     val sameColumns = existingSchema.exists(ex => colTypes(ex) == colTypes(staged.schema))
     val truncateSafe = sameColumns && {
       val notNull = nullableUnsafeColumns(table, p)
       val risky = staged.schema.fields
-        .filter(f => f.nullable && notNull(key(f.name))).map(_.name)
+        .filter(f => f.nullable && notNull(lower(f.name))).map(_.name)
       risky.isEmpty ||
         staged.filter(risky.map(c => org.apache.spark.sql.functions.col(c).isNull)
           .reduce(_ || _)).isEmpty
@@ -255,11 +251,8 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
 
   /** Native SQL append: batched INSERTs of df's rows only — O(df), and no
     * truncate-safety probe because nothing destructive runs. */
-  override def append(df: DataFrame, table: String): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
-    df.write.mode("append").option("batchsize", 1000).jdbc(url, table, p)
-  }
+  override def append(df: DataFrame, table: String): Unit =
+    df.write.mode("append").option("batchsize", 1000).jdbc(url, table, connProps)
 
   /** All-or-nothing replace, the JDBC analog of ParquetStore's temp+rename:
     * `write`'s truncate/recreate + batched INSERT commits per executor
@@ -277,8 +270,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     * not bulk syncs. Identifiers are quoted through Spark's own dialect
     * for this URL, matching how Spark quotes them at CREATE time. */
   override def writeAtomic(df: DataFrame, table: String): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
+    val p = connProps
     val stage = table + "__stage"
     // materialize before touching anything: df's plan may read `table`
     val staged = df.localCheckpoint()
@@ -294,8 +286,6 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     // table — is strictly worse. Same name->type compare as write()'s
     // truncate probe: anything uncertain recreates.
     val existing = read(table).map(_.schema)
-    def colTypes(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap
     if (existing.exists(ex => colTypes(ex) != colTypes(staged.schema))) {
       write(staged, table)
       return
@@ -330,6 +320,21 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     } finally conn.close()
   }
 
+  /** The connection profile as the `Properties` that Spark's JDBC writer
+    * and `DriverManager` take; a fresh (mutable) copy per call. */
+  private def connProps: java.util.Properties = {
+    val p = new java.util.Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    p
+  }
+
+  private def lower(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+
+  /** Case-insensitive column name -> type map: the schema compare behind
+    * `write`'s truncate probe and `writeAtomic`'s evolution escape hatch. */
+  private def colTypes(s: org.apache.spark.sql.types.StructType) =
+    s.fields.map(f => lower(f.name) -> f.dataType).toMap
+
   /** Columns of `table` a NULL cannot safely land in: declared NOT NULL, or
     * nullability-unknown (trusting an unknown toward "nullable" risks
     * truncate-then-failed-INSERT data loss; toward "not null" costs at most
@@ -345,7 +350,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
         val md = st.executeQuery(s"SELECT * FROM $table WHERE 1=0").getMetaData
         (1 to md.getColumnCount).iterator
           .filter(i => md.isNullable(i) != java.sql.ResultSetMetaData.columnNullable)
-          .map(i => md.getColumnLabel(i).toLowerCase(java.util.Locale.ROOT)).toSet
+          .map(i => lower(md.getColumnLabel(i))).toSet
       } finally st.close()
     } finally conn.close()
   }

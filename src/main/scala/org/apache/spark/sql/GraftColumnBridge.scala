@@ -9,16 +9,6 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** DataFrame from a (possibly custom) logical plan — the private[sql]
-    * Dataset.ofRows, for surfacing custom plan nodes like graft.plans.Upsert. */
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** The analyzed logical plan behind a DataFrame. */
-  def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
   /** Bucket spec of a catalog table: (numBuckets, bucketColumns), if bucketed. */
   def bucketSpec(spark: SparkSession, table: String): Option[(Int, Seq[String])] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog

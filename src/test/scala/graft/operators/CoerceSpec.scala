@@ -41,11 +41,6 @@ class CoerceSpec extends SparkSpec {
     val interior = Seq("x\u00A0y").toDF("v")
       .select(Coerce.stripUnicode(col("v")).as("v")).head.getString(0)
     assert(interior === "x\u00A0y")
-    // frame opts in per corpus
-    val framed = Seq(("\u00A0z\u3000", 1L)).toDF("s", "n")
-    assert(Coerce.frame(framed, unicodeWhitespace = true)
-      .head.getString(0) === "z")
-    assert(Coerce.frame(framed).head.getString(0) === "\u00A0z\u3000")
   }
 
   test("arrayOrEmpty: NULL -> [] (sync_utils.py:86-94)") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** O9 upsert algebra: upsert(base, delta) == last-writer-wins map union
@@ -19,40 +20,49 @@ class MergeSpec extends SparkSpec {
   test("no-PK fallback upserts on all columns: insert-if-identical-row-absent") {
     val base  = Seq((1, "a"), (2, "b")).toDF("k", "v")
     val delta = Seq((2, "b"), (3, "c")).toDF("k", "v")
-    val out = Merge.upsertAllColumns(base, delta).collect()
+    val out = Merge.upsert(base, delta, base.columns.toSeq).collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet
     assert(out === Set((1, "a"), (2, "b"), (3, "c")))
   }
 
-  test("upsertPlan (custom Upsert node + ResolveUpsert rule) matches upsert()") {
-    val base  = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    val delta = Seq((2, "B"), (3, "C")).toDF("k", "v")
-    val viaPlan = Merge.upsertPlan(base, delta, Seq("k"))
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(viaPlan === Map(1 -> "a", 2 -> "B", 3 -> "C"))
-    // the custom node must be fully expanded — standard operators only
-    val analyzed = org.apache.spark.sql.GraftColumnBridge
-      .logicalPlan(Merge.upsertPlan(base, delta, Seq("k")))
-    assert(!analyzed.exists(_.isInstanceOf[graft.plans.Upsert]))
-  }
-
-  test("upsertWithDeletes drops keys absent from the source key set (§2.4-1 opt-in)") {
+  test("applyDeletes(upsert) drops keys absent from the source keys (§2.4-1)") {
     val base  = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
     val delta = Seq((3, "C"), (4, "D")).toDF("k", "v")
     // key 1 vanished upstream; 2 unchanged; 3 updated; 4 new
     val sourceKeys = Seq(2, 3, 4).toDF("k")
-    val out = Merge.upsertWithDeletes(base, delta, sourceKeys, Seq("k"))
+    val out = Merge.applyDeletes(Merge.upsert(base, delta, Seq("k")), sourceKeys, Seq("k"))
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(out === Map(2 -> "b", 3 -> "C", 4 -> "D"))
   }
 
-  test("upsertWithDeletes tolerates duplicate source keys (semi-join identity)") {
+  test("applyDeletes(upsert) tolerates duplicate source keys (semi-join)") {
     val base  = Seq((1, "a"), (2, "b")).toDF("k", "v")
     val delta = Seq.empty[(Int, String)].toDF("k", "v")
     val sourceKeys = Seq(2, 2, 2).toDF("k")
-    val out = Merge.upsertWithDeletes(base, delta, sourceKeys, Seq("k"))
+    val out = Merge.applyDeletes(Merge.upsert(base, delta, Seq("k")), sourceKeys, Seq("k"))
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(out === Map(2 -> "b"))
+  }
+
+  test("upsert, upsertIfNewer and dedup keep the same null-swapped survivor") {
+    // a raw xxhash64 skips NULL arguments, so these two rows hash alike
+    // and arrival order would pick the survivor; the null-tagged
+    // Checksum.rowHash tie-break must pick the same row however they arrive
+    val rows = Seq[(Int, String, String)]((1, "x", null), (1, null, "x"))
+    val base = rows.take(0).toDF("k", "a", "b")
+    def survivor(delta: DataFrame): Seq[(Int, String, String)] = {
+      val outs = Seq(
+        Merge.upsert(base, delta, Seq("k")),
+        Merge.upsertIfNewer(base, delta, Seq("k"), Seq("k")), // equal order values
+        Merge.dedup(delta, Seq("k")))
+        .map(_.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq)
+      outs.foreach(o => assert(o === outs.head))
+      assert(outs.head.size === 1)
+      outs.head
+    }
+    val single = survivor(rows.toDF("k", "a", "b").repartition(1))
+    val spread = survivor(rows.reverse.toDF("k", "a", "b").repartition(8))
+    assert(spread === single)
   }
 
   test("upsertIfNewer: only fresher rows replace; stale deltas are ignored; ties go to delta") {

@@ -12,9 +12,8 @@ import java.util.logging.Logger
   * driver. This is how the watermark-pushdown contract is graded END TO END:
   * the MAX really executes inside Derby, and the spec asserts the recorded
   * statements show a server-side `SELECT MAX(...)` subquery — not an
-  * engine-side pull of the whole check column. (RecordingJdbc is the other
-  * half of this harness family: a pure stub for write-path call ordering;
-  * this one delegates so reads return real data.)
+  * engine-side pull of the whole check column. It delegates, so reads
+  * return real data.
   */
 object SpyJdbc {
   val Prefix = "jdbc:graftspy:"
