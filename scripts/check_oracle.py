@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB correctness compare.
 
-Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir> [query ...]
 
 Reads each <out>/<name> parquet (Spark result), runs <out>/oracle_sql.json
 in DuckDB over the sf parquet tables, sorts columns by name, normalizes, and
-compares row-for-row.
+compares row-for-row. Optional query names restrict the compare to those
+queries, as `graft.Verify <sfDir> <outDir> [query ...]` restricts the dump;
+a name not in oracle_sql.json exits non-zero. With no names every query in
+oracle_sql.json is compared.
 """
 import sys, json, glob, os
 import duckdb
@@ -28,15 +31,18 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = s.astype("int64")
     return df.reset_index(drop=True)
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=()):
+    oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(set(only) - set(oracles))
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracles):
+    for name in sorted(set(only) or oracles):
         sql = oracles[name]
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
@@ -63,4 +69,4 @@ def main(sf_dir, out_dir):
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2], sys.argv[3:])

@@ -6952,7 +6952,6 @@ object SparkEntry {
     // batch-partitioning-invariance contract: how arrivals were cut
     // into batches must be invisible in the result)
     "q263_stream_warc_ingest" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
       val docs = t(s, dir, "documents")
       val files = warcCurationFiles(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("q263").toString

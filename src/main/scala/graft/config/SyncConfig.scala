@@ -7,8 +7,7 @@ import scala.jdk.CollectionConverters._
 
 /** O1 — config catalog (reference: load_table_config,
   * db-sync-local/sync_utils.py:7-11; YAML shape db-sync-local/netflix.yaml:1-7
-  * `tables: {name: {sync_config: {check_column, check_type, ignore_columns}}}`;
-  * GCP variant adds per-service table maps, db-sync-gcp/gcp_sync_utils.py:6-28).
+  * `tables: {name: {sync_config: {check_column, check_type, ignore_columns}}}`).
   *
   * snakeyaml ships on the Spark classpath — no new dependency. Config parsing
   * is driver-side and tiny; the catalog feeds the SyncJob/Runner plan.
@@ -34,13 +33,12 @@ case class TableConfig(
     name: String,
     checkColumn: Option[String],
     checkType: Option[CheckType],
-    ignoreColumns: Seq[String],
-    service: Option[String] = None)
+    ignoreColumns: Seq[String])
 
 object SyncConfig {
 
   /** Parse the reference's `tables:` YAML map; unknown keys ignored. */
-  def parse(yaml: String, service: Option[String] = None): Map[String, TableConfig] = {
+  def parse(yaml: String): Map[String, TableConfig] = {
     val root = Option(new Yaml().load[java.util.Map[String, Object]](yaml))
       .getOrElse(java.util.Map.of[String, Object]())
     // flatMap(Option(_)): a present-but-null `tables:` key yields Some(null)
@@ -68,29 +66,10 @@ object SyncConfig {
             .map(v => CheckType.parse(v.toString)),
           ignoreColumns = sync.flatMap(_.get("ignore_columns")).flatMap(Option(_))
             .map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString))
-            .getOrElse(Seq.empty),
-          service = service))
+            .getOrElse(Seq.empty)))
     }
   }
 
-  def loadFile(path: String, service: Option[String] = None): Map[String, TableConfig] =
-    parse(Files.readString(Paths.get(path)), service)
-
-  /** GCP-variant merge: several service-tagged configs into one catalog
-    * (gcp_sync_utils.py:14-25 tags each table with its service). Services
-    * merge in sorted-name order into a VectorMap, preserving each
-    * service's authored table order (a plain Map flatMap would degrade to
-    * hash order past 4 entries and silently clobber same-named tables —
-    * duplicates across services fail fast instead). */
-  def merge(perService: Map[String, String]): Map[String, TableConfig] =
-    perService.toSeq.sortBy(_._1)
-      .foldLeft(scala.collection.immutable.VectorMap.empty[String, TableConfig]) {
-        case (acc, (service, yaml)) =>
-          parse(yaml, Some(service)).foldLeft(acc) { case (a, (name, cfg)) =>
-            require(!a.contains(name),
-              s"table '$name' declared by both service '${a(name).service.getOrElse("?")}' " +
-                s"and service '$service' — qualify the names or split the catalogs")
-            a.updated(name, cfg)
-          }
-      }
+  def loadFile(path: String): Map[String, TableConfig] =
+    parse(Files.readString(Paths.get(path)))
 }

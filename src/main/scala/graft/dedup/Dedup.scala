@@ -28,9 +28,6 @@ object Dedup {
 
   // ------------------------------------------------------------- MinHash
 
-  /** 2^31-1, the classic Mersenne modulus for the affine hash family. */
-  private val P = 2147483647L
-
   /** Shingle set -> SORTED array<bigint> of xxhash64 values. Hashing once up
     * front (a) makes the 128-function MinHash family pure integer arithmetic
     * instead of 128 string re-hashes per shingle, and (b) lets verification
@@ -40,7 +37,8 @@ object Dedup {
     array_sort(transform(shingles, t => xxhash64(t)))
 
   /** MinHash signature over hashed shingles: array of `numHashes` minima of
-    * the affine family h_i(x) = ((x mod P) * (2i+1) + 12345 i + 7) mod P.
+    * the affine family h_i(x) = ((x mod P) * (2i+1) + 12345 i + 7) mod P,
+    * P = 2^31 − 1.
     * Computed by the codegen'd MinHashSignature expression — one JIT'd pass
     * over the shingle array updating all minima, replacing the
     * higher-order-function formulation Spark evaluates interpreted (nested
@@ -92,7 +90,7 @@ object Dedup {
     * NOT deduplicated: a pair sharing k bands appears k times. Callers that
     * verify candidates should dedup AFTER verification (far fewer uniques
     * survive, so the hash-agg never spills); callers that want the candidate
-    * set itself use lshCandidates.
+    * set itself apply `.distinct()`.
     *
     * Size-gated join strategy (the 100 TB story):
     *  - under the gate, the band table (n × bands tiny rows) is broadcast.
@@ -148,11 +146,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
   }
-
-  /** Distinct candidate pairs (idA < idB) from LSH banding. */
-  def lshCandidates(df: DataFrame, idCol: String, shingleCol: String,
-                    numHashes: Int, bands: Int): DataFrame =
-    lshCandidatesRaw(df, idCol, shingleCol, numHashes, bands).distinct()
 
   /** Shared exact-Jaccard tail: given candidate rows carrying the two
     * SORTED hashed-shingle arrays as __sa/__sb, keep pairs with
@@ -717,8 +710,6 @@ object Dedup {
     val bands = maxHamming + 1
     require(64 % bands == 0,
       s"maxHamming + 1 must divide 64 (got maxHamming=$maxHamming); use 0, 1, 3, 7, 15 or 31")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // repartition BEFORE the signature projection for the same single-file
     // parallelism reason as minhashNearDupsHashed

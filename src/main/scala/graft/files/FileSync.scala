@@ -5,12 +5,10 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.util.Try
-
-/** O14-O18 — file/blob-set synchronization (reference:
+/** O14-O16, O18 — file/blob-set synchronization (reference:
   * db-sync-gcp/gcs_sync.py): list both "buckets", copy `source − dest` in
   * sorted order, count total/new/existing; dry-run plans without side
-  * effects; multi-pair orchestration with per-pair error isolation.
+  * effects.
   *
   * The reference holds both name sets in Python memory and copies serially.
   * Here listings are DataFrames (set algebra = anti/semi joins) and copies
@@ -114,11 +112,4 @@ object FileSync {
     }
     SyncStats(total, nNew, nExisting, dryRun)
   }
-
-  /** O17 — multi-pair orchestration with per-pair error isolation
-    * (gcs_sync.py:77-101). */
-  def syncPairs(spark: SparkSession, pairs: Seq[(String, String)],
-                dryRun: Boolean = false, compareContent: Boolean = false)
-      : Map[(String, String), Try[SyncStats]] =
-    pairs.map { case (s, d) => (s, d) -> Try(syncDir(spark, s, d, dryRun, compareContent)) }.toMap
 }

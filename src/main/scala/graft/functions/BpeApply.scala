@@ -98,7 +98,7 @@ object BpeApply {
                          merges: Array[Array[String]],
                          out: scala.collection.mutable.ArrayBuffer[UTF8String]): Unit = {
     if (w.isEmpty) return
-    var syms = new Array[String](w.length)
+    val syms = new Array[String](w.length)
     var k = 0
     while (k < w.length) { syms(k) = String.valueOf(w.charAt(k)); k += 1 }
     var n = syms.length

@@ -555,34 +555,6 @@ object Multimodal {
       it.map(r => afingerprintPcm16(r.doc_id, r.media)))
   }
 
-  /** Feature-extracted media: fixed-width byte histogram (16 bins) — the
-    * Spark-side shape of an embedding/feature extractor (fixed-size vector
-    * per doc, computed batch-wise on executors). Counts, not ratios, so the
-    * output is integer-exact. */
-  case class MediaFeatures(doc_id: Long, histogram: Array[Long])
-
-  def extractFeatures(media: DataFrame)(implicit spark: SparkSession): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        val h = new Array[Long](16)
-        if (r.media != null) r.media.foreach(b => h((b & 0xff) >> 4) += 1)
-        MediaFeatures(r.doc_id, h)
-      }
-    }
-  }
-
-  /** Metadata-only resize: recompute target dims for a scaled rendition
-    * without touching pixels (the cheap planning pass — e.g. deciding which
-    * renditions to materialize before paying [[resizeImages]]'s decode). */
-  def resizeMeta(decoded: Dataset[DecodedMedia], targetWidth: Long)(implicit spark: SparkSession): Dataset[DecodedMedia] = {
-    import spark.implicits._
-    decoded.map { d =>
-      val h = if (d.width == 0) 0L else math.max(1L, d.height * targetWidth / d.width)
-      d.copy(width = targetWidth, height = h)
-    }
-  }
-
   /** REAL pixel resize: decode → nearest-neighbor resample to exactly
     * (tw, th) → lossless PNG re-encode. Nearest-neighbor with pure integer
     * index math (src = dst * srcDim / dstDim, floor) — deterministic across

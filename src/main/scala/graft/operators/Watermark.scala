@@ -29,10 +29,6 @@ object Watermark {
     maxOf(df, checkColumn)
       .select(coalesce(col("check_value").cast(LongType), lit(0L)).as("check_value"))
 
-  /** id semantics, driver scalar: NULL -> 0. */
-  def readId(df: DataFrame, checkColumn: String): Long =
-    idOf(maxOf(df, checkColumn))
-
   /** id semantics over a PRECOMPUTED 1-row `check_value` frame — the shape
     * `TableStore.watermark` hands back (for JDBC stores the MAX already ran
     * server-side; re-aggregating here would be wrong only in cost, but this

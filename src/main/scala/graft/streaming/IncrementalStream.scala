@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface: the streaming analog of the watermark
   * pipeline (SURVEY §2.3 — the reference's batch watermark IS a hand-rolled
@@ -11,21 +10,6 @@ import org.apache.spark.sql.types.StructType
   * exactly-once incremental batch with the checkpoint as the watermark).
   */
 object IncrementalStream {
-
-  /** File-based incremental sync: every NEW file under `srcDir` since the
-    * last run is transformed and appended to `dstDir`, exactly once — the
-    * checkpoint replaces the MAX(check_column) watermark and is immune to
-    * the strict-`>` equal-timestamp skip quirk (§2.4). */
-  def fileSync(spark: SparkSession, srcDir: String, dstDir: String,
-               checkpointDir: String, schema: StructType,
-               transform: DataFrame => DataFrame = identity): StreamingQuery =
-    transform(spark.readStream.schema(schema).parquet(srcDir))
-      .writeStream
-      .format("parquet")
-      .option("path", dstDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** Event-time windowed counts with a watermark — late data beyond the
     * delay is dropped, state is bounded (the 100 TB requirement for any

@@ -7,8 +7,7 @@ import java.util.concurrent.{ExecutionException, Executors}
 import scala.util.{Failure, Success, Try}
 
 /** O12 — multi-table orchestration with per-table error isolation
-  * (reference: run_all_syncs, db-sync-local/main.py:4-30; service grouping
-  * db-sync-gcp/gcp_main.py:46-79).
+  * (reference: run_all_syncs, db-sync-local/main.py:4-30).
   *
   * Concurrent: the tables run on a pool of min(tables, cores) threads, so
   * their short, driver-bound Spark jobs overlap instead of queueing. This
@@ -66,12 +65,4 @@ object Runner {
       pool.shutdownNow()
     }
   }
-
-  /** GCP variant: group tables by service, run service-by-service
-    * (gcp_main.py:57-79). Tables within a service run concurrently, as in
-    * `runAll`. */
-  def runGroupedByService(tables: Seq[TableConfig])(runOne: TableConfig => SyncJob.SyncStats): Map[String, RunReport] =
-    tables.groupBy(_.service.getOrElse("default")).toSeq.sortBy(_._1).map {
-      case (service, ts) => service -> runAll(ts)(runOne)
-    }.toMap
 }

@@ -607,16 +607,4 @@ object TextAnalysis {
         col("n_tokens") :+ col("n_docs") :+ col("first_doc") :+
         col("last_doc"): _*)
   }
-
-  /** Rolling-hash document sketch: hash every word k-gram shingle, keep the
-    * `n` smallest hashes (a bottom-n sketch — a compact fingerprint whose
-    * overlap estimates containment). HashedNgrams already emits SORTED
-    * DISTINCT window hashes in one codegen'd pass, so the sketch is just
-    * its prefix — the interpreted transform/concat_ws/array_sort chain
-    * this replaces was the exact shape distinctNgramCount measured 10×
-    * slower. Sketch semantics only need a consistent hash family, which
-    * the codegen'd combiner provides (same family as the dedup pipelines,
-    * so sketches are comparable with their shingle sets). */
-  def bottomNSketch(c: Column, k: Int, n: Int): Column =
-    slice(graft.functions.HashedNgrams(transform(tokens(c), t => xxhash64(t)), k), 1, n)
 }

@@ -32,14 +32,6 @@ class SyncConfigSpec extends AnyFunSuite {
     assert(CheckType.parse("version") === CheckType.Other)
   }
 
-  test("merge tags tables with their service (GCP variant)") {
-    val merged = SyncConfig.merge(Map(
-      "inventory" -> "tables:\n  a:\n    sync_config:\n      check_column: x\n      check_type: id\n",
-      "order" -> "tables:\n  b:\n"))
-    assert(merged("a").service === Some("inventory"))
-    assert(merged("b").service === Some("order"))
-  }
-
   test("empty/absent/null yaml yields empty catalog") {
     assert(SyncConfig.parse("") === Map.empty)
     assert(SyncConfig.parse("other_key: 1") === Map.empty)

@@ -97,21 +97,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.imageDimensions(null) === None)
   }
 
-  test("extractFeatures: 16-bin byte histogram, integer-exact") {
-    val df = Multimodal.attachBinary(Seq((1L, "aaab")).toDF("doc_id", "text"), "doc_id", "text")
-    val h = Multimodal.extractFeatures(df).collect().head.histogram
-    // 'a' = 0x61 and 'b' = 0x62 -> bin 6 has all 4 bytes
-    assert(h(6) === 4L && h.sum === 4L)
-  }
-
-  test("resizeMeta scales height proportionally to the target width") {
-    val df = Multimodal.attachBinary(Seq((1L, "x" * 100)).toDF("doc_id", "text"), "doc_id", "text")
-    val out = Multimodal.resizeMeta(Multimodal.decode(df), targetWidth = 32).collect().head
-    assert(out.width === 32)
-    assert(out.height === Multimodal.decodeBytes(1L, ("x" * 100).getBytes).height * 32 /
-      Multimodal.decodeBytes(1L, ("x" * 100).getBytes).width)
-  }
-
   test("resizeImage: exact nearest-neighbor contract, down- and up-scale") {
     // 2x2 source with four distinct colors
     val img = new java.awt.image.BufferedImage(2, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -10,12 +10,12 @@ class WatermarkSpec extends SparkSpec {
 
   test("id watermark on empty relation -> 0 (sync_utils.py:32-33)") {
     val empty = Seq(1L, 2L).toDF("id").filter(col("id") < 0)
-    assert(Watermark.readId(empty, "id") === 0L)
+    assert(Watermark.idOf(Watermark.maxOf(empty, "id")) === 0L)
     assert(Watermark.idCheckValue(empty, "id").head.getLong(0) === 0L)
   }
 
   test("id watermark reads MAX") {
-    assert(Watermark.readId(Seq(3L, 9L, 5L).toDF("id"), "id") === 9L)
+    assert(Watermark.idOf(Watermark.maxOf(Seq(3L, 9L, 5L).toDF("id"), "id")) === 9L)
   }
 
   test("timestamp watermark on empty relation -> None -> full-copy branch") {

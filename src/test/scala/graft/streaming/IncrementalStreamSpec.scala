@@ -8,28 +8,6 @@ import java.nio.file.Files
 class IncrementalStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  test("fileSync: AvailableNow processes each file exactly once across runs") {
-    val src = Files.createTempDirectory("graft_ss_src").toString
-    val dst = Files.createTempDirectory("graft_ss_dst").toString
-    val cp = Files.createTempDirectory("graft_ss_cp").toString
-
-    val batch1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    batch1.write.mode("append").parquet(src)
-    val schema = batch1.schema
-
-    IncrementalStream.fileSync(spark, src, dst, cp, schema,
-      _.withColumn("v", upper(col("v")))).awaitTermination()
-    assert(spark.read.parquet(dst).collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      === Set((1L, "A"), (2L, "B")))
-
-    // second run: only the new file is processed (checkpoint = watermark)
-    Seq((3L, "c")).toDF("id", "v").write.mode("append").parquet(src)
-    IncrementalStream.fileSync(spark, src, dst, cp, schema,
-      _.withColumn("v", upper(col("v")))).awaitTermination()
-    val out = spark.read.parquet(dst).collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out === Set((1L, "A"), (2L, "B"), (3L, "C")))
-  }
-
   test("warcIngest: two-batch crawl equals the batch pipeline; admission + minKept gate") {
     import graft.sources.Warc.record
     import graft.sync.ParquetStore

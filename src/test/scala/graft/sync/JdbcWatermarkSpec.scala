@@ -76,7 +76,7 @@ class JdbcWatermarkSpec extends SparkSpec {
     source.write(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v"), "t")
     SpyJdbc.reset()
     val stats = SyncJob.run(source, dest,
-      TableConfig("t", Some("id"), Some(CheckType.Id), Seq.empty, None), primaryKeys = Seq("id"))
+      TableConfig("t", Some("id"), Some(CheckType.Id), Seq.empty), primaryKeys = Seq("id"))
     assert(stats.mode === "incremental id > 2")
     assert(stats.rowsUpserted === 2) // only ids 3 and 4 extracted
     val out = dest.read("t").get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -106,7 +106,7 @@ class JdbcWatermarkSpec extends SparkSpec {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     source.write(Seq((1L, t0, "a"), (2L, t0, "b")).toDF("id", "updated_at", "v"), "t")
     val stats = SyncJob.run(source, dest,
-      TableConfig("t", Some("updated_at"), Some(CheckType.Timestamp), Seq.empty, None),
+      TableConfig("t", Some("updated_at"), Some(CheckType.Timestamp), Seq.empty),
       primaryKeys = Seq("id"))
     assert(stats.mode === "full (empty destination watermark)")
     assert(dest.read("t").get.count() === 2)

@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
 
 class RunnerSpec extends SparkSpec {
 
-  private def cfg(n: String, svc: Option[String] = None) =
-    TableConfig(n, None, None, Seq.empty, svc)
+  private def cfg(n: String) =
+    TableConfig(n, None, None, Seq.empty)
 
   private def okStats(n: String) = SyncJob.SyncStats(n, "full", 1)
 
@@ -47,15 +47,6 @@ class RunnerSpec extends SparkSpec {
     val report = Runner.runAll(Seq(cfg("a"), cfg("b")))(c => okStats(c.name))
     assert(report.exitCode === 0)
     assert(report.results.map(_._1) === Seq("a", "b"))
-  }
-
-  test("service grouping isolates failures per service") {
-    val tables = Seq(cfg("a", Some("inv")), cfg("boom", Some("inv")), cfg("c", Some("ord")))
-    val reports = Runner.runGroupedByService(tables) { c =>
-      if (c.name == "boom") sys.error("x") else okStats(c.name)
-    }
-    assert(reports("inv").exitCode === 1)
-    assert(reports("ord").exitCode === 0)
   }
 
   test("the tables of one run overlap") {

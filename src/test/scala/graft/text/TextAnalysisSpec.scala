@@ -44,16 +44,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fp("hello world") !== fp("hello worlds"))
   }
 
-  test("bottomNSketch: deterministic, bounded size, overlap for shared shingles") {
-    val sk = (s: String) => one(TextAnalysis.bottomNSketch($"t", 3, 4), s).getSeq[Long](0)
-    val a = sk("one two three four five six")
-    assert(a.length === 4 && a === a.sorted)
-    assert(sk("one two three four five six") === a)
-    // prefix-sharing doc shares shingles -> sketches overlap
-    assert(sk("one two three four five seven").intersect(a).nonEmpty)
-    assert(sk("a b") === Seq())
-  }
-
   test("chunked: overlapping token windows; short docs one chunk; empty none") {
     val docs = Seq(
       (1L, (1 to 10).map(i => s"t$i").mkString(" ")), // 10 tokens
