@@ -1,0 +1,64 @@
+#!/usr/bin/env python3
+"""Compare two sets of graft.Plans dumps with run-specific ids masked.
+
+Usage: python3 scripts/plan_diff.py <dir> <tagA> <tagB> [query ...]
+
+Compares <dir>/<query>_<tagA>.txt with <dir>/<query>_<tagB>.txt for every
+named query, or for every query dumped under both tags when none is named.
+Before comparing it masks what differs between runs of one unchanged plan:
+RDD ids (`MapPartitionsRDD[357]`), expression ids (`#12`), exchange
+`plan_id`s, the random part of temp directory names and UUIDs. Prints one
+line per query and a unified diff of the masked text where they differ;
+exits 1 if any query differs or is missing.
+"""
+import difflib
+import os
+import re
+import sys
+
+MASKS = [
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[n]"),
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"[0-9a-f]{8}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{12}"), "<uuid>"),
+    # java.nio.file.Files.createTempDirectory: prefix + a random unsigned long
+    (re.compile(r"(/[^/\s\[\],]*?)\d{15,}(?=[/\s\],]|$)"), r"\1<tmp>"),
+]
+
+
+def mask(text):
+    for pattern, repl in MASKS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def main(argv):
+    if len(argv) < 3:
+        sys.exit(__doc__)
+    d, a, b, names = argv[0], argv[1], argv[2], argv[3:]
+    if not names:
+        suffix = f"_{a}.txt"
+        names = sorted(f[: -len(suffix)] for f in os.listdir(d)
+                       if f.endswith(suffix) and os.path.exists(os.path.join(d, f[: -len(suffix)] + f"_{b}.txt")))
+    bad = 0
+    for q in names:
+        pa, pb = (os.path.join(d, f"{q}_{t}.txt") for t in (a, b))
+        if not (os.path.exists(pa) and os.path.exists(pb)):
+            print(f"MISSING {q}")
+            bad += 1
+            continue
+        with open(pa) as fa, open(pb) as fb:
+            ta, tb = mask(fa.read()), mask(fb.read())
+        if ta == tb:
+            print(f"same    {q}")
+        else:
+            bad += 1
+            print(f"DIFFERS {q}")
+            sys.stdout.writelines(difflib.unified_diff(
+                ta.splitlines(True), tb.splitlines(True), pa, pb))
+    print(f"== {len(names) - bad} same / {bad} differ ==")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -53,8 +53,9 @@ object SyncJob {
     // The read goes through the STORE (dest.watermark), not the already-read
     // DataFrame: JdbcStore pushes the MAX into the remote engine (one row
     // over the wire — sync_utils.py:22-25's shape) where the frame-level
-    // `agg(max)` would pull the whole check column; ParquetStore's default
-    // is the same partial-agg tree as before. A table that vanishes between
+    // `agg(max)` would pull the whole check column; ParquetStore answers an
+    // integral column from its footers' max statistics, with no Spark job,
+    // and aggregates over its files otherwise. A table that vanishes between
     // the existence read above and the watermark read maps to the same
     // semantics as an all-NULL column (id -> 0, timestamp -> full copy) —
     // the reference's own NULL branches (sync_utils.py:32-33, :259-261).

@@ -1,7 +1,18 @@
 package graft.sync
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** O13 — storage/session abstraction: a "database" is a named set of tables.
   * The engine's pipelines are store-agnostic; tests and the local harness use
@@ -36,11 +47,13 @@ trait TableStore {
   def append(df: DataFrame, table: String): Unit =
     write(read(table).map(_.unionByName(df)).getOrElse(df), table)
 
-  /** O5 watermark read: a 1-row DataFrame (`check_value` = MAX(checkColumn))
-    * for an existing table, None when the table is missing. The default
-    * computes the aggregate engine-side over `read` (fine for columnar
-    * stores — a partial-agg tree that moves one value per partition);
-    * stores backed by a remote SQL engine MUST override to push the MAX
+  /** O5 watermark read: a 1-row DataFrame (`check_value` = MAX(checkColumn),
+    * of the column's type) for an existing table, None when the table is
+    * missing. The default computes the aggregate engine-side over `read`, a
+    * partial-agg tree that moves one value per partition. Stores that hold
+    * the answer as metadata override it: ParquetStore reads an integral
+    * column's max from the footers' statistics, with no Spark job. Stores
+    * backed by a remote SQL engine MUST override to push the MAX
     * server-side, or every sync pulls the destination's whole check column
     * over the wire to compute one scalar (the reference does this in one
     * line of SQL — db-sync-local/sync_utils.py:22-25). */
@@ -62,18 +75,117 @@ trait TableStore {
 /** Parquet-directory store: `dir/<table>.parquet` per table. Write goes
   * through a temp path + atomic-ish rename so a table can be rewritten from
   * a plan that reads its own previous contents (overwrite-in-place would
-  * delete the files mid-scan). */
+  * delete the files mid-scan).
+  *
+  * Metadata comes from the parquet footers, read on the driver, so it costs
+  * no Spark job: `read` takes the schema Spark wrote into a data file's
+  * footer, and `watermark` folds the footers' max statistics of an integral
+  * check column. Where a footer cannot answer exactly, both take Spark's own
+  * path (schema inference, a MAX aggregate). */
 class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
   private def pathOf(table: String) = s"$dir/$table.parquet"
+  private def conf = spark.sparkContext.hadoopConfiguration
 
-  override def read(table: String): Option[DataFrame] = {
+  override def read(table: String): Option[DataFrame] =
+    listed(table).map(frame(table, _))
+
+  /** MAX of an integral check column from the footers' per-row-group
+    * statistics, over the same files `read` lists; every other case is the
+    * trait's aggregate over that read. */
+  override def watermark(table: String, checkColumn: String): Option[DataFrame] =
+    listed(table).map(files => footerMax(files, checkColumn)
+      .getOrElse(graft.operators.Watermark.maxOf(frame(table, files), checkColumn)))
+
+  /** The data files of an existing table, in name order; Nil when the
+    * listing holds what the footer path does not model (a subdirectory, a
+    * summary file) or no data file. None when the table is missing. Names
+    * Spark skips when it lists a table (`_`/`.`-prefixed, `._COPYING_`)
+    * are skipped here too. */
+  private def listed(table: String): Option[Seq[FileStatus]] = {
     val p = new Path(pathOf(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(pathOf(table))) else None
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else Some {
+      val seen = fs.listStatus(p).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        (n.startsWith("_") && !n.contains("=") && !n.startsWith("_metadata") &&
+          !n.startsWith("_common_metadata")) || n.startsWith(".") || n.endsWith("._COPYING_")
+      }
+      if (seen.exists(st => !st.isFile || st.getPath.getName.startsWith("_"))) Nil
+      else seen.sortBy(_.getPath.getName)
+    }
   }
 
+  /** The table as a DataFrame, with the schema of its first data file's
+    * footer when that file carries Spark's row metadata (the string Spark's
+    * own inference reads first), else with Spark's schema inference. */
+  private def frame(table: String, files: Seq[FileStatus]): DataFrame =
+    files.headOption.flatMap(f =>
+      try sparkSchema(footer(f)) catch { case NonFatal(_) => None }) match {
+      case Some(s) => spark.read.schema(s).parquet(pathOf(table))
+      case None    => spark.read.parquet(pathOf(table))
+    }
+
+  /** A file's footer, read on the driver. */
+  private def footer(st: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try r.getFooter finally r.close()
+  }
+
+  private def sparkSchema(f: ParquetMetadata): Option[StructType] =
+    Option(f.getFileMetaData.getKeyValueMetaData.get(ParquetStore.RowMetadata))
+      .map(DataType.fromJson).collect { case t: StructType => t }
+
+  /** MAX(c) as a 1-row local `check_value` frame, or None when the footers
+    * cannot give it exactly. Exact needs: the Spark type of `c` (named
+    * exactly so) is Byte, Short, Int or Long; in every file `c` is a
+    * top-level INT32/INT64 column of that width, unannotated or a signed
+    * INT(n); and each of its row groups has a max or holds only NULLs. */
+  private def footerMax(files: Seq[FileStatus], c: String): Option[DataFrame] = try {
+    val footers = files.map(footer)
+    // the max of one file, Some(None) when it has no non-NULL value
+    def fileMax(f: ParquetMetadata, bits: Int): Option[Option[Long]] = {
+      val typed = f.getFileMetaData.getSchema.getFields.asScala.exists {
+        case t: PrimitiveType =>
+          t.getName == c && t.getPrimitiveTypeName == (if (bits == 64) INT64 else INT32) &&
+            (t.getLogicalTypeAnnotation match {
+              case null => bits >= 32
+              case a: IntLogicalTypeAnnotation => a.isSigned && a.getBitWidth == bits
+              case _ => false
+            })
+        case _ => false
+      }
+      val groups = f.getBlocks.asScala.toSeq.map(b =>
+        b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c))).flatMap { ch =>
+          val st: Statistics[_] = ch.getStatistics
+          if (st == null) None
+          else if (st.hasNonNullValue) Some(Some(st.genericGetMax.asInstanceOf[Number].longValue))
+          else if (st.isNumNullsSet && st.getNumNulls == ch.getValueCount) Some(None)
+          else None
+        })
+      if (typed && groups.forall(_.isDefined)) Some(groups.flatten.flatten.maxOption) else None
+    }
+    for {
+      first <- footers.headOption
+      t <- sparkSchema(first).flatMap(_.find(_.name == c)).map(_.dataType)
+      bits <- Some(t).collect {
+        case ByteType => 8; case ShortType => 16; case IntegerType => 32; case LongType => 64
+      }
+      maxes = footers.map(fileMax(_, bits))
+      if maxes.forall(_.isDefined)
+    } yield {
+      val v = maxes.flatten.flatten.maxOption.map[Any](m => t match {
+        case ByteType    => m.toByte
+        case ShortType   => m.toShort
+        case IntegerType => m.toInt
+        case _           => m
+      }).orNull
+      spark.createDataFrame(java.util.List.of(Row(v)), StructType(Seq(StructField("check_value", t))))
+    }
+  } catch { case NonFatal(_) => None }
+
   override def write(df: DataFrame, table: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(conf)
     val tmp = new Path(s"$dir/.tmp_$table.parquet")
     val dst = new Path(pathOf(table))
     df.write.mode("overwrite").parquet(tmp.toString)
@@ -91,7 +203,7 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     * table that does not exist yet is created by renaming the whole
     * staging directory, so it always has a file carrying its schema. */
   override def append(df: DataFrame, table: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(dir).getFileSystem(conf)
     val stage = new Path(s"$dir/.append_${table}_${java.util.UUID.randomUUID()}")
     try {
       // one file per partition: a partition split over several files could
@@ -112,7 +224,7 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     * order. Row counts come from the parquet footers, read on the driver. */
   private def staged(stage: Path): Seq[Path] = {
     val part = "part-(\\d+)-.*".r
-    stage.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(stage).toSeq
+    stage.getFileSystem(conf).listStatus(stage).toSeq
       .flatMap(st => st.getPath.getName match {
         case part(n) => Some(n.toLong -> st)
         case _       => None
@@ -121,17 +233,12 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
       .collect { case (_, st) if rowCount(st) > 0L => st.getPath }
   }
 
-  private def rowCount(st: org.apache.hadoop.fs.FileStatus): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
+  private def rowCount(st: FileStatus): Long = footer(st).getBlocks.asScala.map(_.getRowCount).sum
 
   /** Move `files` into `table`, one rename each, in the given order. */
   private[sync] def land(files: Seq[Path], table: String): Unit = {
     val dst = new Path(pathOf(table))
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dst.getFileSystem(conf)
     files.foreach { f =>
       if (!fs.rename(f, new Path(dst, f.getName))) sys.error(s"rename failed for $f")
     }
@@ -141,7 +248,10 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
 /** Serializes ParquetStore's landing step across the JVM: two first
   * appends to a missing table must not both rename a staging directory
   * onto it. Landing is renames only, so the lock is held briefly. */
-object ParquetStore
+object ParquetStore {
+  /** The footer key holding the Spark schema a file was written with. */
+  private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+}
 
 /** JDBC store: connection profile -> per-table reads/writes. Reads resolve
   * the schema from JDBC metadata (O2's introspection, done by Spark's
@@ -164,7 +274,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
       .option("url", url).option("dbtable", table)
       .options(props).options(partitionOptions)
       .load())
-    catch { case scala.util.control.NonFatal(e) if JdbcStore.isTableMissing(e) => None }
+    catch { case NonFatal(e) if JdbcStore.isTableMissing(e) => None }
 
   /** O5 watermark, pushed server-side: the MAX runs inside the remote engine
     * via a pushdown subquery — Spark's v1 JDBC source pushes predicates and
@@ -193,7 +303,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
       .option("url", url).option("dbtable", sub)
       .options(props)
       .load())
-    catch { case scala.util.control.NonFatal(e) if JdbcStore.isTableMissing(e) => None }
+    catch { case NonFatal(e) if JdbcStore.isTableMissing(e) => None }
   }
 
   /** Store semantics are "replace table contents with df" (SyncJob hands the
@@ -307,8 +417,8 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
         st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $stage")
         conn.commit()
       } catch {
-        case scala.util.control.NonFatal(e) =>
-          try conn.rollback() catch { case scala.util.control.NonFatal(_) => }
+        case NonFatal(e) =>
+          try conn.rollback() catch { case NonFatal(_) => }
           throw e
       } finally st.close()
       // best-effort tidy-up; the next writeAtomic overwrites the stage anyway
@@ -316,7 +426,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
         val drop = conn.createStatement()
         try { conn.setAutoCommit(true); drop.executeUpdate(s"DROP TABLE $stage") }
         finally drop.close()
-      } catch { case scala.util.control.NonFatal(_) => }
+      } catch { case NonFatal(_) => }
     } finally conn.close()
   }
 

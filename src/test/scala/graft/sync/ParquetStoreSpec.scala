@@ -1,16 +1,64 @@
 package graft.sync
 
 import graft.SparkSpec
+import graft.config.{CheckType, TableConfig}
+import graft.operators.Watermark
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.jdk.CollectionConverters._
 
 /** ParquetStore.append: each call stages into a directory of its own, then
-  * lands the part files that hold rows. */
+  * lands the part files that hold rows. `read` and `watermark` answer from
+  * the parquet footers without a Spark job, and agree with Spark's schema
+  * inference and MAX aggregate. */
 class ParquetStoreSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      val a = f
+      org.apache.spark.TestBus.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def withConf[A](key: String, value: String)(f: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The watermark's schema, rows and value classes, beside those of MAX
+    * over Spark's own read. */
+  private def bothMax(store: ParquetStore, dir: String, table: String, c: String) = {
+    def shape(df: DataFrame) = {
+      val rows = df.collect().toSeq
+      (df.schema, rows, rows.flatMap(_.toSeq.map(v => Option(v).map(_.getClass))))
+    }
+    (shape(store.watermark(table, c).get),
+      shape(Watermark.maxOf(spark.read.parquet(s"$dir/$table.parquet"), c)))
+  }
 
   private def ids(lo: Long, hi: Long) = spark.range(lo, hi + 1).toDF("id")
 
@@ -74,5 +122,186 @@ class ParquetStoreSpec extends SparkSpec {
     } finally pool.shutdown()
     val got = store.read("t").get.as[Long].collect().sorted.toSeq
     assert(got === (1L to 10L) ++ (100L until 180L))
+  }
+
+  test("read runs no job and keeps Spark's schema for every column type and column metadata") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    val meta = new MetadataBuilder().putString("comment", "the key").putLong("width", 8L).build()
+    val df = spark.sql("""SELECT id,
+        CAST(id AS DECIMAL(12, 3)) AS dec, CAST(id AS DECIMAL(30, 2)) AS wide,
+        DATE '2024-01-02' + CAST(id AS INT) AS d,
+        TIMESTAMP '2024-01-02 03:04:05' AS ts,
+        TIMESTAMP_NTZ '2024-01-02 03:04:05' AS ntz,
+        CAST(CAST(id AS STRING) AS BINARY) AS bin,
+        array(id, id + 1) AS arr, map('k', id) AS m,
+        named_struct('a', id, 'b', array(named_struct('c', 'x'))) AS st,
+        CAST(id AS TINYINT) AS b8, CAST(id AS SMALLINT) AS s16, CAST(id AS FLOAT) AS f
+      FROM range(3)""").withColumn("id", col("id").as("id", meta))
+    store.write(df, "t")
+    store.append(df, "t")
+    val (got, jobs) = jobsOf(store.read("t").get.schema)
+    assert(jobs === 0)
+    assert(got === spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(got("id").metadata === meta)
+    def rows(d: DataFrame) = d.collect().sortBy(_.getLong(0)).toSeq
+    assert(rows(store.read("t").get) === rows(spark.read.parquet(s"$dir/t.parquet")))
+    assert(rows(store.read("t").get).size === 6)
+  }
+
+  test("watermark of a Long, Int, Short or Byte check column runs no job") {
+    for (t <- Seq(LongType, IntegerType, ShortType, ByteType)) {
+      val dir = Files.createTempDirectory("graft_store").toString
+      val store = new ParquetStore(spark, dir)
+      store.append(ids(-3, 40).select(col("id").cast(t).as("id")), "t")
+      store.append(ids(41, 90).select(col("id").cast(t).as("id")).repartition(3), "t")
+      val (wm, jobs) = jobsOf(Watermark.idOf(store.watermark("t", "id").get))
+      assert((wm, jobs) === ((90L, 0)), t)
+      val (got, want) = bothMax(store, dir, "t", "id")
+      assert(got === want, t)
+    }
+  }
+
+  test("an insert-only SyncJob.run runs a fixed number of Spark jobs") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val (src, dst) = (new ParquetStore(spark, s"$dir/src"), new ParquetStore(spark, s"$dir/dst"))
+    val rows = (hi: Long) => ids(1, hi).selectExpr("id", "concat('v', id) AS v")
+    val cfg = TableConfig("t", Some("id"), Some(CheckType.Id), Seq.empty)
+    src.write(rows(100), "t")
+    SyncJob.run(src, dst, cfg, Seq("id"))
+    src.write(rows(130), "t")
+    val (stats, jobs) = jobsOf(SyncJob.run(src, dst, cfg, Seq("id")))
+    assert(stats.mode === "incremental id > 100")
+    assert(stats.rowsUpserted === 30)
+    // the range exchange's sampling job, its shuffle stage (AQE runs each
+    // stage as a job) and the append's write job; both schemas and the
+    // watermark come from the footers
+    assert(jobs === 3)
+    assert(dst.read("t").get.count() === 130)
+  }
+
+  test("property: the footer watermark equals the MAX aggregate, value and type") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val bounds = Map[DataType, (Long, Long)](
+      ByteType -> (Byte.MinValue.toLong, Byte.MaxValue.toLong),
+      ShortType -> (Short.MinValue.toLong, Short.MaxValue.toLong),
+      IntegerType -> (Int.MinValue.toLong, Int.MaxValue.toLong),
+      LongType -> (Long.MinValue, Long.MaxValue))
+    val caseGen = for {
+      t <- Gen.oneOf(bounds.keys.toSeq)
+      (lo, hi) = bounds(t)
+      value = Gen.frequency(2 -> Gen.const(None), 1 -> Gen.oneOf(lo, hi).map(Some(_)),
+        6 -> Gen.choose(lo, hi).map(Some(_)))
+      // several appends; a first empty one leaves a 0-row file behind
+      batches <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.choose(0, 12).flatMap(Gen.listOfN(_, value))))
+      groupRows <- Gen.choose(1, 4)
+      parts <- Gen.choose(1, 3)
+    } yield (t, batches, groupRows, parts)
+    val prop = Prop.forAllNoShrink(caseGen) { case (t, batches, groupRows, parts) =>
+      val dir = Files.createTempDirectory("graft_wm").toString
+      val store = new ParquetStore(spark, dir)
+      val schema = StructType(Seq(StructField("k", IntegerType), StructField("c", t)))
+      withConf("parquet.block.row.count.limit", groupRows.toString) {
+        batches.foreach { b =>
+          val rows = b.zipWithIndex.map { case (v, i) =>
+            Row(i, v.map[Any](x => t match {
+              case ByteType => x.toByte; case ShortType => x.toShort
+              case IntegerType => x.toInt; case _ => x
+            }).orNull)
+          }
+          store.append(spark.createDataFrame(rows.asJava, schema).repartition(parts), "t")
+        }
+      }
+      val ((got, want), jobs) = jobsOf(bothMax(store, dir, "t", "c"))
+      // the aggregate over Spark's read runs jobs of its own; the footer
+      // path must have run none, so all of them are the aggregate's
+      val (_, aggJobs) = jobsOf(Watermark.maxOf(spark.read.parquet(s"$dir/t.parquet"), "c").collect())
+      got == want && jobs == aggJobs
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("small row groups and many appended files give the aggregate's watermark with no job") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    withConf("parquet.block.row.count.limit", "3") {
+      store.append(ids(1, 0), "t") // the create path keeps its 0-row file
+      (0 until 24).foreach { i =>
+        val lo = i * 10L
+        // NULLs at the end of each batch fill whole row groups
+        store.append(ids(lo, lo + 9).selectExpr("CASE WHEN id % 10 < 6 THEN id END AS id")
+          .repartition(2), "t")
+      }
+    }
+    val files = new java.io.File(s"$dir/t.parquet").listFiles().filter(_.getName.startsWith("part-"))
+    assert(files.length > 40)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(files.maxBy(_.length).getPath), spark.sparkContext.hadoopConfiguration))
+    try assert(footer.getFooter.getBlocks.size > 1) finally footer.close()
+    val (wm, jobs) = jobsOf(Watermark.idOf(store.watermark("t", "id").get))
+    assert((wm, jobs) === ((235L, 0)))
+    val (got, want) = bothMax(store, dir, "t", "id")
+    assert(got === want)
+  }
+
+  test("a table holding only NULLs or no rows has a NULL footer watermark") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    store.append(ids(1, 0), "empty")
+    store.append(ids(1, 4).selectExpr("CAST(NULL AS BIGINT) AS id"), "nulls")
+    for (t <- Seq("empty", "nulls")) {
+      val (got, jobs) = jobsOf(store.watermark(t, "id").get.collect().toSeq)
+      assert((got, jobs) === ((Seq(Row(null)), 0)), t)
+      assert(Watermark.idOf(store.watermark(t, "id").get) === 0L)
+      val (a, b) = bothMax(store, dir, t, "id")
+      assert(a === b, t)
+    }
+  }
+
+  test("check columns the footers cannot answer take the aggregate, with its answer") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    val base = ids(1, 30).selectExpr("id", "CAST(id AS DOUBLE) / 4 AS dbl",
+      "lpad(CAST(id AS STRING), 3, '0') AS str",
+      "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts")
+    store.append(base, "t")
+    store.append(base.filter("id > 10").selectExpr("id + 30 AS id", "dbl", "str", "ts"), "t")
+    // INT96 timestamp (Spark's default output type), double, string, and a
+    // check column named in another case than the table's
+    for (c <- Seq("ts", "dbl", "str", "ID")) {
+      val (got, want) = bothMax(store, dir, "t", c)
+      assert(got === want, c)
+      assert(jobsOf(store.watermark("t", c).get.collect())._2 > 0, c)
+    }
+    // subdirectories: Spark reads them as partitions
+    ids(1, 9).selectExpr("id", "id % 3 AS p").write.partitionBy("p").parquet(s"$dir/sub.parquet")
+    val (got, want) = bothMax(store, dir, "sub", "id")
+    assert(got === want)
+    assert(got._2 === Seq(Row(9L)))
+    assert(jobsOf(store.watermark("sub", "id").get.collect())._2 > 0)
+    assert(store.read("sub").get.schema === spark.read.parquet(s"$dir/sub.parquet").schema)
+  }
+
+  test("a single-file table without Spark's row metadata reads and aggregates as Spark does") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_store").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional int32 n; optional binary s (STRING); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/t.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (1 to 20).foreach(i => w.write(rows.newGroup().append("id", i * 3L).append("n", -i).append("s", s"v$i")))
+    finally w.close()
+    val store = new ParquetStore(spark, dir)
+    assert(store.read("t").get.schema === spark.read.parquet(s"$dir/t.parquet").schema)
+    for (c <- Seq("id", "n", "s")) {
+      val (got, want) = bothMax(store, dir, "t", c)
+      assert(got === want, c)
+    }
+    assert(Watermark.idOf(store.watermark("t", "id").get) === 60L)
   }
 }
