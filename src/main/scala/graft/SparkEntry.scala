@@ -23,6 +23,23 @@ import org.apache.spark.sql.types._
   */
 object SparkEntry {
 
+  /** One graded query: the DuckDB SQL the driver grades it against, next
+    * to the Spark pipeline that builds it from a table directory. */
+  private[graft] final case class Query(name: String, oracle: String,
+      build: (SparkSession, String) => DataFrame)
+
+  /** `qs` in order, once their names are known to be distinct (a `Map`
+    * literal would keep the last of two equal keys without a word). */
+  private[graft] def catalog(qs: Query*): Seq[Query] = {
+    val dup = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"duplicate query names: ${dup.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** The oracle of an invariant query: the query checks its own contract
+    * and returns one `violations` row, which must read 0. */
+  private[graft] val InvariantOracleSql = "SELECT CAST(0 AS BIGINT) AS violations"
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
@@ -738,16 +755,43 @@ object SparkEntry {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Remove a temp directory created for a streaming source once the
-    * query has terminated (every file is fully read by then). */
-  private def deleteRecursively(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
+  /** `body` over a fresh temp directory named `prefix`..., deleted with
+    * everything under it once `body` returns or throws: a query's streams
+    * have terminated by then and its result is checkpointed or collected. */
+  private def withTempDir[A](prefix: String)(body: String => A): A = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    try body(p.toString)
+    finally if (java.nio.file.Files.exists(p)) {
       val walk = java.nio.file.Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(q => java.nio.file.Files.deleteIfExists(q))
       finally walk.close()
     }
+  }
+
+  /** Full-outer parity of `x` and `y` on `keys`, as one `violations` row:
+    * a violation per row found on one side only (flags `__x`, `__y`) or
+    * where `differ` holds, 1 unless the join has exactly `rows` rows (a
+    * duplicated row matches both sides, so only the count sees it), and
+    * each `extra` term. */
+  private def parity(x: DataFrame, y: DataFrame, keys: Seq[String],
+      differ: Option[Column] = None, rows: Option[Long] = None,
+      extra: Seq[Column] = Nil): DataFrame = {
+    val arms = col("__x").isNull || col("__y").isNull
+    val terms = violations(differ.fold(arms)(arms || _)) +:
+      (rows.map(n => when(count(lit(1)) =!= n, 1L).otherwise(0L)).toSeq ++ extra)
+    x.withColumn("__x", lit(1))
+      .join(y.withColumn("__y", lit(1)), keys, "full_outer")
+      .agg(terms.reduce(_ + _).as("violations"))
+  }
+
+  /** `df` written as `files` parquet files under `dir`, read back as a
+    * file stream of one file per micro-batch: the query downstream runs
+    * `files` micro-batches. Append mode, as `dir` may be an empty temp
+    * directory already. */
+  private def fileStream(s: SparkSession, df: DataFrame, files: Int, dir: String): DataFrame = {
+    df.repartition(files).write.mode("append").parquet(dir)
+    s.readStream.schema(df.schema).option("maxFilesPerTrigger", "1").parquet(s"$dir/*.parquet")
   }
 
   /** Flagship: the COMPLETE per-table sync pipeline (O11) on sf0.001 —
@@ -782,49 +826,66 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- Q1-Q15
 
-  private val core: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every graded query, in declaration order. Lazy because oracles read
+    * vals declared further down, which object initialization has not yet
+    * set while it runs this line. */
+  private lazy val all: Seq[Query] = catalog(
     // Q1 — O4/O6 projection + full scan
-    "q01_project_scan" -> ((s, dir) =>
+    Query("q01_project_scan",
+      "SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate FROM orders ORDER BY o_orderkey", (s, dir) =>
       Projection.columns(t(s, dir, "orders"),
           Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"))
         .orderBy("o_orderkey")),
 
     // Q2 — O5 timestamp watermark (kept as timestamp: both engines render
     // parquet naive timestamps identically; DATE diverges in pandas dtype)
-    "q02_watermark_ts" -> ((s, dir) =>
+    Query("q02_watermark_ts",
+      "SELECT max(o_orderdate) AS check_value FROM orders", (s, dir) =>
       Watermark.maxOf(t(s, dir, "orders"), "o_orderdate")),
 
     // Q3 — O5 id watermark, empty relation -> NULL -> 0 (sync_utils.py:32-33)
-    "q03_watermark_id_null" -> ((s, dir) =>
+    Query("q03_watermark_id_null",
+      "SELECT coalesce(max(l_orderkey), 0) AS check_value FROM lineitem WHERE l_orderkey < 0", (s, dir) =>
       Watermark.idCheckValue(
         t(s, dir, "lineitem").filter(col("l_orderkey") < 0), "l_orderkey")),
 
     // Q4 — O7 timestamp incremental, strict >
-    "q04_incr_ts" -> ((s, dir) =>
+    Query("q04_incr_ts",
+      "SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderdate > TIMESTAMP '1996-01-01 00:00:00' ORDER BY o_orderkey", (s, dir) =>
       Incremental.newerThan(t(s, dir, "orders"), "o_orderdate", ts("1996-01-01 00:00:00"))
         .select(col("o_orderkey"), col("o_orderdate"))
         .orderBy("o_orderkey")),
 
     // Q5 — O7 id incremental, strict >
-    "q05_incr_id" -> ((s, dir) =>
+    Query("q05_incr_id",
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_orderkey > 3000 ORDER BY l_orderkey, l_linenumber", (s, dir) =>
       Incremental.newerThan(t(s, dir, "lineitem"), "l_orderkey", lit(3000L))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy("l_orderkey", "l_linenumber")),
 
     // Q6 — O8 int coercion int(float(v))
-    "q06_coerce_int" -> ((s, dir) =>
+    // trunc() so the oracle truncates toward zero like int(float(v)) /
+    // try_cast-to-long — a plain CAST AS BIGINT rounds-to-nearest in DuckDB
+    // and would diverge on any fractional input
+    Query("q06_coerce_int",
+      "SELECT l_orderkey, l_linenumber, CAST(trunc(CAST(l_quantity AS DOUBLE)) AS BIGINT) AS q FROM lineitem ORDER BY l_orderkey, l_linenumber", (s, dir) =>
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), Coerce.intish(col("l_quantity")).as("q"))
         .orderBy("l_orderkey", "l_linenumber")),
 
     // Q7 — O8 string normalize str(v).strip()
-    "q07_coerce_trim" -> ((s, dir) =>
+    // regexp strip mirroring Coerce.strip (Python str.strip() removes all
+    // whitespace kinds, not just spaces like trim()); the explicit \v keeps
+    // RE2 aligned with Java's \s, which includes vertical tab
+    Query("q07_coerce_trim",
+      """SELECT c_custkey, regexp_replace(c_name, '^[\s\v]+|[\s\v]+$', '', 'g') AS c_name FROM customer ORDER BY c_custkey""", (s, dir) =>
       t(s, dir, "customer")
         .select(col("c_custkey"), Coerce.strip(col("c_name")).as("c_name"))
         .orderBy("c_custkey")),
 
     // Q8 — O9 upsert semantics: delta wins on key conflict, insert otherwise
-    "q08_upsert" -> ((s, dir) => {
+    Query("q08_upsert",
+      """WITH base AS (SELECT o_orderkey, o_totalprice, 0 AS prec FROM orders WHERE o_orderkey <= 4000), delta AS (SELECT o_orderkey, -o_totalprice AS o_totalprice, 1 AS prec FROM orders WHERE o_orderkey BETWEEN 2000 AND 6000), u AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY prec DESC) AS rn FROM (SELECT * FROM base UNION ALL SELECT * FROM delta)) SELECT o_orderkey, o_totalprice FROM u WHERE rn = 1 ORDER BY o_orderkey""", (s, dir) => {
       val orders = t(s, dir, "orders")
       val base = orders.filter(col("o_orderkey") <= 4000)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -834,7 +895,8 @@ object SparkEntry {
     }),
 
     // Q9 — O15 anti join (files to copy = source − dest)
-    "q09_anti_join" -> ((s, dir) => {
+    Query("q09_anti_join",
+      "SELECT o_orderkey FROM orders WHERE o_orderdate >= TIMESTAMP '1995-06-01 00:00:00' EXCEPT SELECT o_orderkey FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' ORDER BY o_orderkey", (s, dir) => {
       val orders = t(s, dir, "orders")
       val src = orders.filter(col("o_orderdate") >= ts("1995-06-01 00:00:00")).select("o_orderkey")
       val dst = orders.filter(col("o_orderdate") >= ts("1996-01-01 00:00:00")).select("o_orderkey")
@@ -842,100 +904,68 @@ object SparkEntry {
     }),
 
     // Q10 — O15 semi join (already existing = source ∩ dest)
-    "q10_semi_join" -> ((s, dir) => {
+    Query("q10_semi_join",
+      "SELECT p_partkey FROM part INTERSECT SELECT l_partkey FROM lineitem ORDER BY p_partkey", (s, dir) => {
       val part = t(s, dir, "part").select("p_partkey")
       val li = t(s, dir, "lineitem").select(col("l_partkey").as("p_partkey"))
       SetOps.intersection(part, li, Seq("p_partkey")).orderBy("p_partkey")
     }),
 
     // Q11 — O16 ordered listing (sorted(files_to_copy))
-    "q11_ordered_listing" -> ((s, dir) =>
+    Query("q11_ordered_listing",
+      "SELECT n_name FROM nation ORDER BY n_name", (s, dir) =>
       SetOps.ordered(t(s, dir, "nation").select("n_name"), Seq("n_name"))),
 
     // Q12 — O12 group-by-service fold; region is tiny -> broadcast
-    "q12_group_fold" -> ((s, dir) =>
+    Query("q12_group_fold",
+      "SELECT r_name, count(*) AS n FROM nation JOIN region ON n_regionkey = r_regionkey GROUP BY r_name ORDER BY r_name", (s, dir) =>
       t(s, dir, "nation")
         .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name").agg(count(lit(1)).as("n"))
         .orderBy("r_name")),
 
     // Q13 — O18 sync statistics: total + conditional count, one scan
-    "q13_sync_stats" -> ((s, dir) =>
+    Query("q13_sync_stats",
+      "SELECT count(*) AS total, count(CASE WHEN o_orderdate > TIMESTAMP '1996-01-01 00:00:00' THEN 1 END) AS new FROM orders", (s, dir) =>
       Stats.counts(t(s, dir, "orders"),
         Seq("new" -> (col("o_orderdate") > ts("1996-01-01 00:00:00"))))),
 
     // Q14 — O2 type rendering numeric(p,s): decimal cast
-    "q14_decimal_cast" -> ((s, dir) =>
+    Query("q14_decimal_cast",
+      "SELECT l_orderkey, l_linenumber, CAST(CAST(l_quantity AS DECIMAL(12,2)) AS DOUBLE) AS qty FROM lineitem ORDER BY l_orderkey, l_linenumber", (s, dir) =>
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity").cast(DecimalType(12, 2)).cast(DoubleType).as("qty"))
         .orderBy("l_orderkey", "l_linenumber")),
 
     // Q15 — O5 ∘ O7 watermark round-trip: strict > max(<= cutoff)
-    "q15_watermark_roundtrip" -> ((s, dir) => {
+    Query("q15_watermark_roundtrip",
+      "SELECT count(*) AS n FROM lineitem WHERE l_shipdate > (SELECT max(l_shipdate) FROM lineitem WHERE l_shipdate <= TIMESTAMP '1996-01-01 00:00:00')", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val synced = li.filter(col("l_shipdate") <= ts("1996-01-01 00:00:00"))
       val wm = Watermark.readTimestamp(synced, "l_shipdate")
       Stats.counts(Incremental.extract(li, "l_shipdate", wm.map(lit(_))), Seq())
         .select(col("total").as("n"))
-    })
-  )
+    }),
 
-  private val coreOracle: Map[String, String] = Map(
-    "q01_project_scan" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate FROM orders ORDER BY o_orderkey",
-    "q02_watermark_ts" ->
-      "SELECT max(o_orderdate) AS check_value FROM orders",
-    "q03_watermark_id_null" ->
-      "SELECT coalesce(max(l_orderkey), 0) AS check_value FROM lineitem WHERE l_orderkey < 0",
-    "q04_incr_ts" ->
-      "SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderdate > TIMESTAMP '1996-01-01 00:00:00' ORDER BY o_orderkey",
-    "q05_incr_id" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_orderkey > 3000 ORDER BY l_orderkey, l_linenumber",
-    // trunc() so the oracle truncates toward zero like int(float(v)) /
-    // try_cast-to-long — a plain CAST AS BIGINT rounds-to-nearest in DuckDB
-    // and would diverge on any fractional input
-    "q06_coerce_int" ->
-      "SELECT l_orderkey, l_linenumber, CAST(trunc(CAST(l_quantity AS DOUBLE)) AS BIGINT) AS q FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    // regexp strip mirroring Coerce.strip (Python str.strip() removes all
-    // whitespace kinds, not just spaces like trim()); the explicit \v keeps
-    // RE2 aligned with Java's \s, which includes vertical tab
-    "q07_coerce_trim" ->
-      """SELECT c_custkey, regexp_replace(c_name, '^[\s\v]+|[\s\v]+$', '', 'g') AS c_name FROM customer ORDER BY c_custkey""",
-    "q08_upsert" ->
-      """WITH base AS (SELECT o_orderkey, o_totalprice, 0 AS prec FROM orders WHERE o_orderkey <= 4000), delta AS (SELECT o_orderkey, -o_totalprice AS o_totalprice, 1 AS prec FROM orders WHERE o_orderkey BETWEEN 2000 AND 6000), u AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY prec DESC) AS rn FROM (SELECT * FROM base UNION ALL SELECT * FROM delta)) SELECT o_orderkey, o_totalprice FROM u WHERE rn = 1 ORDER BY o_orderkey""",
-    "q09_anti_join" ->
-      "SELECT o_orderkey FROM orders WHERE o_orderdate >= TIMESTAMP '1995-06-01 00:00:00' EXCEPT SELECT o_orderkey FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' ORDER BY o_orderkey",
-    "q10_semi_join" ->
-      "SELECT p_partkey FROM part INTERSECT SELECT l_partkey FROM lineitem ORDER BY p_partkey",
-    "q11_ordered_listing" ->
-      "SELECT n_name FROM nation ORDER BY n_name",
-    "q12_group_fold" ->
-      "SELECT r_name, count(*) AS n FROM nation JOIN region ON n_regionkey = r_regionkey GROUP BY r_name ORDER BY r_name",
-    "q13_sync_stats" ->
-      "SELECT count(*) AS total, count(CASE WHEN o_orderdate > TIMESTAMP '1996-01-01 00:00:00' THEN 1 END) AS new FROM orders",
-    "q14_decimal_cast" ->
-      "SELECT l_orderkey, l_linenumber, CAST(CAST(l_quantity AS DECIMAL(12,2)) AS DOUBLE) AS qty FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "q15_watermark_roundtrip" ->
-      "SELECT count(*) AS n FROM lineitem WHERE l_shipdate > (SELECT max(l_shipdate) FROM lineitem WHERE l_shipdate <= TIMESTAMP '1996-01-01 00:00:00')"
-  )
+    // ----------------------------------------- LLM-pipeline ops (q16-q27)
 
-  // ------------------------------------------- LLM-pipeline ops (q16-q27)
-
-  private val llm: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup: keep smallest doc_id per distinct text (hash-groupBy)
-    "q16_dedup_exact" -> ((s, dir) =>
+    Query("q16_dedup_exact",
+      "SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text ORDER BY doc_id", (s, dir) =>
       Dedup.exact(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
 
     // token counting: whitespace-ish + BPE-ish estimate
-    "q17_token_stats" -> ((s, dir) =>
+    Query("q17_token_stats",
+      "SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens, CAST(floor((length(text)+3)/4.0) AS BIGINT) AS n_bpe FROM documents ORDER BY doc_id", (s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.bpeishTokenCount(col("text")).as("n_bpe"))
         .orderBy("doc_id")),
 
     // quality scoring: punct/stopword counts + integer-exact quality gate
-    "q18_text_quality" -> ((s, dir) =>
+    Query("q18_text_quality",
+      """WITH f AS (SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(text, '[.!?,;:]')) AS n_punct, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop FROM documents) SELECT doc_id, CAST(n_punct AS BIGINT) AS n_punct, CAST(n_stop AS BIGINT) AS n_stop, CAST(CASE WHEN n_tok >= 5 AND n_stop * 2 <= n_tok THEN 1 ELSE 0 END AS BIGINT) AS quality_ok FROM f ORDER BY doc_id""", (s, dir) =>
       tw(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.punctCount(col("text")).as("n_punct"),
         TextAnalysis.stopwordCount(col("text")).as("n_stop"),
@@ -943,13 +973,15 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     // language ID by marker-word scoring with fixed tie-break
-    "q19_lang_id" -> ((s, dir) =>
+    Query("q19_lang_id",
+      """WITH s AS (SELECT doc_id, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents) SELECT doc_id, CASE WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en' WHEN s_de > 0 AND s_de >= s_es AND s_de >= s_fr AND s_de > s_en THEN 'de' WHEN s_es > 0 AND s_es >= s_fr AND s_es > s_en AND s_es > s_de THEN 'es' WHEN s_fr > 0 AND s_fr > s_en AND s_fr > s_de AND s_fr > s_es THEN 'fr' ELSE 'unk' END AS lang_pred FROM s ORDER BY doc_id""", (s, dir) =>
       tw(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id")),
 
     // content fingerprint: md5 over whitespace-normalized lowercase text
-    "q20_fingerprint" -> ((s, dir) =>
+    Query("q20_fingerprint",
+      """SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp FROM documents ORDER BY doc_id""", (s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.fingerprintMd5(col("text")).as("fp"))
         .orderBy("doc_id")),
@@ -958,21 +990,23 @@ object SparkEntry {
     // 25 bands x 5 rows: vs 32x4, ~40% fewer sub-threshold band collisions
     // on this self-similar corpus while the miss probability for a J=0.9
     // pair stays (1-0.9^5)^25 ~ 2e-10 — deterministic in practice.
-    "q21_dedup_minhash" -> ((s, dir) =>
+    Query("q21_dedup_minhash",
+      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tok a JOIN tok b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.ts, b.ts)) * 10 >= len(list_distinct(list_concat(a.ts, b.ts))) * 9 ORDER BY doc_a, doc_b""", (s, dir) =>
       Dedup.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
           TextAnalysis.tokenSet, num = 9, den = 10, numHashes = 125, bands = 25)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
         .orderBy("doc_a", "doc_b")),
 
     // word-trigram-shingle Jaccard >= 0.7 near-dups via MinHash+LSH
-    "q22_dedup_ngram" -> ((s, dir) =>
+    Query("q22_dedup_ngram",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tri a JOIN tri b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_a, doc_b""", (s, dir) =>
       Dedup.minhashNearDupsHashed(tw(s, dir, "documents"), "doc_id", "text",
           Dedup.hashedWordNgrams(_, 3), num = 7, den = 10, numHashes = 256, bands = 64)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
         .orderBy("doc_a", "doc_b")),
 
     // SimHash invariant: identical texts MUST get identical simhash
-    "q23_simhash_invariant" -> ((s, dir) => {
+    Query("q23_simhash_invariant", InvariantOracleSql, (s, dir) => {
       val sig = t(s, dir, "documents").select(col("doc_id"), col("text"),
         Dedup.simhashBits(Dedup.hashedShingles(TextAnalysis.tokenSet(col("text")))).as("sig"))
       val a = sig.select(col("text"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
@@ -982,11 +1016,13 @@ object SparkEntry {
     }),
 
     // brute-force cosine top-10 around vec 0 — the exact ANN baseline
-    "q24_embed_topk" -> ((s, dir) =>
+    Query("q24_embed_topk",
+      "SELECT vec_id FROM (SELECT e.vec_id FROM embeddings e, (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q WHERE e.vec_id <> 0 ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id LIMIT 10) ORDER BY vec_id", (s, dir) =>
       Similarity.bruteForceTopK(t(s, dir, "embeddings"), "vec_id", "embedding", 0L, 10)),
 
     // embedding-cosine near-dup pairs (cosine >= 0.5)
-    "q25_embed_neardup" -> ((s, dir) =>
+    Query("q25_embed_neardup",
+      "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.5 ORDER BY vec_a, vec_b", (s, dir) =>
       Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.5)
         .orderBy("vec_a", "vec_b")),
 
@@ -1000,7 +1036,7 @@ object SparkEntry {
     // both bind: a probe that misses a Hamming-1 bucket loses candidates,
     // a too-eager probe admits foreign ids. Recall vs brute force stays
     // pinned separately by AnnSpec; the planted-twin guarantee by q86
-    "q26_ann_topk" -> ((s, dir) => {
+    Query("q26_ann_topk", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val got = Similarity.annTopK(emb, "vec_id", "embedding", 0L, 10)
       val planes = Similarity.hyperplanes(8, 64)
@@ -1016,9 +1052,7 @@ object SparkEntry {
         .orderBy(col("__score").desc, col("vec_id"))
         .limit(10)
         .select("vec_id")
-      got.withColumn("__g", lit(1))
-        .join(want.withColumn("__w", lit(1)), Seq("vec_id"), "full_outer")
-        .agg(violations(col("__g").isNull || col("__w").isNull))
+      parity(got, want, Seq("vec_id"))
     }),
 
     // multimodal: binary payload -> partition-parallel decode. The payloads
@@ -1026,7 +1060,8 @@ object SparkEntry {
     // explicitly — the sniffing default could hand a text that starts with
     // image magic bytes (e.g. "BM…") to a real reader and diverge from the
     // formula oracle. The real image path is pinned by MultimodalSpec.
-    "q27_multimodal_decode" -> ((s, dir) => {
+    Query("q27_multimodal_decode",
+      "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, CAST(64 + octet_length(encode(text)) % 64 AS BIGINT) AS width, CAST(64 + (octet_length(encode(text)) // 64) % 64 AS BIGINT) AS height, CAST(CASE WHEN octet_length(encode(text)) = 0 THEN 0 WHEN ascii(substr(text, 1, 1)) < 128 THEN ascii(substr(text, 1, 1)) ELSE 0 END AS BIGINT) AS checksum FROM documents ORDER BY doc_id", (s, dir) => {
       implicit val sp: SparkSession = s
       Multimodal.decode(
           Multimodal.attachBinary(t(s, dir, "documents"), "doc_id", "text"),
@@ -1036,7 +1071,8 @@ object SparkEntry {
 
     // JSON property extraction through the O8 repair path (clean JSON is a
     // pass-through; dirty JSON would be repaired or nulled)
-    "q28_json_extract" -> ((s, dir) =>
+    Query("q28_json_extract",
+      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events ORDER BY event_id", (s, dir) =>
       t(s, dir, "events")
         .select(col("event_id"),
           get_json_object(Coerce.jsonb(col("props")), "$.k").cast(LongType).as("k"))
@@ -1045,7 +1081,8 @@ object SparkEntry {
     // window function: per-user running total in event-time order (integer
     // cents: double accumulation differs across engines — DuckDB windows
     // aggregate via segment trees, Spark sums sequentially)
-    "q29_running_sum" -> ((s, dir) =>
+    Query("q29_running_sum",
+      "SELECT event_id, user_id, CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_cents FROM events ORDER BY event_id", (s, dir) =>
       t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           sum(round(col("value") * 100).cast(LongType)).over(
@@ -1058,7 +1095,8 @@ object SparkEntry {
 
     // rollup aggregate; money summed as integer cents for cross-engine
     // exactness (double sums are summation-order-dependent)
-    "q30_rollup_stats" -> ((s, dir) =>
+    Query("q30_rollup_stats",
+      "SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents FROM events GROUP BY ROLLUP(event_type) ORDER BY event_type NULLS FIRST", (s, dir) =>
       t(s, dir, "events")
         .rollup(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1068,14 +1106,16 @@ object SparkEntry {
     // gap-based sessionization: lag + running-sum windows, one keyed
     // shuffle (ts is bigint nanos — Tables normalizes either physical
     // parquet type to that; gap = 30 min)
-    "q32_sessionize" -> ((s, dir) =>
+    Query("q32_sessionize",
+      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id", (s, dir) =>
       Sessionize.sessionStats(t(s, dir, "events"), "user_id", "ts",
           lit(1800L * 1000 * 1000 * 1000), tieBreak = Seq("event_id"))
         .orderBy("user_id")),
 
     // multimodal frame sampling: one row per stride offset of the payload
     // (the video-frame-extraction plumbing shape: explode keyed to the doc)
-    "q35_frame_sample" -> ((s, dir) =>
+    Query("q35_frame_sample",
+      "SELECT doc_id, CAST(x.i AS BIGINT) AS frame_idx, CAST(x.i * 256 AS BIGINT) AS byte_offset FROM documents, LATERAL (SELECT unnest(range(0, greatest(CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT), 1))) AS i) x ORDER BY doc_id, frame_idx", (s, dir) =>
       Multimodal.sampleFrames(
           Multimodal.attachBinary(t(s, dir, "documents"), "doc_id", "text"), 256)
         .orderBy("doc_id", "frame_idx")),
@@ -1084,7 +1124,8 @@ object SparkEntry {
     // conversion = view .. click .. purchase subsequence (ordered collect
     // via array_sort over (ts, event_id) structs — collect_list alone has
     // no deterministic order)
-    "q34_funnel" -> ((s, dir) => {
+    Query("q34_funnel",
+      "SELECT CAST(count(*) AS BIGINT) AS total, CAST(count(CASE WHEN regexp_matches(s, '(^| )view click purchase( |$)') THEN 1 END) AS BIGINT) AS converted FROM (SELECT user_id, string_agg(event_type, ' ' ORDER BY ts, event_id) AS s FROM events GROUP BY user_id)", (s, dir) => {
       val seqs = t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(array_join(
@@ -1098,7 +1139,8 @@ object SparkEntry {
 
     // canonicalization: near-dup pairs -> connected components -> smallest
     // doc id per duplicate cluster (the actual dedup decision)
-    "q33_dedup_canonical" -> ((s, dir) => {
+    Query("q33_dedup_canonical",
+      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id) SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id ORDER BY doc_id""", (s, dir) => {
       val docs = tw(s, dir, "documents")
       val pairs = Dedup.minhashNearDupsHashed(docs, "doc_id", "text",
         Dedup.hashedWordNgrams(_, 3), num = 7, den = 10, numHashes = 256, bands = 64)
@@ -1112,7 +1154,8 @@ object SparkEntry {
     // window; one keyed window shuffle (a GLOBAL pack would funnel the
     // prefix sum through one partition — grouped streams are the scale
     // shape and what production packing does anyway)
-    "q66_packing" -> ((s, dir) =>
+    Query("q66_packing",
+      """WITH t AS (SELECT doc_id, source, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tok FROM documents), s AS (SELECT doc_id, source, n_tok, CAST(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_tok FROM t) SELECT doc_id, source, n_tok, start_tok, start_tok // 64 AS first_win, CASE WHEN n_tok = 0 THEN start_tok // 64 ELSE (start_tok + n_tok - 1) // 64 END AS last_win FROM s ORDER BY doc_id""", (s, dir) =>
       TextAnalysis.packedSpans(t(s, dir, "documents"), Seq("source"),
           "doc_id", "text", windowSize = 64)
         .select(col("doc_id"), col("source"), col("n_tok"),
@@ -1123,7 +1166,7 @@ object SparkEntry {
     // registered SQL functions (GraftExtensions) and through the DataFrame
     // API must agree row-for-row — the graded proof that spark.sql users
     // get the identical codegen'd primitives
-    "q65_sql_parity" -> ((s, dir) => {
+    Query("q65_sql_parity", InvariantOracleSql, (s, dir) => {
       GraftExtensions.register(s)
       val docs = t(s, dir, "documents")
       docs.createOrReplaceTempView("graft_docs_v")
@@ -1143,7 +1186,8 @@ object SparkEntry {
     // cluster keeps its highest-token-count member (id tie-break) — the
     // production dedup decision (keep the best duplicate, not the first);
     // the added step is one keyed window over the label table
-    "q64_dedup_keep_best" -> ((s, dir) => {
+    Query("q64_dedup_keep_best",
+      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id), sc AS (SELECT c.canon, c.doc_id, CAST(len(t.ts) AS BIGINT) AS nt FROM canon c JOIN tok t USING (doc_id)), w AS (SELECT canon, doc_id, nt, row_number() OVER (PARTITION BY canon ORDER BY nt DESC, doc_id) AS rn FROM sc) SELECT canon, doc_id AS kept_id, nt AS n_tokens FROM w WHERE rn = 1 ORDER BY canon""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDupsHashed(docs, "doc_id", "text",
         Dedup.hashedWordNgrams(_, 3), num = 7, den = 10, numHashes = 256, bands = 64)
@@ -1158,7 +1202,7 @@ object SparkEntry {
     // sketch invariant: HLL++ approximate distinct (the 100 TB path — no
     // shuffle of distinct values, fixed-size sketch) must land within 15%
     // of the exact count (default rsd = 5%)
-    "q31_approx_distinct" -> ((s, dir) =>
+    Query("q31_approx_distinct", InvariantOracleSql, (s, dir) =>
       t(s, dir, "documents")
         .agg(approx_count_distinct(col("text")).as("approx"),
           countDistinct(col("text")).as("exact"))
@@ -1172,7 +1216,7 @@ object SparkEntry {
     //  (b) probing ONE cell must find a planted exact twin of the query
     //      vector (identical vector -> identical cell, so the pruned search
     //      is guaranteed to see it)
-    "q36_ivf_recall" -> ((s, dir) => {
+    Query("q36_ivf_recall", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twinId = 1000000L
       val corpus = emb.unionByName(emb.filter(col("vec_id") === 0L)
@@ -1195,7 +1239,7 @@ object SparkEntry {
     // EVERY hash table, so candidate generation is guaranteed (not
     // probabilistic) to surface each twin pair, and the exact dot-product
     // verify rejects everything else (max natural pair cosine ~0.6 << 0.999)
-    "q37_lsh_pair_recall" -> ((s, dir) => {
+    Query("q37_lsh_pair_recall", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twins = emb.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
@@ -1212,7 +1256,8 @@ object SparkEntry {
     // filter -> exact dedup, the canonical "what survives into training"
     // query; every stage is a narrow codegen'd expression except the one
     // dedup hash-agg shuffle
-    "q39_corpus_clean" -> ((s, dir) => {
+    Query("q39_corpus_clean",
+      """WITH f AS (SELECT doc_id, text, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents), k AS (SELECT doc_id, text FROM f WHERE n_tok >= 5 AND n_stop * 2 <= n_tok AND s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr) SELECT min(doc_id) AS doc_id, text FROM k GROUP BY text ORDER BY doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val kept = docs.filter(TextAnalysis.qualityOk(col("text")) === 1
         && TextAnalysis.langId(col("text")) === "en")
@@ -1222,7 +1267,8 @@ object SparkEntry {
     // vocabulary building: explode tokens -> count -> top 100; partial
     // (map-side) aggregation absorbs the token explosion before the shuffle,
     // so hot tokens never skew a partition
-    "q40_vocab_topk" -> ((s, dir) =>
+    Query("q40_vocab_topk",
+      "SELECT token, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents) GROUP BY token ORDER BY n DESC, token LIMIT 100", (s, dir) =>
       t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy(col("token"))
@@ -1234,7 +1280,8 @@ object SparkEntry {
     // the same user — the union+window formulation, one keyed shuffle,
     // never a range-join explosion (events.ts is bigint nanos from the
     // Tables boundary normalizer; the oracle compares via epoch_us)
-    "q41_asof_join" -> ((s, dir) => {
+    Query("q41_asof_join",
+      "SELECT p.event_id, epoch_us(v.ts) AS view_us FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'view') v ON p.user_id = v.user_id AND p.ts >= v.ts ORDER BY p.event_id", (s, dir) => {
       val ev = t(s, dir, "events")
       // times truncated to MICROS before the MATCH, not just the output
       // projection (mirrors q43): DuckDB reads TIMESTAMP_NS at microsecond
@@ -1260,7 +1307,8 @@ object SparkEntry {
     // Times truncated to MICROS before joining: DuckDB reads TIMESTAMP_NS
     // at microsecond precision, so a pair within 1 us of the exact 1-hour
     // boundary would otherwise classify differently across engines
-    "q43_range_pairs" -> ((s, dir) =>
+    Query("q43_range_pairs",
+      "SELECT a.user_id, CAST(count(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id)) AND b.ts - a.ts <= INTERVAL 1 HOUR GROUP BY a.user_id ORDER BY a.user_id", (s, dir) =>
       RangeJoin.pairsWithin(
           t(s, dir, "events").select(col("user_id"), col("event_id"),
             expr("ts div 1000").as("ts_us")),
@@ -1273,7 +1321,7 @@ object SparkEntry {
     // quantile sketch invariant: approximate median (GK sketch — fixed-size
     // state, the 100 TB path) within 5% + one-cent slack of the exact
     // median over integer cents
-    "q42_percentile_sketch" -> ((s, dir) =>
+    Query("q42_percentile_sketch", InvariantOracleSql, (s, dir) =>
       t(s, dir, "events")
         .select(round(col("value") * 100).cast(LongType).as("c"))
         .agg(percentile_approx(col("c"), lit(0.5), lit(10000)).as("approx"),
@@ -1286,7 +1334,8 @@ object SparkEntry {
     // path, 1-4 chunks each) — the pre-tokenization explode of every
     // training pipeline; the per-chunk token count double-checks the ceil
     // and slice arithmetic cross-engine
-    "q47_chunking" -> ((s, dir) =>
+    Query("q47_chunking",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), k AS (SELECT doc_id, ts, CASE WHEN len(ts) <= 8 THEN 1 ELSE CAST(ceil((len(ts) - 8) / 24.0) AS BIGINT) END AS nk FROM tok WHERE len(ts) > 0) SELECT doc_id, CAST(x.i AS BIGINT) AS chunk_idx, CAST(len(ts[x.i*24+1 : x.i*24+32]) AS BIGINT) AS n_chunk_tokens FROM k, LATERAL (SELECT unnest(range(0, nk)) AS i) x ORDER BY doc_id, chunk_idx""", (s, dir) =>
       TextAnalysis.chunked(tw(s, dir, "documents"), "doc_id", "text",
           chunkSize = 32, overlap = 8)
         .select(col("doc_id"), col("chunk_idx"),
@@ -1296,7 +1345,11 @@ object SparkEntry {
     // incremental-ingest novelty gate: batch docs (doc_id >= 250) with no
     // unigram-Jaccard >= 0.9 near-dup in the existing corpus (doc_id < 250)
     // — cross-corpus LSH probe + anti-join, the corpus is never self-joined
-    "q46_novel_docs" -> ((s, dir) => {
+    // corpus side restricted to non-empty token sets (empty sets generate no
+    // band keys in the Spark plan); batch docs with empty token sets are
+    // novel by definition on both sides
+    Query("q46_novel_docs",
+      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE NOT EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""", (s, dir) => {
       val docs = tw(s, dir, "documents")
       Dedup.novelAgainst(
           docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
@@ -1309,7 +1362,7 @@ object SparkEntry {
     // deterministic hash train/test split (stable membership under corpus
     // growth — no rand()): ~80/20 within 5 points, splits disjoint and
     // exhaustive by construction, both non-empty
-    "q44_hash_split" -> ((s, dir) => {
+    Query("q44_hash_split", InvariantOracleSql, (s, dir) => {
       val split = Sampling.hashSplit(t(s, dir, "documents"), "doc_id", 80)
       split.agg(count(lit(1)).as("__n"),
           count(when(col("split") === "train", 1)).as("__tr"))
@@ -1321,7 +1374,8 @@ object SparkEntry {
 
     // per-source curation cap: keep the 5 smallest doc_ids per source — the
     // "at most N documents per domain" sampling stage, one keyed window
-    "q45_cap_per_source" -> ((s, dir) =>
+    Query("q45_cap_per_source",
+      "SELECT doc_id, source FROM (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn FROM documents) WHERE rn <= 5 ORDER BY doc_id", (s, dir) =>
       Sampling.capPerKey(t(s, dir, "documents"), Seq("source"),
           Seq(col("doc_id").asc), 5)
         .select(col("doc_id"), col("source"))
@@ -1332,7 +1386,7 @@ object SparkEntry {
     // signatures and bit_count verify kills band-collision false positives,
     // so the symmetric difference vs brute force is 0 by construction —
     // violated only if the banding or verify plumbing is wrong
-    "q38_simhash_neardup" -> ((s, dir) => {
+    Query("q38_simhash_neardup", InvariantOracleSql, (s, dir) => {
       val docs = tw(s, dir, "documents")
       val found = Dedup.simhashNearDups(docs, "doc_id", "text",
         TextAnalysis.tokenSet, maxHamming = 3)
@@ -1352,7 +1406,8 @@ object SparkEntry {
     // flagged repetitive (loops on itself — a strong low-quality marker).
     // Integer cross-multiplication, so the flag is bit-identical
     // cross-engine; one narrow codegen'd pass, no shuffle
-    "q48_repetition" -> ((s, dir) =>
+    Query("q48_repetition",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, greatest(len(ts) - 1, 0) AS n2, CASE WHEN len(ts) >= 2 THEN len(list_distinct([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))])) ELSE 0 END AS d2 FROM tok) SELECT doc_id, CAST(n2 AS BIGINT) AS n2, CAST(d2 AS BIGINT) AS d2, CAST(CASE WHEN n2 > 0 AND d2 * 20 < n2 * 19 THEN 1 ELSE 0 END AS BIGINT) AS repetitive FROM g ORDER BY doc_id""", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.ngramCount(col("text"), 2).as("n2"),
@@ -1365,7 +1420,8 @@ object SparkEntry {
     // benchmark decontamination: corpus docs (doc_id >= 250) sharing ANY
     // word 13-gram with the benchmark half (doc_id < 250) — hashed n-gram
     // explode + distinct semi join; the GPT-3-style containment gate
-    "q49_decontaminate" -> ((s, dir) => {
+    Query("q49_decontaminate",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, unnest([array_to_string(ts[i:i+12], ' ') for i in range(1, len(ts) - 11)]) AS g FROM tok WHERE len(ts) >= 13) SELECT DISTINCT b.doc_id FROM g b WHERE b.doc_id >= 250 AND EXISTS (SELECT 1 FROM g c WHERE c.doc_id < 250 AND c.g = b.g) ORDER BY doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       Decontaminate.contaminatedIds(
           docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
@@ -1377,7 +1433,8 @@ object SparkEntry {
     // domain (explicit values — never the two-pass domain-discovery form,
     // which scans everything once just to learn the columns); count cells,
     // absent combinations filled with 0
-    "q50_pivot_counts" -> ((s, dir) =>
+    Query("q50_pivot_counts",
+      "SELECT user_id, CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS n_view, CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS n_click, CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n_purchase, CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS n_signup, CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS n_error FROM events GROUP BY user_id ORDER BY user_id", (s, dir) =>
       t(s, dir, "events")
         .groupBy(col("user_id"))
         .pivot("event_type", Seq("view", "click", "purchase", "signup", "error"))
@@ -1392,7 +1449,8 @@ object SparkEntry {
     // functions. Times truncated to MICROS before differencing (the q41
     // lesson): DuckDB's TIMESTAMP_NS is micro-precision, so a nano-level
     // floor of the DIFFERENCE can land one below the difference of floors
-    "q51_event_lag" -> ((s, dir) => {
+    Query("q51_event_lag",
+      "SELECT event_id, CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rn, CAST(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS gap_us FROM events ORDER BY event_id", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       t(s, dir, "events")
         .select(col("event_id"), col("user_id"), expr("ts div 1000").as("ts_us"))
@@ -1405,7 +1463,8 @@ object SparkEntry {
     // fixed-width histogram over integer cents (500-cent buckets) — the
     // data-profiling pass of a curation pipeline; output size = range/width
     // regardless of input size, one hash-agg shuffle
-    "q52_histogram" -> ((s, dir) =>
+    Query("q52_histogram",
+      "SELECT CAST(round(value * 100) AS BIGINT) // 500 AS bucket, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY bucket ORDER BY bucket", (s, dir) =>
       Stats.histogram(
           t(s, dir, "events").select(round(col("value") * 100).cast(LongType).as("c")),
           "c", 500L)
@@ -1415,7 +1474,7 @@ object SparkEntry {
     // bits (bloom_filter_agg) must report ZERO false negatives
     // (might_contain is exact for members by construction) — the pre-join
     // filter that prunes a 100 TB probe side before it shuffles
-    "q53_bloom_filter" -> ((s, dir) => {
+    Query("q53_bloom_filter", InvariantOracleSql, (s, dir) => {
       val ev = t(s, dir, "events")
       // the sketch is FIXED-SIZE regardless of input scale — collecting its
       // one row and probing via a foldable literal is the intended shape
@@ -1444,7 +1503,8 @@ object SparkEntry {
     // answer exactly — the graded proof that the streaming surface computes
     // batch semantics; at scale the same query runs unbounded with state
     // pruned by the watermark
-    "q54_stream_windows" -> ((s, dir) => {
+    Query("q54_stream_windows",
+      "SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY w_us, event_type ORDER BY w_us, event_type", (s, dir) => {
       // RAW on-disk schema: the stream re-reads the driver's own files, so
       // the declared schema must match the physical type; ts is normalized
       // to bigint nanos on the stream itself (same boundary rule as t())
@@ -1476,7 +1536,8 @@ object SparkEntry {
     // keys recurring > 10 min apart in event time could be emitted twice.
     // Multi-file corpora must dedup the batch output (or widen the
     // watermark to the corpus' full event-time span) before grading.
-    "q61_stream_dedup" -> ((s, dir) => {
+    Query("q61_stream_dedup",
+      "SELECT DISTINCT user_id FROM events ORDER BY user_id", (s, dir) => {
       val schema = Tables.raw(s, dir, "events").schema
       val stream = Tables.withTsNanos(
           s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
@@ -1496,7 +1557,7 @@ object SparkEntry {
     // only, no float-averaging); the ADC code scan shortlists 100
     // candidates, exact rescore picks 10, and the result must recover
     // >= 7 of the exact cosine top-10 (measured 8-10 at sf0.001/sf0.01)
-    "q55_pq_recall" -> ((s, dir) => {
+    Query("q55_pq_recall", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val cb = Similarity.pqTrain(emb, "vec_id", "embedding",
         dim = 64, m = 8, k = 64, iterations = 0)
@@ -1517,7 +1578,7 @@ object SparkEntry {
     // bit-determinism — so probing stays wide), shortlist >= 10% of n.
     // Recall >= 6 of the exact top-10 pinned; deterministic, measured
     // 7/9/8 at sf0.001/0.01/0.1
-    "q57_ivfpq_recall" -> ((s, dir) => {
+    Query("q57_ivfpq_recall", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val n = emb.count()
       val cells = math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -1541,7 +1602,8 @@ object SparkEntry {
     // df = vocabulary-sized table AQE-broadcast into the join, then one
     // keyed window (the float tfidf column itself is spec-tested, not
     // oracle-hashed — cross-engine ln() is not bit-stable)
-    "q58_rare_terms" -> ((s, dir) =>
+    Query("q58_rare_terms",
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents), tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, token), dfx AS (SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS df FROM tok GROUP BY token), r AS (SELECT tf.doc_id, tf.token, tf.tf, dfx.df, row_number() OVER (PARTITION BY tf.doc_id ORDER BY dfx.df, tf.token) AS rn FROM tf JOIN dfx USING (token)) SELECT doc_id, token, tf, df FROM r WHERE rn = 1 ORDER BY doc_id""", (s, dir) =>
       graft.text.TfIdf.rarestTokens(t(s, dir, "documents"), "doc_id", "text", k = 1)
         .orderBy("doc_id")),
 
@@ -1550,7 +1612,7 @@ object SparkEntry {
     // the EXACT nesting property (kept@0.25 ⊆ kept@0.5, true by
     // construction: same hash, lower threshold) plus a 10-point envelope
     // on the default-rate fraction
-    "q59_mixture_sample" -> ((s, dir) => {
+    Query("q59_mixture_sample", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val rates = Map("src0" -> 1.0, "src1" -> 0.0)
       val half = Sampling.mixtureSample(docs, "doc_id", "source", rates, defaultRate = 0.5)
@@ -1574,7 +1636,8 @@ object SparkEntry {
     // vocabulary types occur k times — two chained hash-aggs, the second
     // over a vocabulary-sized input; the corpus-health profile a curation
     // run reads before choosing cutoffs
-    "q60_freq_spectrum" -> ((s, dir) =>
+    Query("q60_freq_spectrum",
+      "SELECT occ, CAST(count(*) AS BIGINT) AS n_tokens FROM (SELECT token, CAST(count(*) AS BIGINT) AS occ FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents) GROUP BY token) GROUP BY occ ORDER BY occ", (s, dir) =>
       t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("occ"))
@@ -1586,7 +1649,7 @@ object SparkEntry {
     // the fixed-size "what are the hot keys" pass that replaces an exact
     // top-k shuffle when only magnitudes matter. Estimates are
     // deterministic (seeded) and NEVER undercount by construction
-    "q62_cms_heavy_hitters" -> ((s, dir) => {
+    Query("q62_cms_heavy_hitters", InvariantOracleSql, (s, dir) => {
       val toks = t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
       val top = toks.groupBy(col("token")).agg(count(lit(1)).as("n"))
@@ -1611,7 +1674,8 @@ object SparkEntry {
     // volume, repetitive count — the text metrics composed into ONE
     // grouped pass (every signal is a narrow expression; one shuffle on
     // source); integer sums only, so the report hashes cross-engine
-    "q63_source_quality" -> ((s, dir) => {
+    Query("q63_source_quality",
+      """WITH f AS (SELECT source, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS nt, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS nstop FROM documents), g AS (SELECT source, nt, CASE WHEN nt >= 5 AND nstop * 2 <= nt THEN 1 ELSE 0 END AS ok, greatest(len(ts) - 1, 0) AS n2, CASE WHEN len(ts) >= 2 THEN len(list_distinct([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))])) ELSE 0 END AS d2 FROM f) SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(ok) AS BIGINT) AS n_quality_ok, CAST(sum(nt) AS BIGINT) AS total_tokens, CAST(sum(CASE WHEN n2 > 0 AND d2 * 20 < n2 * 19 THEN 1 ELSE 0 END) AS BIGINT) AS n_repetitive FROM g GROUP BY source ORDER BY source""", (s, dir) => {
       val n2 = TextAnalysis.ngramCount(col("text"), 2)
       val d2 = TextAnalysis.distinctNgramCount(col("text"), 2)
       t(s, dir, "documents")
@@ -1630,7 +1694,7 @@ object SparkEntry {
     // the salted two-phase aggregation must equal the plain one — the skew
     // machinery is semantics-preserving by construction; violated only if
     // the salt fold-back drops or double-counts rows
-    "q56_skew_salted_agg" -> ((s, dir) => {
+    Query("q56_skew_salted_agg", InvariantOracleSql, (s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"))
       val salted = SkewJoin.saltedCount(ev, Seq("user_id"), buckets = 8)
       val plain = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n0"))
@@ -1645,7 +1709,8 @@ object SparkEntry {
     // sentinel-coalesced ('<all>' / -1, both outside the real domains) so
     // the output is null-free for stable cross-engine hashing; gid keeps
     // the grouping-set id the sentinels encode
-    "q67_cube_counts" -> ((s, dir) => {
+    Query("q67_cube_counts",
+      """WITH e AS (SELECT event_type, (epoch_ns(ts) // 3600000000000) % 24 AS h FROM events) SELECT coalesce(event_type, '<all>') AS event_type, CAST(coalesce(h, -1) AS BIGINT) AS h, CAST(count(*) AS BIGINT) AS n, CAST(GROUPING(event_type) * 2 + GROUPING(h) AS BIGINT) AS gid FROM e GROUP BY CUBE(event_type, h) ORDER BY gid, event_type, h""", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_type"), expr("(ts div 3600000000000) % 24").as("h"))
       Stats.cubeCounts(ev, Seq(col("event_type"), col("h")))
@@ -1660,7 +1725,8 @@ object SparkEntry {
     // fact table joins with ZERO shuffle (the only exchange is the final
     // per-nation aggregate); revenue integerized to cents before summing
     // so group totals are order-independent and hash cross-engine
-    "q68_star_revenue" -> ((s, dir) => {
+    Query("q68_star_revenue",
+      "SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey JOIN nation n ON c.c_nationkey = n.n_nationkey GROUP BY n_name ORDER BY n_name", (s, dir) => {
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
@@ -1679,7 +1745,8 @@ object SparkEntry {
     // with the (n_chars, doc_id) order — the PrefixSum contract): per-
     // bucket parallel windows + a |buckets|-sized offsets broadcast,
     // never a SinglePartition global sort (the q153/q162 discipline)
-    "q69_strata_sample" -> ((s, dir) =>
+    Query("q69_strata_sample",
+      "SELECT doc_id, n_chars, stratum FROM (SELECT doc_id, n_chars, stratum, row_number() OVER (PARTITION BY stratum ORDER BY n_chars, doc_id) AS rn FROM (SELECT doc_id, n_chars, CAST(ntile(4) OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS stratum FROM documents)) WHERE rn <= 10 ORDER BY doc_id", (s, dir) =>
       Sampling.strataSample(t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
           order = Seq(col("n_chars"), col("doc_id")), nStrata = 4, perStratum = 10,
           bucket = Some(expr("n_chars div 8")))
@@ -1690,7 +1757,8 @@ object SparkEntry {
     // (ordered — an email's digits belong to the email mask), with
     // per-pattern audit counts; one narrow regexp pass, RE2-safe patterns
     // so the redaction is bit-identical across engines
-    "q70_scrub" -> ((s, dir) =>
+    Query("q70_scrub",
+      """SELECT event_id, regexp_replace(regexp_replace(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'), '[0-9]{2,}', '<NUM>', 'g') AS scrubbed, CAST(len(regexp_extract_all(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_email, CAST(len(regexp_extract_all(props, '[0-9]{2,}')) AS BIGINT) AS n_num FROM events ORDER BY event_id""", (s, dir) =>
       Scrub.scrubbed(t(s, dir, "events").select(col("event_id"), col("props")), "props",
           Seq(("n_email", Scrub.EmailRe, "<EMAIL>"),
             ("n_num", Scrub.digitRunRe(2), "<NUM>")))
@@ -1700,7 +1768,8 @@ object SparkEntry {
     // bigram LM head: top-3 continuations of every token by in-document
     // adjacency count — posexplode + per-doc lead window + (w1,w2) count,
     // all relational (no interpreted HOFs), vocabulary-bounded output
-    "q71_bigram_lm" -> ((s, dir) =>
+    Query("q71_bigram_lm",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), c AS (SELECT split_part(b, ' ', 1) AS w1, split_part(b, ' ', 2) AS w2, CAST(count(*) AS BIGINT) AS n FROM bg GROUP BY w1, w2) SELECT w1, w2, n, rn FROM (SELECT w1, w2, n, CAST(row_number() OVER (PARTITION BY w1 ORDER BY n DESC, w2) AS BIGINT) AS rn FROM c) WHERE rn <= 3 ORDER BY w1, rn""", (s, dir) =>
       NgramStats.nextTokenTopK(t(s, dir, "documents"), "doc_id", "text", 3)
         .orderBy("w1", "rn")),
 
@@ -1710,7 +1779,8 @@ object SparkEntry {
     // self-joined; its band table is the reusable index of a production
     // ingest loop). Same trigram/J>=0.7 regime as q22, so the oracle is
     // q22's all-pairs restricted to cross pairs
-    "q72_incr_dedup" -> ((s, dir) => {
+    Query("q72_incr_dedup",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_new, b.doc_id AS doc_old FROM tri a JOIN tri b ON a.doc_id >= 250 AND b.doc_id < 250 WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_new, doc_old""", (s, dir) => {
       val docs = tw(s, dir, "documents")
       Dedup.crossNearDupsHashed(
           docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
@@ -1733,34 +1803,34 @@ object SparkEntry {
     // (sessionizeStream scaladoc): gap-preceding stragglers close as
     // singletons — can't occur here, the corpus arrives as ONE ordered
     // microbatch, so parity with batch q32 is exact
-    "q73_stream_sessions" -> ((s, dir) => {
+    Query("q73_stream_sessions",
+      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id", (s, dir) => {
       import s.implicits._
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getLong(0)
-      val srcDir = java.nio.file.Files.createTempDirectory("q73src").toString
-      ev.coalesce(1).write.mode("append").parquet(srcDir)
-      ev.select(col("user_id")).distinct()
-        .select(col("user_id"), lit(-1L).as("event_id"),
-          lit(maxTs + 7200L * 1000 * 1000 * 1000).as("ts"))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      val stream = s.readStream.schema(ev.schema).parquet(s"$srcDir/*.parquet")
-        .select(col("user_id"), col("event_id"),
-          timestamp_micros(expr("ts div 1000")).as("ts"))
-        .as[IncrementalStream.SessionEvent]
-      val sessions = IncrementalStream.sessionizeStream(
-        stream, gapUs = 1800L * 1000 * 1000, watermarkDelay = "10 minutes")
-      val sink = s"q73_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = sessions.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val out = drainSink(s, sink, s.table(sink)
-        .filter(col("session_start") <= maxTs / 1000)
-        .groupBy("user_id")
-        .agg(sum(col("n_events")).cast(LongType).as("n_events"),
-          count(lit(1)).cast(LongType).as("n_sessions"))
-        .orderBy("user_id"))
-      deleteRecursively(srcDir)
-      out
+      withTempDir("q73src") { srcDir =>
+        ev.coalesce(1).write.mode("append").parquet(srcDir)
+        ev.select(col("user_id")).distinct()
+          .select(col("user_id"), lit(-1L).as("event_id"),
+            lit(maxTs + 7200L * 1000 * 1000 * 1000).as("ts"))
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        val stream = s.readStream.schema(ev.schema).parquet(s"$srcDir/*.parquet")
+          .select(col("user_id"), col("event_id"),
+            timestamp_micros(expr("ts div 1000")).as("ts"))
+          .as[IncrementalStream.SessionEvent]
+        val sessions = IncrementalStream.sessionizeStream(
+          stream, gapUs = 1800L * 1000 * 1000, watermarkDelay = "10 minutes")
+        val sink = s"q73_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+        val q = sessions.writeStream.format("memory").queryName(sink)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        drainSink(s, sink, s.table(sink)
+          .filter(col("session_start") <= maxTs / 1000)
+          .groupBy("user_id")
+          .agg(sum(col("n_events")).cast(LongType).as("n_events"),
+            count(lit(1)).cast(LongType).as("n_sessions"))
+          .orderBy("user_id"))
+      }
     }),
 
     // anti-entropy checksum invariant: the table fingerprint must be
@@ -1769,7 +1839,7 @@ object SparkEntry {
     // when a single row is dropped. This is the property that lets a sync
     // engine compare source and destination content with one narrow scan
     // per side and no sort — counts alone cannot catch drifted values
-    "q74_sync_checksum" -> ((s, dir) => {
+    Query("q74_sync_checksum", InvariantOracleSql, (s, dir) => {
       import graft.sync.Checksum
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       val o = t(s, dir, "orders").select(cols.map(col): _*)
@@ -1789,7 +1859,7 @@ object SparkEntry {
     // runtime row-level filtering pattern, here explicit) must leave the
     // join result bit-identical — no false negatives means pruning only
     // discards rows the join would reject anyway
-    "q75_bloom_pruned_join" -> ((s, dir) => {
+    Query("q75_bloom_pruned_join", InvariantOracleSql, (s, dir) => {
       val ev = t(s, dir, "events")
       val dimUsers = ev.filter(col("event_type") === "signup")
         .select(col("user_id")).distinct()
@@ -1816,7 +1886,8 @@ object SparkEntry {
     // per-user pair counts (q43's oracle). AvailableNow processes the one
     // events file in a single microbatch, so both sides see the full
     // corpus and every in-window pair joins in that batch
-    "q77_stream_join" -> ((s, dir) => {
+    Query("q77_stream_join",
+      "SELECT a.user_id, CAST(count(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id)) AND b.ts - a.ts <= INTERVAL 1 HOUR GROUP BY a.user_id ORDER BY a.user_id", (s, dir) => {
       val schema = Tables.raw(s, dir, "events").schema
       val stream = Tables.withTsNanos(
           s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
@@ -1838,7 +1909,8 @@ object SparkEntry {
     // nation, region, and grand-total levels from ONE scan (Expand + a
     // single aggregate, like q67's CUBE but hierarchy-ordered subtotals);
     // three broadcast dims keep the fact table shuffle-free pre-agg
-    "q76_rollup_geo" -> ((s, dir) => {
+    Query("q76_rollup_geo",
+      """WITH j AS (SELECT r.r_name, n.n_name, o.o_totalprice FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey JOIN nation n ON c.c_nationkey = n.n_nationkey JOIN region r ON n.n_regionkey = r.r_regionkey) SELECT coalesce(r_name, '<all>') AS r_name, coalesce(n_name, '<all>') AS n_name, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents, CAST(GROUPING(r_name) * 2 + GROUPING(n_name) AS BIGINT) AS gid FROM j GROUP BY ROLLUP(r_name, n_name) ORDER BY gid, r_name, n_name""", (s, dir) => {
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
@@ -1861,7 +1933,8 @@ object SparkEntry {
     // is INCLUSIVE on both sides (an event at exactly session-end merges;
     // `ts - prev <= gap` keeps) — exact-boundary agreement is pinned by
     // SessionizeSpec, so a plain 30-minute gap is the correct parity gap
-    "q78_session_window" -> ((s, dir) =>
+    Query("q78_session_window",
+      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id", (s, dir) =>
       Sessionize.sessionStatsNative(
           t(s, dir, "events")
             .select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("__ts")),
@@ -1871,7 +1944,8 @@ object SparkEntry {
     // exact discrete percentiles per event type: median and p90 of the
     // cents-integerized value at rank ceil(p*n) — integer rank arithmetic
     // (never float p*n), one shared window pass for both percentiles
-    "q79_group_percentiles" -> ((s, dir) =>
+    Query("q79_group_percentiles",
+      "SELECT event_type, CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(round(value*100) AS BIGINT)) AS BIGINT) AS med_cents, CAST(percentile_disc(0.9) WITHIN GROUP (ORDER BY CAST(round(value*100) AS BIGINT)) AS BIGINT) AS p90_cents FROM events GROUP BY event_type ORDER BY event_type", (s, dir) =>
       Stats.percentileDisc(
           t(s, dir, "events")
             .select(col("event_type"), round(col("value") * 100).cast(LongType).as("cents")),
@@ -1885,7 +1959,8 @@ object SparkEntry {
     // pipeline — output must equal q22's broadcast-plan output exactly.
     // The gate is read EAGERLY while the plan is built (fitsBroadcast),
     // so restoring the conf in finally cannot race the execution
-    "q81_lsh_shuffle_parity" -> ((s, dir) => {
+    Query("q81_lsh_shuffle_parity",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tri a JOIN tri b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_a, doc_b""", (s, dir) => {
       val key = Dedup.BroadcastThresholdKey
       val prev = s.conf.getOption(key)
       s.conf.set(key, "0")
@@ -1903,7 +1978,7 @@ object SparkEntry {
     // buckets and replicating the dim must reproduce the plain join's
     // aggregate exactly (completes q56's salted-AGGREGATE invariant with
     // the salted-JOIN one)
-    "q82_salted_join" -> ((s, dir) => {
+    Query("q82_salted_join", InvariantOracleSql, (s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"))
       val dim = ev.groupBy(col("user_id")).agg(count(lit(1)).as("w"))
       def roll(df: DataFrame) =
@@ -1921,7 +1996,7 @@ object SparkEntry {
     // corpus-dependent (random vectors have no directional clusters;
     // measured 0-2/10 here), which is exactly why q26 grades contract
     // parity (top-k within the probed buckets) rather than raw recall
-    "q86_srp_twin" -> ((s, dir) => {
+    Query("q86_srp_twin", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twinId = 1000000L
       val corpus = emb.unionByName(emb.filter(col("vec_id") === 0L)
@@ -1938,7 +2013,7 @@ object SparkEntry {
     // equal the formula for every row. The metadata fallback cannot fake
     // a pass: its dims are always >= 64 while the planted dims are <= 37,
     // so a silent fallback (or any header mis-parse) counts as violations
-    "q87_image_decode" -> ((s, dir) => {
+    Query("q87_image_decode", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       def expW(id: Column) = lit(1L) + id % 37L
@@ -1969,7 +2044,7 @@ object SparkEntry {
     // reproduce (n, 1000*A, A) bit-for-bit; an endianness or sign bug
     // cannot pass (A >= 256 makes byte order visible, negatives make
     // sign extension visible)
-    "q101_audio_decode" -> ((s, dir) => {
+    Query("q101_audio_decode", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       val media = t(s, dir, "documents").select(col("doc_id").cast(LongType)).as[Long]
@@ -1998,7 +2073,7 @@ object SparkEntry {
     // (fmt chunk + square-wave PCM16 data chunk; every other doc gets an
     // odd-sized JUNK chunk before data, so the chunk WALK — not a fixed
     // offset — is what passes). All expectations are exact integers
-    "q103_wav_decode" -> ((s, dir) => {
+    Query("q103_wav_decode", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       val media = t(s, dir, "documents").select(col("doc_id").cast(LongType)).as[Long]
@@ -2035,7 +2110,7 @@ object SparkEntry {
     // before the header list, ids %3==0 a JUNK inside hdrl before avih —
     // a fixed-offset parser fails both ways; only the real chunk walker
     // recovers every planted (width, height, frames, rate, streams) tuple
-    "q107_avi_decode" -> ((s, dir) => {
+    Query("q107_avi_decode", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       val media = t(s, dir, "documents").select(col("doc_id").cast(LongType)).as[Long]
@@ -2082,7 +2157,8 @@ object SparkEntry {
     // engine must compose them back and the codepoint counts must shrink by
     // exactly the planted amount — both compared against DuckDB's
     // utf8proc-backed nfc_normalize
-    "q108_nfc_normalize" -> ((s, dir) => {
+    Query("q108_nfc_normalize",
+      "WITH d AS (SELECT doc_id, replace(text, 'e', 'e' || chr(769)) AS t FROM documents) SELECT doc_id, nfc_normalize(t) AS t_nfc, CAST(length(t) AS BIGINT) AS len_dec, CAST(length(nfc_normalize(t)) AS BIGINT) AS len_nfc FROM d ORDER BY doc_id", (s, dir) => {
       val dec = t(s, dir, "documents").select(col("doc_id"),
         // "e" + U+0301 COMBINING ACUTE, written as an escape so the source
         // cannot silently hold the precomposed form instead
@@ -2100,7 +2176,8 @@ object SparkEntry {
     // codegen'd levenshtein verify — vs the oracle's O(n²) levenshtein
     // cross join. The corpus is the document vocabulary plus planted
     // first-char-dropped misspellings, so the pair set is nontrivial
-    "q109_fuzzy_join" -> ((s, dir) =>
+    Query("q109_fuzzy_join",
+      "WITH tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4) SELECT a.w AS w_a, b.w AS w_b FROM corpus a JOIN corpus b ON a.w < b.w WHERE levenshtein(a.w, b.w) <= 1 ORDER BY w_a, w_b", (s, dir) =>
       FuzzyJoin.neighborPairs(fuzzyCorpus(s, dir), "w").orderBy("w_a", "w_b")),
 
     // q163: the DEPTH-2 deletion neighborhood — edit distance <= 2, the
@@ -2109,7 +2186,9 @@ object SparkEntry {
     // the wider bound: the SymSpell depth-2 completeness claim (every
     // distance-2 pair shares a double-deletion variant) sits IN the
     // correctness gate, so a blocking recall loss cannot pass
-    "q163_fuzzy_join_d2" -> ((s, dir) =>
+    // q163: the same corpus CTE at the distance-2 radius
+    Query("q163_fuzzy_join_d2",
+      "WITH tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4) SELECT a.w AS w_a, b.w AS w_b FROM corpus a JOIN corpus b ON a.w < b.w WHERE levenshtein(a.w, b.w) <= 2 ORDER BY w_a, w_b", (s, dir) =>
       FuzzyJoin.neighborPairs(fuzzyCorpus(s, dir), "w", maxDist = 2)
         .orderBy("w_a", "w_b")),
 
@@ -2119,7 +2198,8 @@ object SparkEntry {
     // chosen on the WORDS so the oracle can mirror it; the internal canon
     // label is hash-valued and never escapes). Output: every corpus word
     // mapped to its cluster's canonical form — the record-linkage shape
-    "q111_entity_resolution" -> ((s, dir) => {
+    Query("q111_entity_resolution",
+      """WITH RECURSIVE tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4), pairs AS (SELECT a.w AS src, b.w AS dst FROM corpus a JOIN corpus b ON a.w <> b.w AND levenshtein(a.w, b.w) <= 1), reach AS (SELECT w AS id, w AS r FROM corpus UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS w, min(r) AS c FROM reach GROUP BY id), rep AS (SELECT c, w AS rep FROM (SELECT c, w, row_number() OVER (PARTITION BY c ORDER BY len(w) DESC, w) AS rn FROM canon) WHERE rn = 1) SELECT canon.w, rep.rep FROM canon JOIN rep USING (c) ORDER BY w""", (s, dir) => {
       val corpus = fuzzyCorpus(s, dir)
       // the vocabulary derivation (scan + explode + two distinct shuffles)
       // feeds FIVE plan branches (both sides of the blocking self-join, two
@@ -2145,7 +2225,8 @@ object SparkEntry {
     // from TWO epoch states (orderkey <= 4000 base, > 4000 delta) must
     // equal the direct aggregate over all orders — the materialized-view
     // maintenance property; the merge touches state-sized inputs only
-    "q114_incr_stats" -> ((s, dir) => {
+    Query("q114_incr_stats",
+      "SELECT o_custkey, CAST(count(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS n, CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_v, CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS min_v, CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS max_v FROM orders GROUP BY o_custkey ORDER BY o_custkey", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("cents"))
       val base = Stats.mergeableStats(o.filter(col("o_orderkey") <= 4000),
@@ -2159,7 +2240,8 @@ object SparkEntry {
     // row gets its top-k corpus neighbors): query side broadcast, corpus
     // scanned once, only (query, neighbor, score) triples shuffle into the
     // per-query top-k window — vs the oracle's cross join + rank
-    "q112_knn_join" -> ((s, dir) => {
+    Query("q112_knn_join",
+      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.knnJoin(emb.filter(col("vec_id") < 25), emb,
           "vec_id", "embedding", k = 5)
@@ -2170,16 +2252,13 @@ object SparkEntry {
     // row-for-row: grades the cell assignment + per-query probe explode +
     // equi-join candidate plumbing (the scale path) against the exact
     // contract — candidate sets, not scoring, are what can drift
-    "q113_ivf_knn_parity" -> ((s, dir) => {
+    Query("q113_ivf_knn_parity", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val exact = Similarity.knnJoin(queries, emb, "vec_id", "embedding", 5)
       val index = Similarity.ivfIndex(emb, "vec_id", "embedding", numCentroids = 8)
       val ivf = Similarity.knnJoinIvf(index, queries, "vec_id", "embedding", 5, nprobe = 8)
-      exact.withColumn("__x", lit(1))
-        .join(ivf.withColumn("__y", lit(1)),
-          Seq("query_id", "neighbor_id"), "full_outer")
-        .agg(violations(col("__x").isNull || col("__y").isNull))
+      parity(exact, ivf, Seq("query_id", "neighbor_id"))
     }),
 
     // IMAGE near-dup graded end-to-end (the dedup story's third modality):
@@ -2194,14 +2273,12 @@ object SparkEntry {
     // are computed from the data (groups with both members present), so
     // the gate is exact-set equality: a constant/broken hash floods false
     // pairs, a noisy hash loses twins — both count as violations
-    "q115_image_neardup" -> ((s, dir) => {
+    Query("q115_image_neardup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedImageMedia(s, docs)
       val pairs = Dedup.imageNearDups(media, maxHamming = 3)
       val expected = plantedPairExpectation(docs)
-      expected.withColumn("__e", lit(1))
-        .join(pairs.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-        .agg(violations(col("__e").isNull || col("__f").isNull))
+      parity(expected, pairs, Seq("id_a", "id_b"))
     }),
 
     // opt-in schema evolution in the sync pipeline (the reference
@@ -2213,13 +2290,12 @@ object SparkEntry {
     // NULL for rows synced before the column existed (id <= the first
     // run's watermark), populated for rows extracted after — compared
     // null-safely against the expectation derived from the raw table
-    "q116_schema_evolution" -> ((s, dir) => {
+    Query("q116_schema_evolution", InvariantOracleSql, (s, dir) => {
       import graft.config.{CheckType, TableConfig}
       import graft.sync.{ParquetStore, SyncJob}
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"),
         col("n_chars").cast(LongType).as("n_chars"), col("source"))
-      val tmp = java.nio.file.Files.createTempDirectory("q116").toString
-      try {
+      withTempDir("q116") { tmp =>
         val src = new ParquetStore(s, s"$tmp/src")
         val dst = new ParquetStore(s, s"$tmp/dst")
         val cfg = TableConfig("docs", Some("doc_id"), Some(CheckType.Id), Seq.empty)
@@ -2242,7 +2318,7 @@ object SparkEntry {
           (if (strictRefused) 0L else 1L) +
           (if (out.columns.toSeq == Seq("doc_id", "n_chars", "src_tag")) 0L else 1L)
         s.range(1).select(lit(v).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // batch PQ/ADC retrieval graded two ways: (a) at a keep-everything
@@ -2253,7 +2329,7 @@ object SparkEntry {
     // still be retrieved top-k — the clause a broken ADC ordering cannot
     // pass even though (a) would (a garbage score still "keeps
     // everything" when nothing is cut)
-    "q117_pq_knn_parity" -> ((s, dir) => {
+    Query("q117_pq_knn_parity", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val queries = emb.filter(col("vec_id") < 25)
       val twinBase = 1000000L
@@ -2284,7 +2360,7 @@ object SparkEntry {
     // plumbing), and a TIGHT probe/shortlist must still retrieve each
     // query's planted twin (identical vector -> own top cell, identical
     // codes -> maximal ADC) — binding both funnel stages
-    "q118_ivfpq_knn_parity" -> ((s, dir) => {
+    Query("q118_ivfpq_knn_parity", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val queries = emb.filter(col("vec_id") < 25)
       val twinBase = 1000000L
@@ -2320,14 +2396,14 @@ object SparkEntry {
     // Ids are unique across the corpus, so the multi-file same-id
     // re-emission caveat cannot trigger; constant day-1 arrival (the
     // epoch-0 late-filter pitfall, see contaminatedIdsStream)
-    "q119_stream_decontaminate" -> ((s, dir) => {
+    // q119 grades the STREAMING plan against the SAME contaminated-set
+    // oracle as batch q49 (the q81 pairing pattern)
+    Query("q119_stream_decontaminate",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, unnest([array_to_string(ts[i:i+12], ' ') for i in range(1, len(ts) - 11)]) AS g FROM tok WHERE len(ts) >= 13) SELECT DISTINCT b.doc_id FROM g b WHERE b.doc_id >= 250 AND EXISTS (SELECT 1 FROM g c WHERE c.doc_id < 250 AND c.g = b.g) ORDER BY doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val arrivals = docs.filter(col("doc_id") >= 250)
-      val srcDir = java.nio.file.Files.createTempDirectory("q119src").toString
-      try {
-        arrivals.repartition(2).write.mode("append").parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q119src") { srcDir =>
+        val stream = fileStream(s, arrivals, 2, srcDir)
         val flagged = Decontaminate.contaminatedIdsStream(
           stream, docs.filter(col("doc_id") < 250), "doc_id", "text",
           eventTimeCol = timestamp_micros(lit(86400000000L)), n = 13)
@@ -2336,7 +2412,7 @@ object SparkEntry {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally deleteRecursively(srcDir)
+      }
     }),
 
     // STREAMING ingest near-dup gate through a PERSISTED index: the corpus
@@ -2353,17 +2429,17 @@ object SparkEntry {
     // maxFilesPerTrigger=1) so the per-doc distinct is exercised across
     // batch boundaries; ids unique, so no re-emission caveat. Day-1
     // arrival (late-filter pitfall)
-    "q121_stream_ingest_dedup" -> ((s, dir) => {
+    // q121 is the EXISTS inverse of q46's novel-docs oracle: the streaming
+    // reject list = arrivals WITH a J>=0.9 token-set near-dup in the corpus
+    Query("q121_stream_ingest_dedup",
+      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""", (s, dir) => {
       // fanned scan: the index build minhashes 2 500 docs (125 hashes/doc)
       // and would otherwise run in the single-split scan task (fanOut
       // scaladoc); signatures are per-row deterministic, so the exchange
       // is result-neutral
       val docs = tw(s, dir, "documents")
       val arrivals = docs.filter(col("doc_id") >= 250)
-      val srcDir = java.nio.file.Files.createTempDirectory("q121src").toString
-      val idxDir = java.nio.file.Files.createTempDirectory("q121idx").toString
-      try {
-        arrivals.repartition(2).write.mode("append").parquet(srcDir)
+      withTempDir("q121src") { srcDir => withTempDir("q121idx") { idxDir =>
         val built = Dedup.buildNearDupIndex(docs.filter(col("doc_id") < 250),
           "doc_id", "text", c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
           numHashes = 125, bands = 25)
@@ -2372,8 +2448,7 @@ object SparkEntry {
         idxStore.write(built.shingleSets, "shingle_sets")
         val index = Dedup.NearDupIndex(
           idxStore.read("band_index").get, idxStore.read("shingle_sets").get)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, arrivals, 2, srcDir)
         val dups = Dedup.duplicateIdsStream(
           stream, index, "doc_id", "text",
           c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
@@ -2385,7 +2460,7 @@ object SparkEntry {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally { deleteRecursively(srcDir); deleteRecursively(idxDir) }
+      } }
     }),
 
     // STREAMING maintained materialized view: per-customer order stats
@@ -2395,22 +2470,21 @@ object SparkEntry {
     // the continuously-maintained-dashboard deployment. The atomic
     // state+__last_batch marker write makes replayed batches skip instead
     // of double-counting (maintainStats scaladoc)
-    "q123_stream_maintained_view" -> ((s, dir) => {
+    // q123 grades the streaming maintained view against q114's batch oracle
+    Query("q123_stream_maintained_view",
+      "SELECT o_custkey, CAST(count(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS n, CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_v, CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS min_v, CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS max_v FROM orders GROUP BY o_custkey ORDER BY o_custkey", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q123").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        o.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(o.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q123") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, o, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.maintainStats(stream, Seq("o_custkey"), "cents",
           store, "stats", checkpointDir = ckDir).awaitTermination()
         store.read("stats").get.drop("__last_batch")
           .select(col("o_custkey"), col("n"), col("sum_v"), col("min_v"), col("max_v"))
           .orderBy("o_custkey").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // STREAMING retrieval serving: the 25 query vectors arrive across TWO
@@ -2420,15 +2494,14 @@ object SparkEntry {
     // row-for-row (SAME full SQL oracle): per-query independence makes the
     // result batch-partitioning-invariant, and grading across a real
     // 2-batch split is what proves it
-    "q122_stream_knn_serve" -> ((s, dir) => {
+    // q122 grades the streaming serving loop against q112's batch oracle
+    Query("q122_stream_knn_serve",
+      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id", (s, dir) => {
       import graft.sync.ParquetStore
       val emb = t(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("q122").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        emb.filter(col("vec_id") < 25).repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q122") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, emb.filter(col("vec_id") < 25), 2, srcDir)
         val store = new ParquetStore(s, outDir)
         val q = IncrementalStream.knnServe(stream, emb, "vec_id", "embedding",
           k = 5, store, "served", checkpointDir = ckDir)
@@ -2436,7 +2509,7 @@ object SparkEntry {
         store.read("served").get
           .select(col("query_id"), col("neighbor_id"))
           .orderBy("query_id", "neighbor_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // CONTINUOUS ANN index maintenance — the third side of the serving
@@ -2449,33 +2522,27 @@ object SparkEntry {
     // a violations contract. Per-batch cost is the batch's own rows
     // against numCentroids literals; the accumulated index is never
     // re-scanned for assignment
-    "q124_stream_index_ingest" -> ((s, dir) => {
+    // q124: incremental-vs-batch index build parity is a Spark-side
+    // full-outer contract (the q113 pattern)
+    Query("q124_stream_index_ingest", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("q124").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        emb.repartition(3).write.parquet(srcDir)
+      withTempDir("q124") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val batchIdx = Similarity.ivfIndex(emb, "vec_id", "embedding", numCentroids = 8)
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, emb, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.indexIngest(stream, batchIdx.cents, "vec_id", "embedding",
           store, "assigned", checkpointDir = ckDir).awaitTermination()
-        val inc = store.read("assigned").get
-          .select(col("vec_id"), col("__centroid")).withColumn("__y", lit(1))
+        val inc = store.read("assigned").get.select(col("vec_id"), col("__centroid"))
         // row-count equality alongside the full-outer parity (the q120
         // pattern): a duplicate (vec_id, __centroid) row in the ingested
         // index — the exact failure the retry guard exists to prevent —
         // matches both sides of the full outer and would otherwise be
         // invisible to the null check, while double-serving neighbors
         val nBatch = batchIdx.assigned.count()
-        batchIdx.assigned
-          .select(col("vec_id"), col("__centroid")).withColumn("__x", lit(1))
-          .join(inc, Seq("vec_id", "__centroid"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+        parity(batchIdx.assigned.select(col("vec_id"), col("__centroid")), inc,
+          Seq("vec_id", "__centroid"), rows = Some(nBatch)).localCheckpoint()
+      }
     }),
 
     // CCNet-style LM-surprise quality partition through a PERSISTED bigram
@@ -2487,17 +2554,20 @@ object SparkEntry {
     // n_bigrams) instead of float log-prob sums: bucket boundaries are
     // bit-identical across engines, which a last-ulp perplexity rank is
     // not
-    "q125_lm_quality_buckets" -> ((s, dir) => {
+    // q125: reference LM = DISTINCT bigram types of doc_id < 250; per
+    // scored doc, bigram occurrences and out-of-model occurrences, with
+    // the integer-threshold head(<=1/10)/middle(<=1/2)/tail bucketing
+    Query("q125_lm_quality_buckets",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT doc_id, unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), ref AS (SELECT DISTINCT b FROM bg WHERE doc_id < 250), sc AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, CAST(sum(CASE WHEN ref.b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov FROM bg LEFT JOIN ref ON bg.b = ref.b WHERE bg.doc_id >= 250 GROUP BY bg.doc_id) SELECT doc_id, n_bigrams, n_oov, CASE WHEN n_oov * 10 <= n_bigrams THEN 'head' WHEN n_oov * 2 <= n_bigrams THEN 'middle' ELSE 'tail' END AS bucket FROM sc ORDER BY doc_id""", (s, dir) => {
       val docs = tw(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q125").toString
-      try {
+      withTempDir("q125") { tmp =>
         val store = new graft.sync.ParquetStore(s, tmp)
         store.write(NgramStats.bigramCounts(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "lm")
         NgramStats.oovBuckets(docs.filter(col("doc_id") >= 250),
             store.read("lm").get, "doc_id", "text")
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // The SAME quality partition deployed at ingest: arrivals (doc_id >=
@@ -2507,26 +2577,26 @@ object SparkEntry {
     // (SAME full SQL oracle), proving the gate is batch-partitioning-
     // invariant and the curation decision does not depend on how arrivals
     // were split
-    "q126_stream_quality_gate" -> ((s, dir) => {
+    // q126 grades the streaming gate against q125's SAME oracle (the
+    // q122/q112 pairing pattern)
+    Query("q126_stream_quality_gate",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT doc_id, unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), ref AS (SELECT DISTINCT b FROM bg WHERE doc_id < 250), sc AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, CAST(sum(CASE WHEN ref.b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov FROM bg LEFT JOIN ref ON bg.b = ref.b WHERE bg.doc_id >= 250 GROUP BY bg.doc_id) SELECT doc_id, n_bigrams, n_oov, CASE WHEN n_oov * 10 <= n_bigrams THEN 'head' WHEN n_oov * 2 <= n_bigrams THEN 'middle' ELSE 'tail' END AS bucket FROM sc ORDER BY doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q126").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q126") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val store = new graft.sync.ParquetStore(s, outDir)
         val lmStore = new graft.sync.ParquetStore(s, s"$tmp/lm")
         lmStore.write(NgramStats.bigramCounts(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "lm")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, arrivals, 2, srcDir)
         IncrementalStream.qualityGate(stream, lmStore.read("lm").get,
           "doc_id", "text", store, "verdicts", checkpointDir = ckDir)
           .awaitTermination()
         store.read("verdicts").get
           .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("bucket"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // REAL pixel resize graded end-to-end: planted PNGs with a per-pixel
@@ -2537,7 +2607,7 @@ object SparkEntry {
     // Sources span 1x1..37x23, so both up- and down-scaling paths and the
     // degenerate single-pixel image are all exercised; a filtering kernel,
     // an index off-by-one, or a lossy re-encode cannot pass
-    "q120_image_resize" -> ((s, dir) => {
+    Query("q120_image_resize", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       val (tw, th) = (8, 6)
@@ -2599,7 +2669,11 @@ object SparkEntry {
     // appears, clean ones with n_removed = 0; the benchmark side is the
     // same doc_id < 250 split as q49/q119 so the three decontamination
     // deployments grade against one data story
-    "q129_decontaminate_spans" -> ((s, dir) => {
+    // q129: covered-position union of contaminated 13-gram windows, per
+    // corpus doc (1-based positions in SQL, 0-based in Spark — counts
+    // are index-base-invariant)
+    Query("q129_decontaminate_spans",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+12], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 11)) AS pos FROM tok WHERE len(ts) >= 13)), bench AS (SELECT DISTINCT g FROM g WHERE doc_id < 250), hit AS (SELECT doc_id, pos FROM g WHERE doc_id >= 250 AND g IN (SELECT g FROM bench)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 13)) AS p FROM hit), rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_removed FROM cov GROUP BY doc_id) SELECT t.doc_id, CAST(len(t.ts) AS BIGINT) AS n_tokens, coalesce(rem.n_removed, CAST(0 AS BIGINT)) AS n_removed FROM tok t LEFT JOIN rem USING (doc_id) WHERE t.doc_id >= 250 ORDER BY t.doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       Decontaminate.contaminatedSpanStats(
           docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
@@ -2612,32 +2686,36 @@ object SparkEntry {
     // lineage-stamped retry guard; graded across a real 2-micro-batch
     // arrival against the batch oracle's clean-text reconstruction
     // (batch-partitioning invariance of the scrub)
-    "q130_stream_scrub_spans" -> ((s, dir) => {
+    // q130 grades the streaming span-scrub gate against the batch scrub's
+    // clean-text reconstruction: q129's covered-position CTE, then each
+    // doc's tokens with covered 1-based positions removed, re-joined with
+    // single spaces (base-invariant — Spark filters 0-based positions)
+    Query("q130_stream_scrub_spans",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+12], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 11)) AS pos FROM tok WHERE len(ts) >= 13)), bench AS (SELECT DISTINCT g FROM g WHERE doc_id < 250), hit AS (SELECT doc_id, pos FROM g WHERE doc_id >= 250 AND g IN (SELECT g FROM bench)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 13)) AS p FROM hit), cv AS (SELECT doc_id, list(p) AS ps FROM cov GROUP BY doc_id) SELECT t.doc_id, coalesce(array_to_string([t.ts[i] for i in range(1, len(t.ts) + 1) if NOT list_contains(coalesce(cv.ps, []), i)], ' '), '') AS clean_text FROM tok t LEFT JOIN cv USING (doc_id) WHERE t.doc_id >= 250 ORDER BY t.doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q130").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q130") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val store = new graft.sync.ParquetStore(s, outDir)
         val benchStore = new graft.sync.ParquetStore(s, s"$tmp/bench")
         benchStore.write(docs.filter(col("doc_id") < 250), "bench")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, arrivals, 2, srcDir)
         IncrementalStream.spanScrubGate(stream, benchStore.read("bench").get,
           "doc_id", "text", store, "clean", checkpointDir = ckDir)
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q131: SQ8 completes the quantization matrix (PQ q117, IVF-PQ q118,
     // THIS): the keep-everything shortlist must equal exact knnJoin
     // pair-for-pair AND the tight funnel must still retrieve each query's
     // planted exact twin — the q117 violations contract verbatim
-    "q131_sq_knn_parity" -> ((s, dir) => {
+    // q131: full-shortlist parity with exact knnJoin + tight-funnel twin
+    // retrieval, both Spark-side (the q117 violations contract)
+    Query("q131_sq_knn_parity", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val queries = emb.filter(col("vec_id") < 25)
       val twinBase = 1000000L
@@ -2666,7 +2744,10 @@ object SparkEntry {
     // can never land in val/test; the FULL per-doc assignment is graded
     // (q33's recursive-CTE canon + an md5-hex-prefix bucket both engines
     // compute from the same digest)
-    "q132_leakage_safe_split" -> ((s, dir) => {
+    // q132: q33's recursive-CTE component canon + the md5-hex-prefix
+    // bucket — both engines derive the split from the same string digest
+    Query("q132_leakage_safe_split",
+      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id) SELECT doc_id, canon, CASE WHEN md5('graft-split:' || CAST(canon AS VARCHAR)) < 'c0' THEN 'train' WHEN md5('graft-split:' || CAST(canon AS VARCHAR)) < 'e0' THEN 'val' ELSE 'test' END AS split FROM canon ORDER BY doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDupsHashed(docs, "doc_id", "text",
         Dedup.hashedWordNgrams(_, 3), num = 7, den = 10, numHashes = 256, bands = 64)
@@ -2684,7 +2765,10 @@ object SparkEntry {
     // ceiling — so the brute-force DuckDB oracle cannot flip on float
     // association; the ceiling's exclusion semantics are graded in
     // SimilaritySpec with planted cross-label twins at cosine exactly 1.0
-    "q133_hard_negatives" -> ((s, dir) => {
+    // q133: q112's brute-force ranking oracle plus the cross-label
+    // predicate and the (measured-inert on this data) near-dup ceiling
+    Query("q133_hard_negatives",
+      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS ql FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id AND e.label <> q.ql AND list_cosine_similarity(e.embedding, q.qv) < 0.95) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.hardNegatives(emb.filter(col("vec_id") < 25), emb,
           "vec_id", "embedding", "label", k = 5)
@@ -2700,7 +2784,12 @@ object SparkEntry {
     // centroid margin in this data is >= 2.7e-5 at both SFs (measured),
     // ten orders above the ~1e-15 summation-order difference between
     // engines
-    "q134_centroid_audit" -> ((s, dir) => {
+    // q134: per-label mean centroids (double, like Spark's avg), then
+    // argmax-cosine assignment with the same (score DESC, label ASC)
+    // tie-break; generate_subscripts is 1-based vs posexplode's 0-based —
+    // positions only ORDER the centroid lists, so the base cancels
+    Query("q134_centroid_audit",
+      "WITH dims AS (SELECT label, pos, avg(v) AS c FROM (SELECT label, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS pos FROM embeddings) GROUP BY label, pos), cents AS (SELECT label AS clabel, list(c ORDER BY pos) AS cv FROM dims GROUP BY label), scored AS (SELECT e.vec_id, e.label, c.clabel, list_cosine_similarity(e.embedding, c.cv) AS s FROM embeddings e, cents c), ranked AS (SELECT vec_id, label, clabel, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, clabel) AS rn FROM scored) SELECT vec_id, CAST(label AS BIGINT) AS label, CAST(clabel AS BIGINT) AS centroid_label FROM ranked WHERE rn = 1 ORDER BY vec_id", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.centroidAudit(emb, "vec_id", "embedding", "label")
         .orderBy("vec_id")
@@ -2711,7 +2800,10 @@ object SparkEntry {
     // rows, never |corpus| token occurrences), top 50 by count with a
     // full deterministic (cnt DESC, pair ASC) tie-break; integer counts,
     // so the two engines cannot drift
-    "q135_bpe_pair_counts" -> ((s, dir) => {
+    // q135: same two-stage count — word frequencies, then len-1 adjacent
+    // char pairs per distinct word weighted by frequency
+    Query("q135_bpe_pair_counts",
+      "WITH words AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), wf AS (SELECT w, count(*) AS c FROM words GROUP BY w), pairs AS (SELECT unnest([w[i:i+1] for i in range(1, len(w))]) AS pair, c FROM wf WHERE len(w) >= 2) SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM pairs GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50", (s, dir) => {
       val docs = t(s, dir, "documents")
       TextAnalysis.bpePairCounts(docs, "text")
         .orderBy(col("cnt").desc, col("pair")).limit(50)
@@ -2727,14 +2819,13 @@ object SparkEntry {
     // type and the estimates differ, measured 1488 vs 1494 at sf0.1);
     // (b) ACCURACY — the estimate within 5% of the exact per-key distinct
     // (default lgK=12 is ~1.6% rel. error; measured 0.8% at sf0.1)
-    "q139_stream_distinct_view" -> ((s, dir) => {
+    // q139: engine-internal sketch bits — graded as the Spark-side parity
+    // + accuracy contract (maintained == batch sketch; estimate within 5%)
+    Query("q139_stream_distinct_view", InvariantOracleSql, (s, dir) => {
       val e = t(s, dir, "events").select(col("event_type"), col("user_id"))
-      val tmp = java.nio.file.Files.createTempDirectory("q139").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        e.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(e.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q139") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, e, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.maintainDistinct(stream, Seq("event_type"), "user_id",
           store, "distinct", checkpointDir = ckDir).awaitTermination()
@@ -2757,14 +2848,17 @@ object SparkEntry {
             col("est").isNull || col("best").isNull || col("est") =!= col("best") ||
               abs(col("est") - col("exact")) > col("exact") * 0.05))
           .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q137: temperature-flattened mixture rates over the skewed lang
     // column (en ~2.8x the tail) — the multilingual alpha=0.5 rebalance,
     // graded bit-exactly (integer counts through correctly-rounded
     // division + sqrt; see Sampling.temperatureRates determinism note)
-    "q137_temperature_mix" -> ((s, dir) => {
+    // q137: (n/n_max) and sqrt are correctly-rounded IEEE ops on exact
+    // integer counts — the alpha=0.5 rate is bit-identical across engines
+    Query("q137_temperature_mix",
+      "WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang) SELECT lang, CAST(n AS BIGINT) AS n_docs, sqrt(CAST(n AS DOUBLE) / (SELECT CAST(max(n) AS DOUBLE) FROM c)) AS rate FROM c ORDER BY lang", (s, dir) => {
       val docs = t(s, dir, "documents")
       Sampling.temperatureRates(docs, "lang").orderBy("lang")
     }),
@@ -2772,7 +2866,10 @@ object SparkEntry {
     // q138: deterministic epoch expansion — en dropped (0 epochs), de
     // walked 3x with a 0-based epoch index, everything else once; the
     // full (doc_id, epoch) replication table is graded
-    "q138_epoch_expand" -> ((s, dir) => {
+    // q138: per-source replication with a 0-based epoch index; zero
+    // repeats drop the source, absent sources default to 1
+    Query("q138_epoch_expand",
+      "SELECT doc_id, unnest(range(CASE WHEN lang = 'en' THEN 0 WHEN lang = 'de' THEN 3 ELSE 1 END)) AS epoch FROM documents ORDER BY doc_id, epoch", (s, dir) => {
       val docs = t(s, dir, "documents")
       Sampling.epochExpand(docs, "lang", Map("en" -> 0, "de" -> 3))
         .select(col("doc_id"), col("epoch"))
@@ -2788,7 +2885,13 @@ object SparkEntry {
     // tie-break agrees cross-engine; distinct-doc adjacent-rank margins
     // measured >= 3.87e-5 at sf0.01 and >= 9.1e-5 at sf0.1 (no exact ties
     // in any top-11), ten orders above ln() last-ulp noise
-    "q140_bm25_topk" -> ((s, dir) => {
+    // q140: same BM25 formula shape and constant spellings as the Spark
+    // side (k1=1.2 written "1.2", k1+1 written "(1.2 + 1)" — the Scala
+    // double add, NOT the literal 2.2, which is a different double);
+    // contributions fold in token order (list ORDER BY token, sequential
+    // list_aggregate) mirroring the Spark sorted-fold, so exact-twin docs
+    // tie exactly and break by doc_id identically
+    Query("q140_bm25_topk", Bm25OracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.text.TfIdf.bm25TopK(docs, "doc_id", "text", Bm25Queries,
           k = 10, corpusSize = docs.count())
@@ -2803,12 +2906,11 @@ object SparkEntry {
     // batch q140 row-for-row (SAME full SQL oracle): retrieval is batch-
     // partitioning-invariant because collection statistics are fixed at
     // index build, not recomputed per batch
-    "q143_stream_bm25_serve" -> ((s, dir) => {
+    Query("q143_stream_bm25_serve", Bm25OracleSql, (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q143").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q143") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val built = graft.text.TfIdf.buildBm25Index(docs, "doc_id", "text",
           docs.count())
@@ -2821,16 +2923,14 @@ object SparkEntry {
           idxStore.read("dl").get, idxStore.read("df").get,
           built.corpusSize, built.avgdl)
         val qdf = Bm25Queries.toDF("query_id", "qtext")
-        qdf.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(qdf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, qdf, 2, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.bm25Serve(stream, idx, "doc_id", k = 10,
           store, "served", checkpointDir = ckDir).awaitTermination()
         store.read("served").get
           .select(col("query_id"), col("rank"), col("doc_id"), col("n_terms"))
           .orderBy("query_id", "rank").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q144: corpus-SELF surgical span removal — every 8-gram window shared
@@ -2838,7 +2938,14 @@ object SparkEntry {
     // positions are scrubbed corpus-wide (the RefinedWeb-style boilerplate
     // rule; q129's machinery pointed at the corpus itself). Graded as the
     // per-doc clean-text reconstruction (the q130 precedent)
-    "q144_self_scrub_spans" -> ((s, dir) =>
+    // q141/q142: winnowing selects the min md5-hex 3-gram hash per
+    // 4-window, rightmost position on ties (max(gpos) among window rows
+    // equal to the window min); short docs (1..3 grams) keep their single
+    // truncated window via greatest(ng - 4, 0)
+    // q144: the q130 clean-text reconstruction shape with the corpus
+    // itself as the contamination source (df > 1 over distinct docs)
+    Query("q144_self_scrub_spans",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), hot AS (SELECT g FROM (SELECT DISTINCT doc_id, g FROM g) GROUP BY g HAVING count(*) > 1), hit AS (SELECT doc_id, pos FROM g WHERE g IN (SELECT g FROM hot)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 8)) AS p FROM hit), cv AS (SELECT doc_id, list(p) AS ps FROM cov GROUP BY doc_id) SELECT t.doc_id, coalesce(array_to_string([t.ts[i] for i in range(1, len(t.ts) + 1) if NOT list_contains(coalesce(cv.ps, []), i)], ' '), '') AS clean_text FROM tok t LEFT JOIN cv USING (doc_id) ORDER BY t.doc_id""", (s, dir) =>
       Decontaminate.selfScrubSpans(tw(s, dir, "documents"), "doc_id", "text",
           n = 8, maxDf = 1)
         .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
@@ -2848,7 +2955,9 @@ object SparkEntry {
     // DESC, token ASC), OOV = 0; the encoded corpus is graded as the full
     // exploded (doc_id, pos, token_id) table. Integer end to end; the
     // truncation-boundary tie-break is a total order in both engines
-    "q145_vocab_encode" -> ((s, dir) => {
+    // q145: rank the vocabulary by (count DESC, token), truncate to 200,
+    // re-walk each doc positionally with OOV -> 0
+    Query("q145_vocab_encode", VocabEncodeOracleSql, (s, dir) => {
       val docs = tw(s, dir, "documents")
       val vocab = graft.text.Vocab.build(docs, "text", topN = 200)
       graft.text.Vocab.encode(docs, "doc_id", "text", vocab)
@@ -2863,17 +2972,14 @@ object SparkEntry {
     // FIXED collected map, and the accumulated (doc_id, ids) log exploded
     // must equal batch q145 row-for-row (SAME full SQL oracle): encoding
     // is batch-partitioning-invariant because ids are pinned at gate start
-    "q146_stream_encode_gate" -> ((s, dir) => {
+    Query("q146_stream_encode_gate", VocabEncodeOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q146").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q146") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val store = new graft.sync.ParquetStore(s, outDir)
         val vocabStore = new graft.sync.ParquetStore(s, s"$tmp/vocab")
         vocabStore.write(graft.text.Vocab.build(docs, "text", topN = 200), "vocab")
-        docs.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, docs, 2, srcDir)
         IncrementalStream.encodeGate(stream, vocabStore.read("vocab").get,
           "doc_id", "text", store, "encoded", checkpointDir = ckDir)
           .awaitTermination()
@@ -2882,7 +2988,7 @@ object SparkEntry {
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("col").as("token_id"))
           .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q147: hybrid retrieval — BM25 "more-like-this" (query = each of the
@@ -2895,7 +3001,12 @@ object SparkEntry {
     // >= 1.3e-4 at both graded SFs, zero ties; fused nonzero margins >=
     // 2.5e-4, and the 15 exact fused ties are bit-equal reciprocals
     // breaking by doc id identically in both engines)
-    "q147_hybrid_rrf" -> ((s, dir) => {
+    // q147: BM25 CTEs follow the q140 shapes (doc-text queries, self
+    // excluded before ranking); vector CTE is q112's cosine ranking; the
+    // fusion folds 1.0/(60+rank) (DOUBLE division in both engines) in
+    // sorted source order and the fused score is hash-graded exactly
+    Query("q147_hybrid_rrf",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tu AS (SELECT doc_id, unnest(ts) AS token FROM tok), tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tu GROUP BY 1, 2), dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1), st AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n, CAST((SELECT sum(dl) FROM dl) AS DOUBLE) / (SELECT count(*) FROM documents) AS avgdl), dfx AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM (SELECT DISTINCT doc_id, token FROM tu) GROUP BY 1), qt AS (SELECT doc_id AS query_id, unnest(list_distinct(ts)) AS token FROM tok WHERE doc_id < 5), m AS (SELECT qt.query_id, tf.doc_id, tf.token, ln(1 + (st.n - dfx.df + 0.5) / (dfx.df + 0.5)) * ((tf.tf * (1.2 + 1)) / (tf.tf + 1.2 * ((1 - 0.75) + 0.75 * (dl.dl / st.avgdl)))) AS c FROM qt JOIN dfx USING (token) JOIN tf USING (token) JOIN dl USING (doc_id), st), sL AS (SELECT query_id, doc_id, list_aggregate(list(c ORDER BY token), 'sum') AS score FROM m GROUP BY 1, 2), lex AS (SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank FROM sL WHERE doc_id <> query_id), vq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5), vs AS (SELECT vq.query_id, e.vec_id AS doc_id, row_number() OVER (PARTITION BY vq.query_id ORDER BY list_cosine_similarity(e.embedding, vq.qv) DESC, e.vec_id) AS rank FROM embeddings e, vq WHERE e.vec_id <> vq.query_id), u AS (SELECT query_id, doc_id, 'lex' AS src, 1.0 / (60 + rank) AS c FROM lex WHERE rank <= 10 UNION ALL SELECT query_id, doc_id, 'vec' AS src, 1.0 / (60 + rank) AS c FROM vs WHERE rank <= 10), f AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_sources, list_aggregate(list(c ORDER BY src), 'sum') AS score FROM u GROUP BY 1, 2), r AS (SELECT query_id, doc_id, n_sources, score, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk FROM f) SELECT query_id, CAST(rnk AS BIGINT) AS rank, doc_id, n_sources, score FROM r WHERE rnk <= 5 ORDER BY query_id, rank""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       val idx = graft.text.TfIdf.buildBm25Index(docs, "doc_id", "text",
@@ -2924,33 +3035,34 @@ object SparkEntry {
     // n_shared) pairs at >= 2 shared fingerprints accumulate under the
     // retry guard and must equal the batch cross-half overlap (full
     // DuckDB oracle over the same split). Integer counts end to end
-    "q148_stream_overlap_gate" -> ((s, dir) => {
+    // q148: same winnowing CTEs as q141/q142; the df gate runs over the
+    // CORPUS half only (the index's build-time gate), pairs cross halves
+    Query("q148_stream_overlap_gate",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), corpus AS (SELECT * FROM fpd WHERE doc_id < 250), rare AS (SELECT fp FROM corpus GROUP BY fp HAVING count(*) <= 100), ci AS (SELECT c.fp, c.doc_id FROM corpus c JOIN rare USING (fp)), arr AS (SELECT * FROM fpd WHERE doc_id >= 250) SELECT a.doc_id AS id_a, c.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM arr a JOIN ci c ON a.fp = c.fp GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q148").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q148") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val store = new graft.sync.ParquetStore(s, outDir)
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         idxStore.write(graft.text.Winnow.buildOverlapIndex(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "fps")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, arrivals, 2, srcDir)
         IncrementalStream.overlapGate(stream, idxStore.read("fps").get,
           "doc_id", "text", store, "pairs", checkpointDir = ckDir)
           .awaitTermination()
         store.read("pairs").get
           .select(col("id_a"), col("id_b"), col("n_shared"))
           .orderBy("id_a", "id_b").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q141: winnowing (MOSS) fingerprints, k=3-gram, window w=4 — the full
     // (doc_id, pos, fp) selected-fingerprint table, md5-hex hashes so both
     // engines order identically (the q132 cross-engine-md5 precedent);
     // shuffle-free array-domain plan pinned in PlanShapeSpec
-    "q141_winnow_fingerprints" -> ((s, dir) =>
+    Query("q141_winnow_fingerprints",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), sel AS (SELECT w.doc_id, max(g2.gpos) AS pos, w.mh AS fp FROM w JOIN g g2 ON g2.doc_id = w.doc_id AND g2.gpos BETWEEN w.wpos AND w.wpos + 3 AND g2.gh = w.mh GROUP BY w.doc_id, w.wpos, w.mh) SELECT DISTINCT doc_id, pos, fp FROM sel ORDER BY doc_id, pos, fp""", (s, dir) =>
       graft.text.Winnow.fingerprints(tw(s, dir, "documents"), "doc_id", "text",
           k = 3, w = 4)
         .orderBy("doc_id", "pos", "fp")),
@@ -2959,7 +3071,8 @@ object SparkEntry {
     // sharing >= 2 distinct fingerprint hashes after the df<=100 hot-gram
     // gate (pairing on a fingerprint every doc shares is quadratic and
     // identifies nothing); integer counts end to end
-    "q142_winnow_overlap" -> ((s, dir) => {
+    Query("q142_winnow_overlap",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), rare AS (SELECT fp FROM fpd GROUP BY fp HAVING count(*) <= 100), pr AS (SELECT f.fp, f.doc_id FROM fpd f JOIN rare USING (fp)) SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""", (s, dir) => {
       val fps = graft.text.Winnow.fingerprints(tw(s, dir, "documents"),
         "doc_id", "text", k = 3, w = 4)
       graft.text.Winnow.overlapCandidates(fps, "doc_id",
@@ -2972,7 +3085,10 @@ object SparkEntry {
     // neighbor below the near-dup ceiling (negative), both picked by ONE
     // corpus scan + one rank window. Ranking-only float compares (the
     // q112 precedent); the ceiling is measured-inert on this data (q133)
-    "q136_triplet_mining" -> ((s, dir) => {
+    // q136: two ranked CTE sides (same-label top-1, cross-label-below-
+    // ceiling top-1) joined per anchor; anchors missing either side drop
+    Query("q136_triplet_mining",
+      "WITH q AS (SELECT vec_id AS anchor_id, embedding AS qv, label AS ql FROM embeddings WHERE vec_id < 25), s AS (SELECT q.anchor_id, e.vec_id AS nid, e.label = q.ql AS pos, list_cosine_similarity(e.embedding, q.qv) AS sc FROM embeddings e, q WHERE e.vec_id <> q.anchor_id), f AS (SELECT * FROM s WHERE pos OR sc < 0.95), r AS (SELECT anchor_id, nid, pos, row_number() OVER (PARTITION BY anchor_id, pos ORDER BY sc DESC, nid) AS rn FROM f) SELECT p.anchor_id, p.nid AS positive_id, n.nid AS negative_id FROM r p JOIN r n ON p.anchor_id = n.anchor_id AND n.rn = 1 AND NOT n.pos WHERE p.rn = 1 AND p.pos ORDER BY p.anchor_id", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.miningTriplets(emb.filter(col("vec_id") < 25), emb,
           "vec_id", "embedding", "label")
@@ -2988,26 +3104,27 @@ object SparkEntry {
     // accumulated reject log must be exactly the twin ids — graded
     // against a brute-force DuckDB cosine oracle (the q96 float-compare
     // precedent). Per batch the arrivals broadcast into ONE corpus scan
-    "q128_stream_embed_dedup" -> ((s, dir) => {
+    // q128: brute-force cosine membership of the constructed arrivals
+    // against the corpus (the q96 precedent for the float compare — the
+    // planted margins keep every decision >= 0.45 away from the threshold)
+    Query("q128_stream_embed_dedup",
+      """WITH arr AS (SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 50 UNION ALL SELECT vec_id + 2000000, list_transform(embedding, x -> -x) FROM embeddings WHERE vec_id >= 50 AND vec_id < 75) SELECT DISTINCT a.vec_id AS vec_id FROM arr a JOIN embeddings c ON list_cosine_similarity(a.embedding, c.embedding) >= 0.95 ORDER BY a.vec_id""", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val arrivals = emb.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         .unionByName(emb.filter(col("vec_id") >= 50 && col("vec_id") < 75)
           .select((col("vec_id") + 2000000L).as("vec_id"),
             transform(col("embedding"), x => -x).as("embedding")))
-      val tmp = java.nio.file.Files.createTempDirectory("q128").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q128") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, arrivals, 2, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.embedDupGate(stream, emb, "vec_id", "embedding",
           threshold = 0.95, store, "rejects", checkpointDir = ckDir)
           .awaitTermination()
         store.read("rejects").get.select(col("vec_id"))
           .orderBy("vec_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // REAL audio resample graded end-to-end (q120's PCM twin): planted
@@ -3018,7 +3135,7 @@ object SparkEntry {
     // 1..977 samples, so down-sampling, up-sampling, and the degenerate
     // one-sample payload are all exercised; a filter kernel, an index
     // off-by-one, or a byte-order slip cannot pass
-    "q127_audio_resample" -> ((s, dir) => {
+    Query("q127_audio_resample", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       implicit val session: SparkSession = s
       val dstN = 480
@@ -3067,7 +3184,8 @@ object SparkEntry {
     // grid-cell blocking — 6 cells per build row vs the probe's exact
     // cell, each qualifying pair matched in exactly ONE (x band, y band),
     // so no distinct — vs the oracle's doubly-unhashable inequality join
-    "q110_box_join" -> ((s, dir) => {
+    Query("q110_box_join",
+      "WITH e AS (SELECT event_id, epoch_us(ts) AS t, CAST(round(value*100) AS BIGINT) AS c FROM events) SELECT a.event_id AS id_a, b.event_id AS id_b FROM e a JOIN e b ON (a.t < b.t OR (a.t = b.t AND a.event_id < b.event_id)) AND b.t - a.t <= 3600000000 AND abs(a.c - b.c) <= 100 ORDER BY id_a, id_b", (s, dir) => {
       val e = t(s, dir, "events").select(col("event_id"),
         expr("ts div 1000").as("t_us"),
         round(col("value") * 100).cast(LongType).as("cents"))
@@ -3084,13 +3202,12 @@ object SparkEntry {
     // order/layout-independent tableChecksum (count + bit_xor + decimal
     // sum of null-tagged row hashes), i.e. compaction moved bytes and
     // changed NOTHING else
-    "q88_compaction" -> ((s, dir) => {
+    Query("q88_compaction", InvariantOracleSql, (s, dir) => {
       import graft.files.Compaction
       import graft.sync.Checksum
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-      val tmp = java.nio.file.Files.createTempDirectory("q88").toString
-      val tableDir = s"$tmp/orders"
-      try {
+      withTempDir("q88") { tmp =>
+        val tableDir = s"$tmp/orders"
         t(s, dir, "orders").select(cols.map(col): _*)
           .repartition(64).write.parquet(tableDir)
         def fp() = {
@@ -3108,7 +3225,7 @@ object SparkEntry {
           (if (stats.filesAfter < stats.filesBefore) 0L else 1L) +
           (if (fp() == before) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // deep-chain canonicalization: a planted 50-link duplicate CHAIN
@@ -3120,7 +3237,7 @@ object SparkEntry {
     // canon(canon) halving after round 4) end-to-end: without it the
     // require(converged) aborts, with it the chain closes in O(log 50)
     // rounds — the invariant that CC survives adversarial cluster shapes
-    "q89_cc_deep_chain" -> ((s, dir) => {
+    Query("q89_cc_deep_chain", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("id"))
       // chain the 51 smallest ids pairwise; 51 rows, so the unpartitioned
       // lead window and the broadcast min are bounded by construction
@@ -3145,7 +3262,8 @@ object SparkEntry {
     // destination holds keys <= 4000, the incremental delta covers
     // 2000-6000 (updated totals), and the current source key set starts
     // at 2000 — so < 2000 must disappear, 2000-4000 update, > 4000 insert
-    "q90_sync_deletes" -> ((s, dir) => {
+    Query("q90_sync_deletes",
+      """WITH base AS (SELECT o_orderkey, o_totalprice, 0 AS prec FROM orders WHERE o_orderkey <= 4000), delta AS (SELECT o_orderkey, -o_totalprice AS o_totalprice, 1 AS prec FROM orders WHERE o_orderkey BETWEEN 2000 AND 6000), u AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY prec DESC) AS rn FROM (SELECT * FROM base UNION ALL SELECT * FROM delta)) SELECT o_orderkey, o_totalprice FROM u WHERE rn = 1 AND o_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderkey >= 2000) ORDER BY o_orderkey""", (s, dir) => {
       val orders = t(s, dir, "orders")
       val base = orders.filter(col("o_orderkey") <= 4000)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -3165,16 +3283,15 @@ object SparkEntry {
     // invisible); content mode must re-copy 2 (new + modified); after the
     // content sync every source (name, hash) exists in dest and the
     // dest-only file survives (no deletes — §2.4-1 parity holds here)
-    "q91_hash_file_sync" -> ((s, dir) => {
+    Query("q91_hash_file_sync", InvariantOracleSql, (s, dir) => {
       import graft.files.FileSync
-      val tmp = java.nio.file.Files.createTempDirectory("q91").toString
-      val (srcDir, dstDir) = (s"$tmp/src", s"$tmp/dst")
-      def put(root: String, name: String, body: String): Unit = {
-        val p = java.nio.file.Paths.get(root, name)
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, body.getBytes("UTF-8"))
-      }
-      try {
+      withTempDir("q91") { tmp =>
+        val (srcDir, dstDir) = (s"$tmp/src", s"$tmp/dst")
+        def put(root: String, name: String, body: String): Unit = {
+          val p = java.nio.file.Paths.get(root, name)
+          java.nio.file.Files.createDirectories(p.getParent)
+          java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+        }
         put(srcDir, "a/same.txt", "identical bytes")
         put(srcDir, "b/new.txt", "only in source")
         put(srcDir, "c/modified.txt", "source version 2")
@@ -3193,7 +3310,7 @@ object SparkEntry {
           (if (missing == 0L) 0L else 1L) +
           (if (destOnly == 1L) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // stream-static enrichment join: every streaming event picks up its
@@ -3201,7 +3318,8 @@ object SparkEntry {
     // pipeline), dim broadcast — a shuffled stream-static join would
     // re-shuffle EVERY micro-batch. Complete-mode aggregate over the
     // enriched stream must equal the batch join+group-by exactly
-    "q92_stream_enrich" -> ((s, dir) => {
+    Query("q92_stream_enrich",
+      "WITH d AS (SELECT user_id, count(*) AS n_ev FROM events GROUP BY user_id) SELECT e.event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(d.n_ev) AS BIGINT) AS sum_n_ev FROM events e JOIN d ON e.user_id = d.user_id GROUP BY e.event_type ORDER BY e.event_type", (s, dir) => {
       val ev = t(s, dir, "events")
       val dim = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_ev"))
       // raw schema: ev's normalized ts (bigint nanos) differs from the
@@ -3230,7 +3348,8 @@ object SparkEntry {
     // The destination is PRE-SEEDED with a user absent from the stream
     // (must survive the whole run) and a stale row for the smallest real
     // user (must be replaced) — proving merge, not just insert
-    "q93_stream_upsert_sync" -> ((s, dir) => {
+    Query("q93_stream_upsert_sync",
+      """WITH src AS (SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, event_id, CAST(round(value*100) AS BIGINT) AS cents FROM events), latest AS (SELECT user_id, ts_us, event_id, cents, row_number() OVER (PARTITION BY user_id ORDER BY ts_us DESC, event_id DESC) AS rn FROM src) SELECT user_id, ts_us, event_id, cents FROM latest WHERE rn = 1 UNION ALL SELECT CAST(-999 AS BIGINT), CAST(0 AS BIGINT), CAST(-1 AS BIGINT), CAST(7 AS BIGINT) ORDER BY user_id""", (s, dir) => {
       import graft.sync.ParquetStore
       import s.implicits._
       // micros, not raw nanos: the oracle's TIMESTAMP carries micro
@@ -3239,23 +3358,20 @@ object SparkEntry {
       val ev = t(s, dir, "events").select(col("user_id"),
         expr("ts div 1000").as("ts_us"),
         col("event_id"), round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q93").toString
-      val (srcDir, ckDir, destDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/dest")
-      try {
-        ev.repartition(4).write.parquet(srcDir)
+      withTempDir("q93") { tmp =>
+        val (srcDir, ckDir, destDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/dest")
         val minUser = ev.agg(min(col("user_id"))).head.getLong(0)
         val store = new ParquetStore(s, destDir)
         store.write(Seq((-999L, 0L, -1L, 7L), (minUser, -1L, -1L, -12345L))
           .toDF("user_id", "ts_us", "event_id", "cents"), "t")
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, ev, 4, srcDir)
         IncrementalStream.upsertSync(stream, store, "t",
           pks = Seq("user_id"), orderCols = Seq("ts_us", "event_id"),
           checkpointDir = ckDir).awaitTermination()
-        // localCheckpoint: the returned plan must not read tmp after the
-        // finally deletes it
+        // localCheckpoint: the returned plan must not read tmp after
+        // withTempDir deletes it
         store.read("t").get.orderBy("user_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // passage-level (substring) dedup: longest shared consecutive token run
@@ -3265,7 +3381,8 @@ object SparkEntry {
     // skew bound: pair fan-out is quadratic in a gram's doc-frequency),
     // diagonal-island run extension in pure window arithmetic — no text
     // re-scan, no all-pairs term anywhere
-    "q94_passage_dedup" -> ((s, dir) =>
+    Query("q94_passage_dedup",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, ts FROM tok WHERE len(ts) >= 8), g AS (SELECT doc_id, pos, ts[pos]||' '||ts[pos+1]||' '||ts[pos+2]||' '||ts[pos+3]||' '||ts[pos+4]||' '||ts[pos+5]||' '||ts[pos+6]||' '||ts[pos+7] AS gram FROM (SELECT doc_id, ts, unnest(range(1, len(ts)-6)) AS pos FROM tri)), keep AS (SELECT gram FROM (SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY gram) WHERE df BETWEEN 2 AND 20), gg AS (SELECT g.doc_id, g.pos, g.gram FROM g JOIN keep USING (gram)), pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, a.pos - b.pos AS diag FROM gg a JOIN gg b ON a.gram = b.gram AND a.doc_id < b.doc_id), runs AS (SELECT da, db, diag, pa - row_number() OVER (PARTITION BY da, db, diag ORDER BY pa) AS grp FROM pairs), islands AS (SELECT da, db, count(*) AS rl FROM runs GROUP BY da, db, grp, diag) SELECT da AS doc_a, db AS doc_b, CAST(max(rl) + 7 AS BIGINT) AS run_tokens FROM islands GROUP BY da, db HAVING max(rl) + 7 >= 20 ORDER BY doc_a, doc_b""", (s, dir) =>
       Dedup.passagePairs(tw(s, dir, "documents"), "doc_id", "text",
           k = 8, minRunTokens = 20, maxDocFreq = 20)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("run_tokens"))
@@ -3275,7 +3392,8 @@ object SparkEntry {
     // set also occurs in at least one other doc — q94's index joined back
     // onto itself instead of paired, so the cost stays linear in corpus
     // size (the down-weight/filter signal for mostly-boilerplate docs)
-    "q95_dup_gram_share" -> ((s, dir) =>
+    Query("q95_dup_gram_share",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, ts FROM tok WHERE len(ts) >= 8), g AS (SELECT doc_id, ts[pos]||' '||ts[pos+1]||' '||ts[pos+2]||' '||ts[pos+3]||' '||ts[pos+4]||' '||ts[pos+5]||' '||ts[pos+6]||' '||ts[pos+7] AS gram FROM (SELECT doc_id, ts, unnest(range(1, len(ts)-6)) AS pos FROM tri)), dfq AS (SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY gram) SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams, CAST(sum(CASE WHEN dfq.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams FROM g JOIN dfq USING (gram) GROUP BY g.doc_id ORDER BY doc_id""", (s, dir) =>
       Dedup.passageDupStats(tw(s, dir, "documents"), "doc_id", "text", k = 8)
         .orderBy("doc_id")),
 
@@ -3286,7 +3404,8 @@ object SparkEntry {
     // with its original under ANY clustering (identical vector, identical
     // nearest centroid). A cluster split that separated a twin pair would
     // keep both and FAIL the compare — the recall property is load-bearing
-    "q96_semantic_dedup" -> ((s, dir) => {
+    Query("q96_semantic_dedup",
+      """WITH corpus AS (SELECT vec_id, embedding FROM embeddings UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 50), removed AS (SELECT DISTINCT b.vec_id FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.95) SELECT vec_id FROM corpus WHERE vec_id NOT IN (SELECT vec_id FROM removed) ORDER BY vec_id""", (s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val twins = emb.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
@@ -3301,15 +3420,14 @@ object SparkEntry {
     // clustering dimension a mean per-file bounding-box fraction <= 0.45 —
     // measured ~0.22-0.27 at every SF, vs >= 0.67 for a one-column sort,
     // so the bound separates a real z-layout from a lexicographic one
-    "q97_zorder_layout" -> ((s, dir) => {
+    Query("q97_zorder_layout", InvariantOracleSql, (s, dir) => {
       import graft.files.Layout
       import graft.sync.Checksum
       val cols = Seq("event_id", "user_id", "cents")
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q97").toString
-      val tableDir = s"$tmp/events_z"
-      try {
+      withTempDir("q97") { tmp =>
+        val tableDir = s"$tmp/events_z"
         def fp(df: org.apache.spark.sql.DataFrame) = {
           val r = Checksum.tableChecksum(df, cols).head
           (r.getLong(0), r.getLong(1), r.getDecimal(2))
@@ -3323,7 +3441,7 @@ object SparkEntry {
           (if (m.getDouble(2) <= 0.45) 0L else 1L) +
           (if (fp(back) == fp(ev)) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // stats-index pruned read — the PAYOFF of the q97 layout, graded: a
@@ -3331,15 +3449,14 @@ object SparkEntry {
     // result through the file-pruned path and (b) touch <= 8 of 16 files
     // (measured 2-3 at every SF; a one-column user_id sort would touch all
     // 16, so the bound separates real 2-D clustering from a linear sort)
-    "q104_pruned_read" -> ((s, dir) => {
+    Query("q104_pruned_read", InvariantOracleSql, (s, dir) => {
       import graft.files.Layout
       import graft.sync.Checksum
       val cols = Seq("event_id", "user_id", "cents")
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q104").toString
-      val tableDir = s"$tmp/events_z"
-      try {
+      withTempDir("q104") { tmp =>
+        val tableDir = s"$tmp/events_z"
         Layout.clusteredWrite(ev, tableDir, Seq("user_id", "cents"), numFiles = 16)
         val idx = Layout.statsIndex(s, tableDir, Seq("user_id", "cents"))
         val b = ev.agg(min("cents").as("lo"), max("cents").as("hi")).head
@@ -3354,14 +3471,15 @@ object SparkEntry {
           (if (fp(pruned) == fp(ev.filter(col("cents").between(lo, hi)))) 0L else 1L) +
           (if (nFiles >= 1L && nFiles <= 8L) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // snapshot diff (CDC between two extracts): a derived "after" snapshot
     // with planted removals (keys % 97), in-place changes (% 89), and
     // additions (% 101 copied to new keys) must classify exactly — one
     // full-outer join on the pk, delta-sized output
-    "q105_snapshot_diff" -> ((s, dir) => {
+    Query("q105_snapshot_diff",
+      """WITH b AS (SELECT o_orderkey, o_custkey, CAST(round(o_totalprice*100) AS BIGINT) AS cents FROM orders), a AS (SELECT o_orderkey, o_custkey, CASE WHEN o_orderkey % 89 = 0 THEN cents + 1 ELSE cents END AS cents FROM b WHERE o_orderkey % 97 <> 0 UNION ALL SELECT o_orderkey + 100000000, o_custkey, cents FROM b WHERE o_orderkey % 101 = 0) SELECT o_orderkey, change_type FROM (SELECT COALESCE(b.o_orderkey, a.o_orderkey) AS o_orderkey, CASE WHEN b.o_orderkey IS NULL THEN 'added' WHEN a.o_orderkey IS NULL THEN 'removed' WHEN b.o_custkey IS DISTINCT FROM a.o_custkey OR b.cents IS DISTINCT FROM a.cents THEN 'changed' END AS change_type FROM b FULL OUTER JOIN a ON b.o_orderkey = a.o_orderkey) WHERE change_type IS NOT NULL ORDER BY o_orderkey""", (s, dir) => {
       import graft.sync.Diff
       val base = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("cents"))
@@ -3380,7 +3498,8 @@ object SparkEntry {
     // window — 256 hex-prefix range buckets rank in parallel, a 256-row
     // offset join stitches them into the exact global order the oracle
     // computes with the naive (serial) row_number-over-everything form
-    "q106_shard_shuffle" -> ((s, dir) => {
+    Query("q106_shard_shuffle",
+      "WITH r AS (SELECT doc_id, row_number() OVER (ORDER BY md5('graft:'||CAST(doc_id AS VARCHAR)), doc_id) - 1 AS global_rank FROM documents) SELECT doc_id, CAST(global_rank AS BIGINT) AS global_rank, CAST(global_rank // 32 AS BIGINT) AS shard, CAST(global_rank % 32 AS BIGINT) AS pos FROM r ORDER BY doc_id", (s, dir) => {
       Sampling.shardedShuffle(t(s, dir, "documents").select(col("doc_id")),
           "doc_id", seed = "graft", rowsPerShard = 32L)
         .orderBy("doc_id")
@@ -3390,7 +3509,8 @@ object SparkEntry {
     // per user — the rate-limit / rolling-metric shape. RANGE (not ROWS)
     // so timestamp ties share one frame: tie-order-independent by
     // construction, no ordering fudge needed for the hash compare
-    "q98_trailing_window" -> ((s, dir) => {
+    Query("q98_trailing_window",
+      "SELECT event_id, CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS trail_cents, CAST(count(*) OVER w AS BIGINT) AS trail_n FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) ORDER BY event_id", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
         .rangeBetween(-3600L * 1000000L, 0)
       t(s, dir, "events")
@@ -3405,7 +3525,8 @@ object SparkEntry {
     // top-k per group: the per-source "best documents" selection — one
     // rank window per group, filter rk <= 3; partial sort per partition,
     // single shuffle on the group key
-    "q99_topk_per_group" -> ((s, dir) => {
+    Query("q99_topk_per_group",
+      "SELECT source, doc_id, n_chars, rk FROM (SELECT source, doc_id, n_chars, CAST(row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk FROM documents) WHERE rk <= 3 ORDER BY source, rk", (s, dir) => {
       val w = Window.partitionBy(col("source"))
         .orderBy(col("n_chars").desc, col("doc_id"))
       t(s, dir, "documents")
@@ -3419,7 +3540,8 @@ object SparkEntry {
     // doc_id order until the INCLUSIVE running token total would exceed the
     // budget — tokens, not documents, are the unit pretraining mixtures are
     // specified in. Never overshoots; no partial documents
-    "q100_token_budget" -> ((s, dir) => {
+    Query("q100_token_budget",
+      "WITH d AS (SELECT source, doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM documents), c AS (SELECT source, doc_id, n_tokens, sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d) SELECT source, doc_id, n_tokens FROM c WHERE cum <= 800 ORDER BY source, doc_id", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("source"), col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       Sampling.tokenBudgetSample(docs, Seq("source"), Seq(col("doc_id")),
@@ -3433,7 +3555,8 @@ object SparkEntry {
     // the actual "what ships into the training mix" query. Stage order is
     // the cost order: narrow codegen'd filters first, the dedup shuffle on
     // the reduced set, the budget window on the deduped set
-    "q102_curation_pipeline" -> ((s, dir) => {
+    Query("q102_curation_pipeline",
+      """WITH f AS (SELECT doc_id, text, source, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents), k AS (SELECT doc_id, text, source FROM f WHERE n_tok >= 5 AND n_stop * 2 <= n_tok AND s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr), d AS (SELECT min(doc_id) AS doc_id FROM k GROUP BY text), sv AS (SELECT k.source, k.doc_id, CAST(len(regexp_extract_all(lower(k.text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM k JOIN d USING (doc_id)), c AS (SELECT source, doc_id, n_tokens, sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM sv) SELECT source, doc_id, n_tokens FROM c WHERE cum <= 500 ORDER BY source, doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val kept = docs.filter(TextAnalysis.qualityOk(col("text")) === 1
         && TextAnalysis.langId(col("text")) === "en")
@@ -3453,7 +3576,7 @@ object SparkEntry {
     // ZERO shuffle exchanges AND the plain join's aggregate exactly. The
     // conf toggle and both executions complete inside the try; the
     // returned frame is a literal, so the finally-restore cannot race
-    "q85_bucketed_join" -> ((s, dir) => {
+    Query("q85_bucketed_join", InvariantOracleSql, (s, dir) => {
       val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val (ta, tb) = (s"graft_q85a_$id", s"graft_q85b_$id")
       val ev = t(s, dir, "events")
@@ -3502,7 +3625,7 @@ object SparkEntry {
     // emptyValue="" on read to keep the two apart (the null-tagged
     // Checksum.rowHash distinguishes them, so a regression here flips
     // violations to 1, it cannot hide)
-    "q84_format_roundtrip" -> ((s, dir) => {
+    Query("q84_format_roundtrip", InvariantOracleSql, (s, dir) => {
       import graft.sync.Checksum
       import s.implicits._
       val cols = Seq("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -3514,19 +3637,19 @@ object SparkEntry {
         (r.getLong(0), r.getLong(1), r.getDecimal(2))
       }
       val base = fp(o)
-      val tmp = java.nio.file.Files.createTempDirectory("q84").toString
-      val (csvDir, jsonDir, orcDir) = (s"$tmp/csv", s"$tmp/json", s"$tmp/orc")
-      o.write.option("header", "true")
-        .option("nullValue", "\\N").option("emptyValue", "\"\"").csv(csvDir)
-      o.write.json(jsonDir)
-      // ORC: the third columnar format (typed nulls/empties survive without
-      // the text formats' sentinel gymnastics) — Spark-native, no extra dep
-      o.write.orc(orcDir)
-      val viaCsv = fp(s.read.schema(o.schema).option("header", "true")
-        .option("nullValue", "\\N").option("emptyValue", "").csv(csvDir))
-      val viaJson = fp(s.read.schema(o.schema).json(jsonDir))
-      val viaOrc = fp(s.read.schema(o.schema).orc(orcDir))
-      deleteRecursively(tmp)
+      val (viaCsv, viaJson, viaOrc) = withTempDir("q84") { tmp =>
+        val (csvDir, jsonDir, orcDir) = (s"$tmp/csv", s"$tmp/json", s"$tmp/orc")
+        o.write.option("header", "true")
+          .option("nullValue", "\\N").option("emptyValue", "\"\"").csv(csvDir)
+        o.write.json(jsonDir)
+        // ORC: the third columnar format (typed nulls/empties survive without
+        // the text formats' sentinel gymnastics) — Spark-native, no extra dep
+        o.write.orc(orcDir)
+        (fp(s.read.schema(o.schema).option("header", "true")
+          .option("nullValue", "\\N").option("emptyValue", "").csv(csvDir)),
+          fp(s.read.schema(o.schema).json(jsonDir)),
+          fp(s.read.schema(o.schema).orc(orcDir)))
+      }
       val violations = (if (viaCsv == base) 0L else 1L) +
         (if (viaJson == base) 0L else 1L) + (if (viaOrc == base) 0L else 1L)
       s.range(1).select(lit(violations).as("violations"))
@@ -3537,7 +3660,8 @@ object SparkEntry {
     // built-in) must reproduce the columnar group aggregate exactly —
     // grades the typed-UDAF surface end to end (encoders, buffer
     // serialization, partial merge)
-    "q83_typed_agg" -> ((s, dir) => {
+    Query("q83_typed_agg",
+      "SELECT user_id, CAST(count(*) AS BIGINT) AS n, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents, CAST(min(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS min_cents, CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS max_cents FROM events GROUP BY user_id ORDER BY user_id", (s, dir) => {
       import s.implicits._
       t(s, dir, "events")
         .select(col("user_id"), round(col("value") * 100).cast(LongType).as("cents"))
@@ -3557,7 +3681,8 @@ object SparkEntry {
     // resample-and-forward-fill step of every feature pipeline. The
     // per-bucket "last observation" is picked by (ts, event_id) DESC so
     // the fill input is deterministic
-    "q80_gap_fill" -> ((s, dir) => {
+    Query("q80_gap_fill",
+      """WITH b AS (SELECT user_id, epoch_ns(ts) // 3600000000000 AS bk, CAST(round(value*100) AS BIGINT) AS cents, row_number() OVER (PARTITION BY user_id, epoch_ns(ts) // 3600000000000 ORDER BY ts DESC, event_id DESC) AS rn FROM events), lastb AS (SELECT user_id, bk, cents FROM b WHERE rn = 1), bounds AS (SELECT user_id, min(bk) AS b0, max(bk) AS b1 FROM lastb GROUP BY user_id), grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bk FROM bounds), j AS (SELECT g.user_id, g.bk, l.cents FROM grid g LEFT JOIN lastb l ON g.user_id = l.user_id AND g.bk = l.bk) SELECT user_id, CAST(bk AS BIGINT) AS bk, last_value(cents IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bk ROWS UNBOUNDED PRECEDING) AS cents FROM j ORDER BY user_id, bk""", (s, dir) => {
       val w = Window.partitionBy(col("user_id"), col("bk"))
         .orderBy(col("ts").desc, col("event_id").desc)
       val lastPerBucket = t(s, dir, "events")
@@ -3578,7 +3703,9 @@ object SparkEntry {
     // being free) — graded against q145's SAME full SQL oracle: the two
     // encode plans are row-identical by contract (the q81
     // scale-plan-in-the-correctness-gate pairing)
-    "q149_vocab_encode_join" -> ((s, dir) => {
+    // q149 grades the broadcast-join encode path against q145's SAME
+    // oracle — the two plans are row-identical by contract
+    Query("q149_vocab_encode_join", VocabEncodeOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val vocab = graft.text.Vocab.build(docs, "text", topN = 200)
       graft.text.Vocab.encodeJoin(docs, "doc_id", "text", vocab)
@@ -3597,7 +3724,10 @@ object SparkEntry {
     // AND the final per-word symbol arrays must both match exactly;
     // integer counts and a total (cnt DESC, left, right) tie-break make
     // the sequence engine-deterministic
-    "q150_bpe_train" -> ((s, dir) => {
+    // q150: the merge sequence + final symbol tables are verified
+    // in-query against a brute-force Scala BPE over the collected word
+    // table (DuckDB cannot express the sequential merge fold)
+    Query("q150_bpe_train", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val nMerges = 5
       val (merges, words) = TextAnalysis.bpeTrain(docs, "text", nMerges)
@@ -3652,29 +3782,23 @@ object SparkEntry {
     // — the gated view must be ROW-IDENTICAL to a from-scratch
     // buildOverlapIndex over the same documents (full-outer parity + row
     // count, the q124 violations contract)
-    "q151_overlap_index_ingest" -> ((s, dir) => {
+    // q151/q152: incremental-vs-batch parity is a Spark-side full-outer
+    // contract (the q124 pattern)
+    Query("q151_overlap_index_ingest", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q151").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q151") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, docs, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.overlapIndexIngest(stream, "doc_id", "text",
           store, "fps", checkpointDir = ckDir).awaitTermination()
         val served = graft.text.Winnow.gateIndex(
             store.read("fps").get.select(col("fp"), col("doc_id")), "doc_id")
-          .withColumn("__y", lit(1))
         val batch = graft.text.Winnow.buildOverlapIndex(Tables.fanOut(docs),
           "doc_id", "text")
         val nBatch = batch.count()
-        batch.withColumn("__x", lit(1))
-          .join(served, Seq("fp", "doc_id"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+        parity(batch, served, Seq("fp", "doc_id"), rows = Some(nBatch)).localCheckpoint()
+      }
     }),
 
     // q153: the GLOBAL running sum q29 deliberately avoided — computed by
@@ -3684,7 +3808,10 @@ object SparkEntry {
     // bucket totals is |buckets|-sized and broadcast back), removing the
     // last documented single-partition-window trade. Integer cents;
     // graded against DuckDB's direct one-window formulation
-    "q153_global_running_sum" -> ((s, dir) => {
+    // q153: DuckDB runs the direct single-window formulation the operator
+    // decomposes — same total order, same integer cents
+    Query("q153_global_running_sum",
+      "SELECT event_id, CAST(sum(CAST(round(value*100) AS BIGINT)) OVER (ORDER BY epoch_ns(ts), event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_cents FROM events ORDER BY event_id", (s, dir) => {
       val e = t(s, dir, "events").select(col("event_id"), col("ts"),
         round(col("value") * 100).cast(LongType).as("cents"))
       PrefixSum.globalRunningSum(e, "cents",
@@ -3702,16 +3829,15 @@ object SparkEntry {
     // documents (dual full-outer + row-count violations, the q124
     // pattern; id-keyed joins with value equality in the condition —
     // id_b / (id_b, band) are unique per table by construction)
-    "q158_dedup_index_ingest" -> ((s, dir) => {
+    // q158: incremental-vs-batch dual-table parity is a Spark-side
+    // full-outer contract (the q124 pattern)
+    Query("q158_dedup_index_ingest", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val shingler: Column => Column =
         c => Dedup.hashedShingles(TextAnalysis.tokenSet(c))
-      val tmp = java.nio.file.Files.createTempDirectory("q158").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q158") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, docs, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.dedupIndexIngest(stream, "doc_id", "text",
           shingler, numHashes = 125, bands = 25, store, checkpointDir = ckDir)
@@ -3722,28 +3848,18 @@ object SparkEntry {
         val batch = Dedup.buildNearDupIndex(docs, "doc_id", "text",
           shingler, numHashes = 125, bands = 25)
         val nBand = batch.bandIndex.count()
-        val bandViol = batch.bandIndex
-          .select(col("id_b"), col("band"), col("bh").as("__bha"))
-          .withColumn("__x", lit(1))
-          .join(store.read("band_index").get
-            .select(col("id_b"), col("band"), col("bh").as("__bhb"))
-            .withColumn("__y", lit(1)), Seq("id_b", "band"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull ||
-              col("__bha") =!= col("__bhb"))
-            + when(count(lit(1)) =!= nBand, 1L).otherwise(0L)).as("violations"))
+        val bandViol = parity(
+          batch.bandIndex.select(col("id_b"), col("band"), col("bh").as("__bha")),
+          store.read("band_index").get.select(col("id_b"), col("band"), col("bh").as("__bhb")),
+          Seq("id_b", "band"), Some(col("__bha") =!= col("__bhb")), Some(nBand))
         val nSet = batch.shingleSets.count()
-        val setViol = batch.shingleSets
-          .select(col("id_b"), col("__sb").as("__sa")).withColumn("__x", lit(1))
-          .join(store.read("shingle_sets").get
-            .select(col("id_b"), col("__sb")).withColumn("__y", lit(1)),
-            Seq("id_b"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull ||
-              col("__sa") =!= col("__sb"))
-            + when(count(lit(1)) =!= nSet, 1L).otherwise(0L)).as("violations"))
+        val setViol = parity(batch.shingleSets.select(col("id_b"), col("__sb").as("__sa")),
+          store.read("shingle_sets").get.select(col("id_b"), col("__sb")),
+          Seq("id_b"), Some(col("__sa") =!= col("__sb")), Some(nSet))
         bandViol.unionByName(setViol)
           .agg(sum(col("violations")).as("violations"))
           .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q157: the COMPLETE BPE pipeline tail under a fixed merge list —
@@ -3751,7 +3867,12 @@ object SparkEntry {
     // piece ids (encodeTokens), graded against a FULL DuckDB oracle that
     // replays the same five merges as an unrolled list_reduce fuse chain
     // (integer ids end to end; merge 1 chains onto merge 0)
-    "q157_bpe_piece_ids" -> ((s, dir) => {
+    // q157: the same five merges unrolled as a list_reduce fuse chain
+    // (list-of-lists accumulator = the exact left-to-right
+    // non-overlapping greedy fuse), then the q145 vocab + positional
+    // encode shapes over PIECES
+    Query("q157_bpe_piece_ids",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), p AS (SELECT doc_id, flatten(list_transform(ts, w -> list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform([w[i] for i in range(1, len(w) + 1)], x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 't' AND x[1] = 'h' THEN list_concat(acc[1:len(acc)-1], ['th']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'th' AND x[1] = 'e' THEN list_concat(acc[1:len(acc)-1], ['the']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'a' AND x[1] = 'n' THEN list_concat(acc[1:len(acc)-1], ['an']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'i' AND x[1] = 'n' THEN list_concat(acc[1:len(acc)-1], ['in']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'e' AND x[1] = 'r' THEN list_concat(acc[1:len(acc)-1], ['er']) ELSE list_concat(acc, x) END))) AS pieces FROM tok), cnt AS (SELECT piece, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(pieces) AS piece FROM p) GROUP BY 1), v AS (SELECT piece, CAST(row_number() OVER (ORDER BY n DESC, piece) AS BIGINT) AS token_id FROM cnt ORDER BY n DESC, piece LIMIT 200), e AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, pieces[i] AS piece FROM p, LATERAL unnest(range(1, len(pieces) + 1)) AS u(i)) SELECT e.doc_id, e.pos, CAST(coalesce(v.token_id, 0) AS BIGINT) AS token_id FROM e LEFT JOIN v USING (piece) ORDER BY doc_id, pos""", (s, dir) => {
       val docs = tw(s, dir, "documents")
       val pieces = docs.select(col("doc_id"),
         TextAnalysis.bpeEncode(col("text"), BpeFixedMerges).as("__pieces"))
@@ -3770,7 +3891,10 @@ object SparkEntry {
     // hash trick), ranked by the monotone-equivalent ln(u)/w. Integer
     // rank skeleton graded; adjacent-key margins measured (see
     // Sampling.weightedSample) — hash-uniform keys never near-tie
-    "q156_weighted_sample" -> ((s, dir) =>
+    // q156: same md5-uniform, same ln(u)/w ranking — '0x'||hex CAST is
+    // DuckDB's conv(hex, 16, 10); the 52-bit numerator is double-exact
+    Query("q156_weighted_sample",
+      "WITH u AS (SELECT source, doc_id, n_chars AS w, greatest(CAST('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) / 4503599627370496.0, 1e-300) AS u FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0), r AS (SELECT source, doc_id, CAST(row_number() OVER (PARTITION BY source ORDER BY ln(u)/w DESC, doc_id) AS BIGINT) AS sample_rank FROM u) SELECT source, doc_id, sample_rank FROM r WHERE sample_rank <= 5 ORDER BY source, sample_rank", (s, dir) =>
       Sampling.weightedSample(t(s, dir, "documents"), Seq("source"), "doc_id",
           col("n_chars"), k = 5, seed = "graft")
         .select(col("source"), col("doc_id"), col("sample_rank"))
@@ -3784,7 +3908,10 @@ object SparkEntry {
     // decomposition; plan pinned multi-partition in PlanShapeSpec).
     // Graded against DuckDB's direct un-partitioned one-window A-ES —
     // same md5-uniform, same ln(u)/w key, same (DESC, doc_id) total order
-    "q162_global_weighted_sample" -> ((s, dir) =>
+    // q162: the q156 A-ES oracle un-partitioned — DuckDB runs the direct
+    // global one-window formulation the operator decomposes
+    Query("q162_global_weighted_sample",
+      "WITH u AS (SELECT doc_id, n_chars AS w, greatest(CAST('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) / 4503599627370496.0, 1e-300) AS u FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0), r AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY ln(u)/w DESC, doc_id) AS BIGINT) AS sample_rank FROM u) SELECT doc_id, sample_rank FROM r WHERE sample_rank <= 100 ORDER BY sample_rank", (s, dir) =>
       Sampling.weightedSample(t(s, dir, "documents"), Seq.empty, "doc_id",
           col("n_chars"), k = 100, seed = "graft")
         .select(col("doc_id"), col("sample_rank"))
@@ -3797,7 +3924,14 @@ object SparkEntry {
     // class would pass unnoticed) and compares against DuckDB's trim()
     // with the identical literal chr() character list; the padded/stripped
     // length pair proves exactly the planted edges came off
-    "q164_unicode_strip" -> ((s, dir) => {
+    // q164: DuckDB pads with the identical chr() edges and trims with the
+    // full Python whitespace set as a LITERAL character list — chr codes
+    // 9-13, 28-31, 32, 133, 160, 5760, 8192-8202, 8232, 8233, 8239,
+    // 8287, 12288 — the exact class Coerce.stripUnicode pins
+    Query("q164_unicode_strip",
+      ("WITH ws(cs) AS (SELECT chr(9)||chr(10)||chr(11)||chr(12)||chr(13)||chr(28)||chr(29)||chr(30)||chr(31)||chr(32)||chr(133)||chr(160)||chr(5760)||chr(8192)||chr(8193)||chr(8194)||chr(8195)||chr(8196)||chr(8197)||chr(8198)||chr(8199)||chr(8200)||chr(8201)||chr(8202)||chr(8232)||chr(8233)||chr(8239)||chr(8287)||chr(12288)), " +
+        "p AS (SELECT doc_id, chr(160)||chr(8192)||' '||text||' '||chr(8239)||chr(12288) AS t FROM documents) " +
+        "SELECT doc_id, trim(t, (SELECT cs FROM ws)) AS t_stripped, CAST(len(t) AS BIGINT) AS len_padded, CAST(len(trim(t, (SELECT cs FROM ws))) AS BIGINT) AS len_stripped FROM p ORDER BY doc_id"), (s, dir) => {
       // escapes, not literal characters, so the source cannot silently
       // hold plain spaces instead (the q108 combining-mark precedent)
       val padded = concat(lit("\u00A0\u2000 "), col("text"),
@@ -3816,17 +3950,16 @@ object SparkEntry {
     // across TWO micro-batches, accumulated log exploded must equal
     // batch q145 row-for-row (SAME full SQL oracle) — the q149 pairing
     // deployed at ingest
-    "q155_stream_encode_join_gate" -> ((s, dir) => {
+    // q155 grades the large-vocab streaming gate against the same batch
+    // encoding oracle (the q146 pairing through the join path)
+    Query("q155_stream_encode_join_gate", VocabEncodeOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q155").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      withTempDir("q155") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
         val store = new graft.sync.ParquetStore(s, outDir)
         val vocabStore = new graft.sync.ParquetStore(s, s"$tmp/vocab")
         vocabStore.write(graft.text.Vocab.build(docs, "text", topN = 200), "vocab")
-        docs.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, docs, 2, srcDir)
         IncrementalStream.encodeGateJoin(stream, vocabStore.read("vocab").get,
           "doc_id", "text", store, "encoded", checkpointDir = ckDir)
           .awaitTermination()
@@ -3835,7 +3968,7 @@ object SparkEntry {
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("col").as("token_id"))
           .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q154: the APPLY side of BPE training — the codegen'd merge-replay
@@ -3850,7 +3983,9 @@ object SparkEntry {
     // path, q159 pins delta == full), and full recount is the cheaper
     // harness at graded SF (fewer jobs/round), keeping the measurement
     // comparable with the floor seeded before the delta trainer landed
-    "q154_bpe_encode" -> ((s, dir) => {
+    // q154: train/apply parity is a Spark-side two-implementation
+    // contract (DuckDB cannot express the sequential merge replay)
+    Query("q154_bpe_encode", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val nMerges = 8
       val (merges, trained) = TextAnalysis.bpeTrainFullRecount(docs, "text", nMerges)
@@ -3876,7 +4011,7 @@ object SparkEntry {
     // new centroids, whose own deterministic k-means must reproduce the
     // retrained centroids bit-for-bit (full-outer parity + row count +
     // centroid equality, the q124 violations contract)
-    "q152_ivf_reassign" -> ((s, dir) => {
+    Query("q152_ivf_reassign", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val old = Similarity.ivfIndex(emb, "vec_id", "embedding", numCentroids = 8)
       val newCents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 5)
@@ -3885,12 +4020,9 @@ object SparkEntry {
       val centsMatch = re.cents.map { case (i, a) => (i, a.toSeq) }.toSeq ==
         fresh.cents.map { case (i, a) => (i, a.toSeq) }.toSeq
       val nFresh = fresh.assigned.count()
-      re.assigned.select(col("vec_id"), col("__centroid")).withColumn("__x", lit(1))
-        .join(fresh.assigned.select(col("vec_id"), col("__centroid"))
-          .withColumn("__y", lit(1)), Seq("vec_id", "__centroid"), "full_outer")
-        .agg((violations(col("__x").isNull || col("__y").isNull)
-          + when(count(lit(1)) =!= nFresh, 1L).otherwise(0L)
-          + lit(if (centsMatch) 0L else 1L)).as("violations"))
+      parity(re.assigned.select(col("vec_id"), col("__centroid")),
+          fresh.assigned.select(col("vec_id"), col("__centroid")), Seq("vec_id", "__centroid"),
+          rows = Some(nFresh), extra = Seq(lit(if (centsMatch) 0L else 1L)))
         .localCheckpoint()
     }),
 
@@ -3902,7 +4034,10 @@ object SparkEntry {
     // every step) and the final per-word symbol tables must both match
     // exactly, plus a progress guard (all seven merges executed — two
     // trivially-empty trains must not pass vacuously)
-    "q159_bpe_delta_train" -> ((s, dir) => {
+    // q159: delta-recount vs full-recount training is a Spark-side
+    // two-implementation contract (the q150 sibling — DuckDB cannot
+    // express the sequential merge fold)
+    Query("q159_bpe_delta_train", InvariantOracleSql, (s, dir) => {
       val docs = tw(s, dir, "documents")
       val nMerges = 7
       val (dm, dw) = TextAnalysis.bpeTrain(docs, "text", nMerges)
@@ -3910,14 +4045,9 @@ object SparkEntry {
       val headViolations =
         (if (dm != fm) 1L else 0L) + (if (dm.size != nMerges) 1L else 0L)
       val nFull = fw.count()
-      def table(w: DataFrame, flag: String) =
-        w.select(col("__w"), concat_ws(" ", col("__syms")).as("__sy"))
-          .withColumn(flag, lit(1))
-      table(dw, "__x")
-        .join(table(fw, "__y"), Seq("__w", "__sy"), "full_outer")
-        .agg((violations(col("__x").isNull || col("__y").isNull)
-          + when(count(lit(1)) =!= nFull, 1L).otherwise(0L)
-          + lit(headViolations)).as("violations"))
+      def table(w: DataFrame) = w.select(col("__w"), concat_ws(" ", col("__syms")).as("__sy"))
+      parity(table(dw), table(fw), Seq("__w", "__sy"), rows = Some(nFull),
+          extra = Seq(lit(headViolations)))
         .localCheckpoint()
     }),
 
@@ -3930,7 +4060,11 @@ object SparkEntry {
     // rule, same keep rule, same StrictMath score, but an INDEPENDENT
     // Viterbi reimplementation, so the codegen DP expression is itself
     // under test through every round's segmentations
-    "q165_unigram_train" -> ((s, dir) => {
+    // q165: hard-EM unigram training is a Spark-side two-implementation
+    // contract (the q150/q159 family — the EM loop is sequential by
+    // nature; every round's segmentations ARE cross-checked against an
+    // independent Viterbi in-query)
+    Query("q165_unigram_train", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val (maxLen, keepMulti, rounds) = (3, 12, 3)
@@ -3974,7 +4108,13 @@ object SparkEntry {
     // side is ONE narrow codegen'd projection — no join, no shuffle, the
     // piece table rides as a reference object; at 100 TB the corpus is
     // scanned once and only (doc_id, pos, piece) moves
-    "q166_unigram_encode" -> ((s, dir) =>
+    // q166: DuckDB runs the IDENTICAL integer Viterbi recurrence as a
+    // list_reduce DP — acc carries one {score, segmentation} cell per
+    // prefix, candidates scan piece length L ascending and replace on >=
+    // (ties prefer longer), multi-char pieces score via the literal CASE
+    // (NULL -> filtered out), single chars fall back to the -100000 UNK
+    // floor. The CASE literals are character-identical to UnigramPinned.
+    Query("q166_unigram_encode", UnigramEncodeOracleSql, (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id"), posexplode(graft.functions.UnigramEncode(
           TextAnalysis.tokens(col("text")), UnigramPinned,
@@ -3993,7 +4133,10 @@ object SparkEntry {
     // last micro. lr is sized so margins CROSS the hinge threshold and
     // the violated set genuinely changes round to round (at a timid lr
     // every round degenerates to all-violated and grades nothing)
-    "q167_svm_train" -> ((s, dir) => {
+    // q167: the generated integer-hinge replay — final weights + bias row
+    Query("q167_svm_train", svmOracleSql(
+      s"SELECT f, w AS w_micros FROM w$SvmRounds UNION ALL " +
+        s"SELECT CAST(-1 AS BIGINT) AS f, (SELECT b FROM b$SvmRounds) AS w_micros ORDER BY f"), (s, dir) => {
       val (_, model) = svmTrained(s, dir)
       Classifier.weightsTable(s, model).orderBy("f")
     }),
@@ -4005,7 +4148,8 @@ object SparkEntry {
     // replays training AND scores, so any scoring-path drift (hash,
     // counts, bias handling, the strict margin>0 sign rule) fails here
     // even if q167 passes
-    "q168_svm_score" -> ((s, dir) => {
+    // q168: the same replay scored under the final weights (m{R+1})
+    Query("q168_svm_score", SvmScoreOracleSql, (s, dir) => {
       val (df, model) = svmTrained(s, dir)
       Classifier.score(df, "doc_id", model).orderBy("doc_id")
     }),
@@ -4018,24 +4162,23 @@ object SparkEntry {
     // the SAME cross-engine training-replay oracle. This grades
     // scoreText's linearity identity (Σ_f w_f·x_f == Σ_tokens w_bucket)
     // AND batch-partitioning invariance in one gate
-    "q169_stream_classify_gate" -> ((s, dir) => {
+    // q169: the streaming classifier gate accumulates EXACTLY the batch
+    // q168 result — same replay oracle, shared by construction
+    Query("q169_stream_classify_gate", SvmScoreOracleSql, (s, dir) => {
       val (_, model) = svmTrained(s, dir)
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q169").toString
-      try {
+      withTempDir("q169") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val wStore = new graft.sync.ParquetStore(s, s"$tmp/w")
         wStore.write(Classifier.weightsTable(s, model), "weights")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         IncrementalStream.classifierGate(stream, wStore.read("weights").get,
           "doc_id", "text", store, "scored", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("scored").get
           .select(col("doc_id"), col("margin_micros"), col("pred"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q170: the unigram tokenizer DEPLOYED at ingest — the pinned piece
@@ -4045,19 +4188,18 @@ object SparkEntry {
     // under the SAME DuckDB DP oracle: segmentation is
     // batch-partitioning-invariant because scores are pinned at gate
     // start (the q146 encode-gate contract for the unigram family)
-    "q170_stream_unigram_gate" -> ((s, dir) => {
+    // q170: the streaming unigram gate accumulates EXACTLY the batch
+    // q166 result — same DP oracle, shared by construction
+    Query("q170_stream_unigram_gate", UnigramEncodeOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q170").toString
-      try {
+      withTempDir("q170") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val pStore = new graft.sync.ParquetStore(s, s"$tmp/p")
         pStore.write(s.createDataFrame(
             UnigramPinned.map(p => Unigram.UnigramPiece(p._1, 0L, p._2)))
           .select(col("piece"), col("cnt"), col("scoreMilli").as("score_milli")),
           "pieces")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         IncrementalStream.unigramGate(stream, pStore.read("pieces").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4066,7 +4208,7 @@ object SparkEntry {
           .toDF("doc_id", "pos", "piece")
           .select(col("doc_id"), col("pos").cast(LongType), col("piece"))
           .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q171: the full Gopher quality-rule battery (q18's qualityOk is the
@@ -4078,7 +4220,11 @@ object SparkEntry {
     // lines, %3 ellipsis lines, %11 digit-only words, %13 a 60-line
     // bullet wall (the >90% bullet share) — every r_* splits both ways
     // at sf0.001 and keep is a genuine conjunction (98/500)
-    "q171_gopher_rules" -> ((s, dir) =>
+    // q171: DuckDB replays the identical planted concat and the identical
+    // integer rule battery — whitespace words, milli-scaled mean length
+    // (same IEEE divide-then-floor), cross-multiplied ratio tests, the
+    // stopword CASE sum GENERATED from Gopher.Stopwords
+    Query("q171_gopher_rules", GopherOracleSql, (s, dir) =>
       graft.text.Gopher.quality(gopherPlanted(tw(s, dir, "documents")),
           "doc_id", "text")
         .orderBy("doc_id")),
@@ -4088,19 +4234,17 @@ object SparkEntry {
     // gate and the accumulated verdict log must equal batch q171 under
     // the SAME full oracle (shared by construction). The cheap first
     // filter stage of the serving stack, before the model gates
-    "q173_stream_gopher_gate" -> ((s, dir) => {
+    // q173: the streaming gate accumulates EXACTLY the batch q171 table
+    Query("q173_stream_gopher_gate", GopherOracleSql, (s, dir) => {
       val planted = gopherPlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q173").toString
-      try {
+      withTempDir("q173") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        planted.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(planted.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, planted, 2, s"$tmp/src")
         IncrementalStream.gopherGate(stream, "doc_id", "text",
           store, "quality", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("quality").get.drop("__run", "__batch")
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q172: the compression-ratio repetition signal — deflate every doc
@@ -4114,7 +4258,8 @@ object SparkEntry {
     // overhead-adjusted ceiling (1100 milli + the constant zlib header).
     // A violations contract BY NATURE: no SQL engine exposes a
     // bit-compatible deflate (the q150/q160 family)
-    "q172_compression_signal" -> ((s, dir) => {
+    // q172: deflate is JVM-side by nature — planted-comparator violations
+    Query("q172_compression_signal", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val rep = repeat(substring(col("text"), 1, 40), 20)
       val noise = concat((0 until 25).map(i =>
@@ -4149,7 +4294,16 @@ object SparkEntry {
     // agree with NFD-Mn-NFC on the whole planted range); the length pair
     // proves exactly the marks came off. ASCII rows take the
     // allocation-free fast path — one scan, input returned untouched
-    "q174_strip_accents" -> ((s, dir) => {
+    // q174: DuckDB plants the identical chr() accent edges and strips
+    // with its own strip_accents — verified char-for-char equal to
+    // NFD-Mn-NFC on this range, so the expression grades cross-engine
+    Query("q174_strip_accents",
+      ("WITH p AS (SELECT doc_id, text" +
+        " || CASE WHEN doc_id % 2 = 0 THEN ' caf' || chr(233) || ' se' || chr(241) || 'or na' || chr(239) || 've' ELSE '' END" +
+        " || CASE WHEN doc_id % 3 = 0 THEN ' cr' || chr(232) || 'me br' || chr(251) || 'l' || chr(233) || 'e ' || chr(229) || 'land' ELSE '' END" +
+        " || CASE WHEN doc_id % 5 = 0 THEN ' de' || chr(769) || 'ja' || chr(768) || ' vu ' || chr(252) || 'berma' || chr(223) ELSE '' END AS t FROM documents) " +
+        "SELECT doc_id, strip_accents(t) AS t_stripped, CAST(len(t) AS BIGINT) AS len_before, " +
+        "CAST(len(strip_accents(t)) AS BIGINT) AS len_after FROM p ORDER BY doc_id"), (s, dir) => {
       val plant = concat(col("text"),
         when(col("doc_id") % 2 === 0,
           lit(" caf\u00e9 se\u00f1or na\u00efve")).otherwise(lit("")),
@@ -4172,7 +4326,21 @@ object SparkEntry {
     // row. Includes a deliberately failing range check (most orders cost
     // over 100) so nonzero violation COUNTS are graded, not just zeros.
     // Integer counts end to end — full SQL oracle
-    "q175_data_expectations" -> ((s, dir) => {
+    // q175: the same counts as plain SQL — per check one row of
+    // (check, n_rows, n_violations, pass), unioned and ordered
+    Query("q175_data_expectations",
+      ("WITH r AS (" +
+        "SELECT 'o_custkey_not_null' AS check_name, CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(CASE WHEN o_custkey IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_violations FROM orders" +
+        " UNION ALL SELECT 'o_totalprice_positive', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(o_totalprice > 0, false) THEN 0 ELSE 1 END) AS BIGINT) FROM orders" +
+        " UNION ALL SELECT 'o_totalprice_under_100', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(o_totalprice < 100, false) THEN 0 ELSE 1 END) AS BIGINT) FROM orders" +
+        " UNION ALL SELECT 'l_quantity_range', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(l_quantity >= 1 AND l_quantity <= 50, false) THEN 0 ELSE 1 END) AS BIGINT) FROM lineitem" +
+        // uniqueness: n - distinct-over-FULLY-NON-NULL-keys — null-keyed
+        // rows each count once (they are not in the distinct), never
+        // twice (the uniqueCheck null-skipping contract)
+        " UNION ALL SELECT 'o_orderkey_unique', CAST(count(*) AS BIGINT), CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) FROM orders" +
+        " UNION ALL SELECT 'lineitem_pk_unique', CAST(count(*) AS BIGINT), CAST(count(*) - count(DISTINCT CASE WHEN l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL THEN (l_orderkey, l_linenumber) END) AS BIGINT) FROM lineitem" +
+        " UNION ALL SELECT 'l_orderkey_in_orders', CAST((SELECT count(*) FROM lineitem) AS BIGINT), CAST((SELECT count(*) FROM lineitem l WHERE l.l_orderkey IS NOT NULL AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT)) " +
+        "SELECT check_name, n_rows, n_violations, CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS pass FROM r ORDER BY check_name"), (s, dir) => {
       val orders = t(s, dir, "orders")
       val li = t(s, dir, "lineitem")
       Expectations.all(
@@ -4198,7 +4366,10 @@ object SparkEntry {
     // DuckDB oracle is a GENERATED CTE chain (textRankOracleSql, the
     // q167 pattern) and the graded artifact is every kept rank to the
     // last micro under the total (pr DESC, node) order
-    "q176_textrank_keywords" -> ((s, dir) =>
+    // q176: the generated integer-PageRank replay over the same bigram
+    // graph — `//` and Spark's `div` agree exactly on the all-positive
+    // operands
+    Query("q176_textrank_keywords", textRankOracleSql(iters = 3, k = 30), (s, dir) =>
       graft.text.TextRank.keywords(tw(s, dir, "documents"), "text",
           iters = 3, k = 30)
         .orderBy("rank")),
@@ -4209,15 +4380,25 @@ object SparkEntry {
     // Arrivals split by doc parity into two deterministic micro-batches;
     // the accumulated log must equal the two per-parity SQL reports —
     // 2 rows per check, a FULL oracle (order-free: the compare sorts)
-    "q177_stream_expectations" -> ((s, dir) => {
+    // q177: two per-parity SQL reports unioned — one row per (check,
+    // batch); the compare sorts, so batch arrival order is irrelevant
+    Query("q177_stream_expectations", {
+      def side(parity: Int): String =
+        s"SELECT 'text_not_null' AS check_name, CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(CASE WHEN text IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_violations FROM documents WHERE doc_id % 2 = $parity" +
+          s" UNION ALL SELECT 'n_chars_positive', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(n_chars > 0, false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity" +
+          s" UNION ALL SELECT 'n_chars_under_500', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(n_chars < 500, false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity" +
+          s" UNION ALL SELECT 'lang_known', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(lang IN ('en','fr','es','zh','de'), false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity"
+      "WITH r AS (" + side(0) + " UNION ALL " + side(1) + ") " +
+        "SELECT check_name, n_rows, n_violations, CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS pass " +
+        "FROM r ORDER BY check_name, n_violations"
+    }, (s, dir) => {
       val docs = t(s, dir, "documents")
       val checks = Seq(
         "text_not_null" -> col("text").isNotNull,
         "n_chars_positive" -> (col("n_chars") > 0),
         "n_chars_under_500" -> (col("n_chars") < 500),
         "lang_known" -> col("lang").isin("en", "fr", "es", "zh", "de"))
-      val tmp = java.nio.file.Files.createTempDirectory("q177").toString
-      try {
+      withTempDir("q177") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         docs.filter(col("doc_id") % 2 === 0).coalesce(1)
           .write.mode("append").parquet(s"$tmp/src")
@@ -4229,7 +4410,7 @@ object SparkEntry {
           store, "dq", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("dq").get.drop("__run", "__batch", "__obs")
           .orderBy("check_name", "n_violations").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q178: column profiling — the schema-discovery report run BEFORE
@@ -4239,7 +4420,21 @@ object SparkEntry {
     // logical aggregation (the multi-distinct Expand rewrite — the
     // documented price of exact counts; the approx mode is the 100-TB
     // path and deliberately NOT the graded one). Full SQL oracle
-    "q178_column_profile" -> ((s, dir) =>
+    // q178: per-column stats as plain SQL — integral columns carry
+    // min/max, others NULL (no lossy cross-type string render)
+    Query("q178_column_profile", {
+      def c(name: String, integral: Boolean): String = {
+        val mn = if (integral) s"CAST(min($name) AS BIGINT)" else "CAST(NULL AS BIGINT)"
+        val mx = if (integral) s"CAST(max($name) AS BIGINT)" else "CAST(NULL AS BIGINT)"
+        s"SELECT '$name' AS col_name, CAST(count(*) AS BIGINT) AS n_rows, " +
+          s"CAST(sum(CASE WHEN $name IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls, " +
+          s"CAST(count(DISTINCT $name) AS BIGINT) AS n_distinct, $mn AS min_long, $mx AS max_long FROM orders"
+      }
+      Seq(c("o_orderkey", integral = true), c("o_custkey", integral = true),
+        c("o_orderstatus", integral = false), c("o_totalprice", integral = false),
+        c("o_orderdate", integral = false), c("o_orderpriority", integral = false))
+        .mkString("WITH r AS (", " UNION ALL ", ") SELECT * FROM r ORDER BY col_name")
+    }, (s, dir) =>
       Profile.profile(t(s, dir, "orders")).orderBy("col_name")),
 
     // q179: C4/CCNet line-level corpus dedup — drop every exact line
@@ -4253,7 +4448,7 @@ object SparkEntry {
     // doc carries a unique tail line (must never drop — the negative
     // control). Dropping is retroactive (first occurrence of a hot line
     // drops with the rest) and every doc survives with audit counts
-    "q179_line_dedup" -> ((s, dir) =>
+    Query("q179_line_dedup", LineDedupOracleSql, (s, dir) =>
       graft.dedup.Dedup.lineDedup(linePlanted(t(s, dir, "documents")),
         "doc_id", "text", maxDf = 2).orderBy("doc_id")),
 
@@ -4269,7 +4464,7 @@ object SparkEntry {
     // The Spark side is ONE narrow codegen'd projection — no join, no
     // shuffle, the vocabulary rides as a reference object; at 100 TB the
     // corpus is scanned once and only (doc_id, pos, piece) moves
-    "q180_wordpiece_encode" -> ((s, dir) =>
+    Query("q180_wordpiece_encode", WordPieceEncodeOracleSql, (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id"), posexplode(graft.functions.WordPieceEncode(
           TextAnalysis.tokens(col("text")), WordPiecePinned,
@@ -4290,7 +4485,11 @@ object SparkEntry {
     // encoder must reproduce the driver reference segmentation for EVERY
     // distinct corpus word under the trained vocabulary — tokenizer
     // train AND apply verified end to end
-    "q181_wordpiece_train" -> ((s, dir) => {
+    // q181 is a three-implementation parity gate (delta trainer ==
+    // full-recount trainer == BigInt driver reference, plus codegen-vs-
+    // reference greedy apply over every distinct word) — violations
+    // contract by nature
+    Query("q181_wordpiece_train", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
       val nMerges = 6
       // ONE word table feeds the reference collect AND the apply-parity
@@ -4345,17 +4544,16 @@ object SparkEntry {
     // DuckDB greedy-walk oracle: segmentation is batch-partitioning-
     // invariant because the vocabulary is pinned at gate start (the
     // q146/q170 contract for the WordPiece family)
-    "q182_stream_wordpiece_gate" -> ((s, dir) => {
+    // q182 accumulates the same corpus through the streaming gate under
+    // the same pinned vocabulary — shared oracle by construction
+    Query("q182_stream_wordpiece_gate", WordPieceEncodeOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q182").toString
-      try {
+      withTempDir("q182") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val vStore = new graft.sync.ParquetStore(s, s"$tmp/v")
         import s.implicits._
         vStore.write(WordPiecePinned.toDF("piece"), "vocab")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         IncrementalStream.wordPieceGate(stream, vStore.read("vocab").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck",
           maxInputChars = WordPieceCap)
@@ -4365,7 +4563,7 @@ object SparkEntry {
           .toDF("doc_id", "pos", "piece")
           .select(col("doc_id"), col("pos").cast(LongType), col("piece"))
           .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q183: CONTINUOUS line-index maintenance — the C4 line-dedup member
@@ -4378,14 +4576,15 @@ object SparkEntry {
     // so a boilerplate line crossing maxDf mid-stream drops
     // RETROACTIVELY from documents landed before it went hot (the
     // defining semantics an append-time gate cannot provide)
-    "q183_stream_line_index" -> ((s, dir) => {
+    // q183 accumulates the same planted corpus through the streaming
+    // line-index ingest and serves it through lineDedupFromIndex —
+    // shared oracle by construction (retroactive hotness over the whole
+    // accumulation IS the batch semantics)
+    Query("q183_stream_line_index", LineDedupOracleSql, (s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q183").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q183") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, docs, 3, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.lineIndexIngest(stream, "doc_id", "text",
           store, "lines", checkpointDir = ckDir).awaitTermination()
@@ -4393,7 +4592,7 @@ object SparkEntry {
             store.read("lines").get.select(col("doc_id"), col("pos"), col("line")),
             "doc_id", maxDf = 2)
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q195/q196: snapshot DRIFT reports — the between-runs monitoring
@@ -4404,7 +4603,10 @@ object SparkEntry {
     // q195 histogram drift (order price cents, $500 buckets, the two
     // order-status populations as snapshots), q196 category drift
     // (event types split by user parity, NULL-safe categories)
-    "q195_drift_histogram" -> ((s, dir) => {
+    // q195/q196: exact counts + permille integer-div shares over the
+    // full-outer bucket/category union — plain SQL in both shapes
+    Query("q195_drift_histogram",
+      """WITH o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 50000 AS bucket FROM orders WHERE o_orderstatus = 'F'), n AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 50000 AS bucket FROM orders WHERE o_orderstatus = 'O'), oc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_old FROM o GROUP BY 1), nc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_new FROM n GROUP BY 1), j AS (SELECT coalesce(oc.bucket, nc.bucket) AS bucket, coalesce(n_old, 0) AS n_old, coalesce(n_new, 0) AS n_new FROM oc FULL OUTER JOIN nc ON oc.bucket = nc.bucket), c AS (SELECT bucket, n_old, n_new, sum(n_old) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS co, sum(n_new) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS cn FROM j), t AS (SELECT CAST(sum(n_old) AS BIGINT) AS to_, CAST(sum(n_new) AS BIGINT) AS tn FROM j) SELECT bucket, n_old, n_new, CAST(CASE WHEN to_ > 0 THEN (n_old * 1000) // to_ ELSE 0 END AS BIGINT) AS share_old_pm, CAST(CASE WHEN tn > 0 THEN (n_new * 1000) // tn ELSE 0 END AS BIGINT) AS share_new_pm, CAST(abs(CASE WHEN tn > 0 THEN (n_new * 1000) // tn ELSE 0 END - CASE WHEN to_ > 0 THEN (n_old * 1000) // to_ ELSE 0 END) AS BIGINT) AS shift_pm, CAST(abs(CASE WHEN tn > 0 THEN (cn * 1000) // tn ELSE 0 END - CASE WHEN to_ > 0 THEN (co * 1000) // to_ ELSE 0 END) AS BIGINT) AS cum_shift_pm FROM c, t ORDER BY bucket""", (s, dir) => {
       val o = t(s, dir, "orders").select(
         round(col("o_totalprice") * 100).cast(LongType).as("c"),
         col("o_orderstatus"))
@@ -4414,7 +4616,7 @@ object SparkEntry {
         .orderBy("bucket")
     }),
 
-    "q196_drift_category" -> ((s, dir) => {
+    Query("q196_drift_category", CategoryDriftOracleSql, (s, dir) => {
       val e = t(s, dir, "events")
       graft.operators.Drift.categoryDrift(
           e.filter(col("user_id") % 2 === 0),
@@ -4429,7 +4631,9 @@ object SparkEntry {
     // fan-out is bounded by the SOURCE count squared per gram, so no df
     // gate is needed. Only genuinely overlapping pairs emit (the planted
     // corpus shares boilerplate n-grams across sources)
-    "q200_source_overlap" -> ((s, dir) =>
+    // q200: distinct (source, gram) self-join replay on string grams
+    Query("q200_source_overlap",
+      """WITH tok AS (SELECT source, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT DISTINCT source, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT source, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY source) SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS n_shared, ta.n AS n_a, tb.n AS n_b, CAST((count(*) * 1000) // ta.n AS BIGINT) AS cont_a_pm, CAST((count(*) * 1000) // tb.n AS BIGINT) AS cont_b_pm FROM g a JOIN g b ON a.g = b.g AND a.source < b.source JOIN tot ta ON ta.source = a.source JOIN tot tb ON tb.source = b.source GROUP BY a.source, b.source, ta.n, tb.n ORDER BY src_a, src_b""", (s, dir) =>
       Dedup.sourceOverlapMatrix(tw(s, dir, "documents"), "source", "text",
           k = 8)
         .orderBy("src_a", "src_b")),
@@ -4441,7 +4645,9 @@ object SparkEntry {
     // the global cumulative sum runs through the PrefixSum bucket
     // decomposition (q153's machinery — never a single-partition
     // window). The oracle replays with a plain window cumsum
-    "q198_token_shards" -> ((s, dir) =>
+    // q198: plain window-cumsum replay of the greedy shard cut
+    Query("q198_token_shards",
+      """WITH d AS (SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM documents), r AS (SELECT doc_id, n_tokens, sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d), t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM d) SELECT doc_id, n_tokens, CAST(least(7, (cum - n_tokens) // greatest(1, (tot + 7) // 8)) AS BIGINT) AS shard FROM r, t ORDER BY doc_id""", (s, dir) =>
       Sampling.tokenBalancedShards(
           t(s, dir, "documents").select(col("doc_id"),
             TextAnalysis.tokenCount(col("text")).as("n_tokens")),
@@ -4452,7 +4658,9 @@ object SparkEntry {
     // publishes: doc/token/vocab counts, milli mean length, permille
     // type-token ratio, all integer floors, one posexplode_outer pass
     // (zero-token docs still count as docs)
-    "q199_data_card" -> ((s, dir) =>
+    // q199: the datasheet aggregate with integer milli/permille floors
+    Query("q199_data_card",
+      """WITH e AS (SELECT source, doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok FROM documents), a AS (SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_t, CAST(count(tok) AS BIGINT) AS n_tokens, CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_tokens FROM e GROUP BY source), docs AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY source) SELECT d.source, d.n_docs, coalesce(a.n_tokens, 0) AS n_tokens, coalesce(a.n_distinct_tokens, 0) AS n_distinct_tokens, CAST((coalesce(a.n_tokens, 0) * 1000) // d.n_docs AS BIGINT) AS mean_tokens_milli, CAST(CASE WHEN coalesce(a.n_tokens, 0) > 0 THEN (a.n_distinct_tokens * 1000) // a.n_tokens ELSE 0 END AS BIGINT) AS ttr_pm FROM docs d LEFT JOIN a USING (source) ORDER BY d.source""", (s, dir) =>
       TextAnalysis.dataCard(t(s, dir, "documents"), "source", "doc_id", "text")
         .orderBy("source")),
 
@@ -4463,15 +4671,14 @@ object SparkEntry {
     // counts against the q196 baseline must equal batch categoryDrift
     // under the SAME oracle: count addition is merge-order-invariant,
     // so the report cannot depend on how the stream was batched
-    "q197_stream_drift_monitor" -> ((s, dir) => {
+    // q197: the maintained-count report must equal batch categoryDrift —
+    // the shared-oracle contract
+    Query("q197_stream_drift_monitor", CategoryDriftOracleSql, (s, dir) => {
       val e = t(s, dir, "events")
-      val tmp = java.nio.file.Files.createTempDirectory("q197").toString
-      try {
+      withTempDir("q197") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         val arrivals = e.filter(col("user_id") % 2 === 1)
-        arrivals.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, arrivals, 2, s"$tmp/src")
         IncrementalStream.maintainCounts(stream, "event_type",
           store, "counts", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4481,7 +4688,7 @@ object SparkEntry {
             store.read("counts").get.select(col("event_type"), col("n")),
             "event_type")
           .orderBy("category").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q194: TAKEDOWN propagation — the opt-out/right-to-be-forgotten
@@ -4494,10 +4701,11 @@ object SparkEntry {
     // survivors), the erasure guarantee an at-read gate provides and an
     // append-time gate cannot. Oracle: the q179 replay over the
     // filtered corpus
-    "q194_takedown_line_index" -> ((s, dir) => {
+    // q194: the post-takedown serve equals the q179 replay over only the
+    // surviving documents — erasure leaves no df residue
+    Query("q194_takedown_line_index", lineDedupOracleSqlOver(" WHERE doc_id < 400"), (s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q194").toString
-      try {
+      withTempDir("q194") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         store.write(graft.dedup.Dedup.lineIndexRows(docs, "doc_id", "text"),
           "lines")
@@ -4507,7 +4715,7 @@ object SparkEntry {
         graft.dedup.Dedup.lineDedupFromIndex(store.read("lines").get,
             "doc_id", maxDf = 2)
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q201: ONLINE takedown — the erasure lands BETWEEN micro-batches of
@@ -4520,11 +4728,12 @@ object SparkEntry {
     // defers to the next offline compaction). Output must equal the
     // from-scratch build over exactly the surviving documents — the
     // q194 oracle, shared per the q190/q193 precedent
-    "q201_online_takedown" -> ((s, dir) => {
+    // q201: the ONLINE (tombstone, mid-stream) takedown must serve the
+    // identical survivor build — the q194 oracle, shared
+    Query("q201_online_takedown", lineDedupOracleSqlOver(" WHERE doc_id < 400"), (s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q201").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q201") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         def ingestAvailable(): Unit = {
           val stream = s.readStream.schema(docs.schema)
@@ -4554,7 +4763,7 @@ object SparkEntry {
               "doc_id", store),
             "doc_id", maxDf = 2)
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q207: MOJIBAKE repair — the highest-yield ftfy rule (UTF-8 decoded
@@ -4567,7 +4776,13 @@ object SparkEntry {
     // outputs are generated from the SAME clean constants the corpus was
     // broken from, so the expectation derives from the construction,
     // never the implementation
-    "q207_fix_mojibake" -> ((s, dir) => {
+    // q207: the expected outputs replay from the SAME clean/broken/
+    // passthrough constants the corpus was built from — repair expected
+    // exactly on the broken class, identity elsewhere
+    Query("q207_fix_mojibake", {
+      def sqlLit(s: String) = "'" + s.replace("'", "''") + "'"
+      s"""SELECT doc_id, CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN ${sqlLit(MojibakeClean)} WHEN 1 THEN ${sqlLit(MojibakeClean)} WHEN 2 THEN ${sqlLit(MojibakeCurly)} ELSE ${sqlLit(MojibakeAscii)} END || ' v' || CAST(doc_id AS VARCHAR) AS fixed, CAST(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS BIGINT) AS repaired FROM documents WHERE doc_id < 240 ORDER BY doc_id"""
+    }, (s, dir) => {
       val docs = mojibakePlanted(t(s, dir, "documents"))
       docs.select(col("doc_id"),
           graft.functions.FixMojibake(col("text")).as("fixed"),
@@ -4586,15 +4801,16 @@ object SparkEntry {
     // maxHamming=3 split — bands 1 and 3 still agree), so exactly the
     // (2i, 2i+1) pairs must emit; silence and monotone fades are planted
     // as the degenerate negative controls
-    "q206_audio_neardup" -> ((s, dir) => {
+    // q206: planted-pair audio fingerprint mining is a Spark-side
+    // violations contract (the q115 image-dHash precedent — the planted
+    // PCM construction and the banded join cannot be expressed in SQL)
+    Query("q206_audio_neardup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedAudioMedia(s, docs)
       val pairs = Dedup.audioNearDups(media, maxHamming = 3)
       val expected = plantedPairExpectation(
         docs.filter(col("doc_id") < 500 || col("doc_id") >= 510))
-      expected.withColumn("__e", lit(1))
-        .join(pairs.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-        .agg(violations(col("__e").isNull || col("__f").isNull))
+      parity(expected, pairs, Seq("id_a", "id_b"))
     }),
 
     // q204: the ExactSubstr df gate's SPAN-SPLIT LOSS, measured — q188's
@@ -4607,7 +4823,10 @@ object SparkEntry {
     // pure-boilerplate 1000pm — the last is the gate working as
     // designed). The DuckDB oracle replays BOTH arms of the q188 CTE
     // chain over the identical generated corpus
-    "q204_span_gate_loss" -> ((s, dir) =>
+    // q204: BOTH arms of the q188 diagonal-run chain (ungated / df-gated)
+    // over the generated planted corpus, joined per doc with the permille
+    // loss floor — generated from the SAME Scala span constants
+    Query("q204_span_gate_loss", SpanGateLossOracleSql, (s, dir) =>
       Decontaminate.spanGateLoss(spanLossPlanted(t(s, dir, "documents")),
           "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
         .orderBy("doc_id")),
@@ -4622,7 +4841,10 @@ object SparkEntry {
     // express the sequential fold). Extra gates: the word table must
     // genuinely carry non-ASCII bytes, and at least one selected merge
     // must fuse a high-byte unit — a silently ASCII-only run cannot pass
-    "q202_byte_bpe_train" -> ((s, dir) => {
+    // q202/q203: byte-level BPE train + apply are Spark-side contracts
+    // (brute-force reference / parity + lossless round-trip) — DuckDB
+    // cannot express the sequential merge fold (the q150/q154 precedent)
+    Query("q202_byte_bpe_train", InvariantOracleSql, (s, dir) => {
       val docs = bytePlanted(tw(s, dir, "documents"))
       val nMerges = 6
       val (merges, words) = TextAnalysis.byteBpeTrain(docs, "text", nMerges)
@@ -4679,7 +4901,7 @@ object SparkEntry {
     // whitespace-stripped original bytes, emoji and all (nothing is ever
     // OOV/UNK, where the char-level tokens() drops every planted
     // non-ASCII word)
-    "q203_byte_bpe_encode" -> ((s, dir) => {
+    Query("q203_byte_bpe_encode", InvariantOracleSql, (s, dir) => {
       val docs = bytePlanted(tw(s, dir, "documents"))
       val nMerges = 8
       val (merges, trained) = TextAnalysis.byteBpeTrainFullRecount(docs, "text", nMerges)
@@ -4717,15 +4939,14 @@ object SparkEntry {
     // arrivals then scrub against the ACCUMULATED index (df gate at
     // read, corpus never re-tokenized at serve time). Output must equal
     // q190's direct corpus scrub — the SAME DuckDB oracle grades both
-    "q193_span_index_serve" -> ((s, dir) => {
+    // q193: the accumulated-index serve must equal q190's direct scrub —
+    // the shared-oracle contract (q179/q183/q186 precedent)
+    Query("q193_span_index_serve", DupSpanGateOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q193").toString
-      try {
+      withTempDir("q193") { tmp =>
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val corpus = docs.filter(col("doc_id") < 250)
-        corpus.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, corpus, 2, s"$tmp/src")
         IncrementalStream.dupSpanIndexIngest(stream, "doc_id", "text",
           idxStore, "grams", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4735,7 +4956,7 @@ object SparkEntry {
             "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q205: ONLINE takedown through the SPAN-INDEX family — q201's
@@ -4747,11 +4968,13 @@ object SparkEntry {
     // SURVIVORS at read, so a gram hot only because tombstoned docs
     // carried it re-cools and erased ref docs leave no span residue.
     // Oracle: the q190 chain with the ref side filtered to survivors
-    "q205_takedown_span_index" -> ((s, dir) => {
+    // q205: the q190 chain with the ref side filtered to the tombstone
+    // SURVIVORS (>= 100) — the online-erasure serve must equal the
+    // from-scratch scrub against exactly the surviving reference
+    Query("q205_takedown_span_index", dupSpanGateOracleSqlOverRef(" AND doc_id >= 100"), (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q205").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q205") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val corpus = docs.filter(col("doc_id") < 250)
         def ingestAvailable(): Unit = {
@@ -4777,7 +5000,7 @@ object SparkEntry {
             "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q192: WATER-FILLING mixture assembly — the Pile/Dolma budget rule
@@ -4792,7 +5015,9 @@ object SparkEntry {
     // on #sources rows (the k-centroids collect shape); selection is
     // q100's greedy-prefix window under the per-source allocations.
     // The DuckDB oracle replays the rounds as a generated CTE chain
-    "q192_budget_mixture" -> ((s, dir) => {
+    // q192: the generated water-filling CTE chain — 24 rounds covers any
+    // exhaustion order over the 20 sources; converged rounds are no-ops
+    Query("q192_budget_mixture", budgetMixtureOracleSql(24), (s, dir) => {
       val d = t(s, dir, "documents").select(col("source"), col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       val budget = d.agg(sum(col("n_tokens"))).head.getLong(0) / 2
@@ -4813,7 +5038,47 @@ object SparkEntry {
     // tail; train and classify both replay in DuckDB with the same
     // translate literals — profiles, ranks, distances, and ties graded
     // exactly on multi-byte text
-    "q191_langid_unicode" -> ((s, dir) => {
+    // q191: the q187 CTE chain over the planted corpus, with
+    // translate(<pinned pair strings>) in place of lower() — generated
+    // from the SAME Scala constants as the Spark side so the map and the
+    // phrases cannot drift
+    Query("q191_langid_unicode", {
+      val uc = graft.text.LangProfile.PinnedUpper
+      val lc = graft.text.LangProfile.PinnedLower
+      s"""WITH base AS (
+        |  SELECT doc_id,
+        |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'fr' WHEN 1 THEN 'de' ELSE 'es' END AS lang,
+        |    (CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN '$LangidFr' WHEN 1 THEN '$LangidDe' ELSE '$LangidEs' END)
+        |      || ' v' || CAST(doc_id AS VARCHAR) AS text
+        |  FROM documents WHERE doc_id < 120),
+        |norm AS (
+        |  SELECT doc_id, lang,
+        |    regexp_replace(translate(text, '$uc', '$lc'), '[ \t\n\f\r]+', '_', 'g') AS t
+        |  FROM base),
+        |tg AS (
+        |  SELECT doc_id, lang, substring(t, CAST(i AS INT), 3) AS g
+        |  FROM norm, LATERAL unnest(range(1, len(t) - 1)) AS u(i)
+        |  WHERE len(t) >= 3),
+        |lp AS (
+        |  SELECT lang, g, CAST(row_number() OVER (
+        |      PARTITION BY lang ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS r
+        |  FROM tg WHERE lang IS NOT NULL GROUP BY lang, g
+        |  QUALIFY r < 40),
+        |dp AS (
+        |  SELECT doc_id, g, CAST(row_number() OVER (
+        |      PARTITION BY doc_id ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS dr
+        |  FROM tg GROUP BY doc_id, g
+        |  QUALIFY dr < 40),
+        |dist AS (
+        |  SELECT dp.doc_id, l.lang,
+        |    CAST(sum(CASE WHEN lp.r IS NULL THEN 40 ELSE abs(dp.dr - lp.r) END) AS BIGINT) AS d
+        |  FROM dp CROSS JOIN (SELECT DISTINCT lang FROM lp) l
+        |  LEFT JOIN lp ON lp.lang = l.lang AND lp.g = dp.g
+        |  GROUP BY dp.doc_id, l.lang)
+        |SELECT doc_id, lang AS pred_lang, d AS dist FROM dist
+        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY d, lang) = 1
+        |ORDER BY doc_id""".stripMargin
+    }, (s, dir) => {
       val langs = array(lit("fr"), lit("de"), lit("es"))
       val phrases = array(lit(LangidFr), lit(LangidDe), lit(LangidEs))
       val idx = (col("doc_id") % 3 + 1).cast("int")
@@ -4840,7 +5105,9 @@ object SparkEntry {
     // precedent: same semantics, scale-path carrier). This is the path
     // past ~2^18 hashed dims, where a typedLit weight map stops being a
     // reasonable plan literal
-    "q189_svm_join_parity" -> ((s, dir) => {
+    // q189: the join-carried train+score twins against the IDENTICAL
+    // replay oracle — bit-equality of the distributed-weights path
+    Query("q189_svm_join_parity", SvmScoreOracleSql, (s, dir) => {
       val df = svmDocs(s, dir)
       val w = Classifier.trainJoin(df, "doc_id", SvmDims, SvmRounds,
         SvmLrMicros, SvmMarginMicros)
@@ -4860,7 +5127,15 @@ object SparkEntry {
     // per-doc removal accounting graded as exact integers (the q129
     // contract with the corpus as both sides). The DuckDB oracle replays
     // the identical formulation on string grams
-    "q188_dup_span_stats" -> ((s, dir) =>
+    // q188: string-gram replay of the diagonal-run span formulation —
+    // df gate [2, 20] BEFORE pairing (spans split at hotter-than-maxDf
+    // grams, a pinned semantic of the gate), islands via pos - row_number
+    // per (pair, diagonal), runs >= 20 tokens cover both sides (the b side
+    // shifted by the diagonal), coverage deduped then counted per doc.
+    // 1-based positions throughout (Spark is 0-based) — diagonals, run
+    // lengths, and counts are index-base-invariant
+    Query("q188_dup_span_stats",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), pairable AS (SELECT g FROM (SELECT DISTINCT doc_id, g FROM g) GROUP BY g HAVING count(*) BETWEEN 2 AND 20), kept AS (SELECT doc_id, pos, g FROM g WHERE g IN (SELECT g FROM pairable)), anc AS (SELECT a.doc_id AS ida, b.doc_id AS idb, a.pos AS pa, a.pos - b.pos AS d FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id), isl AS (SELECT ida, idb, d, pa, pa - row_number() OVER (PARTITION BY ida, idb, d ORDER BY pa) AS grp FROM anc), sp AS (SELECT ida, idb, d, min(pa) AS s, count(*) + 7 AS rt FROM isl GROUP BY ida, idb, d, grp HAVING count(*) + 7 >= 20), cov AS (SELECT ida AS doc_id, unnest(range(s, s + rt)) AS p FROM sp UNION ALL SELECT idb, unnest(range(s - d, s - d + rt)) FROM sp), covd AS (SELECT DISTINCT doc_id, p FROM cov), rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_removed FROM covd GROUP BY doc_id) SELECT t.doc_id, CAST(len(t.ts) AS BIGINT) AS n_tokens, coalesce(rem.n_removed, CAST(0 AS BIGINT)) AS n_removed FROM tok t LEFT JOIN rem USING (doc_id) ORDER BY t.doc_id""", (s, dir) =>
       Decontaminate.duplicatedSpanStats(tw(s, dir, "documents"),
           "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
         .orderBy("doc_id")),
@@ -4871,24 +5146,26 @@ object SparkEntry {
     // across a real 2-micro-batch arrival; graded against the batch
     // oracle's clean-text replay (the q130 batch-partitioning-invariance
     // precedent, with the corpus instead of a benchmark as the source)
-    "q190_stream_dup_span_gate" -> ((s, dir) => {
+    // q190: the q188 diagonal-run CTEs with the corpus half (doc_id < 250)
+    // as reference and arrivals (>= 250) as the scrubbed side — ref-side
+    // df gate <= 20 (one ref occurrence suffices cross-side, so no lower
+    // bound), coverage on the arrival side only, then the q130 clean-text
+    // reconstruction
+    Query("q190_stream_dup_span_gate", DupSpanGateOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q190").toString
-      try {
+      withTempDir("q190") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val refStore = new graft.sync.ParquetStore(s, s"$tmp/ref")
         refStore.write(docs.filter(col("doc_id") < 250), "ref")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, arrivals, 2, s"$tmp/src")
         IncrementalStream.dupSpanScrubGate(stream, refStore.read("ref").get,
           "doc_id", "text", store, "clean", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q187: TRAINED language identification — the Cavnar–Trenkle
@@ -4902,7 +5179,33 @@ object SparkEntry {
     // DuckDB oracle as plain window/join SQL — no generated literals.
     // Scale: profiles broadcast (languages·k rows), doc ranking is a
     // doc-keyed window, the distance sum and argmin stay doc-keyed
-    "q187_langid_profiles" -> ((s, dir) => {
+    Query("q187_langid_profiles",
+      """WITH norm AS (
+        |  SELECT doc_id, lang, regexp_replace(lower(text), '[ \t\n\f\r]+', '_', 'g') AS t
+        |  FROM documents),
+        |tg AS (
+        |  SELECT doc_id, lang, substring(t, CAST(i AS INT), 3) AS g
+        |  FROM norm, LATERAL unnest(range(1, len(t) - 1)) AS u(i)
+        |  WHERE len(t) >= 3),
+        |lp AS (
+        |  SELECT lang, g, CAST(row_number() OVER (
+        |      PARTITION BY lang ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS r
+        |  FROM tg WHERE lang IS NOT NULL GROUP BY lang, g
+        |  QUALIFY r < 40),
+        |dp AS (
+        |  SELECT doc_id, g, CAST(row_number() OVER (
+        |      PARTITION BY doc_id ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS dr
+        |  FROM tg GROUP BY doc_id, g
+        |  QUALIFY dr < 40),
+        |dist AS (
+        |  SELECT dp.doc_id, l.lang,
+        |    CAST(sum(CASE WHEN lp.r IS NULL THEN 40 ELSE abs(dp.dr - lp.r) END) AS BIGINT) AS d
+        |  FROM dp CROSS JOIN (SELECT DISTINCT lang FROM lp) l
+        |  LEFT JOIN lp ON lp.lang = l.lang AND lp.g = dp.g
+        |  GROUP BY dp.doc_id, l.lang)
+        |SELECT doc_id, lang AS pred_lang, d AS dist FROM dist
+        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY d, lang) = 1
+        |ORDER BY doc_id""".stripMargin, (s, dir) => {
       val docs = tw(s, dir, "documents")
       val k = 40
       // profiles MATERIALIZE once (languages·k rows): classify references
@@ -4928,23 +5231,22 @@ object SparkEntry {
     // snapshot, never a batch's own counts — a small batch could never
     // cross maxDf, which is why the gate takes the hot table, not a
     // threshold
-    "q186_stream_line_gate" -> ((s, dir) => {
+    // q186 cleans the same planted corpus through the serving gate under
+    // a full-corpus hot snapshot — shared oracle by construction
+    Query("q186_stream_line_gate", LineDedupOracleSql, (s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q186").toString
-      try {
+      withTempDir("q186") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val hot = graft.dedup.Dedup.hotLines(
           graft.dedup.Dedup.lineIndexRows(docs, "doc_id", "text"), maxDf = 2)
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         IncrementalStream.lineDedupGate(stream, hot, "doc_id", "text",
           store, "clean", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), col("text_clean"), col("n_kept"), col("n_dropped"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q185: MATERIALIZED training windows — q66's packedSpans taken to
@@ -4960,7 +5262,30 @@ object SparkEntry {
     // per-group streams end to end, never a global single-partition
     // order. Full DuckDB oracle replays the identical two-level
     // construction with window sums + string_agg
-    "q185_training_windows" -> ((s, dir) =>
+    Query("q185_training_windows",
+      """WITH d AS (
+        |  SELECT source, doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
+        |  FROM documents),
+        |o AS (
+        |  SELECT source, doc_id, ts,
+        |    coalesce(sum(len(ts)) OVER (PARTITION BY source ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS st
+        |  FROM d),
+        |e AS (
+        |  SELECT source, doc_id, st + i - 1 AS gp, ts[i] AS tok
+        |  FROM o, LATERAL unnest(range(1, len(ts) + 1)) AS u(i)),
+        |w1 AS (
+        |  SELECT source, gp // 128 AS win_id, doc_id, min(gp) AS mg,
+        |    CAST(count(*) AS BIGINT) AS n, string_agg(tok, ' ' ORDER BY gp) AS seg
+        |  FROM e GROUP BY source, gp // 128, doc_id)
+        |SELECT source, CAST(win_id AS BIGINT) AS win_id,
+        |  string_agg(seg, ' ' ORDER BY mg) AS window_text,
+        |  string_agg(doc_id || ':' || (mg - win_id * 128) || ':' || n, '|' ORDER BY mg) AS doc_spans,
+        |  CAST(sum(n) AS BIGINT) AS n_tokens,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+        |FROM w1 GROUP BY source, win_id
+        |ORDER BY source, win_id""".stripMargin, (s, dir) =>
       TextAnalysis.packedWindows(t(s, dir, "documents"), Seq("source"),
           "doc_id", "text", windowSize = 128,
           bucket = Some(expr("doc_id div 64")))
@@ -4978,7 +5303,7 @@ object SparkEntry {
     // both engines); the oracle nests each tokenizer's own full graded
     // oracle as a subquery, so this audit cannot drift from q154/q157,
     // q166, and q180
-    "q184_tokenizer_fertility" -> ((s, dir) => {
+    Query("q184_tokenizer_fertility", TokenizerFertilityOracleSql, (s, dir) => {
       val toks = TextAnalysis.tokens(col("text"))
       // NULL text pins every count to 0 with an explicit isNull arm —
       // legacy sizeOfNull makes size(NULL) -1, so a coalesce never fires
@@ -5016,7 +5341,9 @@ object SparkEntry {
     // measured-margin float-grading convention); per doc the frame count
     // and max index must both equal id%3 (+1), and every doc must
     // surface (a payload failing wholesale cannot hide)
-    "q160_video_frame_decode" -> ((s, dir) => {
+    // q160: planted MJPEG frame decode is a Spark-side invariant gate
+    // (DuckDB has no JPEG codec); violations counts formula mismatches
+    Query("q160_video_frame_decode", InvariantOracleSql, (s, dir) => {
       implicit val session: SparkSession = s
       val nDocs = t(s, dir, "documents").count()
       val media = mjpegCorpus(s, dir)
@@ -5045,12 +5372,13 @@ object SparkEntry {
     // gateIndex(raw), one materialization later (full-outer parity + row
     // count, the q151 contract; serving then probes the snapshot with
     // ZERO per-read gate cost)
-    "q161_overlap_snapshot" -> ((s, dir) => {
+    // q161: snapshot-vs-rebuild parity is a Spark-side full-outer
+    // contract (the q151 pattern, one materialization later)
+    Query("q161_overlap_snapshot", InvariantOracleSql, (s, dir) => {
       // every use of docs is per-row-heavy fingerprint work (4 appended
       // ingest rounds + the from-scratch parity rebuild) — fan the scan
       val docs = tw(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q161").toString
-      try {
+      withTempDir("q161") { tmp =>
         val store = new graft.sync.ParquetStore(s, tmp)
         val batchConds = Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
           col("doc_id") % 3 === 2, col("doc_id") % 3 === 1)
@@ -5060,16 +5388,11 @@ object SparkEntry {
             .withColumn("__run", lit(i.toLong)), "fps")
         }
         graft.text.Winnow.snapshotIndex(store, "doc_id")
-        val snap = store.read("fps_gated").get
-          .select(col("fp"), col("doc_id")).withColumn("__y", lit(1))
+        val snap = store.read("fps_gated").get.select(col("fp"), col("doc_id"))
         val batch = graft.text.Winnow.buildOverlapIndex(docs, "doc_id", "text")
         val nBatch = batch.count()
-        batch.withColumn("__x", lit(1))
-          .join(snap, Seq("fp", "doc_id"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+        parity(batch, snap, Seq("fp", "doc_id"), rows = Some(nBatch)).localCheckpoint()
+      }
     }),
 
     // q208: the BPE family DEPLOYED at ingest — the fourth tokenizer
@@ -5083,17 +5406,16 @@ object SparkEntry {
     // violations form), with a coverage guard (every doc served exactly
     // once) and a fired guard (at least one multi-unit piece — merges
     // that never fire would pass vacuously)
-    "q208_stream_bpe_gate" -> ((s, dir) => {
+    // q208: gate-vs-batch BPE parity is a Spark-side full-outer contract
+    // (the q154/q203 family — no SQL engine replays a merge list)
+    Query("q208_stream_bpe_gate", InvariantOracleSql, (s, dir) => {
       import s.implicits._
       val docs = bytePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q208").toString
-      try {
+      withTempDir("q208") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val mStore = new graft.sync.ParquetStore(s, s"$tmp/m")
         mStore.write(BytePinnedMerges.toDF("step", "left", "right"), "merges")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         IncrementalStream.bpeGate(stream, mStore.read("merges").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -5110,7 +5432,7 @@ object SparkEntry {
             + when(max(size(filter(col("__want"), p => length(p) > 1))) < 1, 1L)
               .otherwise(0L)).as("violations"))
           .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q209: CONTINUOUS image-dedup ingest — q115's planted dHash corpus
@@ -5121,15 +5443,15 @@ object SparkEntry {
     // normalized), and the persisted fingerprint index must equal the
     // batch fingerprint pass row-for-row (per-doc determinism — the
     // q158 requirement that makes the index probe-able at all)
-    "q209_stream_image_dedup" -> ((s, dir) => {
+    // q209/q210: accumulated-pairs-vs-planted-expectation and persisted-
+    // index-vs-batch-fingerprints are Spark-side contracts (the
+    // q115/q206 planted-construction family)
+    Query("q209_stream_image_dedup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedImageMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q209").toString
-      try {
+      withTempDir("q209") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, media, 2, s"$tmp/src")
         def fp(b: DataFrame): DataFrame = Multimodal.dhashImages(b)(s).toDF()
           .filter(col("phash") =!= 0L && col("phash") =!= -1L)
         IncrementalStream.packedDupIngest(stream, fp, "doc_id", "phash",
@@ -5138,22 +5460,15 @@ object SparkEntry {
         val got = store.read("dup_pairs").get
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-        val pairV = plantedPairExpectation(docs).withColumn("__e", lit(1))
-          .join(got.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-          .agg(violations(col("__e").isNull || col("__f").isNull))
-          .head.getLong(0)
+        val pairV = parity(plantedPairExpectation(docs), got, Seq("id_a", "id_b")).head.getLong(0)
         // the parity arm reads the WRITTEN stream source (identical rows)
         // instead of re-encoding every planted PNG a second time
         val sigWant = fp(s.read.parquet(s"$tmp/src"))
         val nSig = sigWant.count()
-        val idxV = store.read("fingerprints").get.select(col("doc_id"), col("phash"))
-          .withColumn("__x", lit(1))
-          .join(sigWant.withColumn("__y", lit(1)), Seq("doc_id", "phash"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
-          .head.getLong(0)
+        val idxV = parity(store.read("fingerprints").get.select(col("doc_id"), col("phash")),
+          sigWant, Seq("doc_id", "phash"), rows = Some(nSig)).head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q210: CONTINUOUS audio-dedup ingest — the same probe-then-append
@@ -5163,15 +5478,12 @@ object SparkEntry {
     // (silence -> 0, monotone fade -> -1) must be filtered BEFORE the
     // index lands — the persisted-index parity arm catches a gate that
     // lets them through just as hard as a missed pair
-    "q210_stream_audio_dedup" -> ((s, dir) => {
+    Query("q210_stream_audio_dedup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedAudioMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q210").toString
-      try {
+      withTempDir("q210") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, media, 2, s"$tmp/src")
         def fp(b: DataFrame): DataFrame = Multimodal.afingerprintAudio(b)(s).toDF()
           .filter(col("ahash") =!= 0L && col("ahash") =!= -1L)
         IncrementalStream.packedDupIngest(stream, fp, "doc_id", "ahash",
@@ -5180,24 +5492,17 @@ object SparkEntry {
         val got = store.read("dup_pairs").get
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-        val pairV = plantedPairExpectation(
-            docs.filter(col("doc_id") < 500 || col("doc_id") >= 510))
-          .withColumn("__e", lit(1))
-          .join(got.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-          .agg(violations(col("__e").isNull || col("__f").isNull))
-          .head.getLong(0)
+        val pairV = parity(plantedPairExpectation(
+            docs.filter(col("doc_id") < 500 || col("doc_id") >= 510)),
+          got, Seq("id_a", "id_b")).head.getLong(0)
         // the parity arm reads the WRITTEN stream source (identical rows)
         // instead of re-synthesizing every planted PCM walk a second time
         val sigWant = fp(s.read.parquet(s"$tmp/src"))
         val nSig = sigWant.count()
-        val idxV = store.read("fingerprints").get.select(col("doc_id"), col("ahash"))
-          .withColumn("__x", lit(1))
-          .join(sigWant.withColumn("__y", lit(1)), Seq("doc_id", "ahash"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
-          .head.getLong(0)
+        val idxV = parity(store.read("fingerprints").get.select(col("doc_id"), col("ahash")),
+          sigWant, Seq("doc_id", "ahash"), rows = Some(nSig)).head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q211: ONLINE takedown through the MINHASH BAND-INDEX family —
@@ -5212,12 +5517,15 @@ object SparkEntry {
     // serving equals a from-scratch build over the SURVIVING corpus
     // (q121's SAME oracle, corpus restricted to doc_id >= 100; the
     // takedown provably changes the answer at every graded SF)
-    "q211_takedown_band_index" -> ((s, dir) => {
+    // q211: q121's serving oracle over the SURVIVING corpus — the
+    // tombstone (corpus docs < 100) provably changes the answer at every
+    // graded SF (sf0.01: 118 -> 107 served ids)
+    Query("q211_takedown_band_index",
+      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND doc_id >= 100 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") < 250)
-      val tmp = java.nio.file.Files.createTempDirectory("q211").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q211") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         def ingestAvailable(): Unit = {
           val stream = s.readStream.schema(corpus.schema)
@@ -5242,9 +5550,7 @@ object SparkEntry {
           graft.sync.Takedown.withoutTombstones(
             store.read("shingle_sets").get, "id_b", store))
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/arr")
-        val arrStream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/arr/*.parquet")
+        val arrStream = fileStream(s, arrivals, 2, s"$tmp/arr")
         val dups = Dedup.duplicateIdsStream(
           arrStream, index, "doc_id", "text",
           c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
@@ -5256,7 +5562,7 @@ object SparkEntry {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q212: takedown through the ANN SERVING family — vector-database
@@ -5272,12 +5578,13 @@ object SparkEntry {
     // withoutTombstones — graded full-outer against survivors assigned
     // under the SAME fixed quantizer (centroids are serving-run
     // constants; retraining is the separate offline reassign pass, q152)
-    "q212_takedown_ann_serve" -> ((s, dir) => {
+    // q212: gated-serve-vs-survivor-rebuild parity under one fixed
+    // quantizer is a Spark-side full-outer contract (the q124 family)
+    Query("q212_takedown_ann_serve", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val corpus = emb.filter(col("vec_id") >= 25)
-      val tmp = java.nio.file.Files.createTempDirectory("q212").toString
-      try {
+      withTempDir("q212") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val batchIdx = Similarity.ivfIndex(corpus, "vec_id", "embedding",
           numCentroids = 8)
@@ -5311,14 +5618,10 @@ object SparkEntry {
           Similarity.IvfIndex(batchIdx.cents,
             Similarity.indexRows(survivors, "embedding", batchIdx.cents)),
           queries, "vec_id", "embedding", 5, nprobe = 8)
-        val out = want.withColumn("__x", lit(1))
-          .join(gated.withColumn("__y", lit(1)),
-            Seq("query_id", "neighbor_id"), "full_outer")
-          .agg(violations(col("__x").isNull || col("__y").isNull))
-          .localCheckpoint()
+        val out = parity(want, gated, Seq("query_id", "neighbor_id")).localCheckpoint()
         graft.Checkpoints.release(victims)
         out
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q213: continuous TEXT SimHash dedup ingest — the SAME
@@ -5331,14 +5634,13 @@ object SparkEntry {
     // miner) as an exact set, and the persisted fingerprint table must
     // cover every non-empty-shingle doc (a dead stream cannot pass
     // vacuously)
-    "q213_stream_simhash_dedup" -> ((s, dir) => {
+    // q213: streamed-vs-batch SimHash pair parity is a Spark-side
+    // exact-set contract (the q38/q158 family)
+    Query("q213_stream_simhash_dedup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q213").toString
-      try {
+      withTempDir("q213") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         def fp(b: DataFrame): DataFrame = b
           .select(col("doc_id"),
             Dedup.hashedShingles(TextAnalysis.tokenSet(col("text"))).as("__sh"))
@@ -5358,7 +5660,7 @@ object SparkEntry {
           .agg((count(lit(1)).cast(LongType)
             + lit(if (nSigs == nDocs) 0L else 1L)).as("violations"))
           .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q214: online takedown through the WINNOW OVERLAP-INDEX family —
@@ -5374,12 +5676,14 @@ object SparkEntry {
     // erased docs leave no pairing residue. Graded against q148's SAME
     // oracle with the corpus restricted to survivors (the takedown
     // changes the answer at every graded SF: 48 -> 26 pairs at sf0.01)
-    "q214_takedown_overlap_index" -> ((s, dir) => {
+    // q214: q148's serving oracle with the corpus restricted to the
+    // takedown survivors — the df<=100 hot gate recomputes over them
+    Query("q214_takedown_overlap_index",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), corpus AS (SELECT * FROM fpd WHERE doc_id < 250 AND doc_id >= 100), rare AS (SELECT fp FROM corpus GROUP BY fp HAVING count(*) <= 100), ci AS (SELECT c.fp, c.doc_id FROM corpus c JOIN rare USING (fp)), arr AS (SELECT * FROM fpd WHERE doc_id >= 250) SELECT a.doc_id AS id_a, c.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM arr a JOIN ci c ON a.fp = c.fp GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") < 250)
-      val tmp = java.nio.file.Files.createTempDirectory("q214").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q214") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         def ingestAvailable(): Unit = {
@@ -5398,9 +5702,7 @@ object SparkEntry {
           .write.mode("append").parquet(srcDir)
         ingestAvailable()
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/arr")
-        val arrStream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/arr/*.parquet")
+        val arrStream = fileStream(s, arrivals, 2, s"$tmp/arr")
         IncrementalStream.overlapGate(arrStream,
           graft.text.Winnow.gateIndex(
             graft.sync.Takedown.withoutTombstones(
@@ -5411,7 +5713,7 @@ object SparkEntry {
         store.read("pairs").get
           .select(col("id_a"), col("id_b"), col("n_shared"))
           .orderBy("id_a", "id_b").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q215: classifier THRESHOLD SWEEP — the curation knob audit run
@@ -5423,7 +5725,16 @@ object SparkEntry {
     // permille floors end to end, so the sweep replays bit-exactly in
     // the DuckDB training-replay oracle (the q167/q168 CTE chain plus a
     // VALUES ladder)
-    "q215_classifier_sweep" -> ((s, dir) => {
+    // q215: the q167/q168 integer training replay scored under the final
+    // weights, swept over the SAME literal threshold ladder
+    Query("q215_classifier_sweep", svmOracleSql(
+      "SELECT t AS threshold_micros, n_kept, CAST(n_kept * 1000 // total AS BIGINT) AS kept_pm, " +
+        "n_pos, CAST(CASE WHEN n_kept > 0 THEN n_pos * 1000 // n_kept ELSE 0 END AS BIGINT) AS pos_pm " +
+        s"FROM (SELECT t, CAST(count(CASE WHEN m >= t THEN 1 END) AS BIGINT) AS n_kept, " +
+        s"CAST(count(CASE WHEN m >= t AND y = 1 THEN 1 END) AS BIGINT) AS n_pos, " +
+        s"CAST(count(*) AS BIGINT) AS total FROM m${SvmRounds + 1}, " +
+        "(SELECT CAST(unnest([-2000000, -1000000, -500000, 0, 500000, 1000000, 2000000]) AS BIGINT) AS t) " +
+        "GROUP BY t) ORDER BY threshold_micros"), (s, dir) => {
       val (df, model) = svmTrained(s, dir)
       val thresholds = Seq(-2000000L, -1000000L, -500000L, 0L,
         500000L, 1000000L, 2000000L)
@@ -5452,7 +5763,10 @@ object SparkEntry {
     // + a broadcast total — nothing corpus-sized moves after the CC
     // rounds. The inflation figure is what decides whether dedup is
     // worth a pipeline stage at all
-    "q216_dup_cluster_sizes" -> ((s, dir) => {
+    // q216: the q33 recursive-CTE components aggregated to the size
+    // histogram + integer redundancy permille
+    Query("q216_dup_cluster_sizes",
+      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id), sz AS (SELECT canon, CAST(count(*) AS BIGINT) AS cluster_size FROM canon GROUP BY canon), tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents) SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters, CAST(cluster_size * count(*) AS BIGINT) AS n_docs, CAST((cluster_size - 1) * count(*) * 1000 // (SELECT n FROM tot) AS BIGINT) AS redundant_pm FROM sz GROUP BY cluster_size ORDER BY cluster_size""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDupsHashed(docs, "doc_id", "text",
         Dedup.hashedWordNgrams(_, 3), num = 7, den = 10, numHashes = 256, bands = 64)
@@ -5475,7 +5789,10 @@ object SparkEntry {
     // (exact and engine-portable — graded against DuckDB's own
     // quantile_disc, whose ceil(p*n) discrete semantics the operator
     // pins) or a naive one-task global sort
-    "q217_exact_quantiles" -> ((s, dir) =>
+    // q217: DuckDB's own discrete-quantile aggregate, zipped with the
+    // permille labels by parallel unnest
+    Query("q217_exact_quantiles",
+      "WITH a AS (SELECT quantile_disc(n_chars, [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]) AS qs FROM documents) SELECT CAST(unnest([100, 250, 500, 750, 900, 990]) AS BIGINT) AS prob_pm, CAST(unnest(qs) AS BIGINT) AS value FROM a ORDER BY prob_pm", (s, dir) =>
       Sampling.exactQuantiles(t(s, dir, "documents"), "n_chars", "doc_id",
           bucket = expr("n_chars div 8"),
           probsPermille = Seq(100L, 250L, 500L, 750L, 900L, 990L))
@@ -5486,7 +5803,9 @@ object SparkEntry {
     // keyed rank decomposition (sources are low-cardinality: a plain
     // per-source sort window would single-task a 10 TB source), target
     // ranks from one narrow count scan broadcast back
-    "q218_source_quantiles" -> ((s, dir) =>
+    // q218: quantile_disc per source, zipped with permille labels
+    Query("q218_source_quantiles",
+      "WITH a AS (SELECT source, quantile_disc(n_chars, [0.1, 0.5, 0.9]) AS qs FROM documents GROUP BY source) SELECT source, CAST(unnest([100, 500, 900]) AS BIGINT) AS prob_pm, CAST(unnest(qs) AS BIGINT) AS value FROM a ORDER BY source, prob_pm", (s, dir) =>
       Sampling.exactQuantilesByKey(t(s, dir, "documents"), "n_chars", "doc_id",
           keys = Seq("source"), bucket = expr("n_chars div 8"),
           probsPermille = Seq(100L, 500L, 900L))
@@ -5502,7 +5821,10 @@ object SparkEntry {
     // (exactly k picks per query, distinct, pick one = top relevance)
     // and a diversity non-vacuity arm: at least one query must reorder
     // vs pure relevance or lambda graded nothing
-    "q219_mmr_rerank" -> ((s, dir) => {
+    // q219: distributed-vs-independent-driver MMR greedy parity plus
+    // structural/diversity invariants — a Spark-side contract (float
+    // cosines never cross engines; the q152/q124 family)
+    Query("q219_mmr_rerank", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val (k, nShort, lam) = (5, 12, 500)
@@ -5567,31 +5889,24 @@ object SparkEntry {
     // neighbor_id) log must equal batch mmrRerank row-for-row under any
     // arrival split (full-outer violations + count guard, the q124
     // contract)
-    "q220_stream_mmr_serve" -> ((s, dir) => {
+    // q220: streamed-vs-batch MMR serving parity (the q124 family)
+    Query("q220_stream_mmr_serve", InvariantOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val (k, nShort, lam) = (5, 12, 500)
-      val tmp = java.nio.file.Files.createTempDirectory("q220").toString
-      try {
+      withTempDir("q220") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        queries.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(queries.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, queries, 2, s"$tmp/src")
         IncrementalStream.mmrServe(stream, emb, "vec_id", "embedding",
           k, nShort, lambdaPermille = lam, store = store, table = "served",
           checkpointDir = s"$tmp/ck").awaitTermination()
         val want = Similarity.mmrRerank(queries, emb, "vec_id", "embedding",
           k, nShort, lambdaPermille = lam)
         val nWant = want.count()
-        store.read("served").get
-          .select(col("query_id"), col("mmr_rank"), col("neighbor_id"))
-          .withColumn("__y", lit(1))
-          .join(want.withColumn("__x", lit(1)),
-            Seq("query_id", "mmr_rank", "neighbor_id"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nWant, 1L).otherwise(0L)).as("violations"))
+        parity(store.read("served").get.select(col("query_id"), col("mmr_rank"), col("neighbor_id")),
+          want, Seq("query_id", "mmr_rank", "neighbor_id"), rows = Some(nWant))
           .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q221: per-document n-gram NOVELTY RATE against a reference corpus —
@@ -5604,7 +5919,10 @@ object SparkEntry {
     // doc — no quadratic anywhere, no df gate needed. Integer permille
     // floors; full SQL oracle over string grams (64-bit gram hashes are
     // pipeline-internal, the q21-family ~1e-15 collision envelope)
-    "q221_novel_ngram_rate" -> ((s, dir) => {
+    // q221: string 5-grams in the oracle (the Spark side hashes — the
+    // q21-family collision envelope)
+    Query("q221_novel_ngram_rate",
+      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts) - 3), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2]||' '||ts[i+3]||' '||ts[i+4])) AS gs FROM tok WHERE len(ts) >= 5), ref AS (SELECT DISTINCT unnest(gs) AS gr FROM g WHERE doc_id < 250), c AS (SELECT doc_id, unnest(gs) AS gr FROM g WHERE doc_id >= 250) SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_grams, CAST(count(CASE WHEN ref.gr IS NULL THEN 1 END) AS BIGINT) AS n_novel, CAST(count(CASE WHEN ref.gr IS NULL THEN 1 END) * 1000 // count(*) AS BIGINT) AS novelty_pm FROM c LEFT JOIN ref ON c.gr = ref.gr GROUP BY c.doc_id ORDER BY c.doc_id""", (s, dir) => {
       val docs = t(s, dir, "documents")
       val refGrams = docs.filter(col("doc_id") < 250)
         .select(explode(Dedup.hashedWordNgrams(col("text"), 5)).as("__g"))
@@ -5629,7 +5947,13 @@ object SparkEntry {
     // snapshot (one keyed shuffle); closed intervals pass through
     // untouched. Output: the full history, valid_to 0 = still open (the
     // NULL-free hash-compare sentinel; the library keeps NULL)
-    "q222_scd2_history" -> ((s, dir) => {
+    // q222: the DuckDB side reconstructs the SAME history from first
+    // principles — a dense (key x version) calendar, gaps-and-islands on
+    // null-safe value+presence changes, interval bounds from island
+    // extents (valid_to = next island's start; versions are dense so
+    // that is max_ver + 1, and an island reaching the last version is
+    // open = 0). Two INDEPENDENT formulations of SCD2 agreeing row-level
+    Query("q222_scd2_history", Scd2FullHistoryOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -5646,7 +5970,10 @@ object SparkEntry {
     // BACK past the newer version 3, not just the current state). The
     // inverse invariant that grades the whole interval algebra: the
     // oracle is snapshot 2's own definition, no history reconstruction
-    "q223_asof_snapshot" -> ((s, dir) => {
+    // q223: the oracle is snapshot 2's own definition — time travel
+    // through the 3-version history must land exactly on it
+    Query("q223_asof_snapshot",
+      (ScdSnapshotCtes + " SELECT o_orderkey, o_custkey, cents FROM s2 ORDER BY o_orderkey"), (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -5665,7 +5992,11 @@ object SparkEntry {
     // anchor text via "link &amp; more"), and a per-doc varying link
     // count (%3) so the counters are non-constant. Pure chained
     // codegen'd regexp_replace — a map stage fused into the scan
-    "q224_html_extract" -> ((s, dir) => {
+    // q224: the identical planted wrapper and the identical strip chain
+    // in RE2 (inline (?is) + 'g' flag; explicit [ \t\n\r] class — Java's
+    // \s and RE2's \s disagree on 0x0B, so neither side uses \s)
+    Query("q224_html_extract",
+      """WITH h AS (SELECT doc_id, '<html><head><title>T</title><script type="x">var a = 1 < 2; s = "<p>";</script><style>p { color: red; }</style></head><body><!-- c --><h1>Doc</h1><p>' || text || '</p><a href="http://x">link &amp; more</a>' || CASE WHEN doc_id % 3 = 0 THEN '<a href="y">more</a>' ELSE '' END || '<p>A&lt;B &quot;q&quot; &#39;s&#39;&nbsp;end</p></body></html>' AS html FROM documents), c AS (SELECT doc_id, html, regexp_replace(regexp_replace(regexp_replace(regexp_replace(html, '(?s)<!--.*?-->', ' ', 'g'), '(?is)<script[^>]*>.*?</script>', ' ', 'g'), '(?is)<style[^>]*>.*?</style>', ' ', 'g'), '<[^>]*>', ' ', 'g') AS t FROM h), d AS (SELECT doc_id, html, regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(t, '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'), '&#39;', CHR(39), 'g'), '&apos;', CHR(39), 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g') AS t FROM c) SELECT doc_id, trim(regexp_replace(t, '[ \t\n\r]+', ' ', 'g')) AS clean, CAST(len(regexp_extract_all(html, '<[a-zA-Z/][^>]*>')) AS BIGINT) AS n_tags, CAST(len(regexp_extract_all(html, '(?i)<a[ \t\n\r>]')) AS BIGINT) AS n_links, CAST(len(regexp_extract_all(html, '(?i)<script[^>]*>')) AS BIGINT) AS n_scripts FROM d ORDER BY doc_id""", (s, dir) => {
       import graft.text.Html
       val html = concat(
         lit("<html><head><title>T</title><script type=\"x\">var a = 1 < 2; s = \"<p>\";</script>" +
@@ -5694,7 +6025,10 @@ object SparkEntry {
     // join against snapshot v — stated per-fact over the s1/s2/s3 CTEs.
     // One pks-keyed equi-join, interval predicate residual,
     // versions-per-key-bounded fan-in
-    "q225_pit_join" -> ((s, dir) => {
+    // q225: NO history reconstruction in the oracle — PIT at version v
+    // is definitionally a join against snapshot v (intervals partition
+    // each key's timeline), stated per-fact over the shared s1/s2/s3
+    Query("q225_pit_join", PitOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -5720,7 +6054,10 @@ object SparkEntry {
     // hash compare). The oracle does NOT re-run any normalizer — it
     // states the expected canonical string per class outright, so the
     // two sides agree only if every rule fires exactly as specified
-    "q226_url_canonical" -> ((s, dir) => {
+    // q226: the oracle states the EXPECTED canonical per mess class
+    // outright (no normalizer re-run — independent by construction)
+    Query("q226_url_canonical",
+      """SELECT doc_id, CASE doc_id % 8 WHEN 0 THEN 'http://www.example.com/d/' || CAST(doc_id AS VARCHAR) || '?a=1&x=2' WHEN 1 THEN 'https://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 2 THEN 'https://example.com:8443/d/' || CAST(doc_id AS VARCHAR) || '?a=10&b=2' WHEN 3 THEN 'http://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 4 THEN 'http://tracker.example.com/' WHEN 5 THEN 'http://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 6 THEN 'http://e.com/D/' || CAST(doc_id AS VARCHAR) ELSE '__invalid__' END AS url_norm FROM documents ORDER BY doc_id""", (s, dir) => {
       import graft.functions.UrlNormalize
       val id = col("doc_id").cast(StringType)
       val m = col("doc_id") % 8
@@ -5749,14 +6086,14 @@ object SparkEntry {
     // q197 contract with a composite key + rank report). The exact
     // twin of q62's CMS sketch: exact counts when the key space is
     // bounded, the sketch when it is not
-    "q227_stream_topk_view" -> ((s, dir) => {
+    // q227: the batch top-k SQL — the maintained state must reproduce
+    // it exactly under any micro-batch split
+    Query("q227_stream_topk_view",
+      """WITH tok AS (SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents), c AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1, 2), r AS (SELECT source, token, n, row_number() OVER (PARTITION BY source ORDER BY n DESC, token) AS rk FROM c) SELECT source, CAST(rk AS BIGINT) AS rank, token, n FROM r WHERE rk <= 3 ORDER BY source, rank""", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q227").toString
-      try {
+      withTempDir("q227") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
           .select(col("source"),
             explode(TextAnalysis.tokens(col("text"))).as("token"))
         IncrementalStream.maintainCountsKeys(stream, Seq("source", "token"),
@@ -5767,7 +6104,7 @@ object SparkEntry {
             Seq("source"), Seq("token"), k = 3)
           .select(col("source"), col("rank"), col("token"), col("n"))
           .orderBy("source", "rank").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q228: SCENE-CHANGE detection over the shared q160 planted MJPEG
@@ -5778,7 +6115,10 @@ object SparkEntry {
     // noise margin (the q160 ±2 gray tolerance), so the CUT DECISION is
     // integer-exact cross-engine even though decoded means are lossy.
     // Oracle: the planted formula replayed arithmetically — no decode
-    "q228_scene_cuts" -> ((s, dir) => {
+    // q228: the planted gray walk replayed arithmetically — cut iff the
+    // inter-frame gray delta exceeds 100 (planted deltas: 37 or 187)
+    Query("q228_scene_cuts",
+      """WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS fi FROM documents), g AS (SELECT doc_id, fi, 16 + (doc_id + 37 * fi) % 224 AS gray FROM f), c AS (SELECT doc_id, fi, abs(gray - lag(gray) OVER (PARTITION BY doc_id ORDER BY fi)) AS dg FROM g) SELECT doc_id, CAST(1 + doc_id % 3 AS BIGINT) AS n_frames, CAST(count(CASE WHEN dg > 100 THEN 1 END) AS BIGINT) AS n_cuts, CAST(coalesce(min(CASE WHEN dg > 100 THEN fi END), -1) AS BIGINT) AS first_cut FROM c GROUP BY doc_id ORDER BY doc_id""", (s, dir) => {
       implicit val session: SparkSession = s
       val frames = Multimodal.decodeFramesOf(mjpegCorpus(s, dir)).toDF()
       val cuts = Multimodal.sceneCuts(frames, thresholdMilli = 100000L)
@@ -5803,7 +6143,9 @@ object SparkEntry {
     // the end — no island machinery needed because deltas only exist
     // where the value changed. Reappearance keys (absent from s2) fire
     // as ver-3 deltas against their STILL-OPEN v1 interval: [1,3)+[3,-)
-    "q229_scd2_upserts" -> ((s, dir) => {
+    // q229: the upsert-SCD2 law stated directly — the history IS the
+    // delta log, each interval running to the key's next delta
+    Query("q229_scd2_upserts", Scd2UpsertOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       def delta(cur: DataFrame, prev: DataFrame): DataFrame = {
@@ -5831,7 +6173,9 @@ object SparkEntry {
     // hex-byte buckets — NO global sort, no tier funneling through one
     // task however skewed the tiers. Oracle: the naive serial
     // row_number over (priority, md5, id)
-    "q230_curriculum_order" -> ((s, dir) => {
+    // q230: the naive serial form of the curriculum order
+    Query("q230_curriculum_order",
+      "WITH p AS (SELECT doc_id, CASE WHEN n_chars >= 500 THEN 0 WHEN n_chars >= 200 THEN 1 ELSE 2 END AS priority FROM documents), r AS (SELECT doc_id, priority, row_number() OVER (ORDER BY priority, md5('graft:'||CAST(doc_id AS VARCHAR)), doc_id) - 1 AS g FROM p) SELECT doc_id, CAST(priority AS BIGINT) AS priority, CAST(g AS BIGINT) AS global_rank, CAST(g // 32 AS BIGINT) AS shard, CAST(g % 32 AS BIGINT) AS pos FROM r ORDER BY doc_id", (s, dir) => {
       val tiers = t(s, dir, "documents").select(col("doc_id"),
         when(col("n_chars") >= 500, 0).when(col("n_chars") >= 200, 1)
           .otherwise(2).as("priority"))
@@ -5845,7 +6189,9 @@ object SparkEntry {
     // every luminance cut, numbered 0-based. The content-aware upgrade
     // of q35's uniform frame sampler; same integer-exact cut decision
     // as q228, oracle replays the planted gray walk
-    "q231_keyframes" -> ((s, dir) => {
+    // q231: first frame + cuts from the planted gray walk, renumbered
+    Query("q231_keyframes",
+      """WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS fi FROM documents), g AS (SELECT doc_id, fi, 16 + (doc_id + 37 * fi) % 224 AS gray FROM f), c AS (SELECT doc_id, fi, lag(gray) OVER (PARTITION BY doc_id ORDER BY fi) AS pg, gray FROM g), k AS (SELECT doc_id, fi FROM c WHERE pg IS NULL OR abs(gray - pg) > 100) SELECT doc_id, CAST(fi AS BIGINT) AS frame_idx, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY fi) - 1 AS BIGINT) AS scene_idx FROM k ORDER BY doc_id, frame_idx""", (s, dir) => {
       implicit val session: SparkSession = s
       Multimodal.keyframes(Multimodal.decodeFramesOf(mjpegCorpus(s, dir)).toDF(),
           thresholdMilli = 100000L)
@@ -5859,7 +6205,10 @@ object SparkEntry {
     // short docs collapsing further when the 40-char prefix equals the
     // whole text). A pure per-row array pass — no shuffle, no per-doc
     // window; the prefix probe is lines-per-doc-bounded JVM work
-    "q232_line_dedup_within" -> ((s, dir) => {
+    // q232: first-occurrence-per-line via min-position windows over the
+    // exploded lines — an INDEPENDENT formulation of the same keep rule
+    Query("q232_line_dedup_within",
+      """WITH h AS (SELECT doc_id, text || chr(10) || substr(text, 1, 40) || chr(10) || text || chr(10) || substr(text, 1, 40) AS t2 FROM documents), s AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM h), l AS (SELECT doc_id, ls[i] AS line, i AS pos FROM s, LATERAL unnest(range(1, len(ls) + 1)) AS u(i)), r AS (SELECT doc_id, line, pos, row_number() OVER (PARTITION BY doc_id, line ORDER BY pos) AS rn FROM l), k AS (SELECT doc_id, array_to_string(list(line ORDER BY pos), chr(10)) AS clean, count(*) AS n_kept FROM r WHERE rn = 1 GROUP BY doc_id), n AS (SELECT doc_id, count(*) AS n_lines FROM l GROUP BY doc_id) SELECT k.doc_id, k.clean, CAST(n.n_lines AS BIGINT) AS n_lines, CAST(n.n_lines - k.n_kept AS BIGINT) AS n_removed FROM k JOIN n ON k.doc_id = n.doc_id ORDER BY k.doc_id""", (s, dir) => {
       val nl = lit("\n")
       val planted = t(s, dir, "documents")
         .select(col("doc_id"), concat(col("text"), nl,
@@ -5876,7 +6225,9 @@ object SparkEntry {
     // The audit composition a history exists to serve; the oracle diffs
     // the two snapshot CTEs directly, so the composed asOf->diff path
     // must reproduce the ground-truth delta exactly
-    "q233_version_diff" -> ((s, dir) => {
+    // q233: the ground-truth s1-vs-s3 diff, stated without any history
+    Query("q233_version_diff",
+      (ScdSnapshotCtes + " SELECT o_orderkey, change_type FROM (SELECT COALESCE(b.o_orderkey, a.o_orderkey) AS o_orderkey, CASE WHEN b.o_orderkey IS NULL THEN 'added' WHEN a.o_orderkey IS NULL THEN 'removed' WHEN b.o_custkey IS DISTINCT FROM a.o_custkey OR b.cents IS DISTINCT FROM a.cents THEN 'changed' END AS change_type FROM s1 b FULL OUTER JOIN s3 a ON b.o_orderkey = a.o_orderkey) WHERE change_type IS NOT NULL ORDER BY o_orderkey"), (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -5896,7 +6247,10 @@ object SparkEntry {
     // accumulated seen-set must equal the batch ground truth: the
     // minimum doc_id per canonical URL, stated by the oracle with the
     // expected canonical string outright (the q226 convention)
-    "q234_url_frontier" -> ((s, dir) => {
+    // q234: ground truth for the frontier — min doc_id per canonical
+    // URL, with the canonical stated outright (the q226 convention)
+    Query("q234_url_frontier",
+      "SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, 'http://example.com/g/' || CAST(doc_id % 100 AS VARCHAR) || '?a=1&b=2' AS url_norm FROM documents GROUP BY doc_id % 100 ORDER BY doc_id", (s, dir) => {
       val docs = tw(s, dir, "documents")
       // mod groups STRADDLE the two ingest rounds (x, x+100, x+200 land
       // in round 1; x+300, x+400 in round 2), so round 2's members must
@@ -5910,8 +6264,7 @@ object SparkEntry {
           .when(m === 2, concat(lit("http://EXAMPLE.com:80/g/"), g, lit("?b=2&a=1")))
           .otherwise(concat(lit("http://example.com/g/"), g, lit("?a=1&b=2#z")))
       val arrivals = docs.select(col("doc_id"), url.as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q234").toString
-      try {
+      withTempDir("q234") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         Seq(col("doc_id") < 250, col("doc_id") >= 250).zipWithIndex.foreach {
           case (cond, i) =>
@@ -5928,7 +6281,7 @@ object SparkEntry {
         }
         store.read("seen").get.select(col("doc_id"), col("url_norm"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q235: SCHEMA drift report — the sync tool's canonical failure
@@ -5940,7 +6293,9 @@ object SparkEntry {
     // must surface instead of hiding behind an equal type string).
     // Pure metadata work (driver-side schema compare, no data scan at
     // any size); the oracle states the expected report rows outright
-    "q235_schema_drift" -> ((s, dir) => {
+    // q235: the expected report stated outright
+    Query("q235_schema_drift",
+      "SELECT * FROM (VALUES ('doc_id', 'renullabled', 'bigint', 'bigint not null'), ('fetched_at', 'added', '-', 'bigint'), ('lang', 'removed', 'string', '-'), ('n_chars', 'retyped', 'bigint', 'int')) AS t(column_name, change, type_before, type_after) ORDER BY column_name", (s, dir) => {
       val before = t(s, dir, "documents")
       val after = before.drop("lang")
         .withColumn("n_chars", col("n_chars").cast(IntegerType))
@@ -5953,7 +6308,9 @@ object SparkEntry {
     // release: quasi-identifier combos (nation, segment) shared by
     // fewer than k=10 customers re-identify; one partial-aggregated
     // keyed count, delta-sized output (violating combos only)
-    "q236_k_anonymity" -> ((s, dir) =>
+    // q236: violating quasi-identifier combos stated by the same SQL
+    Query("q236_k_anonymity",
+      "SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n FROM customer GROUP BY 1, 2 HAVING count(*) < 10 ORDER BY c_nationkey, c_mktsegment", (s, dir) =>
       Expectations.kAnonymity(t(s, dir, "customer"),
           Seq("c_nationkey", "c_mktsegment"), k = 10L)
         .orderBy("c_nationkey", "c_mktsegment")),
@@ -5965,7 +6322,9 @@ object SparkEntry {
     // batch-split invariance holds by construction — this grades that
     // the operator composes with streaming frames at all, the q92
     // enrichment contract upgraded to temporal correctness)
-    "q237_stream_pit_enrich" -> ((s, dir) => {
+    // q237: the STREAMED pit enrichment grades against the same batch
+    // PIT oracle (batch-split invariance of a per-row stream-static join)
+    Query("q237_stream_pit_enrich", PitOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -5975,11 +6334,8 @@ object SparkEntry {
       val facts = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
           (col("l_linenumber") % 3 + 1).cast(LongType).as("ver"))
-      val tmp = java.nio.file.Files.createTempDirectory("q237").toString
-      try {
-        facts.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(facts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      withTempDir("q237") { tmp =>
+        val stream = fileStream(s, facts, 2, s"$tmp/src")
         val enriched = History.pitJoin(stream, h, Seq("o_orderkey"), "ver")
           .select(col("o_orderkey"), col("l_linenumber"), col("ver"),
             coalesce(col("o_custkey").cast(LongType), lit(-1L)).as("custkey_at"),
@@ -5996,7 +6352,7 @@ object SparkEntry {
           .awaitTermination()
         s.read.parquet(s"$tmp/served")
           .orderBy("o_orderkey", "l_linenumber").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q238: SENTENCE segmentation — the unit below the document, planted
@@ -6005,7 +6361,9 @@ object SparkEntry {
     // terminator runs, trimmed, whitespace-only segments dropped with
     // their index skipped. One narrow posexplode; the oracle replays the
     // identical RE2-safe pattern (no lookbehind on either engine)
-    "q238_sentences" -> ((s, dir) => {
+    // q238: identical planted concat, identical pattern in RE2
+    Query("q238_sentences",
+      """WITH h AS (SELECT doc_id, substr(text, 1, 50) || '. ' || substr(text, 51, 40) || '? ' || substr(text, 91, 30) || '! tail' AS t2 FROM documents), s AS (SELECT doc_id, regexp_extract_all(t2, '[^.!?]+[.!?]*') AS ss FROM h), e AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS sent_idx, trim(ss[i]) AS sentence FROM s, LATERAL unnest(range(1, len(ss) + 1)) AS u(i)) SELECT doc_id, sent_idx, sentence, CAST(len(sentence) AS BIGINT) AS n_chars FROM e WHERE sentence <> '' ORDER BY doc_id, sent_idx""", (s, dir) => {
       val planted = t(s, dir, "documents").select(col("doc_id"),
         concat(substring(col("text"), 1, 50), lit(". "),
           substring(col("text"), 51, 40), lit("? "),
@@ -6028,7 +6386,11 @@ object SparkEntry {
     // (the q226 convention), replaying only the whitespace collapse on
     // the planted fragments — block/density decisions are NOT re-run,
     // so the two sides agree only if every rule fires as specified
-    "q239_main_content" -> ((s, dir) =>
+    // q239: the expected kept blocks stated outright — only the
+    // whitespace collapse is replayed (on the planted body fragments);
+    // the block segmentation and the length/link-density decisions are
+    // independent by construction
+    Query("q239_main_content", mainContentOracleSqlOver(""), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id"),
           graft.text.Html.mainContentReport(mainContentPlantedHtml,
@@ -6046,7 +6408,10 @@ object SparkEntry {
     // interval boundaries exactly as if applied separately), batch 1
     // applies version 3 against the PERSISTED table. The maintained
     // history must equal the batch-applied one under q229's oracle
-    "q240_stream_scd2" -> ((s, dir) => {
+    // q240: the STREAMED history maintenance grades against the same
+    // upsert-SCD2 law (exactly-once skip-or-merge + in-order folds make
+    // the maintained table equal the batch-applied history)
+    Query("q240_stream_scd2", Scd2UpsertOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       def delta(cur: DataFrame, prev: DataFrame): DataFrame = {
         val p = prev.select(col("o_orderkey"), col("o_custkey").as("__pc"),
@@ -6059,8 +6424,7 @@ object SparkEntry {
       val log1 = s1.withColumn("ver", lit(1L))
         .unionByName(delta(s2, s1).withColumn("ver", lit(2L)))
       val log2 = delta(s3, s2).withColumn("ver", lit(3L))
-      val tmp = java.nio.file.Files.createTempDirectory("q240").toString
-      try {
+      withTempDir("q240") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         // one file per round -> one micro-batch per round; the SAME
         // checkpoint across rounds keeps the lineage (the maintained-view
@@ -6078,7 +6442,7 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
           .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q241: VIDEO near-dup — the FIFTH dedup modality (text/image/
@@ -6091,15 +6455,15 @@ object SparkEntry {
     // bits apart and must not. Exact-set equality: a constant/broken
     // signature floods false pairs, a noisy one loses renditions —
     // both count as violations
-    "q241_video_neardup" -> ((s, dir) => {
+    // q241/q242: planted-construction video pairs (the q115/q206/q209
+    // family) — expectations derive from the id arithmetic Spark-side
+    Query("q241_video_neardup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"))
         .filter(col("doc_id") < 126)
       val media = plantedVideoMedia(s, docs)
       val pairs = Dedup.videoNearDups(media, thresholdMilli = 15000L, maxHamming = 3)
-      plantedVideoPairExpectation(docs).withColumn("__e", lit(1))
-        .join(pairs.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-        .agg(violations(col("__e").isNull || col("__f").isNull))
+      parity(plantedVideoPairExpectation(docs), pairs, Seq("id_a", "id_b"))
     }),
 
     // q242: CONTINUOUS video-dedup ingest — q209/q210's probe-then-
@@ -6111,17 +6475,14 @@ object SparkEntry {
     // persisted index must equal the batch fingerprints (the parity
     // arm catches a gate that leaks degenerate signatures just as hard
     // as a missed pair)
-    "q242_stream_video_dedup" -> ((s, dir) => {
+    Query("q242_stream_video_dedup", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"))
         .filter(col("doc_id") < 126)
       val media = plantedVideoMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q242").toString
-      try {
+      withTempDir("q242") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, media, 2, s"$tmp/src")
         def fp(b: DataFrame): DataFrame = Multimodal.videoSignature(
             Multimodal.decodeFramesOf(b)(s).toDF(), thresholdMilli = 15000L)
           .filter(col("vsig") =!= 0L && col("vsig") =!= -1L)
@@ -6131,22 +6492,15 @@ object SparkEntry {
         val got = store.read("dup_pairs").get
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-        val pairV = plantedVideoPairExpectation(docs).withColumn("__e", lit(1))
-          .join(got.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-          .agg(violations(col("__e").isNull || col("__f").isNull))
-          .head.getLong(0)
+        val pairV = parity(plantedVideoPairExpectation(docs), got, Seq("id_a", "id_b")).head.getLong(0)
         // the parity arm reads the WRITTEN stream source (identical rows)
         // instead of re-encoding every planted AVI a second time
         val sigWant = fp(s.read.parquet(s"$tmp/src"))
         val nSig = sigWant.count()
-        val idxV = store.read("fingerprints").get.select(col("doc_id"), col("vsig"))
-          .withColumn("__x", lit(1))
-          .join(sigWant.withColumn("__y", lit(1)), Seq("doc_id", "vsig"), "full_outer")
-          .agg((violations(col("__x").isNull || col("__y").isNull)
-            + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
-          .head.getLong(0)
+        val idxV = parity(store.read("fingerprints").get.select(col("doc_id"), col("vsig")),
+          sigWant, Seq("doc_id", "vsig"), rows = Some(nSig)).head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q243: PER-HOST frontier budgeting — q234's exact-dedup gate with
@@ -6158,15 +6512,18 @@ object SparkEntry {
     // and in-batch ranking keeps the lowest ids, so the surviving hot
     // set is exactly the 10 lowest hot ids — stated outright by the
     // oracle with the canonical strings and hosts (the q226 convention)
-    "q243_host_frontier_budget" -> ((s, dir) => {
+    // q243: ground truth for the budgeted frontier — every sparse-host
+    // row plus exactly the 10 lowest hot-host ids, canonical strings
+    // and hosts stated outright (the q226/q234 convention)
+    Query("q243_host_frontier_budget",
+      "WITH hot AS (SELECT doc_id FROM documents WHERE doc_id % 5 < 2 ORDER BY doc_id LIMIT 10) SELECT doc_id, CASE WHEN doc_id % 5 < 2 THEN 'http://hot.example.com/p/' || CAST(doc_id AS VARCHAR) ELSE 'http://s' || CAST(doc_id AS VARCHAR) || '.example.com/' END AS url_norm, CASE WHEN doc_id % 5 < 2 THEN 'hot.example.com' ELSE 's' || CAST(doc_id AS VARCHAR) || '.example.com' END AS host FROM documents WHERE doc_id % 5 >= 2 OR doc_id IN (SELECT doc_id FROM hot) ORDER BY doc_id", (s, dir) => {
       val docs = t(s, dir, "documents")
       val id = col("doc_id").cast(StringType)
       val url = when(col("doc_id") % 5 < 2,
           concat(lit("http://hot.example.com/p/"), id))
         .otherwise(concat(lit("http://s"), id, lit(".example.com/")))
       val arrivals = docs.select(col("doc_id"), url.as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q243").toString
-      try {
+      withTempDir("q243") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         Seq(col("doc_id") < 250, col("doc_id") >= 250).zipWithIndex.foreach {
           case (cond, i) =>
@@ -6183,7 +6540,7 @@ object SparkEntry {
         }
         store.read("seen").get.select(col("doc_id"), col("url_norm"), col("host"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q244: COMPACTION UNDER SERVING — the tombstone lifecycle's last
@@ -6201,11 +6558,14 @@ object SparkEntry {
     // rows, not files, so it survives the rewrite. Final serve over the
     // compacted index + later appends must equal the from-scratch build
     // over exactly the surviving documents — q194's oracle
-    "q244_compaction_under_serving" -> ((s, dir) => {
+    // q244: the same surviving-corpus replay — arrivals are (doc_id % 3
+    // in {0,1}) ∪ (doc_id % 3 = 2 AND < 400), the compaction purges
+    // >= 400, so the served set is exactly doc_id < 400 (q194's oracle);
+    // the serve-unchanged-across-compaction claim is the in-lambda pin
+    Query("q244_compaction_under_serving", lineDedupOracleSqlOver(" WHERE doc_id < 400"), (s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q244").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q244") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         def ingestAvailable(): Unit = {
           val stream = s.readStream.schema(docs.schema)
@@ -6246,7 +6606,7 @@ object SparkEntry {
           .write.mode("append").parquet(srcDir)
         ingestAvailable()
         serve().orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q245: streamed CDC history maintenance — q240's upsert-only feed
@@ -6258,7 +6618,10 @@ object SparkEntry {
     // island oracle, the strongest cross-formulation the family has.
     // Batch 0 carries versions 1+2 (inserts, changes, AND deletes in
     // one trigger); batch 1 applies version 3 on the persisted table
-    "q245_stream_scd2_cdc" -> ((s, dir) => {
+    // q245: the streamed CDC ingest (upserts + explicit deletes) grades
+    // against the SAME full-snapshot history law — CDC events replicate
+    // scd2Apply's close-on-absence exactly when deletes are explicit
+    Query("q245_stream_scd2_cdc", Scd2FullHistoryOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       def ups(cur: DataFrame, prev: DataFrame): DataFrame = {
         val p = prev.select(col("o_orderkey"), col("o_custkey").as("__pc"),
@@ -6281,8 +6644,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q245").toString
-      try {
+      withTempDir("q245") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/src")
@@ -6298,7 +6660,7 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
           .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q246: the extraction gate DEPLOYED — raw HTML pages stream across
@@ -6310,23 +6672,22 @@ object SparkEntry {
     // batch, so the log equals the batch extraction restricted to the
     // keepers under the SAME planted-page oracle (the q173 contract for
     // the extraction stage)
-    "q246_stream_main_content" -> ((s, dir) => {
+    // q246: the gate keeps exactly the minKept=3 pages — the %4 docs
+    // carrying the extra link-free paragraph — under the same planted
+    // CTE; everything else must be absent from the accumulated log
+    Query("q246_stream_main_content", mainContentOracleSqlOver(" WHERE doc_id % 4 = 0"), (s, dir) => {
       val pages = t(s, dir, "documents")
         .select(col("doc_id"), mainContentPlantedHtml.as("page"))
-      val tmp = java.nio.file.Files.createTempDirectory("q246").toString
-      try {
+      withTempDir("q246") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        pages.repartition(2).write.parquet(s"$tmp/src")
-        IncrementalStream.mainContentGate(
-          s.readStream.schema(pages.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet"),
+        IncrementalStream.mainContentGate(fileStream(s, pages, 2, s"$tmp/src"),
           "doc_id", "page", store, "extracted", checkpointDir = s"$tmp/ck",
           minChars = 15, maxLinkPermille = 300, minKept = 3)
           .awaitTermination()
         store.read("extracted").get
           .select(col("doc_id"), col("main"), col("n_blocks"), col("n_kept"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q247: ONLINE takedown through the PACKED-FINGERPRINT family — the
@@ -6342,11 +6703,13 @@ object SparkEntry {
     // about both documents) plus the sig table: served pairs must
     // equal the batch miner over exactly the surviving corpus, and no
     // tombstoned fingerprint may serve
-    "q247_takedown_media_index" -> ((s, dir) => {
+    // q247: planted-construction erasure over the fingerprint family —
+    // expectations derive from the id arithmetic Spark-side (q211's
+    // contract in the q209 violations form)
+    Query("q247_takedown_media_index", InvariantOracleSql, (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
-      val tmp = java.nio.file.Files.createTempDirectory("q247").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      withTempDir("q247") { tmp =>
+        val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         def fp(b: DataFrame): DataFrame = Multimodal.dhashImages(b)(s).toDF()
           .filter(col("phash") =!= 0L && col("phash") =!= -1L)
@@ -6379,17 +6742,14 @@ object SparkEntry {
             Seq("id_a", "id_b"), store)
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-        val pairV = plantedPairExpectation(docs.filter(col("doc_id") <= 400))
-          .withColumn("__e", lit(1))
-          .join(served.withColumn("__f", lit(1)), Seq("id_a", "id_b"), "full_outer")
-          .agg(violations(col("__e").isNull || col("__f").isNull))
-          .head.getLong(0)
+        val pairV = parity(plantedPairExpectation(docs.filter(col("doc_id") <= 400)),
+          served, Seq("id_a", "id_b")).head.getLong(0)
         // the gated sig table must serve NO tombstoned fingerprint
         val sigV = graft.sync.Takedown.withoutTombstones(
             store.read("fingerprints").get.select(col("doc_id")), "doc_id", store)
           .filter(col("doc_id") >= 401).count()
         s.range(1).select(lit(pairV + sigV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q248: HISTORY retention pruning — the governance pass a long-lived
@@ -6400,7 +6760,11 @@ object SparkEntry {
     // — pinned in-lambda for asOf(2) and asOf(3)); reads below the
     // horizon become incomplete BY DESIGN. Oracle: the q222 island law
     // with closed-before-horizon islands filtered out
-    "q248_history_retention" -> ((s, dir) => {
+    // q248: the island law with closed-before-horizon islands dropped —
+    // valid_to = 0 (open) or > 2 means max_ver >= 2 in island terms; a
+    // drifted base string would no-op the replace and fail the gate
+    Query("q248_history_retention", Scd2FullHistoryOracleSql.replace(
+      "WHERE present = 1 ORDER BY", "WHERE present = 1 AND max_ver >= 2 ORDER BY"), (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       import graft.sync.History
       val h = History.scd2Apply(
@@ -6432,7 +6796,11 @@ object SparkEntry {
     // fact, a join against snapshot ver), so a drifted interval
     // ANYWHERE in the maintenance chain surfaces as an enrichment
     // mismatch, including gap facts (keys deleted at v2 resolve NULL)
-    "q249_stream_pit_maintained" -> ((s, dir) => {
+    // q249: the q245-maintained CDC history serving q237's enrichment —
+    // the SAME batch PIT law grades the whole maintenance-then-serve
+    // composition (explicit deletes replicate full-snapshot semantics,
+    // so the maintained intervals must land exactly where scd2Apply's do)
+    Query("q249_stream_pit_maintained", PitOracleSql, (s, dir) => {
       val (s1, s2, s3) = scdSnapshots(s, dir)
       def ups(cur: DataFrame, prev: DataFrame): DataFrame = {
         val p = prev.select(col("o_orderkey"), col("o_custkey").as("__pc"),
@@ -6455,8 +6823,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q249").toString
-      try {
+      withTempDir("q249") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/dsrc")
@@ -6475,9 +6842,7 @@ object SparkEntry {
         val facts = t(s, dir, "lineitem")
           .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
             (col("l_linenumber") % 3 + 1).cast(LongType).as("ver"))
-        facts.repartition(2).write.parquet(s"$tmp/fsrc")
-        val stream = s.readStream.schema(facts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/fsrc/*.parquet")
+        val stream = fileStream(s, facts, 2, s"$tmp/fsrc")
         val enriched = graft.sync.History.pitJoin(stream, h, Seq("o_orderkey"), "ver")
           .select(col("o_orderkey"), col("l_linenumber"), col("ver"),
             coalesce(col("o_custkey").cast(LongType), lit(-1L)).as("custkey_at"),
@@ -6493,7 +6858,7 @@ object SparkEntry {
           .awaitTermination()
         s.read.parquet(s"$tmp/served")
           .orderBy("o_orderkey", "l_linenumber").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q250: crawl-to-corpus curation END-TO-END — the verdict-mandated
@@ -6507,7 +6872,15 @@ object SparkEntry {
     // replays the arithmetic over the shared planted CTE — a drift in
     // ANY stage (block rules, entity decode, collapse, tokenization,
     // threshold) lands in the source totals
-    "q250_web_curation" -> ((s, dir) => {
+    // q250: the per-source curation report replayed over the shared
+    // planted CTE — token counts on the EXTRACTED text, q17's pattern
+    Query("q250_web_curation",
+      (mainContentPlantedCte("") +
+        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
+        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
+        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
+        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
+        "FROM tk GROUP BY source ORDER BY source"), (s, dir) => {
       val extracted = tw(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           graft.text.Html.mainContent(mainContentPlantedHtml,
@@ -6534,7 +6907,20 @@ object SparkEntry {
     // malformed and lying records consume no rec_index, and the %5/%3
     // moduli shift every record's offset per file. The oracle states
     // rec_index/url/payload arithmetic outright from doc_id
-    "q251_warc_records" -> ((s, dir) => {
+    // q251: the well-formed response records stated outright from
+    // doc_id — rec_index arithmetic encodes which hazard records
+    // consume no index (warcinfo always at 0; the %7 malformed and the
+    // %11 lying-length records never count; the %5 request shifts
+    // responses by one); payload text replays the same substr slices
+    Query("q251_warc_records",
+      ("WITH e AS (SELECT doc_id, text, CAST(u.i AS BIGINT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 1)) AS u(i)) " +
+        "SELECT doc_id, " +
+        "CAST(1 + CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END + i AS BIGINT) AS rec_index, " +
+        "'http://ex.org/' || CAST(doc_id AS VARCHAR) || '/r' || CAST(i AS VARCHAR) AS url, " +
+        "'P ' || CAST(doc_id AS VARCHAR) || ' ' || CAST(i AS VARCHAR) || ' ' || " +
+        "substr(text, CAST(1 + i * 40 AS INT), 40) AS text " +
+        "FROM e ORDER BY doc_id, rec_index"), (s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
       val payloads = tw(s, dir, "documents").select(
@@ -6596,7 +6982,15 @@ object SparkEntry {
     // came OUT of the container. Graded by the exact q250 oracle — any
     // byte lost or gained in the WARC+HTTP round trip lands in the token
     // mass of some source
-    "q252_warc_curation" -> ((s, dir) => {
+    // q252: the q250 per-source curation report — the WARC round trip
+    // must be byte-transparent, so the EXACT q250 oracle grades it
+    Query("q252_warc_curation",
+      (mainContentPlantedCte("") +
+        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
+        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
+        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
+        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
+        "FROM tk GROUP BY source ORDER BY source"), (s, dir) => {
       implicit val sp: SparkSession = s
       val docs = tw(s, dir, "documents")
       val files = warcCurationFiles(s, dir)
@@ -6629,7 +7023,10 @@ object SparkEntry {
     // sign bug or abs() would catch them). The benchmark side
     // broadcasts; the corpus scans once and never shuffles. Oracle:
     // brute-force cosine membership in DuckDB
-    "q253_embed_decontaminate" -> ((s, dir) => {
+    // q253/q254: brute-force cosine membership of the constructed corpus
+    // against the benchmark set (the q128 float-margin precedent: planted
+    // twins at cosine 1, negations at -1, organic pairs far from 0.95)
+    Query("q253_embed_decontaminate", EmbedDecontaminateOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val benchmark = emb.filter(col("vec_id") < 100)
       val corpus = emb.filter(col("vec_id") >= 100)
@@ -6650,7 +7047,7 @@ object SparkEntry {
     // at arrival, flags accumulating exactly-once under the lineage-
     // stamped guard; graded by the SAME brute-force oracle (the flag log
     // is batch-partitioning-invariant by construction)
-    "q254_stream_embed_decon_gate" -> ((s, dir) => {
+    Query("q254_stream_embed_decon_gate", EmbedDecontaminateOracleSql, (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val benchmark = emb.filter(col("vec_id") < 100)
       val corpus = emb.filter(col("vec_id") >= 100)
@@ -6661,19 +7058,16 @@ object SparkEntry {
         .unionByName(emb.filter(col("vec_id") >= 50 && col("vec_id") < 75)
           .select((col("vec_id") + 2000000L).as("vec_id"),
             transform(col("embedding"), x => -x).as("embedding")))
-      val tmp = java.nio.file.Files.createTempDirectory("q254").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        corpus.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      withTempDir("q254") { tmp =>
+        val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
+        val stream = fileStream(s, corpus, 2, srcDir)
         val store = new graft.sync.ParquetStore(s, outDir)
         IncrementalStream.embedContaminationGate(stream, benchmark,
           "vec_id", "embedding", threshold = 0.95, store, "flags",
           checkpointDir = ckDir).awaitTermination()
         store.read("flags").get.select(col("vec_id"))
           .orderBy("vec_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q255: embedding-cluster-balanced curation — the SemDeDup-adjacent
@@ -6688,7 +7082,16 @@ object SparkEntry {
     // pass through whole. The assignment is numCentroids scalar
     // expressions per row — no shuffle; the cap is capPerKey's one
     // keyed window
-    "q255_cluster_balance" -> ((s, dir) => {
+    Query("q255_cluster_balance",
+      ("WITH org AS (SELECT vec_id, CASE " +
+        "WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3] AND embedding[1] >= embedding[4] THEN 0 " +
+        "WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1 " +
+        "WHEN embedding[3] >= embedding[4] THEN 2 ELSE 3 END AS cluster FROM embeddings), " +
+        "fl AS (SELECT vec_id + 1000000 AS vec_id, 0 AS cluster FROM embeddings), " +
+        "u AS (SELECT * FROM org UNION ALL SELECT * FROM fl), " +
+        "r AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY cluster ORDER BY vec_id) AS rn FROM u) " +
+        "SELECT vec_id, CAST(cluster AS INT) AS cluster FROM r WHERE rn <= 600 " +
+        "ORDER BY cluster, vec_id"), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val cents = (0 until 4).map(d =>
         (d, Array.tabulate(64)(i => if (i == d) 1.0f else 0.0f))).toArray
@@ -6711,7 +7114,19 @@ object SparkEntry {
     // 1.0; sparse clusters upweight). Bit-exact cross-engine: integer
     // counts through correctly-rounded divide + sqrt (the q137
     // determinism contract), assignment replayed as the one-hot argmax
-    "q257_cluster_temperature" -> ((s, dir) => {
+    // q257: the same replayed assignment feeding q137's bit-exact
+    // count/divide/sqrt pipeline, per cluster
+    Query("q257_cluster_temperature",
+      ("WITH org AS (SELECT vec_id, CASE " +
+        "WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3] AND embedding[1] >= embedding[4] THEN 0 " +
+        "WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1 " +
+        "WHEN embedding[3] >= embedding[4] THEN 2 ELSE 3 END AS cluster FROM embeddings), " +
+        "fl AS (SELECT vec_id + 1000000 AS vec_id, 0 AS cluster FROM embeddings), " +
+        "u AS (SELECT * FROM org UNION ALL SELECT * FROM fl), " +
+        "c AS (SELECT cluster, count(*) AS n FROM u GROUP BY cluster) " +
+        "SELECT CAST(cluster AS INT) AS cluster, CAST(n AS BIGINT) AS n_docs, " +
+        "sqrt(CAST(n AS DOUBLE) / (SELECT CAST(max(n) AS DOUBLE) FROM c)) AS rate " +
+        "FROM c ORDER BY cluster"), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val cents = (0 until 4).map(d =>
         (d, Array.tabulate(64)(i => if (i == d) 1.0f else 0.0f))).toArray
@@ -6735,7 +7150,23 @@ object SparkEntry {
     // with per-executor precompiled patterns — the URL side is a pure
     // narrow projection, no join at all. The oracle states every
     // decision outright from the (host, path) moduli
-    "q258_robots_gate" -> ((s, dir) => {
+    // q255: the assignment replayed in SQL (argmax over the first four
+    // coordinates, >= gives the lowest-cid tie-break; the one-hot
+    // centroids make dot = the coordinate itself on BOTH engines), the
+    // flood's cluster stated (a positive e0 multiple is cluster 0 by
+    // construction), the cap replayed as a row_number
+    // q258/q259: every robots decision stated outright from the planted
+    // (host, path) moduli — h0 blocks /private, h1's named-agent group
+    // eclipses its * group (only /public survives), h2 blocks the $-
+    // anchored pdf wildcard, h3 has no robots at all, h4's only group
+    // names another agent (no rules apply), h5 is the longest-match law
+    // (/a/b allowed under a /a disallow), h6's accumulated-UA group
+    // blocks /doc; q259 additionally restricts to the admitted rows
+    // (distinct canonicals, so frontier admission = allowance)
+    Query("q258_robots_gate",
+      (RobotsPlantedCte +
+        " SELECT doc_id, 'h' || CAST(h AS VARCHAR) || '.example.com' AS host, path, " +
+        "CAST(" + RobotsAllowedCase + " AS BIGINT) AS allowed FROM u ORDER BY doc_id"), (s, dir) => {
       val rules = graft.operators.Robots.parse(robotsPlantedTxt(s),
         "host", "robots_txt", agent = "GraftBot")
       val urls = t(s, dir, "documents").select(col("doc_id"),
@@ -6758,17 +7189,18 @@ object SparkEntry {
     // ever reach the frontier state. Oracle: the q258 decision CASE
     // restricted to the admitted rows (all planted URLs are distinct
     // canonicals, so admission = allowance)
-    "q259_stream_robots_frontier" -> ((s, dir) => {
+    Query("q259_stream_robots_frontier",
+      (RobotsPlantedCte +
+        " SELECT doc_id, 'http://h' || CAST(h AS VARCHAR) || '.example.com' || path AS url_norm, " +
+        "'h' || CAST(h AS VARCHAR) || '.example.com' AS host " +
+        "FROM u WHERE " + RobotsAllowedCase + " ORDER BY doc_id"), (s, dir) => {
       val rules = graft.operators.Robots.parse(robotsPlantedTxt(s),
         "host", "robots_txt", agent = "GraftBot")
       val urls = t(s, dir, "documents").select(col("doc_id"),
         concat(lit("http://h"), (col("doc_id") % 7).cast(StringType),
           lit(".example.com"), robotsPlantedPath).as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q259").toString
-      try {
-        urls.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(urls.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      withTempDir("q259") { tmp =>
+        val stream = fileStream(s, urls, 2, s"$tmp/src")
         // politeness first: host/path derived from the raw URL, the
         // broadcast rules decide, only survivors reach the frontier
         val polite = graft.operators.Robots.filterAllowed(
@@ -6783,7 +7215,7 @@ object SparkEntry {
         store.read("seen").get
           .select(col("doc_id"), col("url_norm"), col("host"))
           .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q260: the HTTP message envelope inside WARC response records —
@@ -6809,7 +7241,18 @@ object SparkEntry {
     // (%6==1 ∧ %8==5 ids, e.g. 13, layer both: chunked outside gzip).
     // gzip-member %2 as in q251. Oracle: every column stated outright
     // from doc_id moduli + the same substr slice
-    "q260_warc_http_responses" -> ((s, dir) => {
+    // q260: every column stated outright from doc_id moduli — status
+    // 404 per %7, bare lowercased mime per %4, the envelope-stripped
+    // body ('' for the %10==9 terminator-less message), with the café
+    // marker that only a declared-charset decode reproduces on the
+    // Latin-1 branch (and only a UTF-8 decode on the others)
+    Query("q260_warc_http_responses",
+      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
+        "CASE WHEN doc_id % 7 = 0 THEN 404 ELSE 200 END AS http_status, " +
+        "CASE WHEN doc_id % 4 IN (0, 1) THEN 'text/html' ELSE 'text/plain' END AS content_type, " +
+        "CASE WHEN doc_id % 10 = 9 THEN '' " +
+        "ELSE 'B ' || CAST(doc_id AS VARCHAR) || ' café ' || substr(text, 1, 60) END AS text " +
+        "FROM documents ORDER BY doc_id"), (s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
       val payloads = tw(s, dir, "documents").select(
@@ -6887,7 +7330,12 @@ object SparkEntry {
     // a per-task compiled-pattern LRU. Same planted corpus, same oracle
     // as q258 — any twin drift (tie-break, wildcard, group scoping,
     // the allow default for rule-less hosts) lands here
-    "q261_robots_gate_join" -> ((s, dir) => {
+    // q261: the join-form twin is graded by q258's EXACT oracle — the
+    // scale plan must be decision-identical
+    Query("q261_robots_gate_join",
+      (RobotsPlantedCte +
+        " SELECT doc_id, 'h' || CAST(h AS VARCHAR) || '.example.com' AS host, path, " +
+        "CAST(" + RobotsAllowedCase + " AS BIGINT) AS allowed FROM u ORDER BY doc_id"), (s, dir) => {
       val rules = graft.operators.Robots.parse(robotsPlantedTxt(s),
         "host", "robots_txt", agent = "GraftBot")
       val urls = t(s, dir, "documents").select(col("doc_id"),
@@ -6910,7 +7358,11 @@ object SparkEntry {
     // scale-invariant, so a twin lands in its source's top cell) —
     // missed-twin count. Same constructed corpus as q253 (organic tail +
     // scaled twins + negated decoys)
-    "q262_embed_decon_ivf" -> ((s, dir) => {
+    // q262: both arms must be clean — full-probe IVF is id-identical to
+    // brute force, and the tight probe misses zero planted twins
+    Query("q262_embed_decon_ivf",
+      ("SELECT CAST(0 AS BIGINT) AS parity_violations, " +
+        "CAST(0 AS BIGINT) AS missed_twins"), (s, dir) => {
       import graft.dedup.Decontaminate
       val emb = t(s, dir, "embeddings")
       val benchmark = emb.filter(col("vec_id") < 100)
@@ -6951,14 +7403,19 @@ object SparkEntry {
     // report, graded by q252's SAME oracle (the q246
     // batch-partitioning-invariance contract: how arrivals were cut
     // into batches must be invisible in the result)
-    "q263_stream_warc_ingest" -> ((s, dir) => {
+    // q263: the streaming ingest is graded by q252's SAME oracle — the
+    // two-batch arrival must be invisible in the per-source report
+    Query("q263_stream_warc_ingest",
+      (mainContentPlantedCte("") +
+        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
+        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
+        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
+        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
+        "FROM tk GROUP BY source ORDER BY source"), (s, dir) => {
       val docs = t(s, dir, "documents")
       val files = warcCurationFiles(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("q263").toString
-      try {
-        files.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(files.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      withTempDir("q263") { tmp =>
+        val stream = fileStream(s, files, 2, s"$tmp/src")
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.warcIngest(stream, store, "corpus",
           checkpointDir = s"$tmp/ck", status = Some(200),
@@ -6976,7 +7433,7 @@ object SparkEntry {
             coalesce(sum(when(col("n_tokens") >= 25, col("n_tokens"))), lit(0L))
               .as("kept_tokens"))
           .orderBy("source").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q264: WET/WARC EXPORT round trip — the sink half that closes the
@@ -6990,7 +7447,9 @@ object SparkEntry {
     // A second export must be byte-identical to the first (per-file
     // content hashes equal) — replay determinism is what makes exported
     // archives diffable
-    "q264_warc_export_roundtrip" -> ((s, dir) => {
+    // q264: both round-trip laws hold — re-read fingerprint identity
+    // and replay-deterministic export bytes
+    Query("q264_warc_export_roundtrip", InvariantOracleSql, (s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
       import graft.sync.Checksum
@@ -7033,7 +7492,21 @@ object SparkEntry {
     // frontier key space (javascript: minted by resolve dies there;
     // utm params strip). 9 planted refs per page → 7 surviving edges,
     // every one stated outright from doc_id moduli
-    "q265_outlink_edges" -> ((s, dir) => {
+    // q265: every surviving edge stated outright from doc_id moduli —
+    // the fragment-only and javascript: refs mint nothing
+    Query("q265_outlink_edges",
+      ("WITH u AS (SELECT doc_id, doc_id % 7 AS h, doc_id % 5 AS m, " +
+        "doc_id % 3 AS k, doc_id % 2 AS j FROM documents), " +
+        "e AS (SELECT doc_id, unnest([" +
+        "'https://abs.example.org/p' || CAST(doc_id AS VARCHAR), " +
+        "'http://cdn.example.net/lib', " +
+        "'http://h' || CAST(h AS VARCHAR) || '.example.com/b/c' || CAST(m AS VARCHAR), " +
+        "'http://h' || CAST(h AS VARCHAR) || '.example.com/up' || CAST(k AS VARCHAR), " +
+        "'http://h' || CAST(h AS VARCHAR) || '.example.com/dir/same.html', " +
+        "'http://h' || CAST(h AS VARCHAR) || '.example.com/dir/page' || CAST(doc_id AS VARCHAR) || '.html?page=2', " +
+        "'http://h' || CAST(h AS VARCHAR) || '.example.com/plain' || CAST(j AS VARCHAR)" +
+        "]) AS dst FROM u) " +
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, dst FROM e ORDER BY doc_id, dst"), (s, dir) => {
       val h = (col("doc_id") % 7).cast(StringType)
       val base = concat(lit("http://h"), h,
         lit(".example.com/dir/page"), col("doc_id").cast(StringType),
@@ -7068,7 +7541,14 @@ object SparkEntry {
     // rules — must not split the group: q258/q261's decisions gate
     // that), and trailing, case-insensitive key. Oracle states the four
     // planted directives outright
-    "q266_robots_sitemaps" -> ((s, dir) =>
+    // q266: the four planted directives stated outright
+    Query("q266_robots_sitemaps",
+      ("SELECT host, sitemap_url FROM (VALUES " +
+        "('h0.example.com', 'https://h0.example.com/sitemap.xml'), " +
+        "('h2.example.com', 'https://h2.example.com/sm/one.xml'), " +
+        "('h2.example.com', 'https://h2.example.com/sm/two.xml'), " +
+        "('h5.example.com', 'http://h5.example.com/s.xml')" +
+        ") AS t(host, sitemap_url) ORDER BY host, sitemap_url"), (s, dir) =>
       graft.operators.Robots.sitemaps(robotsPlantedTxt(s), "host", "robots_txt")
         .orderBy("host", "sitemap_url")),
 
@@ -7080,7 +7560,20 @@ object SparkEntry {
     // conversations (system lead per %4, alternating user/assistant,
     // contents slicing the document text); the oracle replays the
     // template as an ordered string_agg
-    "q268_chat_render" -> ((s, dir) =>
+    // q268/q269: the planted turn CTE replayed — roles/contents from
+    // doc_id moduli, the template as an ordered string_agg (q268), the
+    // offset arithmetic as a window sum over prior turns' rendered
+    // lengths (q269, assistant rows only)
+    Query("q268_chat_render",
+      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
+        "r AS (SELECT doc_id, i, " +
+        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
+        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
+        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c) " +
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
+        "string_agg('<|' || role || '|>' || chr(10) || content || '<|end|>' || chr(10), '' ORDER BY i) AS rendered, " +
+        "CAST(count(*) AS BIGINT) AS n_turns FROM r GROUP BY doc_id ORDER BY doc_id"), (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           chatPlantedMessages.as("msgs"),
@@ -7097,7 +7590,21 @@ object SparkEntry {
     // oracle replays the offset arithmetic with a window sum over the
     // identical planted construction; ChatSpec pins the slicing law
     // (substring(rendered, start, end) == turn content)
-    "q269_chat_loss_spans" -> ((s, dir) =>
+    Query("q269_chat_loss_spans",
+      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
+        "r AS (SELECT doc_id, i, " +
+        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
+        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
+        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
+        "o AS (SELECT doc_id, i, role, " +
+        "len('<|' || role || '|>' || chr(10)) AS plen, len(content) AS clen, " +
+        "coalesce(sum(len('<|' || role || '|>' || chr(10)) + len(content) + len('<|end|>' || chr(10))) " +
+        "OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off FROM r) " +
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, i AS turn, " +
+        "CAST(off + plen AS BIGINT) AS span_start, " +
+        "CAST(off + plen + clen AS BIGINT) AS span_end " +
+        "FROM o WHERE role = 'assistant' ORDER BY doc_id, turn"), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           chatPlantedMessages.as("msgs"))
@@ -7115,7 +7622,25 @@ object SparkEntry {
     // whole). Strict prefix: the first overflowing turn stops
     // consumption. Same zero-shuffle fold shape. Oracle: cumulative
     // token window + the last-assistant trim replayed in SQL
-    "q270_chat_fit_budget" -> ((s, dir) =>
+    // q270: the budget prefix (cumulative content tokens <= 12 — cum is
+    // monotone, so the window filter IS the strict prefix) trimmed to
+    // the last assistant turn; docs with none vanish
+    Query("q270_chat_fit_budget",
+      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
+        "r AS (SELECT doc_id, i, " +
+        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
+        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
+        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
+        "o AS (SELECT doc_id, i, role, content, " +
+        "sum(len(regexp_extract_all(lower(content), '[a-z0-9]+'))) " +
+        "OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM r), " +
+        "p AS (SELECT * FROM o WHERE cum <= 12), " +
+        "b AS (SELECT doc_id, max(i) AS last_a FROM p WHERE role = 'assistant' GROUP BY doc_id) " +
+        "SELECT CAST(p.doc_id AS BIGINT) AS doc_id, CAST(p.i AS BIGINT) AS pos, " +
+        "p.role AS role, p.content AS content " +
+        "FROM p JOIN b ON p.doc_id = b.doc_id AND p.i <= b.last_a " +
+        "ORDER BY doc_id, pos"), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           chatPlantedMessages.as("msgs"))
@@ -7136,7 +7661,10 @@ object SparkEntry {
     // drops prompts; the lowest-id tie-break is pinned in
     // PreferenceSpec (no planted ties at sf0.01 — the spec owns that
     // law). Oracle: row_number best/worst replay
-    "q271_preference_pairs" -> ((s, dir) =>
+    // q271: the planted rollouts replayed, best/worst per prompt as
+    // row_number twins (score DESC/ASC, id ASC ties — the operator's
+    // stated tie-break), margin-gated exactly like the query
+    Query("q271_preference_pairs", preferencePairsOracleSql, (s, dir) =>
       graft.operators.Preference.pairs(
         preferencePlantedRollouts(tw(s, dir, "documents")),
         "prompt_id", "completion_id", "completion", "score",
@@ -7151,14 +7679,14 @@ object SparkEntry {
     // arrivals — the SAME oracle as q271 (the q197/q246 merge-order-
     // invariance contract). The margin gate runs over the STATE
     // (|prompts| rows), never the rollouts
-    "q274_stream_preference_pairs" -> ((s, dir) => {
+    // q274: the SAME oracle — the maintained state's derived pairs
+    // must equal the batch miner over all arrivals (merge-order
+    // invariance, the q197/q246 contract)
+    Query("q274_stream_preference_pairs", preferencePairsOracleSql, (s, dir) => {
       val rollouts = preferencePlantedRollouts(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q274").toString
-      try {
+      withTempDir("q274") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
-        rollouts.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(rollouts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, rollouts, 2, s"$tmp/src")
         IncrementalStream.preferenceIngest(stream, "prompt_id",
           "completion_id", "completion", "score",
           store, "prefs", checkpointDir = s"$tmp/ck")
@@ -7166,7 +7694,7 @@ object SparkEntry {
         graft.operators.Preference.pairsFromCandidates(
             store.read("prefs").get, "prompt_id", minMargin = 4.0)
           .orderBy("prompt_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q275: GRPO-style group-relative advantages over the SAME planted
@@ -7177,7 +7705,20 @@ object SparkEntry {
     // losslessly. One prompt-keyed exchange feeding one Window node
     // (count/sum/sumsq share it), no join — plan-pinned. Oracle:
     // window replay of the same arithmetic
-    "q275_group_advantage" -> ((s, dir) =>
+    // q275: the planted rollouts' group arithmetic replayed as window
+    // sums — integer-exact numerators, no float comparisons
+    Query("q275_group_advantage",
+      ("WITH r AS (SELECT doc_id % 173 AS prompt_id, doc_id AS completion_id, " +
+        "(doc_id % 6) * 2 AS score FROM documents) " +
+        "SELECT CAST(prompt_id AS BIGINT) AS prompt_id, " +
+        "CAST(completion_id AS BIGINT) AS completion_id, " +
+        "CAST(score AS BIGINT) AS score, " +
+        "CAST(count(*) OVER w AS BIGINT) AS n_rollouts, " +
+        "CAST(score * count(*) OVER w - sum(score) OVER w AS BIGINT) AS adv_num, " +
+        "CAST(count(*) OVER w * sum(score * score) OVER w - " +
+        "sum(score) OVER w * sum(score) OVER w AS BIGINT) AS var_num " +
+        "FROM r WINDOW w AS (PARTITION BY prompt_id) " +
+        "ORDER BY prompt_id, completion_id"), (s, dir) =>
       graft.operators.Preference.groupAdvantages(
         preferencePlantedRollouts(tw(s, dir, "documents")),
         "prompt_id", "completion_id", "score")
@@ -7193,7 +7734,22 @@ object SparkEntry {
     // stays un-graded (float-boundary-sensitive), identities only.
     // One broadcast cross pass + two keyed windows — the EXACT
     // baseline; at scale knnJoinIvf shortlists feed the same rule
-    "q278_bitext_mine" -> ((s, dir) => {
+    // q278: the mining rule replayed — list_cosine_similarity cross
+    // scores, forward/backward row_number argmax, top-4 neighborhood
+    // means, mutual-best + ratio margin >= 1.047 (2c >= 1.047(favg+bavg))
+    Query("q278_bitext_mine",
+      ("WITH a AS (SELECT vec_id AS src_id, embedding AS av FROM embeddings WHERE vec_id % 2 = 0), " +
+        "b AS (SELECT vec_id AS tgt_id, embedding AS bv FROM embeddings WHERE vec_id % 2 = 1), " +
+        "s AS (SELECT src_id, tgt_id, list_cosine_similarity(av, bv) AS c FROM a, b), " +
+        "r AS (SELECT *, " +
+        "row_number() OVER (PARTITION BY src_id ORDER BY c DESC, tgt_id) AS rf, " +
+        "row_number() OVER (PARTITION BY tgt_id ORDER BY c DESC, src_id) AS rb FROM s), " +
+        "fa AS (SELECT src_id, avg(c) AS favg FROM r WHERE rf <= 4 GROUP BY src_id), " +
+        "ba AS (SELECT tgt_id, avg(c) AS bavg FROM r WHERE rb <= 4 GROUP BY tgt_id) " +
+        "SELECT CAST(r.src_id AS BIGINT) AS src_id, CAST(r.tgt_id AS BIGINT) AS tgt_id " +
+        "FROM r JOIN fa ON r.src_id = fa.src_id JOIN ba ON r.tgt_id = ba.tgt_id " +
+        "WHERE rf = 1 AND rb = 1 AND favg + bavg > 0 AND 2 * c >= 1.047 * (favg + bavg) " +
+        "ORDER BY src_id"), (s, dir) => {
       val e = t(s, dir, "embeddings")
       graft.similarity.Similarity.bitextMine(
         e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
@@ -7214,7 +7770,26 @@ object SparkEntry {
     // the oracle replays cumulative per-piece token counts (role word
     // + content tokens + 'end') as a window sum, the q269 shape in
     // token units
-    "q277_token_loss_mask" -> ((s, dir) =>
+    // q277: the q269 planted CTE in TOKEN units — cumulative
+    // (role-word + content + 'end') token counts as a window sum,
+    // assistant rows emit their content's token-index interval
+    Query("q277_token_loss_mask",
+      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
+        "r AS (SELECT doc_id, i, " +
+        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
+        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
+        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
+        "o AS (SELECT doc_id, i, role, " +
+        "len(regexp_extract_all(role, '[a-z0-9]+')) AS ptoks, " +
+        "len(regexp_extract_all(lower(content), '[a-z0-9]+')) AS ctoks FROM r), " +
+        "w AS (SELECT doc_id, i, role, ptoks, ctoks, " +
+        "coalesce(sum(ptoks + ctoks + 1) OVER (PARTITION BY doc_id ORDER BY i " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM o) " +
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(i AS BIGINT) AS turn, " +
+        "CAST(cum + ptoks AS BIGINT) AS tok_start, " +
+        "CAST(cum + ptoks + ctoks AS BIGINT) AS tok_end " +
+        "FROM w WHERE role = 'assistant' ORDER BY doc_id, turn"), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           chatPlantedMessages.as("msgs"))
@@ -7238,16 +7813,23 @@ object SparkEntry {
     // so the 2-batch split is invisible (the q246/q267 contract).
     // Oracle: the distinct planted urlset locs stated outright (the
     // planted URLs are UrlNormalize fixed points by construction)
-    "q276_stream_sitemap_frontier" -> ((s, dir) => {
+    // q276: the admitted frontier SET stated outright — distinct
+    // urlset page locs of the non-sitemapindex docs (child-sitemap
+    // locs seed nothing; the planted URLs are canonical fixed points)
+    Query("q276_stream_sitemap_frontier",
+      ("WITH d AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS h, " +
+        "CAST(doc_id % 50 AS VARCHAR) AS p FROM documents WHERE doc_id % 6 <> 0), " +
+        "u AS (SELECT DISTINCT 'http://h' || h || '.example.com/page' || p || '.html?a=1&b=2' AS url_norm, " +
+        "'h' || h || '.example.com' AS host FROM d " +
+        "UNION SELECT DISTINCT 'http://h' || h || '.example.com/p' || p || '/two', " +
+        "'h' || h || '.example.com' FROM d) " +
+        "SELECT url_norm, host FROM u ORDER BY url_norm"), (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           sitemapPlantedXml.as("xml"))
-      val tmp = java.nio.file.Files.createTempDirectory("q276").toString
-      try {
+      withTempDir("q276") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/seen")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, docs, 2, s"$tmp/src")
         val urls = stream
           .select(col("doc_id"),
             explode(graft.text.Sitemap.entries(col("xml"))).as("e"))
@@ -7258,7 +7840,7 @@ object SparkEntry {
           .awaitTermination()
         store.read("seen").get.select(col("url_norm"), col("host"))
           .orderBy("url_norm").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q272: conversation lint — the QA gate synthetic/vendor SFT data
@@ -7271,7 +7853,42 @@ object SparkEntry {
     // %7 blanks i=1's content, %11 NULLs i=2's content (invalid turn —
     // must not break adjacency of its neighbors). Oracle replays the
     // moduli with windowed lag over the valid rows
-    "q272_chat_lint" -> ((s, dir) =>
+    // q272: the lint-hazard moduli replayed — valid rows (content not
+    // NULL) carry lag/first/last windows, invalid rows only count
+    Query("q272_chat_lint",
+      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
+        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
+        "r AS (SELECT doc_id, i, " +
+        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
+        "WHEN i = 1 AND doc_id % 5 = 0 THEN 'user' " +
+        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
+        "CASE WHEN i = 1 AND doc_id % 7 = 0 THEN '   ' " +
+        "WHEN i = 2 AND doc_id % 11 = 0 THEN NULL " +
+        "ELSE 'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) END AS content " +
+        "FROM c), " +
+        "v AS (SELECT doc_id, i, role, content, " +
+        "lag(role) OVER (PARTITION BY doc_id ORDER BY i) AS prev_role, " +
+        "row_number() OVER (PARTITION BY doc_id ORDER BY i) AS rn, " +
+        "row_number() OVER (PARTITION BY doc_id ORDER BY i DESC) AS rnd " +
+        "FROM r WHERE content IS NOT NULL), " +
+        "a AS (SELECT doc_id, count(*) AS n_valid, " +
+        "sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS same_role_pairs, " +
+        "sum(CASE WHEN trim(content) = '' THEN 1 ELSE 0 END) AS empty_turns, " +
+        "max(CASE WHEN rn = 1 THEN role END) AS first_role, " +
+        "max(CASE WHEN rnd = 1 THEN role END) AS last_role " +
+        "FROM v GROUP BY doc_id), " +
+        "t AS (SELECT doc_id, count(*) AS n_all FROM r GROUP BY doc_id) " +
+        "SELECT CAST(a.doc_id AS BIGINT) AS doc_id, " +
+        "CAST(n_valid AS BIGINT) AS n_valid, " +
+        "CAST(t.n_all - n_valid AS BIGINT) AS n_invalid, " +
+        "CAST(CASE WHEN first_role IN ('system', 'user') THEN 1 ELSE 0 END AS BIGINT) AS starts_ok, " +
+        "CAST(CASE WHEN last_role = 'assistant' THEN 1 ELSE 0 END AS BIGINT) AS ends_assistant, " +
+        "CAST(same_role_pairs AS BIGINT) AS same_role_pairs, " +
+        "CAST(empty_turns AS BIGINT) AS empty_turns, " +
+        "CAST(CASE WHEN n_valid > 0 AND first_role IN ('system', 'user') " +
+        "AND last_role = 'assistant' AND same_role_pairs = 0 AND empty_turns = 0 " +
+        "THEN 1 ELSE 0 END AS BIGINT) AS passed " +
+        "FROM a JOIN t ON a.doc_id = t.doc_id ORDER BY doc_id"), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           graft.text.Chat.lint(chatLintPlantedMessages).as("l"))
@@ -7298,7 +7915,25 @@ object SparkEntry {
     // shape). Planted: %6 docs ship a sitemapindex (one lastmod, one
     // whitespace-padded loc), the rest a urlset (entity-escaped query
     // loc + lastmod, a bare second loc, a loc-less hazard entry)
-    "q273_sitemap_entries" -> ((s, dir) =>
+    // q273: the planted sitemap entries replayed as UNION ALL arms —
+    // decoded locs, trimmed padding, NULL absent lastmods, the
+    // loc-less hazard entry absent
+    Query("q273_sitemap_entries",
+      ("WITH d AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS h, " +
+        "CAST(doc_id % 50 AS VARCHAR) AS p FROM documents), " +
+        "e AS (" +
+        "SELECT doc_id, 'sitemap' AS kind, " +
+        "'https://h' || h || '.example.com/sm/a.xml' AS loc, " +
+        "'2026-01-15' AS lastmod FROM d WHERE doc_id % 6 = 0 " +
+        "UNION ALL SELECT doc_id, 'sitemap', " +
+        "'https://h' || h || '.example.com/sm/b.xml', NULL FROM d WHERE doc_id % 6 = 0 " +
+        "UNION ALL SELECT doc_id, 'url', " +
+        "'http://h' || h || '.example.com/page' || p || '.html?a=1&b=2', " +
+        "'2026-02-11' FROM d WHERE doc_id % 6 <> 0 " +
+        "UNION ALL SELECT doc_id, 'url', " +
+        "'http://h' || h || '.example.com/p' || p || '/two', NULL FROM d WHERE doc_id % 6 <> 0) " +
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, kind, loc, lastmod " +
+        "FROM e ORDER BY doc_id, kind, loc"), (s, dir) =>
       tw(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           explode(graft.text.Sitemap.entries(sitemapPlantedXml)).as("e"))
@@ -7318,7 +7953,24 @@ object SparkEntry {
     // per-batch admission order are invisible (the q246 contract).
     // Fragment-only and javascript: links are planted and must mint
     // nothing; disallowed paths must never reach frontier state
-    "q267_stream_crawl_loop" -> ((s, dir) => {
+    // q267: the admitted frontier SET stated outright — distinct
+    // allowed in-host links (%50 path keys under the q258 decision
+    // CASE) plus the always-allowed cross-host h3 links (%20 keys);
+    // fragment/javascript links mint nothing
+    Query("q267_stream_crawl_loop",
+      ("WITH u AS (SELECT doc_id, doc_id % 7 AS h, doc_id % 5 AS m, " +
+        "CAST(doc_id % 50 AS VARCHAR) AS p, doc_id % 20 AS x FROM documents), " +
+        "l1 AS (SELECT DISTINCT 'http://h' || CAST(h AS VARCHAR) || '.example.com' || " +
+        "CASE m WHEN 0 THEN '/private/p' || p WHEN 1 THEN '/public/q' || p " +
+        "WHEN 2 THEN '/doc' || p || '.pdf' WHEN 3 THEN '/a/b/r' || p " +
+        "ELSE '/a/c' || p END AS url_norm, " +
+        "'h' || CAST(h AS VARCHAR) || '.example.com' AS host FROM u " +
+        "WHERE (CASE h WHEN 0 THEN m <> 0 WHEN 1 THEN m = 1 WHEN 2 THEN m <> 2 " +
+        "WHEN 5 THEN m <> 4 WHEN 6 THEN m <> 2 ELSE TRUE END)), " +
+        "l2 AS (SELECT DISTINCT 'http://h3.example.com/x' || CAST(x AS VARCHAR) AS url_norm, " +
+        "'h3.example.com' AS host FROM u) " +
+        "SELECT url_norm, host FROM (SELECT * FROM l1 UNION SELECT * FROM l2) " +
+        "ORDER BY url_norm"), (s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
       val rules = graft.operators.Robots.parse(robotsPlantedTxt(s),
@@ -7354,11 +8006,8 @@ object SparkEntry {
                  else m.reduce(_ ++ _))
           }
         }.toDF("file_id", "content")
-      val tmp = java.nio.file.Files.createTempDirectory("q267").toString
-      try {
-        files.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(files.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      withTempDir("q267") { tmp =>
+        val stream = fileStream(s, files, 2, s"$tmp/src")
         // the admission chain, all stateless per row until the frontier
         val fetched = graft.sources.Warc.responseText(stream)
           .filter(col("http_status") === 200 && col("content_type") === "text/html")
@@ -7384,7 +8033,7 @@ object SparkEntry {
           checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("seen").get.select(col("url_norm"), col("host"))
           .orderBy("url_norm").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q256: FULL-HISTORY hard erasure — takedown in the temporal family,
@@ -7400,7 +8049,14 @@ object SparkEntry {
     // compactTombstones physically purges mid-lifecycle with serving
     // provably unchanged across it. Output: the final served history,
     // graded by the q222 island law restricted to surviving keys
-    "q256_history_erasure" -> ((s, dir) => {
+    // q256: the island law restricted to SURVIVING keys — a tombstoned
+    // key (%13) must contribute NO interval at any version, round-2
+    // re-deliveries included; everything else is row-identical to the
+    // q222/q245 history (a drifted base string no-ops the replace and
+    // fails the gate, the q248 convention)
+    Query("q256_history_erasure", Scd2FullHistoryOracleSql.replace(
+      "WHERE present = 1 ORDER BY",
+      "WHERE present = 1 AND o_orderkey % 13 <> 0 ORDER BY"), (s, dir) => {
       import graft.sync.{History, Takedown}
       val (s1, s2, s3) = scdSnapshots(s, dir)
       def ups(cur: DataFrame, prev: DataFrame): DataFrame = {
@@ -7424,8 +8080,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q256").toString
-      try {
+      withTempDir("q256") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/src")
@@ -7486,7 +8141,7 @@ object SparkEntry {
         post.select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
           .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     })
   )
 
@@ -7841,1195 +8496,6 @@ object SparkEntry {
   private val VocabEncodeOracleSql: String =
     """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(ts) AS token FROM tok) GROUP BY 1), v AS (SELECT token, CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS token_id FROM cnt ORDER BY n DESC, token LIMIT 200), e AS (SELECT t.doc_id, CAST(i - 1 AS BIGINT) AS pos, t.ts[i] AS token FROM tok t, LATERAL unnest(range(1, len(t.ts) + 1)) AS u(i)) SELECT e.doc_id, e.pos, CAST(coalesce(v.token_id, 0) AS BIGINT) AS token_id FROM e LEFT JOIN v USING (token) ORDER BY doc_id, pos"""
 
-  private val llmOracle: Map[String, String] = Map(
-    // q149 grades the broadcast-join encode path against q145's SAME
-    // oracle — the two plans are row-identical by contract
-    "q149_vocab_encode_join" -> VocabEncodeOracleSql,
-    // q155 grades the large-vocab streaming gate against the same batch
-    // encoding oracle (the q146 pairing through the join path)
-    "q155_stream_encode_join_gate" -> VocabEncodeOracleSql,
-    // q150: the merge sequence + final symbol tables are verified
-    // in-query against a brute-force Scala BPE over the collected word
-    // table (DuckDB cannot express the sequential merge fold)
-    "q150_bpe_train" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q159: delta-recount vs full-recount training is a Spark-side
-    // two-implementation contract (the q150 sibling — DuckDB cannot
-    // express the sequential merge fold)
-    "q159_bpe_delta_train" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q171: DuckDB replays the identical planted concat and the identical
-    // integer rule battery — whitespace words, milli-scaled mean length
-    // (same IEEE divide-then-floor), cross-multiplied ratio tests, the
-    // stopword CASE sum GENERATED from Gopher.Stopwords
-    "q171_gopher_rules" -> GopherOracleSql,
-    // q173: the streaming gate accumulates EXACTLY the batch q171 table
-    "q173_stream_gopher_gate" -> GopherOracleSql,
-    // q174: DuckDB plants the identical chr() accent edges and strips
-    // with its own strip_accents — verified char-for-char equal to
-    // NFD-Mn-NFC on this range, so the expression grades cross-engine
-    "q174_strip_accents" ->
-      ("WITH p AS (SELECT doc_id, text" +
-        " || CASE WHEN doc_id % 2 = 0 THEN ' caf' || chr(233) || ' se' || chr(241) || 'or na' || chr(239) || 've' ELSE '' END" +
-        " || CASE WHEN doc_id % 3 = 0 THEN ' cr' || chr(232) || 'me br' || chr(251) || 'l' || chr(233) || 'e ' || chr(229) || 'land' ELSE '' END" +
-        " || CASE WHEN doc_id % 5 = 0 THEN ' de' || chr(769) || 'ja' || chr(768) || ' vu ' || chr(252) || 'berma' || chr(223) ELSE '' END AS t FROM documents) " +
-        "SELECT doc_id, strip_accents(t) AS t_stripped, CAST(len(t) AS BIGINT) AS len_before, " +
-        "CAST(len(strip_accents(t)) AS BIGINT) AS len_after FROM p ORDER BY doc_id"),
-    // q175: the same counts as plain SQL — per check one row of
-    // (check, n_rows, n_violations, pass), unioned and ordered
-    "q175_data_expectations" ->
-      ("WITH r AS (" +
-        "SELECT 'o_custkey_not_null' AS check_name, CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(CASE WHEN o_custkey IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_violations FROM orders" +
-        " UNION ALL SELECT 'o_totalprice_positive', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(o_totalprice > 0, false) THEN 0 ELSE 1 END) AS BIGINT) FROM orders" +
-        " UNION ALL SELECT 'o_totalprice_under_100', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(o_totalprice < 100, false) THEN 0 ELSE 1 END) AS BIGINT) FROM orders" +
-        " UNION ALL SELECT 'l_quantity_range', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(l_quantity >= 1 AND l_quantity <= 50, false) THEN 0 ELSE 1 END) AS BIGINT) FROM lineitem" +
-        // uniqueness: n - distinct-over-FULLY-NON-NULL-keys — null-keyed
-        // rows each count once (they are not in the distinct), never
-        // twice (the uniqueCheck null-skipping contract)
-        " UNION ALL SELECT 'o_orderkey_unique', CAST(count(*) AS BIGINT), CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) FROM orders" +
-        " UNION ALL SELECT 'lineitem_pk_unique', CAST(count(*) AS BIGINT), CAST(count(*) - count(DISTINCT CASE WHEN l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL THEN (l_orderkey, l_linenumber) END) AS BIGINT) FROM lineitem" +
-        " UNION ALL SELECT 'l_orderkey_in_orders', CAST((SELECT count(*) FROM lineitem) AS BIGINT), CAST((SELECT count(*) FROM lineitem l WHERE l.l_orderkey IS NOT NULL AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT)) " +
-        "SELECT check_name, n_rows, n_violations, CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS pass FROM r ORDER BY check_name"),
-    // q176: the generated integer-PageRank replay over the same bigram
-    // graph — `//` and Spark's `div` agree exactly on the all-positive
-    // operands
-    "q176_textrank_keywords" -> textRankOracleSql(iters = 3, k = 30),
-    // q177: two per-parity SQL reports unioned — one row per (check,
-    // batch); the compare sorts, so batch arrival order is irrelevant
-    "q177_stream_expectations" -> {
-      def side(parity: Int): String =
-        s"SELECT 'text_not_null' AS check_name, CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(CASE WHEN text IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_violations FROM documents WHERE doc_id % 2 = $parity" +
-          s" UNION ALL SELECT 'n_chars_positive', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(n_chars > 0, false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity" +
-          s" UNION ALL SELECT 'n_chars_under_500', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(n_chars < 500, false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity" +
-          s" UNION ALL SELECT 'lang_known', CAST(count(*) AS BIGINT), CAST(sum(CASE WHEN coalesce(lang IN ('en','fr','es','zh','de'), false) THEN 0 ELSE 1 END) AS BIGINT) FROM documents WHERE doc_id % 2 = $parity"
-      "WITH r AS (" + side(0) + " UNION ALL " + side(1) + ") " +
-        "SELECT check_name, n_rows, n_violations, CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS pass " +
-        "FROM r ORDER BY check_name, n_violations"
-    },
-    // q178: per-column stats as plain SQL — integral columns carry
-    // min/max, others NULL (no lossy cross-type string render)
-    "q178_column_profile" -> {
-      def c(name: String, integral: Boolean): String = {
-        val mn = if (integral) s"CAST(min($name) AS BIGINT)" else "CAST(NULL AS BIGINT)"
-        val mx = if (integral) s"CAST(max($name) AS BIGINT)" else "CAST(NULL AS BIGINT)"
-        s"SELECT '$name' AS col_name, CAST(count(*) AS BIGINT) AS n_rows, " +
-          s"CAST(sum(CASE WHEN $name IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls, " +
-          s"CAST(count(DISTINCT $name) AS BIGINT) AS n_distinct, $mn AS min_long, $mx AS max_long FROM orders"
-      }
-      Seq(c("o_orderkey", integral = true), c("o_custkey", integral = true),
-        c("o_orderstatus", integral = false), c("o_totalprice", integral = false),
-        c("o_orderdate", integral = false), c("o_orderpriority", integral = false))
-        .mkString("WITH r AS (", " UNION ALL ", ") SELECT * FROM r ORDER BY col_name")
-    },
-
-    "q180_wordpiece_encode" -> WordPieceEncodeOracleSql,
-    // q188: string-gram replay of the diagonal-run span formulation —
-    // df gate [2, 20] BEFORE pairing (spans split at hotter-than-maxDf
-    // grams, a pinned semantic of the gate), islands via pos - row_number
-    // per (pair, diagonal), runs >= 20 tokens cover both sides (the b side
-    // shifted by the diagonal), coverage deduped then counted per doc.
-    // 1-based positions throughout (Spark is 0-based) — diagonals, run
-    // lengths, and counts are index-base-invariant
-    "q188_dup_span_stats" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), pairable AS (SELECT g FROM (SELECT DISTINCT doc_id, g FROM g) GROUP BY g HAVING count(*) BETWEEN 2 AND 20), kept AS (SELECT doc_id, pos, g FROM g WHERE g IN (SELECT g FROM pairable)), anc AS (SELECT a.doc_id AS ida, b.doc_id AS idb, a.pos AS pa, a.pos - b.pos AS d FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id), isl AS (SELECT ida, idb, d, pa, pa - row_number() OVER (PARTITION BY ida, idb, d ORDER BY pa) AS grp FROM anc), sp AS (SELECT ida, idb, d, min(pa) AS s, count(*) + 7 AS rt FROM isl GROUP BY ida, idb, d, grp HAVING count(*) + 7 >= 20), cov AS (SELECT ida AS doc_id, unnest(range(s, s + rt)) AS p FROM sp UNION ALL SELECT idb, unnest(range(s - d, s - d + rt)) FROM sp), covd AS (SELECT DISTINCT doc_id, p FROM cov), rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_removed FROM covd GROUP BY doc_id) SELECT t.doc_id, CAST(len(t.ts) AS BIGINT) AS n_tokens, coalesce(rem.n_removed, CAST(0 AS BIGINT)) AS n_removed FROM tok t LEFT JOIN rem USING (doc_id) ORDER BY t.doc_id""",
-    // q190: the q188 diagonal-run CTEs with the corpus half (doc_id < 250)
-    // as reference and arrivals (>= 250) as the scrubbed side — ref-side
-    // df gate <= 20 (one ref occurrence suffices cross-side, so no lower
-    // bound), coverage on the arrival side only, then the q130 clean-text
-    // reconstruction
-    "q190_stream_dup_span_gate" -> DupSpanGateOracleSql,
-    // q192: the generated water-filling CTE chain — 24 rounds covers any
-    // exhaustion order over the 20 sources; converged rounds are no-ops
-    "q192_budget_mixture" -> budgetMixtureOracleSql(24),
-    // q193: the accumulated-index serve must equal q190's direct scrub —
-    // the shared-oracle contract (q179/q183/q186 precedent)
-    "q193_span_index_serve" -> DupSpanGateOracleSql,
-    // q194: the post-takedown serve equals the q179 replay over only the
-    // surviving documents — erasure leaves no df residue
-    "q194_takedown_line_index" -> lineDedupOracleSqlOver(" WHERE doc_id < 400"),
-    // q244: the same surviving-corpus replay — arrivals are (doc_id % 3
-    // in {0,1}) ∪ (doc_id % 3 = 2 AND < 400), the compaction purges
-    // >= 400, so the served set is exactly doc_id < 400 (q194's oracle);
-    // the serve-unchanged-across-compaction claim is the in-lambda pin
-    "q244_compaction_under_serving" -> lineDedupOracleSqlOver(" WHERE doc_id < 400"),
-    // q201: the ONLINE (tombstone, mid-stream) takedown must serve the
-    // identical survivor build — the q194 oracle, shared
-    "q201_online_takedown" -> lineDedupOracleSqlOver(" WHERE doc_id < 400"),
-    // q202/q203: byte-level BPE train + apply are Spark-side contracts
-    // (brute-force reference / parity + lossless round-trip) — DuckDB
-    // cannot express the sequential merge fold (the q150/q154 precedent)
-    "q202_byte_bpe_train" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q203_byte_bpe_encode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q204: BOTH arms of the q188 diagonal-run chain (ungated / df-gated)
-    // over the generated planted corpus, joined per doc with the permille
-    // loss floor — generated from the SAME Scala span constants
-    "q204_span_gate_loss" -> SpanGateLossOracleSql,
-    // q205: the q190 chain with the ref side filtered to the tombstone
-    // SURVIVORS (>= 100) — the online-erasure serve must equal the
-    // from-scratch scrub against exactly the surviving reference
-    "q205_takedown_span_index" -> dupSpanGateOracleSqlOverRef(" AND doc_id >= 100"),
-    // q206: planted-pair audio fingerprint mining is a Spark-side
-    // violations contract (the q115 image-dHash precedent — the planted
-    // PCM construction and the banded join cannot be expressed in SQL)
-    "q206_audio_neardup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q207: the expected outputs replay from the SAME clean/broken/
-    // passthrough constants the corpus was built from — repair expected
-    // exactly on the broken class, identity elsewhere
-    "q207_fix_mojibake" -> {
-      def sqlLit(s: String) = "'" + s.replace("'", "''") + "'"
-      s"""SELECT doc_id, CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN ${sqlLit(MojibakeClean)} WHEN 1 THEN ${sqlLit(MojibakeClean)} WHEN 2 THEN ${sqlLit(MojibakeCurly)} ELSE ${sqlLit(MojibakeAscii)} END || ' v' || CAST(doc_id AS VARCHAR) AS fixed, CAST(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS BIGINT) AS repaired FROM documents WHERE doc_id < 240 ORDER BY doc_id"""
-    },
-    // q195/q196: exact counts + permille integer-div shares over the
-    // full-outer bucket/category union — plain SQL in both shapes
-    "q195_drift_histogram" ->
-      """WITH o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 50000 AS bucket FROM orders WHERE o_orderstatus = 'F'), n AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 50000 AS bucket FROM orders WHERE o_orderstatus = 'O'), oc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_old FROM o GROUP BY 1), nc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_new FROM n GROUP BY 1), j AS (SELECT coalesce(oc.bucket, nc.bucket) AS bucket, coalesce(n_old, 0) AS n_old, coalesce(n_new, 0) AS n_new FROM oc FULL OUTER JOIN nc ON oc.bucket = nc.bucket), c AS (SELECT bucket, n_old, n_new, sum(n_old) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS co, sum(n_new) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS cn FROM j), t AS (SELECT CAST(sum(n_old) AS BIGINT) AS to_, CAST(sum(n_new) AS BIGINT) AS tn FROM j) SELECT bucket, n_old, n_new, CAST(CASE WHEN to_ > 0 THEN (n_old * 1000) // to_ ELSE 0 END AS BIGINT) AS share_old_pm, CAST(CASE WHEN tn > 0 THEN (n_new * 1000) // tn ELSE 0 END AS BIGINT) AS share_new_pm, CAST(abs(CASE WHEN tn > 0 THEN (n_new * 1000) // tn ELSE 0 END - CASE WHEN to_ > 0 THEN (n_old * 1000) // to_ ELSE 0 END) AS BIGINT) AS shift_pm, CAST(abs(CASE WHEN tn > 0 THEN (cn * 1000) // tn ELSE 0 END - CASE WHEN to_ > 0 THEN (co * 1000) // to_ ELSE 0 END) AS BIGINT) AS cum_shift_pm FROM c, t ORDER BY bucket""",
-    "q196_drift_category" -> CategoryDriftOracleSql,
-    // q197: the maintained-count report must equal batch categoryDrift —
-    // the shared-oracle contract
-    "q197_stream_drift_monitor" -> CategoryDriftOracleSql,
-    // q200: distinct (source, gram) self-join replay on string grams
-    "q200_source_overlap" ->
-      """WITH tok AS (SELECT source, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT DISTINCT source, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT source, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY source) SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS n_shared, ta.n AS n_a, tb.n AS n_b, CAST((count(*) * 1000) // ta.n AS BIGINT) AS cont_a_pm, CAST((count(*) * 1000) // tb.n AS BIGINT) AS cont_b_pm FROM g a JOIN g b ON a.g = b.g AND a.source < b.source JOIN tot ta ON ta.source = a.source JOIN tot tb ON tb.source = b.source GROUP BY a.source, b.source, ta.n, tb.n ORDER BY src_a, src_b""",
-    // q198: plain window-cumsum replay of the greedy shard cut
-    "q198_token_shards" ->
-      """WITH d AS (SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM documents), r AS (SELECT doc_id, n_tokens, sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d), t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM d) SELECT doc_id, n_tokens, CAST(least(7, (cum - n_tokens) // greatest(1, (tot + 7) // 8)) AS BIGINT) AS shard FROM r, t ORDER BY doc_id""",
-    // q199: the datasheet aggregate with integer milli/permille floors
-    "q199_data_card" ->
-      """WITH e AS (SELECT source, doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok FROM documents), a AS (SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_t, CAST(count(tok) AS BIGINT) AS n_tokens, CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_tokens FROM e GROUP BY source), docs AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY source) SELECT d.source, d.n_docs, coalesce(a.n_tokens, 0) AS n_tokens, coalesce(a.n_distinct_tokens, 0) AS n_distinct_tokens, CAST((coalesce(a.n_tokens, 0) * 1000) // d.n_docs AS BIGINT) AS mean_tokens_milli, CAST(CASE WHEN coalesce(a.n_tokens, 0) > 0 THEN (a.n_distinct_tokens * 1000) // a.n_tokens ELSE 0 END AS BIGINT) AS ttr_pm FROM docs d LEFT JOIN a USING (source) ORDER BY d.source""",
-    // q191: the q187 CTE chain over the planted corpus, with
-    // translate(<pinned pair strings>) in place of lower() — generated
-    // from the SAME Scala constants as the Spark side so the map and the
-    // phrases cannot drift
-    "q191_langid_unicode" -> {
-      val uc = graft.text.LangProfile.PinnedUpper
-      val lc = graft.text.LangProfile.PinnedLower
-      s"""WITH base AS (
-        |  SELECT doc_id,
-        |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'fr' WHEN 1 THEN 'de' ELSE 'es' END AS lang,
-        |    (CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN '$LangidFr' WHEN 1 THEN '$LangidDe' ELSE '$LangidEs' END)
-        |      || ' v' || CAST(doc_id AS VARCHAR) AS text
-        |  FROM documents WHERE doc_id < 120),
-        |norm AS (
-        |  SELECT doc_id, lang,
-        |    regexp_replace(translate(text, '$uc', '$lc'), '[ \t\n\f\r]+', '_', 'g') AS t
-        |  FROM base),
-        |tg AS (
-        |  SELECT doc_id, lang, substring(t, CAST(i AS INT), 3) AS g
-        |  FROM norm, LATERAL unnest(range(1, len(t) - 1)) AS u(i)
-        |  WHERE len(t) >= 3),
-        |lp AS (
-        |  SELECT lang, g, CAST(row_number() OVER (
-        |      PARTITION BY lang ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS r
-        |  FROM tg WHERE lang IS NOT NULL GROUP BY lang, g
-        |  QUALIFY r < 40),
-        |dp AS (
-        |  SELECT doc_id, g, CAST(row_number() OVER (
-        |      PARTITION BY doc_id ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS dr
-        |  FROM tg GROUP BY doc_id, g
-        |  QUALIFY dr < 40),
-        |dist AS (
-        |  SELECT dp.doc_id, l.lang,
-        |    CAST(sum(CASE WHEN lp.r IS NULL THEN 40 ELSE abs(dp.dr - lp.r) END) AS BIGINT) AS d
-        |  FROM dp CROSS JOIN (SELECT DISTINCT lang FROM lp) l
-        |  LEFT JOIN lp ON lp.lang = l.lang AND lp.g = dp.g
-        |  GROUP BY dp.doc_id, l.lang)
-        |SELECT doc_id, lang AS pred_lang, d AS dist FROM dist
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY d, lang) = 1
-        |ORDER BY doc_id""".stripMargin
-    },
-    "q187_langid_profiles" ->
-      """WITH norm AS (
-        |  SELECT doc_id, lang, regexp_replace(lower(text), '[ \t\n\f\r]+', '_', 'g') AS t
-        |  FROM documents),
-        |tg AS (
-        |  SELECT doc_id, lang, substring(t, CAST(i AS INT), 3) AS g
-        |  FROM norm, LATERAL unnest(range(1, len(t) - 1)) AS u(i)
-        |  WHERE len(t) >= 3),
-        |lp AS (
-        |  SELECT lang, g, CAST(row_number() OVER (
-        |      PARTITION BY lang ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS r
-        |  FROM tg WHERE lang IS NOT NULL GROUP BY lang, g
-        |  QUALIFY r < 40),
-        |dp AS (
-        |  SELECT doc_id, g, CAST(row_number() OVER (
-        |      PARTITION BY doc_id ORDER BY count(*) DESC, g) - 1 AS BIGINT) AS dr
-        |  FROM tg GROUP BY doc_id, g
-        |  QUALIFY dr < 40),
-        |dist AS (
-        |  SELECT dp.doc_id, l.lang,
-        |    CAST(sum(CASE WHEN lp.r IS NULL THEN 40 ELSE abs(dp.dr - lp.r) END) AS BIGINT) AS d
-        |  FROM dp CROSS JOIN (SELECT DISTINCT lang FROM lp) l
-        |  LEFT JOIN lp ON lp.lang = l.lang AND lp.g = dp.g
-        |  GROUP BY dp.doc_id, l.lang)
-        |SELECT doc_id, lang AS pred_lang, d AS dist FROM dist
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY d, lang) = 1
-        |ORDER BY doc_id""".stripMargin,
-    "q184_tokenizer_fertility" -> TokenizerFertilityOracleSql,
-    "q185_training_windows" ->
-      """WITH d AS (
-        |  SELECT source, doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents),
-        |o AS (
-        |  SELECT source, doc_id, ts,
-        |    coalesce(sum(len(ts)) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS st
-        |  FROM d),
-        |e AS (
-        |  SELECT source, doc_id, st + i - 1 AS gp, ts[i] AS tok
-        |  FROM o, LATERAL unnest(range(1, len(ts) + 1)) AS u(i)),
-        |w1 AS (
-        |  SELECT source, gp // 128 AS win_id, doc_id, min(gp) AS mg,
-        |    CAST(count(*) AS BIGINT) AS n, string_agg(tok, ' ' ORDER BY gp) AS seg
-        |  FROM e GROUP BY source, gp // 128, doc_id)
-        |SELECT source, CAST(win_id AS BIGINT) AS win_id,
-        |  string_agg(seg, ' ' ORDER BY mg) AS window_text,
-        |  string_agg(doc_id || ':' || (mg - win_id * 128) || ':' || n, '|' ORDER BY mg) AS doc_spans,
-        |  CAST(sum(n) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM w1 GROUP BY source, win_id
-        |ORDER BY source, win_id""".stripMargin,
-    // q182 accumulates the same corpus through the streaming gate under
-    // the same pinned vocabulary — shared oracle by construction
-    "q182_stream_wordpiece_gate" -> WordPieceEncodeOracleSql,
-    // q181 is a three-implementation parity gate (delta trainer ==
-    // full-recount trainer == BigInt driver reference, plus codegen-vs-
-    // reference greedy apply over every distinct word) — violations
-    // contract by nature
-    "q181_wordpiece_train" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-
-    "q179_line_dedup" -> LineDedupOracleSql,
-    // q183 accumulates the same planted corpus through the streaming
-    // line-index ingest and serves it through lineDedupFromIndex —
-    // shared oracle by construction (retroactive hotness over the whole
-    // accumulation IS the batch semantics)
-    "q183_stream_line_index" -> LineDedupOracleSql,
-    // q186 cleans the same planted corpus through the serving gate under
-    // a full-corpus hot snapshot — shared oracle by construction
-    "q186_stream_line_gate" -> LineDedupOracleSql,
-    // q172: deflate is JVM-side by nature — planted-comparator violations
-    "q172_compression_signal" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q165: hard-EM unigram training is a Spark-side two-implementation
-    // contract (the q150/q159 family — the EM loop is sequential by
-    // nature; every round's segmentations ARE cross-checked against an
-    // independent Viterbi in-query)
-    "q165_unigram_train" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q166: DuckDB runs the IDENTICAL integer Viterbi recurrence as a
-    // list_reduce DP — acc carries one {score, segmentation} cell per
-    // prefix, candidates scan piece length L ascending and replace on >=
-    // (ties prefer longer), multi-char pieces score via the literal CASE
-    // (NULL -> filtered out), single chars fall back to the -100000 UNK
-    // floor. The CASE literals are character-identical to UnigramPinned.
-    "q166_unigram_encode" -> UnigramEncodeOracleSql,
-    // q167: the generated integer-hinge replay — final weights + bias row
-    "q167_svm_train" -> svmOracleSql(
-      s"SELECT f, w AS w_micros FROM w$SvmRounds UNION ALL " +
-        s"SELECT CAST(-1 AS BIGINT) AS f, (SELECT b FROM b$SvmRounds) AS w_micros ORDER BY f"),
-    // q168: the same replay scored under the final weights (m{R+1})
-    "q168_svm_score" -> SvmScoreOracleSql,
-    // q169: the streaming classifier gate accumulates EXACTLY the batch
-    // q168 result — same replay oracle, shared by construction
-    "q169_stream_classify_gate" -> SvmScoreOracleSql,
-    // q189: the join-carried train+score twins against the IDENTICAL
-    // replay oracle — bit-equality of the distributed-weights path
-    "q189_svm_join_parity" -> SvmScoreOracleSql,
-    // q170: the streaming unigram gate accumulates EXACTLY the batch
-    // q166 result — same DP oracle, shared by construction
-    "q170_stream_unigram_gate" -> UnigramEncodeOracleSql,
-    // q160: planted MJPEG frame decode is a Spark-side invariant gate
-    // (DuckDB has no JPEG codec); violations counts formula mismatches
-    "q160_video_frame_decode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q161: snapshot-vs-rebuild parity is a Spark-side full-outer
-    // contract (the q151 pattern, one materialization later)
-    "q161_overlap_snapshot" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q164: DuckDB pads with the identical chr() edges and trims with the
-    // full Python whitespace set as a LITERAL character list — chr codes
-    // 9-13, 28-31, 32, 133, 160, 5760, 8192-8202, 8232, 8233, 8239,
-    // 8287, 12288 — the exact class Coerce.stripUnicode pins
-    "q164_unicode_strip" ->
-      ("WITH ws(cs) AS (SELECT chr(9)||chr(10)||chr(11)||chr(12)||chr(13)||chr(28)||chr(29)||chr(30)||chr(31)||chr(32)||chr(133)||chr(160)||chr(5760)||chr(8192)||chr(8193)||chr(8194)||chr(8195)||chr(8196)||chr(8197)||chr(8198)||chr(8199)||chr(8200)||chr(8201)||chr(8202)||chr(8232)||chr(8233)||chr(8239)||chr(8287)||chr(12288)), " +
-        "p AS (SELECT doc_id, chr(160)||chr(8192)||' '||text||' '||chr(8239)||chr(12288) AS t FROM documents) " +
-        "SELECT doc_id, trim(t, (SELECT cs FROM ws)) AS t_stripped, CAST(len(t) AS BIGINT) AS len_padded, CAST(len(trim(t, (SELECT cs FROM ws))) AS BIGINT) AS len_stripped FROM p ORDER BY doc_id"),
-    // q162: the q156 A-ES oracle un-partitioned — DuckDB runs the direct
-    // global one-window formulation the operator decomposes
-    "q162_global_weighted_sample" ->
-      "WITH u AS (SELECT doc_id, n_chars AS w, greatest(CAST('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) / 4503599627370496.0, 1e-300) AS u FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0), r AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY ln(u)/w DESC, doc_id) AS BIGINT) AS sample_rank FROM u) SELECT doc_id, sample_rank FROM r WHERE sample_rank <= 100 ORDER BY sample_rank",
-    // q151/q152: incremental-vs-batch parity is a Spark-side full-outer
-    // contract (the q124 pattern)
-    "q151_overlap_index_ingest" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q152_ivf_reassign" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q154: train/apply parity is a Spark-side two-implementation
-    // contract (DuckDB cannot express the sequential merge replay)
-    "q154_bpe_encode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q158: incremental-vs-batch dual-table parity is a Spark-side
-    // full-outer contract (the q124 pattern)
-    "q158_dedup_index_ingest" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q157: the same five merges unrolled as a list_reduce fuse chain
-    // (list-of-lists accumulator = the exact left-to-right
-    // non-overlapping greedy fuse), then the q145 vocab + positional
-    // encode shapes over PIECES
-    "q157_bpe_piece_ids" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), p AS (SELECT doc_id, flatten(list_transform(ts, w -> list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform(list_reduce(list_transform([w[i] for i in range(1, len(w) + 1)], x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 't' AND x[1] = 'h' THEN list_concat(acc[1:len(acc)-1], ['th']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'th' AND x[1] = 'e' THEN list_concat(acc[1:len(acc)-1], ['the']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'a' AND x[1] = 'n' THEN list_concat(acc[1:len(acc)-1], ['an']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'i' AND x[1] = 'n' THEN list_concat(acc[1:len(acc)-1], ['in']) ELSE list_concat(acc, x) END), x -> [x]), (acc, x) -> CASE WHEN acc[-1] = 'e' AND x[1] = 'r' THEN list_concat(acc[1:len(acc)-1], ['er']) ELSE list_concat(acc, x) END))) AS pieces FROM tok), cnt AS (SELECT piece, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(pieces) AS piece FROM p) GROUP BY 1), v AS (SELECT piece, CAST(row_number() OVER (ORDER BY n DESC, piece) AS BIGINT) AS token_id FROM cnt ORDER BY n DESC, piece LIMIT 200), e AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, pieces[i] AS piece FROM p, LATERAL unnest(range(1, len(pieces) + 1)) AS u(i)) SELECT e.doc_id, e.pos, CAST(coalesce(v.token_id, 0) AS BIGINT) AS token_id FROM e LEFT JOIN v USING (piece) ORDER BY doc_id, pos""",
-    // q156: same md5-uniform, same ln(u)/w ranking — '0x'||hex CAST is
-    // DuckDB's conv(hex, 16, 10); the 52-bit numerator is double-exact
-    "q156_weighted_sample" ->
-      "WITH u AS (SELECT source, doc_id, n_chars AS w, greatest(CAST('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) / 4503599627370496.0, 1e-300) AS u FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0), r AS (SELECT source, doc_id, CAST(row_number() OVER (PARTITION BY source ORDER BY ln(u)/w DESC, doc_id) AS BIGINT) AS sample_rank FROM u) SELECT source, doc_id, sample_rank FROM r WHERE sample_rank <= 5 ORDER BY source, sample_rank",
-    // q153: DuckDB runs the direct single-window formulation the operator
-    // decomposes — same total order, same integer cents
-    "q153_global_running_sum" ->
-      "SELECT event_id, CAST(sum(CAST(round(value*100) AS BIGINT)) OVER (ORDER BY epoch_ns(ts), event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_cents FROM events ORDER BY event_id",
-    "q67_cube_counts" ->
-      """WITH e AS (SELECT event_type, (epoch_ns(ts) // 3600000000000) % 24 AS h FROM events) SELECT coalesce(event_type, '<all>') AS event_type, CAST(coalesce(h, -1) AS BIGINT) AS h, CAST(count(*) AS BIGINT) AS n, CAST(GROUPING(event_type) * 2 + GROUPING(h) AS BIGINT) AS gid FROM e GROUP BY CUBE(event_type, h) ORDER BY gid, event_type, h""",
-    "q68_star_revenue" ->
-      "SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey JOIN nation n ON c.c_nationkey = n.n_nationkey GROUP BY n_name ORDER BY n_name",
-    "q69_strata_sample" ->
-      "SELECT doc_id, n_chars, stratum FROM (SELECT doc_id, n_chars, stratum, row_number() OVER (PARTITION BY stratum ORDER BY n_chars, doc_id) AS rn FROM (SELECT doc_id, n_chars, CAST(ntile(4) OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS stratum FROM documents)) WHERE rn <= 10 ORDER BY doc_id",
-    "q70_scrub" ->
-      """SELECT event_id, regexp_replace(regexp_replace(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'), '[0-9]{2,}', '<NUM>', 'g') AS scrubbed, CAST(len(regexp_extract_all(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_email, CAST(len(regexp_extract_all(props, '[0-9]{2,}')) AS BIGINT) AS n_num FROM events ORDER BY event_id""",
-    "q71_bigram_lm" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), c AS (SELECT split_part(b, ' ', 1) AS w1, split_part(b, ' ', 2) AS w2, CAST(count(*) AS BIGINT) AS n FROM bg GROUP BY w1, w2) SELECT w1, w2, n, rn FROM (SELECT w1, w2, n, CAST(row_number() OVER (PARTITION BY w1 ORDER BY n DESC, w2) AS BIGINT) AS rn FROM c) WHERE rn <= 3 ORDER BY w1, rn""",
-    "q72_incr_dedup" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_new, b.doc_id AS doc_old FROM tri a JOIN tri b ON a.doc_id >= 250 AND b.doc_id < 250 WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_new, doc_old""",
-    "q73_stream_sessions" ->
-      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id",
-    "q74_sync_checksum" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q75_bloom_pruned_join" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q77_stream_join" ->
-      "SELECT a.user_id, CAST(count(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id)) AND b.ts - a.ts <= INTERVAL 1 HOUR GROUP BY a.user_id ORDER BY a.user_id",
-    "q78_session_window" ->
-      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id",
-    "q81_lsh_shuffle_parity" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tri a JOIN tri b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_a, doc_b""",
-    "q82_salted_join" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q83_typed_agg" ->
-      "SELECT user_id, CAST(count(*) AS BIGINT) AS n, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents, CAST(min(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS min_cents, CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS max_cents FROM events GROUP BY user_id ORDER BY user_id",
-    "q84_format_roundtrip" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q85_bucketed_join" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q86_srp_twin" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q87_image_decode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q101_audio_decode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q103_wav_decode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q107_avi_decode" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q108_nfc_normalize" ->
-      "WITH d AS (SELECT doc_id, replace(text, 'e', 'e' || chr(769)) AS t FROM documents) SELECT doc_id, nfc_normalize(t) AS t_nfc, CAST(length(t) AS BIGINT) AS len_dec, CAST(length(nfc_normalize(t)) AS BIGINT) AS len_nfc FROM d ORDER BY doc_id",
-    "q109_fuzzy_join" ->
-      "WITH tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4) SELECT a.w AS w_a, b.w AS w_b FROM corpus a JOIN corpus b ON a.w < b.w WHERE levenshtein(a.w, b.w) <= 1 ORDER BY w_a, w_b",
-    // q163: the same corpus CTE at the distance-2 radius
-    "q163_fuzzy_join_d2" ->
-      "WITH tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4) SELECT a.w AS w_a, b.w AS w_b FROM corpus a JOIN corpus b ON a.w < b.w WHERE levenshtein(a.w, b.w) <= 2 ORDER BY w_a, w_b",
-    "q110_box_join" ->
-      "WITH e AS (SELECT event_id, epoch_us(ts) AS t, CAST(round(value*100) AS BIGINT) AS c FROM events) SELECT a.event_id AS id_a, b.event_id AS id_b FROM e a JOIN e b ON (a.t < b.t OR (a.t = b.t AND a.event_id < b.event_id)) AND b.t - a.t <= 3600000000 AND abs(a.c - b.c) <= 100 ORDER BY id_a, id_b",
-    "q114_incr_stats" ->
-      "SELECT o_custkey, CAST(count(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS n, CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_v, CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS min_v, CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS max_v FROM orders GROUP BY o_custkey ORDER BY o_custkey",
-    "q112_knn_join" ->
-      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id",
-    "q113_ivf_knn_parity" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q115_image_neardup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q116_schema_evolution" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q117_pq_knn_parity" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q118_ivfpq_knn_parity" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q119 grades the STREAMING plan against the SAME contaminated-set
-    // oracle as batch q49 (the q81 pairing pattern)
-    "q119_stream_decontaminate" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, unnest([array_to_string(ts[i:i+12], ' ') for i in range(1, len(ts) - 11)]) AS g FROM tok WHERE len(ts) >= 13) SELECT DISTINCT b.doc_id FROM g b WHERE b.doc_id >= 250 AND EXISTS (SELECT 1 FROM g c WHERE c.doc_id < 250 AND c.g = b.g) ORDER BY doc_id""",
-    "q120_image_resize" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q127_audio_resample" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q129: covered-position union of contaminated 13-gram windows, per
-    // corpus doc (1-based positions in SQL, 0-based in Spark — counts
-    // are index-base-invariant)
-    "q129_decontaminate_spans" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+12], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 11)) AS pos FROM tok WHERE len(ts) >= 13)), bench AS (SELECT DISTINCT g FROM g WHERE doc_id < 250), hit AS (SELECT doc_id, pos FROM g WHERE doc_id >= 250 AND g IN (SELECT g FROM bench)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 13)) AS p FROM hit), rem AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_removed FROM cov GROUP BY doc_id) SELECT t.doc_id, CAST(len(t.ts) AS BIGINT) AS n_tokens, coalesce(rem.n_removed, CAST(0 AS BIGINT)) AS n_removed FROM tok t LEFT JOIN rem USING (doc_id) WHERE t.doc_id >= 250 ORDER BY t.doc_id""",
-    // q130 grades the streaming span-scrub gate against the batch scrub's
-    // clean-text reconstruction: q129's covered-position CTE, then each
-    // doc's tokens with covered 1-based positions removed, re-joined with
-    // single spaces (base-invariant — Spark filters 0-based positions)
-    "q130_stream_scrub_spans" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+12], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 11)) AS pos FROM tok WHERE len(ts) >= 13)), bench AS (SELECT DISTINCT g FROM g WHERE doc_id < 250), hit AS (SELECT doc_id, pos FROM g WHERE doc_id >= 250 AND g IN (SELECT g FROM bench)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 13)) AS p FROM hit), cv AS (SELECT doc_id, list(p) AS ps FROM cov GROUP BY doc_id) SELECT t.doc_id, coalesce(array_to_string([t.ts[i] for i in range(1, len(t.ts) + 1) if NOT list_contains(coalesce(cv.ps, []), i)], ' '), '') AS clean_text FROM tok t LEFT JOIN cv USING (doc_id) WHERE t.doc_id >= 250 ORDER BY t.doc_id""",
-    // q131: full-shortlist parity with exact knnJoin + tight-funnel twin
-    // retrieval, both Spark-side (the q117 violations contract)
-    "q131_sq_knn_parity" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q132: q33's recursive-CTE component canon + the md5-hex-prefix
-    // bucket — both engines derive the split from the same string digest
-    "q132_leakage_safe_split" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id) SELECT doc_id, canon, CASE WHEN md5('graft-split:' || CAST(canon AS VARCHAR)) < 'c0' THEN 'train' WHEN md5('graft-split:' || CAST(canon AS VARCHAR)) < 'e0' THEN 'val' ELSE 'test' END AS split FROM canon ORDER BY doc_id""",
-    // q133: q112's brute-force ranking oracle plus the cross-label
-    // predicate and the (measured-inert on this data) near-dup ceiling
-    "q133_hard_negatives" ->
-      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS ql FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id AND e.label <> q.ql AND list_cosine_similarity(e.embedding, q.qv) < 0.95) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id",
-    // q134: per-label mean centroids (double, like Spark's avg), then
-    // argmax-cosine assignment with the same (score DESC, label ASC)
-    // tie-break; generate_subscripts is 1-based vs posexplode's 0-based —
-    // positions only ORDER the centroid lists, so the base cancels
-    "q134_centroid_audit" ->
-      "WITH dims AS (SELECT label, pos, avg(v) AS c FROM (SELECT label, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS pos FROM embeddings) GROUP BY label, pos), cents AS (SELECT label AS clabel, list(c ORDER BY pos) AS cv FROM dims GROUP BY label), scored AS (SELECT e.vec_id, e.label, c.clabel, list_cosine_similarity(e.embedding, c.cv) AS s FROM embeddings e, cents c), ranked AS (SELECT vec_id, label, clabel, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, clabel) AS rn FROM scored) SELECT vec_id, CAST(label AS BIGINT) AS label, CAST(clabel AS BIGINT) AS centroid_label FROM ranked WHERE rn = 1 ORDER BY vec_id",
-    // q135: same two-stage count — word frequencies, then len-1 adjacent
-    // char pairs per distinct word weighted by frequency
-    "q135_bpe_pair_counts" ->
-      "WITH words AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), wf AS (SELECT w, count(*) AS c FROM words GROUP BY w), pairs AS (SELECT unnest([w[i:i+1] for i in range(1, len(w))]) AS pair, c FROM wf WHERE len(w) >= 2) SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM pairs GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50",
-    // q136: two ranked CTE sides (same-label top-1, cross-label-below-
-    // ceiling top-1) joined per anchor; anchors missing either side drop
-    "q136_triplet_mining" ->
-      "WITH q AS (SELECT vec_id AS anchor_id, embedding AS qv, label AS ql FROM embeddings WHERE vec_id < 25), s AS (SELECT q.anchor_id, e.vec_id AS nid, e.label = q.ql AS pos, list_cosine_similarity(e.embedding, q.qv) AS sc FROM embeddings e, q WHERE e.vec_id <> q.anchor_id), f AS (SELECT * FROM s WHERE pos OR sc < 0.95), r AS (SELECT anchor_id, nid, pos, row_number() OVER (PARTITION BY anchor_id, pos ORDER BY sc DESC, nid) AS rn FROM f) SELECT p.anchor_id, p.nid AS positive_id, n.nid AS negative_id FROM r p JOIN r n ON p.anchor_id = n.anchor_id AND n.rn = 1 AND NOT n.pos WHERE p.rn = 1 AND p.pos ORDER BY p.anchor_id",
-    // q139: engine-internal sketch bits — graded as the Spark-side parity
-    // + accuracy contract (maintained == batch sketch; estimate within 5%)
-    "q139_stream_distinct_view" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q137: (n/n_max) and sqrt are correctly-rounded IEEE ops on exact
-    // integer counts — the alpha=0.5 rate is bit-identical across engines
-    "q137_temperature_mix" ->
-      "WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang) SELECT lang, CAST(n AS BIGINT) AS n_docs, sqrt(CAST(n AS DOUBLE) / (SELECT CAST(max(n) AS DOUBLE) FROM c)) AS rate FROM c ORDER BY lang",
-    // q138: per-source replication with a 0-based epoch index; zero
-    // repeats drop the source, absent sources default to 1
-    "q138_epoch_expand" ->
-      "SELECT doc_id, unnest(range(CASE WHEN lang = 'en' THEN 0 WHEN lang = 'de' THEN 3 ELSE 1 END)) AS epoch FROM documents ORDER BY doc_id, epoch",
-    // q140: same BM25 formula shape and constant spellings as the Spark
-    // side (k1=1.2 written "1.2", k1+1 written "(1.2 + 1)" — the Scala
-    // double add, NOT the literal 2.2, which is a different double);
-    // contributions fold in token order (list ORDER BY token, sequential
-    // list_aggregate) mirroring the Spark sorted-fold, so exact-twin docs
-    // tie exactly and break by doc_id identically
-    "q140_bm25_topk" -> Bm25OracleSql,
-    "q143_stream_bm25_serve" -> Bm25OracleSql,
-    // q141/q142: winnowing selects the min md5-hex 3-gram hash per
-    // 4-window, rightmost position on ties (max(gpos) among window rows
-    // equal to the window min); short docs (1..3 grams) keep their single
-    // truncated window via greatest(ng - 4, 0)
-    // q144: the q130 clean-text reconstruction shape with the corpus
-    // itself as the contamination source (df > 1 over distinct docs)
-    "q144_self_scrub_spans" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, pos, array_to_string(ts[pos:pos+7], ' ') AS g FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 6)) AS pos FROM tok WHERE len(ts) >= 8)), hot AS (SELECT g FROM (SELECT DISTINCT doc_id, g FROM g) GROUP BY g HAVING count(*) > 1), hit AS (SELECT doc_id, pos FROM g WHERE g IN (SELECT g FROM hot)), cov AS (SELECT DISTINCT doc_id, unnest(range(pos, pos + 8)) AS p FROM hit), cv AS (SELECT doc_id, list(p) AS ps FROM cov GROUP BY doc_id) SELECT t.doc_id, coalesce(array_to_string([t.ts[i] for i in range(1, len(t.ts) + 1) if NOT list_contains(coalesce(cv.ps, []), i)], ' '), '') AS clean_text FROM tok t LEFT JOIN cv USING (doc_id) ORDER BY t.doc_id""",
-    // q145: rank the vocabulary by (count DESC, token), truncate to 200,
-    // re-walk each doc positionally with OOV -> 0
-    "q145_vocab_encode" -> VocabEncodeOracleSql,
-    "q146_stream_encode_gate" -> VocabEncodeOracleSql,
-    // q147: BM25 CTEs follow the q140 shapes (doc-text queries, self
-    // excluded before ranking); vector CTE is q112's cosine ranking; the
-    // fusion folds 1.0/(60+rank) (DOUBLE division in both engines) in
-    // sorted source order and the fused score is hash-graded exactly
-    "q147_hybrid_rrf" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tu AS (SELECT doc_id, unnest(ts) AS token FROM tok), tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tu GROUP BY 1, 2), dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1), st AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n, CAST((SELECT sum(dl) FROM dl) AS DOUBLE) / (SELECT count(*) FROM documents) AS avgdl), dfx AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM (SELECT DISTINCT doc_id, token FROM tu) GROUP BY 1), qt AS (SELECT doc_id AS query_id, unnest(list_distinct(ts)) AS token FROM tok WHERE doc_id < 5), m AS (SELECT qt.query_id, tf.doc_id, tf.token, ln(1 + (st.n - dfx.df + 0.5) / (dfx.df + 0.5)) * ((tf.tf * (1.2 + 1)) / (tf.tf + 1.2 * ((1 - 0.75) + 0.75 * (dl.dl / st.avgdl)))) AS c FROM qt JOIN dfx USING (token) JOIN tf USING (token) JOIN dl USING (doc_id), st), sL AS (SELECT query_id, doc_id, list_aggregate(list(c ORDER BY token), 'sum') AS score FROM m GROUP BY 1, 2), lex AS (SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank FROM sL WHERE doc_id <> query_id), vq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5), vs AS (SELECT vq.query_id, e.vec_id AS doc_id, row_number() OVER (PARTITION BY vq.query_id ORDER BY list_cosine_similarity(e.embedding, vq.qv) DESC, e.vec_id) AS rank FROM embeddings e, vq WHERE e.vec_id <> vq.query_id), u AS (SELECT query_id, doc_id, 'lex' AS src, 1.0 / (60 + rank) AS c FROM lex WHERE rank <= 10 UNION ALL SELECT query_id, doc_id, 'vec' AS src, 1.0 / (60 + rank) AS c FROM vs WHERE rank <= 10), f AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_sources, list_aggregate(list(c ORDER BY src), 'sum') AS score FROM u GROUP BY 1, 2), r AS (SELECT query_id, doc_id, n_sources, score, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk FROM f) SELECT query_id, CAST(rnk AS BIGINT) AS rank, doc_id, n_sources, score FROM r WHERE rnk <= 5 ORDER BY query_id, rank""",
-    "q141_winnow_fingerprints" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), sel AS (SELECT w.doc_id, max(g2.gpos) AS pos, w.mh AS fp FROM w JOIN g g2 ON g2.doc_id = w.doc_id AND g2.gpos BETWEEN w.wpos AND w.wpos + 3 AND g2.gh = w.mh GROUP BY w.doc_id, w.wpos, w.mh) SELECT DISTINCT doc_id, pos, fp FROM sel ORDER BY doc_id, pos, fp""",
-    // q148: same winnowing CTEs as q141/q142; the df gate runs over the
-    // CORPUS half only (the index's build-time gate), pairs cross halves
-    "q148_stream_overlap_gate" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), corpus AS (SELECT * FROM fpd WHERE doc_id < 250), rare AS (SELECT fp FROM corpus GROUP BY fp HAVING count(*) <= 100), ci AS (SELECT c.fp, c.doc_id FROM corpus c JOIN rare USING (fp)), arr AS (SELECT * FROM fpd WHERE doc_id >= 250) SELECT a.doc_id AS id_a, c.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM arr a JOIN ci c ON a.fp = c.fp GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""",
-    "q142_winnow_overlap" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), rare AS (SELECT fp FROM fpd GROUP BY fp HAVING count(*) <= 100), pr AS (SELECT f.fp, f.doc_id FROM fpd f JOIN rare USING (fp)) SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""",
-    // q128: brute-force cosine membership of the constructed arrivals
-    // against the corpus (the q96 precedent for the float compare — the
-    // planted margins keep every decision >= 0.45 away from the threshold)
-    "q128_stream_embed_dedup" ->
-      """WITH arr AS (SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 50 UNION ALL SELECT vec_id + 2000000, list_transform(embedding, x -> -x) FROM embeddings WHERE vec_id >= 50 AND vec_id < 75) SELECT DISTINCT a.vec_id AS vec_id FROM arr a JOIN embeddings c ON list_cosine_similarity(a.embedding, c.embedding) >= 0.95 ORDER BY a.vec_id""",
-    // q121 is the EXISTS inverse of q46's novel-docs oracle: the streaming
-    // reject list = arrivals WITH a J>=0.9 token-set near-dup in the corpus
-    "q121_stream_ingest_dedup" ->
-      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""",
-    // q123 grades the streaming maintained view against q114's batch oracle
-    "q123_stream_maintained_view" ->
-      "SELECT o_custkey, CAST(count(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS n, CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_v, CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS min_v, CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS max_v FROM orders GROUP BY o_custkey ORDER BY o_custkey",
-    // q122 grades the streaming serving loop against q112's batch oracle
-    "q122_stream_knn_serve" ->
-      "WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 25), s AS (SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (PARTITION BY q.query_id ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id) AS rn FROM embeddings e, q WHERE e.vec_id <> q.query_id) SELECT query_id, neighbor_id FROM s WHERE rn <= 5 ORDER BY query_id, neighbor_id",
-    // q124: incremental-vs-batch index build parity is a Spark-side
-    // full-outer contract (the q113 pattern)
-    "q124_stream_index_ingest" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q125: reference LM = DISTINCT bigram types of doc_id < 250; per
-    // scored doc, bigram occurrences and out-of-model occurrences, with
-    // the integer-threshold head(<=1/10)/middle(<=1/2)/tail bucketing
-    "q125_lm_quality_buckets" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT doc_id, unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), ref AS (SELECT DISTINCT b FROM bg WHERE doc_id < 250), sc AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, CAST(sum(CASE WHEN ref.b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov FROM bg LEFT JOIN ref ON bg.b = ref.b WHERE bg.doc_id >= 250 GROUP BY bg.doc_id) SELECT doc_id, n_bigrams, n_oov, CASE WHEN n_oov * 10 <= n_bigrams THEN 'head' WHEN n_oov * 2 <= n_bigrams THEN 'middle' ELSE 'tail' END AS bucket FROM sc ORDER BY doc_id""",
-    // q126 grades the streaming gate against q125's SAME oracle (the
-    // q122/q112 pairing pattern)
-    "q126_stream_quality_gate" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), bg AS (SELECT doc_id, unnest([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))]) AS b FROM tok WHERE len(ts) >= 2), ref AS (SELECT DISTINCT b FROM bg WHERE doc_id < 250), sc AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, CAST(sum(CASE WHEN ref.b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov FROM bg LEFT JOIN ref ON bg.b = ref.b WHERE bg.doc_id >= 250 GROUP BY bg.doc_id) SELECT doc_id, n_bigrams, n_oov, CASE WHEN n_oov * 10 <= n_bigrams THEN 'head' WHEN n_oov * 2 <= n_bigrams THEN 'middle' ELSE 'tail' END AS bucket FROM sc ORDER BY doc_id""",
-    "q111_entity_resolution" ->
-      """WITH RECURSIVE tok AS (SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM documents), corpus AS (SELECT w FROM tok UNION SELECT substr(w, 2) FROM tok WHERE len(w) >= 4), pairs AS (SELECT a.w AS src, b.w AS dst FROM corpus a JOIN corpus b ON a.w <> b.w AND levenshtein(a.w, b.w) <= 1), reach AS (SELECT w AS id, w AS r FROM corpus UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS w, min(r) AS c FROM reach GROUP BY id), rep AS (SELECT c, w AS rep FROM (SELECT c, w, row_number() OVER (PARTITION BY c ORDER BY len(w) DESC, w) AS rn FROM canon) WHERE rn = 1) SELECT canon.w, rep.rep FROM canon JOIN rep USING (c) ORDER BY w""",
-    "q88_compaction" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q89_cc_deep_chain" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q90_sync_deletes" ->
-      """WITH base AS (SELECT o_orderkey, o_totalprice, 0 AS prec FROM orders WHERE o_orderkey <= 4000), delta AS (SELECT o_orderkey, -o_totalprice AS o_totalprice, 1 AS prec FROM orders WHERE o_orderkey BETWEEN 2000 AND 6000), u AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY prec DESC) AS rn FROM (SELECT * FROM base UNION ALL SELECT * FROM delta)) SELECT o_orderkey, o_totalprice FROM u WHERE rn = 1 AND o_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderkey >= 2000) ORDER BY o_orderkey""",
-    "q91_hash_file_sync" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q92_stream_enrich" ->
-      "WITH d AS (SELECT user_id, count(*) AS n_ev FROM events GROUP BY user_id) SELECT e.event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(d.n_ev) AS BIGINT) AS sum_n_ev FROM events e JOIN d ON e.user_id = d.user_id GROUP BY e.event_type ORDER BY e.event_type",
-    "q93_stream_upsert_sync" ->
-      """WITH src AS (SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, event_id, CAST(round(value*100) AS BIGINT) AS cents FROM events), latest AS (SELECT user_id, ts_us, event_id, cents, row_number() OVER (PARTITION BY user_id ORDER BY ts_us DESC, event_id DESC) AS rn FROM src) SELECT user_id, ts_us, event_id, cents FROM latest WHERE rn = 1 UNION ALL SELECT CAST(-999 AS BIGINT), CAST(0 AS BIGINT), CAST(-1 AS BIGINT), CAST(7 AS BIGINT) ORDER BY user_id""",
-    "q94_passage_dedup" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, ts FROM tok WHERE len(ts) >= 8), g AS (SELECT doc_id, pos, ts[pos]||' '||ts[pos+1]||' '||ts[pos+2]||' '||ts[pos+3]||' '||ts[pos+4]||' '||ts[pos+5]||' '||ts[pos+6]||' '||ts[pos+7] AS gram FROM (SELECT doc_id, ts, unnest(range(1, len(ts)-6)) AS pos FROM tri)), keep AS (SELECT gram FROM (SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY gram) WHERE df BETWEEN 2 AND 20), gg AS (SELECT g.doc_id, g.pos, g.gram FROM g JOIN keep USING (gram)), pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, a.pos - b.pos AS diag FROM gg a JOIN gg b ON a.gram = b.gram AND a.doc_id < b.doc_id), runs AS (SELECT da, db, diag, pa - row_number() OVER (PARTITION BY da, db, diag ORDER BY pa) AS grp FROM pairs), islands AS (SELECT da, db, count(*) AS rl FROM runs GROUP BY da, db, grp, diag) SELECT da AS doc_a, db AS doc_b, CAST(max(rl) + 7 AS BIGINT) AS run_tokens FROM islands GROUP BY da, db HAVING max(rl) + 7 >= 20 ORDER BY doc_a, doc_b""",
-    "q97_zorder_layout" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q104_pruned_read" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q105_snapshot_diff" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, CAST(round(o_totalprice*100) AS BIGINT) AS cents FROM orders), a AS (SELECT o_orderkey, o_custkey, CASE WHEN o_orderkey % 89 = 0 THEN cents + 1 ELSE cents END AS cents FROM b WHERE o_orderkey % 97 <> 0 UNION ALL SELECT o_orderkey + 100000000, o_custkey, cents FROM b WHERE o_orderkey % 101 = 0) SELECT o_orderkey, change_type FROM (SELECT COALESCE(b.o_orderkey, a.o_orderkey) AS o_orderkey, CASE WHEN b.o_orderkey IS NULL THEN 'added' WHEN a.o_orderkey IS NULL THEN 'removed' WHEN b.o_custkey IS DISTINCT FROM a.o_custkey OR b.cents IS DISTINCT FROM a.cents THEN 'changed' END AS change_type FROM b FULL OUTER JOIN a ON b.o_orderkey = a.o_orderkey) WHERE change_type IS NOT NULL ORDER BY o_orderkey""",
-    "q106_shard_shuffle" ->
-      "WITH r AS (SELECT doc_id, row_number() OVER (ORDER BY md5('graft:'||CAST(doc_id AS VARCHAR)), doc_id) - 1 AS global_rank FROM documents) SELECT doc_id, CAST(global_rank AS BIGINT) AS global_rank, CAST(global_rank // 32 AS BIGINT) AS shard, CAST(global_rank % 32 AS BIGINT) AS pos FROM r ORDER BY doc_id",
-    "q102_curation_pipeline" ->
-      """WITH f AS (SELECT doc_id, text, source, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents), k AS (SELECT doc_id, text, source FROM f WHERE n_tok >= 5 AND n_stop * 2 <= n_tok AND s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr), d AS (SELECT min(doc_id) AS doc_id FROM k GROUP BY text), sv AS (SELECT k.source, k.doc_id, CAST(len(regexp_extract_all(lower(k.text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM k JOIN d USING (doc_id)), c AS (SELECT source, doc_id, n_tokens, sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM sv) SELECT source, doc_id, n_tokens FROM c WHERE cum <= 500 ORDER BY source, doc_id""",
-    "q100_token_budget" ->
-      "WITH d AS (SELECT source, doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens FROM documents), c AS (SELECT source, doc_id, n_tokens, sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d) SELECT source, doc_id, n_tokens FROM c WHERE cum <= 800 ORDER BY source, doc_id",
-    "q98_trailing_window" ->
-      "SELECT event_id, CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS trail_cents, CAST(count(*) OVER w AS BIGINT) AS trail_n FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) ORDER BY event_id",
-    "q99_topk_per_group" ->
-      "SELECT source, doc_id, n_chars, rk FROM (SELECT source, doc_id, n_chars, CAST(row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk FROM documents) WHERE rk <= 3 ORDER BY source, rk",
-    "q96_semantic_dedup" ->
-      """WITH corpus AS (SELECT vec_id, embedding FROM embeddings UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 50), removed AS (SELECT DISTINCT b.vec_id FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.95) SELECT vec_id FROM corpus WHERE vec_id NOT IN (SELECT vec_id FROM removed) ORDER BY vec_id""",
-    "q95_dup_gram_share" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, ts FROM tok WHERE len(ts) >= 8), g AS (SELECT doc_id, ts[pos]||' '||ts[pos+1]||' '||ts[pos+2]||' '||ts[pos+3]||' '||ts[pos+4]||' '||ts[pos+5]||' '||ts[pos+6]||' '||ts[pos+7] AS gram FROM (SELECT doc_id, ts, unnest(range(1, len(ts)-6)) AS pos FROM tri)), dfq AS (SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY gram) SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams, CAST(sum(CASE WHEN dfq.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams FROM g JOIN dfq USING (gram) GROUP BY g.doc_id ORDER BY doc_id""",
-    "q79_group_percentiles" ->
-      "SELECT event_type, CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(round(value*100) AS BIGINT)) AS BIGINT) AS med_cents, CAST(percentile_disc(0.9) WITHIN GROUP (ORDER BY CAST(round(value*100) AS BIGINT)) AS BIGINT) AS p90_cents FROM events GROUP BY event_type ORDER BY event_type",
-    "q80_gap_fill" ->
-      """WITH b AS (SELECT user_id, epoch_ns(ts) // 3600000000000 AS bk, CAST(round(value*100) AS BIGINT) AS cents, row_number() OVER (PARTITION BY user_id, epoch_ns(ts) // 3600000000000 ORDER BY ts DESC, event_id DESC) AS rn FROM events), lastb AS (SELECT user_id, bk, cents FROM b WHERE rn = 1), bounds AS (SELECT user_id, min(bk) AS b0, max(bk) AS b1 FROM lastb GROUP BY user_id), grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bk FROM bounds), j AS (SELECT g.user_id, g.bk, l.cents FROM grid g LEFT JOIN lastb l ON g.user_id = l.user_id AND g.bk = l.bk) SELECT user_id, CAST(bk AS BIGINT) AS bk, last_value(cents IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bk ROWS UNBOUNDED PRECEDING) AS cents FROM j ORDER BY user_id, bk""",
-    "q76_rollup_geo" ->
-      """WITH j AS (SELECT r.r_name, n.n_name, o.o_totalprice FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey JOIN nation n ON c.c_nationkey = n.n_nationkey JOIN region r ON n.n_regionkey = r.r_regionkey) SELECT coalesce(r_name, '<all>') AS r_name, coalesce(n_name, '<all>') AS n_name, CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents, CAST(GROUPING(r_name) * 2 + GROUPING(n_name) AS BIGINT) AS gid FROM j GROUP BY ROLLUP(r_name, n_name) ORDER BY gid, r_name, n_name""",
-    "q16_dedup_exact" ->
-      "SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text ORDER BY doc_id",
-    "q17_token_stats" ->
-      "SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens, CAST(floor((length(text)+3)/4.0) AS BIGINT) AS n_bpe FROM documents ORDER BY doc_id",
-    "q18_text_quality" ->
-      """WITH f AS (SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(text, '[.!?,;:]')) AS n_punct, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop FROM documents) SELECT doc_id, CAST(n_punct AS BIGINT) AS n_punct, CAST(n_stop AS BIGINT) AS n_stop, CAST(CASE WHEN n_tok >= 5 AND n_stop * 2 <= n_tok THEN 1 ELSE 0 END AS BIGINT) AS quality_ok FROM f ORDER BY doc_id""",
-    "q19_lang_id" ->
-      """WITH s AS (SELECT doc_id, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents) SELECT doc_id, CASE WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en' WHEN s_de > 0 AND s_de >= s_es AND s_de >= s_fr AND s_de > s_en THEN 'de' WHEN s_es > 0 AND s_es >= s_fr AND s_es > s_en AND s_es > s_de THEN 'es' WHEN s_fr > 0 AND s_fr > s_en AND s_fr > s_de AND s_fr > s_es THEN 'fr' ELSE 'unk' END AS lang_pred FROM s ORDER BY doc_id""",
-    "q20_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp FROM documents ORDER BY doc_id""",
-    "q21_dedup_minhash" ->
-      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tok a JOIN tok b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.ts, b.ts)) * 10 >= len(list_distinct(list_concat(a.ts, b.ts))) * 9 ORDER BY doc_a, doc_b""",
-    "q22_dedup_ngram" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM tri a JOIN tri b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7 ORDER BY doc_a, doc_b""",
-    "q23_simhash_invariant" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q24_embed_topk" ->
-      "SELECT vec_id FROM (SELECT e.vec_id FROM embeddings e, (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q WHERE e.vec_id <> 0 ORDER BY list_cosine_similarity(e.embedding, q.qv) DESC, e.vec_id LIMIT 10) ORDER BY vec_id",
-    "q25_embed_neardup" ->
-      "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.5 ORDER BY vec_a, vec_b",
-    "q26_ann_topk" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q27_multimodal_decode" ->
-      "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, CAST(64 + octet_length(encode(text)) % 64 AS BIGINT) AS width, CAST(64 + (octet_length(encode(text)) // 64) % 64 AS BIGINT) AS height, CAST(CASE WHEN octet_length(encode(text)) = 0 THEN 0 WHEN ascii(substr(text, 1, 1)) < 128 THEN ascii(substr(text, 1, 1)) ELSE 0 END AS BIGINT) AS checksum FROM documents ORDER BY doc_id",
-    "q28_json_extract" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events ORDER BY event_id",
-    "q29_running_sum" ->
-      "SELECT event_id, user_id, CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_cents FROM events ORDER BY event_id",
-    "q30_rollup_stats" ->
-      "SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents FROM events GROUP BY ROLLUP(event_type) ORDER BY event_type NULLS FIRST",
-    "q31_approx_distinct" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q36_ivf_recall" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q37_lsh_pair_recall" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q38_simhash_neardup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q39_corpus_clean" ->
-      """WITH f AS (SELECT doc_id, text, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS n_stop, len(regexp_extract_all(lower(text), '\b(the|of|and|is|to)\b')) AS s_en, len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de, len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|de)\b')) AS s_es, len(regexp_extract_all(lower(text), '\b(le|les|des|est|et|une)\b')) AS s_fr FROM documents), k AS (SELECT doc_id, text FROM f WHERE n_tok >= 5 AND n_stop * 2 <= n_tok AND s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr) SELECT min(doc_id) AS doc_id, text FROM k GROUP BY text ORDER BY doc_id""",
-    "q40_vocab_topk" ->
-      "SELECT token, CAST(count(*) AS BIGINT) AS n FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents) GROUP BY token ORDER BY n DESC, token LIMIT 100",
-    "q41_asof_join" ->
-      "SELECT p.event_id, epoch_us(v.ts) AS view_us FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'view') v ON p.user_id = v.user_id AND p.ts >= v.ts ORDER BY p.event_id",
-    "q42_percentile_sketch" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q47_chunking" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), k AS (SELECT doc_id, ts, CASE WHEN len(ts) <= 8 THEN 1 ELSE CAST(ceil((len(ts) - 8) / 24.0) AS BIGINT) END AS nk FROM tok WHERE len(ts) > 0) SELECT doc_id, CAST(x.i AS BIGINT) AS chunk_idx, CAST(len(ts[x.i*24+1 : x.i*24+32]) AS BIGINT) AS n_chunk_tokens FROM k, LATERAL (SELECT unnest(range(0, nk)) AS i) x ORDER BY doc_id, chunk_idx""",
-    // corpus side restricted to non-empty token sets (empty sets generate no
-    // band keys in the Spark plan); batch docs with empty token sets are
-    // novel by definition on both sides
-    "q46_novel_docs" ->
-      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE NOT EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""",
-    "q44_hash_split" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q45_cap_per_source" ->
-      "SELECT doc_id, source FROM (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn FROM documents) WHERE rn <= 5 ORDER BY doc_id",
-    "q43_range_pairs" ->
-      "SELECT a.user_id, CAST(count(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id)) AND b.ts - a.ts <= INTERVAL 1 HOUR GROUP BY a.user_id ORDER BY a.user_id",
-    "q48_repetition" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, greatest(len(ts) - 1, 0) AS n2, CASE WHEN len(ts) >= 2 THEN len(list_distinct([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))])) ELSE 0 END AS d2 FROM tok) SELECT doc_id, CAST(n2 AS BIGINT) AS n2, CAST(d2 AS BIGINT) AS d2, CAST(CASE WHEN n2 > 0 AND d2 * 20 < n2 * 19 THEN 1 ELSE 0 END AS BIGINT) AS repetitive FROM g ORDER BY doc_id""",
-    "q49_decontaminate" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, unnest([array_to_string(ts[i:i+12], ' ') for i in range(1, len(ts) - 11)]) AS g FROM tok WHERE len(ts) >= 13) SELECT DISTINCT b.doc_id FROM g b WHERE b.doc_id >= 250 AND EXISTS (SELECT 1 FROM g c WHERE c.doc_id < 250 AND c.g = b.g) ORDER BY doc_id""",
-    "q50_pivot_counts" ->
-      "SELECT user_id, CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS n_view, CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS n_click, CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n_purchase, CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS n_signup, CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS n_error FROM events GROUP BY user_id ORDER BY user_id",
-    "q51_event_lag" ->
-      "SELECT event_id, CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rn, CAST(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS gap_us FROM events ORDER BY event_id",
-    "q52_histogram" ->
-      "SELECT CAST(round(value * 100) AS BIGINT) // 500 AS bucket, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY bucket ORDER BY bucket",
-    "q53_bloom_filter" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q54_stream_windows" ->
-      "SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY w_us, event_type ORDER BY w_us, event_type",
-    "q55_pq_recall" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q56_skew_salted_agg" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q57_ivfpq_recall" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q59_mixture_sample" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q61_stream_dedup" ->
-      "SELECT DISTINCT user_id FROM events ORDER BY user_id",
-    "q62_cms_heavy_hitters" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q65_sql_parity" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q66_packing" ->
-      """WITH t AS (SELECT doc_id, source, CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tok FROM documents), s AS (SELECT doc_id, source, n_tok, CAST(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_tok FROM t) SELECT doc_id, source, n_tok, start_tok, start_tok // 64 AS first_win, CASE WHEN n_tok = 0 THEN start_tok // 64 ELSE (start_tok + n_tok - 1) // 64 END AS last_win FROM s ORDER BY doc_id""",
-    "q63_source_quality" ->
-      """WITH f AS (SELECT source, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS nt, len(regexp_extract_all(lower(text), '\b(the|a|an|of|and|to|in|is|it|for)\b')) AS nstop FROM documents), g AS (SELECT source, nt, CASE WHEN nt >= 5 AND nstop * 2 <= nt THEN 1 ELSE 0 END AS ok, greatest(len(ts) - 1, 0) AS n2, CASE WHEN len(ts) >= 2 THEN len(list_distinct([ts[i] || ' ' || ts[i+1] for i in range(1, len(ts))])) ELSE 0 END AS d2 FROM f) SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(ok) AS BIGINT) AS n_quality_ok, CAST(sum(nt) AS BIGINT) AS total_tokens, CAST(sum(CASE WHEN n2 > 0 AND d2 * 20 < n2 * 19 THEN 1 ELSE 0 END) AS BIGINT) AS n_repetitive FROM g GROUP BY source ORDER BY source""",
-    "q60_freq_spectrum" ->
-      "SELECT occ, CAST(count(*) AS BIGINT) AS n_tokens FROM (SELECT token, CAST(count(*) AS BIGINT) AS occ FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents) GROUP BY token) GROUP BY occ ORDER BY occ",
-    "q58_rare_terms" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents), tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, token), dfx AS (SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS df FROM tok GROUP BY token), r AS (SELECT tf.doc_id, tf.token, tf.tf, dfx.df, row_number() OVER (PARTITION BY tf.doc_id ORDER BY dfx.df, tf.token) AS rn FROM tf JOIN dfx USING (token)) SELECT doc_id, token, tf, df FROM r WHERE rn = 1 ORDER BY doc_id""",
-    "q32_sessionize" ->
-      "SELECT user_id, count(*) AS n_events, CAST(1 + sum(brk) AS BIGINT) AS n_sessions FROM (SELECT user_id, CASE WHEN prev IS NULL OR ts - prev <= INTERVAL 30 MINUTE THEN 0 ELSE 1 END AS brk FROM (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)) GROUP BY user_id ORDER BY user_id",
-    "q35_frame_sample" ->
-      "SELECT doc_id, CAST(x.i AS BIGINT) AS frame_idx, CAST(x.i * 256 AS BIGINT) AS byte_offset FROM documents, LATERAL (SELECT unnest(range(0, greatest(CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT), 1))) AS i) x ORDER BY doc_id, frame_idx",
-    "q34_funnel" ->
-      "SELECT CAST(count(*) AS BIGINT) AS total, CAST(count(CASE WHEN regexp_matches(s, '(^| )view click purchase( |$)') THEN 1 END) AS BIGINT) AS converted FROM (SELECT user_id, string_agg(event_type, ' ' ORDER BY ts, event_id) AS s FROM events GROUP BY user_id)",
-    "q33_dedup_canonical" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id) SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id ORDER BY doc_id""",
-    "q64_dedup_keep_best" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id), sc AS (SELECT c.canon, c.doc_id, CAST(len(t.ts) AS BIGINT) AS nt FROM canon c JOIN tok t USING (doc_id)), w AS (SELECT canon, doc_id, nt, row_number() OVER (PARTITION BY canon ORDER BY nt DESC, doc_id) AS rn FROM sc) SELECT canon, doc_id AS kept_id, nt AS n_tokens FROM w WHERE rn = 1 ORDER BY canon""",
-    // q208: gate-vs-batch BPE parity is a Spark-side full-outer contract
-    // (the q154/q203 family — no SQL engine replays a merge list)
-    "q208_stream_bpe_gate" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q209/q210: accumulated-pairs-vs-planted-expectation and persisted-
-    // index-vs-batch-fingerprints are Spark-side contracts (the
-    // q115/q206 planted-construction family)
-    "q209_stream_image_dedup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q210_stream_audio_dedup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q241/q242: planted-construction video pairs (the q115/q206/q209
-    // family) — expectations derive from the id arithmetic Spark-side
-    "q241_video_neardup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    "q242_stream_video_dedup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q247: planted-construction erasure over the fingerprint family —
-    // expectations derive from the id arithmetic Spark-side (q211's
-    // contract in the q209 violations form)
-    "q247_takedown_media_index" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q211: q121's serving oracle over the SURVIVING corpus — the
-    // tombstone (corpus docs < 100) provably changes the answer at every
-    // graded SF (sf0.01: 118 -> 107 served ids)
-    "q211_takedown_band_index" ->
-      """WITH tok AS (SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ts FROM documents), c AS (SELECT * FROM tok WHERE doc_id < 250 AND doc_id >= 100 AND len(ts) > 0), b AS (SELECT * FROM tok WHERE doc_id >= 250) SELECT b.doc_id FROM b WHERE EXISTS (SELECT 1 FROM c WHERE len(list_intersect(b.ts, c.ts)) * 10 >= len(list_distinct(list_concat(b.ts, c.ts))) * 9) ORDER BY b.doc_id""",
-    // q212: gated-serve-vs-survivor-rebuild parity under one fixed
-    // quantizer is a Spark-side full-outer contract (the q124 family)
-    "q212_takedown_ann_serve" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q213: streamed-vs-batch SimHash pair parity is a Spark-side
-    // exact-set contract (the q38/q158 family)
-    "q213_stream_simhash_dedup" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q217: DuckDB's own discrete-quantile aggregate, zipped with the
-    // permille labels by parallel unnest
-    "q217_exact_quantiles" ->
-      "WITH a AS (SELECT quantile_disc(n_chars, [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]) AS qs FROM documents) SELECT CAST(unnest([100, 250, 500, 750, 900, 990]) AS BIGINT) AS prob_pm, CAST(unnest(qs) AS BIGINT) AS value FROM a ORDER BY prob_pm",
-    // q219: distributed-vs-independent-driver MMR greedy parity plus
-    // structural/diversity invariants — a Spark-side contract (float
-    // cosines never cross engines; the q152/q124 family)
-    "q219_mmr_rerank" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q220: streamed-vs-batch MMR serving parity (the q124 family)
-    "q220_stream_mmr_serve" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q221: string 5-grams in the oracle (the Spark side hashes — the
-    // q21-family collision envelope)
-    "q221_novel_ngram_rate" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts) - 3), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2]||' '||ts[i+3]||' '||ts[i+4])) AS gs FROM tok WHERE len(ts) >= 5), ref AS (SELECT DISTINCT unnest(gs) AS gr FROM g WHERE doc_id < 250), c AS (SELECT doc_id, unnest(gs) AS gr FROM g WHERE doc_id >= 250) SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_grams, CAST(count(CASE WHEN ref.gr IS NULL THEN 1 END) AS BIGINT) AS n_novel, CAST(count(CASE WHEN ref.gr IS NULL THEN 1 END) * 1000 // count(*) AS BIGINT) AS novelty_pm FROM c LEFT JOIN ref ON c.gr = ref.gr GROUP BY c.doc_id ORDER BY c.doc_id""",
-    // q222: the DuckDB side reconstructs the SAME history from first
-    // principles — a dense (key x version) calendar, gaps-and-islands on
-    // null-safe value+presence changes, interval bounds from island
-    // extents (valid_to = next island's start; versions are dense so
-    // that is max_ver + 1, and an island reaching the last version is
-    // open = 0). Two INDEPENDENT formulations of SCD2 agreeing row-level
-    "q222_scd2_history" -> Scd2FullHistoryOracleSql,
-    // q248: the island law with closed-before-horizon islands dropped —
-    // valid_to = 0 (open) or > 2 means max_ver >= 2 in island terms; a
-    // drifted base string would no-op the replace and fail the gate
-    "q248_history_retention" -> Scd2FullHistoryOracleSql.replace(
-      "WHERE present = 1 ORDER BY", "WHERE present = 1 AND max_ver >= 2 ORDER BY"),
-    // q245: the streamed CDC ingest (upserts + explicit deletes) grades
-    // against the SAME full-snapshot history law — CDC events replicate
-    // scd2Apply's close-on-absence exactly when deletes are explicit
-    "q245_stream_scd2_cdc" -> Scd2FullHistoryOracleSql,
-    // q256: the island law restricted to SURVIVING keys — a tombstoned
-    // key (%13) must contribute NO interval at any version, round-2
-    // re-deliveries included; everything else is row-identical to the
-    // q222/q245 history (a drifted base string no-ops the replace and
-    // fails the gate, the q248 convention)
-    "q256_history_erasure" -> Scd2FullHistoryOracleSql.replace(
-      "WHERE present = 1 ORDER BY",
-      "WHERE present = 1 AND o_orderkey % 13 <> 0 ORDER BY"),
-    // q223: the oracle is snapshot 2's own definition — time travel
-    // through the 3-version history must land exactly on it
-    "q223_asof_snapshot" ->
-      (ScdSnapshotCtes + " SELECT o_orderkey, o_custkey, cents FROM s2 ORDER BY o_orderkey"),
-    // q225: NO history reconstruction in the oracle — PIT at version v
-    // is definitionally a join against snapshot v (intervals partition
-    // each key's timeline), stated per-fact over the shared s1/s2/s3
-    "q225_pit_join" -> PitOracleSql,
-    // q237: the STREAMED pit enrichment grades against the same batch
-    // PIT oracle (batch-split invariance of a per-row stream-static join)
-    "q237_stream_pit_enrich" -> PitOracleSql,
-    // q249: the q245-maintained CDC history serving q237's enrichment —
-    // the SAME batch PIT law grades the whole maintenance-then-serve
-    // composition (explicit deletes replicate full-snapshot semantics,
-    // so the maintained intervals must land exactly where scd2Apply's do)
-    "q249_stream_pit_maintained" -> PitOracleSql,
-    // q239: the expected kept blocks stated outright — only the
-    // whitespace collapse is replayed (on the planted body fragments);
-    // the block segmentation and the length/link-density decisions are
-    // independent by construction
-    "q239_main_content" -> mainContentOracleSqlOver(""),
-    // q246: the gate keeps exactly the minKept=3 pages — the %4 docs
-    // carrying the extra link-free paragraph — under the same planted
-    // CTE; everything else must be absent from the accumulated log
-    "q246_stream_main_content" -> mainContentOracleSqlOver(" WHERE doc_id % 4 = 0"),
-    // q250: the per-source curation report replayed over the shared
-    // planted CTE — token counts on the EXTRACTED text, q17's pattern
-    "q250_web_curation" ->
-      (mainContentPlantedCte("") +
-        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
-        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
-        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
-        "FROM tk GROUP BY source ORDER BY source"),
-    // q238: identical planted concat, identical pattern in RE2
-    "q238_sentences" ->
-      """WITH h AS (SELECT doc_id, substr(text, 1, 50) || '. ' || substr(text, 51, 40) || '? ' || substr(text, 91, 30) || '! tail' AS t2 FROM documents), s AS (SELECT doc_id, regexp_extract_all(t2, '[^.!?]+[.!?]*') AS ss FROM h), e AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS sent_idx, trim(ss[i]) AS sentence FROM s, LATERAL unnest(range(1, len(ss) + 1)) AS u(i)) SELECT doc_id, sent_idx, sentence, CAST(len(sentence) AS BIGINT) AS n_chars FROM e WHERE sentence <> '' ORDER BY doc_id, sent_idx""",
-    // q236: violating quasi-identifier combos stated by the same SQL
-    "q236_k_anonymity" ->
-      "SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n FROM customer GROUP BY 1, 2 HAVING count(*) < 10 ORDER BY c_nationkey, c_mktsegment",
-    // q235: the expected report stated outright
-    "q235_schema_drift" ->
-      "SELECT * FROM (VALUES ('doc_id', 'renullabled', 'bigint', 'bigint not null'), ('fetched_at', 'added', '-', 'bigint'), ('lang', 'removed', 'string', '-'), ('n_chars', 'retyped', 'bigint', 'int')) AS t(column_name, change, type_before, type_after) ORDER BY column_name",
-    // q243: ground truth for the budgeted frontier — every sparse-host
-    // row plus exactly the 10 lowest hot-host ids, canonical strings
-    // and hosts stated outright (the q226/q234 convention)
-    "q243_host_frontier_budget" ->
-      "WITH hot AS (SELECT doc_id FROM documents WHERE doc_id % 5 < 2 ORDER BY doc_id LIMIT 10) SELECT doc_id, CASE WHEN doc_id % 5 < 2 THEN 'http://hot.example.com/p/' || CAST(doc_id AS VARCHAR) ELSE 'http://s' || CAST(doc_id AS VARCHAR) || '.example.com/' END AS url_norm, CASE WHEN doc_id % 5 < 2 THEN 'hot.example.com' ELSE 's' || CAST(doc_id AS VARCHAR) || '.example.com' END AS host FROM documents WHERE doc_id % 5 >= 2 OR doc_id IN (SELECT doc_id FROM hot) ORDER BY doc_id",
-    // q234: ground truth for the frontier — min doc_id per canonical
-    // URL, with the canonical stated outright (the q226 convention)
-    "q234_url_frontier" ->
-      "SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, 'http://example.com/g/' || CAST(doc_id % 100 AS VARCHAR) || '?a=1&b=2' AS url_norm FROM documents GROUP BY doc_id % 100 ORDER BY doc_id",
-    // q233: the ground-truth s1-vs-s3 diff, stated without any history
-    "q233_version_diff" ->
-      (ScdSnapshotCtes + " SELECT o_orderkey, change_type FROM (SELECT COALESCE(b.o_orderkey, a.o_orderkey) AS o_orderkey, CASE WHEN b.o_orderkey IS NULL THEN 'added' WHEN a.o_orderkey IS NULL THEN 'removed' WHEN b.o_custkey IS DISTINCT FROM a.o_custkey OR b.cents IS DISTINCT FROM a.cents THEN 'changed' END AS change_type FROM s1 b FULL OUTER JOIN s3 a ON b.o_orderkey = a.o_orderkey) WHERE change_type IS NOT NULL ORDER BY o_orderkey"),
-    // q231: first frame + cuts from the planted gray walk, renumbered
-    "q231_keyframes" ->
-      """WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS fi FROM documents), g AS (SELECT doc_id, fi, 16 + (doc_id + 37 * fi) % 224 AS gray FROM f), c AS (SELECT doc_id, fi, lag(gray) OVER (PARTITION BY doc_id ORDER BY fi) AS pg, gray FROM g), k AS (SELECT doc_id, fi FROM c WHERE pg IS NULL OR abs(gray - pg) > 100) SELECT doc_id, CAST(fi AS BIGINT) AS frame_idx, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY fi) - 1 AS BIGINT) AS scene_idx FROM k ORDER BY doc_id, frame_idx""",
-    // q232: first-occurrence-per-line via min-position windows over the
-    // exploded lines — an INDEPENDENT formulation of the same keep rule
-    "q232_line_dedup_within" ->
-      """WITH h AS (SELECT doc_id, text || chr(10) || substr(text, 1, 40) || chr(10) || text || chr(10) || substr(text, 1, 40) AS t2 FROM documents), s AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM h), l AS (SELECT doc_id, ls[i] AS line, i AS pos FROM s, LATERAL unnest(range(1, len(ls) + 1)) AS u(i)), r AS (SELECT doc_id, line, pos, row_number() OVER (PARTITION BY doc_id, line ORDER BY pos) AS rn FROM l), k AS (SELECT doc_id, array_to_string(list(line ORDER BY pos), chr(10)) AS clean, count(*) AS n_kept FROM r WHERE rn = 1 GROUP BY doc_id), n AS (SELECT doc_id, count(*) AS n_lines FROM l GROUP BY doc_id) SELECT k.doc_id, k.clean, CAST(n.n_lines AS BIGINT) AS n_lines, CAST(n.n_lines - k.n_kept AS BIGINT) AS n_removed FROM k JOIN n ON k.doc_id = n.doc_id ORDER BY k.doc_id""",
-    // q230: the naive serial form of the curriculum order
-    "q230_curriculum_order" ->
-      "WITH p AS (SELECT doc_id, CASE WHEN n_chars >= 500 THEN 0 WHEN n_chars >= 200 THEN 1 ELSE 2 END AS priority FROM documents), r AS (SELECT doc_id, priority, row_number() OVER (ORDER BY priority, md5('graft:'||CAST(doc_id AS VARCHAR)), doc_id) - 1 AS g FROM p) SELECT doc_id, CAST(priority AS BIGINT) AS priority, CAST(g AS BIGINT) AS global_rank, CAST(g // 32 AS BIGINT) AS shard, CAST(g % 32 AS BIGINT) AS pos FROM r ORDER BY doc_id",
-    // q229: the upsert-SCD2 law stated directly — the history IS the
-    // delta log, each interval running to the key's next delta
-    "q229_scd2_upserts" -> Scd2UpsertOracleSql,
-    // q240: the STREAMED history maintenance grades against the same
-    // upsert-SCD2 law (exactly-once skip-or-merge + in-order folds make
-    // the maintained table equal the batch-applied history)
-    "q240_stream_scd2" -> Scd2UpsertOracleSql,
-    // q228: the planted gray walk replayed arithmetically — cut iff the
-    // inter-frame gray delta exceeds 100 (planted deltas: 37 or 187)
-    "q228_scene_cuts" ->
-      """WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS fi FROM documents), g AS (SELECT doc_id, fi, 16 + (doc_id + 37 * fi) % 224 AS gray FROM f), c AS (SELECT doc_id, fi, abs(gray - lag(gray) OVER (PARTITION BY doc_id ORDER BY fi)) AS dg FROM g) SELECT doc_id, CAST(1 + doc_id % 3 AS BIGINT) AS n_frames, CAST(count(CASE WHEN dg > 100 THEN 1 END) AS BIGINT) AS n_cuts, CAST(coalesce(min(CASE WHEN dg > 100 THEN fi END), -1) AS BIGINT) AS first_cut FROM c GROUP BY doc_id ORDER BY doc_id""",
-    // q227: the batch top-k SQL — the maintained state must reproduce
-    // it exactly under any micro-batch split
-    "q227_stream_topk_view" ->
-      """WITH tok AS (SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents), c AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1, 2), r AS (SELECT source, token, n, row_number() OVER (PARTITION BY source ORDER BY n DESC, token) AS rk FROM c) SELECT source, CAST(rk AS BIGINT) AS rank, token, n FROM r WHERE rk <= 3 ORDER BY source, rank""",
-    // q226: the oracle states the EXPECTED canonical per mess class
-    // outright (no normalizer re-run — independent by construction)
-    "q226_url_canonical" ->
-      """SELECT doc_id, CASE doc_id % 8 WHEN 0 THEN 'http://www.example.com/d/' || CAST(doc_id AS VARCHAR) || '?a=1&x=2' WHEN 1 THEN 'https://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 2 THEN 'https://example.com:8443/d/' || CAST(doc_id AS VARCHAR) || '?a=10&b=2' WHEN 3 THEN 'http://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 4 THEN 'http://tracker.example.com/' WHEN 5 THEN 'http://example.com/d/' || CAST(doc_id AS VARCHAR) WHEN 6 THEN 'http://e.com/D/' || CAST(doc_id AS VARCHAR) ELSE '__invalid__' END AS url_norm FROM documents ORDER BY doc_id""",
-    // q224: the identical planted wrapper and the identical strip chain
-    // in RE2 (inline (?is) + 'g' flag; explicit [ \t\n\r] class — Java's
-    // \s and RE2's \s disagree on 0x0B, so neither side uses \s)
-    "q224_html_extract" ->
-      """WITH h AS (SELECT doc_id, '<html><head><title>T</title><script type="x">var a = 1 < 2; s = "<p>";</script><style>p { color: red; }</style></head><body><!-- c --><h1>Doc</h1><p>' || text || '</p><a href="http://x">link &amp; more</a>' || CASE WHEN doc_id % 3 = 0 THEN '<a href="y">more</a>' ELSE '' END || '<p>A&lt;B &quot;q&quot; &#39;s&#39;&nbsp;end</p></body></html>' AS html FROM documents), c AS (SELECT doc_id, html, regexp_replace(regexp_replace(regexp_replace(regexp_replace(html, '(?s)<!--.*?-->', ' ', 'g'), '(?is)<script[^>]*>.*?</script>', ' ', 'g'), '(?is)<style[^>]*>.*?</style>', ' ', 'g'), '<[^>]*>', ' ', 'g') AS t FROM h), d AS (SELECT doc_id, html, regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(t, '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'), '&#39;', CHR(39), 'g'), '&apos;', CHR(39), 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g') AS t FROM c) SELECT doc_id, trim(regexp_replace(t, '[ \t\n\r]+', ' ', 'g')) AS clean, CAST(len(regexp_extract_all(html, '<[a-zA-Z/][^>]*>')) AS BIGINT) AS n_tags, CAST(len(regexp_extract_all(html, '(?i)<a[ \t\n\r>]')) AS BIGINT) AS n_links, CAST(len(regexp_extract_all(html, '(?i)<script[^>]*>')) AS BIGINT) AS n_scripts FROM d ORDER BY doc_id""",
-    // q218: quantile_disc per source, zipped with permille labels
-    "q218_source_quantiles" ->
-      "WITH a AS (SELECT source, quantile_disc(n_chars, [0.1, 0.5, 0.9]) AS qs FROM documents GROUP BY source) SELECT source, CAST(unnest([100, 500, 900]) AS BIGINT) AS prob_pm, CAST(unnest(qs) AS BIGINT) AS value FROM a ORDER BY source, prob_pm",
-    // q216: the q33 recursive-CTE components aggregated to the size
-    // histogram + integer redundancy permille
-    "q216_dup_cluster_sizes" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), tri AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1), i -> ts[i]||' '||ts[i+1]||' '||ts[i+2])) AS gs FROM tok WHERE len(ts) >= 3), pairs AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM tri a JOIN tri b ON a.doc_id <> b.doc_id WHERE len(list_intersect(a.gs, b.gs)) * 10 >= len(list_distinct(list_concat(a.gs, b.gs))) * 7), reach AS (SELECT doc_id AS id, doc_id AS r FROM documents UNION SELECT p.dst, reach.r FROM reach JOIN pairs p ON p.src = reach.id), canon AS (SELECT id, CAST(min(r) AS BIGINT) AS canon FROM reach GROUP BY id), sz AS (SELECT canon, CAST(count(*) AS BIGINT) AS cluster_size FROM canon GROUP BY canon), tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents) SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters, CAST(cluster_size * count(*) AS BIGINT) AS n_docs, CAST((cluster_size - 1) * count(*) * 1000 // (SELECT n FROM tot) AS BIGINT) AS redundant_pm FROM sz GROUP BY cluster_size ORDER BY cluster_size""",
-    // q215: the q167/q168 integer training replay scored under the final
-    // weights, swept over the SAME literal threshold ladder
-    "q215_classifier_sweep" -> svmOracleSql(
-      "SELECT t AS threshold_micros, n_kept, CAST(n_kept * 1000 // total AS BIGINT) AS kept_pm, " +
-        "n_pos, CAST(CASE WHEN n_kept > 0 THEN n_pos * 1000 // n_kept ELSE 0 END AS BIGINT) AS pos_pm " +
-        s"FROM (SELECT t, CAST(count(CASE WHEN m >= t THEN 1 END) AS BIGINT) AS n_kept, " +
-        s"CAST(count(CASE WHEN m >= t AND y = 1 THEN 1 END) AS BIGINT) AS n_pos, " +
-        s"CAST(count(*) AS BIGINT) AS total FROM m${SvmRounds + 1}, " +
-        "(SELECT CAST(unnest([-2000000, -1000000, -500000, 0, 500000, 1000000, 2000000]) AS BIGINT) AS t) " +
-        "GROUP BY t) ORDER BY threshold_micros"),
-    // q214: q148's serving oracle with the corpus restricted to the
-    // takedown survivors — the df<=100 hot gate recomputes over them
-    "q214_takedown_overlap_index" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents), g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS gh FROM tok, LATERAL unnest(range(1, len(ts) - 1)) AS t(i) WHERE len(ts) >= 3), n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS ng FROM g GROUP BY 1), mw AS (SELECT doc_id, gpos, min(gh) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh FROM g), w AS (SELECT mw.doc_id, mw.gpos AS wpos, mw.mh FROM mw JOIN n USING (doc_id) WHERE mw.gpos <= greatest(n.ng - 4, 0)), fpd AS (SELECT DISTINCT w.doc_id, w.mh AS fp FROM w), corpus AS (SELECT * FROM fpd WHERE doc_id < 250 AND doc_id >= 100), rare AS (SELECT fp FROM corpus GROUP BY fp HAVING count(*) <= 100), ci AS (SELECT c.fp, c.doc_id FROM corpus c JOIN rare USING (fp)), arr AS (SELECT * FROM fpd WHERE doc_id >= 250) SELECT a.doc_id AS id_a, c.doc_id AS id_b, CAST(count(*) AS BIGINT) AS n_shared FROM arr a JOIN ci c ON a.fp = c.fp GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""",
-    // q251: the well-formed response records stated outright from
-    // doc_id — rec_index arithmetic encodes which hazard records
-    // consume no index (warcinfo always at 0; the %7 malformed and the
-    // %11 lying-length records never count; the %5 request shifts
-    // responses by one); payload text replays the same substr slices
-    "q251_warc_records" ->
-      ("WITH e AS (SELECT doc_id, text, CAST(u.i AS BIGINT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 1)) AS u(i)) " +
-        "SELECT doc_id, " +
-        "CAST(1 + CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END + i AS BIGINT) AS rec_index, " +
-        "'http://ex.org/' || CAST(doc_id AS VARCHAR) || '/r' || CAST(i AS VARCHAR) AS url, " +
-        "'P ' || CAST(doc_id AS VARCHAR) || ' ' || CAST(i AS VARCHAR) || ' ' || " +
-        "substr(text, CAST(1 + i * 40 AS INT), 40) AS text " +
-        "FROM e ORDER BY doc_id, rec_index"),
-    // q252: the q250 per-source curation report — the WARC round trip
-    // must be byte-transparent, so the EXACT q250 oracle grades it
-    "q252_warc_curation" ->
-      (mainContentPlantedCte("") +
-        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
-        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
-        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
-        "FROM tk GROUP BY source ORDER BY source"),
-    // q253/q254: brute-force cosine membership of the constructed corpus
-    // against the benchmark set (the q128 float-margin precedent: planted
-    // twins at cosine 1, negations at -1, organic pairs far from 0.95)
-    "q253_embed_decontaminate" -> EmbedDecontaminateOracleSql,
-    "q254_stream_embed_decon_gate" -> EmbedDecontaminateOracleSql,
-    // q255: the assignment replayed in SQL (argmax over the first four
-    // coordinates, >= gives the lowest-cid tie-break; the one-hot
-    // centroids make dot = the coordinate itself on BOTH engines), the
-    // flood's cluster stated (a positive e0 multiple is cluster 0 by
-    // construction), the cap replayed as a row_number
-    // q258/q259: every robots decision stated outright from the planted
-    // (host, path) moduli — h0 blocks /private, h1's named-agent group
-    // eclipses its * group (only /public survives), h2 blocks the $-
-    // anchored pdf wildcard, h3 has no robots at all, h4's only group
-    // names another agent (no rules apply), h5 is the longest-match law
-    // (/a/b allowed under a /a disallow), h6's accumulated-UA group
-    // blocks /doc; q259 additionally restricts to the admitted rows
-    // (distinct canonicals, so frontier admission = allowance)
-    "q258_robots_gate" ->
-      (RobotsPlantedCte +
-        " SELECT doc_id, 'h' || CAST(h AS VARCHAR) || '.example.com' AS host, path, " +
-        "CAST(" + RobotsAllowedCase + " AS BIGINT) AS allowed FROM u ORDER BY doc_id"),
-    "q259_stream_robots_frontier" ->
-      (RobotsPlantedCte +
-        " SELECT doc_id, 'http://h' || CAST(h AS VARCHAR) || '.example.com' || path AS url_norm, " +
-        "'h' || CAST(h AS VARCHAR) || '.example.com' AS host " +
-        "FROM u WHERE " + RobotsAllowedCase + " ORDER BY doc_id"),
-    // q261: the join-form twin is graded by q258's EXACT oracle — the
-    // scale plan must be decision-identical
-    "q261_robots_gate_join" ->
-      (RobotsPlantedCte +
-        " SELECT doc_id, 'h' || CAST(h AS VARCHAR) || '.example.com' AS host, path, " +
-        "CAST(" + RobotsAllowedCase + " AS BIGINT) AS allowed FROM u ORDER BY doc_id"),
-    // q262: both arms must be clean — full-probe IVF is id-identical to
-    // brute force, and the tight probe misses zero planted twins
-    "q262_embed_decon_ivf" ->
-      ("SELECT CAST(0 AS BIGINT) AS parity_violations, " +
-        "CAST(0 AS BIGINT) AS missed_twins"),
-    // q263: the streaming ingest is graded by q252's SAME oracle — the
-    // two-batch arrival must be invisible in the per-source report
-    "q263_stream_warc_ingest" ->
-      (mainContentPlantedCte("") +
-        ", tk AS (SELECT source, CAST(len(regexp_extract_all(lower(main), '[a-z0-9]+')) AS BIGINT) AS n FROM m) " +
-        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(count(CASE WHEN n >= 25 THEN 1 END) AS BIGINT) AS n_kept, " +
-        "CAST(coalesce(sum(CASE WHEN n >= 25 THEN n END), 0) AS BIGINT) AS kept_tokens " +
-        "FROM tk GROUP BY source ORDER BY source"),
-    // q264: both round-trip laws hold — re-read fingerprint identity
-    // and replay-deterministic export bytes
-    "q264_warc_export_roundtrip" ->
-      "SELECT CAST(0 AS BIGINT) AS violations",
-    // q265: every surviving edge stated outright from doc_id moduli —
-    // the fragment-only and javascript: refs mint nothing
-    "q265_outlink_edges" ->
-      ("WITH u AS (SELECT doc_id, doc_id % 7 AS h, doc_id % 5 AS m, " +
-        "doc_id % 3 AS k, doc_id % 2 AS j FROM documents), " +
-        "e AS (SELECT doc_id, unnest([" +
-        "'https://abs.example.org/p' || CAST(doc_id AS VARCHAR), " +
-        "'http://cdn.example.net/lib', " +
-        "'http://h' || CAST(h AS VARCHAR) || '.example.com/b/c' || CAST(m AS VARCHAR), " +
-        "'http://h' || CAST(h AS VARCHAR) || '.example.com/up' || CAST(k AS VARCHAR), " +
-        "'http://h' || CAST(h AS VARCHAR) || '.example.com/dir/same.html', " +
-        "'http://h' || CAST(h AS VARCHAR) || '.example.com/dir/page' || CAST(doc_id AS VARCHAR) || '.html?page=2', " +
-        "'http://h' || CAST(h AS VARCHAR) || '.example.com/plain' || CAST(j AS VARCHAR)" +
-        "]) AS dst FROM u) " +
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, dst FROM e ORDER BY doc_id, dst"),
-    // q268/q269: the planted turn CTE replayed — roles/contents from
-    // doc_id moduli, the template as an ordered string_agg (q268), the
-    // offset arithmetic as a window sum over prior turns' rendered
-    // lengths (q269, assistant rows only)
-    "q268_chat_render" ->
-      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
-        "r AS (SELECT doc_id, i, " +
-        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
-        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
-        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c) " +
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "string_agg('<|' || role || '|>' || chr(10) || content || '<|end|>' || chr(10), '' ORDER BY i) AS rendered, " +
-        "CAST(count(*) AS BIGINT) AS n_turns FROM r GROUP BY doc_id ORDER BY doc_id"),
-    "q269_chat_loss_spans" ->
-      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
-        "r AS (SELECT doc_id, i, " +
-        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
-        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
-        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
-        "o AS (SELECT doc_id, i, role, " +
-        "len('<|' || role || '|>' || chr(10)) AS plen, len(content) AS clen, " +
-        "coalesce(sum(len('<|' || role || '|>' || chr(10)) + len(content) + len('<|end|>' || chr(10))) " +
-        "OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off FROM r) " +
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, i AS turn, " +
-        "CAST(off + plen AS BIGINT) AS span_start, " +
-        "CAST(off + plen + clen AS BIGINT) AS span_end " +
-        "FROM o WHERE role = 'assistant' ORDER BY doc_id, turn"),
-    // q270: the budget prefix (cumulative content tokens <= 12 — cum is
-    // monotone, so the window filter IS the strict prefix) trimmed to
-    // the last assistant turn; docs with none vanish
-    "q270_chat_fit_budget" ->
-      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
-        "r AS (SELECT doc_id, i, " +
-        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
-        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
-        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
-        "o AS (SELECT doc_id, i, role, content, " +
-        "sum(len(regexp_extract_all(lower(content), '[a-z0-9]+'))) " +
-        "OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM r), " +
-        "p AS (SELECT * FROM o WHERE cum <= 12), " +
-        "b AS (SELECT doc_id, max(i) AS last_a FROM p WHERE role = 'assistant' GROUP BY doc_id) " +
-        "SELECT CAST(p.doc_id AS BIGINT) AS doc_id, CAST(p.i AS BIGINT) AS pos, " +
-        "p.role AS role, p.content AS content " +
-        "FROM p JOIN b ON p.doc_id = b.doc_id AND p.i <= b.last_a " +
-        "ORDER BY doc_id, pos"),
-    // q271: the planted rollouts replayed, best/worst per prompt as
-    // row_number twins (score DESC/ASC, id ASC ties — the operator's
-    // stated tie-break), margin-gated exactly like the query
-    "q271_preference_pairs" -> preferencePairsOracleSql,
-    // q274: the SAME oracle — the maintained state's derived pairs
-    // must equal the batch miner over all arrivals (merge-order
-    // invariance, the q197/q246 contract)
-    "q274_stream_preference_pairs" -> preferencePairsOracleSql,
-    // q275: the planted rollouts' group arithmetic replayed as window
-    // sums — integer-exact numerators, no float comparisons
-    "q275_group_advantage" ->
-      ("WITH r AS (SELECT doc_id % 173 AS prompt_id, doc_id AS completion_id, " +
-        "(doc_id % 6) * 2 AS score FROM documents) " +
-        "SELECT CAST(prompt_id AS BIGINT) AS prompt_id, " +
-        "CAST(completion_id AS BIGINT) AS completion_id, " +
-        "CAST(score AS BIGINT) AS score, " +
-        "CAST(count(*) OVER w AS BIGINT) AS n_rollouts, " +
-        "CAST(score * count(*) OVER w - sum(score) OVER w AS BIGINT) AS adv_num, " +
-        "CAST(count(*) OVER w * sum(score * score) OVER w - " +
-        "sum(score) OVER w * sum(score) OVER w AS BIGINT) AS var_num " +
-        "FROM r WINDOW w AS (PARTITION BY prompt_id) " +
-        "ORDER BY prompt_id, completion_id"),
-    // q278: the mining rule replayed — list_cosine_similarity cross
-    // scores, forward/backward row_number argmax, top-4 neighborhood
-    // means, mutual-best + ratio margin >= 1.047 (2c >= 1.047(favg+bavg))
-    "q278_bitext_mine" ->
-      ("WITH a AS (SELECT vec_id AS src_id, embedding AS av FROM embeddings WHERE vec_id % 2 = 0), " +
-        "b AS (SELECT vec_id AS tgt_id, embedding AS bv FROM embeddings WHERE vec_id % 2 = 1), " +
-        "s AS (SELECT src_id, tgt_id, list_cosine_similarity(av, bv) AS c FROM a, b), " +
-        "r AS (SELECT *, " +
-        "row_number() OVER (PARTITION BY src_id ORDER BY c DESC, tgt_id) AS rf, " +
-        "row_number() OVER (PARTITION BY tgt_id ORDER BY c DESC, src_id) AS rb FROM s), " +
-        "fa AS (SELECT src_id, avg(c) AS favg FROM r WHERE rf <= 4 GROUP BY src_id), " +
-        "ba AS (SELECT tgt_id, avg(c) AS bavg FROM r WHERE rb <= 4 GROUP BY tgt_id) " +
-        "SELECT CAST(r.src_id AS BIGINT) AS src_id, CAST(r.tgt_id AS BIGINT) AS tgt_id " +
-        "FROM r JOIN fa ON r.src_id = fa.src_id JOIN ba ON r.tgt_id = ba.tgt_id " +
-        "WHERE rf = 1 AND rb = 1 AND favg + bavg > 0 AND 2 * c >= 1.047 * (favg + bavg) " +
-        "ORDER BY src_id"),
-    // q277: the q269 planted CTE in TOKEN units — cumulative
-    // (role-word + content + 'end') token counts as a window sum,
-    // assistant rows emit their content's token-index interval
-    "q277_token_loss_mask" ->
-      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
-        "r AS (SELECT doc_id, i, " +
-        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
-        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
-        "'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) AS content FROM c), " +
-        "o AS (SELECT doc_id, i, role, " +
-        "len(regexp_extract_all(role, '[a-z0-9]+')) AS ptoks, " +
-        "len(regexp_extract_all(lower(content), '[a-z0-9]+')) AS ctoks FROM r), " +
-        "w AS (SELECT doc_id, i, role, ptoks, ctoks, " +
-        "coalesce(sum(ptoks + ctoks + 1) OVER (PARTITION BY doc_id ORDER BY i " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM o) " +
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(i AS BIGINT) AS turn, " +
-        "CAST(cum + ptoks AS BIGINT) AS tok_start, " +
-        "CAST(cum + ptoks + ctoks AS BIGINT) AS tok_end " +
-        "FROM w WHERE role = 'assistant' ORDER BY doc_id, turn"),
-    // q276: the admitted frontier SET stated outright — distinct
-    // urlset page locs of the non-sitemapindex docs (child-sitemap
-    // locs seed nothing; the planted URLs are canonical fixed points)
-    "q276_stream_sitemap_frontier" ->
-      ("WITH d AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS h, " +
-        "CAST(doc_id % 50 AS VARCHAR) AS p FROM documents WHERE doc_id % 6 <> 0), " +
-        "u AS (SELECT DISTINCT 'http://h' || h || '.example.com/page' || p || '.html?a=1&b=2' AS url_norm, " +
-        "'h' || h || '.example.com' AS host FROM d " +
-        "UNION SELECT DISTINCT 'http://h' || h || '.example.com/p' || p || '/two', " +
-        "'h' || h || '.example.com' FROM d) " +
-        "SELECT url_norm, host FROM u ORDER BY url_norm"),
-    // q272: the lint-hazard moduli replayed — valid rows (content not
-    // NULL) carry lag/first/last windows, invalid rows only count
-    "q272_chat_lint" ->
-      ("WITH c AS (SELECT doc_id, text, CAST(u.i AS INT) AS i FROM documents, " +
-        "LATERAL unnest(range(0, doc_id % 3 + 2)) AS u(i)), " +
-        "r AS (SELECT doc_id, i, " +
-        "CASE WHEN i = 0 AND doc_id % 4 = 0 THEN 'system' " +
-        "WHEN i = 1 AND doc_id % 5 = 0 THEN 'user' " +
-        "WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END AS role, " +
-        "CASE WHEN i = 1 AND doc_id % 7 = 0 THEN '   ' " +
-        "WHEN i = 2 AND doc_id % 11 = 0 THEN NULL " +
-        "ELSE 'c' || CAST(i AS VARCHAR) || ' ' || substr(text, CAST(1 + i * 25 AS INT), 25) END AS content " +
-        "FROM c), " +
-        "v AS (SELECT doc_id, i, role, content, " +
-        "lag(role) OVER (PARTITION BY doc_id ORDER BY i) AS prev_role, " +
-        "row_number() OVER (PARTITION BY doc_id ORDER BY i) AS rn, " +
-        "row_number() OVER (PARTITION BY doc_id ORDER BY i DESC) AS rnd " +
-        "FROM r WHERE content IS NOT NULL), " +
-        "a AS (SELECT doc_id, count(*) AS n_valid, " +
-        "sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS same_role_pairs, " +
-        "sum(CASE WHEN trim(content) = '' THEN 1 ELSE 0 END) AS empty_turns, " +
-        "max(CASE WHEN rn = 1 THEN role END) AS first_role, " +
-        "max(CASE WHEN rnd = 1 THEN role END) AS last_role " +
-        "FROM v GROUP BY doc_id), " +
-        "t AS (SELECT doc_id, count(*) AS n_all FROM r GROUP BY doc_id) " +
-        "SELECT CAST(a.doc_id AS BIGINT) AS doc_id, " +
-        "CAST(n_valid AS BIGINT) AS n_valid, " +
-        "CAST(t.n_all - n_valid AS BIGINT) AS n_invalid, " +
-        "CAST(CASE WHEN first_role IN ('system', 'user') THEN 1 ELSE 0 END AS BIGINT) AS starts_ok, " +
-        "CAST(CASE WHEN last_role = 'assistant' THEN 1 ELSE 0 END AS BIGINT) AS ends_assistant, " +
-        "CAST(same_role_pairs AS BIGINT) AS same_role_pairs, " +
-        "CAST(empty_turns AS BIGINT) AS empty_turns, " +
-        "CAST(CASE WHEN n_valid > 0 AND first_role IN ('system', 'user') " +
-        "AND last_role = 'assistant' AND same_role_pairs = 0 AND empty_turns = 0 " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS passed " +
-        "FROM a JOIN t ON a.doc_id = t.doc_id ORDER BY doc_id"),
-    // q273: the planted sitemap entries replayed as UNION ALL arms —
-    // decoded locs, trimmed padding, NULL absent lastmods, the
-    // loc-less hazard entry absent
-    "q273_sitemap_entries" ->
-      ("WITH d AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS h, " +
-        "CAST(doc_id % 50 AS VARCHAR) AS p FROM documents), " +
-        "e AS (" +
-        "SELECT doc_id, 'sitemap' AS kind, " +
-        "'https://h' || h || '.example.com/sm/a.xml' AS loc, " +
-        "'2026-01-15' AS lastmod FROM d WHERE doc_id % 6 = 0 " +
-        "UNION ALL SELECT doc_id, 'sitemap', " +
-        "'https://h' || h || '.example.com/sm/b.xml', NULL FROM d WHERE doc_id % 6 = 0 " +
-        "UNION ALL SELECT doc_id, 'url', " +
-        "'http://h' || h || '.example.com/page' || p || '.html?a=1&b=2', " +
-        "'2026-02-11' FROM d WHERE doc_id % 6 <> 0 " +
-        "UNION ALL SELECT doc_id, 'url', " +
-        "'http://h' || h || '.example.com/p' || p || '/two', NULL FROM d WHERE doc_id % 6 <> 0) " +
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, kind, loc, lastmod " +
-        "FROM e ORDER BY doc_id, kind, loc"),
-    // q266: the four planted directives stated outright
-    "q266_robots_sitemaps" ->
-      ("SELECT host, sitemap_url FROM (VALUES " +
-        "('h0.example.com', 'https://h0.example.com/sitemap.xml'), " +
-        "('h2.example.com', 'https://h2.example.com/sm/one.xml'), " +
-        "('h2.example.com', 'https://h2.example.com/sm/two.xml'), " +
-        "('h5.example.com', 'http://h5.example.com/s.xml')" +
-        ") AS t(host, sitemap_url) ORDER BY host, sitemap_url"),
-    // q267: the admitted frontier SET stated outright — distinct
-    // allowed in-host links (%50 path keys under the q258 decision
-    // CASE) plus the always-allowed cross-host h3 links (%20 keys);
-    // fragment/javascript links mint nothing
-    "q267_stream_crawl_loop" ->
-      ("WITH u AS (SELECT doc_id, doc_id % 7 AS h, doc_id % 5 AS m, " +
-        "CAST(doc_id % 50 AS VARCHAR) AS p, doc_id % 20 AS x FROM documents), " +
-        "l1 AS (SELECT DISTINCT 'http://h' || CAST(h AS VARCHAR) || '.example.com' || " +
-        "CASE m WHEN 0 THEN '/private/p' || p WHEN 1 THEN '/public/q' || p " +
-        "WHEN 2 THEN '/doc' || p || '.pdf' WHEN 3 THEN '/a/b/r' || p " +
-        "ELSE '/a/c' || p END AS url_norm, " +
-        "'h' || CAST(h AS VARCHAR) || '.example.com' AS host FROM u " +
-        "WHERE (CASE h WHEN 0 THEN m <> 0 WHEN 1 THEN m = 1 WHEN 2 THEN m <> 2 " +
-        "WHEN 5 THEN m <> 4 WHEN 6 THEN m <> 2 ELSE TRUE END)), " +
-        "l2 AS (SELECT DISTINCT 'http://h3.example.com/x' || CAST(x AS VARCHAR) AS url_norm, " +
-        "'h3.example.com' AS host FROM u) " +
-        "SELECT url_norm, host FROM (SELECT * FROM l1 UNION SELECT * FROM l2) " +
-        "ORDER BY url_norm"),
-    // q257: the same replayed assignment feeding q137's bit-exact
-    // count/divide/sqrt pipeline, per cluster
-    "q257_cluster_temperature" ->
-      ("WITH org AS (SELECT vec_id, CASE " +
-        "WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3] AND embedding[1] >= embedding[4] THEN 0 " +
-        "WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1 " +
-        "WHEN embedding[3] >= embedding[4] THEN 2 ELSE 3 END AS cluster FROM embeddings), " +
-        "fl AS (SELECT vec_id + 1000000 AS vec_id, 0 AS cluster FROM embeddings), " +
-        "u AS (SELECT * FROM org UNION ALL SELECT * FROM fl), " +
-        "c AS (SELECT cluster, count(*) AS n FROM u GROUP BY cluster) " +
-        "SELECT CAST(cluster AS INT) AS cluster, CAST(n AS BIGINT) AS n_docs, " +
-        "sqrt(CAST(n AS DOUBLE) / (SELECT CAST(max(n) AS DOUBLE) FROM c)) AS rate " +
-        "FROM c ORDER BY cluster"),
-    "q255_cluster_balance" ->
-      ("WITH org AS (SELECT vec_id, CASE " +
-        "WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3] AND embedding[1] >= embedding[4] THEN 0 " +
-        "WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1 " +
-        "WHEN embedding[3] >= embedding[4] THEN 2 ELSE 3 END AS cluster FROM embeddings), " +
-        "fl AS (SELECT vec_id + 1000000 AS vec_id, 0 AS cluster FROM embeddings), " +
-        "u AS (SELECT * FROM org UNION ALL SELECT * FROM fl), " +
-        "r AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY cluster ORDER BY vec_id) AS rn FROM u) " +
-        "SELECT vec_id, CAST(cluster AS INT) AS cluster FROM r WHERE rn <= 600 " +
-        "ORDER BY cluster, vec_id"),
-    // q260: every column stated outright from doc_id moduli — status
-    // 404 per %7, bare lowercased mime per %4, the envelope-stripped
-    // body ('' for the %10==9 terminator-less message), with the café
-    // marker that only a declared-charset decode reproduces on the
-    // Latin-1 branch (and only a UTF-8 decode on the others)
-    "q260_warc_http_responses" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "CASE WHEN doc_id % 7 = 0 THEN 404 ELSE 200 END AS http_status, " +
-        "CASE WHEN doc_id % 4 IN (0, 1) THEN 'text/html' ELSE 'text/plain' END AS content_type, " +
-        "CASE WHEN doc_id % 10 = 9 THEN '' " +
-        "ELSE 'B ' || CAST(doc_id AS VARCHAR) || ' café ' || substr(text, 1, 60) END AS text " +
-        "FROM documents ORDER BY doc_id")
-  )
-
   /** The q258/q259 planted robots corpus — ONE builder (the
     * mainContentPlantedHtml convention) so the batch decision and the
     * frontier deployment cannot drift from the shared oracle CTE. h3 has
@@ -9096,6 +8562,7 @@ object SparkEntry {
       "SELECT DISTINCT c.vec_id AS vec_id FROM corpus c JOIN bench b " +
       "ON list_cosine_similarity(c.embedding, b.embedding) >= 0.95 ORDER BY c.vec_id"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = core ++ llm
-  def oracleSql: Map[String, String] = coreOracle ++ llmOracle
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
+  lazy val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
 }

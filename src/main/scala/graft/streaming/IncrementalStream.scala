@@ -1355,7 +1355,8 @@ object IncrementalStream {
     * carries the last-applied batch id IN the same table (constant
     * `__last_batch` column) and a batch at or below it is skipped. Marker
     * and state land in ONE TableStore.writeAtomic — ParquetStore's staged
-    * temp+rename and JdbcStore's stage-then-transactional-swap make that
+    * rename swap (stopped at every step in ParquetStoreSpec) and
+    * JdbcStore's stage-then-transactional-swap make that
     * write all-or-nothing, which is exactly what makes skip-or-merge
     * correct across a crash at any point (a two-table state+marker design
     * would reintroduce the torn-write window).

@@ -62,20 +62,23 @@ trait TableStore {
 
   /** Replace `table`'s contents with `df` ALL-OR-NOTHING: after a crash at
     * any point, a reader sees either the complete old contents or the
-    * complete new contents, never a torn mix. This is what state+marker
-    * writes (streaming `maintainStats`) require — the exactly-once
-    * argument collapses if the marker can land without the state or half
-    * the state without the marker. ParquetStore's plain write already
-    * stages through a temp path + rename, so the default delegates;
-    * stores whose plain write has a torn window (JDBC truncate+insert)
-    * MUST override with a staged transactional swap. */
+    * complete new contents, never a torn mix and never no table. This is
+    * what state+marker writes (streaming `maintainStats`) require — the
+    * exactly-once argument collapses if the marker can land without the
+    * state or half the state without the marker. ParquetStore's plain
+    * write already swaps a staged copy in by renames (ParquetStoreSpec
+    * stops it after each step and reads the table back), so the default
+    * delegates; stores whose plain write has a torn window (JDBC
+    * truncate+insert) MUST override with a staged transactional swap. */
   def writeAtomic(df: DataFrame, table: String): Unit = write(df, table)
 }
 
-/** Parquet-directory store: `dir/<table>.parquet` per table. Write goes
-  * through a temp path + atomic-ish rename so a table can be rewritten from
-  * a plan that reads its own previous contents (overwrite-in-place would
-  * delete the files mid-scan).
+/** Parquet-directory store: `dir/<table>.parquet` per table. Write stages
+  * the new contents in a hidden directory of its own, so a table can be
+  * rewritten from a plan that reads its own previous contents
+  * (overwrite-in-place would delete the files mid-scan), then swaps them in
+  * by renames that leave the old or the new table readable after a crash at
+  * any step (see `write`).
   *
   * Metadata comes from the parquet footers, read on the driver, so it costs
   * no Spark job: `read` takes the schema Spark wrote into a data file's
@@ -104,6 +107,7 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
   private def listed(table: String): Option[Seq[FileStatus]] = {
     val p = new Path(pathOf(table))
     val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) ParquetStore.synchronized(restore(table))
     if (!fs.exists(p)) None
     else Some {
       val seen = fs.listStatus(p).toSeq.filterNot { st =>
@@ -184,13 +188,45 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     }
   } catch { case NonFatal(_) => None }
 
-  override def write(df: DataFrame, table: String): Unit = {
+  /** Writes `df` to a staging directory of its own, a hidden sibling of
+    * the table, then swaps it in under the lock: (1) rename the old table
+    * aside, (2) rename the stage in, (3) delete the aside copy. A crash
+    * after (1) leaves the old table aside, which `read` and the next write
+    * or append rename back; after (2) the new table is in place. */
+  override def write(df: DataFrame, table: String): Unit = writeSteps(df, table, 3)
+
+  /** `write`, stopped after the first `steps` of its three swap steps: a
+    * test's stand-in for a crash there. */
+  private[sync] def writeSteps(df: DataFrame, table: String, steps: Int): Unit = {
     val fs = new Path(dir).getFileSystem(conf)
-    val tmp = new Path(s"$dir/.tmp_$table.parquet")
-    val dst = new Path(pathOf(table))
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    if (!fs.rename(tmp, dst)) sys.error(s"rename failed for $table")
+    val stage = new Path(s"$dir/.write_${table}_${java.util.UUID.randomUUID()}")
+    val (dst, aside) = (new Path(pathOf(table)), asideOf(table))
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) sys.error(s"rename failed for $table")
+    try {
+      df.write.parquet(stage.toString)
+      ParquetStore.synchronized {
+        restore(table)
+        val old = fs.exists(dst)
+        Seq(() => if (old) rename(dst, aside), () => rename(stage, dst),
+          () => if (old) fs.delete(aside, true)).take(steps).foreach(_())
+      }
+    } finally fs.delete(stage, true)
+  }
+
+  /** The hidden sibling `write` moves the old table to while it swaps. */
+  private def asideOf(table: String) = new Path(s"$dir/.aside_$table.parquet")
+
+  /** Undo a write stopped between its swap steps; call under the lock. A
+    * missing table gets its aside copy back; beside a present table, the
+    * aside copy is stale and is deleted. */
+  private def restore(table: String): Unit = {
+    val (dst, aside) = (new Path(pathOf(table)), asideOf(table))
+    val fs = dst.getFileSystem(conf)
+    if (fs.exists(aside)) {
+      if (fs.exists(dst)) fs.delete(aside, true)
+      else if (!fs.rename(aside, dst)) sys.error(s"rename failed for $table")
+    }
   }
 
   /** Native parquet append — O(df) cost regardless of accumulated table
@@ -212,6 +248,7 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
       // footers are read before the lock, so it covers only the renames
       val files = staged(stage)
       ParquetStore.synchronized {
+        restore(table)
         val dst = new Path(pathOf(table))
         if (!fs.exists(dst)) {
           if (!fs.rename(stage, dst)) sys.error(s"rename failed for $table")
@@ -245,9 +282,11 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
   }
 }
 
-/** Serializes ParquetStore's landing step across the JVM: two first
-  * appends to a missing table must not both rename a staging directory
-  * onto it. Landing is renames only, so the lock is held briefly. */
+/** Serializes ParquetStore's landing and swap steps across the JVM: two
+  * first appends to a missing table must not both rename a staging
+  * directory onto it, and no reader may restore an aside copy while a
+  * write is between its swap steps. Both are renames only, so the lock is
+  * held briefly. */
 object ParquetStore {
   /** The footer key holding the Spark schema a file was written with. */
   private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"

@@ -28,10 +28,10 @@ class DeterminismBoundarySpec extends AnyFunSuite {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
       java.nio.charset.StandardCharsets.UTF_8)
-    // split the declared-query map into per-lambda chunks at the
-    // "qNNN_name" -> boundaries (comments between entries ride along
-    // with the FOLLOWING lambda, which is the conservative side)
-    val entry = """"(q\d+_\w+)" ->""".r
+    // split the query catalog into per-record chunks at the
+    // Query("qNNN_name" boundaries (comments between records ride along
+    // with the FOLLOWING record, which is the conservative side)
+    val entry = """Query\("(q\d+_\w+)"""".r
     val starts = entry.findAllMatchIn(src).map(m => (m.group(1), m.start)).toSeq
     val chunks = starts.zipAll(starts.drop(1).map(_._2), ("", 0), src.length)
       .collect { case ((name, from), to) if name.nonEmpty =>

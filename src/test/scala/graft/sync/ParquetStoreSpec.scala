@@ -16,9 +16,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
 /** ParquetStore.append: each call stages into a directory of its own, then
-  * lands the part files that hold rows. `read` and `watermark` answer from
-  * the parquet footers without a Spark job, and agree with Spark's schema
-  * inference and MAX aggregate. */
+  * lands the part files that hold rows. `write` swaps a staged copy in by
+  * renames and leaves a table after a stop at any step. `read` and
+  * `watermark` answer from the parquet footers without a Spark job, and
+  * agree with Spark's schema inference and MAX aggregate. */
 class ParquetStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -103,6 +104,27 @@ class ParquetStoreSpec extends SparkSpec {
     assert(tableFiles(dir) === before)
     assert(store.read("t").get.count() === 5)
     assert(new java.io.File(dir).list().toSet === Set("t.parquet"))
+  }
+
+  test("a write stopped after any swap step leaves the old or the new table, never none") {
+    for (k <- 0 to 3; next <- Seq("read", "append", "write")) {
+      val dir = Files.createTempDirectory("graft_store").toString
+      val store = new ParquetStore(spark, dir)
+      store.write(ids(1, 5), "t")
+      store.writeSteps(ids(11, 13), "t", k)
+      val landed = if (k < 2) 1L to 5L else 11L to 13L
+      // a fresh store stands for the process that runs after the crash
+      val fresh = new ParquetStore(spark, dir)
+      val want = next match {
+        case "read"   => landed
+        case "append" => fresh.append(ids(20, 21), "t"); landed ++ (20L to 21L)
+        case "write"  => fresh.write(ids(30, 31), "t"); 30L to 31L
+      }
+      val got = fresh.read("t")
+      assert(got.isDefined, s"k=$k $next: no table")
+      assert(got.get.as[Long].collect().sorted.toSeq === want, s"k=$k $next")
+      if (next != "read") assert(new java.io.File(dir).list().toSet === Set("t.parquet"), s"k=$k $next")
+    }
   }
 
   test("two threads appending to one table lose no rows") {
