@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two sets of graft.Plans dumps with run-specific ids masked.
 
-Usage: python3 scripts/plan_diff.py <dir> <tagA> <tagB> [query ...]
+Usage: python3 scripts/plan_diff.py [--again <tagA2>] <dir> <tagA> <tagB> [query ...]
 
 Compares <dir>/<query>_<tagA>.txt with <dir>/<query>_<tagB>.txt for every
 named query, or for every query dumped under both tags when none is named.
@@ -16,7 +16,15 @@ An equal pair is printed `opaque` instead of `same` when the dump has no
 table scan and no checkpoint section: such a plan (a literal over `Range`,
 rows collected on the driver) shows none of the query's pipeline, so its
 equality says nothing about it.
+
+`--again <tagA2>` names a second dump of the same code as <tagA>. A query
+whose <tagA> and <tagA2> dumps differ after masking dumps differently from
+run to run (AQE join choices, stage order, an empty micro-batch), so a
+difference against <tagB> says nothing about the change: it is printed
+`unsteady`, counted apart and does not fail the exit code. A query with no
+<tagA2> dump is compared as without the option.
 """
+import argparse
 import difflib
 import os
 import re
@@ -53,24 +61,38 @@ def mask(text):
     return text
 
 
+def read(path):
+    with open(path) as f:
+        return mask(f.read())
+
+
 def main(argv):
-    if len(argv) < 3:
-        sys.exit(__doc__)
-    d, a, b, names = argv[0], argv[1], argv[2], argv[3:]
+    ap = argparse.ArgumentParser(description=__doc__,
+                                 formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--again", metavar="tagA2")
+    ap.add_argument("dir")
+    ap.add_argument("a", metavar="tagA")
+    ap.add_argument("b", metavar="tagB")
+    ap.add_argument("names", metavar="query", nargs="*")
+    args = ap.parse_args(argv)
+    d, a, b, names = args.dir, args.a, args.b, args.names
     if not names:
         suffix = f"_{a}.txt"
         names = sorted(f[: -len(suffix)] for f in os.listdir(d)
                        if f.endswith(suffix) and os.path.exists(os.path.join(d, f[: -len(suffix)] + f"_{b}.txt")))
-    bad = blind = 0
+    bad = blind = noisy = 0
     for q in names:
         pa, pb = (os.path.join(d, f"{q}_{t}.txt") for t in (a, b))
         if not (os.path.exists(pa) and os.path.exists(pb)):
             print(f"MISSING {q}")
             bad += 1
             continue
-        with open(pa) as fa, open(pb) as fb:
-            ta, tb = mask(fa.read()), mask(fb.read())
-        if ta == tb and opaque(ta):
+        ta, tb = read(pa), read(pb)
+        pa2 = args.again and os.path.join(d, f"{q}_{args.again}.txt")
+        if pa2 and os.path.exists(pa2) and read(pa2) != ta:
+            noisy += 1
+            print(f"unsteady {q}")
+        elif ta == tb and opaque(ta):
             blind += 1
             print(f"opaque  {q}")
         elif ta == tb:
@@ -80,9 +102,8 @@ def main(argv):
             print(f"DIFFERS {q}")
             sys.stdout.writelines(difflib.unified_diff(
                 ta.splitlines(True), tb.splitlines(True), pa, pb))
-    print(f"== {len(names) - bad - blind} same / {blind} opaque / {bad} differ ==")
+    print(f"== {len(names) - bad - blind - noisy} same / {blind} opaque / {noisy} unsteady / {bad} differ ==")
     return 1 if bad else 0
-
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1:]))

@@ -52,13 +52,14 @@ class ParquetStoreSpec extends SparkSpec {
 
   /** The watermark's schema, rows and value classes, beside those of MAX
     * over Spark's own read. */
-  private def bothMax(store: ParquetStore, dir: String, table: String, c: String) = {
-    def shape(df: DataFrame) = {
-      val rows = df.collect().toSeq
-      (df.schema, rows, rows.flatMap(_.toSeq.map(v => Option(v).map(_.getClass))))
-    }
+  private def bothMax(store: ParquetStore, dir: String, table: String, c: String) =
     (shape(store.watermark(table, c).get),
       shape(Watermark.maxOf(spark.read.parquet(s"$dir/$table.parquet"), c)))
+
+  /** A frame's schema, rows and value classes. */
+  private def shape(df: DataFrame) = {
+    val rows = df.collect().toSeq
+    (df.schema, rows, rows.flatMap(_.toSeq.map(v => Option(v).map(_.getClass))))
   }
 
   private def ids(lo: Long, hi: Long) = spark.range(lo, hi + 1).toDF("id")
@@ -266,6 +267,37 @@ class ParquetStoreSpec extends SparkSpec {
     assert((wm, jobs) === ((235L, 0)))
     val (got, want) = bothMax(store, dir, "t", "id")
     assert(got === want)
+  }
+
+  test("four threads reading footers of their own many-file tables get Spark's answers with no job") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    val types = Seq(LongType, IntegerType, ShortType, ByteType)
+    val tables = types.indices.map(i => s"t$i")
+    for ((t, ty) <- tables.zip(types); i <- 0 until 6) {
+      val lo = i * 20L
+      store.append(ids(lo, lo + 19).selectExpr(s"CAST(id AS ${ty.sql}) AS id", "concat('v', id) AS v")
+        .repartition(4), t)
+    }
+    for (t <- tables)
+      assert(new java.io.File(s"$dir/$t.parquet").list().count(_.startsWith("part-")) >= 20, t)
+    // the pool's threads start inside jobsOf, so they carry its tag
+    val (got, jobs) = jobsOf {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try {
+        val runs = tables.map(t => Future((0 until 5).map(_ =>
+          (store.read(t).get.schema, shape(store.watermark(t, "id").get)))))
+        runs.map(Await.result(_, Duration("5 min")))
+      } finally pool.shutdown()
+    }
+    assert(jobs === 0)
+    for ((t, answers) <- tables.zip(got)) {
+      val want = (spark.read.parquet(s"$dir/$t.parquet").schema,
+        shape(Watermark.maxOf(spark.read.parquet(s"$dir/$t.parquet"), "id")))
+      assert(answers.forall(_ == want), t)
+      assert(answers.head._2._2.map(_.getAs[Number](0).longValue) === Seq(119L), t)
+    }
   }
 
   test("a table holding only NULLs or no rows has a NULL footer watermark") {
