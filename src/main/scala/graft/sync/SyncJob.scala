@@ -93,51 +93,44 @@ object SyncJob {
     // O3 fallback: no PK list -> all columns as the conflict key
     val pks = if (primaryKeys.nonEmpty) primaryKeys else coerced.columns.toSeq
     val base = destDf.map(Projection.ignoring(_, cfg.ignoreColumns.toSet))
-    val appendOn = if (strict && !propagateDeletes) appendColumn(cfg, base, coerced, pks) else None
-    appendOn match {
-      case Some(c) =>
-        // Insert-only: every destination row has c <= watermark (or NULL)
-        // and every delta row c > watermark, and c is part of the key, so
-        // no delta key is already in the destination and the upsert is
-        // exactly destination ∪ dedup(delta). Ship only the delta. The
-        // range partitioning on c is the window's clustering too (one
-        // shuffle), and puts all rows of one c value in one partition. The
-        // store lands partitions in order, so a crash mid-landing leaves a
-        // c-ordered prefix and the next run's MAX watermark never passes
-        // an unlanded row. The Observation sits above the range exchange:
-        // the exchange's sampling job re-runs its child, and would count
-        // rows below it twice.
-        val ranged = observed(coerced.repartitionByRange(col(c)))
-        dest.append(Merge.dedup(ranged, pks), cfg.name)
-      case None =>
-        // O9: relational upsert against current destination contents
-        val merged: DataFrame = base match {
-          case Some(b) =>
-            val upserted =
-              if (allowSchemaEvolution) Merge.upsertEvolving(b, observed(coerced), pks)
-              else Merge.upsert(b, observed(coerced), pks)
-            if (propagateDeletes)
-              // key-only scan of the (coerced) source: column pruning reaches
-              // the reader, so at 100 TB this reads pk bytes, not the table
-              Merge.applyDeletes(upserted,
-                Coerce.frame(projected, jsonColumns).select(pks.map(col): _*), pks)
-            else upserted
-          // bootstrap: the same dedup a later upsert would apply, so the
-          // first and second runs agree on duplicate source keys
-          case None => Merge.dedup(observed(coerced), pks)
-        }
-        // Stats fall out of the one write pass (the CollectMetrics node sits
-        // on the delta subtree above). Requires dest.write to execute the
-        // plan (every TableStore does — that's what "write" means).
-        dest.write(merged, cfg.name)
+    if (strict && !propagateDeletes && appends(cfg, base, coerced, pks))
+      // Insert-only: every destination row has the check column <=
+      // watermark (or NULL) and every delta row > watermark, and the column
+      // is part of the key, so no delta key is already in the destination
+      // and the upsert is exactly destination ∪ dedup(delta). Ship only the
+      // delta. The store lands it all-or-nothing past its commit (the
+      // landing contract), so the next run's MAX watermark never passes an
+      // unlanded row. As on the merge path, the Observation sits on the
+      // delta below the dedup, in the one write pass.
+      dest.append(Merge.dedup(observed(coerced), pks), cfg.name)
+    else {
+      // O9: relational upsert against current destination contents
+      val merged: DataFrame = base match {
+        case Some(b) =>
+          val upserted =
+            if (allowSchemaEvolution) Merge.upsertEvolving(b, observed(coerced), pks)
+            else Merge.upsert(b, observed(coerced), pks)
+          if (propagateDeletes)
+            // key-only scan of the (coerced) source: column pruning reaches
+            // the reader, so at 100 TB this reads pk bytes, not the table
+            Merge.applyDeletes(upserted,
+              Coerce.frame(projected, jsonColumns).select(pks.map(col): _*), pks)
+          else upserted
+        // bootstrap: the same dedup a later upsert would apply, so the
+        // first and second runs agree on duplicate source keys
+        case None => Merge.dedup(observed(coerced), pks)
+      }
+      // Stats fall out of the one write pass (the CollectMetrics node sits
+      // on the delta subtree above). Requires dest.write to execute the
+      // plan (every TableStore does — that's what "write" means).
+      dest.write(merged, cfg.name)
     }
     val rows = obs.get("rows").asInstanceOf[Long]
     SyncStats(cfg.name, mode, rows)
   }
 
-  /** The check column when a strict-`>` incremental run without delete
-    * propagation may append instead of merge, None to merge. Appending is
-    * exact only when:
+  /** Whether a strict-`>` incremental run without delete propagation may
+    * append instead of merge. Appending is exact only when:
     *  - the check column is a merge key, so a delta key cannot match a
     *    destination key (their check values lie on opposite sides of the
     *    watermark);
@@ -149,15 +142,15 @@ object SyncJob {
     *    (drift keeps the merge path: strict parity throws there, schema
     *    evolution widens there, and Merge.dedup's tie-break then sees the
     *    same column order as upsert's). */
-  private def appendColumn(cfg: TableConfig, base: Option[DataFrame], coerced: DataFrame,
-                           pks: Seq[String]): Option[String] = {
+  private def appends(cfg: TableConfig, base: Option[DataFrame], coerced: DataFrame,
+                      pks: Seq[String]): Boolean = {
     def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
     def exact(t: DataType) = (cfg.checkType, t) match {
       case (Some(CheckType.Id), _: ByteType | _: ShortType | _: IntegerType | _: LongType) => true
       case (Some(CheckType.Timestamp), _: DateType | _: TimestampType | _: TimestampNTZType) => true
       case _ => false
     }
-    cfg.checkColumn.filter(c => pks.contains(c) &&
+    cfg.checkColumn.exists(c => pks.contains(c) &&
       base.exists(b => shape(b) == shape(coerced)) && exact(coerced.schema(c).dataType))
   }
 }

@@ -35,12 +35,12 @@ trait TableStore {
     * at-least-once semantics (foreachBatch) must dedup before appending.
     *
     * LANDING CONTRACT — what a failure part-way leaves in `table`:
-    *  - ParquetStore: a failed Spark job leaves `table` untouched; past it,
-    *    `df`'s partitions land IN PARTITION ORDER, so a crash leaves a
-    *    prefix of them. SyncJob's insert-only path range-partitions the
-    *    delta on the check column, so that prefix holds every landed row
-    *    below every unlanded one, and the next run's MAX watermark cannot
-    *    pass an unlanded row.
+    *  - ParquetStore is all-or-nothing past one commit rename: a failure
+    *    before it leaves `table` untouched, and after it the next `read`,
+    *    `watermark`, `append` or `write` finds the committed delta and
+    *    lands the rest of it first. So no reader sees part of `df`, and a
+    *    MAX watermark cannot pass a row that has not landed, in whatever
+    *    order the files land.
     *  - JdbcStore commits per executor partition in no order, so a failure
     *    can leave any subset of partitions — no worse than its `write`'s
     *    truncate + reinsert; a transactional JDBC upsert is future work.
@@ -79,7 +79,9 @@ trait TableStore {
   * rewritten from a plan that reads its own previous contents
   * (overwrite-in-place would delete the files mid-scan), then swaps them in
   * by renames that leave the old or the new table readable after a crash at
-  * any step (see `write`).
+  * any step (see `write`). Append stages too, and commits by one rename to
+  * the table's landing directory, which every later access of the table
+  * finishes landing first (see `append`).
   *
   * Metadata comes from the parquet footers, read on the driver, so it costs
   * no Spark job: `read` takes the schema Spark wrote into a data file's
@@ -102,13 +104,14 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
 
   /** The data files of an existing table, in name order; Nil when the
     * listing holds what the footer path does not model (a subdirectory, a
-    * summary file) or no data file. None when the table is missing. Names
+    * summary file) or no data file. None when the table is missing. A
+    * write or append a crash stopped is finished or undone first. Names
     * Spark skips when it lists a table (`_`/`.`-prefixed, `._COPYING_`)
     * are skipped here too. */
   private def listed(table: String): Option[Seq[FileStatus]] = {
     val p = new Path(pathOf(table))
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) ParquetStore.synchronized(restore(table))
+    if (!fs.exists(p) || fs.exists(landingOf(table))) ParquetStore.synchronized(restore(table))
     if (!fs.exists(p)) None
     else Some {
       val seen = fs.listStatus(p).toSeq.filterNot { st =>
@@ -207,8 +210,6 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     val fs = new Path(dir).getFileSystem(conf)
     val stage = new Path(s"$dir/.write_${table}_${java.util.UUID.randomUUID()}")
     val (dst, aside) = (new Path(pathOf(table)), asideOf(table))
-    def rename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to)) sys.error(s"rename failed for $table")
     try {
       df.write.parquet(stage.toString)
       ParquetStore.synchronized {
@@ -223,75 +224,84 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
   /** The hidden sibling `write` moves the old table to while it swaps. */
   private def asideOf(table: String) = new Path(s"$dir/.aside_$table.parquet")
 
-  /** Undo a write stopped between its swap steps; call under the lock. A
-    * missing table gets its aside copy back; beside a present table, the
-    * aside copy is stale and is deleted. */
+  /** The hidden sibling an append's commit renames its staged files to. */
+  private def landingOf(table: String) = new Path(s"$dir/.landing_$table.parquet")
+
+  private def rename(from: Path, to: Path): Unit =
+    if (!from.getFileSystem(conf).rename(from, to)) sys.error(s"rename failed for $from")
+
+  /** Finish what a crash stopped; call under the lock. A missing table gets
+    * its aside copy back; beside a present table, the aside copy is stale
+    * and is deleted. Then a committed append lands the rest of its files. */
   private def restore(table: String): Unit = {
-    val (dst, aside) = (new Path(pathOf(table)), asideOf(table))
+    val (dst, aside, landing) = (new Path(pathOf(table)), asideOf(table), landingOf(table))
     val fs = dst.getFileSystem(conf)
     if (fs.exists(aside)) {
       if (fs.exists(dst)) fs.delete(aside, true)
-      else if (!fs.rename(aside, dst)) sys.error(s"rename failed for $table")
+      else rename(aside, dst)
     }
+    if (fs.exists(landing))
+      landSteps(table, fs.listStatus(landing).toSeq.map(_.getPath.getName)).foreach(_())
+  }
+
+  /** The steps that land the files `names` of `table`'s landing directory:
+    * a missing table is the directory renamed whole; otherwise each file
+    * moves into the table, then the empty directory is deleted. */
+  private def landSteps(table: String, names: Seq[String]): Seq[() => Any] = {
+    val (dst, landing) = (new Path(pathOf(table)), landingOf(table))
+    val fs = dst.getFileSystem(conf)
+    if (!fs.exists(dst)) Seq(() => rename(landing, dst))
+    else names.map(n => () => rename(new Path(landing, n), new Path(dst, n))) :+
+      (() => fs.delete(landing, true))
   }
 
   /** Native parquet append — O(df) cost regardless of accumulated table
     * size. `df` is written to a staging directory of its own, a hidden
     * sibling of the table, so a failed job leaves the table untouched and
     * concurrent appends to one table never share Spark's `_temporary`
-    * directory. Its part files then move into the table by rename, in
-    * partition order (the trait's landing contract); files with no rows are
-    * left behind, so an empty `df` adds nothing to an existing table. A
-    * table that does not exist yet is created by renaming the whole
-    * staging directory, so it always has a file carrying its schema. */
-  override def append(df: DataFrame, table: String): Unit = {
+    * directory. Under the lock, all but the part files that hold rows are
+    * deleted from it (so an empty `df` adds nothing to an existing table),
+    * and it is renamed to the table's landing directory: that rename is
+    * the commit. Its files then move into the table and the landing
+    * directory is deleted; after a crash past the commit, `restore` does
+    * the rest. A table that does not exist yet is the whole staging
+    * directory renamed, so it always has a file carrying its schema. */
+  override def append(df: DataFrame, table: String): Unit = appendSteps(df, table, Int.MaxValue)
+
+  /** `append`, stopped after the first `steps` of its steps past staging
+    * (the commit, each file move, the landing directory's deletion): a
+    * test's stand-in for a crash there. Returns how many steps the whole
+    * append has. */
+  private[sync] def appendSteps(df: DataFrame, table: String, steps: Int): Int = {
     val fs = new Path(dir).getFileSystem(conf)
     val stage = new Path(s"$dir/.append_${table}_${java.util.UUID.randomUUID()}")
     try {
-      // one file per partition: a partition split over several files could
-      // be landed in part, breaking the order the landing contract promises
-      df.write.option("maxRecordsPerFile", 0L).parquet(stage.toString)
-      // footers are read before the lock, so it covers only the renames
-      val files = staged(stage)
+      df.write.parquet(stage.toString)
+      // footers are read before the lock, so it covers only renames and deletes
+      val (full, rest) = fs.listStatus(stage).toSeq
+        .partition(st => st.getPath.getName.startsWith("part-") && rowCount(st) > 0L)
       ParquetStore.synchronized {
         restore(table)
-        val dst = new Path(pathOf(table))
-        if (!fs.exists(dst)) {
-          if (!fs.rename(stage, dst)) sys.error(s"rename failed for $table")
-        } else land(files, table)
+        val isNew = !fs.exists(new Path(pathOf(table)))
+        val todo =
+          if (!isNew && full.isEmpty) Nil
+          else {
+            if (!isNew) rest.foreach(st => fs.delete(st.getPath, false))
+            (() => rename(stage, landingOf(table))) +: landSteps(table, full.map(_.getPath.getName))
+          }
+        todo.take(steps).foreach(_())
+        todo.size
       }
     } finally fs.delete(stage, true)
   }
 
-  /** The part files of a staging directory that hold rows, in partition
-    * order. Row counts come from the parquet footers, read on the driver. */
-  private def staged(stage: Path): Seq[Path] = {
-    val part = "part-(\\d+)-.*".r
-    stage.getFileSystem(conf).listStatus(stage).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case part(n) => Some(n.toLong -> st)
-        case _       => None
-      })
-      .sortBy(_._1)
-      .collect { case (_, st) if rowCount(st) > 0L => st.getPath }
-  }
-
   private def rowCount(st: FileStatus): Long = footer(st).getBlocks.asScala.map(_.getRowCount).sum
-
-  /** Move `files` into `table`, one rename each, in the given order. */
-  private[sync] def land(files: Seq[Path], table: String): Unit = {
-    val dst = new Path(pathOf(table))
-    val fs = dst.getFileSystem(conf)
-    files.foreach { f =>
-      if (!fs.rename(f, new Path(dst, f.getName))) sys.error(s"rename failed for $f")
-    }
-  }
 }
 
 /** Serializes ParquetStore's landing and swap steps across the JVM: two
-  * first appends to a missing table must not both rename a staging
-  * directory onto it, and no reader may restore an aside copy while a
-  * write is between its swap steps. Both are renames only, so the lock is
+  * appends must not share a landing directory, and no reader may restore
+  * an aside copy or land a committed append while a write or append is
+  * between its steps. They are renames and deletes only, so the lock is
   * held briefly. */
 object ParquetStore {
   /** The footer key holding the Spark schema a file was written with. */

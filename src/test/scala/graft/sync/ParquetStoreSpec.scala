@@ -15,11 +15,13 @@ import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
-/** ParquetStore.append: each call stages into a directory of its own, then
-  * lands the part files that hold rows. `write` swaps a staged copy in by
-  * renames and leaves a table after a stop at any step. `read` and
-  * `watermark` answer from the parquet footers without a Spark job, and
-  * agree with Spark's schema inference and MAX aggregate. */
+/** ParquetStore.append: each call stages into a directory of its own,
+  * commits the part files that hold rows by one rename, then lands them;
+  * a stop at any step leaves the old rows or all of the new ones. `write`
+  * swaps a staged copy in by renames and leaves a table after a stop at
+  * any step. `read` and `watermark` answer from the parquet footers
+  * without a Spark job, and agree with Spark's schema inference and MAX
+  * aggregate. */
 class ParquetStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -128,6 +130,57 @@ class ParquetStoreSpec extends SparkSpec {
     }
   }
 
+  test("an append stopped after staging, the commit or any file move leaves the old rows or all of them") {
+    for (k <- 0 to 5; next <- Seq("read", "append", "write")) {
+      val dir = Files.createTempDirectory("graft_store").toString
+      val store = new ParquetStore(spark, dir)
+      store.write(ids(1, 5), "t")
+      val before = tableFiles(dir)
+      // one partition dealt round-robin into five: three files hold rows
+      val delta = spark.range(11, 14, 1, 1).toDF("id").repartition(5)
+      // the commit, three file moves, the landing directory's deletion
+      assert(store.appendSteps(delta, "t", k) === 5, s"k=$k $next")
+      val landed = if (k < 1) 1L to 5L else (1L to 5L) ++ (11L to 13L)
+      // a fresh store stands for the process that runs after the crash
+      val fresh = new ParquetStore(spark, dir)
+      val want = next match {
+        case "read"   => landed
+        case "append" => fresh.append(ids(20, 21), "t"); landed ++ (20L to 21L)
+        case "write"  => fresh.write(ids(30, 31), "t"); 30L to 31L
+      }
+      assert(fresh.read("t").get.as[Long].collect().sorted.toSeq === want, s"k=$k $next")
+      assert(new java.io.File(dir).list().toSet === Set("t.parquet"), s"k=$k $next")
+      if (next == "read") assert((tableFiles(dir) -- before).size === (if (k < 1) 0 else 3), s"k=$k")
+    }
+  }
+
+  test("a stranded landing directory lands only its own table's rows") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    store.append(ids(1, 5), "t")
+    store.append(ids(101, 105), "t_x")
+    // each append stops right after its commit
+    store.appendSteps(ids(6, 8), "t", 1)
+    store.appendSteps(ids(106, 108), "t_x", 1)
+    val fresh = new ParquetStore(spark, dir)
+    assert(fresh.read("t").get.as[Long].collect().sorted.toSeq === (1L to 8L))
+    assert(new java.io.File(dir).list().toSet === Set("t.parquet", "t_x.parquet", ".landing_t_x.parquet"))
+    assert(fresh.read("t_x").get.as[Long].collect().sorted.toSeq === (101L to 108L))
+    assert(fresh.read("t").get.count() === 8)
+    assert(new java.io.File(dir).list().toSet === Set("t.parquet", "t_x.parquet"))
+  }
+
+  test("watermark alone lands a stranded landing directory and counts its rows, with no job") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    store.append(ids(1, 5), "t")
+    store.appendSteps(ids(6, 9).repartition(2), "t", 1)
+    val (wm, jobs) = jobsOf(Watermark.idOf(new ParquetStore(spark, dir).watermark("t", "id").get))
+    assert((wm, jobs) === ((9L, 0)))
+    assert(new java.io.File(dir).list().toSet === Set("t.parquet"))
+    assert(store.read("t").get.as[Long].collect().sorted.toSeq === (1L to 9L))
+  }
+
   test("two threads appending to one table lose no rows") {
     val dir = Files.createTempDirectory("graft_store").toString
     val store = new ParquetStore(spark, dir)
@@ -196,10 +249,10 @@ class ParquetStoreSpec extends SparkSpec {
     val (stats, jobs) = jobsOf(SyncJob.run(src, dst, cfg, Seq("id")))
     assert(stats.mode === "incremental id > 100")
     assert(stats.rowsUpserted === 30)
-    // the range exchange's sampling job, its shuffle stage (AQE runs each
-    // stage as a job) and the append's write job; both schemas and the
-    // watermark come from the footers
-    assert(jobs === 3)
+    // the dedup's shuffle stage (AQE runs each stage as a job) and the
+    // append's write job; both schemas and the watermark come from the
+    // footers
+    assert(jobs === 2)
     assert(dst.read("t").get.count() === 130)
   }
 

@@ -331,13 +331,12 @@ class SyncJobSpec extends SparkSpec {
     assert(bag(dst.read("t").get) === bag(srcInner.read("t").get))
   }
 
-  /** Lands only the first `k` staged files of each append, then fails. */
+  /** Stops each append after its first `k` steps past staging, then fails. */
   private class CrashingStore(dir: String, k: Int) extends ParquetStore(spark, dir) {
-    var staged = 0
-    override private[sync] def land(files: Seq[Path], table: String): Unit = {
-      staged = files.size
-      super.land(files.take(k), table)
-      if (k < files.size) sys.error(s"crash after landing $k of ${files.size} files")
+    var steps = 0
+    override def append(df: DataFrame, table: String): Unit = {
+      steps = appendSteps(df, table, k)
+      if (k < steps) sys.error(s"crash after $k of $steps append steps")
     }
   }
 
@@ -347,7 +346,7 @@ class SyncJobSpec extends SparkSpec {
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      // one crash-free run learns how many files the delta stages as
+      // one crash-free run learns how many steps the delta's append has
       def attempt(k: Int): CrashingStore = {
         val src = tmpStore()
         val dir = Files.createTempDirectory("graft_sync").toString
@@ -355,7 +354,10 @@ class SyncJobSpec extends SparkSpec {
         src.write(rows(1L to 60L: _*).union(rows(30, 45)), "t") // duplicate keys too
         val dst = new CrashingStore(dir, k)
         val crashed = scala.util.Try(SyncJob.run(src, dst, idCfg, Seq("id"))).isFailure
-        assert(crashed === (k < dst.staged), s"k=$k")
+        assert(crashed === (k < dst.steps), s"k=$k")
+        // past the commit (step 1), the next process reads the whole delta
+        val wantAfter = if (k < 1) rows(1L to 10L: _*) else Merge.dedup(src.read("t").get, Seq("id"))
+        assert(bag(new ParquetStore(spark, dir).read("t").get) === bag(wantAfter), s"k=$k")
         // the invariant: every source row at or below the destination's
         // MAX(id) has landed, so the next run's `id > MAX` misses nothing
         val landed = dst.read("t").get
@@ -366,8 +368,9 @@ class SyncJobSpec extends SparkSpec {
         assert(bag(dst.read("t").get) === bag(Merge.dedup(src.read("t").get, Seq("id"))), s"k=$k")
         dst
       }
-      val n = attempt(Int.MaxValue).staged
-      assert(n >= 3, "the delta should stage as several files")
+      val n = attempt(Int.MaxValue).steps
+      // the commit, a move per file, the landing directory's deletion
+      assert(n >= 5, "the delta should stage as several files")
       (0 until n).foreach(attempt)
     } finally prev.foreach {
       case (key, Some(v)) => spark.conf.set(key, v)
