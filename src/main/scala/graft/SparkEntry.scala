@@ -3207,7 +3207,7 @@ object SparkEntry {
       import graft.sync.Checksum
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
       withTempDir("q88") { tmp =>
-        val tableDir = s"$tmp/orders"
+        val tableDir = s"$tmp/orders.parquet"
         t(s, dir, "orders").select(cols.map(col): _*)
           .repartition(64).write.parquet(tableDir)
         def fp() = {
@@ -7418,8 +7418,7 @@ object SparkEntry {
         val stream = fileStream(s, files, 2, s"$tmp/src")
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.warcIngest(stream, store, "corpus",
-          checkpointDir = s"$tmp/ck", status = Some(200),
-          mime = Some("text/html"), minChars = 15, maxLinkPermille = 300)
+          checkpointDir = s"$tmp/ck", minChars = 15, maxLinkPermille = 300)
           .awaitTermination()
         val extracted = store.read("corpus").get
           .select(col("file_id").as("doc_id"), col("main"))

@@ -2808,16 +2808,17 @@ object Main {
       }
     },
 
-    Command("compact", "--dir <parquetDir> [--target-mb <n>]") { o =>
+    Command("compact", "--dir <table.parquet> [--target-mb <n>]") { o =>
       for {
-        d <- o.req("dir")
+        d <- o.reqAs("dir", "a <table>.parquet directory")(d =>
+          graft.files.Compaction.storeTable(d).map(_ => d))
         mb <- o.optInt("target-mb", 128)
       } yield (spark: SparkSession) => {
         // the maintenance half of the streaming serving loops: every
         // AvailableNow drain appends a few files per micro-batch, and after
         // months of cron ticks the accumulated log is thousands of KB-sized
-        // parquet files. Run THIS in the same maintenance window (exclusive
-        // access — see Compaction's contract). The serving retry guards
+        // parquet files. Run THIS in the same maintenance window (see
+        // Compaction's contract). The serving retry guards
         // survive it: they filter on (__run, __batch) ROWS, not files
         val stats = graft.files.Compaction.compact(
           spark, d, targetBytes = mb.toLong * 1024 * 1024)

@@ -493,22 +493,21 @@ object Decontaminate {
     * stream itself never shuffles for the probe. The per-doc distinct
     * (a doc sharing many grams must flag once) is
     * `dropDuplicatesWithinWatermark` keyed on the id, the only stateful op,
-    * its state expiring with the watermark.
+    * its state expiring with a 10-minute watermark.
     *
     * `eventTimeCol` orders the expiry; a corpus with no arrival-time column
     * can pass a constant literal, which degrades exactly like q61's
     * documented single-microbatch caveat (under `Trigger.AvailableNow` with
     * one source file the whole corpus is one batch and the distinct is
     * exact; a multi-file arrival of the same id past the watermark could
-    * re-emit — dedup the sink or widen the delay). PITFALL: the constant
+    * re-emit — dedup the sink). PITFALL: the constant
     * must be LATER than epoch 0 — Spark's event-time late filter is
     * inclusive against the initial watermark (0), so epoch-0 rows are
     * silently dropped before the dedup and the gate emits nothing. */
   def contaminatedIdsStream(corpusStream: DataFrame, benchmark: DataFrame,
                             idCol: String, textCol: String,
                             eventTimeCol: org.apache.spark.sql.Column,
-                            n: Int = 13,
-                            watermarkDelay: String = "10 minutes"): DataFrame = {
+                            n: Int = 13): DataFrame = {
     val benchGrams = benchmark
       .select(explode(Dedup.hashedWordNgrams(col(textCol), n)).as("__g"))
       .distinct()
@@ -516,7 +515,7 @@ object Decontaminate {
       .select(col(idCol), eventTimeCol.cast("timestamp").as("__arrival"),
         explode(Dedup.hashedWordNgrams(col(textCol), n)).as("__g"))
       .join(benchGrams, Seq("__g"), "left_semi")
-      .withWatermark("__arrival", watermarkDelay)
+      .withWatermark("__arrival", "10 minutes")
       .dropDuplicatesWithinWatermark(idCol)
       .select(col(idCol))
   }

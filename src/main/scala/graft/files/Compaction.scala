@@ -9,13 +9,11 @@ import org.apache.spark.sql.SparkSession
   * eventually dominates scans. Compaction rewrites a table directory into
   * ~`targetBytes`-sized files.
   *
-  * REQUIRES exclusive access to the directory for the duration of the call:
-  * the swap is read -> write sibling tmp -> delete -> rename, which is NOT
-  * atomic on object stores or concurrent writers — files appended between
-  * the snapshot read and the delete would be lost, and a crash between
-  * delete and rename leaves only the tmp copy (recoverable by hand, named
-  * `<table>.compact_tmp`). Real lakehouse engines solve this with a
-  * transaction log; this operator targets the maintenance-window case.
+  * The directory is a `ParquetStore` table, `<parent>/<table>.parquet`,
+  * and the rewrite is that store's `write`: it stages the compacted copy
+  * and swaps it in under the store's lock, so a crash leaves the old
+  * table or the new one. Files appended by another process between the
+  * read and the swap are still lost, so run it in a maintenance window.
   */
 object Compaction {
 
@@ -33,23 +31,25 @@ object Compaction {
     (bytes, files)
   }
 
-  /** Rewrite `dir` (a parquet table) into max(1, bytes/targetBytes) files. */
+  /** The (store directory, table) that `dir` names when it is
+    * `<parent>/<table>.parquet`; None for any other name. */
+  def storeTable(dir: String): Option[(String, String)] = {
+    val p = new Path(dir)
+    val table = p.getName.stripSuffix(".parquet")
+    if (p.getParent == null || table.isEmpty || table == p.getName) None
+    else Some((p.getParent.toString, table))
+  }
+
+  /** Rewrite `dir` (a `<table>.parquet` directory) into
+    * max(1, bytes/targetBytes) files. */
   def compact(spark: SparkSession, dir: String,
               targetBytes: Long = 128L * 1024 * 1024): CompactionStats = {
+    val (parent, table) = storeTable(dir).getOrElse(
+      throw new IllegalArgumentException(s"compact: $dir is not a <table>.parquet directory"))
     val (bytes, before) = dirBytesAndFiles(spark, dir)
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(dir)
-    val dst = new Path(dir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // SIBLING tmp via parent/name (string concat would nest the tmp inside
-    // the table on a trailing-slash dir, and the delete below would then
-    // destroy both copies)
-    val tmp = new Path(dst.getParent, dst.getName + ".compact_tmp")
-    df.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.delete(dst, true))
-      sys.error(s"compaction could not delete $dst; compacted copy left at $tmp")
-    if (!fs.rename(tmp, dst))
-      sys.error(s"compaction rename failed; compacted copy left at $tmp")
+    val store = new graft.sync.ParquetStore(spark, parent)
+    store.write(store.read(table).get.repartition(nFiles), table)
     val (_, after) = dirBytesAndFiles(spark, dir)
     CompactionStats(bytes, before, after)
   }

@@ -11,23 +11,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed managed table (sorted within buckets so
-    * merge-joins skip the sort too). */
+  /** Write `df` as a bucketed managed table, replacing any table of that
+    * name (sorted within buckets so merge-joins skip the sort too). */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    numBuckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
+                    numBuckets: Int): Unit =
     df.write
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
 
-  /** Join two same-bucketed tables on their bucket key, VERIFYING the
+  /** Inner-join two same-bucketed tables on their bucket key, VERIFYING the
     * bucket specs actually line up (same count, keys = join keys) — a
     * mismatch would silently plan a full shuffle join and void the whole
     * point of bucketing, so it fails fast instead. */
   def bucketedJoin(spark: SparkSession, left: String, right: String,
-                   on: Seq[String], joinType: String = "inner"): DataFrame = {
+                   on: Seq[String]): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.bucketSpec
     def spec(t: String) = bucketSpec(spark, t)
       .getOrElse(sys.error(s"bucketedJoin: table $t is not bucketed"))
@@ -37,6 +37,6 @@ object Bucketing {
     require(lCols.map(_.toLowerCase) == on.map(_.toLowerCase) &&
             rCols.map(_.toLowerCase) == on.map(_.toLowerCase),
       s"bucketedJoin: bucket columns ($lCols / $rCols) must equal the join keys $on")
-    spark.table(left).join(spark.table(right), on, joinType)
+    spark.table(left).join(spark.table(right), on)
   }
 }

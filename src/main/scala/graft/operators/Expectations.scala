@@ -82,16 +82,11 @@ object Expectations {
     * with a conditional aggregate — total and orphan counts from the
     * same scan, where an anti-join + df.count() pair would read the
     * fact side twice. NULL fks are counted in n_rows but are never
-    * orphans (a null references nothing). `broadcastRef = true`
-    * (default) HINTS the distinct referenced keys to the build side —
-    * right for dimension/parent tables; a hint is a command, not a
-    * suggestion, so pass false when the referenced key set is itself
-    * fact-sized and let the planner pick the shuffle. */
+    * orphans (a null references nothing). The distinct referenced keys
+    * are HINTED to the build side — right for dimension/parent tables. */
   def refCheck(df: DataFrame, name: String, fk: String,
-               ref: DataFrame, refKey: String,
-               broadcastRef: Boolean = true): DataFrame = {
-    val keys = ref.select(col(refKey).as("__k")).distinct()
-    val build = if (broadcastRef) broadcast(keys) else keys
+               ref: DataFrame, refKey: String): DataFrame = {
+    val build = broadcast(ref.select(col(refKey).as("__k")).distinct())
     val one = df.select(col(fk).as("__fk"))
       .join(build, col("__fk") === col("__k"), "left")
       .agg(count(lit(1)).cast(LongType).as("__n"),

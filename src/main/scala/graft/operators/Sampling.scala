@@ -23,12 +23,12 @@ object Sampling {
     * (plain `id % 100` biases against range-partitioned or striped ids). */
   def splitBucket(idCol: Column): Column = pmod(xxhash64(idCol), lit(100))
 
-  /** Tag each row 'train'/'test' with ~trainPct% in train — stable under
-    * corpus growth (a row's split never changes when other rows appear). */
-  def hashSplit(df: DataFrame, idCol: String, trainPct: Int,
-                splitCol: String = "split"): DataFrame = {
+  /** Tag each row 'train'/'test' in a `split` column with ~trainPct% in
+    * train — stable under corpus growth (a row's split never changes when
+    * other rows appear). */
+  def hashSplit(df: DataFrame, idCol: String, trainPct: Int): DataFrame = {
     require(trainPct > 0 && trainPct < 100, s"trainPct in (0,100), got $trainPct")
-    df.withColumn(splitCol,
+    df.withColumn("split",
       when(splitBucket(col(idCol)) < trainPct, lit("train")).otherwise(lit("test")))
   }
 
@@ -45,10 +45,10 @@ object Sampling {
     *
     * The bucket is the md5 hex digest of `salt + ":" + canon` compared
     * lexicographically against two fixed-width hex prefixes — train below
-    * `trainHex`, val below `valHex`, test above. Hex-prefix thresholds
-    * make the assignment a pure deterministic function of (salt, canon)
-    * that any engine reproduces from the same string digest (the q106
-    * shardedShuffle convention); "c0"/"e0" give 75/12.5/12.5. Stable
+    * "c0", val below "e0", test above (75/12.5/12.5). Hex-prefix
+    * thresholds make the assignment a pure deterministic function of
+    * (salt, canon) that any engine reproduces from the same string digest
+    * (the q106 shardedShuffle convention). Stable
     * under corpus growth ONLY while a cluster's canonical is stable —
     * adding a doc that bridges two clusters merges them and can move the
     * merged cluster's rows; that is inherent to group-aware splitting,
@@ -59,19 +59,16 @@ object Sampling {
     * near-dup graphs are sparse by construction) plus one broadcast-size
     * join of (id, canon) back to `df` when the pair set is small, a
     * shuffled equi-join otherwise — AQE picks. Output: `df`'s columns +
-    * (canon, splitCol). */
+    * (canon, split). */
   def groupSplit(df: DataFrame, idCol: String, pairs: DataFrame,
-                 salt: String = "graft-split", trainHex: String = "c0",
-                 valHex: String = "e0", splitCol: String = "split"): DataFrame = {
-    require(trainHex < valHex,
-      s"need trainHex < valHex, got '$trainHex' >= '$valHex'")
+                 salt: String = "graft-split"): DataFrame = {
     val canon = graft.dedup.Dedup.connectedComponents(df.select(col(idCol)), idCol, pairs)
       .select(col("id").as(idCol), col("canon"))
     val h = md5(concat(lit(salt + ":"), col("canon").cast("string")).cast("binary"))
     df.join(canon, Seq(idCol))
-      .withColumn(splitCol,
-        when(h < trainHex, lit("train"))
-          .when(h < valHex, lit("val"))
+      .withColumn("split",
+        when(h < "c0", lit("train"))
+          .when(h < "e0", lit("val"))
           .otherwise(lit("test")))
   }
 
@@ -93,7 +90,7 @@ object Sampling {
     * [[graft.similarity.Similarity.assignToCentroid]]'s argmin with the
     * deterministic lowest-cid tie-break; train centroids offline with
     * `ivfCentroids` over a sample, or state them) and keep at most `n`
-    * rows per cluster by `order` — a topic flood that would dominate the
+    * rows per cluster by `idCol` — a topic flood that would dominate the
     * mixture flattens to the cap while sparse topics pass through whole.
     * Output carries the assignment as `cluster` (the audit column a
     * release report groups by). Plan: numCentroids scalar expressions per
@@ -103,12 +100,10 @@ object Sampling {
     * flattening instead of a hard cap, `temperatureRates` composes the
     * same way on the `cluster` column. */
   def clusterCap(emb: DataFrame, idCol: String, vecCol: String,
-                 cents: Array[(Int, Array[Float])], n: Int,
-                 order: Seq[Column] = Seq.empty): DataFrame = {
+                 cents: Array[(Int, Array[Float])], n: Int): DataFrame = {
     val assigned = graft.similarity.Similarity.assignToCentroid(emb, vecCol, cents)
       .withColumnRenamed("__centroid", "cluster")
-    capPerKey(assigned, Seq("cluster"),
-      if (order.nonEmpty) order else Seq(col(idCol)), n)
+    capPerKey(assigned, Seq("cluster"), Seq(col(idCol)), n)
   }
 
   /** Quantile-stratified sampling: rank rows into `nStrata` equal-size
@@ -149,13 +144,12 @@ object Sampling {
     * [[PrefixSum.keyedRunningSum]] contract); project first and join
     * payload back by id. */
   def strataSample(df: DataFrame, order: Seq[Column], nStrata: Int,
-                   perStratum: Int, stratumCol: String = "stratum",
-                   bucket: Option[Column] = None): DataFrame = {
+                   perStratum: Int, bucket: Option[Column] = None): DataFrame = {
     require(nStrata > 0 && perStratum > 0,
       s"need nStrata > 0 and perStratum > 0, got $nStrata/$perStratum")
     bucket match {
       case Some(b) =>
-        val reserved = Seq("__one", "__rank", stratumCol)
+        val reserved = Seq("__one", "__rank", "stratum")
         val clash = df.columns.toSeq.intersect(reserved)
         require(clash.isEmpty,
           s"strataSample: input columns ${clash.mkString(", ")} collide with " +
@@ -170,18 +164,18 @@ object Sampling {
         val qSafe = math.max(q, 1L)
         PrefixSum.globalRunningSum(df.withColumn("__one", lit(1L)), "__one", b, order)
           .withColumnRenamed("running___one", "__rank")
-          .withColumn(stratumCol, expr(
+          .withColumn("stratum", expr(
             s"CAST(CASE WHEN __rank <= $cut THEN (__rank - 1) div ${q + 1} + 1 " +
               s"ELSE $rem + (__rank - $cut - 1) div $qSafe + 1 END AS BIGINT)"))
           .filter(expr(
-            s"__rank < (CASE WHEN `$stratumCol` <= $rem THEN (`$stratumCol` - 1) * ${q + 1} + 1 " +
-              s"ELSE $cut + (`$stratumCol` - $rem - 1) * $qSafe + 1 END) + $perStratum"))
+            s"__rank < (CASE WHEN stratum <= $rem THEN (stratum - 1) * ${q + 1} + 1 " +
+              s"ELSE $cut + (stratum - $rem - 1) * $qSafe + 1 END) + $perStratum"))
           .drop("__one", "__rank")
       case None =>
         val w = Window.orderBy(order: _*)
-        df.withColumn(stratumCol, ntile(nStrata).over(w).cast("long"))
+        df.withColumn("stratum", ntile(nStrata).over(w).cast("long"))
           .withColumn("__rn", row_number().over(
-            Window.partitionBy(col(stratumCol)).orderBy(order: _*)))
+            Window.partitionBy(col("stratum")).orderBy(order: _*)))
           .filter(col("__rn") <= perStratum)
           .drop("__rn")
     }
@@ -317,20 +311,19 @@ object Sampling {
     * `repeats(source)` times with an `epoch` index (0-based), so a
     * high-quality source can be walked multiple epochs per pass while
     * provenance (which copy is which) stays joinable. Zero repeats drop
-    * the source entirely. A narrow per-row explode — output size is the
-    * recipe's own blow-up factor, nothing shuffles. Downstream,
+    * the source entirely; a source `repeats` omits keeps one copy. A
+    * narrow per-row explode — output size is the recipe's own blow-up
+    * factor, nothing shuffles. Downstream,
     * [[shardedShuffle]] keyed on (id, epoch) interleaves the copies
     * through the training order instead of replaying them butt-to-butt. */
-  def epochExpand(df: DataFrame, sourceCol: String, repeats: Map[String, Int],
-                  defaultRepeats: Int = 1): DataFrame = {
-    require((repeats.values ++ Seq(defaultRepeats)).forall(_ >= 0),
-      s"repeats must be >= 0: $repeats default=$defaultRepeats")
+  def epochExpand(df: DataFrame, sourceCol: String, repeats: Map[String, Int]): DataFrame = {
+    require(repeats.values.forall(_ >= 0), s"repeats must be >= 0: $repeats")
     // the appended column must not shadow an existing one — re-expanding
     // already-expanded data would otherwise die on an ambiguous reference
     require(!df.columns.exists(_.equalsIgnoreCase("epoch")),
       "epochExpand: input already has an 'epoch' column — drop or rename it " +
         "(re-expanding expanded data multiplies copies; that is rarely intended)")
-    val r = repeats.foldLeft(lit(defaultRepeats)) {
+    val r = repeats.foldLeft(lit(1)) {
       case (acc, (src, n)) => when(col(sourceCol) === src, lit(n)).otherwise(acc)
     }
     df.select(df.columns.map(col) :+
@@ -361,9 +354,7 @@ object Sampling {
     * source-keyed budgets at scale. The bucketed path's single-scan
     * exchange reuse REQUIRES a narrow input (keys + order + weight and
     * nothing else — the keyedRunningSum contract); keep payload columns
-    * out and join them back by id, or pass `aggOffsets = true` to trade
-    * the reuse for an independent partial-aggregated offsets scan that
-    * tolerates payload (the packedWindows mode).
+    * out and join them back by id.
     *
     * PRECONDITION: weights must be non-null and non-negative — the running
     * sum skips NULLs (a null-weight row would ride free) and a negative
@@ -372,12 +363,11 @@ object Sampling {
     * coalesce or filter anything else first. */
   def tokenBudgetSample(df: DataFrame, keys: Seq[String], order: Seq[Column],
                         weightCol: String, budget: Long,
-                        bucket: Option[Column] = None,
-                        aggOffsets: Boolean = false): DataFrame = {
+                        bucket: Option[Column] = None): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     bucket match {
       case Some(b) =>
-        PrefixSum.keyedRunningSum(df, weightCol, keys, b, order, aggOffsets)
+        PrefixSum.keyedRunningSum(df, weightCol, keys, b, order)
           .filter(col(s"running_$weightCol") <= budget)
           .drop(s"running_$weightCol")
       case None =>
@@ -487,12 +477,11 @@ object Sampling {
     * bucket decomposition — sources are low-cardinality, so the plain
     * per-source window would single-task a 10 TB source (the
     * [[tokenBudgetSample]] scale note, verbatim — including its
-    * narrow-input/`aggOffsets` exchange-reuse contract). */
+    * narrow-input exchange-reuse contract). */
   def budgetMixture(df: DataFrame, sourceCol: String, orderCol: String,
                     tokensCol: String, weights: Map[String, Long],
                     budget: Long, defaultWeight: Long = 0L,
-                    bucket: Option[Column] = None,
-                    aggOffsets: Boolean = false): DataFrame = {
+                    bucket: Option[Column] = None): DataFrame = {
     require(defaultWeight >= 0, s"defaultWeight must be >= 0, got $defaultWeight")
     val per = df.groupBy(col(sourceCol))
       .agg(sum(col(tokensCol)).cast(LongType).as("__t"))
@@ -506,7 +495,7 @@ object Sampling {
     bucket match {
       case Some(b) =>
         PrefixSum.keyedRunningSum(df, tokensCol, Seq(sourceCol), b,
-            Seq(col(orderCol)), aggOffsets)
+            Seq(col(orderCol)))
           .filter(col(s"running_$tokensCol") <= allocFor)
           .drop(s"running_$tokensCol")
       case None =>

@@ -51,8 +51,8 @@ object SkewJoin {
     * `buckets`× with every salt value, equi-join on (key, salt). The dim
     * side must be broadcast-or-small (it is replicated). */
   def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-                 buckets: Int = 16, spreadIdentical: Boolean = false): DataFrame = {
-    val saltedFact = fact.withColumn(SALT, saltColumn(fact, buckets, spreadIdentical))
+                 buckets: Int = 16): DataFrame = {
+    val saltedFact = fact.withColumn(SALT, saltColumn(fact, buckets))
     val repl = dim.withColumn(SALT, explode(sequence(lit(0), lit(buckets - 1))))
     saltedFact.join(repl, Seq(key, SALT)).drop(SALT)
   }

@@ -82,22 +82,25 @@ object Similarity {
       when(dot(vec, typedLit(p.toSeq)) >= 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** Scale-path near-dup pair mining: L independent SRP hash tables of k
-    * planes each (seeded deterministically per table); vectors colliding in
-    * ANY table become candidates, verified with the exact codegen'd dot
-    * product. Recall for cosine >= t pairs is 1-(1-(1-θ/π)^k)^L with
-    * θ = arccos(t) — e.g. t=0.99, k=8, L=6 → ~99.9%. The join is an
-    * equi-join on (table, bucket): collisions, not n², drive the cost. */
+  /** SRP planes per hash table in [[lshNearDupPairs]] and [[annTopK]]. */
+  val SrpPlanes = 8
+
+  /** Scale-path near-dup pair mining: L = 6 independent SRP hash tables
+    * of k = [[SrpPlanes]] planes each (seeded deterministically per
+    * table); vectors colliding in ANY table become candidates, verified
+    * with the exact codegen'd dot product. Recall for cosine >= t pairs is
+    * 1-(1-(1-θ/π)^k)^L with θ = arccos(t) — e.g. t=0.99 → ~99.9%. The
+    * join is an equi-join on (table, bucket): collisions, not n², drive
+    * the cost. */
   def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double, numPlanes: Int = 8, numTables: Int = 6,
-                      dim: Int = 64): DataFrame = {
+                      threshold: Double, dim: Int = 64): DataFrame = {
     require(threshold >= 0, "dot-product threshold rewrite assumes cosine threshold >= 0")
     // non-finite guard (see finitePositive)
     val normed = emb.select(col(idCol), col(vecCol).as("__v"), norm(col(vecCol)).as("__n"))
       .filter(finitePositive(col("__n")))
     val bucketed = normed.select(col(idCol), col("__v"), col("__n"),
-      explode(array((0 until numTables).map { t =>
-        struct(lit(t).as("tbl"), srpBucket(col("__v"), hyperplanes(numPlanes, dim, seed = 42L + t)).as("bkt"))
+      explode(array((0 until 6).map { t =>
+        struct(lit(t).as("tbl"), srpBucket(col("__v"), hyperplanes(SrpPlanes, dim, seed = 42L + t)).as("bkt"))
       }: _*)).as("tb"))
       .select(col(idCol), col("__v"), col("__n"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
     val a = bucketed.select(col("tbl"), col("bkt"), col(idCol).as("vec_a"), col("__v").as("__va"), col("__n").as("__na"))
@@ -674,7 +677,7 @@ object Similarity {
     * Returns the surviving rows of `emb` (all original columns). */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     numCentroids: Int = 16, threshold: Double = 0.95,
-                    iterations: Int = 3, rankCol: Option[String] = None): DataFrame = {
+                    rankCol: Option[String] = None): DataFrame = {
     require(threshold >= 0, "dot-product threshold rewrite assumes cosine threshold >= 0")
     // anchor precedence: (rank, id) lexicographic when a rank column is
     // given (LOWER rank survives — pass a quality score negated, or a
@@ -684,7 +687,7 @@ object Similarity {
     // fail every comparison: a null-ranked row neither anchors nor gets
     // removed — coalesce ranks before calling if nulls are possible.
     val base = ivfIndex(emb.select(col(idCol), col(vecCol)), idCol, vecCol,
-      numCentroids, iterations).assigned
+      numCentroids).assigned
     val assigned = rankCol match {
       case Some(rc) => base.join(emb.select(col(idCol), col(rc).as("__rank")), Seq(idCol))
       case None => base.withColumn("__rank", col(idCol))
@@ -861,9 +864,12 @@ object Similarity {
     def dim: Int = mins.length
   }
 
+  /** Scalar-quantizer codes per dimension: one byte. */
+  val SqLevels = 256
+
   /** Train the scalar quantizer: ONE aggregate pass computing each
-    * dimension's min/max over the finite corpus vectors, `levels` uniform
-    * reconstruction points per dimension (256 = one byte per dimension).
+    * dimension's min/max over the finite corpus vectors, [[SqLevels]]
+    * uniform reconstruction points per dimension (one byte per dimension).
     * A constant dimension trains scale 0 and always encodes/reconstructs
     * to its single value. The memory story vs PQ: SQ8 is 1 byte/dim (4×
     * compression) with PER-DIMENSION fidelity — the standard re-rank tier
@@ -872,8 +878,7 @@ object Similarity {
     * the approximate ranking is far closer to exact than PQ's subspace
     * codebooks, at 8× the memory of m=8 PQ. Driver result is 2 arrays of
     * `dim` floats — trivially a literal. */
-  def sqTrain(emb: DataFrame, vecCol: String, dim: Int, levels: Int = 256): SqParams = {
-    require(levels >= 2 && levels <= 256, s"levels must be in [2,256], got $levels")
+  def sqTrain(emb: DataFrame, vecCol: String, dim: Int): SqParams = {
     val row = emb.filter(finitePositive(norm(col(vecCol))))
       .agg(
         array((0 until dim).map(d => min(element_at(col(vecCol), d + 1))): _*).as("__mins"),
@@ -884,26 +889,26 @@ object Similarity {
     val mins = row.getSeq[Float](0).toArray
     val maxs = row.getSeq[Float](1).toArray
     val scales = mins.zip(maxs).map { case (lo, hi) =>
-      if (hi > lo) (hi - lo) / (levels - 1).toFloat else 0f }
+      if (hi > lo) (hi - lo) / (SqLevels - 1).toFloat else 0f }
     SqParams(mins, scales)
   }
 
   /** Encode every vector to its per-dimension codes: output
     * (id, codes array<int>), code = round((v_d - min_d)/scale_d) clamped
-    * to [0, levels-1]. One narrow pass; the params ride as literals into
+    * to [0, SqLevels-1]. One narrow pass; the params ride as literals into
     * codegen. Out-of-range values (corpus drift past the trained min/max)
     * clamp to the boundary code; a NaN/Inf component degrades to code 0
     * (the rescore tail's finite filter rejects such rows anyway — a null
     * code in the array would instead poison the codegen'd dot product). */
   def sqEncode(emb: DataFrame, idCol: String, vecCol: String,
-               p: SqParams, levels: Int = 256): DataFrame = {
+               p: SqParams): DataFrame = {
     val minsL = typedLit(p.mins.toSeq)
     val scalesL = typedLit(p.scales.toSeq)
     emb.select(col(idCol),
       transform(col(vecCol), (x, i) => {
         val sc = element_at(scalesL, i + 1)
         val c = round((x - element_at(minsL, i + 1)) / sc).cast("int")
-        when(sc > 0f, coalesce(least(greatest(c, lit(0)), lit(levels - 1)), lit(0)))
+        when(sc > 0f, coalesce(least(greatest(c, lit(0)), lit(SqLevels - 1)), lit(0)))
           .otherwise(lit(0))
       }).as("codes"))
   }
@@ -965,14 +970,14 @@ object Similarity {
     * (multiprobe), exact cosine within candidates. Returns ids sorted by id.
     * Recall is tested against bruteForceTopK in AnnSpec. */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String,
-              queryId: Long, k: Int, numPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim)
+              queryId: Long, k: Int): DataFrame = {
+    val planes = hyperplanes(SrpPlanes, 64)
     val bucketed = emb.withColumn("__bucket", srpBucket(col(vecCol), planes))
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__qv"), col("__bucket").as("__qb"))
-    // query bucket + its numPlanes Hamming-1 neighbors, as a broadcast row
+    // query bucket + its SrpPlanes Hamming-1 neighbors, as a broadcast row
     val probes = q.select(col("__qv"),
-      array(col("__qb") +: (0 until numPlanes).map(i =>
+      array(col("__qb") +: (0 until SrpPlanes).map(i =>
         // XOR via arithmetic to stay in the Column algebra
         when(col("__qb").bitwiseAND(lit(1 << i)) > 0, col("__qb") - (1 << i))
           .otherwise(col("__qb") + (1 << i))): _*).as("__probes"))

@@ -41,12 +41,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *  - Content-Length is parsed into Long and sanity-bounded BEFORE any
   *    allocation (a crafted length cannot wrap an Int or reserve a
   *    near-2GiB array); a record whose declared payload overruns the
-  *    stream reads short and the file's remainder is DROPPED by default
-  *    (a lie and ordinary tail truncation are indistinguishable at EOF,
-  *    and re-walking a truncated payload's bytes could FABRICATE records
-  *    out of content that merely quotes WARC text) — pass
-  *    `recoverLyingExtents = true` to re-walk the consumed extent
-  *    instead, recovering records a mid-file lying length swallowed;
+  *    stream reads short and the file's remainder is DROPPED (a lie and
+  *    ordinary tail truncation are indistinguishable at EOF, and
+  *    re-walking a truncated payload's bytes could FABRICATE records out
+  *    of content that merely quotes WARC text);
   *  - header keys are case-insensitive per RFC (WARC inherits HTTP's
   *    header grammar); values are trimmed; a record missing Content-Length
   *    is malformed and skipped the same way; a corrupt gzip stream
@@ -355,13 +353,12 @@ object Warc {
     * projection, or any store of whole WARC files. One narrow flatMap of
     * lazy per-file iterators: no shuffle, no driver involvement, no
     * whole-file inflation. */
-  def records(files: DataFrame, recoverLyingExtents: Boolean = false)
-             (implicit spark: SparkSession): Dataset[WarcRecord] = {
+  def records(files: DataFrame)(implicit spark: SparkSession): Dataset[WarcRecord] = {
     import spark.implicits._
     files.select(files.columns.head, files.columns(1))
       .as[(Long, Array[Byte])]
       .mapPartitions(it => it.flatMap { case (id, bytes) =>
-        walkStream(id, open(bytes), recoverLyingExtents)
+        walkStream(id, open(bytes))
       })
   }
 

@@ -65,12 +65,11 @@ object IncrementalStream {
     * dimension attributes as it arrives — the lookup-table shape every
     * event pipeline needs. The static side is re-planned per micro-batch
     * (dimension updates between batches are picked up automatically) and
-    * broadcast by default: a shuffled stream-static join would re-shuffle
-    * every micro-batch, so for any dimension that fits in executor memory
-    * the broadcast is the only 100 TB-stream shape. */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame, keys: Seq[String],
-                    broadcastDim: Boolean = true): DataFrame =
-    stream.join(if (broadcastDim) broadcast(dim) else dim, keys)
+    * broadcast: a shuffled stream-static join would re-shuffle every
+    * micro-batch, so for any dimension that fits in executor memory the
+    * broadcast is the only 100 TB-stream shape. */
+  def enrichWithDim(stream: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
+    stream.join(broadcast(dim), keys)
 
   /** CONTINUOUS SYNC — the reference's entire nightly pipeline
     * (watermark read -> incremental extract -> upsert,
@@ -87,10 +86,9 @@ object IncrementalStream {
     * precedence order is not); only the very first batch, with no
     * destination to merge into, pays a separate reduction window.
     * `Trigger.AvailableNow` gives the scheduled-batch deployment of the
-    * reference; the default trigger runs it as true streaming. */
+    * reference. */
   def upsertSync(stream: DataFrame, store: graft.sync.TableStore, table: String,
-                 pks: Seq[String], orderCols: Seq[String], checkpointDir: String,
-                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                 pks: Seq[String], orderCols: Seq[String], checkpointDir: String): StreamingQuery = {
     import graft.operators.Merge
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -104,7 +102,7 @@ object IncrementalStream {
         store.write(Merge.upsertIfNewer(dest, batch, pks, orderCols), table)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
@@ -129,7 +127,7 @@ object IncrementalStream {
     * CDC DELETES (`opCol`): a change-data-capture feed carries delete
     * events the watermark-pull shape cannot (the upsert + applyDeletes
     * pairing, temporal form). With `opCol` set, rows whose op equals
-    * `deleteOp` CLOSE their key's open interval at the row's version
+    * "d" CLOSE their key's open interval at the row's version
     * (`History.scd2Close` — compare columns of a delete row are
     * ignored, NULL is fine) and every other row — including a NULL op,
     * the common stamp-only-deletes CDC shape — upserts; within one
@@ -166,9 +164,7 @@ object IncrementalStream {
   def scd2Ingest(deltaStream: DataFrame, store: graft.sync.TableStore,
                  table: String, pks: Seq[String], compareCols: Seq[String],
                  verCol: String, checkpointDir: String,
-                 trigger: Trigger = Trigger.AvailableNow(),
-                 opCol: Option[String] = None,
-                 deleteOp: String = "d"): StreamingQuery = {
+                 opCol: Option[String] = None): StreamingQuery = {
     import graft.sync.History
     require(!(pks ++ compareCols).contains(verCol),
       s"scd2Ingest: verCol '$verCol' must not be a key or compare column")
@@ -224,11 +220,11 @@ object IncrementalStream {
             // "every other row" — CDC feeds often stamp only deletes),
             // not vanish into the NULL branch of `=!=`
             val upserted = History.scd2ApplyUpserts(h,
-              slice.filter(col(op).isNull || col(op) =!= deleteOp)
+              slice.filter(col(op).isNull || col(op) =!= "d")
                 .select(dataCols.map(col): _*),
               pks, compareCols, ver)
             History.scd2Close(upserted,
-              slice.filter(col(op) === deleteOp).select(pks.map(col): _*),
+              slice.filter(col(op) === "d").select(pks.map(col): _*),
               pks, ver)
         }
       }
@@ -237,7 +233,7 @@ object IncrementalStream {
       // the partial IS the raw delta log (narrowed to its own columns)
       batch => batch.select(logCols.map(col): _*),
       (prev, raw) => applyLog(prev, raw),
-      store, table, checkpointDir, trigger,
+      store, table, checkpointDir,
       // first batch: fold from the empty history
       seed = raw => applyLog(
         History.scd2Init(raw.select(dataCols.map(col): _*).limit(0), 0L), raw))
@@ -302,10 +298,9 @@ object IncrementalStream {
     * batch-join result duplicate-free under any crash/retry schedule. */
   def knnServe(queryStream: DataFrame, corpus: => DataFrame, idCol: String,
                vecCol: String, k: Int, store: graft.sync.TableStore,
-               table: String, checkpointDir: String,
-               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+               table: String, checkpointDir: String): StreamingQuery =
     guardedAppend(queryStream, store, table, checkpointDir,
-      Seq("query_id", "neighbor_id"), trigger) { batch =>
+      Seq("query_id", "neighbor_id")) { batch =>
       graft.similarity.Similarity.knnJoin(batch, corpus, idCol, vecCol, k)
     }
 
@@ -324,10 +319,9 @@ object IncrementalStream {
   def mmrServe(queryStream: DataFrame, corpus: => DataFrame, idCol: String,
                vecCol: String, k: Int, shortlist: Int, lambdaPermille: Int,
                store: graft.sync.TableStore, table: String,
-               checkpointDir: String,
-               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+               checkpointDir: String): StreamingQuery =
     guardedAppend(queryStream, store, table, checkpointDir,
-      Seq("query_id", "mmr_rank"), trigger) { batch =>
+      Seq("query_id", "mmr_rank")) { batch =>
       graft.similarity.Similarity.mmrRerank(batch, corpus, idCol, vecCol,
         k, shortlist, lambdaPermille)
     }
@@ -349,27 +343,21 @@ object IncrementalStream {
     * the batch's own query terms probing the postings by broadcast —
     * the index never shuffles pre-score.
     *
-    * `maxBroadcastQueries` forwards to [[graft.text.TfIdf.bm25Join]]'s
-    * broadcast gate PER BATCH. The STREAMING default is Long.MaxValue —
-    * broadcast unconditionally, no per-batch probe job: a serving loop's
-    * micro-batches are bounded by construction (source admission control,
-    * maxFilesPerTrigger, interactive query rates), so paying a bounded
-    * limit+count job on EVERY batch to re-learn that would dominate
-    * interactive batches (this is deliberately NOT bm25Join's batch
-    * default, whose one probe amortizes over one bulk call). A pipeline
-    * that genuinely streams unbounded re-score batches (one giant file
-    * per trigger) should pass a positive cap to restore the probe, or 0
-    * to never broadcast; negative values are rejected. */
+    * Each batch's queries broadcast unconditionally, with no per-batch
+    * probe job ([[graft.text.TfIdf.bm25Join]]'s `maxBroadcastQueries` at
+    * Long.MaxValue): a serving loop's micro-batches are bounded by
+    * construction (source admission control, maxFilesPerTrigger,
+    * interactive query rates), so paying a bounded limit+count job on
+    * EVERY batch to re-learn that would dominate interactive batches
+    * (this is deliberately NOT bm25Join's batch default, whose one probe
+    * amortizes over one bulk call). */
   def bm25Serve(queryStream: DataFrame, index: => graft.text.TfIdf.Bm25Index,
                 idCol: String, k: Int, store: graft.sync.TableStore,
-                table: String, checkpointDir: String,
-                k1: Double = 1.2, b: Double = 0.75,
-                trigger: Trigger = Trigger.AvailableNow(),
-                maxBroadcastQueries: Long = Long.MaxValue): StreamingQuery =
+                table: String, checkpointDir: String): StreamingQuery =
     guardedAppend(queryStream, store, table, checkpointDir,
-      Seq("query_id", idCol), trigger) { batch =>
-      graft.text.TfIdf.bm25Join(index, idCol, batch, k, k1, b,
-        maxBroadcastQueries)
+      Seq("query_id", idCol)) { batch =>
+      graft.text.TfIdf.bm25Join(index, idCol, batch, k,
+        maxBroadcastQueries = Long.MaxValue)
     }
 
   /** STREAMING token-id encode gate — the training-prep member of the
@@ -387,10 +375,9 @@ object IncrementalStream {
     * driver involvement past the one topN-bounded collect. */
   def encodeGate(docStream: DataFrame, vocab: DataFrame, idCol: String,
                  textCol: String, store: graft.sync.TableStore, table: String,
-                 checkpointDir: String,
-                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                 checkpointDir: String): StreamingQuery = {
     val entries = graft.text.Vocab.collectVocab(vocab)
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.text.Vocab.encodeWith(batch, idCol, textCol, entries)
     }
   }
@@ -409,8 +396,7 @@ object IncrementalStream {
     * to [[encodeGate]], graded against the SAME batch oracle (q155). */
   def encodeGateJoin(docStream: DataFrame, vocab: DataFrame, idCol: String,
                      textCol: String, store: graft.sync.TableStore,
-                     table: String, checkpointDir: String,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                     table: String, checkpointDir: String): StreamingQuery = {
     // pin FIRST, validate the pinned copy: validating the raw plan and
     // then re-executing it to checkpoint would validate one
     // materialization and serve another — a concurrent artifact rewrite
@@ -423,7 +409,7 @@ object IncrementalStream {
     // until driver GC (graft.Checkpoints scaladoc)
     try graft.text.Vocab.validate(pinned)
     catch { case e: Throwable => graft.Checkpoints.release(pinned); throw e }
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.text.Vocab.encodeJoinValidated(batch, idCol, textCol, pinned)
     }
   }
@@ -445,10 +431,9 @@ object IncrementalStream {
     * training-replay oracle as batch q168 (q169). */
   def classifierGate(docStream: DataFrame, weights: DataFrame, idCol: String,
                      textCol: String, store: graft.sync.TableStore,
-                     table: String, checkpointDir: String,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                     table: String, checkpointDir: String): StreamingQuery = {
     val model = graft.text.Classifier.collectModel(weights)
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.text.Classifier.scoreText(batch, idCol, textCol, model)
     }
   }
@@ -465,8 +450,7 @@ object IncrementalStream {
     * (q170). */
   def unigramGate(docStream: DataFrame, pieces: DataFrame, idCol: String,
                   textCol: String, store: graft.sync.TableStore,
-                  table: String, checkpointDir: String,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                  table: String, checkpointDir: String): StreamingQuery = {
     val collected = pieces.select(
         org.apache.spark.sql.functions.col("piece"),
         org.apache.spark.sql.functions.col("cnt"),
@@ -482,7 +466,7 @@ object IncrementalStream {
       "unigramGate: empty/null piece rows in the artifact")
     require(collected.map(_.piece).distinct.length == collected.length,
       "unigramGate: duplicate piece rows would make the Viterbi argmax ambiguous")
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       batch.select(org.apache.spark.sql.functions.col(idCol),
         graft.text.Unigram.unigramEncode(
           org.apache.spark.sql.functions.col(textCol), collected).as("pieces"))
@@ -503,8 +487,7 @@ object IncrementalStream {
   def wordPieceGate(docStream: DataFrame, vocab: DataFrame, idCol: String,
                     textCol: String, store: graft.sync.TableStore,
                     table: String, checkpointDir: String,
-                    maxInputChars: Int = graft.text.WordPiece.DefaultMaxInputChars,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                    maxInputChars: Int = graft.text.WordPiece.DefaultMaxInputChars): StreamingQuery = {
     val collected = vocab
       .select(org.apache.spark.sql.functions.col("piece"))
       .collect().map(_.getString(0)).toSeq
@@ -513,7 +496,7 @@ object IncrementalStream {
       "wordPieceGate: empty/null/bare-## piece rows in the artifact")
     require(collected.distinct.length == collected.length,
       "wordPieceGate: duplicate vocabulary rows")
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       batch.select(org.apache.spark.sql.functions.col(idCol),
         graft.text.WordPiece.wordPieceEncode(
           org.apache.spark.sql.functions.col(textCol), collected,
@@ -545,8 +528,7 @@ object IncrementalStream {
   def expectationsGate(docStream: DataFrame,
                        checks: Seq[(String, org.apache.spark.sql.Column)],
                        store: graft.sync.TableStore, table: String,
-                       checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                       checkpointDir: String): StreamingQuery = {
     require(checks.nonEmpty, "expectationsGate: no checks given")
     lazy val run = lineageId(docStream.sparkSession, checkpointDir)
     docStream.writeStream
@@ -561,7 +543,7 @@ object IncrementalStream {
           run, batchId)(report)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
@@ -578,9 +560,8 @@ object IncrementalStream {
     * the model-based gates ([[qualityGate]], [[classifierGate]]). */
   def gopherGate(docStream: DataFrame, idCol: String, textCol: String,
                  store: graft.sync.TableStore, table: String,
-                 checkpointDir: String,
-                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                 checkpointDir: String): StreamingQuery =
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.text.Gopher.quality(batch, idCol, textCol)
     }
 
@@ -604,15 +585,14 @@ object IncrementalStream {
                       store: graft.sync.TableStore, table: String,
                       checkpointDir: String,
                       minChars: Int = 25, maxLinkPermille: Int = 333,
-                      minKept: Int = 1,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                      minKept: Int = 1): StreamingQuery = {
     require(minKept >= 1, s"mainContentGate: minKept must be >= 1, got $minKept")
     require(!Seq("main", "n_blocks", "n_kept", "__r").contains(idCol) &&
         !idCol.startsWith("__"),
       s"mainContentGate: idCol '$idCol' collides with an output column or a " +
         "reserved '__' name (main/n_blocks/n_kept are the extraction row; " +
         "__run/__batch are the retry-guard stamps; rename upstream)")
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       batch.select(col(idCol),
           graft.text.Html.mainContentReport(col(htmlCol), minChars,
             maxLinkPermille).as("__r"))
@@ -628,9 +608,8 @@ object IncrementalStream {
     * [[graft.sources.Warc.records]] input shape; a `binaryFile` file
     * stream upstream) splits into records per partition, strips the HTTP
     * message envelope and decodes by the declared charset
-    * ([[graft.sources.Warc.responseText]]), admits by HTTP `status` +
-    * bare `mime` (None disables that filter — the usual crawl pair is
-    * 200 + text/html), extracts main content, and accumulates
+    * ([[graft.sources.Warc.responseText]]), admits HTTP 200 records of
+    * bare mime text/html, extracts main content, and accumulates
     * (file_id, rec_index, url, main, n_blocks, n_kept) under the
     * lineage-stamped retry guard at (file_id, rec_index) granularity.
     *
@@ -650,19 +629,15 @@ object IncrementalStream {
     * O(batch segments), independent of crawl lifetime. */
   def warcIngest(fileStream: DataFrame, store: graft.sync.TableStore,
                  table: String, checkpointDir: String,
-                 status: Option[Int] = Some(200),
-                 mime: Option[String] = Some("text/html"),
                  minChars: Int = 25, maxLinkPermille: Int = 333,
-                 minKept: Int = 0,
-                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                 minKept: Int = 0): StreamingQuery = {
     require(minKept >= 0, s"warcIngest: minKept must be >= 0, got $minKept")
     guardedAppend(fileStream, store, table, checkpointDir,
-      Seq("file_id", "rec_index"), trigger) { batch =>
+      Seq("file_id", "rec_index")) { batch =>
       implicit val s: SparkSession = batch.sparkSession
-      val resp = graft.sources.Warc.responseText(batch)
-      val byStatus = status.fold(resp)(n => resp.filter(col("http_status") === n))
-      val admitted = mime.fold(byStatus)(m => byStatus.filter(col("content_type") === m))
-      admitted.select(col("file_id"), col("rec_index"), col("url"),
+      graft.sources.Warc.responseText(batch)
+        .filter(col("http_status") === 200 && col("content_type") === "text/html")
+        .select(col("file_id"), col("rec_index"), col("url"),
           graft.text.Html.mainContentReport(col("text"), minChars,
             maxLinkPermille).as("__r"))
         .select(col("file_id"), col("rec_index"), col("url"),
@@ -685,20 +660,17 @@ object IncrementalStream {
     * THIS answers "which corpus documents does it share local runs with,
     * and how strongly" — positional evidence MinHash's global sampling
     * cannot give. The index is a BY-NAME parameter re-evaluated per batch
-    * (an offline corpus re-fingerprint lands on the next batch); (k, w,
-    * hasher) must match the build — the band-index family contract. Per
+    * (an offline corpus re-fingerprint lands on the next batch); (k, w)
+    * must match the build — the band-index family contract. Per
     * batch, only the arrivals' own fingerprints join the static index;
     * the corpus text is never read and nothing corpus-sized shuffles. */
   def overlapGate(docStream: DataFrame, index: => DataFrame, idCol: String,
                   textCol: String, store: graft.sync.TableStore, table: String,
                   checkpointDir: String, k: Int = 3, w: Int = 4,
-                  minShared: Int = 2,
-                  hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                    org.apache.spark.sql.functions.md5,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                  minShared: Int = 2): StreamingQuery =
     guardedAppend(docStream, store, table, checkpointDir,
-      Seq("id_a", "id_b"), trigger) { batch =>
-      val bfps = graft.text.Winnow.fingerprints(batch, idCol, textCol, k, w, hasher)
+      Seq("id_a", "id_b")) { batch =>
+      val bfps = graft.text.Winnow.fingerprints(batch, idCol, textCol, k, w)
         .select(col("fp"), col(idCol).as("id_a")).distinct()
       bfps.join(index.select(col("fp"), col(idCol).as("id_b")), "fp")
         .groupBy(col("id_a"), col("id_b"))
@@ -720,19 +692,16 @@ object IncrementalStream {
     * from-scratch `buildOverlapIndex` over everything ingested so far
     * (graded, q151's full-outer parity), which an append-time gate could
     * not guarantee (each row's verdict would freeze at its arrival-time
-    * df). (k, w, hasher) must match every probe and any seed build — the
+    * df). (k, w) must match every probe and any seed build — the
     * band-index family contract. Per-batch cost: the batch's own
     * fingerprint projection + the metadata-pruned retry anti-join; the
     * accumulated index is never re-fingerprinted. */
   def overlapIndexIngest(docStream: DataFrame, idCol: String, textCol: String,
                          store: graft.sync.TableStore, table: String,
-                         checkpointDir: String, k: Int = 3, w: Int = 4,
-                         hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                           org.apache.spark.sql.functions.md5,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                         checkpointDir: String, k: Int = 3, w: Int = 4): StreamingQuery =
     guardedAppend(docStream, store, table, checkpointDir,
-      Seq("fp", idCol), trigger) { batch =>
-      graft.text.Winnow.indexRows(batch, idCol, textCol, k, w, hasher)
+      Seq("fp", idCol)) { batch =>
+      graft.text.Winnow.indexRows(batch, idCol, textCol, k, w)
     }
 
   /** CONTINUOUS line-index maintenance — the C4 line-dedup member of the
@@ -752,10 +721,9 @@ object IncrementalStream {
     * (graded, q183 — against the same DuckDB oracle as batch q179). */
   def lineIndexIngest(docStream: DataFrame, idCol: String, textCol: String,
                       store: graft.sync.TableStore, table: String,
-                      checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                      checkpointDir: String): StreamingQuery =
     guardedAppend(docStream, store, table, checkpointDir,
-      Seq(idCol, "pos"), trigger) { batch =>
+      Seq(idCol, "pos")) { batch =>
       graft.dedup.Dedup.lineIndexRows(batch, idCol, textCol)
     }
 
@@ -774,8 +742,7 @@ object IncrementalStream {
     * q186 — the same DuckDB oracle as q179/q183). */
   def lineDedupGate(docStream: DataFrame, hotLines: DataFrame, idCol: String,
                     textCol: String, store: graft.sync.TableStore,
-                    table: String, checkpointDir: String,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                    table: String, checkpointDir: String): StreamingQuery = {
     // pin FIRST (the encodeGateJoin discipline): a snapshot refresh
     // landing mid-stream must not silently mix two hotness baselines in
     // one accumulated log — re-clean = new table + checkpoint pair. The
@@ -787,7 +754,7 @@ object IncrementalStream {
     // survives any executor loss with identical pin semantics.
     val pinTable = table + "__hot_pin"
     store.write(hotLines, pinTable)
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.dedup.Dedup.lineDedupAgainstHot(
         graft.dedup.Dedup.lineIndexRows(batch, idCol, textCol),
         store.read(pinTable).get, idCol)
@@ -823,14 +790,14 @@ object IncrementalStream {
     *
     * Maintenance: the O(log file count) term is the one that grows — one
     * part-file set per batch. Compact offline between runs with
-    * `store.write(store.read(table).get, table)` (or `files.Compaction`):
+    * `files.Compaction`, which is that store's `write` of its own read:
     * the guard stays CORRECT through a compaction because it filters rows,
     * not files — compacted files merely mix (__run, __batch) values, so
     * the first post-compaction retry prunes less and reads more, an
     * optimization regression only, never a duplicate or a loss. */
   private def guardedAppend(stream: DataFrame, store: graft.sync.TableStore,
                             table: String, checkpointDir: String,
-                            keyCols: Seq[String], trigger: Trigger)
+                            keyCols: Seq[String])
                            (perBatch: DataFrame => DataFrame): StreamingQuery = {
     // resolved once, on the first batch (the metadata file exists from
     // query start); identical for every restart from this checkpoint
@@ -840,7 +807,7 @@ object IncrementalStream {
         guardedAppendBatch(store, table, keyCols, run, batchId)(perBatch(batch))
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
@@ -866,29 +833,14 @@ object IncrementalStream {
             prev.filter(col("__run").isNull ||
               col("__run") =!= run || col("__batch") === batchId)
           else prev // pre-(__run,__batch) log: full key-level guard
+        // a using-join puts the keys first; every batch keeps res's order
         res.join(collidable.select(keyCols.map(col): _*), keyCols, "left_anti")
+          .select(res.columns.map(col): _*)
       case None => res
     }
     store.append(fresh, table)
   }
 
-  /** CONTINUOUS near-dup-index maintenance — the MinHash member of the
-    * index-ingest family ([[indexIngest]] ANN, [[overlapIndexIngest]]
-    * winnowing), closing its build-once asymmetry: each micro-batch of
-    * documents shingles ONCE (`Dedup.buildNearDupIndex` over the batch —
-    * the checkpointed one-pass build) and its band-index rows and shingle
-    * sets append to the two persisted tables under the lineage-stamped
-    * retry guard, applied independently per table (a crash between the
-    * two appends re-appends exactly the missing rows of each on retry).
-    * Both tables are per-document deterministic — the identical MinHash
-    * family as every batch path — so at any instant
-    * `NearDupIndex(store.read(bandTable).get, store.read(setTable).get)`
-    * serves `duplicateIdsStream` identically to a from-scratch
-    * `buildNearDupIndex` over everything ingested so far (graded —
-    * q158's dual full-outer parity contract). (shingler, numHashes,
-    * bands) must match every probe — the band-index family contract.
-    * Per-batch cost: the batch's own text pass + two metadata-pruned
-    * retry anti-joins; the accumulated index is never re-shingled. */
   /** URL-FRONTIER gate — the EXACT-key member of the ingest-dedup
     * family (text/image/audio/embedding near-dup gates all probe
     * accumulated indexes; this is the cheaper tier every crawl runs
@@ -932,7 +884,6 @@ object IncrementalStream {
   def frontierGate(stream: DataFrame, idCol: String, urlCol: String,
                    store: graft.sync.TableStore, table: String,
                    checkpointDir: String,
-                   trigger: Trigger = Trigger.AvailableNow(),
                    maxPerHost: Option[Long] = None): StreamingQuery = {
     require(idCol != "url_norm" && idCol != "host",
       "frontierGate: idCol may not be named url_norm/host (the seen-set output columns)")
@@ -1004,17 +955,33 @@ object IncrementalStream {
         }
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
+  /** CONTINUOUS near-dup-index maintenance — the MinHash member of the
+    * index-ingest family ([[indexIngest]] ANN, [[overlapIndexIngest]]
+    * winnowing), closing its build-once asymmetry: each micro-batch of
+    * documents shingles ONCE (`Dedup.buildNearDupIndex` over the batch —
+    * the checkpointed one-pass build) and its band-index rows and shingle
+    * sets append to the two persisted tables under the lineage-stamped
+    * retry guard, applied independently per table (a crash between the
+    * two appends re-appends exactly the missing rows of each on retry).
+    * Both tables are per-document deterministic — the identical MinHash
+    * family as every batch path — so at any instant
+    * `NearDupIndex(store.read(bandTable).get, store.read(setTable).get)`
+    * serves `duplicateIdsStream` identically to a from-scratch
+    * `buildNearDupIndex` over everything ingested so far (graded —
+    * q158's dual full-outer parity contract). (shingler, numHashes,
+    * bands) must match every probe — the band-index family contract.
+    * Per-batch cost: the batch's own text pass + two metadata-pruned
+    * retry anti-joins; the accumulated index is never re-shingled. */
   def dedupIndexIngest(docStream: DataFrame, idCol: String, textCol: String,
                        hashedShingler: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                        numHashes: Int, bands: Int,
                        store: graft.sync.TableStore, checkpointDir: String,
                        bandTable: String = "band_index",
-                       setTable: String = "shingle_sets",
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                       setTable: String = "shingle_sets"): StreamingQuery = {
     lazy val run = lineageId(docStream.sparkSession, checkpointDir)
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1028,7 +995,7 @@ object IncrementalStream {
           idx.shingleSets)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
@@ -1074,8 +1041,7 @@ object IncrementalStream {
                       idCol: String, sigCol: String, maxHamming: Int,
                       store: graft.sync.TableStore, checkpointDir: String,
                       sigTable: String = "fingerprints",
-                      pairTable: String = "dup_pairs",
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                      pairTable: String = "dup_pairs"): StreamingQuery = {
     lazy val run = lineageId(mediaStream.sparkSession, checkpointDir)
     mediaStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1111,7 +1077,7 @@ object IncrementalStream {
         } finally graft.Checkpoints.release(sigs)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 
@@ -1137,8 +1103,7 @@ object IncrementalStream {
   def bpeGate(docStream: DataFrame, merges: DataFrame, idCol: String,
               textCol: String, store: graft.sync.TableStore,
               table: String, checkpointDir: String,
-              byteLevel: Boolean = true,
-              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+              byteLevel: Boolean = true): StreamingQuery = {
     val collected = merges
       .select(col("step").cast("int"), col("left"), col("right")).collect()
       .map(r => graft.text.TextAnalysis.BpeMerge(
@@ -1149,7 +1114,7 @@ object IncrementalStream {
       "bpeGate: empty/null merge sides in the artifact")
     require(collected.map(_.step).distinct.length == collected.length,
       "bpeGate: duplicate step rows would make the replay order ambiguous")
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       val enc =
         if (byteLevel) graft.text.TextAnalysis.byteBpeEncode(
           org.apache.spark.sql.functions.col(textCol), collected)
@@ -1178,9 +1143,8 @@ object IncrementalStream {
     * reassignment pass, deliberately NOT hidden inside this operator). */
   def indexIngest(vecStream: DataFrame, cents: Array[(Int, Array[Float])],
                   idCol: String, vecCol: String, store: graft.sync.TableStore,
-                  table: String, checkpointDir: String,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                  table: String, checkpointDir: String): StreamingQuery =
+    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.similarity.Similarity.indexRows(batch, vecCol, cents)
     }
 
@@ -1201,9 +1165,8 @@ object IncrementalStream {
   def embedDupGate(vecStream: DataFrame, corpus: => DataFrame, idCol: String,
                    vecCol: String, threshold: Double,
                    store: graft.sync.TableStore, table: String,
-                   checkpointDir: String,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                   checkpointDir: String): StreamingQuery =
+    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.similarity.Similarity.embedDupIds(batch, corpus, idCol, vecCol, threshold)
     }
 
@@ -1221,9 +1184,8 @@ object IncrementalStream {
   def embedContaminationGate(vecStream: DataFrame, benchmark: => DataFrame,
                              idCol: String, vecCol: String, threshold: Double,
                              store: graft.sync.TableStore, table: String,
-                             checkpointDir: String,
-                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                             checkpointDir: String): StreamingQuery =
+    guardedAppend(vecStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.dedup.Decontaminate.embedContaminatedIds(batch, benchmark,
         idCol, vecCol, threshold)
     }
@@ -1248,13 +1210,9 @@ object IncrementalStream {
     * `NgramStats.bigramCounts`, done once, persisted. */
   def qualityGate(docStream: DataFrame, refBigrams: => DataFrame,
                   idCol: String, textCol: String, store: graft.sync.TableStore,
-                  table: String, checkpointDir: String,
-                  headNum: Int = 1, headDen: Int = 10,
-                  midNum: Int = 1, midDen: Int = 2,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
-      graft.text.NgramStats.oovBuckets(batch, refBigrams, idCol, textCol,
-        headNum, headDen, midNum, midDen)
+                  table: String, checkpointDir: String): StreamingQuery =
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
+      graft.text.NgramStats.oovBuckets(batch, refBigrams, idCol, textCol)
     }
 
   /** CONTINUOUS SURGICAL-decontamination gate — the span-level member of
@@ -1284,9 +1242,8 @@ object IncrementalStream {
   def spanScrubGate(docStream: DataFrame, benchmark: => DataFrame,
                     idCol: String, textCol: String,
                     store: graft.sync.TableStore, table: String,
-                    checkpointDir: String, n: Int = 13,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                    checkpointDir: String, n: Int = 13): StreamingQuery =
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.dedup.Decontaminate.scrubSpans(batch, benchmark, idCol, textCol, n)
     }
 
@@ -1309,9 +1266,8 @@ object IncrementalStream {
                        idCol: String, textCol: String,
                        store: graft.sync.TableStore, table: String,
                        checkpointDir: String, k: Int = 8,
-                       minRunTokens: Int = 20, maxDocFreq: Int = 20,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol), trigger) { batch =>
+                       minRunTokens: Int = 20, maxDocFreq: Int = 20): StreamingQuery =
+    guardedAppend(docStream, store, table, checkpointDir, Seq(idCol)) { batch =>
       graft.dedup.Decontaminate.scrubDuplicatedSpansAgainst(batch, reference,
         idCol, textCol, k, minRunTokens, maxDocFreq)
     }
@@ -1334,10 +1290,9 @@ object IncrementalStream {
     * by the CLI's params manifest. */
   def dupSpanIndexIngest(docStream: DataFrame, idCol: String, textCol: String,
                          store: graft.sync.TableStore, table: String,
-                         checkpointDir: String, k: Int = 8,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                         checkpointDir: String, k: Int = 8): StreamingQuery =
     guardedAppend(docStream, store, table, checkpointDir,
-      Seq(idCol, "pos"), trigger) { batch =>
+      Seq(idCol, "pos")) { batch =>
       graft.dedup.Decontaminate.dupSpanIndexRows(batch, idCol, textCol, k)
     }
 
@@ -1373,11 +1328,10 @@ object IncrementalStream {
     * merging (double-counts re-read data) is correct across lineages. */
   def maintainStats(stream: DataFrame, keys: Seq[String], valueCol: String,
                     store: graft.sync.TableStore, table: String,
-                    checkpointDir: String,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                    checkpointDir: String): StreamingQuery = {
     import graft.operators.Stats
     maintainMerged(stream, Stats.mergeableStats(_, keys, valueCol),
-      Stats.mergeStats(_, _, keys), store, table, checkpointDir, trigger)
+      Stats.mergeStats(_, _, keys), store, table, checkpointDir)
   }
 
   /** CONTINUOUSLY-MAINTAINED per-key counts — the drift monitor's state
@@ -1395,9 +1349,8 @@ object IncrementalStream {
     * own (null-safe merge join), matching the batch operator. */
   def maintainCounts(stream: DataFrame, keyCol: String,
                      store: graft.sync.TableStore, table: String,
-                     checkpointDir: String,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    maintainCountsKeys(stream, Seq(keyCol), store, table, checkpointDir, trigger)
+                     checkpointDir: String): StreamingQuery =
+    maintainCountsKeys(stream, Seq(keyCol), store, table, checkpointDir)
 
   /** [[maintainCounts]] over a COMPOSITE key — the maintained
     * heavy-hitters state (e.g. (source, token): "top tokens per source,
@@ -1411,8 +1364,7 @@ object IncrementalStream {
     * operator) instead and accept the epsilon. */
   def maintainCountsKeys(stream: DataFrame, keys: Seq[String],
                          store: graft.sync.TableStore, table: String,
-                         checkpointDir: String,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                         checkpointDir: String): StreamingQuery = {
     require(keys.nonEmpty, "maintainCountsKeys needs at least one key column")
     // the merge below renames the partial's count to __n and its keys to
     // __k_<key>: a key column already named 'n' (the state's count
@@ -1434,7 +1386,7 @@ object IncrementalStream {
           .select(keys.map(k => coalesce(prev(k), p(s"__k_$k")).as(k)) :+
             (coalesce(col("n"), lit(0L)) + coalesce(col("__n"), lit(0L))).as("n"): _*)
       },
-      store, table, checkpointDir, trigger)
+      store, table, checkpointDir)
   }
 
   /** Continuously-maintained approximate-distinct view: the same
@@ -1456,13 +1408,12 @@ object IncrementalStream {
     * `hll_sketch_estimate(hll)`. */
   def maintainDistinct(stream: DataFrame, keys: Seq[String], valueCol: String,
                        store: graft.sync.TableStore, table: String,
-                       checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                       checkpointDir: String): StreamingQuery =
     maintainMerged(stream,
       _.groupBy(keys.map(col): _*).agg(hll_sketch_agg(col(valueCol)).as("hll")),
       (a, b) => a.unionByName(b).groupBy(keys.map(col): _*)
         .agg(hll_union_agg(col("hll")).as("hll")),
-      store, table, checkpointDir, trigger)
+      store, table, checkpointDir)
 
   /** CONTINUOUSLY-MAINTAINED preference-pair mining — the online form
     * of [[graft.operators.Preference.pairs]]: rollouts stream in as a
@@ -1484,8 +1435,7 @@ object IncrementalStream {
   def preferenceIngest(rolloutStream: DataFrame, promptCol: String,
                        idCol: String, textCol: String, scoreCol: String,
                        store: graft.sync.TableStore, table: String,
-                       checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                       checkpointDir: String): StreamingQuery = {
     // the merge renames the partial's columns to __*: reject colliding
     // prompt names up front (the maintainCountsKeys convention)
     require(!Seq("ch", "rj", "n_rollouts").contains(promptCol),
@@ -1495,7 +1445,7 @@ object IncrementalStream {
     maintainMerged(rolloutStream,
       graft.operators.Preference.candidates(_, promptCol, idCol, textCol, scoreCol),
       graft.operators.Preference.mergeCandidates(_, _, promptCol),
-      store, table, checkpointDir, trigger)
+      store, table, checkpointDir)
   }
 
   /** The shared maintained-view core: fold `partialOf(batch)` into the
@@ -1508,7 +1458,6 @@ object IncrementalStream {
                              merge: (DataFrame, DataFrame) => DataFrame,
                              store: graft.sync.TableStore, table: String,
                              checkpointDir: String,
-                             trigger: Trigger,
                              seed: DataFrame => DataFrame = identity): StreamingQuery = {
     lazy val run = lineageId(stream.sparkSession, checkpointDir)
     stream.writeStream
@@ -1547,7 +1496,7 @@ object IncrementalStream {
         }
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 

@@ -40,7 +40,6 @@ object SyncJob {
     * parity: any schema drift fails loudly. */
   def run(source: TableStore, dest: TableStore, cfg: TableConfig,
           primaryKeys: Seq[String] = Seq.empty,
-          jsonColumns: Set[String] = Set.empty,
           propagateDeletes: Boolean = false,
           allowSchemaEvolution: Boolean = false): SyncStats = {
     val src = source.read(cfg.name)
@@ -88,7 +87,7 @@ object SyncJob {
     // counts before any dedup, so duplicate source keys still count.
     val obs = Observation()
     def observed(df: DataFrame) = df.observe(obs, count(lit(1)).as("rows"))
-    val coerced = Coerce.frame(delta, jsonColumns)
+    val coerced = Coerce.frame(delta)
 
     // O3 fallback: no PK list -> all columns as the conflict key
     val pks = if (primaryKeys.nonEmpty) primaryKeys else coerced.columns.toSeq
@@ -114,7 +113,7 @@ object SyncJob {
             // key-only scan of the (coerced) source: column pruning reaches
             // the reader, so at 100 TB this reads pk bytes, not the table
             Merge.applyDeletes(upserted,
-              Coerce.frame(projected, jsonColumns).select(pks.map(col): _*), pks)
+              Coerce.frame(projected).select(pks.map(col): _*), pks)
           else upserted
         // bootstrap: the same dedup a later upsert would apply, so the
         // first and second runs agree on duplicate source keys

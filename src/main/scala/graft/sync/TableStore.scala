@@ -311,11 +311,8 @@ object ParquetStore {
 /** JDBC store: connection profile -> per-table reads/writes. Reads resolve
   * the schema from JDBC metadata (O2's introspection, done by Spark's
   * JdbcUtils); incremental filters push into the remote WHERE
-  * (pushDownPredicate default-on). `partitionOptions` enables the partitioned
-  * scan (partitionColumn/lowerBound/upperBound/numPartitions) that replaces
-  * the reference's whole-table driver materialization. */
-class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
-                partitionOptions: Map[String, String] = Map.empty) extends TableStore {
+  * (pushDownPredicate default-on). */
+class JdbcStore(spark: SparkSession, url: String, props: Map[String, String]) extends TableStore {
   override def read(table: String): Option[DataFrame] =
     // JDBC schema resolution is EAGER — a missing table throws here, not at
     // action time. Mapping that to None honors the trait contract and makes
@@ -327,7 +324,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     // by a successful write would overwrite the table with the delta alone.
     try Some(spark.read.format("jdbc")
       .option("url", url).option("dbtable", table)
-      .options(props).options(partitionOptions)
+      .options(props)
       .load())
     catch { case NonFatal(e) if JdbcStore.isTableMissing(e) => None }
 
@@ -335,8 +332,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     * via a pushdown subquery — Spark's v1 JDBC source pushes predicates and
     * prunes columns but does NOT push aggregates, so the trait default
     * (`agg(max)` over `read`) would stream the destination's entire check
-    * column through the connection (through ONE connection unless
-    * partitionOptions are set) to produce a single scalar, per table, per
+    * column through one connection to produce a single scalar, per table, per
     * sync. Here the remote engine sees
     * `SELECT "check_value" FROM (SELECT MAX(c) AS check_value FROM t) q`
     * and exactly one row crosses the wire — the reference's own shape
@@ -347,8 +343,7 @@ class JdbcStore(spark: SparkSession, url: String, props: Map[String, String],
     * from a config file, not a user; quoting guards casing, not injection —
     * same trust level as `table` in `read`). The alias `check_value` is
     * quoted too so case-folding engines (Derby/H2/Oracle upper-fold unquoted
-    * identifiers) hand back the exact column name Watermark.idOf expects.
-    * partitionOptions are deliberately NOT applied: this is a 1-row read. */
+    * identifiers) hand back the exact column name Watermark.idOf expects. */
   override def watermark(table: String, checkColumn: String): Option[DataFrame] = {
     val dialect = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
     val c = dialect.quoteIdentifier(checkColumn)

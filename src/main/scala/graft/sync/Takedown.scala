@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * document's content, not even as a df contribution.
   *
   * Scale shape: the takedown list broadcasts (opt-out lists are
-  * dashboard-sized; pass broadcastIds = false for a bulk purge and the
-  * anti-join degrades to a shuffle on the id), the table streams through
+  * dashboard-sized), the table streams through
   * one LEFT ANTI join, and the rewrite lands via the store's ATOMIC path
   * (ParquetStore stages to a temp dir and renames; JdbcStore stages then
   * swaps in one transaction) — a crash mid-purge leaves the old table
@@ -87,17 +86,10 @@ object Takedown {
     * tombstone table. Readers of accumulated index/corpus tables apply
     * this FIRST, before any hotness gate, so df/hotness counts never see
     * tombstoned contributions (the re-cooling guarantee). A missing or
-    * empty tombstone table gates nothing. Pass broadcastIds = false for
-    * a bulk-erasure regime where the tombstone set outgrows broadcast. */
+    * empty tombstone table gates nothing. */
   def withoutTombstones(rows: DataFrame, idCol: String, store: TableStore,
-                        table: String = "tombstones",
-                        broadcastIds: Boolean = true): DataFrame =
-    store.read(table) match {
-      case Some(ts) =>
-        val side = if (broadcastIds) broadcast(ts) else ts
-        rows.join(side, rows(idCol) === side(TombstoneCol), "left_anti")
-      case None => rows
-    }
+                        table: String = "tombstones"): DataFrame =
+    withoutTombstonesAny(rows, Seq(idCol), store, table)
 
   /** [[withoutTombstones]] over MULTI-id rows — the PAIR-log form the
     * packed-fingerprint dedup family serves (`dup_pairs` carries two
@@ -110,8 +102,7 @@ object Takedown {
     * the pair log is exactly the survivors' pairs once both sides are
     * gated, the packedDupIngest completeness contract). */
   def withoutTombstonesAny(rows: DataFrame, idCols: Seq[String],
-                           store: TableStore, table: String = "tombstones",
-                           broadcastIds: Boolean = true): DataFrame = {
+                           store: TableStore, table: String = "tombstones"): DataFrame = {
     require(idCols.nonEmpty, "Takedown.withoutTombstonesAny: no id columns given")
     // the tombstone table is read (and broadcast) ONCE and reused by
     // every per-column anti-join — a per-column fold through
@@ -119,7 +110,7 @@ object Takedown {
     store.read(table) match {
       case None => rows
       case Some(ts) =>
-        val side = if (broadcastIds) broadcast(ts) else ts
+        val side = broadcast(ts)
         idCols.foldLeft(rows)((df, c) =>
           df.join(side, df(c) === side(TombstoneCol), "left_anti"))
     }
@@ -131,15 +122,13 @@ object Takedown {
     * at the cost of one extra semi-join count pass before the rewrite.
     * Fails closed on a missing table: silently "purging" a mistyped
     * table name would report success while the data stays. */
-  def purge(store: TableStore, table: String, idCol: String, ids: DataFrame,
-            broadcastIds: Boolean = true): Long = {
+  def purge(store: TableStore, table: String, idCol: String, ids: DataFrame): Long = {
     require(ids.columns.length == 1,
       s"Takedown.purge: ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
     val cur = store.read(table).getOrElse(sys.error(
       s"Takedown.purge: no table '$table' in the store — a typo here would " +
         "report a successful purge while the rows stay"))
-    val list = ids.toDF("__takedown_id").distinct()
-    val side = if (broadcastIds) broadcast(list) else list
+    val side = broadcast(ids.toDF("__takedown_id").distinct())
     val removed = cur.join(side, cur(idCol) === side("__takedown_id"), "left_semi")
       .count()
     if (removed > 0L)
@@ -153,10 +142,8 @@ object Takedown {
     * the same pass or a rebuild from the un-purged sibling resurrects
     * the content. Returns per-table removed counts in input order. */
   def purgeAll(store: TableStore, tables: Seq[(String, String)],
-               ids: DataFrame, broadcastIds: Boolean = true): Seq[(String, Long)] =
-    tables.map { case (t, idCol) =>
-      t -> purge(store, t, idCol, ids, broadcastIds)
-    }
+               ids: DataFrame): Seq[(String, Long)] =
+    tables.map { case (t, idCol) => t -> purge(store, t, idCol, ids) }
 
   /** The DEFERRED physical purge that completes the online-tombstone
     * lifecycle: in the next offline maintenance window (the [[purge]]
@@ -169,8 +156,7 @@ object Takedown {
     * does the gate's work list empty. Returns per-table removed counts;
     * a missing/empty tombstone table compacts nothing. */
   def compactTombstones(store: TableStore, tables: Seq[(String, String)],
-                        tombstoneTable: String = "tombstones",
-                        broadcastIds: Boolean = true): Seq[(String, Long)] =
+                        tombstoneTable: String = "tombstones"): Seq[(String, Long)] =
     store.read(tombstoneTable) match {
       case None => tables.map { case (t, _) => t -> 0L }
       case Some(ts) =>
@@ -178,7 +164,7 @@ object Takedown {
         // plan that reads this frame — the list must not be re-read
         // lazily against a store in mid-rewrite
         val ids = ts.select(col(TombstoneCol)).localCheckpoint()
-        val counts = purgeAll(store, tables, ids, broadcastIds)
+        val counts = purgeAll(store, tables, ids)
         store.writeAtomic(ids.limit(0), tombstoneTable)
         graft.Checkpoints.release(ids)
         counts

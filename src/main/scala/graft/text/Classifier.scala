@@ -35,16 +35,19 @@ object Classifier {
     * micro-units (margin 1.0 == 1,000,000). */
   final case class LinearModel(weights: Map[Long, Long], biasMicros: Long)
 
+  /** The token hash's salt, shared by the feature builder and the scorer. */
+  val Salt = "graftf"
+
   /** Hashed token-count features: (idCol, f, x) — f the md5 bucket of
-    * the token (salted, first 13 hex digits = 52 bits, mod dims), x the
-    * token's occurrence count in the document. The same bucket expression
-    * a DuckDB oracle writes as CAST('0x' || substring(md5(...), 1, 13) AS
-    * BIGINT) % dims. One explode + one (id, f)-keyed aggregation. */
+    * the token (salted with [[Salt]], first 13 hex digits = 52 bits, mod
+    * dims), x the token's occurrence count in the document. The same
+    * bucket expression a DuckDB oracle writes as CAST('0x' ||
+    * substring(md5(...), 1, 13) AS BIGINT) % dims. One explode + one (id, f)-keyed aggregation. */
   def hashedTokenFeatures(docs: DataFrame, idCol: String, textCol: String,
-                          dims: Int, salt: String = "graftf"): DataFrame = {
+                          dims: Int): DataFrame = {
     require(dims >= 1, s"Classifier.hashedTokenFeatures: dims must be >= 1, got $dims")
     docs.select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("__tok"))
-      .withColumn("f", bucketExpr(col("__tok"), dims, salt))
+      .withColumn("f", bucketExpr(col("__tok"), dims))
       .groupBy(col(idCol), col("f"))
       .agg(count(lit(1)).cast(LongType).as("x"))
   }
@@ -52,9 +55,8 @@ object Classifier {
   /** The shared token-to-bucket hash — ONE definition for the feature
     * builder and the one-pass scorer so train and deploy cannot hash
     * into different spaces. */
-  private def bucketExpr(tok: org.apache.spark.sql.Column, dims: Int,
-                         salt: String): org.apache.spark.sql.Column =
-    conv(substring(md5(concat(lit(salt + ":"), tok).cast("binary")),
+  private def bucketExpr(tok: org.apache.spark.sql.Column, dims: Int): org.apache.spark.sql.Column =
+    conv(substring(md5(concat(lit(Salt + ":"), tok).cast("binary")),
       1, 13), 16, 10).cast(LongType) % dims
 
   /** The per-document sparse row the training loop iterates on: (idCol,
@@ -153,7 +155,7 @@ object Classifier {
     * the SAME oracle as q168) but ZERO shuffles and zero joins: the shape
     * for scoring 100 TB or a micro-batch. */
   def scoreText(docs: DataFrame, idCol: String, textCol: String,
-                model: LinearModel, salt: String = "graftf"): DataFrame = {
+                model: LinearModel): DataFrame = {
     val dims = model.weights.size
     require(dims >= 1, "Classifier.scoreText: empty model")
     val wLit = typedLit(model.weights)
@@ -163,7 +165,7 @@ object Classifier {
       coalesce(TextAnalysis.tokens(col(textCol)), array().cast("array<string>")),
       lit(model.biasMicros),
       (acc, tok) => acc + coalesce(
-        element_at(wLit, bucketExpr(tok, dims, salt)), lit(0L)))
+        element_at(wLit, bucketExpr(tok, dims)), lit(0L)))
     docs.select(col(idCol), margin.as("margin_micros"))
       .withColumn("pred", when(col("margin_micros") > 0, 1L).otherwise(-1L))
   }
@@ -226,8 +228,7 @@ object Classifier {
     * path, which is what caps train() at gate-sized dims. Returns the
     * final weight table (dims+1 rows), checkpointed. */
   def trainJoin(docs: DataFrame, idCol: String, dims: Int, rounds: Int,
-                lrMicros: Long, marginMicros: Long,
-                broadcastWeights: Boolean = true): DataFrame = {
+                lrMicros: Long, marginMicros: Long): DataFrame = {
     require(rounds >= 0, s"Classifier.trainJoin: rounds must be >= 0, got $rounds")
     val s = docs.sparkSession
     val pinned = docs.localCheckpoint()
@@ -252,8 +253,7 @@ object Classifier {
           .localCheckpoint()
         var r = 0
         while (r < rounds) {
-          val wSide = if (broadcastWeights) broadcast(weights) else weights
-          val violated = fs.join(wSide, Seq("f"), "left")
+          val violated = fs.join(broadcast(weights), Seq("f"), "left")
             .groupBy(col(idCol), col("y"))
             .agg(sum(coalesce(col("w_micros"), lit(0L)) * col("x"))
               .cast(LongType).as("__m"))

@@ -55,15 +55,15 @@ object TextRank {
     edges.join(outw, Seq("src"))
   }
 
+  /** PageRank's damping, in permille. */
+  val DampingPermille = 850L
+
   /** Integer PageRank over a (src, dst, w, wout) edge table: after
     * `iters` rounds, (node, pr_micro) for every node that appears as a
-    * src or dst. dampingPermille = 850 is the classic 0.85. */
-  def pageRank(edges: DataFrame, iters: Int,
-               dampingPermille: Long = 850L): DataFrame = {
+    * src or dst, at the classic damping 0.85 ([[DampingPermille]]). */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"TextRank.pageRank: iters must be >= 0, got $iters")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"TextRank.pageRank: dampingPermille must be in [0, 1000], got $dampingPermille")
-    val base = (1000L - dampingPermille) * 1000L
+    val base = (1000L - DampingPermille) * 1000L
     val pinned = edges.localCheckpoint()
     try {
       // pinned too: the lazy union+distinct plan would otherwise re-run
@@ -84,7 +84,7 @@ object TextRank {
           val prev = pr
           pr = nodes.join(contribs, Seq("node"), "left")
             .selectExpr("node",
-              s"CAST($base + ($dampingPermille * coalesce(c, 0)) div 1000 AS BIGINT) AS pr_micro")
+              s"CAST($base + ($DampingPermille * coalesce(c, 0)) div 1000 AS BIGINT) AS pr_micro")
             .localCheckpoint()
           graft.Checkpoints.release(prev)
           r += 1

@@ -59,9 +59,14 @@ object TfIdf {
       .select(col(idCol), col("token"), col("tf"), col("df"))
   }
 
+  /** BM25's term-frequency saturation and length normalisation. */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+
   /** Okapi BM25 top-k retrieval: for each query string, the `k`
     * highest-scoring documents under
     * `score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`
+    * at the standard [[Bm25K1]] = 1.2 and [[Bm25B]] = 0.75,
     * with the Lucene-style non-negative idf `ln(1 + (N−df+0.5)/(df+0.5))`
     * — the lexical-retrieval baseline every RAG / retrieval-eval pipeline
     * starts from. Query terms are DISTINCT (standard Okapi for short
@@ -93,10 +98,9 @@ object TfIdf {
     * cross-engine float (ln) — grade the integer rank columns and
     * spec-pin the score (the q58 tf-idf precedent). */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queries: Seq[(String, String)], k: Int, corpusSize: Long,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame =
+               queries: Seq[(String, String)], k: Int, corpusSize: Long): DataFrame =
     bm25TopKIndexed(buildBm25Index(docs, idCol, textCol, corpusSize), idCol,
-      queries, k, k1, b)
+      queries, k)
 
   /** Persisted BM25 index over a corpus: the three relations (postings,
     * doc lengths, doc frequencies) plus the two scalars every BM25 scorer
@@ -135,12 +139,11 @@ object TfIdf {
     * query terms survive the index scan. See [[bm25TopK]] for scoring
     * semantics and the sorted-fold determinism contract. */
   def bm25TopKIndexed(index: Bm25Index, idCol: String,
-                      queries: Seq[(String, String)], k: Int,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                      queries: Seq[(String, String)], k: Int): DataFrame = {
     require(queries.nonEmpty, "bm25TopKIndexed: empty query set")
     val spark = index.postings.sparkSession
     import spark.implicits._
-    bm25Join(index, idCol, queries.toDF("query_id", "qtext"), k, k1, b)
+    bm25Join(index, idCol, queries.toDF("query_id", "qtext"), k)
   }
 
   /** BM25 top-k with the query side as a DataFrame of (query_id, qtext) —
@@ -148,7 +151,6 @@ object TfIdf {
     * unit a streaming serving loop calls (each batch's queries broadcast
     * into one postings probe; queries never round-trip the driver). */
   def bm25Join(index: Bm25Index, idCol: String, queryDf: DataFrame, k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
                maxBroadcastQueries: Long = 100000L): DataFrame = {
     require(k >= 1, s"bm25Join: k must be >= 1, got $k")
     val qterms = queryDf
@@ -188,8 +190,8 @@ object TfIdf {
 
     val idf = log(lit(1.0) +
       ((lit(index.corpusSize) - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-    val contrib = idf * ((col("tf") * lit(k1 + 1.0)) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl") / lit(index.avgdl)))))
+    val contrib = idf * ((col("tf") * lit(Bm25K1 + 1.0)) /
+      (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * (col("dl") / lit(index.avgdl)))))
 
     val scoredRows = index.postings.join(qdf, "token").join(index.docLens, idCol)
       .select(col("query_id"), col(idCol), col("token"), contrib.as("__c"))

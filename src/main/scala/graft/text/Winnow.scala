@@ -93,11 +93,11 @@ object Winnow {
     * [[graft.streaming.IncrementalStream.overlapGate]] without touching
     * the corpus text — the same build-once contract as the near-dup band
     * index, including the family caveat: the probe side must fingerprint
-    * with the SAME (k, w, hasher) or candidates are silently wrong. */
+    * with the SAME (k, w) and the default md5 hasher or candidates are
+    * silently wrong. */
   def buildOverlapIndex(corpus: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, w: Int = 4, maxDocsPerFp: Int = 100,
-                        hasher: Column => Column = md5): DataFrame =
-    prunedFps(fingerprints(corpus, idCol, textCol, k, w, hasher),
+                        k: Int = 3, w: Int = 4, maxDocsPerFp: Int = 100): DataFrame =
+    prunedFps(fingerprints(corpus, idCol, textCol, k, w),
       idCol, maxDocsPerFp)
 
   /** One batch's RAW index rows — the distinct (fp, `idCol`) fingerprint
@@ -113,9 +113,8 @@ object Winnow {
     * [[buildOverlapIndex]] over the same documents (graded — q151's
     * full-outer parity contract). */
   def indexRows(batch: DataFrame, idCol: String, textCol: String,
-                k: Int = 3, w: Int = 4,
-                hasher: Column => Column = md5): DataFrame =
-    fingerprints(batch, idCol, textCol, k, w, hasher)
+                k: Int = 3, w: Int = 4): DataFrame =
+    fingerprints(batch, idCol, textCol, k, w)
       .select(col("fp"), col(idCol)).distinct()
 
   /** The hot-fingerprint gate shared by [[buildOverlapIndex]],

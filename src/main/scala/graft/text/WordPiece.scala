@@ -318,11 +318,10 @@ object WordPiece {
     * by the SAME [[TextAnalysis.tokens]] expression the trainer's word
     * table used, then each word segments greedily under the vocabulary
     * ([[graft.functions.WordPieceEncode]]): longest match first, `##`
-    * continuation, whole-word `unkToken` on any mid-word miss or when
+    * continuation, whole-word [[DefaultUnkToken]] on any mid-word miss or when
     * the word exceeds `maxInputChars`. One narrow codegen'd pass — the
     * vocabulary rides as a reference object. */
   def wordPieceEncode(c: Column, vocab: Seq[String],
-                      unkToken: String = DefaultUnkToken,
                       maxInputChars: Int = DefaultMaxInputChars): Column =
-    WordPieceEncode(TextAnalysis.tokens(c), vocab, unkToken, maxInputChars)
+    WordPieceEncode(TextAnalysis.tokens(c), vocab, DefaultUnkToken, maxInputChars)
 }

@@ -376,6 +376,14 @@ class MainSpec extends SparkSpec {
       "--target-mb", "0")) === 2)
   }
 
+  test("compact: a --dir not named <table>.parquet is a usage error") {
+    val tmp = Files.createTempDirectory("graft_cli_cpn").toString
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$tmp/t")
+    assert(Main.run(spark, Array("compact", "--dir", s"$tmp/t")) === 2)
+    assert(Main.run(spark, Array("compact", "--dir", s"$tmp/.parquet")) === 2)
+    assert(spark.read.parquet(s"$tmp/t").count() === 1)
+  }
+
   test("mine-negatives and centroid-audit end to end") {
     val tmp = Files.createTempDirectory("graft_cli_mn").toString
     val emb = Seq(

@@ -8,7 +8,7 @@ class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact rewrites a fragmented table into fewer files, preserving rows") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = Files.createTempDirectory("graft_compact").toString + "/t.parquet"
     // 20 appends of tiny files
     (1 to 20).foreach { i =>
       Seq((i.toLong, s"v$i")).toDF("id", "v").write.mode("append").parquet(dir)

@@ -1205,6 +1205,33 @@ class IncrementalStreamSpec extends SparkSpec {
       store, "served", checkpointDir = s"$tmp/ck2").awaitTermination()
     assert(store.read("served").get.count() === batch.size)
   }
+
+  test("guarded appends keep the batch's column order in every data file") {
+    import graft.sync.ParquetStore
+    import graft.text.TfIdf
+    val docs = Seq((1L, "the cat"), (2L, "the dog")).toDF("doc_id", "text")
+    val idx = TfIdf.buildBm25Index(docs, "doc_id", "text", corpusSize = 2)
+    val tmp = Files.createTempDirectory("graft_gorder").toString
+    // two arrival files -> two guarded appends to one table; the second
+    // anti-joins the first on (query_id, doc_id)
+    Seq(("qa", "cat")).toDF("query_id", "qtext").write.mode("append").parquet(s"$tmp/src")
+    Seq(("qb", "dog")).toDF("query_id", "qtext").write.mode("append").parquet(s"$tmp/src")
+    val store = new ParquetStore(spark, s"$tmp/out")
+    IncrementalStream.bm25Serve(spark.readStream
+        .schema("query_id STRING, qtext STRING")
+        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet"),
+      idx, "doc_id", k = 1, store, "served", checkpointDir = s"$tmp/ck")
+      .awaitTermination()
+    val order = Seq("query_id", "rank", "doc_id", "n_terms", "score", "__run", "__batch")
+    val files = new java.io.File(s"$tmp/out/served.parquet").listFiles()
+      .map(_.getName).filter(_.startsWith("part-")).sorted
+    assert(files.length >= 2)
+    // each file's footer schema, read on its own
+    files.foreach(f =>
+      assert(spark.read.parquet(s"$tmp/out/served.parquet/$f").columns.toSeq === order, f))
+    assert(store.read("served").get.columns.toSeq === order)
+  }
+
   test("packedDupIngest: probe-then-append pair log equals the batch miner; replay-safe") {
     import graft.dedup.Dedup
     import graft.sync.ParquetStore

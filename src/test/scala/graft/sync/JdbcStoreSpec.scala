@@ -165,7 +165,6 @@ class JdbcStoreSpec extends SparkSpec {
   }
 
   test("maintainStats over a JdbcStore: state+marker swap atomically, lineage resume works") {
-    import org.apache.spark.sql.streaming.Trigger
     val store = freshStore()
     val rows = Seq((1L, 10L), (1L, 30L), (2L, 5L)).toDF("k", "v")
     val tmp = java.nio.file.Files.createTempDirectory("graft_msj").toString
@@ -174,7 +173,7 @@ class JdbcStoreSpec extends SparkSpec {
     def stream() = spark.readStream.schema(rows.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
     graft.streaming.IncrementalStream.maintainStats(stream(), Seq("k"), "v",
-      store, "stats", checkpointDir = s"$tmp/ck", trigger = Trigger.AvailableNow())
+      store, "stats", checkpointDir = s"$tmp/ck")
       .awaitTermination()
     def state() = store.read("stats").get.drop("__last_batch", "__run").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
@@ -182,7 +181,7 @@ class JdbcStoreSpec extends SparkSpec {
     // same-lineage resume: one new file, exactly one new batch folds in
     Seq((2L, 7L)).toDF("k", "v").coalesce(1).write.mode("append").parquet(s"$tmp/src")
     graft.streaming.IncrementalStream.maintainStats(stream(), Seq("k"), "v",
-      store, "stats", checkpointDir = s"$tmp/ck", trigger = Trigger.AvailableNow())
+      store, "stats", checkpointDir = s"$tmp/ck")
       .awaitTermination()
     assert(state() === Set((1L, 2L, 40L, 10L, 30L), (2L, 2L, 12L, 5L, 7L)))
   }
