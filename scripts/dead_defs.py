@@ -2,7 +2,7 @@
 """List src/main definitions that nothing names, and defaulted parameters
 that no call site passes.
 
-Usage: python3 scripts/dead_defs.py [repoRoot]
+Usage: python3 scripts/dead_defs.py [--callers main] [repoRoot]
 
 Both are token scans, not compiler passes.
 
@@ -25,6 +25,10 @@ name, passed on from the nearest earlier parameter of that name in the
 same file, counts only if that outer parameter is passed. KEEP_PARAMS are
 defaults that name a storage location, a deployment setting, and are
 printed with a `keep` mark.
+
+`--callers main` counts only the call sites in src/main and perfbench/src,
+so the parameter list also holds the defaulted parameters that only tests
+pass.
 """
 import collections
 import pathlib
@@ -110,10 +114,10 @@ def groups(toks, i, openers):
     return out
 
 
-def unpassed_params(root, main_dir):
+def unpassed_params(root, main_dir, caller_dirs):
     params = []  # (method, file, line, list index, position, name, token index)
     calls = collections.defaultdict(list)  # method -> [(arg lists, file, token index)]
-    for d in (main_dir, root / "src/test", root / "perfbench/src"):
+    for d in caller_dirs:
         for f in sorted(d.rglob("*.scala")):
             toks = lexemes(f.read_text())
             for i, (t, _) in enumerate(toks):
@@ -179,11 +183,16 @@ def unpassed_params(root, main_dir):
             print(f"{f.relative_to(root)}:{line}: {method}({name}){keep}")
 
 
-def main(root):
+def main(args):
+    main_only = args[:2] == ["--callers", "main"]
+    if main_only:
+        args = args[2:]
+    root = pathlib.Path(args[0] if args else ".").resolve()
     main_dir = root / "src/main"
     dead_defs(root, main_dir)
-    unpassed_params(root, main_dir)
+    tests = [] if main_only else [root / "src/test"]
+    unpassed_params(root, main_dir, [main_dir, *tests, root / "perfbench/src"])
 
 
 if __name__ == "__main__":
-    main(pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else ".").resolve())
+    main(sys.argv[1:])

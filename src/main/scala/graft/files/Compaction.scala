@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   *
   * The directory is a `ParquetStore` table, `<parent>/<table>.parquet`,
   * and the rewrite is that store's `write`: it stages the compacted copy
-  * and swaps it in under the store's lock, so a crash leaves the old
-  * table or the new one. Files appended by another process between the
-  * read and the swap are still lost, so run it in a maintenance window.
+  * and commits it by one rename under the store's lock, so a crash leaves
+  * the old table or the new one. Files appended by another process
+  * between the read and the commit are still lost, so run it in a
+  * maintenance window.
   */
 object Compaction {
 

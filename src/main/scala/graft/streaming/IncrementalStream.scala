@@ -279,8 +279,8 @@ object IncrementalStream {
     * INSERTs), the corpus is scanned once per batch and never shuffled
     * pre-score (the q112 plan shape, pinned in PlanShapeSpec).
     *
-    * foreachBatch is AT-LEAST-ONCE: a batch whose append landed (possibly
-    * PARTIALLY — a crash mid-append leaves some part files) but whose
+    * foreachBatch is AT-LEAST-ONCE: a batch whose append landed (PARTIALLY
+    * only on JdbcStore, which commits per partition) but whose
     * checkpoint commit didn't is re-run on recovery. Every served row
     * carries its (lineage, batch id), so the retry guard's anti-join build
     * side is NOT the accumulated log but only the rows that could collide
@@ -765,8 +765,8 @@ object IncrementalStream {
     * serving loop ([[knnServe]], [[indexIngest]]): each micro-batch's
     * derived rows are stamped with their (lineage, batch id) and appended;
     * the retry guard anti-joins at `keyCols` granularity against only the
-    * COLLIDABLE rows — same-lineage rows of this batch id (a
-    * possibly-partial earlier attempt) plus foreign-lineage rows (a fresh
+    * COLLIDABLE rows — same-lineage rows of this batch id (an earlier
+    * attempt, partial only on JdbcStore) plus foreign-lineage rows (a fresh
     * checkpoint over an existing table). Same-lineage rows of other
     * batches prune via parquet row-group stats on the two
     * constant-per-file columns, so steady-state per-batch cost is
@@ -1310,7 +1310,7 @@ object IncrementalStream {
     * carries the last-applied batch id IN the same table (constant
     * `__last_batch` column) and a batch at or below it is skipped. Marker
     * and state land in ONE TableStore.writeAtomic — ParquetStore's staged
-    * rename swap (stopped at every step in ParquetStoreSpec) and
+    * commit and roll-forward (stopped at every step in ParquetStoreSpec) and
     * JdbcStore's stage-then-transactional-swap make that
     * write all-or-nothing, which is exactly what makes skip-or-merge
     * correct across a crash at any point (a two-table state+marker design

@@ -67,21 +67,20 @@ trait TableStore {
     * what state+marker writes (streaming `maintainStats`) require — the
     * exactly-once argument collapses if the marker can land without the
     * state or half the state without the marker. ParquetStore's plain
-    * write already swaps a staged copy in by renames (ParquetStoreSpec
-    * stops it after each step and reads the table back), so the default
-    * delegates; stores whose plain write has a torn window (JDBC
-    * truncate+insert) MUST override with a staged transactional swap. */
+    * write already commits a staged copy by one rename and rolls it
+    * forward (ParquetStoreSpec stops it after each step and reads the
+    * table back), so the default delegates; stores whose plain write has
+    * a torn window (JDBC truncate+insert) MUST override with a staged
+    * transactional swap. */
   def writeAtomic(df: DataFrame, table: String): Unit = write(df, table)
 }
 
-/** Parquet-directory store: `dir/<table>.parquet` per table. Write stages
-  * the new contents in a hidden directory of its own, so a table can be
-  * rewritten from a plan that reads its own previous contents
-  * (overwrite-in-place would delete the files mid-scan), then swaps them in
-  * by renames that leave the old or the new table readable after a crash at
-  * any step (see `write`). Append stages too, and commits by one rename to
-  * the table's landing directory, which every later access of the table
-  * finishes landing first (see `append`).
+/** Parquet-directory store: `dir/<table>.parquet` per table. Write and
+  * append stage their files in a hidden directory of their own, so a
+  * table can be rewritten from a plan that reads its own previous contents
+  * (overwrite-in-place would delete the files mid-scan), and commit them by
+  * one rename to the table's landing directory, which every later access
+  * of the table rolls forward first (see `commitSteps`).
   *
   * Metadata comes from the parquet footers, read on the driver, so it costs
   * no Spark job: `read` takes the schema Spark wrote into a data file's
@@ -105,9 +104,9 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
   /** The data files of an existing table, in name order; Nil when the
     * listing holds what the footer path does not model (a subdirectory, a
     * summary file) or no data file. None when the table is missing. A
-    * write or append a crash stopped is finished or undone first. Names
-    * Spark skips when it lists a table (`_`/`.`-prefixed, `._COPYING_`)
-    * are skipped here too. */
+    * commit a crash stopped is rolled forward first. Names Spark skips
+    * when it lists a table (`_`/`.`-prefixed, `._COPYING_`) are skipped
+    * here too. */
   private def listed(table: String): Option[Seq[FileStatus]] = {
     val p = new Path(pathOf(table))
     val fs = p.getFileSystem(conf)
@@ -197,97 +196,50 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     }
   } catch { case NonFatal(_) => None }
 
-  /** Writes `df` to a staging directory of its own, a hidden sibling of
-    * the table, then swaps it in under the lock: (1) rename the old table
-    * aside, (2) rename the stage in, (3) delete the aside copy. A crash
-    * after (1) leaves the old table aside, which `read` and the next write
-    * or append rename back; after (2) the new table is in place. */
-  override def write(df: DataFrame, table: String): Unit = writeSteps(df, table, 3)
-
-  /** `write`, stopped after the first `steps` of its three swap steps: a
-    * test's stand-in for a crash there. */
-  private[sync] def writeSteps(df: DataFrame, table: String, steps: Int): Unit = {
-    val fs = new Path(dir).getFileSystem(conf)
-    val stage = new Path(s"$dir/.write_${table}_${java.util.UUID.randomUUID()}")
-    val (dst, aside) = (new Path(pathOf(table)), asideOf(table))
-    try {
-      df.write.parquet(stage.toString)
-      ParquetStore.synchronized {
-        restore(table)
-        val old = fs.exists(dst)
-        Seq(() => if (old) rename(dst, aside), () => rename(stage, dst),
-          () => if (old) fs.delete(aside, true)).take(steps).foreach(_())
-      }
-    } finally fs.delete(stage, true)
-  }
-
-  /** The hidden sibling `write` moves the old table to while it swaps. */
-  private def asideOf(table: String) = new Path(s"$dir/.aside_$table.parquet")
-
-  /** The hidden sibling an append's commit renames its staged files to. */
-  private def landingOf(table: String) = new Path(s"$dir/.landing_$table.parquet")
-
-  private def rename(from: Path, to: Path): Unit =
-    if (!from.getFileSystem(conf).rename(from, to)) sys.error(s"rename failed for $from")
-
-  /** Finish what a crash stopped; call under the lock. A missing table gets
-    * its aside copy back; beside a present table, the aside copy is stale
-    * and is deleted. Then a committed append lands the rest of its files. */
-  private def restore(table: String): Unit = {
-    val (dst, aside, landing) = (new Path(pathOf(table)), asideOf(table), landingOf(table))
-    val fs = dst.getFileSystem(conf)
-    if (fs.exists(aside)) {
-      if (fs.exists(dst)) fs.delete(aside, true)
-      else rename(aside, dst)
-    }
-    if (fs.exists(landing))
-      landSteps(table, fs.listStatus(landing).toSeq.map(_.getPath.getName)).foreach(_())
-  }
-
-  /** The steps that land the files `names` of `table`'s landing directory:
-    * a missing table is the directory renamed whole; otherwise each file
-    * moves into the table, then the empty directory is deleted. */
-  private def landSteps(table: String, names: Seq[String]): Seq[() => Any] = {
-    val (dst, landing) = (new Path(pathOf(table)), landingOf(table))
-    val fs = dst.getFileSystem(conf)
-    if (!fs.exists(dst)) Seq(() => rename(landing, dst))
-    else names.map(n => () => rename(new Path(landing, n), new Path(dst, n))) :+
-      (() => fs.delete(landing, true))
-  }
+  /** Replaces the table with `df` through the one commit protocol (see
+    * `commitSteps`): `df` is staged before the old table is touched, so
+    * its plan may read the table's previous contents. */
+  override def write(df: DataFrame, table: String): Unit =
+    commitSteps(df, table, replace = true, Int.MaxValue)
 
   /** Native parquet append — O(df) cost regardless of accumulated table
-    * size. `df` is written to a staging directory of its own, a hidden
-    * sibling of the table, so a failed job leaves the table untouched and
-    * concurrent appends to one table never share Spark's `_temporary`
-    * directory. Under the lock, all but the part files that hold rows are
-    * deleted from it (so an empty `df` adds nothing to an existing table),
-    * and it is renamed to the table's landing directory: that rename is
-    * the commit. Its files then move into the table and the landing
-    * directory is deleted; after a crash past the commit, `restore` does
-    * the rest. A table that does not exist yet is the whole staging
-    * directory renamed, so it always has a file carrying its schema. */
-  override def append(df: DataFrame, table: String): Unit = appendSteps(df, table, Int.MaxValue)
+    * size — through the one commit protocol (see `commitSteps`). */
+  override def append(df: DataFrame, table: String): Unit =
+    commitSteps(df, table, replace = false, Int.MaxValue)
 
-  /** `append`, stopped after the first `steps` of its steps past staging
-    * (the commit, each file move, the landing directory's deletion): a
-    * test's stand-in for a crash there. Returns how many steps the whole
-    * append has. */
-  private[sync] def appendSteps(df: DataFrame, table: String, steps: Int): Int = {
+  /** The one commit protocol of `write` and `append`, stopped after the
+    * first `steps` of its steps past staging (a test's stand-in for a
+    * crash there); returns how many steps the whole operation has.
+    *
+    * `df` is written to a staging directory of its own, a hidden sibling
+    * of the table, so a failed job leaves the table untouched and
+    * concurrent operations on one table never share Spark's `_temporary`
+    * directory. Under the lock, the stage becomes a replacement (a write,
+    * or an append that creates the table, so the table always has a file
+    * carrying its schema: a `_`-prefixed marker file is added) or an
+    * addition (an append to an existing table: all but the part files
+    * that hold rows are deleted, so an empty `df` commits nothing).
+    * Renaming it to the table's landing directory is the commit;
+    * `landSteps` then rolls it forward, and after a crash past the commit
+    * the table's next access does (`restore`). */
+  private[sync] def commitSteps(df: DataFrame, table: String, replace: Boolean, steps: Int): Int = {
     val fs = new Path(dir).getFileSystem(conf)
-    val stage = new Path(s"$dir/.append_${table}_${java.util.UUID.randomUUID()}")
+    val stage = new Path(s"$dir/.stage_${table}_${java.util.UUID.randomUUID()}")
     try {
       df.write.parquet(stage.toString)
-      // footers are read before the lock, so it covers only renames and deletes
-      val (full, rest) = fs.listStatus(stage).toSeq
+      // footers are read before the lock, so it covers only renames, deletes
+      // and a replacement's empty marker file
+      val (full, rest) = if (replace) (Nil, Nil) else fs.listStatus(stage).toSeq
         .partition(st => st.getPath.getName.startsWith("part-") && rowCount(st) > 0L)
       ParquetStore.synchronized {
         restore(table)
-        val isNew = !fs.exists(new Path(pathOf(table)))
+        val whole = replace || !fs.exists(new Path(pathOf(table)))
         val todo =
-          if (!isNew && full.isEmpty) Nil
+          if (!whole && full.isEmpty) Nil
           else {
-            if (!isNew) rest.foreach(st => fs.delete(st.getPath, false))
-            (() => rename(stage, landingOf(table))) +: landSteps(table, full.map(_.getPath.getName))
+            if (whole) fs.create(new Path(stage, ParquetStore.Replace)).close()
+            else rest.foreach(st => fs.delete(st.getPath, false))
+            (() => rename(stage, landingOf(table))) +: landSteps(table, whole, full.map(_.getPath.getName))
           }
         todo.take(steps).foreach(_())
         todo.size
@@ -295,17 +247,53 @@ class ParquetStore(spark: SparkSession, dir: String) extends TableStore {
     } finally fs.delete(stage, true)
   }
 
+  /** The hidden sibling that a commit renames its stage to. */
+  private def landingOf(table: String) = new Path(s"$dir/.landing_$table.parquet")
+
+  private def rename(from: Path, to: Path): Unit =
+    if (!from.getFileSystem(conf).rename(from, to)) sys.error(s"rename failed for $from")
+
+  /** Finish what a crash stopped: roll a committed landing directory
+    * forward. Call under the lock. */
+  private def restore(table: String): Unit = {
+    val (dst, landing) = (new Path(pathOf(table)), landingOf(table))
+    val fs = dst.getFileSystem(conf)
+    if (fs.exists(landing)) {
+      val names = fs.listStatus(landing).toSeq.map(_.getPath.getName)
+      landSteps(table, names.contains(ParquetStore.Replace) || !fs.exists(dst), names).foreach(_())
+    }
+  }
+
+  /** The steps that roll `table`'s landing directory forward. A
+    * replacement deletes the old table, then the marker, then renames the
+    * directory whole (a crash between the last two leaves no marker and
+    * no table, which lands the same way). An addition moves each file of
+    * `names` into the table, then deletes the empty directory. */
+  private def landSteps(table: String, replace: Boolean, names: Seq[String]): Seq[() => Any] = {
+    val (dst, landing) = (new Path(pathOf(table)), landingOf(table))
+    val fs = dst.getFileSystem(conf)
+    if (replace)
+      Seq(() => fs.delete(dst, true), () => fs.delete(new Path(landing, ParquetStore.Replace), false),
+        () => rename(landing, dst))
+    else names.map(n => () => rename(new Path(landing, n), new Path(dst, n))) :+
+      (() => fs.delete(landing, true))
+  }
+
   private def rowCount(st: FileStatus): Long = footer(st).getBlocks.asScala.map(_.getRowCount).sum
 }
 
-/** Serializes ParquetStore's landing and swap steps across the JVM: two
-  * appends must not share a landing directory, and no reader may restore
-  * an aside copy or land a committed append while a write or append is
-  * between its steps. They are renames and deletes only, so the lock is
-  * held briefly. */
+/** Serializes ParquetStore's commits and roll-forwards across the JVM: two
+  * commits must not share a landing directory, and no reader may roll a
+  * landing directory forward while a write or append is between its
+  * steps. They are renames and deletes, and a replacement's one empty
+  * marker file (Hadoop's local file system, without its native library,
+  * forks `chmod` for each file it creates), so the lock is held briefly. */
 object ParquetStore {
   /** The footer key holding the Spark schema a file was written with. */
   private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The marker file that makes a landing directory a replacement. */
+  private val Replace = "_graft_replace"
 }
 
 /** JDBC store: connection profile -> per-table reads/writes. Reads resolve

@@ -15,13 +15,11 @@ import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
-/** ParquetStore.append: each call stages into a directory of its own,
-  * commits the part files that hold rows by one rename, then lands them;
-  * a stop at any step leaves the old rows or all of the new ones. `write`
-  * swaps a staged copy in by renames and leaves a table after a stop at
-  * any step. `read` and `watermark` answer from the parquet footers
-  * without a Spark job, and agree with Spark's schema inference and MAX
-  * aggregate. */
+/** ParquetStore.write and append: each call stages into a directory of
+  * its own, commits it by one rename, then rolls it forward; a stop at any
+  * step leaves the old contents or all of the new ones. `read` and
+  * `watermark` answer from the parquet footers without a Spark job, and
+  * agree with Spark's schema inference and MAX aggregate. */
 class ParquetStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,12 +108,13 @@ class ParquetStoreSpec extends SparkSpec {
   }
 
   test("a write stopped after any swap step leaves the old or the new table, never none") {
-    for (k <- 0 to 3; next <- Seq("read", "append", "write")) {
+    for (k <- 0 to 4; next <- Seq("read", "append", "write")) {
       val dir = Files.createTempDirectory("graft_store").toString
       val store = new ParquetStore(spark, dir)
       store.write(ids(1, 5), "t")
-      store.writeSteps(ids(11, 13), "t", k)
-      val landed = if (k < 2) 1L to 5L else 11L to 13L
+      // the commit, the old table's deletion, the marker's, the rename
+      assert(store.commitSteps(ids(11, 13), "t", replace = true, k) === 4, s"k=$k $next")
+      val landed = if (k < 1) 1L to 5L else 11L to 13L
       // a fresh store stands for the process that runs after the crash
       val fresh = new ParquetStore(spark, dir)
       val want = next match {
@@ -139,7 +138,7 @@ class ParquetStoreSpec extends SparkSpec {
       // one partition dealt round-robin into five: three files hold rows
       val delta = spark.range(11, 14, 1, 1).toDF("id").repartition(5)
       // the commit, three file moves, the landing directory's deletion
-      assert(store.appendSteps(delta, "t", k) === 5, s"k=$k $next")
+      assert(store.commitSteps(delta, "t", replace = false, k) === 5, s"k=$k $next")
       val landed = if (k < 1) 1L to 5L else (1L to 5L) ++ (11L to 13L)
       // a fresh store stands for the process that runs after the crash
       val fresh = new ParquetStore(spark, dir)
@@ -160,8 +159,8 @@ class ParquetStoreSpec extends SparkSpec {
     store.append(ids(1, 5), "t")
     store.append(ids(101, 105), "t_x")
     // each append stops right after its commit
-    store.appendSteps(ids(6, 8), "t", 1)
-    store.appendSteps(ids(106, 108), "t_x", 1)
+    store.commitSteps(ids(6, 8), "t", replace = false, 1)
+    store.commitSteps(ids(106, 108), "t_x", replace = false, 1)
     val fresh = new ParquetStore(spark, dir)
     assert(fresh.read("t").get.as[Long].collect().sorted.toSeq === (1L to 8L))
     assert(new java.io.File(dir).list().toSet === Set("t.parquet", "t_x.parquet", ".landing_t_x.parquet"))
@@ -174,11 +173,61 @@ class ParquetStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_store").toString
     val store = new ParquetStore(spark, dir)
     store.append(ids(1, 5), "t")
-    store.appendSteps(ids(6, 9).repartition(2), "t", 1)
+    store.commitSteps(ids(6, 9).repartition(2), "t", replace = false, 1)
     val (wm, jobs) = jobsOf(Watermark.idOf(new ParquetStore(spark, dir).watermark("t", "id").get))
     assert((wm, jobs) === ((9L, 0)))
     assert(new java.io.File(dir).list().toSet === Set("t.parquet"))
     assert(store.read("t").get.as[Long].collect().sorted.toSeq === (1L to 9L))
+  }
+
+  test("watermark alone lands a stranded write and reads the new table's footers, with no job") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val store = new ParquetStore(spark, dir)
+    store.write(ids(1, 20).repartition(2), "t")
+    // the write stops right after its commit; the old table's MAX is higher
+    store.commitSteps(ids(11, 13).repartition(2), "t", replace = true, 1)
+    val (wm, jobs) = jobsOf(Watermark.idOf(new ParquetStore(spark, dir).watermark("t", "id").get))
+    assert((wm, jobs) === ((13L, 0)))
+    assert(new java.io.File(dir).list().toSet === Set("t.parquet"))
+    assert(store.read("t").get.as[Long].collect().sorted.toSeq === (11L to 13L))
+  }
+
+  test("every kind of commit stopped after any step leaves the old or the new contents, whole") {
+    // (case, old rows, df, replace, new rows); None is no table
+    val some = (lo: Long, hi: Long) => Some(lo to hi)
+    val cases = Seq(
+      ("write to a missing table", None, ids(11, 13), true, some(11, 13)),
+      ("write over a table", some(1, 5), ids(11, 13).repartition(2), true, some(11, 13)),
+      ("append creating a table", None, ids(11, 13).repartition(2), false, some(11, 13)),
+      ("append to a table", some(1, 5), ids(11, 13).repartition(2), false,
+        Some((1L to 5L) ++ (11L to 13L))),
+      ("all-empty append", some(1, 5), ids(1, 100).filter($"id" < 0).repartition(3), false, some(1, 5)))
+    for ((name, old, df, replace, after) <- cases) {
+      def attempt(k: Int): Int = {
+        var n = 0
+        for (next <- Seq("read", "watermark", "append", "write")) {
+          val dir = Files.createTempDirectory("graft_store").toString
+          val store = new ParquetStore(spark, dir)
+          old.foreach(rows => store.write(ids(rows.head, rows.last), "t"))
+          n = store.commitSteps(df, "t", replace, k)
+          val landed = if (k < 1) old else after
+          // a fresh store stands for the process that runs after the crash
+          val fresh = new ParquetStore(spark, dir)
+          val want = next match {
+            case "read" | "watermark" => landed
+            case "append" => fresh.append(ids(20, 21), "t"); Some(landed.getOrElse(Nil) ++ (20L to 21L))
+            case "write"  => fresh.write(ids(30, 31), "t"); some(30, 31)
+          }
+          if (next == "watermark")
+            assert(fresh.watermark("t", "id").map(Watermark.idOf) === want.map(_.max), s"$name k=$k")
+          assert(fresh.read("t").map(_.as[Long].collect().sorted.toSeq) === want, s"$name k=$k $next")
+          assert(new java.io.File(dir).list().toSet === want.map(_ => "t.parquet").toSet, s"$name k=$k $next")
+        }
+        n
+      }
+      val n = attempt(0)
+      (1 to n).foreach(attempt)
+    }
   }
 
   test("two threads appending to one table lose no rows") {
@@ -251,6 +300,24 @@ class ParquetStoreSpec extends SparkSpec {
     assert(stats.rowsUpserted === 30)
     // the dedup's shuffle stage (AQE runs each stage as a job) and the
     // append's write job; both schemas and the watermark come from the
+    // footers
+    assert(jobs === 2)
+    assert(dst.read("t").get.count() === 130)
+  }
+
+  test("a merge-path SyncJob.run runs a fixed number of Spark jobs") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val (src, dst) = (new ParquetStore(spark, s"$dir/src"), new ParquetStore(spark, s"$dir/dst"))
+    val rows = (hi: Long) => ids(1, hi).selectExpr("id", "id AS key", "concat('v', id) AS v")
+    // the check column is not the key, so the run merges and writes
+    val cfg = TableConfig("t", Some("id"), Some(CheckType.Id), Seq.empty)
+    src.write(rows(100), "t")
+    SyncJob.run(src, dst, cfg, Seq("key"))
+    src.write(rows(130), "t")
+    val (stats, jobs) = jobsOf(SyncJob.run(src, dst, cfg, Seq("key")))
+    assert(stats.mode === "incremental id > 100")
+    assert(stats.rowsUpserted === 30)
+    // the merge's shuffle and the write; the watermark comes from the
     // footers
     assert(jobs === 2)
     assert(dst.read("t").get.count() === 130)

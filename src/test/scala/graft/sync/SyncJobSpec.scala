@@ -331,13 +331,16 @@ class SyncJobSpec extends SparkSpec {
     assert(bag(dst.read("t").get) === bag(srcInner.read("t").get))
   }
 
-  /** Stops each append after its first `k` steps past staging, then fails. */
+  /** Stops each write and append after its first `k` steps past staging,
+    * then fails. */
   private class CrashingStore(dir: String, k: Int) extends ParquetStore(spark, dir) {
     var steps = 0
-    override def append(df: DataFrame, table: String): Unit = {
-      steps = appendSteps(df, table, k)
-      if (k < steps) sys.error(s"crash after $k of $steps append steps")
+    private def commit(df: DataFrame, table: String, replace: Boolean): Unit = {
+      steps = commitSteps(df, table, replace, k)
+      if (k < steps) sys.error(s"crash after $k of $steps commit steps")
     }
+    override def write(df: DataFrame, table: String): Unit = commit(df, table, replace = true)
+    override def append(df: DataFrame, table: String): Unit = commit(df, table, replace = false)
   }
 
   test("a crash after any landing step keeps the watermark invariant; a rerun converges") {
@@ -376,6 +379,41 @@ class SyncJobSpec extends SparkSpec {
       case (key, Some(v)) => spark.conf.set(key, v)
       case (key, None)    => spark.conf.unset(key)
     }
+  }
+
+  test("a crash after any step of a merge-path write keeps the watermark invariant; a rerun converges") {
+    // the events shape: a timestamp check column that is not a key, so
+    // the delta updates existing keys and the run merges and writes
+    val at = (id: Long, day: Int, v: String) => (id, java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:00"), v)
+    val old = Seq(at(1, 1, "a"), at(2, 2, "b"), at(3, 3, "c"), at(4, 4, "d")).toDF("id", "ts", "v")
+    val source = old.filter($"id" =!= 2 && $"id" =!= 4)
+      .union(Seq(at(2, 5, "b2"), at(4, 6, "d2"), at(5, 7, "e")).toDF("id", "ts", "v"))
+    val cfg = TableConfig("t", Some("ts"), Some(CheckType.Timestamp), Seq.empty)
+    def attempt(k: Int): CrashingStore = {
+      val src = tmpStore()
+      src.write(source, "t")
+      val dir = Files.createTempDirectory("graft_sync").toString
+      new ParquetStore(spark, dir).write(old, "t")
+      val dst = new CrashingStore(dir, k)
+      val crashed = scala.util.Try(SyncJob.run(src, dst, cfg, Seq("id"))).isFailure
+      assert(crashed === (k < dst.steps), s"k=$k")
+      // past the commit (step 1), the next process reads the merged table
+      val merged = Merge.upsert(old, src.read("t").get, Seq("id"))
+      assert(bag(new ParquetStore(spark, dir).read("t").get) === bag(if (k < 1) old else merged), s"k=$k")
+      // the invariant: every source row at or below the destination's
+      // MAX(ts) has landed, so the next run's `ts > MAX` misses nothing
+      val landed = dst.read("t").get
+      val wm = landed.agg(max($"ts")).head.getTimestamp(0)
+      val missed = src.read("t").get.filter($"ts" <= lit(wm)).exceptAll(landed)
+      assert(missed.count() === 0, s"k=$k")
+      SyncJob.run(src, new ParquetStore(spark, dir), cfg, Seq("id"))
+      assert(bag(dst.read("t").get) === bag(merged), s"k=$k")
+      dst
+    }
+    val n = attempt(Int.MaxValue).steps
+    // the commit, the old table's deletion, the marker's, the rename
+    assert(n === 4)
+    (0 until n).foreach(attempt)
   }
 
   test("a no-op incremental rerun adds no file") {
